@@ -483,43 +483,42 @@ object CoreOps {
     * since prev is the latest prior appearance), so no user identity crosses
     * into per-key state and the terminal row is O(T) instead of O(users).
     *
-    * Shuffle shape at 100 TB: stage 1 dedups at (key, epoch, user) — a
-    * Zipf-hot key spreads across partitions by user; the lag window runs at
-    * (key, user) granularity (same property); the final rows are at
-    * (key, epoch) with ≤ T+1 entries each. Replaces the collect_set design
-    * whose hot-key row held every user string. */
+    * Shuffle shape: the head windows run at (key, user) granularity, so a
+    * Zipf-hot key spreads across partitions by user; the middle aggregate
+    * ships map-side partials at (key, epoch, prev); the output is
+    * hash-partitioned by `key` into the session's shuffle partitions, ready
+    * for [[DpHistogram]] to group on without another exchange. Replaces the
+    * collect_set design whose hot-key row held every user string. */
   def preAggregatePrevEpoch(df: DataFrame, keyCol: String, epochCol: String, userCol: String, valueCol: String): DataFrame = {
-    // r20 (guide §2.4 — share exchanges keyed the same way): the per-user
-    // aggregate and the lag window used to pay SEPARATE exchanges
-    // ((key, epoch, user) then (key, user)) whenever the input was not
-    // already user-partitioned. One explicit repartition on (key, user)
-    // serves BOTH — HashPartitioning satisfies ClusteredDistribution when
-    // its expressions are a SUBSET of the required clustering keys — so
-    // the head of the chain crosses the wire once instead of twice and a
-    // stage barrier disappears. The trade is the per-user aggregate's
-    // map-side combine (the repartition ships raw projections), which for
-    // this operator's contract is ~nothing: contributions are already
-    // per-user-bounded upstream (B1), so (key, epoch, user) is near-
-    // distinct in the raw rows and partial aggregation had nothing to
-    // fold (measured at the utility workloads: equal rows either side).
-    // The TAIL aggregates keep their own exchanges deliberately: their
-    // map-side partial aggregation is the skew guard — a Zipf-hot
-    // (key, epoch) cell collapses to one row per map partition BEFORE the
-    // exchange, where a bare repartition would funnel that cell's every
-    // per-user row into one reduce task (guide §2.5). Row content is
-    // IDENTICAL — only physical partitioning moved; every shuffle still
-    // runs at (key, user) or finer, or ships map-side partials.
-    val perUser = df
-      .select(col(keyCol).as("key"), col(epochCol).cast("int").as("epoch"),
+    // Invariants the plan relies on:
+    // - Both windows share one (key, user) partition spec and one epoch
+    //   order, so they run as one Window operator over one sort and need
+    //   only clustering on (key, user). A hash partitioning on any subset
+    //   of (key, user) satisfies that: B1's `user` partitioning passes
+    //   through with no exchange, and any other input gets exactly one
+    //   (key, user) exchange.
+    // - Every row of one (key, user, epoch) has the same RANGE frame, so
+    //   all get the same `prev` (the latest strictly earlier epoch, -1 if
+    //   none), and exactly one of them, the first in sort order, has a
+    //   lagged epoch different from its own: counting flagged rows counts
+    //   distinct users. Which row is first does not matter.
+    // - The (key, epoch, prev) aggregate keeps its map-side partial
+    //   aggregation. That is the skew guard: a hot (key, epoch) cell
+    //   collapses to one row per map partition before its exchange.
+    // - The key repartition has a fixed partition count, so AQE cannot
+    //   coalesce the CPU-heavy mechanism downstream into one task. It
+    //   clusters the (key, epoch) collect with no further exchange; a
+    //   key's rows there are one per (epoch, prev), at most T(T+1)/2.
+    val byUser = Window.partitionBy(col("key"), col("user")).orderBy(col("epoch"))
+    df.select(col(keyCol).as("key"), col(epochCol).cast("int").as("epoch"),
         col(userCol).as("user"), col(valueCol).as("__v"))
-      .repartition(col("key"), col("user"))
-      .groupBy(col("key"), col("epoch"), col("user"))
-      .agg(sum(col("__v")).as("user_sum"))
-    val w = Window.partitionBy(col("key"), col("user")).orderBy(col("epoch"))
-    perUser
-      .withColumn("prev", coalesce(lag(col("epoch"), 1).over(w), lit(-1)))
+      .select(col("key"), col("epoch"), col("__v"),
+        coalesce(max(col("epoch")).over(byUser.rangeBetween(Window.unboundedPreceding, -1)), lit(-1))
+          .as("prev"),
+        not(lag(col("epoch"), 1).over(byUser) <=> col("epoch")).as("__first"))
       .groupBy(col("key"), col("epoch"), col("prev"))
-      .agg(sum(col("user_sum")).as("v_part"), count(lit(1)).as("n"))
+      .agg(sum(col("__v")).as("v_part"), count(when(col("__first"), 1)).as("n"))
+      .repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col("key"))
       .groupBy(col("key"), col("epoch"))
       .agg(sum(col("v_part")).as("delta_v"),
         collect_list(struct(col("prev"), col("n"))).as("prev_counts"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dp._
 
@@ -8,21 +8,31 @@ import graft.dp._
   * dataset — the Spark-native restatement of the reference's
   * DataPerturbation → HistogramAggregation stages (SURVEY §2.4/§2.5).
   *
-  * Plan shape (designed for 100 TB):
+  * Plan shape, B1 → A2 → [[run]]: four exchanges, in order
+  * `hashpartitioning(user)` (B1), `hashpartitioning(key, epoch, prev)` fed
+  * by a partial aggregate, `hashpartitioning(key)`, and `SinglePartition`
+  * for the release order. The invariants that hold it there:
   *
   *  1. [[CoreOps.preAggregatePrevEpoch]] — per (key, epoch): ΔV plus the
-  *     previous-appearance-epoch histogram of its users. Every shuffle up to
-  *     here runs at (key, user) or finer granularity, so a Zipf-hot key
-  *     spreads across partitions; the terminal row is O(T), never O(users) —
-  *     no user identity reaches per-key state.
-  *  2. `groupByKey(key).flatMapGroups` — one shuffle by key; each key's ≤T
-  *     epoch rows are folded through [[graft.dp.DpKeyState]] in epoch order
-  *     via `processEpochPrevCounts` (exact new-user counting against the
-  *     round-start epoch). The per-key timeline (tree state, Algo 3 predicted
-  *     silent-epoch releases) is processed entirely inside the group, so no
-  *     driver-side loop and no cross-key coordination — the reference's
-  *     ZooKeeper epoch barrier (EpochBarrierCoordinator.java) has no residue
-  *     here.
+  *     previous-appearance-epoch histogram of its users. Its windows need
+  *     only clustering on (key, user), which B1's user partitioning already
+  *     gives; its output is hash-partitioned by `key` into a fixed number of
+  *     partitions. Every exchange up to there runs at (key, user) or finer
+  *     granularity or ships map-side partials, so a Zipf-hot key spreads
+  *     across partitions; the terminal row is O(T), never O(users) — no user
+  *     identity reaches per-key state.
+  *  2. The mechanism groups on the existing `key` COLUMN (not a derived
+  *     key), so it reuses that partitioning: no `AppendColumns`, no
+  *     exchange. Each key's ≤T epoch rows are folded through
+  *     [[graft.dp.DpKeyState]] in epoch order via `processEpochPrevCounts`
+  *     (exact new-user counting against the round-start epoch). The per-key
+  *     timeline (tree state, Algo 3 predicted silent-epoch releases) is
+  *     processed entirely inside the group, so no driver-side loop and no
+  *     cross-key coordination — the reference's ZooKeeper epoch barrier
+  *     (EpochBarrierCoordinator.java) has no residue here.
+  *  3. The release holds at most one row per key, so it is ordered in one
+  *     partition by a local sort. A range-partitioned `orderBy` would run a
+  *     sampling job that executes the whole mechanism a second time.
   *
   * State is O(keys × T); data volume only affects stage 1, which scales
   * linearly and shuffles pre-aggregated rows.
@@ -75,21 +85,14 @@ object DpHistogram {
     */
   def run(spark: SparkSession, preAgg: DataFrame, params: DpParams, runSeed: Long = 42L): DataFrame = {
     import spark.implicits._
-
-    val result = toEpochRows(preAgg)
-      .as[EpochRow]
-      .groupByKey(_._1)
-      .flatMapGroups { (key, rows) =>
-        val state = stateFor(key, params, runSeed)
-        val byEpoch = rows.map(r => (r._2, (r._3, r._4))).toMap
-        walkEpochs(state, byEpoch, params.maxTimeSteps,
-          (e: Int, d: (Double, Seq[(Int, Long)])) =>
-            state.processEpochPrevCounts(e, d._2, d._1, appeared = true))((_, _) => ())
-        state.currentSum.map(s => (key, math.max(0L, math.round(s)))).iterator
-      }
-      .toDF("key", "count")
-
-    result.orderBy(col("count").desc, col("key"))
+    releaseOrder(foldByKey[EpochRow, (String, Long)](toEpochRows(preAgg)) { (key, rows) =>
+      val state = stateFor(key, params, runSeed)
+      val byEpoch = rows.map(r => (r._2, (r._3, r._4))).toMap
+      walkEpochs(state, byEpoch, params.maxTimeSteps,
+        (e: Int, d: (Double, Seq[(Int, Long)])) =>
+          state.processEpochPrevCounts(e, d._2, d._1, appeared = true))((_, _) => ())
+      state.currentSum.map(s => (key, math.max(0L, math.round(s))))
+    }.toDF("key", "count"))
   }
 
   /** [[run]] over the identity-carrying pre-aggregation
@@ -102,20 +105,16 @@ object DpHistogram {
     * semantics and released values are identical. */
   def runUsers(spark: SparkSession, preAgg: DataFrame, params: DpParams, runSeed: Long = 42L): DataFrame = {
     import spark.implicits._
-    val result = preAgg.select(col("key").cast("string"), col("epoch").cast("int"),
-        col("delta_v").cast("double"), col("users").cast("array<string>"))
-      .as[(String, Int, Double, Seq[String])]
-      .groupByKey(_._1)
-      .flatMapGroups { (key, rows) =>
-        val state = stateFor(key, params, runSeed)
-        val byEpoch = rows.map(r => (r._2, (r._3, r._4))).toMap
-        walkEpochs(state, byEpoch, params.maxTimeSteps,
-          (e: Int, d: (Double, Seq[String])) =>
-            state.processEpoch(e, d._2, d._1, appeared = true))((_, _) => ())
-        state.currentSum.map(s => (key, math.max(0L, math.round(s)))).iterator
-      }
-      .toDF("key", "count")
-    result.orderBy(col("count").desc, col("key"))
+    val userRows = preAgg.select(col("key").cast("string"), col("epoch").cast("int"),
+      col("delta_v").cast("double"), col("users").cast("array<string>"))
+    releaseOrder(foldByKey[(String, Int, Double, Seq[String]), (String, Long)](userRows) { (key, rows) =>
+      val state = stateFor(key, params, runSeed)
+      val byEpoch = rows.map(r => (r._2, (r._3, r._4))).toMap
+      walkEpochs(state, byEpoch, params.maxTimeSteps,
+        (e: Int, d: (Double, Seq[String])) =>
+          state.processEpoch(e, d._2, d._1, appeared = true))((_, _) => ())
+      state.currentSum.map(s => (key, math.max(0L, math.round(s))))
+    }.toDF("key", "count"))
   }
 
   /** Per-epoch released timeline: (epoch, key, count) for every epoch at which
@@ -123,23 +122,32 @@ object DpHistogram {
     * pipeline emits per trigger. */
   def timeline(spark: SparkSession, preAgg: DataFrame, params: DpParams, runSeed: Long = 42L): DataFrame = {
     import spark.implicits._
-
-    toEpochRows(preAgg)
-      .as[EpochRow]
-      .groupByKey(_._1)
-      .flatMapGroups { (key, rows) =>
-        val state = stateFor(key, params, runSeed)
-        val byEpoch = rows.map(r => (r._2, (r._3, r._4))).toMap
-        val out = Seq.newBuilder[(Int, String, Long)]
-        walkEpochs(state, byEpoch, params.maxTimeSteps,
-          (e: Int, d: (Double, Seq[(Int, Long)])) =>
-            state.processEpochPrevCounts(e, d._2, d._1, appeared = true)) { (epoch, released) =>
-          released.foreach(s => out += ((epoch, key, math.max(0L, math.round(s)))))
-        }
-        out.result().iterator
+    foldByKey[EpochRow, (Int, String, Long)](toEpochRows(preAgg)) { (key, rows) =>
+      val state = stateFor(key, params, runSeed)
+      val byEpoch = rows.map(r => (r._2, (r._3, r._4))).toMap
+      val out = Seq.newBuilder[(Int, String, Long)]
+      walkEpochs(state, byEpoch, params.maxTimeSteps,
+        (e: Int, d: (Double, Seq[(Int, Long)])) =>
+          state.processEpochPrevCounts(e, d._2, d._1, appeared = true)) { (epoch, released) =>
+        released.foreach(s => out += ((epoch, key, math.max(0L, math.round(s)))))
       }
-      .toDF("epoch", "key", "count")
+      out.result()
+    }.toDF("epoch", "key", "count")
   }
+
+  /** Folds each `key` group of `rows` with `f`. Grouping on the existing
+    * `key` column, not on a key derived from the rows, lets the plan reuse
+    * an input already hash-partitioned by `key` (as
+    * [[CoreOps.preAggregatePrevEpoch]]'s output is). */
+  private def foldByKey[T: Encoder, U: Encoder](rows: DataFrame)(
+      f: (String, Iterator[T]) => IterableOnce[U]): Dataset[U] =
+    rows.groupBy(col("key")).as[String, T](Encoders.STRING, implicitly[Encoder[T]]).flatMapGroups(f)
+
+  /** Count desc, key asc, in one partition: a release has at most one row
+    * per key, so a local sort suffices and no range-partitioning sampling
+    * job re-runs the mechanism. */
+  private def releaseOrder(released: DataFrame): DataFrame =
+    released.repartition(1).sortWithinPartitions(col("count").desc, col("key"))
 
   private def stateFor(key: String, params: DpParams, runSeed: Long): DpKeyState =
     new DpKeyState(

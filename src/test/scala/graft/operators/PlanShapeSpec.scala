@@ -1,7 +1,15 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import graft.dp.DpParams
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkEntry, Tables}
 
@@ -829,5 +837,75 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(maxFirst < minSecond,
       s"round-robin broken: a second-of-domain url (rank $minSecond) " +
         s"dequeues before some first-of-domain url (rank $maxFirst)")
+  }
+
+  /** The physical plan before execution (AQE's initial plan). */
+  private def physical(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
+  }
+
+  private def partialFed(p: SparkPlan): Boolean = p match {
+    case w: WholeStageCodegenExec => partialFed(w.child)
+    case a: BaseAggregateExec =>
+      a.aggregateExpressions.nonEmpty && a.aggregateExpressions.forall(_.mode == Partial)
+    case _ => false
+  }
+
+  /** Shuffle exchanges of `plan`, upstream first: partitioning kind, its
+    * column names, and whether a partial aggregate feeds it. */
+  private def shuffles(plan: SparkPlan): Seq[(String, Seq[String], Boolean)] =
+    plan.collect { case e: ShuffleExchangeExec => e }.reverse.map { e =>
+      val (kind, cols) = e.outputPartitioning match {
+        case h: HashPartitioning => ("hash", h.expressions.flatMap(_.references.map(_.name)))
+        case r: RangePartitioning => ("range", r.ordering.flatMap(_.references.map(_.name)))
+        case SinglePartition => ("single", Nil)
+        case other => (other.getClass.getSimpleName, Nil)
+      }
+      (kind, cols, partialFed(e.child))
+    }
+
+  private def eventContributions(userCol: String): DataFrame =
+    Tables.events(spark, sfDir).select(col("event_type").as("key"),
+      dayofmonth(col("ts")).cast("int").as("epoch"), col("user_id").cast("string").as(userCol),
+      col("event_id").as("seq"), col("value"))
+
+  test("DP batch B1 → A2 → run: four exchanges, no (key, user) re-shuffle, no derived key, no range sort") {
+    def expected(user: String) = Seq(
+      ("hash", Seq(user), false),
+      ("hash", Seq("key", "epoch", "prev"), true),
+      ("hash", Seq("key"), false),
+      ("single", Nil, false))
+    val bounded = CoreOps.boundContributions(eventContributions("user"), "user", "seq", 50L)
+    val released = DpHistogram.run(spark,
+      CoreOps.preAggregatePrevEpoch(bounded, "key", "epoch", "user", "value"), DpParams.zeroNoise(32))
+    // the B1-composed gate has the same shape over its own user column
+    val gate = SparkEntry.queries("dp_sigma0_mu0_histogram")(spark, sfDir)
+    for ((df, user) <- Seq((released, "user"), (gate, "user_id"))) {
+      val plan = physical(df)
+      assert(shuffles(plan) === expected(user), s"DP batch plan changed shape:\n$plan")
+      assert(!plan.exists(_.nodeName.startsWith("AppendColumns")),
+        s"the mechanism groups on a derived key:\n$plan")
+    }
+  }
+
+  test("A2 on raw input: exactly one (key, user) exchange, below the window") {
+    val plan = physical(CoreOps.preAggregatePrevEpoch(eventContributions("user"), "key", "epoch", "user", "value"))
+    val windows = plan.collect { case w: WindowExec => w }
+    assert(windows.size === 1, s"A2's windows no longer share one operator:\n$plan")
+    assert(shuffles(windows.head) === Seq(("hash", Seq("key", "user"), false)),
+      s"A2's window is not fed by exactly one (key, user) exchange:\n$plan")
+    assert(shuffles(plan).map(_._2) === Seq(Seq("key", "user"), Seq("key", "epoch", "prev"), Seq("key")),
+      s"A2 plan changed shape:\n$plan")
+  }
+
+  test("DP timeline: groups on the key column, so no AppendColumns and no exchange on a derived key") {
+    val plan = physical(SparkEntry.queries("dp_timeline_releases")(spark, sfDir))
+    assert(!plan.exists(_.nodeName.startsWith("AppendColumns")),
+      s"the timeline groups on a derived key:\n$plan")
+    // A2's three exchanges, then the gate's presentation sort
+    assert(shuffles(plan).map(s => (s._1, s._2)) === Seq(("hash", Seq("key", "user")),
+      ("hash", Seq("key", "epoch", "prev")), ("hash", Seq("key")), ("range", Seq("epoch", "key"))),
+      s"timeline plan changed shape:\n$plan")
   }
 }
