@@ -97,9 +97,13 @@ final class PredictionIndex(g: Array[Double]) extends Serializable {
   *     round resets (tree + observed users dropped);
   *   - if not selected but the key appeared: simulate future steps with no new
   *     data and record the earliest predicted noise-alone release epoch;
-  *   - a key must be re-processed at its predicted epoch even with no data —
-  *     the caller (epoch loop or state-store timer) guarantees that via
-  *     [[predictedRelease]].
+  *   - a key must be re-processed at its predicted epoch even with no data.
+  *
+  * [[appear]] and [[fireDue]] are the one driver every Spark DP operator
+  * calls: they decide when the key steps and what it releases, so the rule
+  * for late, replayed and out-of-horizon epochs lives here and nowhere else.
+  * [[StreamingDpMechanism]] keeps its own epoch loop as the single-node
+  * reference the driver is tested against.
   */
 final class DpKeyState(
     params: DpParams,
@@ -134,6 +138,10 @@ final class DpKeyState(
     * hotspot it documents for T=1000; this replaces each O(T·log T) rescan
     * with O(log T), bit-identically. */
   private var predictionCurve: PredictionIndex = _
+  private var lastEpochValue: Int = -1
+
+  /** Last epoch this key stepped through, −1 before its first step. */
+  def lastEpoch: Int = lastEpochValue
 
   /** Latest released noisy sum, if this key was ever selected. */
   def currentSum: Option[Double] = if (released) Some(currentSumValue) else None
@@ -175,8 +183,40 @@ final class DpKeyState(
     processEpochCore(timeStep, newUniqueUsers, deltaV, appeared)
   }
 
+  /** The key appears at `epoch` with its users as previous-appearance-epoch
+    * counts (see [[processEpochPrevCounts]]). In order: an epoch ≤
+    * [[lastEpoch]] (late or replayed) or ≥ T is ignored and changes nothing;
+    * the predictions due before it fire at their own epochs; the key steps;
+    * every release goes to `emit` as (epoch, max(0, round(sum))). */
+  def appear(epoch: Int, prevCounts: Iterable[(Int, Long)], deltaV: Double,
+      emit: DpKeyState.Emit = DpKeyState.Silent): Unit =
+    appearWith(epoch, emit)(processEpochPrevCounts(epoch, prevCounts, deltaV, appeared = true))
+
+  /** [[appear]] with the window's user identities (see [[processEpoch]]). */
+  def appearUsers(epoch: Int, users: Iterable[String], deltaV: Double,
+      emit: DpKeyState.Emit = DpKeyState.Silent): Unit =
+    appearWith(epoch, emit)(processEpoch(epoch, users, deltaV, appeared = true))
+
+  private def appearWith(epoch: Int, emit: DpKeyState.Emit)(step: => Option[Double]): Unit =
+    if (epoch > lastEpochValue && epoch < params.maxTimeSteps) {
+      fireDue(epoch, emit)
+      step.foreach(s => emit(epoch, DpKeyState.releasedCount(s)))
+    }
+
+  /** Fires every pending Algorithm-3 prediction before epoch `until` at its
+    * own epoch, with no data. A stream's epoch tick passes `e + 1`; the end
+    * of the stream (a state timer, the batch tail) passes T. */
+  def fireDue(until: Int, emit: DpKeyState.Emit = DpKeyState.Silent): Unit = {
+    var p = predictedReleaseTime
+    while (p > lastEpochValue && p < until && p < params.maxTimeSteps) {
+      processEpochPrevCounts(p, Nil, 0.0, appeared = false).foreach(s => emit(p, DpKeyState.releasedCount(s)))
+      p = predictedReleaseTime
+    }
+  }
+
   private def processEpochCore(timeStep: Int, newUniqueUsers: Long, deltaV: Double, appeared: Boolean): Option[Double] = {
     require(timeStep >= 0 && timeStep < params.maxTimeSteps, s"timeStep $timeStep out of range")
+    lastEpochValue = timeStep
 
     // Algo 2 step 7: accumulate ΔV since last release.
     unreleasedBuffer += deltaV
@@ -243,6 +283,40 @@ final class DpKeyState(
   }
 }
 
+object DpKeyState {
+  /** Receives one release: (epoch, released count). */
+  type Emit = (Int, Long) => Unit
+  val Silent: Emit = (_, _) => ()
+
+  /** The key's state with both noise trees seeded from (runSeed, key): a
+    * task retry or a restart re-derives bit-identical noise. */
+  def seeded(params: DpParams, runSeed: Long, key: String): DpKeyState =
+    new DpKeyState(params,
+      TreeSpec(params.maxTimeSteps, params.sigmaKey,
+        NoiseSource.seeded(NoiseSource.seedFor(runSeed, key, "key"))),
+      TreeSpec(params.maxTimeSteps, params.sigmaHist,
+        NoiseSource.seeded(NoiseSource.seedFor(runSeed, key, "hist"))))
+
+  /** One key's batch replay: `rows` step the driver through `appear` in
+    * epoch order, then the predictions still pending fire up to T. The
+    * driver ignores an epoch ≥ T, as a stream must; in a batch it is
+    * malformed input and fails. */
+  def replay[R](params: DpParams, runSeed: Long, key: String, rows: Iterator[R], emit: Emit = Silent)(
+      epochOf: R => Int)(appear: (DpKeyState, R) => Unit): DpKeyState = {
+    val state = seeded(params, runSeed, key)
+    rows.toSeq.sortBy(epochOf).foreach { r =>
+      val e = epochOf(r)
+      require(e >= 0 && e < params.maxTimeSteps, s"epoch $e out of range [0, ${params.maxTimeSteps})")
+      appear(state, r)
+    }
+    state.fireDue(params.maxTimeSteps, emit)
+    state
+  }
+
+  /** A released noisy sum as published: rounded, negatives clamped to 0. */
+  def releasedCount(sum: Double): Long = math.max(0L, math.round(sum))
+}
+
 /** Single-node DP-SQLP mechanism: drives a forest of [[DpKeyState]] across
   * epochs and produces the carried-forward noisy histogram each epoch —
   * behavioral equivalent of the reference's `StreamingDPMechanism`
@@ -303,7 +377,7 @@ final class StreamingDpMechanism(
     * deterministic output — the reference leaves tie order unspecified). */
   def produceHistogram(): Seq[(String, Long)] =
     states.iterator
-      .flatMap { case (k, st) => st.currentSum.map(s => (k, math.max(0L, math.round(s)))) }
+      .flatMap { case (k, st) => st.currentSum.map(s => (k, DpKeyState.releasedCount(s))) }
       .toSeq
       .sortBy { case (k, c) => (-c, k) }
 }

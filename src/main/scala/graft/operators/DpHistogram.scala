@@ -23,13 +23,13 @@ import graft.dp._
   *     identity reaches per-key state.
   *  2. The mechanism groups on the existing `key` COLUMN (not a derived
   *     key), so it reuses that partitioning: no `AppendColumns`, no
-  *     exchange. Each key's ≤T epoch rows are folded through
-  *     [[graft.dp.DpKeyState]] in epoch order via `processEpochPrevCounts`
-  *     (exact new-user counting against the round-start epoch). The per-key
-  *     timeline (tree state, Algo 3 predicted silent-epoch releases) is
-  *     processed entirely inside the group, so no driver-side loop and no
-  *     cross-key coordination — the reference's ZooKeeper epoch barrier
-  *     (EpochBarrierCoordinator.java) has no residue here.
+  *     exchange. Each key's ≤T epoch rows are folded through the
+  *     [[graft.dp.DpKeyState]] driver (`appear`, then `fireDue(T)`) in
+  *     epoch order (exact new-user counting against the round-start epoch).
+  *     The per-key timeline (tree state, Algo 3 predicted silent-epoch
+  *     releases) is processed entirely inside the group, so no driver-side
+  *     loop and no cross-key coordination — the reference's ZooKeeper epoch
+  *     barrier (EpochBarrierCoordinator.java) has no residue here.
   *  3. The release holds at most one row per key, so it is ordered in one
   *     partition by a local sort. A range-partitioned `orderBy` would run a
   *     sampling job that executes the whole mechanism a second time.
@@ -45,35 +45,6 @@ object DpHistogram {
     preAgg.select(col("key").cast("string"), col("epoch").cast("int"),
       col("delta_v").cast("double"), col("prev_counts").cast("array<struct<prev:int,n:bigint>>"))
 
-  /** Event-driven epoch walk for one key: processes the appearance epochs in
-    * order plus, between them, the (at most one outstanding) Algorithm-3
-    * predicted-release epoch. Exactly equivalent to stepping 0..T — every
-    * other epoch is a no-op there by construction (no data, no prediction
-    * due, and a prediction is only ever set by an unselected APPEARANCE and
-    * consumed at its epoch) — but O(appearances + releases) instead of O(T)
-    * per key, which matters once T is large and keys are sparse. */
-  private def walkEpochs[D](state: DpKeyState, byEpoch: Map[Int, D], maxTimeSteps: Int,
-      processData: (Int, D) => Option[Double])(emit: (Int, Option[Double]) => Unit): Unit = {
-    val epochs = byEpoch.keysIterator.toArray
-    java.util.Arrays.sort(epochs)
-    var i = 0
-    while (i < epochs.length) {
-      val e = epochs(i)
-      var p = state.predictedRelease.getOrElse(-1)
-      while (p >= 0 && p < e) {
-        emit(p, state.processEpochPrevCounts(p, Nil, 0.0, appeared = false))
-        p = state.predictedRelease.getOrElse(-1)
-      }
-      emit(e, processData(e, byEpoch(e)))
-      i += 1
-    }
-    var p = state.predictedRelease.getOrElse(-1)
-    while (p >= 0 && p < maxTimeSteps) {
-      emit(p, state.processEpochPrevCounts(p, Nil, 0.0, appeared = false))
-      p = state.predictedRelease.getOrElse(-1)
-    }
-  }
-
   /** Final released histogram after running all epochs: (key, count), count
     * desc / key asc, negatives clamped — matching
     * StreamingDPMechanism.produceHistogram (:517-531).
@@ -86,12 +57,7 @@ object DpHistogram {
   def run(spark: SparkSession, preAgg: DataFrame, params: DpParams, runSeed: Long = 42L): DataFrame = {
     import spark.implicits._
     releaseOrder(foldByKey[EpochRow, (String, Long)](toEpochRows(preAgg)) { (key, rows) =>
-      val state = stateFor(key, params, runSeed)
-      val byEpoch = rows.map(r => (r._2, (r._3, r._4))).toMap
-      walkEpochs(state, byEpoch, params.maxTimeSteps,
-        (e: Int, d: (Double, Seq[(Int, Long)])) =>
-          state.processEpochPrevCounts(e, d._2, d._1, appeared = true))((_, _) => ())
-      state.currentSum.map(s => (key, math.max(0L, math.round(s))))
+      released(key, DpKeyState.replay(params, runSeed, key, rows)(_._2)((st, r) => st.appear(r._2, r._4, r._3)))
     }.toDF("key", "count"))
   }
 
@@ -108,12 +74,7 @@ object DpHistogram {
     val userRows = preAgg.select(col("key").cast("string"), col("epoch").cast("int"),
       col("delta_v").cast("double"), col("users").cast("array<string>"))
     releaseOrder(foldByKey[(String, Int, Double, Seq[String]), (String, Long)](userRows) { (key, rows) =>
-      val state = stateFor(key, params, runSeed)
-      val byEpoch = rows.map(r => (r._2, (r._3, r._4))).toMap
-      walkEpochs(state, byEpoch, params.maxTimeSteps,
-        (e: Int, d: (Double, Seq[String])) =>
-          state.processEpoch(e, d._2, d._1, appeared = true))((_, _) => ())
-      state.currentSum.map(s => (key, math.max(0L, math.round(s))))
+      released(key, DpKeyState.replay(params, runSeed, key, rows)(_._2)((st, r) => st.appearUsers(r._2, r._4, r._3)))
     }.toDF("key", "count"))
   }
 
@@ -123,17 +84,15 @@ object DpHistogram {
   def timeline(spark: SparkSession, preAgg: DataFrame, params: DpParams, runSeed: Long = 42L): DataFrame = {
     import spark.implicits._
     foldByKey[EpochRow, (Int, String, Long)](toEpochRows(preAgg)) { (key, rows) =>
-      val state = stateFor(key, params, runSeed)
-      val byEpoch = rows.map(r => (r._2, (r._3, r._4))).toMap
       val out = Seq.newBuilder[(Int, String, Long)]
-      walkEpochs(state, byEpoch, params.maxTimeSteps,
-        (e: Int, d: (Double, Seq[(Int, Long)])) =>
-          state.processEpochPrevCounts(e, d._2, d._1, appeared = true)) { (epoch, released) =>
-        released.foreach(s => out += ((epoch, key, math.max(0L, math.round(s)))))
-      }
+      val emit: DpKeyState.Emit = (epoch, count) => out += ((epoch, key, count))
+      DpKeyState.replay(params, runSeed, key, rows, emit)(_._2)((st, r) => st.appear(r._2, r._4, r._3, emit))
       out.result()
     }.toDF("epoch", "key", "count")
   }
+
+  private def released(key: String, state: DpKeyState): Option[(String, Long)] =
+    state.currentSum.map(s => (key, DpKeyState.releasedCount(s)))
 
   /** Folds each `key` group of `rows` with `f`. Grouping on the existing
     * `key` column, not on a key derived from the rows, lets the plan reuse
@@ -148,12 +107,4 @@ object DpHistogram {
     * job re-runs the mechanism. */
   private def releaseOrder(released: DataFrame): DataFrame =
     released.repartition(1).sortWithinPartitions(col("count").desc, col("key"))
-
-  private def stateFor(key: String, params: DpParams, runSeed: Long): DpKeyState =
-    new DpKeyState(
-      params,
-      TreeSpec(params.maxTimeSteps, params.sigmaKey,
-        NoiseSource.seeded(NoiseSource.seedFor(runSeed, key, "key"))),
-      TreeSpec(params.maxTimeSteps, params.sigmaHist,
-        NoiseSource.seeded(NoiseSource.seedFor(runSeed, key, "hist"))))
 }

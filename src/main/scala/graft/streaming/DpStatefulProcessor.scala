@@ -7,29 +7,22 @@ import graft.dp._
 /** `transformWithState` implementation of the DP-SQLP keyed operator — the
   * preferred Spark 4.x architecture (SURVEY §4.3.1): per-key value state plus
   * real timers, which close the one gap of the `flatMapGroupsWithState` form:
-  * an Algorithm-3 predicted release for a key that never reappears now fires
+  * an Algorithm-3 predicted release for a key that never reappears fires
   * from [[handleExpiredTimer]] instead of waiting for the batch replay.
   *
-  * With `timers = true` this is the DEFAULT eager path. The A/B against the
-  * sharded-state EpochTick barrier ([[graft.tools.EagerBench]], bench
-  * entries `eager_dp_*_t20`) on an identical seeded workload (200 k
-  * contributions, 5 k keys, T=20), with BOTH arms pinned to the RocksDB
-  * state store so the comparison isolates operator design from provider,
-  * produced identical release counts (42 934, every repeat of both arms)
-  * with timers ~8× faster (r7 full-suite min-of-2 on a quiet machine:
-  * 6.9 s vs 57.7 s; the lazy no-eagerness floor is 2.7 s. A loaded-machine
-  * sample the same day read 24.9/69.5/7.0 — same ordering, same counts):
-  * per-key state writes O(key) per update
-  * where the shard design re-serializes a whole shard, and timer latency
-  * costs less than two synchronous barriers per epoch. (The r6 bench's
-  * 180 s entry for this arm was a HARNESS artifact — its consumption
-  * tracker summed `recentProgress` deltas, a 100-entry ring that wraps
-  * under the continuous timer-trigger cadence, so the poll loop spun to
-  * its own deadline; EagerBench now tracks consumption with a listener
-  * and fails closed on any deadline exit.) Keep the
-  * sharded form where release timing must be DETERMINISTIC in epoch terms
-  * (its tick is data, so a replay fires silents at exactly the same points;
-  * timers are wall-clock).
+  * It consumes the [[PrevMarked]] rows of [[StreamingPipelines.markPrevEpoch]],
+  * so its per-key state is a [[DpKeyState]] and never a user identity.
+  *
+  * Why this is the default eager path: the state store writes one key's
+  * state per update, where the sharded form
+  * ([[StreamingPipelines.dpHistogramEagerPrevMarked]]) re-serializes a whole
+  * shard, and a timer costs less than the sharded form's two synchronous
+  * barriers per epoch. [[graft.tools.EagerBench]] (bench entries
+  * `eager_dp_*_t20`, every arm on the RocksDB store) tracks that cost and
+  * checks that both forms emit the same number of releases. Keep the sharded
+  * form where release timing must be DETERMINISTIC in epoch terms (its tick
+  * is data, so a replay fires silents at exactly the same points; timers are
+  * wall-clock).
   *
   * Requires the RocksDB state store provider
   * (`spark.sql.streaming.stateStore.providerClass =
@@ -44,50 +37,21 @@ import graft.dp._
   * reference where the tick thread plays that role —
   * AbstractDataPerturbationBolt.java:156-166).
   */
-final class DpStatefulProcessor(params: DpParams, runSeed: Long, useTimers: Boolean,
-    timerDelayMs: Long = 100L)
-    extends StatefulProcessor[String, Contribution, Release] {
+final class DpStatefulProcessor(params: DpParams, runSeed: Long, useTimers: Boolean)
+    extends StatefulProcessor[String, PrevMarked, Release] {
 
-  @transient private var state: ValueState[StreamingPipelines.DpStreamState] = _
+  @transient private var state: ValueState[DpKeyState] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    state = getHandle.getValueState[StreamingPipelines.DpStreamState](
-      "dpState", Encoders.kryo[StreamingPipelines.DpStreamState], TTLConfig.NONE)
+    state = getHandle.getValueState[DpKeyState]("dpState", Encoders.kryo[DpKeyState], TTLConfig.NONE)
 
-  private def freshState(key: String): StreamingPipelines.DpStreamState =
-    StreamingPipelines.DpStreamState(new DpKeyState(
-      params,
-      TreeSpec(params.maxTimeSteps, params.sigmaKey,
-        NoiseSource.seeded(NoiseSource.seedFor(runSeed, key, "key"))),
-      TreeSpec(params.maxTimeSteps, params.sigmaHist,
-        NoiseSource.seeded(NoiseSource.seedFor(runSeed, key, "hist")))), -1)
-
-  private def firePredictedUpTo(key: String, st: StreamingPipelines.DpStreamState, epochExclusive: Int,
-      out: scala.collection.mutable.Builder[Release, Seq[Release]]): Unit = {
-    var p = st.state.predictedRelease
-    while (p.exists(pr => pr > st.lastEpoch && pr < epochExclusive)) {
-      val pr = p.get
-      st.state.processEpoch(pr, Nil, 0.0, appeared = false)
-        .foreach(s => out += Release(key, pr, math.max(0L, math.round(s))))
-      st.lastEpoch = pr
-      p = st.state.predictedRelease
-    }
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[Contribution],
+  override def handleInputRows(key: String, rows: Iterator[PrevMarked],
       timerValues: TimerValues): Iterator[Release] = {
-    val st = if (state.exists()) state.get() else freshState(key)
+    val st = if (state.exists()) state.get() else DpKeyState.seeded(params, runSeed, key)
     val out = Seq.newBuilder[Release]
-    rows.toSeq.groupBy(_.epoch).toSeq.sortBy(_._1).foreach { case (epoch, rs) =>
-      if (epoch > st.lastEpoch && epoch < params.maxTimeSteps) {
-        firePredictedUpTo(key, st, epoch, out)
-        st.state.processEpoch(epoch, rs.map(_.userId), rs.map(_.value).sum, appeared = true)
-          .foreach(s => out += Release(key, epoch, math.max(0L, math.round(s))))
-        st.lastEpoch = epoch
-      }
-    }
-    if (useTimers && st.state.predictedRelease.isDefined)
-      getHandle.registerTimer(timerValues.getCurrentProcessingTimeInMs() + timerDelayMs)
+    StreamingPipelines.appear(st, key, rows, out)
+    if (useTimers && st.predictedRelease.isDefined)
+      getHandle.registerTimer(timerValues.getCurrentProcessingTimeInMs() + DpStatefulProcessor.TimerDelayMs)
     state.update(st)
     out.result().iterator
   }
@@ -97,27 +61,31 @@ final class DpStatefulProcessor(params: DpParams, runSeed: Long, useTimers: Bool
     if (!state.exists()) return Iterator.empty
     val st = state.get()
     val out = Seq.newBuilder[Release]
-    firePredictedUpTo(key, st, params.maxTimeSteps, out)
+    st.fireDue(params.maxTimeSteps, StreamingPipelines.emitTo(key, out))
     state.update(st)
     out.result().iterator
   }
 }
 
 object DpStatefulProcessor {
-  /** Wires the processor into a stream. Caller must enable the RocksDB state
-    * store provider on the session.
+  /** Delay from a key's last batch to the timer that fires its predictions. */
+  private val TimerDelayMs = 100L
+
+  /** Wires [[StreamingPipelines.markPrevEpoch]] and the processor into a
+    * stream. Caller must enable the RocksDB state store provider on the
+    * session.
     *
     * `timers = true` enables eager Algo-3 silent releases via processing-time
     * timers, at the cost of continuous trigger evaluation while timers are
     * pending (the engine re-triggers to check expiry — fine under
     * `Trigger.ProcessingTime`, pathological with the default ASAP trigger in
     * synchronous replay harnesses). With `timers = false` (default) the
-    * operator behaves like the flatMapGroupsWithState form: silent releases
-    * catch up lazily when the key next appears. */
+    * operator behaves like [[StreamingPipelines.dpHistogram]]: silent
+    * releases catch up lazily when the key next appears. */
   def dpHistogram(input: Dataset[Contribution], params: DpParams, runSeed: Long = 42L,
       timers: Boolean = false): Dataset[Release] = {
     import input.sparkSession.implicits._
-    input.groupByKey(_.key)
+    StreamingPipelines.markPrevEpoch(input).groupByKey(_.key)
       .transformWithState(new DpStatefulProcessor(params, runSeed, timers),
         if (timers) TimeMode.ProcessingTime() else TimeMode.None(), OutputMode.Append())
   }

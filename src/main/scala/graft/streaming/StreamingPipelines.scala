@@ -31,12 +31,16 @@ final case class PrevMarked(key: String, epoch: Int, prev: Int, value: Double)
   *   - contribution bounding: `flatMapGroupsWithState` keyed by user holding
   *     one Long (contributions used) — the streaming form of
   *     UserContributionLimiter (B1);
-  *   - DP histogram: `flatMapGroupsWithState` keyed by aggregation key
-  *     holding a [[graft.dp.DpKeyState]] (selection + histogram trees, Algo
-  *     1-4). Epochs ride on the data (`Contribution.epoch`), so batch replay
-  *     and live triggers agree; a key processes its silent predicted-release
-  *     epochs (Algo 3) lazily when next observed, and eagerly via processing-
-  *     time timeout when it goes quiet.
+  *   - DP histogram: [[markPrevEpoch]] keyed by (key, user) holding one
+  *     Int, then a per-key operator holding a [[graft.dp.DpKeyState]]
+  *     (selection + histogram trees, Algo 1-3) that sees only previous-
+  *     appearance epochs, never user identities. Epochs ride on the data
+  *     (`Contribution.epoch`), so batch replay and live triggers agree. The
+  *     three per-key operators differ only in when a silent key's Algo-3
+  *     predicted release surfaces: lazily at its next appearance
+  *     ([[dpHistogram]]), on a processing-time timer
+  *     ([[DpStatefulProcessor.dpHistogram]]), or on a data-carried epoch
+  *     tick ([[dpHistogramEager]]).
   *
   * Emitted [[Release]] rows are deltas; the sink keeps the carried-forward
   * full histogram (SURVEY §7.5.4 — at key cardinality, driver-side is cheap).
@@ -44,7 +48,7 @@ final case class PrevMarked(key: String, epoch: Int, prev: Int, value: Double)
 object StreamingPipelines {
 
   private implicit def stateEncoder: Encoder[BoundingState] = Encoders.kryo[BoundingState]
-  private implicit def dpStateEncoder: Encoder[DpStreamState] = Encoders.kryo[DpStreamState]
+  private implicit def dpStateEncoder: Encoder[DpKeyState] = Encoders.kryo[DpKeyState]
   private implicit def lastSeenEncoder: Encoder[LastSeen] = Encoders.kryo[LastSeen]
   private implicit def shardStatesEncoder: Encoder[ShardStates] = Encoders.kryo[ShardStates]
   private implicit def replayWindowEncoder: Encoder[graft.crypto.ReplayWindow] =
@@ -54,10 +58,6 @@ object StreamingPipelines {
 
   /** Stage-A state: the last epoch this (key, user) pair contributed. */
   final case class LastSeen(var epoch: Int)
-
-  /** Per-key streaming DP state: the key's DP-SQLP state machine plus the last
-    * epoch it processed (for catching up silent predicted releases). */
-  final case class DpStreamState(state: DpKeyState, var lastEpoch: Int)
 
   /** Streaming contribution bounding: admits each user's first `c`
     * contributions across the whole stream (cross-epoch, like the reference's
@@ -77,61 +77,12 @@ object StreamingPipelines {
         })
   }
 
-  /** Streaming DP-SQLP histogram over data-carried epochs. Feed triggers in
+  /** Streaming DP-SQLP histogram over data-carried epochs:
+    * [[markPrevEpoch]] then [[dpHistogramPrevMarked]]. Feed triggers in
     * epoch order (one or more epochs per trigger); emits a [[Release]] for
-    * every epoch at which a key's noisy sum is (re)released.
-    *
-    * Algo 3 silent releases are caught up lazily: a key's pending predicted
-    * release fires when the key is next observed (the reference discards or
-    * consumes predictions the same way when a key reappears —
-    * StreamingDPMechanism.java:331-365). A key that NEVER reappears only
-    * releases in the batch replay ([[graft.operators.DpHistogram]]), which is
-    * the exact path; a state timer (`transformWithState` timers) is the
-    * planned upgrade. We deliberately avoid `GroupStateTimeout.
-    * ProcessingTimeTimeout` here: registering timeouts makes the micro-batch
-    * engine trigger continuously even with no data (measured: thousands of
-    * empty batches), which is wasteful at any scale. */
-  def dpHistogram(input: Dataset[Contribution], params: DpParams, runSeed: Long = 42L): Dataset[Release] = {
-    import input.sparkSession.implicits._
-    input
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: String, rows: Iterator[Contribution], state: GroupState[DpStreamState]) => {
-          val st = state.getOption.getOrElse(
-            DpStreamState(new DpKeyState(
-              params,
-              TreeSpec(params.maxTimeSteps, params.sigmaKey,
-                NoiseSource.seeded(NoiseSource.seedFor(runSeed, key, "key"))),
-              TreeSpec(params.maxTimeSteps, params.sigmaHist,
-                NoiseSource.seeded(NoiseSource.seedFor(runSeed, key, "hist")))), -1))
-
-          val out = Seq.newBuilder[Release]
-
-          def processSilentUpTo(epoch: Int): Unit = {
-            // Algo 3: fire any predicted releases strictly before `epoch`.
-            var p = st.state.predictedRelease
-            while (p.exists(pr => pr > st.lastEpoch && pr < epoch)) {
-              val pr = p.get
-              st.state.processEpoch(pr, Nil, 0.0, appeared = false)
-                .foreach(s => out += Release(key, pr, math.max(0L, math.round(s))))
-              st.lastEpoch = pr
-              p = st.state.predictedRelease
-            }
-          }
-
-          val byEpoch = rows.toSeq.groupBy(_.epoch).toSeq.sortBy(_._1)
-          byEpoch.foreach { case (epoch, rs) =>
-            if (epoch > st.lastEpoch && epoch < params.maxTimeSteps) {
-              processSilentUpTo(epoch)
-              st.state.processEpoch(epoch, rs.map(_.userId), rs.map(_.value).sum, appeared = true)
-                .foreach(s => out += Release(key, epoch, math.max(0L, math.round(s))))
-              st.lastEpoch = epoch
-            }
-          }
-          state.update(st)
-          out.result().iterator
-        })
-  }
+    * every epoch at which a key's noisy sum is (re)released. */
+  def dpHistogram(input: Dataset[Contribution], params: DpParams, runSeed: Long = 42L): Dataset[Release] =
+    dpHistogramPrevMarked(markPrevEpoch(input), params, runSeed)
 
   /** Stage A of the two-level exact-dedup design (the hot-key fix): keyed
     * state on (key, user) holding ONE int — the pair's last-seen epoch. Each
@@ -160,54 +111,43 @@ object StreamingPipelines {
         })
   }
 
-  /** Stage B: the [[dpHistogram]] logic fed with [[PrevMarked]] rows — per
-    * epoch it folds (prev → distinct-user count) histograms into
-    * [[graft.dp.DpKeyState.processEpochPrevCounts]]. Together with
-    * [[markPrevEpoch]] this is the scale form of the streaming DP pipeline. */
-  def dpHistogramTwoLevel(input: Dataset[Contribution], params: DpParams, runSeed: Long = 42L): Dataset[Release] =
-    dpHistogramPrevMarked(markPrevEpoch(input), params, runSeed)
-
+  /** Stage B: per-key DP state fed with [[PrevMarked]] rows, so it never
+    * holds a user identity and stays O(T) per key.
+    *
+    * Algo 3 silent releases are caught up lazily: a key's pending predicted
+    * release fires when the key is next observed (the reference discards or
+    * consumes predictions the same way when a key reappears —
+    * StreamingDPMechanism.java:331-365). A key that never reappears
+    * releases only in the batch replay ([[graft.operators.DpHistogram]]);
+    * [[DpStatefulProcessor]] (timers) and [[dpHistogramEagerPrevMarked]]
+    * (ticks) surface it mid-stream. No `GroupStateTimeout` here: registering
+    * timeouts makes the micro-batch engine trigger continuously even with no
+    * data. */
   def dpHistogramPrevMarked(input: Dataset[PrevMarked], params: DpParams, runSeed: Long = 42L): Dataset[Release] = {
     import input.sparkSession.implicits._
     input
       .groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: String, rows: Iterator[PrevMarked], state: GroupState[DpStreamState]) => {
-          val st = state.getOption.getOrElse(
-            DpStreamState(new DpKeyState(
-              params,
-              TreeSpec(params.maxTimeSteps, params.sigmaKey,
-                NoiseSource.seeded(NoiseSource.seedFor(runSeed, key, "key"))),
-              TreeSpec(params.maxTimeSteps, params.sigmaHist,
-                NoiseSource.seeded(NoiseSource.seedFor(runSeed, key, "hist")))), -1))
-
+        (key: String, rows: Iterator[PrevMarked], state: GroupState[DpKeyState]) => {
+          val st = state.getOption.getOrElse(DpKeyState.seeded(params, runSeed, key))
           val out = Seq.newBuilder[Release]
-
-          def processSilentUpTo(epoch: Int): Unit = {
-            var p = st.state.predictedRelease
-            while (p.exists(pr => pr > st.lastEpoch && pr < epoch)) {
-              val pr = p.get
-              st.state.processEpochPrevCounts(pr, Nil, 0.0, appeared = false)
-                .foreach(s => out += Release(key, pr, math.max(0L, math.round(s))))
-              st.lastEpoch = pr
-              p = st.state.predictedRelease
-            }
-          }
-
-          val byEpoch = rows.toSeq.groupBy(_.epoch).toSeq.sortBy(_._1)
-          byEpoch.foreach { case (epoch, rs) =>
-            if (epoch > st.lastEpoch && epoch < params.maxTimeSteps) {
-              processSilentUpTo(epoch)
-              val prevCounts = rs.groupBy(_.prev).view.mapValues(_.size.toLong).toSeq
-              st.state.processEpochPrevCounts(epoch, prevCounts, rs.map(_.value).sum, appeared = true)
-                .foreach(s => out += Release(key, epoch, math.max(0L, math.round(s))))
-              st.lastEpoch = epoch
-            }
-          }
+          appear(st, key, rows, out)
           state.update(st)
           out.result().iterator
         })
   }
+
+  /** Steps `key` through its [[PrevMarked]] rows epoch by epoch with the
+    * [[DpKeyState]] driver; each row is one distinct user with its previous
+    * epoch. */
+  private[streaming] def appear(st: DpKeyState, key: String, rows: Iterator[PrevMarked],
+      out: mutable.Builder[Release, Seq[Release]]): Unit =
+    rows.toSeq.groupBy(_.epoch).toSeq.sortBy(_._1).foreach { case (epoch, rs) =>
+      st.appear(epoch, rs.map(r => (r.prev, 1L)), rs.map(_.value).sum, emitTo(key, out))
+    }
+
+  private[streaming] def emitTo(key: String, out: mutable.Builder[Release, Seq[Release]]): DpKeyState.Emit =
+    (epoch, count) => out += Release(key, epoch, count)
 
   /** Epoch-completion marker, fed once per epoch by the source/driver — the
     * data form of the reference's micro-batch marker flush (M4) / epoch
@@ -229,10 +169,10 @@ object StreamingPipelines {
       (expectedKeys + targetKeysPerShard - 1) / targetKeysPerShard)).toInt
 
   /** Internal row of the sharded DP stage: data and ticks share one stream. */
-  final case class ShardRow(shard: Int, key: String, epoch: Int, prev: Int, value: Double, tick: Boolean)
+  final case class ShardRow(shard: Int, row: PrevMarked, tick: Boolean)
 
   /** Per-shard state: every resident key's DP state machine. */
-  final case class ShardStates(states: mutable.HashMap[String, DpStreamState])
+  final case class ShardStates(states: mutable.HashMap[String, DpKeyState])
 
   /** [[dpHistogramPrevMarked]] with EAGER Algorithm-3 silent releases: a key
     * that never reappears still releases at its predicted epoch MID-STREAM,
@@ -243,82 +183,43 @@ object StreamingPipelines {
     * Why sharded state + a tick stream: `flatMapGroupsWithState` only
     * invokes keys PRESENT in the batch, so per-key state cannot act on a
     * silent key, and registering processing-time timeouts makes the
-    * micro-batch engine trigger continuously even with no data (measured in
-    * round 1: thousands of empty batches). The reference's own unit of state
-    * is not the key but the TASK — one StreamingDPMechanism holds every key
-    * routed to it and the epoch barrier forces predicted keys through
-    * `snapshot()`. This operator restates exactly that: the group key is a
-    * shard (hash of the aggregation key), shard state holds its keys' state
-    * machines, and one [[EpochTick]] row per epoch — replicated to all
-    * shards, `numShards` rows per epoch, negligible — plays the barrier:
-    * on tick(e), every resident key with a pending predicted release ≤ e is
-    * force-processed at its predicted epoch.
+    * micro-batch engine trigger continuously even with no data. The
+    * reference's own unit of state is not the key but the TASK — one
+    * StreamingDPMechanism holds every key routed to it and the epoch barrier
+    * forces predicted keys through `snapshot()`. This operator restates
+    * exactly that: the group key is a shard (hash of the aggregation key),
+    * shard state holds its keys' state machines, and one [[EpochTick]] row
+    * per epoch — replicated to all shards, `numShards` rows per epoch,
+    * negligible — plays the barrier: on tick(e), every resident key fires
+    * its predictions due at or before e.
     *
     * Trade-off vs per-key state: the state store serializes a whole shard on
     * every update — size `numShards` via [[shardsForKeys]] (≈ keys/1000);
-    * hot shards spread by key hash. NOT the default eager path: the A/B in
-    * [[graft.tools.EagerBench]] (bench entries `eager_dp_*_t20`, both arms
-    * pinned to the same RocksDB state store) measured
-    * [[DpStatefulProcessor]] with timers ~5× faster at identical output, so
-    * prefer that unless silent-release timing must be deterministic in
-    * epoch terms (this form's tick is data, so a replay fires silents at
-    * exactly the same points; timers are wall-clock). The per-key lazy
-    * variant remains the default where downstream consumers tolerate
-    * deferred silent releases. */
+    * hot shards spread by key hash. Use this form when silent releases must
+    * fire at DETERMINISTIC points in epoch terms: its tick is data, so a
+    * replay fires them at exactly the same epochs, whereas
+    * [[DpStatefulProcessor]]'s timers are wall-clock. [[graft.tools.EagerBench]]
+    * (bench entries `eager_dp_*_t20`) tracks the cost of each form. */
   def dpHistogramEagerPrevMarked(input: Dataset[PrevMarked], ticks: Dataset[EpochTick],
       params: DpParams, runSeed: Long = 42L, numShards: Int = 64): Dataset[Release] = {
     import input.sparkSession.implicits._
-    val data = input.map(p =>
-      ShardRow(math.floorMod(p.key.hashCode, numShards), p.key, p.epoch, p.prev, p.value, tick = false))
+    val data = input.map(p => ShardRow(math.floorMod(p.key.hashCode, numShards), p, tick = false))
     val tickRows = ticks.flatMap(t =>
-      (0 until numShards).iterator.map(s => ShardRow(s, "", t.epoch, -1, 0.0, tick = true)))
+      (0 until numShards).iterator.map(s => ShardRow(s, PrevMarked("", t.epoch, -1, 0.0), tick = true)))
     data.union(tickRows)
       .groupByKey(_.shard)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (_: Int, rows: Iterator[ShardRow], state: GroupState[ShardStates]) => {
           val st = state.getOption.getOrElse(ShardStates(mutable.HashMap.empty))
           val out = Seq.newBuilder[Release]
-
-          def keyState(key: String): DpStreamState =
-            st.states.getOrElseUpdate(key, DpStreamState(new DpKeyState(
-              params,
-              TreeSpec(params.maxTimeSteps, params.sigmaKey,
-                NoiseSource.seeded(NoiseSource.seedFor(runSeed, key, "key"))),
-              TreeSpec(params.maxTimeSteps, params.sigmaHist,
-                NoiseSource.seeded(NoiseSource.seedFor(runSeed, key, "hist")))), -1))
-
-          /** Fire pending predicted releases at their own epochs, up to
-            * `bound` ([inclusive] for ticks, exclusive before an appearance —
-            * an appearance AT the predicted epoch consumes it itself). */
-          def fireSilent(key: String, ks: DpStreamState, bound: Int, inclusive: Boolean): Unit = {
-            var p = ks.state.predictedRelease
-            while (p.exists(pr => pr > ks.lastEpoch && pr < params.maxTimeSteps &&
-                (pr < bound || (inclusive && pr == bound)))) {
-              val pr = p.get
-              ks.state.processEpochPrevCounts(pr, Nil, 0.0, appeared = false)
-                .foreach(s => out += Release(key, pr, math.max(0L, math.round(s))))
-              ks.lastEpoch = pr
-              p = ks.state.predictedRelease
+          rows.toSeq.groupBy(_.row.epoch).toSeq.sortBy(_._1).foreach { case (epoch, rs) =>
+            // data first: an appearance at its predicted epoch consumes it
+            rs.filter(!_.tick).map(_.row).groupBy(_.key).toSeq.sortBy(_._1).foreach { case (key, krs) =>
+              appear(st.states.getOrElseUpdate(key, DpKeyState.seeded(params, runSeed, key)), key, krs.iterator, out)
             }
-          }
-
-          rows.toSeq.groupBy(_.epoch).toSeq.sortBy(_._1).foreach { case (epoch, rs) =>
-            // data first: an appearance at its predicted epoch handles it
-            rs.filter(!_.tick).groupBy(_.key).toSeq.sortBy(_._1).foreach { case (key, krs) =>
-              val ks = keyState(key)
-              if (epoch > ks.lastEpoch && epoch < params.maxTimeSteps) {
-                fireSilent(key, ks, epoch, inclusive = false)
-                val prevCounts = krs.groupBy(_.prev).view.mapValues(_.size.toLong).toSeq
-                ks.state.processEpochPrevCounts(epoch, prevCounts, krs.map(_.value).sum, appeared = true)
-                  .foreach(s => out += Release(key, epoch, math.max(0L, math.round(s))))
-                ks.lastEpoch = epoch
-              }
-            }
-            // the barrier: every resident key's due predictions fire now
+            // the barrier: every resident key's predictions due by `epoch` fire now
             if (rs.exists(_.tick))
-              st.states.toSeq.sortBy(_._1).foreach { case (key, ks) =>
-                fireSilent(key, ks, epoch, inclusive = true)
-              }
+              st.states.toSeq.sortBy(_._1).foreach { case (key, ks) => ks.fireDue(epoch + 1, emitTo(key, out)) }
           }
           state.update(st)
           out.result().iterator

@@ -22,6 +22,10 @@ import graft.streaming.{Contribution, DpStatefulProcessor, StreamingPipelines}
   *     sink quiesces. Timer latency and continuous trigger evaluation are
   *     that design's cost, equally part of the measurement.
   *
+  * Every arm, the lazy floor included, runs the same
+  * [[StreamingPipelines.markPrevEpoch]] stage in front of its per-key DP
+  * state, so the A/B compares only how silent releases surface.
+  *
   * Each run returns the release count so the caller can cross-check that
   * both designs emitted the same number of releases (identical params and
   * seeds ⇒ identical release sets; equality of values is pinned by
@@ -105,8 +109,8 @@ object EagerBench {
   /** Thrown when the tws arm cannot produce a CONVERGED measurement inside
     * its deadline. The caller's `timed` wrapper turns this into a failed
     * (-1) bench entry — a timeout must never sit in `queries` looking like
-    * a converged time (the r6 180 s "measurement" was exactly that: both
-    * repeats recorded the harness deadline, not the operator). */
+    * a converged time: a deadline exit measures the harness, not the
+    * operator. */
   final class NotConverged(msg: String) extends IllegalStateException(msg)
 
   def runTwsTimers(spark: SparkSession, byEpoch: Seq[(Int, Seq[Contribution])],
@@ -115,13 +119,11 @@ object EagerBench {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Contribution]
     val name = s"eager_tws_${System.nanoTime()}"
-    // Consumption is tracked by a listener that sees EVERY progress event.
-    // The r6 harness summed deltas from q.recentProgress — a bounded ring
-    // (default 100 entries) that WRAPS under the continuous timer-trigger
-    // cadence (empty micro-batches complete in ~10 ms while timers are
-    // pending), so `consumed` undercounted forever, phase 1 spun to the
-    // deadline, and the deadline became the recorded "time" for the arm —
-    // both r6 repeats logged 180.3x s against deadlineMs = 180 000.
+    // Consumption is tracked by a listener that sees EVERY progress event,
+    // never by q.recentProgress: that is a bounded ring (default 100
+    // entries) which wraps under the continuous timer-trigger cadence
+    // (empty micro-batches complete in ~10 ms while timers are pending), so
+    // deltas summed from it undercount and the wait spins to its deadline.
     val consumed = new java.util.concurrent.atomic.AtomicLong(0L)
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
@@ -155,8 +157,8 @@ object EagerBench {
         }
       }
       // Phase 1: block until the engine has CONSUMED every fed row — only
-      // then may quiescence be judged (the r5 vacuous A/B declared a stable
-      // EMPTY sink finished before the first micro-batch even completed).
+      // then may quiescence be judged; otherwise an EMPTY sink that is
+      // stable before the first micro-batch completes reads as finished.
       while (consumed.get < totalFed && System.currentTimeMillis() < deadline) {
         Thread.sleep(100)
         report("consume", -1L)

@@ -36,14 +36,12 @@ class StreamingSpec extends AnyFunSuite {
       .toSeq
   }
 
-  private def streamHistogram(params: DpParams, contributions: Seq[Contribution], queryName: String,
-      twoLevel: Boolean = false): Map[String, Long] = {
+  private def streamHistogram(params: DpParams, contributions: Seq[Contribution],
+      queryName: String): Map[String, Long] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Contribution]
-    val releases =
-      if (twoLevel) StreamingPipelines.dpHistogramTwoLevel(mem.toDS(), params)
-      else StreamingPipelines.dpHistogram(mem.toDS(), params)
+    val releases = StreamingPipelines.dpHistogram(mem.toDS(), params)
     val q = StreamingPipelines.carryForwardSink(releases, queryName)
     try {
       contributions.groupBy(_.epoch).toSeq.sortBy(_._1).foreach { case (_, rows) =>
@@ -89,6 +87,31 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("two-level streaming (prev-epoch marking, no user ids in key state) equals batch") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, FlatMapGroupsWithState, TransformWithState}
+    implicit val sqlCtx = spark.sqlContext
+    // Plan: a (key, userId)-keyed marking operator, then a key-keyed DP
+    // operator whose input carries no userId column.
+    val lazyPlan = StreamingPipelines.dpHistogram(MemoryStream[Contribution].toDS(), DpParams.zeroNoise(8))
+      .queryExecution.analyzed
+    val fmgws = lazyPlan.collect { case f: FlatMapGroupsWithState => f }
+    assert(fmgws.size === 2, lazyPlan.treeString)
+    val Seq(keyLevel, marking) = fmgws
+    assert(keyLevel.child.find(_ eq marking).isDefined, "marking must feed the key-level operator")
+    def groupingKey(f: FlatMapGroupsWithState, row: Any): Any =
+      f.child match { case a: AppendColumns => a.func(row); case other => fail(s"unexpected ${other.nodeName}") }
+    assert(groupingKey(marking, Contribution("k", 3, "u", 1.0)) === (("k", "u")))
+    assert(groupingKey(keyLevel, PrevMarked("k", 3, -1, 1.0)) === "k")
+    assert(keyLevel.dataAttributes.map(_.name) === Seq("key", "epoch", "prev", "value"))
+    assert(!keyLevel.child.output.exists(_.name == "userId"))
+    // the transformWithState arm consumes the same marked rows
+    val twsPlan = DpStatefulProcessor.dpHistogram(MemoryStream[Contribution].toDS(), DpParams.zeroNoise(8))
+      .queryExecution.analyzed
+    assert(twsPlan.collect {
+      case _: TransformWithState => "TransformWithState"
+      case _: FlatMapGroupsWithState => "FlatMapGroupsWithState"
+    } === Seq("TransformWithState", "FlatMapGroupsWithState"))
+
     val contrib = eventContributions()
     val events = Tables.events(spark, sfDir)
       .select(col("event_type").as("key"), dayofmonth(col("ts")).cast("int").as("epoch"),
@@ -98,7 +121,7 @@ class StreamingSpec extends AnyFunSuite {
     for ((params, name) <- Seq(
         (DpParams.zeroNoise(32), "tl0"),
         (DpParams(3.0, 6.0, graft.dp.Stats.inverseNormalCdf(1 - 1e-3), 32, 20, 50), "tl1"))) {
-      val streamed = streamHistogram(params, contrib, name, twoLevel = true)
+      val streamed = streamHistogram(params, contrib, name)
       val batch = DpHistogram.run(spark, preAgg, params)
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
       assert(streamed === batch, s"two-level mismatch in $name")
