@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.dp.DpParams
 import graft.operators.{CoreOps, DpHistogram}
 import graft.sources.SyntheticSource
-import graft.tools.QueryProfiler
+import graft.tools.{BenchReport, QueryProfiler}
+import graft.tools.BenchReport.{medianOf, r3}
 
 import scala.util.control.NonFatal
 
@@ -21,6 +22,16 @@ import scala.util.control.NonFatal
   *   - `microbatch_0_1gb`: byte-budget batch (0.1 GB at the reference's
   *     31 B/tuple accounting) through generate → clamp → histogram, the
   *     baseline micro-batch throughput measure (GB/s = size/duration).
+  *
+  * Lap protocol: every entry runs `SPARK_GRAFT_BENCH_REPEATS` laps
+  * (default 2) and reports the min of its laps, or -1 when any lap failed
+  * ([[BenchReport.lapSummary]]). The arms of a receipt group run
+  * interleaved, one lap each in turn. How many laps an entry gets never
+  * depends on its readings, on the machine's load or on files in the
+  * working directory. `bench.json` keeps each lap's wall seconds
+  * (`runs_detail`), this process's CPU seconds over the same timed body
+  * (`cpu_detail`) and the share of the machine other processes used
+  * (`ext_cpu`, recorded only).
   *
   * Measurement notes:
   *   - each query is forced with a `noop`-format write (full materialization
@@ -38,196 +49,28 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
-    // In-run repetitions for the headline/synthetic workloads: each is run
-    // `repeats` times back-to-back and reports the MIN (the least
-    // load-contaminated sample — r5 ran on a loaded machine and unchanged
-    // code swung 2–6×, blinding round-over-round comparison). Per-run times
-    // land in bench.json "runs_detail"; system load is sampled before/after
-    // so a reader can see contamination directly.
     val repeats = sys.env.get("SPARK_GRAFT_BENCH_REPEATS").map(_.toInt).getOrElse(2).max(1)
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadPre = osBean.getSystemLoadAverage
-
-    // ---- box-speed probe (r14): this sandbox phase-throttles on a
-    // tens-of-minutes timescale — two back-to-back quiet sweeps measured
-    // 675 s vs 908 s totals with ZERO external CPU, some entries 10× apart.
-    // Committed minima are therefore fast-phase numbers, and a fixed 1.5×
-    // drift threshold burns its whole retry budget whenever the box is in a
-    // slow phase. The probe is a deterministic CPU-bound workload (SHA-256
-    // over a fixed buffer on every core); its time relative to the FASTEST
-    // committed probe scales the drift threshold, so the gate fires on
-    // RELATIVE regressions, not on hypervisor phase. ----
-    val boxProbeSec: Double = {
-      val t0 = System.nanoTime()
-      val threads = (1 to cpus.toInt).map { i =>
-        val t = new Thread(() => {
-          val md = java.security.MessageDigest.getInstance("SHA-256")
-          val buf = new Array[Byte](1 << 20)
-          buf(0) = i.toByte
-          var k = 0
-          while (k < 600) { md.update(buf); buf(k % buf.length) = md.digest()(0); k += 1 }
-        })
-        t.start(); t
-      }
-      threads.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
-    val ProbeKey = "__box_probe_s"
-    // EXTERNAL-load detector for noise-gated retries: loadavg alone cannot
-    // distinguish our own 32 busy cores from a concurrent sbt/DuckDB run
-    // (r5/r7: unchanged-code entries swung 24–58% under mid-suite load), but
-    // systemCpu − processCpu is exactly the share of the machine OTHER
-    // processes burned during the interval since the previous sample.
     val sunBean = osBean match {
       case b: com.sun.management.OperatingSystemMXBean => Some(b)
       case _ => None
     }
     /** CPU fraction consumed by processes other than this JVM since the last
-      * call (interval-based; first call primes the counters). */
+      * call (interval-based; first call primes the counters). Loadavg cannot
+      * tell this JVM's busy cores from a concurrent process's;
+      * systemCpu − processCpu can. */
     def externalCpu(): Double = sunBean.map { b =>
       val sys = b.getCpuLoad
       val proc = b.getProcessCpuLoad
       if (sys.isNaN || proc.isNaN) 0.0 else math.max(0.0, sys - proc)
     }.getOrElse(0.0)
     externalCpu() // prime the interval counters
-    // An entry is retried once when >20% of the machine went to other
-    // processes during its run AND it ran long enough for the reading to be
-    // meaningful; the retry budget bounds worst-case suite inflation.
-    val ExtCpuRetryThreshold = 0.20
-    val MaxNoiseRetries = 12
-    var noiseRetries = 0
-    // ---- fail-closed quiet-machine gate for the A/B receipts (r11 verdict
-    // #3): min-of-2 + drift retries demonstrably cannot rescue a sweep
-    // under SUSTAINED contention — r11 ran at loadavg 6–10 and the
-    // published skew_join_aqe_{on,off} ordering INVERTED. Before each arm
-    // of an A/B pair the bench now waits until the external-CPU share of
-    // the machine over a short idle window drops below QuietExtCpu
-    // (loadavg is useless here: it cannot separate our own 32 busy cores
-    // from a concurrent process, and decays over minutes). The wait is
-    // bounded; on timeout the arm runs anyway and lands in
-    // "load_gate_timeouts" so the receipt reads FLAGGED, never silently
-    // trusted. Waits are logged per entry in "load_gate_waits".
-    val QuietExtCpu = 0.15
-    val QuietProbeMs = 400L
-    val QuietMaxWaitMs = 90000L
-    val loadGateWaits = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val loadGateTimeouts = scala.collection.mutable.ArrayBuffer.empty[String]
-    /** Entries whose value is an A/B ORDERING claim, not a throughput
-      * number — the ones a contaminated sample can invert. */
-    val abReceiptEntries: Set[String] = Set(
-      "synthetic_dp_t20", "synthetic_dp_t20_identity_state",
-      "eager_dp_sharded_t20", "eager_dp_tws_timers_t20", "eager_dp_lazy_t20",
-      "colocated_join_plain", "colocated_join_bucketed",
-      "skew_join_aqe_off", "skew_join_aqe_on",
-      "runtime_bloom_off", "runtime_bloom_on",
-      "e2e_build_one_shuffle", "e2e_build_joins",
-      "median_filter_hist", "median_filter_sortwindow",
-      "domain_cap_grouplimit", "domain_cap_fullwindow",
-      "source_divergence_ckpt", "source_divergence_nockpt",
-      "distinct_users_exact", "distinct_users_hll",
-      "bm25_index_delete_incremental", "bm25_index_rebuild",
-      "hamming_pairs_blocked", "hamming_pairs_allpairs",
-      "block_winners_agg", "block_winners_window",
-      "memorization_pairs", "memorization_occurrence",
-      "bpe_train_corpus", "bpe_train_local",
-      "phrase_bulk_batch", "phrase_per_query_loop")
-    // ---- same-sweep interleaved receipts (r12 verdict #3) ----
-    // The r12 sweep ran 61/226 entries >1.8x over committed minima while
-    // the load gate saw a quiet machine — cross-round ABSOLUTE times
-    // cannot carry an ordering claim on this box. The machine-independent
-    // rule: each A/B group's arms run INTERLEAVED (A,B[,C] per lap, laps
-    // back to back), and every ordering claim is decided by the MEDIAN of
-    // per-lap wall ratios from THIS sweep. Committed minima remain drift
-    // references (retry triggers), never receipts. Group order = the
-    // conservative order already documented per pair (our design first,
-    // so residual warmup bias lands on it).
-    val receiptGroups: Seq[Seq[String]] = Seq(
-      Seq("eager_dp_sharded_t20", "eager_dp_tws_timers_t20", "eager_dp_lazy_t20"),
-      Seq("colocated_join_plain", "colocated_join_bucketed"),
-      Seq("skew_join_aqe_off", "skew_join_aqe_on"),
-      Seq("runtime_bloom_off", "runtime_bloom_on"),
-      Seq("e2e_build_one_shuffle", "e2e_build_joins"),
-      Seq("median_filter_hist", "median_filter_sortwindow"),
-      Seq("domain_cap_grouplimit", "domain_cap_fullwindow"),
-      Seq("source_divergence_ckpt", "source_divergence_nockpt"),
-      Seq("distinct_users_exact", "distinct_users_hll"),
-      Seq("bm25_index_delete_incremental", "bm25_index_rebuild"),
-      Seq("hamming_pairs_blocked", "hamming_pairs_allpairs"),
-      Seq("block_winners_agg", "block_winners_window"),
-      Seq("memorization_pairs", "memorization_occurrence"),
-      Seq("phrase_bulk_batch", "phrase_per_query_loop"),
-      Seq("phrase_stored_pruned", "phrase_stored_unpruned"))
-    /** (faster, slower, metric): the published ordering claims. metric
-      * "wall" = median per-lap wall ratio < 1; "shuffle_read_bytes" =
-      * profiler byte ratio < 1 (runtime bloom's claim is the WIRE cut —
-      * its extra sequential build stage legitimately shows in local wall
-      * time against a warm page cache, so wall is reported but not the
-      * claim). */
-    val receiptClaims: Seq[(String, String, String)] = Seq(
-      ("eager_dp_lazy_t20", "eager_dp_tws_timers_t20", "wall"),
-      ("eager_dp_tws_timers_t20", "eager_dp_sharded_t20", "wall"),
-      ("colocated_join_bucketed", "colocated_join_plain", "wall"),
-      ("skew_join_aqe_on", "skew_join_aqe_off", "wall"),
-      ("runtime_bloom_on", "runtime_bloom_off", "shuffle_read_bytes"),
-      ("e2e_build_one_shuffle", "e2e_build_joins", "wall"),
-      // the median-filter claim is the corpus-shuffle cut: the histogram
-      // arm aggregates at (group × quantized-value) cardinality and joins
-      // the thresholds back under the broadcast threshold, so the corpus
-      // itself never shuffles, while the window arm range-materializes the
-      // full frame per group. Wall at this size on a warm page cache is
-      // phase noise — the r19 driver sweep inverted the wall ordering under
-      // loadavg 7.8 while the byte ratio held at 0.17 (the same reasoning
-      // as domain_cap/block_winners' byte-metric claims); r20 moves the
-      // claim to the deterministic metric. Wall stays reported per lap.
-      ("median_filter_hist", "median_filter_sortwindow", "shuffle_read_bytes"),
-      // the cap's claim is the map-side prune: WindowGroupLimit inserts a
-      // per-partition top-K BEFORE the exchange, so the shuffle carries
-      // ~K·partitions rows per group instead of all 5M (measured 11×
-      // byte cut, task 0.58) — the byte ratio is deterministic and
-      // phase-immune where local wall on a warm page cache is not
-      ("domain_cap_grouplimit", "domain_cap_fullwindow", "shuffle_read_bytes"),
-      ("source_divergence_ckpt", "source_divergence_nockpt", "wall"),
-      ("distinct_users_hll", "distinct_users_exact", "wall"),
-      ("bm25_index_delete_incremental", "bm25_index_rebuild", "wall"),
-      ("hamming_pairs_blocked", "hamming_pairs_allpairs", "wall"),
-      // the documented claim is the map-side-combine WIRE cut (the window
-      // must shuffle every block row) — at these sub-second sizes local
-      // wall on a warm page cache is a coin flip (r14: wall medians 1.03 /
-      // 1.07 across sweeps while the byte ratio held at 0.838), the same
-      // reasoning as runtime_bloom's byte-metric claim
-      ("block_winners_agg", "block_winners_window", "shuffle_read_bytes"),
-      ("memorization_pairs", "memorization_occurrence", "wall"),
-      ("phrase_bulk_batch", "phrase_per_query_loop", "wall"),
-      // the stored index's claim is the LISTING/READ cut from partition
-      // pruning (input_bytes is deterministic per run — the pruned scan
-      // simply never opens the other buckets' files); wall at this index
-      // size is page-cache noise, the block_winners reasoning
-      ("phrase_stored_pruned", "phrase_stored_unpruned", "input_bytes"))
-    def awaitQuiet(name: String): Unit = {
-      val t0 = System.nanoTime()
-      externalCpu() // reset the interval so the first probe covers our sleep
-      // the first probe sleep counts toward the cap too (ADVICE r12: the
-      // 90 s bound used to overshoot by one probe interval)
-      var waitedMs = QuietProbeMs
-      Thread.sleep(QuietProbeMs)
-      var ext = externalCpu()
-      while (ext > QuietExtCpu && waitedMs < QuietMaxWaitMs) {
-        Thread.sleep(QuietProbeMs)
-        waitedMs += QuietProbeMs
-        ext = externalCpu()
-      }
-      val waitedSec = (System.nanoTime() - t0) / 1e9
-      if (ext > QuietExtCpu) {
-        loadGateTimeouts += name
-        System.err.println(f"[bench] load gate TIMED OUT for '$name' after $waitedSec%.1f s " +
-          f"(external CPU still $ext%.2f) — running anyway, receipt flagged")
-      } else if (waitedMs > QuietProbeMs) {
-        // SUM repeated samples of one entry (ADVICE r12: keying by bare
-        // name used to overwrite earlier waits in the receipt)
-        loadGateWaits(name) = loadGateWaits.getOrElse(name, 0.0) + waitedSec
-        System.err.println(f"[bench] load gate held '$name' $waitedSec%.1f s for a quiet machine")
-      }
-    }
+    /** This JVM's cumulative CPU seconds (-1 when the platform has no
+      * process CPU counter). */
+    def processCpuSec(): Double =
+      sunBean.map(_.getProcessCpuTime).filter(_ >= 0).map(_ / 1e9).getOrElse(-1.0)
+
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -243,13 +86,16 @@ object Bench {
     def force(df: DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
 
-    /** Time one named workload under a job group (for profiler attribution);
-      * failures are surfaced on stderr, never silently -1'd away. Every call
-      * closes ONE profiler run (after draining the listener bus), so the
-      * emitted profile is the min-wall run's metrics, not an accumulation
-      * over repeats/retries/laps (VERDICT r13 #5). */
-    def timed(name: String)(body: => Unit): Double = {
+    // CPU seconds this process spent in the most recent timed body — the
+    // same interval as the wall time it reports
+    var bodyCpu = -1.0
+
+    /** Run `body` under the entry's job group (for profiler attribution)
+      * and return its wall seconds; failures are surfaced on stderr, never
+      * silently -1'd away. */
+    def timeBody(name: String)(body: => Unit): Double = {
       spark.sparkContext.setJobGroup(name, name, interruptOnCancel = false)
+      val c0 = processCpuSec()
       val t =
         try {
           val t0 = System.nanoTime()
@@ -260,33 +106,30 @@ object Bench {
             System.err.println(s"[bench] query '$name' FAILED: ${e.getClass.getName}: ${e.getMessage}")
             -1.0
         } finally spark.sparkContext.clearJobGroup()
+      bodyCpu = if (c0 < 0) -1.0 else processCpuSec() - c0
       ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      t
+    }
+
+    /** Time one named workload. Every call closes ONE profiler run (after
+      * draining the listener bus), so the emitted profile is the min-wall
+      * run's metrics, not an accumulation over laps. */
+    def timed(name: String)(body: => Unit): Double = {
+      val t = timeBody(name)(body)
       profiler.endRun(name, t)
       t
     }
 
     /** [[timed]] whose profiler run is finalized only AFTER `audit` has
-      * passed (ADVICE r19: the streaming entries' batch-equality audit runs
-      * OUTSIDE the timed region since r19, so an audit failure used to
-      * return -1 while the profiler had already kept the run as a
-      * successful timing — profiler/drift history and the bench result
-      * disagreed). The audit runs outside the job group, so its jobs are
-      * never attributed to the entry's profile, and only when the body
-      * itself succeeded; an audit failure marks the run failed (-1) in the
-      * bench result AND the profiler/drift record. */
+      * passed, so the bench result and the profiler never disagree about
+      * whether a run succeeded. The audit (an independent recomputation
+      * that checks the timed body's result) runs outside the timed region
+      * and outside the job group, so its jobs are never attributed to the
+      * entry's profile, and only when the body itself succeeded; an audit
+      * failure marks the run failed (-1) in the bench result AND the
+      * profiler record. */
     def timedAudited(name: String)(body: => Unit)(audit: => Unit): Double = {
-      spark.sparkContext.setJobGroup(name, name, interruptOnCancel = false)
-      val t =
-        try {
-          val t0 = System.nanoTime()
-          body
-          (System.nanoTime() - t0) / 1e9
-        } catch {
-          case NonFatal(e) =>
-            System.err.println(s"[bench] query '$name' FAILED: ${e.getClass.getName}: ${e.getMessage}")
-            -1.0
-        } finally spark.sparkContext.clearJobGroup()
-      ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      val t = timeBody(name)(body)
       val tf =
         if (t < 0) t
         else try { audit; t } catch {
@@ -303,176 +146,35 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
     def wanted(name: String): Boolean = only.forall(_.contains(name))
 
-    // ---- historical drift reference (r9 advice #1) ----
-    // The external-CPU gate catches OTHER processes stealing the machine,
-    // but r9's distortions were all in-process (GC/suite ordering):
-    // q_leakage_safe_split read 31.4 s single-run vs ~3-5.6 s in prior
-    // rounds on unchanged code. The committed per-round summaries
-    // (BENCH_r*.json, compact stdout line inside "tail") carry each
-    // entry's best prior time at the same sf — any fresh measurement
-    // exceeding DriftRetryFactor × that min is re-run once and the min
-    // reported, with the retry recorded in bench.json.
-    // bench_history.json is the AUTHORITATIVE reference (VERDICT r13 next
-    // #4): it is committed and can be re-founded when the sandbox slows,
-    // while the driver-round tails are immutable artifacts whose old fast
-    // minima would otherwise burn a drift retry on every sweep forever.
-    // Tails only seed entries the history file does not know yet.
-    // r18 POLICY CHANGE (VERDICT r17 #1, the twice-missed drift budget):
-    // the reference is no longer a min-ever ratchet. The history file
-    // keeps each entry's last 3 full-sweep readings and the reference is
-    // their MAX — the slowest recent honest sweep — so a fast-phase
-    // reading stops being a permanent unreachable bar (the r16/r17
-    // failure: the microbatch grid's committed minima were 3-6× below
-    // anything the driver box could reproduce). Real regressions are
-    // multiplicative and still clear 1.5× the slowest recent reading.
-    val histMins: Map[String, Double] = {
-      val tails = graft.tools.BenchReport.committedMins(new java.io.File("."), sfDir)
-      val full = graft.tools.BenchReport.historyRefs(
-        new java.io.File("bench_history.json"), sfDir)
-      tails ++ full
-    }
-    // The FASTEST reading in each entry's recent-sweeps window — the
-    // regression-watch reference (ADVICE r18): the windowed-MAX drift
-    // reference self-heals in both directions, which means a PERSISTENT
-    // genuine slowdown becomes the baseline after HistoryWindow sweeps
-    // and stops being flagged. The watch below surfaces any final
-    // reading > 3× this min at least once, NON-GATING (no retry, no
-    // failure) — a reader triaging the sweep sees the regression before
-    // the window normalizes it.
-    val histWindowMins: Map[String, Double] = graft.tools.BenchReport
-      .historyWindows(new java.io.File("bench_history.json"))
-      .getOrElse(sfDir, Map.empty)
-      .collect { case (k, vs) if vs.nonEmpty => k -> vs.min }
-    // slow-phase scaling: even the windowed reference can be quiet-phase
-    // relative to this sweep, so when the probe says the box is currently
-    // N× slower than the committed probe reference, the drift threshold
-    // widens by N — capped at 3× so a truly broken box still surfaces as
-    // retries rather than silence
-    val probeRatio: Double = {
-      val best = histMins.getOrElse(ProbeKey, -1.0)
-      if (best <= 0) 1.0 else math.min(3.0, math.max(1.0, boxProbeSec / best))
-    }
-    System.err.println(f"[bench] box probe ${boxProbeSec}%.2f s (committed ref " +
-      f"${histMins.getOrElse(ProbeKey, -1.0)}%.2f s) -> drift threshold x$probeRatio%.2f")
-    val DriftRetryFactor = 1.5 * probeRatio
-    // sized to the suite: the cap exists to bound pathological churn, not
-    // to ration retries — r10's 204-entry suite exhausted the old cap of
-    // 20 on the alphabetically-early entries and left later out-of-band
-    // readings (median_filter_hist at 4.3x its min) standing unretried
-    val MaxDriftRetries = 60
-    var driftRetries = 0
-    val driftRetried = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Deliberately-bad A/B arms are exempt from drift tracking (VERDICT
-    // r16 #2, generalized per VERDICT r18 #1): an arm that only ever
-    // appears on the SLOW side of a receipt claim exists purely as the
-    // contrast the receipt measures the shipped plan against — its
-    // absolute time is not a claim, its receipt is, so a drift row
-    // against it is pure noise the next judge has to re-litigate
-    // (r18 burned a drift-budget row on hamming_pairs_allpairs while its
-    // receipt read ok at 0.132). DERIVED from the receipt pair list so a
-    // new A/B pair is exempted the day it lands: the slow side of every
-    // claim, minus any entry that also carries a claim's FAST side
-    // (eager_dp_tws_timers_t20 loses to lazy but beats sharded — its
-    // ordering both ways is receipted, and drift still watches it).
-    // Drift protection belongs to entries whose absolute time IS the
-    // claim.
-    val DriftExempt: Set[String] =
-      receiptClaims.map(_._2).toSet -- receiptClaims.map(_._1).toSet
-    // additive slack on the drift threshold (see driftGate below for the
-    // r17 re-calibration evidence); shared by the gate and the
-    // still-out-of-band partition so both speak the same band
-    val DriftAbsMarginSec = 1.0
-    /** True (and budget consumed) when `t` is a credible-looking but
-      * historically-out-of-band reading that has earned a re-run. */
-    def driftGate(name: String, t: Double): Boolean = {
-      if (DriftExempt.contains(name)) return false
-      // absolute floor 0.3 s: below it jitter trivially exceeds 1.5× and
-      // retries would churn; above it a sub-second gate with history (the
-      // bench_history.json entries) still earns its drift retry — the old
-      // 0.5 s floor left e.g. a 0.45 s reading of a 0.2 s gate unretried
-      // multiplicative factor PLUS an absolute margin: scheduler/GC
-      // jitter is additive, so a bare 1.5× gate on a 0.4 s entry fires on
-      // noise every sweep (r14: half the retry budget went to sub-second
-      // entries within 0.3 s of their minima). The margin was 0.3 s at
-      // r14's ~200-entry suite; at 291 entries the LATE-sweep additive
-      // JVM overhead alone reads ~0.5-1.1 s (r17: six sub-second-minimum
-      // entries flagged at 0.8-1.5 s while a fresh quiet JVM reproduced
-      // their minima-adjacent readings — no regression, pure sweep
-      // position), so the margin is re-calibrated to 1.0 s. Real
-      // regressions on the entries drift protection exists for
-      // (multi-second scale claims) are multiplicative and unaffected.
-      // absolute floor for SUB-SECOND-reference entries (VERDICT r17 #1
-      // option b): an entry whose recent sweeps all read under 1 s is
-      // dominated by fixed job-startup cost, where box phase swings are
-      // multiplicative-looking but carry no signal about the workload; a
-      // reading under 5 s on such an entry is never drift, whatever the
-      // ratio says. Entries with multi-second references — the ones whose
-      // absolute time IS a claim — are unaffected.
-      val subSecondFloor =
-        histMins.get(name).exists(h => h < 1.0) && t < 5.0
-      val out = t > 0.3 && !subSecondFloor &&
-        histMins.get(name).exists(h => t > h * DriftRetryFactor + DriftAbsMarginSec) &&
-        driftRetries < MaxDriftRetries
-      if (out) {
-        driftRetries += 1
-        driftRetried += name
-        System.err.println(f"[bench] '$name' $t%.2f s exceeds $DriftRetryFactor%.1fx its " +
-          f"historical min ${histMins(name)}%.2f s — retrying once")
-      }
-      out
-    }
-
-    // per-entry times across the in-run repetitions / noise retries
+    // every lap of every entry, in lap order: wall seconds (-1 = failed),
+    // this process's CPU seconds over the same timed body, and the
+    // external-CPU share of the machine over the whole lap
     val runDetail = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    // per-entry external-CPU share observed during each run (same order as
-    // runDetail) — the contamination record a reader needs to discount a
-    // slow sample without guessing
+    val cpuDetail = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
     val extDetail = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+    case class Lap(wall: Double, cpu: Double, ext: Double)
 
-    /** One timed run plus the external-CPU share observed during it. */
-    def sampledRun(name: String)(body: => Unit): (Double, Double) = {
+    /** One lap: `run` times its body once through [[timed]] or
+      * [[timedAudited]] and returns the wall seconds (-1 on failure). */
+    def lap(run: => Double): Lap = {
       externalCpu()
-      val t = timed(name)(body)
-      (t, externalCpu())
+      bodyCpu = -1.0
+      val t = run
+      Lap(t, bodyCpu, externalCpu())
     }
 
-    /** Time once; re-run once and report the min when the first reading is
-      * not trustworthy on its own (r8 advice #2 + r9 advice #1):
-      *   - other processes stole >threshold CPU during a non-trivial run
-      *     (external contamination), or
-      *   - the reading exceeds 1.5× the entry's best committed-round time
-      *     at this sf (in-process noise — GC/suite ordering — that the
-      *     external-CPU gate cannot see), or
-      *   - the entry has no committed history at this sf (new this round:
-      *     min-of-2 by default, so its first recorded number is never a
-      *     single unwitnessed sample). */
-    def timedNoiseGated(name: String)(body: => Unit): Double = {
-      val (t1, e1) = sampledRun(name)(body)
-      val contaminated = t1 > 0.5 && e1 > ExtCpuRetryThreshold
-      val rerun =
-        if (t1 < 0) false
-        else if (contaminated && noiseRetries < MaxNoiseRetries) {
-          noiseRetries += 1
-          System.err.println(f"[bench] '$name' saw external CPU $e1%.2f — retrying once")
-          true
-        } else if (driftGate(name, t1)) true
-        else !histMins.contains(name)
-      if (rerun) {
-        val (t2, e2) = sampledRun(name)(body)
-        runDetail(name) = Seq(t1, t2)
-        extDetail(name) = Seq(e1, e2)
-        if (t2 >= 0) math.min(t1, t2) else t1
-      } else {
-        extDetail(name) = Seq(e1)
-        t1
-      }
+    /** Record an entry's laps and return its reported value. */
+    def record(name: String, laps: Seq[Lap]): Double = {
+      runDetail(name) = laps.map(_.wall)
+      cpuDetail(name) = laps.map(_.cpu)
+      extDetail(name) = laps.map(_.ext)
+      BenchReport.lapSummary(laps.map(_.wall))
     }
 
     // Unrecorded JVM warmup: the first entries of a cold sbt-launched JVM
     // read 5-8x slow (codegen compilation, parquet footer reads, shuffle
-    // machinery spin-up) and burned a drift retry at the head of every
-    // sweep. One pass over each base table with a small shuffle warms the
-    // common path; nothing is recorded or compared.
+    // machinery spin-up). One pass over each base table with a small
+    // shuffle warms the common path; nothing is recorded or compared.
     locally {
       val w0 = System.nanoTime()
       force(Tables.documents(spark, sfDir).groupBy("source").count())
@@ -487,7 +189,9 @@ object Bench {
 
     val queryTimes = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => wanted(name) }
-      .map { case (name, fn) => name -> timedNoiseGated(name)(force(fn(spark, sfDir))) }
+      .map { case (name, fn) =>
+        name -> record(name, (1 to repeats).map(_ => lap(timed(name)(force(fn(spark, sfDir))))))
+      }
 
     /** Byte-budget micro-batch at a given total size and parallelism
       * (reference grid: sizes {1,2,5} GB default plan,
@@ -830,7 +534,7 @@ object Bench {
       "e2e_build_one_shuffle" -> (() => noBroadcast { timed("e2e_build_one_shuffle") {
         force(SparkEntry.queries("e2e_corpus_build")(spark, sfDir))
       }}),
-      // Histogram-median A/B: the r9 perGroupMedianFilter computes each
+      // Histogram-median A/B: perGroupMedianFilter computes each
       // group's exact lower median from a (group × quantized-value)
       // histogram — one map-side-combinable aggregate at histogram
       // cardinality — while the naive form every user writes first sorts
@@ -840,7 +544,7 @@ object Bench {
       // the window arm is a full-corpus range materialization per group;
       // the histogram arm never shuffles the corpus at all (broadcast
       // threshold join). hist runs FIRST so warmup bias is conservative.
-      // Per-domain top-K A/B (the q_domain_cap claim, r15): the rank<=K
+      // Per-domain top-K A/B (the q_domain_cap claim): the rank<=K
       // filter over a row_number window plans WindowGroupLimit — per-
       // partition top-K heaps prune each group to K rows BEFORE the final
       // per-group sort — vs the same query with the optimizer rule
@@ -923,8 +627,8 @@ object Bench {
       }),
       "distinct_users_hll" -> (() => {
         // accuracy gate OUTSIDE the timed region; a failure marks THIS
-        // entry failed (-1) in the bench result AND the profiler/drift
-        // record (timedAudited) instead of killing the whole suite
+        // entry failed (-1) in the bench result AND the profiler record
+        // (timedAudited) instead of killing the whole suite
         timedAudited("distinct_users_hll") {
           force(distinctBenchFrame
             .groupBy("day").agg(approx_count_distinct(col("user_id"), 0.02).as("users")))
@@ -968,9 +672,8 @@ object Bench {
       // in two time-split micro-batches through the keyed-state
       // comparison derivation; the comparison count must equal the batch
       // operator's exactly, or the entry fails.
-      // r19 measurement fix: the batch comparison-count audit moved OUTSIDE
-      // the timed region (the streaming_retrieval_epoch pattern); mismatch
-      // still fails the entry.
+      // The batch comparison-count audit runs OUTSIDE the timed region
+      // (timedAudited); a mismatch still fails the entry.
       "streaming_preference_epoch" -> (() => {
         import spark.implicits._
         implicit val sqlCtx = spark.sqlContext
@@ -1026,12 +729,10 @@ object Bench {
           System.err.println(s"[bench] streaming_corpus_epoch admitted=${admitted.size} of ${batch.size}")
         } finally graft.tools.CorpusMaintenance.deleteRecursively(dir)
       }),
-      // Steady-state vs per-query ingest, INTERLEAVED (VERDICT r16 #1):
-      // the r15 receipt compared a standing query's later epochs to ITS
-      // OWN first epoch, and r16 showed that first epoch is not reliably
-      // the expensive arm (per-epoch walls [4.96, 8.3, 8.33, 4.27, 10.73]
-      // — startup is small next to epoch noise), so the claim it receipted
-      // was unsupported. The OPERATIONAL claim — a standing query with a
+      // Steady-state vs per-query ingest, INTERLEAVED. A standing query's
+      // first epoch is not reliably its expensive one (startup is small
+      // next to epoch noise), so later-vs-first epochs of one run prove
+      // nothing. The OPERATIONAL claim — a standing query with a
       // persisted corpus index beats spinning a fresh query per cycle,
       // because the per-query mode pays query+checkpoint creation AND
       // re-signs the whole corpus on every micro-batch (3× per cycle) —
@@ -1104,12 +805,10 @@ object Bench {
       // incrementalSemanticDedup on the same index exactly — a divergence
       // fails the entry rather than record a timing for a different
       // computation.
-      // r19 measurement fix (guide §1.4; the streaming_retrieval_epoch
-      // pattern): the batch-equality AUDIT — an independent second
-      // computation of the same epoch — now runs OUTSIDE the timed region,
-      // so the entry times the maintenance cycle, not the harness check.
-      // A mismatch still fails the entry (-1). Pre-fix readings (audit
-      // included) are recorded in OPTIMIZATION_r19.md.
+      // The batch-equality AUDIT — an independent second computation of
+      // the same epoch — runs OUTSIDE the timed region (timedAudited), so
+      // the entry times the maintenance cycle, not the harness check. A
+      // mismatch still fails the entry (-1).
       "streaming_semantic_epoch" -> (() => {
         import spark.implicits._
         import graft.operators.Similarity
@@ -1152,9 +851,8 @@ object Bench {
       // side). The admitted count must equal the batch
       // incrementalReducedDedup on the same index exactly, or the entry
       // fails rather than time a different computation.
-      // r19 measurement fix: batch-equality audit moved OUTSIDE the timed
-      // region (the streaming_retrieval_epoch pattern — see
-      // streaming_semantic_epoch above); a mismatch still fails the entry.
+      // The batch-equality audit runs OUTSIDE the timed region
+      // (timedAudited); a mismatch still fails the entry.
       "streaming_reduced_epoch" -> (() => {
         import spark.implicits._
         import graft.operators.Similarity
@@ -1195,9 +893,8 @@ object Bench {
       // once and persisted — maintained storage); the held-out fifth
       // streams through hybridDedupStream. Admitted set must equal the
       // batch hybridIncrementalDedup exactly, or the entry fails.
-      // r19 measurement fix: batch-equality audit moved OUTSIDE the timed
-      // region (the streaming_retrieval_epoch pattern); mismatch still
-      // fails the entry.
+      // The batch-equality audit runs OUTSIDE the timed region
+      // (timedAudited); a mismatch still fails the entry.
       "streaming_hybrid_epoch" -> (() => {
         import spark.implicits._
         import graft.operators.{Dedup, Similarity}
@@ -1259,9 +956,9 @@ object Bench {
       // against the baseline via psiFromHistograms. The per-source PSI map
       // must equal batch psiDrift on the same rows exactly, or the entry
       // fails rather than record a timing for a different computation.
-      // r19 measurement fix: the batch psiDrift audit — an independent
-      // recomputation over the same rows — moved OUTSIDE the timed region
-      // (the streaming_retrieval_epoch pattern); mismatch still fails.
+      // The batch psiDrift audit — an independent recomputation over the
+      // same rows — runs OUTSIDE the timed region (timedAudited); a
+      // mismatch still fails the entry.
       "streaming_drift_epoch" -> (() => {
         import spark.implicits._
         implicit val sqlCtx = spark.sqlContext
@@ -1576,9 +1273,9 @@ object Bench {
             streamed = decisions(spark.table(qn))
           } finally {
             q.stop()
-            // drop the per-run memory-sink table — with repeats/drift
-            // retries each run's collected rows would otherwise stay
-            // pinned in driver memory for the rest of the sweep (ADVICE r14)
+            // drop the per-run memory-sink table — across laps each run's
+            // collected rows would otherwise stay pinned in driver memory
+            // for the rest of the sweep
             spark.catalog.dropTempView(qn); ()
           }
         } {
@@ -1769,7 +1466,7 @@ object Bench {
           s"delete A/B arms disagree: rebuild=($n,$l) incremental=$bm25DeleteStats")
         System.err.println(s"[bench] bm25_index_rebuild stats agree: n=$n dl=$l")
       }),
-      // Bulk-vs-loop phrase probe A/B (r17): ONE phraseSearchAll plan over
+      // Bulk-vs-loop phrase probe A/B: ONE phraseSearchAll plan over
       // the 20-phrase table vs 20 sequential phraseIndexSearch probes of
       // the SAME materialized index — each loop probe pays a driver-side
       // df election (its own jobs) plus its own joins, which is exactly
@@ -1796,7 +1493,7 @@ object Bench {
           // cross-check only when the paired bulk arm ran this sweep: a
           // SPARK_GRAFT_BENCH_ONLY filter selecting just this arm leaves
           // phraseBulkRows at its -1 sentinel, and a lone arm degrades to
-          // an uncompared timing, not a failure (ADVICE r17)
+          // an uncompared timing, not a failure
           if (phraseBulkRows >= 0) {
             require(n == phraseBulkRows,
               s"phrase A/B arms disagree: loop=$n bulk=$phraseBulkRows")
@@ -1806,7 +1503,7 @@ object Bench {
         }
       }),
 
-      // Stored-index pruning A/B (r18): the SAME on-disk term-bucketed
+      // Stored-index pruning A/B: the SAME on-disk term-bucketed
       // index sliced to the SAME phrase's postings, with vs without the
       // bucket literals. The arms time the SLICE SCAN — exactly where the
       // two probe paths differ; everything downstream of the slice is the
@@ -1823,8 +1520,8 @@ object Bench {
       // words whose buckets hold far more postings than average — and
       // the unpruned arm already skips most row groups via parquet
       // min/max on `term`, so the listing-level cut shrinks the measured
-      // byte ratio (ADVICE/VERDICT r18: state WHICH metric each number
-      // is — the ~11%-of-directory-bytes figure in PhraseSearchSpec is
+      // byte ratio (each figure names its metric: the
+      // ~11%-of-directory-bytes figure in PhraseSearchSpec is
       // listed FILE bytes at sf0.001; this receipt is scan-reported
       // input_bytes at the bench sf). Task and shuffle ratios (~0.1)
       // corroborate, and PartitionFilters carries the bucket IN-list
@@ -1906,14 +1603,12 @@ object Bench {
           s"block winner A/B arms disagree: window=$n agg=$blockWinnersAgg")
         System.err.println(s"[bench] block_winners_window winners=$n (agg agrees)")
       }),
-      // Memorization-audit plan A/B (VERDICT r15 #2): the shipped
-      // pair-reduced plan — occurrence table collapsed to distinct
-      // (doc_id, h) + occurrence count BEFORE any h-keyed exchange, pair
-      // table localCheckpointed once for its two consumers — vs the
-      // retired r15 plan, which recomputed the tokenize-and-hash lineage
-      // on both sides of the df join and shuffled the full per-occurrence
-      // table through distinct → groupBy(h) → join-on-h → groupBy(doc)
-      // (47.6× wall on 10× data in the r15 sweep). Identical output
+      // Memorization-audit plan A/B: the shipped pair-reduced plan —
+      // occurrence table collapsed to distinct (doc_id, h) + occurrence
+      // count BEFORE any h-keyed exchange — vs the retired occurrence
+      // plan, which shuffles the full per-occurrence table through
+      // distinct → groupBy(h) → join-on-h → groupBy(doc) (47.6× wall on
+      // 10× data when it shipped). Identical output
       // (cross-checked in-entry on rows / Σn_hot / Σmax_df). Pairs arm
       // FIRST so warmup bias lands on our design; include BOTH names
       // when using SPARK_GRAFT_BENCH_ONLY (the colocated_join pattern).
@@ -1962,144 +1657,58 @@ object Bench {
 
     val syntheticRun: Map[String, () => Double] = syntheticEntries.toMap
     // receipt-group membership restricted to groups with >= 2 present arms
-    // (a filtered run with one arm degrades to the single-entry path)
-    val interleavedGroup: Map[String, Seq[String]] = receiptGroups
+    // (a filtered run with one arm runs it on its own)
+    val interleavedGroup: Map[String, Seq[String]] = BenchReport.receiptGroups
       .map(_.filter(syntheticRun.contains))
       .filter(_.size >= 2)
       .flatMap(g => g.map(_ -> g)).toMap
     val ranViaGroup = scala.collection.mutable.Set.empty[String]
-    // per-arm (wall, extCpu) samples in LAP order — receipt ratios pair
-    // lap i of the faster arm with lap i of the slower arm
-    val lapDetail = scala.collection.mutable.Map.empty[String, Vector[(Double, Double)]]
+    // per-arm wall seconds in LAP order — receipt ratios pair lap i of the
+    // faster arm with lap i of the slower arm
+    val lapDetail = scala.collection.mutable.Map.empty[String, Seq[Double]]
 
-    def sampledEntry(name: String): (Double, Double) = {
-      if (abReceiptEntries.contains(name)) awaitQuiet(name)
-      externalCpu(); val t = syntheticRun(name)(); (t, externalCpu())
-    }
-
-    val synthetic = syntheticEntries.flatMap { case (name, run) =>
+    val synthetic = syntheticEntries.flatMap { case (name, _) =>
       // Drop memory-sink temp views leaked by PRIOR entries (every
-      // streaming bench names its sink <kind>bench_<nanos>): with repeats
-      // and retries each sink pins its collected rows in driver memory
-      // for the rest of the sweep — part of the in-process deep-sweep
-      // slowdown behind r14's retry churn (ADVICE r14, generalized past
-      // the webingest entry to all eight sinks).
+      // streaming bench names its sink <kind>bench_<nanos>): each sink
+      // would otherwise pin its collected rows in driver memory for the
+      // rest of the sweep and slow every later entry.
       spark.catalog.listTables().collect().map(_.name)
         .filter(_.matches(".*bench_\\d+"))
         .foreach(v => { spark.catalog.dropTempView(v); () })
       if (ranViaGroup.contains(name)) Nil
-      else interleavedGroup.get(name) match {
-        case Some(group) =>
-          // interleaved same-sweep laps: every arm runs once per lap, laps
-          // back to back, so each per-lap ratio compares samples taken
-          // minutes (not rounds) apart. min-of-laps still feeds "queries";
-          // the ORDERING claim reads the lap ratios (see "receipts").
-          var laps = (1 to repeats).map { _ =>
-            group.map(m => m -> sampledEntry(m)).toMap
-          }.toVector
-          // one extra JOINT lap (keeps samples paired) when any arm's best
-          // time drifts vs committed history, or every sample of an arm
-          // was externally contaminated
-          val contaminatedArm = group.exists { m =>
-            laps.forall { l => val (t, e) = l(m); t > 0.5 && e > ExtCpuRetryThreshold }
-          }
-          val extraForNoise = contaminatedArm && noiseRetries < MaxNoiseRetries
-          if (extraForNoise) {
-            noiseRetries += 1
-            System.err.println(s"[bench] group ${group.mkString("/")}: an arm saw external CPU " +
-              "in every lap — one extra joint lap")
-          }
-          val extraForDrift = group.exists { m =>
-            val ts = laps.map(_(m)._1).filter(_ >= 0)
-            ts.nonEmpty && driftGate(m, ts.min)
-          }
-          if (extraForNoise || extraForDrift)
-            laps = laps :+ group.map(m => m -> sampledEntry(m)).toMap
-          // An even-count lap median has no cold protection (VERDICT r15
-          // #3: a cold-poisoned first lap read [1.78, 0.62] and the
-          // 2-lap "median" averaged to 1.20 → ok:false while the claim
-          // held). When this group's wall-claim lap ratios STRADDLE 1
-          // and the lap count is even, one tie-break joint lap makes the
-          // median an odd-count order statistic — the cold lap is
-          // outvoted instead of averaged in. Agreeing laps stay at 2;
-          // the ratio rule itself is unchanged.
-          val wallClaims = receiptClaims.collect {
-            case (f, sl, "wall") if group.contains(f) && group.contains(sl) => (f, sl)
-          }
-          val straddles = laps.size % 2 == 0 && wallClaims.exists { case (f, sl) =>
-            val rs = laps.flatMap { l =>
-              val (a, b) = (l(f)._1, l(sl)._1)
-              if (a >= 0 && b > 0) Some(a / b) else None
-            }
-            rs.exists(_ < 1.0) && rs.exists(_ >= 1.0)
-          }
-          if (straddles) {
-            System.err.println(s"[bench] group ${group.mkString("/")}: " +
-              "wall-claim lap ratios straddle 1 — one tie-break joint lap")
-            laps = laps :+ group.map(m => m -> sampledEntry(m)).toMap
-          }
-          group.map { m =>
-            ranViaGroup += m
-            val ts = laps.map(_(m)._1)
-            runDetail(m) = ts
-            extDetail(m) = laps.map(_(m)._2)
-            lapDetail(m) = laps.map(_(m))
-            m -> (if (ts.forall(_ >= 0)) ts.min else -1.0)
-          }
-        case None =>
-          // back-to-back repetitions, min reported (profiler metrics for the
-          // name accumulate over all runs); a failed run never hides behind
-          // a successful one's min. When EVERY repeat was externally
-          // contaminated, one extra repeat is added — min-of-repeats only
-          // de-noises when at least one repeat ran clean.
-          def sampled(): (Double, Double) = {
-            if (abReceiptEntries.contains(name)) awaitQuiet(name)
-            externalCpu(); val t = run(); (t, externalCpu())
-          }
-          // the amortized streaming entry self-averages over its own steady
-          // epochs — repeating the whole 5-epoch cycle would double its cost
-          // for no extra signal
-          val entryRepeats = if (name == "streaming_corpus_epoch5_amortized") 1 else repeats
-          var samples = (1 to entryRepeats).map(_ => sampled()).toVector
-          if (samples.forall { case (t, e) => t > 0.5 && e > ExtCpuRetryThreshold } &&
-              noiseRetries < MaxNoiseRetries) {
-            noiseRetries += 1
-            System.err.println(f"[bench] '$name': all $repeats repeats saw external CPU > " +
-              f"$ExtCpuRetryThreshold%.2f — one extra repeat")
-            samples = samples :+ sampled()
-          }
-          // in-process drift gate: even the min over repeats can be out of
-          // band when the whole suite position is GC-contaminated
-          // (eager_dp_sharded_t20 drifted 54.7→114.9 s across rounds on
-          // unchanged code); one extra repeat, historical min as reference.
-          // The amortized streaming entry self-averages and stays single-run.
-          if (name != "streaming_corpus_epoch5_amortized") {
-            val okTimes = samples.map(_._1).filter(_ >= 0)
-            if (okTimes.nonEmpty && driftGate(name, okTimes.min))
-              samples = samples :+ sampled()
-          }
-          val times = samples.map(_._1)
-          runDetail(name) = times
-          extDetail(name) = samples.map(_._2)
-          Seq(name -> (if (times.forall(_ >= 0)) times.min else -1.0))
+      else {
+        // a receipt group's arms run once per lap each, laps back to back,
+        // so each per-lap ratio compares samples taken minutes apart
+        val group = interleavedGroup.getOrElse(name, Seq(name))
+        // the amortized streaming entry self-averages over its own steady
+        // epochs — repeating the whole 5-epoch cycle would double its cost
+        // for no extra signal
+        val laps = if (name == "streaming_corpus_epoch5_amortized") 1 else repeats
+        val byLap = (1 to laps).map(_ => group.map(m => m -> lap(syntheticRun(m)())).toMap)
+        group.map { m =>
+          ranViaGroup += m
+          val ls = byLap.map(_(m))
+          if (interleavedGroup.contains(m)) lapDetail(m) = ls.map(_.wall)
+          m -> record(m, ls)
+        }
       }
     }
 
     Seq(benchLiTable, benchOrdTable)
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 
-    // Release-count mismatch makes a timing meaningless (r5: an arm
-    // quiesced empty and recorded 5.3 s for nothing) — mark it failed so no
-    // consumer reads a vacuous number, instead of only warning. ALL repeats
-    // of both arms must agree; the arm(s) whose repeats actually diverged
-    // are the ones failed (an internally-consistent arm keeps its timing
-    // only when the divergence is attributable to the OTHER arm).
+    // A release-count mismatch makes a timing meaningless (an arm that
+    // quiesced empty records a fast time for nothing), so the arm is marked
+    // failed instead of only warned about. ALL laps of both arms must
+    // agree; the arm(s) whose laps actually diverged are the ones failed
+    // (an internally-consistent arm keeps its timing only when the
+    // divergence is attributable to the OTHER arm).
     val eagerCounts = eagerReleases.toMap.map { case (k, v) => k -> (v: Seq[Long]) }
-    val eagerMismatchMsg = graft.tools.BenchReport.eagerMismatch(eagerCounts)
+    val eagerMismatchMsg = BenchReport.eagerMismatch(eagerCounts)
     val armEntry = Map(
       "tws" -> "eager_dp_tws_timers_t20",
       "sharded" -> "eager_dp_sharded_t20")
-    val failedEntries = graft.tools.BenchReport.eagerArmsToFail(eagerCounts).flatMap(armEntry.get)
+    val failedEntries = BenchReport.eagerArmsToFail(eagerCounts).flatMap(armEntry.get)
     eagerMismatchMsg.foreach(msg => System.err.println(
       s"[bench] FAIL: eager A/B release counts differ ($msg) — " +
         s"${failedEntries.mkString(", ")} timing marked failed"))
@@ -2112,7 +1721,7 @@ object Bench {
       case other => other
     }
 
-    // ---- cross-sf scaling guard (r9 advice #5) ----
+    // ---- cross-sf scaling guard ----
     // Re-times the most expensive oracled gates at the 10×-smaller testdata
     // dir and reports runtime ratios: a gate whose big/small ratio exceeds
     // SuperLinearFlagRatio (20 = 2× headroom over the 10× data growth) has
@@ -2120,12 +1729,11 @@ object Bench {
     // eyeballing of per-entry scale behavior. Fixed job overhead inflates
     // the SMALL side, so ratios read conservative (under-, never
     // over-flagging needs the big side to be slow for real). Skipped under
-    // a local filter, at the small sf itself, or SPARK_GRAFT_SCALING=0.
+    // a local filter or at the small sf itself.
     val SuperLinearFlagRatio = 20.0
     val scaling: Option[(Seq[(String, Double, Double, Double)], Seq[String])] = {
       val smallDir = "/root/testdata/sf0.01"
-      val enabled = sys.env.get("SPARK_GRAFT_SCALING").forall(_ != "0") &&
-        only.isEmpty && sfDir != smallDir && new java.io.File(smallDir).isDirectory
+      val enabled = only.isEmpty && sfDir != smallDir && new java.io.File(smallDir).isDirectory
       if (!enabled) None
       else {
         val top = queryTimes.filter(_._2 > 1.0).sortBy(-_._2).take(10)
@@ -2164,27 +1772,17 @@ object Bench {
       .map { case (name, m) => "\"" + name + "\":{" + m.jsonFields + "}" }
       .mkString("{", ",", "}")
 
-    // ---- same-sweep receipt evaluation (r12 verdict #3) ----
+    // ---- same-sweep receipt evaluation ----
     // Each claim: median of per-lap wall ratios (faster arm / slower arm,
     // laps interleaved in this sweep) < 1, or for byte-metric claims the
-    // ratio of the two arms' MIN-WALL-run shuffle bytes < 1 (per-run
-    // deterministic bytes make single runs comparable — profSnap holds
-    // the min-wall run's metrics since the per-run endRun change, not
-    // accumulated counters; ADVICE r14). task_ratio rides along as the
-    // wall-independent cross-check — it is CPU consumed, not latency, so
-    // a hypervisor-throttled box distorts both arms equally.
-    def medianOf(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.isEmpty) -1.0
-      else if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-    def r3d(v: Double): String =
-      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val receiptRows = receiptClaims.flatMap { case (fast, slow, metric) =>
+    // ratio of the two arms' MIN-WALL-run bytes < 1 (bytes are
+    // deterministic per run, so single runs are comparable; profSnap holds
+    // the min-wall run's metrics, not accumulated counters). task_ratio
+    // rides along as the wall-independent cross-check — it is CPU
+    // consumed, not latency, so a throttled box distorts both arms equally.
+    val receiptRows = BenchReport.receiptClaims.flatMap { case (fast, slow, metric) =>
       for { lf <- lapDetail.get(fast); ls <- lapDetail.get(slow) } yield {
-        val ratios = lf.map(_._1).zip(ls.map(_._1))
-          .collect { case (a, b) if a >= 0 && b > 0 => a / b }
+        val ratios = lf.zip(ls).collect { case (a, b) if a >= 0 && b > 0 => a / b }
         val wallMedian = medianOf(ratios)
         val taskRatio = (for {
           mf <- profSnap.get(fast); ms <- profSnap.get(slow)
@@ -2203,33 +1801,28 @@ object Bench {
           // scan-side claim (partition pruning): bytes the scan actually
           // read — deterministic per run, like the shuffle byte metric
           case "input_bytes" => inputRatio >= 0 && inputRatio < 1.0
-          // sub-second arms flip wall medians on scheduler noise (r14:
-          // block_winners read 1.035 wall with task 0.906 / bytes 0.838) —
-          // accept a MARGINAL wall when the CPU actually burned corroborates
-          // the ordering; task time is phase- and throttle-immune
+          // sub-second arms flip wall medians on scheduler noise — accept
+          // a MARGINAL wall when the CPU actually burned corroborates the
+          // ordering; task time is phase- and throttle-immune
           case _ => ratios.nonEmpty && (wallMedian < 1.0 ||
             (wallMedian < 1.1 && taskRatio >= 0 && taskRatio < 0.95))
         }
         val key = s"$fast<$slow"
         if (!ok) System.err.println(s"[bench] RECEIPT BAD: $key (metric=$metric " +
           f"wall_median=$wallMedian%.3f task=$taskRatio%.3f bytes=$byteRatio%.3f)")
-        (key, s""""$key":{"metric":"$metric","lap_ratios":[${ratios.map(r3d).mkString(",")}],""" +
-          s""""wall_median":${r3d(wallMedian)},"task_ratio":${r3d(taskRatio)},""" +
-          s""""shuffle_bytes_ratio":${r3d(byteRatio)},""" +
-          s""""input_bytes_ratio":${r3d(inputRatio)},"ok":$ok}""", ok)
+        (key, s""""$key":{"metric":"$metric","lap_ratios":[${ratios.map(r3).mkString(",")}],""" +
+          s""""wall_median":${r3(wallMedian)},"task_ratio":${r3(taskRatio)},""" +
+          s""""shuffle_bytes_ratio":${r3(byteRatio)},""" +
+          s""""input_bytes_ratio":${r3(inputRatio)},"ok":$ok}""", ok)
       }
     }
-    // In-sweep receipt for the steady-state claim, re-founded (VERDICT
-    // r16 #1): each lap runs the STANDING-query epoch then a fresh
-    // per-query cycle seconds apart in the same JVM, after an unrecorded
-    // warmup cycle — the interleaved-lap protocol every other A/B pair
-    // uses. The claim receipted is the operational one: a standing query
-    // with a persisted corpus index beats spinning a query per cycle
-    // (which pays query+checkpoint creation and re-signs the corpus per
-    // micro-batch). The r15 form — later epochs of one run vs its own
-    // first epoch — receipted only startup amortization, and r16's
-    // per-epoch walls showed startup is small next to epoch noise; that
-    // claim is retired, not re-measured.
+    // In-sweep receipt for the steady-state claim: each lap runs the
+    // STANDING-query epoch then a fresh per-query cycle seconds apart in
+    // the same JVM, after an unrecorded warmup cycle — the interleaved-lap
+    // protocol every other A/B pair uses. The claim receipted is the
+    // operational one: a standing query with a persisted corpus index
+    // beats spinning a query per cycle (which pays query+checkpoint
+    // creation and re-signs the corpus per micro-batch).
     val steadyReceipt = steadyColdLaps.toSeq.map { ps =>
       val ratios = ps.map { case (s, c) => s / c }
       val m = medianOf(ratios)
@@ -2237,19 +1830,19 @@ object Bench {
       if (!ok) System.err.println(
         f"[bench] RECEIPT BAD: streaming_corpus_steady<cold (wall_median=$m%.3f)")
       ("streaming_corpus_steady<cold",
-        s""""streaming_corpus_steady<cold":{"metric":"wall","lap_ratios":[${ratios.map(r3d).mkString(",")}],""" +
-        s""""wall_median":${r3d(m)},"task_ratio":-1.0,"shuffle_bytes_ratio":-1.0,"ok":$ok}""", ok)
+        s""""streaming_corpus_steady<cold":{"metric":"wall","lap_ratios":[${ratios.map(r3).mkString(",")}],""" +
+        s""""wall_median":${r3(m)},"task_ratio":-1.0,"shuffle_bytes_ratio":-1.0,"ok":$ok}""", ok)
     }
     val allReceiptRows = receiptRows ++ steadyReceipt
     val receiptsJson = allReceiptRows.map(_._2).mkString("{", ",", "}")
     val receiptsBad = allReceiptRows.collect { case (k, _, false) => k }
 
     val all = queryTimes ++ syntheticChecked ++ gbps ++ steadyEpoch
-    // Profiler sanity (VERDICT r13 #5): the per-entry profile is the
-    // min-wall run's metrics, so task time can never exceed wall × cores
-    // (25% slack + 1 s for sub-second jitter and stage events that straddle
-    // a run boundary). A violation is an attribution bug in the harness,
-    // never a plan property — surface it loudly and in the artifact.
+    // Profiler sanity: the per-entry profile is the min-wall run's
+    // metrics, so task time can never exceed wall × cores (25% slack + 1 s
+    // for sub-second jitter and stage events that straddle a run
+    // boundary). A violation is an attribution bug in the harness, never a
+    // plan property — surface it loudly and in the artifact.
     val wallByName = all.toMap
     val profileViolations = profSnap.toSeq.sortBy(_._1).flatMap { case (name, m) =>
       wallByName.get(name).filter(_ > 0).flatMap { wall =>
@@ -2262,27 +1855,23 @@ object Bench {
     profileViolations.foreach(v =>
       System.err.println(s"[bench] PROFILE BAD: task time exceeds wall x cores: $v"))
     val loadPost = osBean.getSystemLoadAverage
-    def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     // Failed (-1) entries live ONLY in "failed": a consumer summing "queries"
     // then always gets back "value".
     val qs = all.collect { case (k, v) if v >= 0 => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     val total = all.map(_._2).filter(_ >= 0).sum
     val failed = all.collect { case (k, v) if v < 0 => "\"" + k + "\"" }.mkString("[", ",", "]")
-    val runsJson = runDetail
+    def lapsJson(detail: collection.Map[String, Seq[Double]]): String = detail
       .map { case (k, ts) => "\"" + k + "\":[" + ts.map(r3).mkString(",") + "]" }
       .mkString("{", ",", "}")
-    // per-run external-CPU shares (only entries where contamination was
-    // non-negligible — keeps the file readable; a missing key means <5%
-    // of the machine went to other processes during every run)
-    val extJson = extDetail
-      .filter { case (_, es) => es.exists(_ >= 0.05) }
-      .map { case (k, es) => "\"" + k + "\":[" + es.map(r3).mkString(",") + "]" }
-      .mkString("{", ",", "}")
+    // per-lap external-CPU shares, only for entries where contamination was
+    // non-negligible — keeps the file readable; a missing key means <5% of
+    // the machine went to other processes during every lap
+    val extJson = lapsJson(extDetail.filter { case (_, es) => es.exists(_ >= 0.05) })
     // Compact stdout summary, HARD-CAPPED to fit the driver's ~2000-char
-    // output-tail window (BENCH_r04 parsed:null was a mid-line truncation of
-    // the full per-query map). The BASELINE.md-comparable workloads always
-    // make the line; the rest of the suite fills the remaining budget
-    // slowest-first, and the complete result is always in bench.json.
+    // output-tail window (a full per-query map once grew past it and the
+    // captured text began mid-line). The BASELINE.md-comparable workloads
+    // always make the line; the rest of the suite fills the remaining
+    // budget slowest-first, and the complete result is always in bench.json.
     val scalingJson = scaling.map { case (rows, flagged) =>
       val ratios = rows.map { case (n, b, s, r) =>
         "\"" + n + s"""\":{"sf01":${r3(b)},"sf001":${r3(s)},"ratio":${r3(r)}}"""
@@ -2290,62 +1879,23 @@ object Bench {
       s"""{"data_ratio":10.0,"flag_above":${r3(SuperLinearFlagRatio)},""" +
         s""""ratios":$ratios,"flagged":${flagged.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     }.getOrElse("null")
-    // Retry triage (VERDICT r14 #5): r14's 20 "drift" retries were, in 16
-    // cases, a COLD FIRST SAMPLE — the retry immediately recovered the
-    // committed min (e.g. 2.02→0.96 s, 2.12→0.43 s), i.e. per-entry
-    // codegen/broadcast/model-training warmth the suite-head warmup cannot
-    // pre-pay. Those are the retry mechanism WORKING, not drift. Split the
-    // report: an entry whose post-retry min is back inside the threshold
-    // is a self-healed `cold_retry`; only an entry STILL out of band after
-    // its retry is real `drift` demanding attention (stale min or genuine
-    // regression). runs_detail keeps every raw sample either way.
-    val (stillDrift, coldRecovered) = driftRetried.distinct.partition { n =>
-      val ts = runDetail.getOrElse(n, Seq.empty).filter(_ >= 0)
-      ts.isEmpty || histMins.get(n).forall(h => ts.min > h * DriftRetryFactor + DriftAbsMarginSec)
-    }
-    if (stillDrift.nonEmpty) System.err.println(
-      s"[bench] DRIFT (still out of band after retry): ${stillDrift.mkString(", ")}")
-    // regression watch (ADVICE r18, non-gating — see histWindowMins): a
-    // final reading > 3× the fastest recent-window reading AND past the
-    // sub-second floor is surfaced once per sweep, so a real slowdown is
-    // visible even while the windowed-max drift reference ages it in.
-    // Deliberately-bad arms excluded for the DriftExempt rationale.
-    val regressionWatch = all.collect {
-      case (name, t) if t >= 0 && !DriftExempt.contains(name) &&
-        histWindowMins.get(name).exists(m => t > 3.0 * m && t > 5.0) => name
-    }
-    if (regressionWatch.nonEmpty) System.err.println(
-      s"[bench] REGRESSION WATCH (reading > 3x recent-window min, " +
-        s"non-gating): ${regressionWatch.mkString(", ")}")
-    val driftJson = stillDrift.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val coldJson = coldRecovered.map("\"" + _ + "\"").mkString("[", ",", "]")
     val eagerJson = eagerCounts.toSeq.sortBy(_._1)
       .map { case (arm, ns) => "\"" + arm + "\":[" + ns.mkString(",") + "]" }
       .mkString("{", ",", "}")
     val headline = syntheticChecked.map(_._1) ++ gbps.map(_._1) ++ steadyEpoch.map(_._1)
-    // the flagged list (and drift-retry evidence) must reach the committed
-    // per-round summary, which is the captured compact line — keep both
-    // short and always present
-    val loadGateJson =
-      s"""{"waits":${loadGateWaits.map { case (k, v) => "\"" + k + "\":" + r3(v) }
-          .mkString("{", ",", "}")},""" +
-        s""""timeouts":${loadGateTimeouts.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+    // the bad-receipt and scaling-flag lists must reach the captured
+    // per-round summary, which is the compact line — keep both short and
+    // always present
     val compactExtra =
-      s""""drift_retries":$driftJson,"cold_retries":$coldJson,""" +
-        s""""load_gate_timeouts":${loadGateTimeouts.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""receipts_bad":${receiptsBad.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+      s""""receipts_bad":${receiptsBad.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""scaling_flagged":${scaling.map(_._2.map("\"" + _ + "\"").mkString("[", ",", "]")).getOrElse("null")}"""
-    val compact = graft.tools.BenchReport.compactLine(all, headline, sfDir,
+    val compact = BenchReport.compactLine(all, headline, sfDir,
       runs = repeats, load = Seq(loadPre, loadPost), extra = compactExtra)
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,""" +
-        s""""repeats":$repeats,"runs_detail":$runsJson,"load":[${r3(loadPre)},${r3(loadPost)}],""" +
-        s""""noise_retries":$noiseRetries,"drift_retries":$driftJson,""" +
-        s""""cold_retries":$coldJson,""" +
-        s""""regression_watch":${regressionWatch.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+        s""""repeats":$repeats,"runs_detail":${lapsJson(runDetail)},""" +
+        s""""cpu_detail":${lapsJson(cpuDetail)},"load":[${r3(loadPre)},${r3(loadPost)}],""" +
         s""""ext_cpu":$extJson,""" +
-        s""""box_probe_s":${r3(boxProbeSec)},"probe_ratio":${r3(probeRatio)},""" +
-        s""""load_gate":$loadGateJson,""" +
         s""""receipts":$receiptsJson,""" +
         s""""eager_releases":$eagerJson,"eager_seed":42,""" +
         s""""scaling":$scalingJson,""" +
@@ -2355,23 +1905,6 @@ object Bench {
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     System.err.println(s"[bench] full JSON (with profile) written to $outPath")
-    // committed full-history drift reference (every entry, min-merged —
-    // sub-second gates the compact tail drops stay protected). The *_gbps
-    // entries are THROUGHPUT (higher-is-better): a min-merge would record
-    // the worst round forever, so they stay out of the reference.
-    // FULL SWEEPS ONLY (VERDICT r16 #2): a filtered local run is a short,
-    // fresh JVM — its readings on allocation-heavy entries (the microbatch
-    // GB grid) sit 3-4x BELOW what the same entry reads deep in a
-    // 290-entry sweep JVM, and min-merging them poisons the reference the
-    // driver's own sweeps are then judged against. The drift history's
-    // contract is "best reading under the environment the driver
-    // measures", and only an unfiltered run is that environment.
-    if (only.isEmpty)
-      graft.tools.BenchReport.updateHistory(
-        new java.io.File("bench_history.json"), sfDir,
-        all.filterNot(_._1.endsWith("_gbps")) :+ (ProbeKey -> boxProbeSec))
-    else System.err.println(
-      "[bench] filtered run: bench_history.json left untouched")
     spark.stop()
     // The compact line is the VERY LAST stdout write (after spark.stop so no
     // Spark shutdown chatter can land after it in the captured tail).

@@ -488,7 +488,14 @@ object CoreOps {
     * ships map-side partials at (key, epoch, prev); the output is
     * hash-partitioned by `key` into the session's shuffle partitions, ready
     * for [[DpHistogram]] to group on without another exchange. Replaces the
-    * collect_set design whose hot-key row held every user string. */
+    * collect_set design whose hot-key row held every user string.
+    *
+    * Precondition: the head windows need the raw rows, so this operator
+    * ships every `(key, epoch, user, value)` input row across its
+    * `(key, user)` exchange, with no map-side reduction. That is sound at
+    * scale only after B1 ([[boundContributions]]) has capped each user at
+    * C rows; on unbounded input one heavy user's rows all cross the wire
+    * and land in one window partition. */
   def preAggregatePrevEpoch(df: DataFrame, keyCol: String, epochCol: String, userCol: String, valueCol: String): DataFrame = {
     // Invariants the plan relies on:
     // - Both windows share one (key, user) partition spec and one epoch
@@ -615,7 +622,7 @@ object CoreOps {
     * when every derivative of the frame is itself fully materialized (the
     * checkpointed RDD's lineage is truncated, so a later recomputation
     * attempt fails rather than silently re-running the upstream). */
-  private def releaseLocalCheckpoint(df: DataFrame): Unit =
+  private[operators] def releaseLocalCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false); ()

@@ -1051,23 +1051,21 @@ object Dedup {
     * cardinality), the df table is exactly a count of pair rows per
     * hash, the h-join runs at pair cardinality (AQE-splittable where hot
     * hashes skew it — by construction they do; hot windows ARE the
-    * signal), and the pair table is localCheckpointed once so its two
-    * consumers (df aggregate + join left side) never recompute the
-    * tokenize-and-hash lineage. n_windows/n_hot re-derive from the
-    * occurrence counts, so the output contract is unchanged. Text never
-    * shuffles.
+    * signal). n_windows/n_hot re-derive from the occurrence counts, so
+    * the output contract is unchanged. Text never shuffles.
     *
-    * r20 (guide §2.4 / §1.1 — measured): the audit is ONE action, so the
-    * two consumers of the pair table share its (doc_id, h) exchange via
-    * Spark's exchange reuse — the tokenize-and-hash lineage runs exactly
-    * once on the map side and both consumers FETCH the same shuffle
-    * output. The r15-era localCheckpoint double-paid for that guarantee:
-    * an extra materialization job plus GBs of checkpoint-block re-reads
-    * (2.3 GB of storage input at sf0.1) for lineage the exchange already
-    * deduplicates inside a single query. (A repartition(h)+persist
-    * variant was measured too: AQE compiles cached/checkpointed plans
-    * with unknown output partitioning, so downstream operators re-shuffle
-    * anyway — it only ADDED an exchange.) */
+    * The pair table is NOT shared between its two consumers: the df
+    * branch needs no `occ` column, so column pruning turns its (doc_id, h)
+    * aggregate into a plain distinct, and the plan carries two different
+    * `hashpartitioning(doc_id, h)` exchanges (one with `partial_count`,
+    * one without) and no `ReusedExchange`
+    * (plans/r20/q_memorization_risk_after.txt). Window extraction — scan,
+    * tokenize and hash — therefore runs twice per action. That still
+    * measured faster at sf0.1 (14.7 → 12.5 s) than a localCheckpoint of
+    * the pair table, which adds a materialization job and re-reads the
+    * checkpoint blocks (2.3 GB of storage input). (A repartition(h)+persist variant adds an
+    * exchange: AQE compiles cached/checkpointed plans with unknown output
+    * partitioning, so downstream operators re-shuffle anyway.) */
   def memorizationRisk(docs: DataFrame, idCol: String, textCol: String,
       n: Int, hotDf: Long): DataFrame = {
     val pairs = windowHashes(docs, idCol, textCol, n)

@@ -10,7 +10,11 @@ import org.apache.spark.sql.functions._
   * carrying only (long id, long value) rows — the Pregel shape — and
   * lineage is truncated every round with `localCheckpoint` (the same
   * discipline [[Dedup.connectedComponents]] follows), so a 10-iteration
-  * run does not compile a 10-deep plan.
+  * run does not compile a 10-deep plan. Every snapshot is released once
+  * everything derived from it is materialized (a round's ranks when the
+  * next round's exist, the adjacency when the last round is done), so on
+  * return executor storage holds only what the output reads, whatever the
+  * iteration count.
   */
 object GraphOps {
 
@@ -84,11 +88,13 @@ object GraphOps {
           * lit(1000000.0) + lit(0.5)).cast("long")).as("m"))
       .where(col("m") > 0)
       .localCheckpoint()
+    CoreOps.releaseLocalCheckpoint(cvw)
     lastPpmiEdges = Some(ppmi)
     val nodes = cv.select("v")
     val nv = nodes.count()
     var x = nodes.select(col("v"), lit(1000000L / nv).as("x"))
     for (_ <- 1 to iterations) {
+      val prevX = x
       val y = ppmi.join(x.select(col("v").as("w"), col("x")), "w")
         .select(col("v"), expr("(m * x) div 1000000").as("__yy"))
         .groupBy("v").agg(sum(col("__yy")).as("y"))
@@ -99,7 +105,11 @@ object GraphOps {
       require(s > 0, "PPMI graph has no positive mass")
       x = yAll.select(col("v"), expr(s"(y * 1000000) div ${s}L").as("x"))
         .localCheckpoint()
+      // both superseded snapshots are fully consumed by the new `x`
+      CoreOps.releaseLocalCheckpoint(yAll)
+      CoreOps.releaseLocalCheckpoint(prevX)
     }
+    CoreOps.releaseLocalCheckpoint(cv)
     // Output is deliberately double-free (VERDICT r14 #1): rank/q6 longs
     // plus the word — a rounded display double invites version-dependent
     // formatting/parsing differences in downstream verifiers; `x/1e6` is
@@ -154,9 +164,11 @@ object GraphOps {
     val n = deg.count()
     require(n > 0, "pairs must contain at least one edge")
     val adj = sym.join(deg, "src").localCheckpoint()
+    CoreOps.releaseLocalCheckpoint(sym)
     val baseQ6 = (1000000L - dampingPct * 10000L) / n
     var ranks = deg.select(col("src").as("id"), lit(1000000L / n).as("r"))
     for (_ <- 1 to iterations) {
+      val prev = ranks
       val contrib = adj.join(ranks, adj("src") === ranks("id"))
         .select(col("dst"), expr(s"($dampingPct * r) div (100 * deg)").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("c"))
@@ -164,7 +176,9 @@ object GraphOps {
         .join(contrib, col("id") === col("dst"), "left")
         .select(col("id"), (lit(baseQ6) + coalesce(col("c"), lit(0L))).as("r"))
         .localCheckpoint()
+      CoreOps.releaseLocalCheckpoint(prev)
     }
+    CoreOps.releaseLocalCheckpoint(adj)
     ranks.join(deg, ranks("id") === deg("src"))
       .select(col("id").as("doc_id"), col("deg").as("degree"), col("r").as("pr_q6"),
         (floor(col("r").cast("double") / lit(100.0) + lit(0.5)) / lit(10000.0))
@@ -242,6 +256,7 @@ object GraphOps {
     val baseQ6 = (1000000L - dampingPct * 10000L) / n
     var ranks = nodes.select(col("node"), lit(1000000L / n).as("r"))
     for (_ <- 1 to iterations) {
+      val prev = ranks
       val contrib = adj.join(ranks, adj("src") === ranks("node"))
         .select(col("dst"), expr(s"($dampingPct * r * w) div (100 * outw)").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("c"))
@@ -249,7 +264,10 @@ object GraphOps {
         .join(contrib, col("node") === col("dst"), "left")
         .select(col("node"), (lit(baseQ6) + coalesce(col("c"), lit(0L))).as("r"))
         .localCheckpoint()
+      CoreOps.releaseLocalCheckpoint(prev)
     }
+    CoreOps.releaseLocalCheckpoint(adj)
+    CoreOps.releaseLocalCheckpoint(nodes)
     val inw = e.groupBy("dst").agg(sum(col("w")).as("inw"))
     ranks
       .join(outw, ranks("node") === outw("src"), "left")

@@ -4,12 +4,10 @@ package graft.tools
   * stdout line of [[graft.Bench]].
   *
   * The driver captures only the LAST ~2000 characters of the process output
-  * and parses the final line as JSON. Rounds 1–4 all failed that gate
-  * (`BENCH_r0{1..4}.json` `"parsed": null`): first on sbt log decoration,
-  * then — after `build.sbt` fixed that — simply on length: the full
-  * per-query map grew past the tail window, so the captured text began
-  * mid-line. The fix is structural, not cosmetic: the stdout line carries a
-  * bounded payload and the complete result always lives in `bench.json`.
+  * and parses the final line as JSON. An unbounded line fails that parse:
+  * a full per-query map grows past the tail window, so the captured text
+  * begins mid-line. So the stdout line carries a bounded payload and the
+  * complete result always lives in `bench.json`.
   *
   * Budgeting: the entries named in `headline` (the BASELINE.md-comparable
   * workloads — DP utility runs, eager A/B, co-location/skew A/Bs,
@@ -30,129 +28,86 @@ object BenchReport {
     * driver most needs a parseable tail. */
   val MaxFailedNames = 8
 
-  /** Per-entry best times across committed driver-round summaries — the
-    * drift-retry reference (r9 advice #1). Each `BENCH_r*.json` wraps this
-    * program's compact stdout line inside a `"tail"` string; the last
-    * `{"metric":…}` line is parsed and its `"queries"` map kept ONLY when
-    * its `"sf"` equals `sfDir` (numbers from another scale are not
-    * comparable). Unreadable files, tails without a metric line, and
-    * non-numeric entries are skipped silently — a corrupt history must
-    * never fail a bench run, it just provides no reference. */
-  def committedMins(dir: java.io.File, sfDir: String): Map[String, Double] = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val files = Option(dir.listFiles).getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.matches("BENCH_r\\d+\\.json")).sortBy(_.getName)
-    files.toSeq.flatMap { f =>
-      try {
-        val tail = om.readTree(f).path("tail").asText("")
-        val start = tail.lastIndexOf("{\"metric\"")
-        if (start < 0) Seq.empty[(String, Double)]
-        else {
-          val lineEnd = tail.indexOf('\n', start)
-          val line = if (lineEnd < 0) tail.substring(start) else tail.substring(start, lineEnd)
-          val j = om.readTree(line)
-          if (j.path("sf").asText("") != sfDir) Seq.empty[(String, Double)]
-          else {
-            import scala.jdk.CollectionConverters._
-            j.path("queries").properties().asScala.toSeq
-              .filter(_.getValue.isNumber)
-              .map(e => e.getKey -> e.getValue.asDouble())
-          }
-        }
-      } catch { case scala.util.control.NonFatal(_) => Seq.empty[(String, Double)] }
-    }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
+  /** Median of `xs` (mean of the two middle values for an even count);
+    * -1 for an empty sequence. */
+  def medianOf(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.isEmpty) -1.0
+    else if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
 
-  /** How many recent full-sweep readings `bench_history.json` retains per
-    * entry. Three sweeps ≈ three driver rounds: long enough that one noisy
-    * sweep cannot dominate the reference, short enough that a box slowdown
-    * ages out of the window within a round or two. */
-  val HistoryWindow = 3
+  /** The reported value of one entry from its laps' wall seconds: the min
+    * of the laps, or -1 when any lap failed (negative) — a failed lap
+    * never hides behind a successful one's time. */
+  def lapSummary(laps: Seq[Double]): Double =
+    if (laps.isEmpty || laps.exists(_ < 0)) -1.0 else laps.min
 
-  /** Per-entry drift REFERENCE from the committed FULL-history file
-    * (`bench_history.json`): the SLOWEST reading in the entry's
-    * recent-sweeps window (VERDICT r17 #1). The pre-r18 file kept one
-    * min-ever scalar per entry, which only ratcheted DOWN — a fast-phase
-    * reading became a permanent reference the driver box could never
-    * reproduce, burning drift retries on the same entries every round
-    * (r16+r17 both blew the ≤2 budget this way). The file now keeps the
-    * last [[HistoryWindow]] full-sweep readings per entry and the
-    * reference is their MAX: an unreproducibly fast sweep stops being the
-    * bar as soon as slower honest sweeps follow it. Real regressions are
-    * multiplicative (2×+) and still clear a 1.5× gate on the slowest
-    * recent reading; ordering/quality claims never lived here anyway —
-    * they live in the same-sweep interleaved receipts. Legacy scalar
-    * entries read as a one-element window. The compact stdout line drops
-    * its smallest entries under the length cap, so [[committedMins]] alone
-    * leaves those entries permanently history-less — re-run as "new" every
-    * round and never drift-protected. This file keeps every entry.
-    * Missing/corrupt file ⇒ empty map (history must never fail a run). */
-  def historyRefs(file: java.io.File, sfDir: String): Map[String, Double] =
-    historyWindows(file).getOrElse(sfDir, Map.empty)
-      .collect { case (k, vs) if vs.nonEmpty => k -> vs.max }
+  /** Receipt groups: each group's arms run interleaved, one lap each in
+    * turn, so every ordering claim is decided by per-lap ratios from the
+    * same sweep — cross-sweep absolute times cannot carry an ordering
+    * claim on a shared box. Arm order within a group is the conservative
+    * order documented at each pair's entry in [[graft.Bench]]. Every
+    * claim's two arms must sit in
+    * one group ([[receiptClaims]]), or the claim has no lap pairs and its
+    * receipt is not emitted. */
+  val receiptGroups: Seq[Seq[String]] = Seq(
+    Seq("eager_dp_sharded_t20", "eager_dp_tws_timers_t20", "eager_dp_lazy_t20"),
+    Seq("colocated_join_plain", "colocated_join_bucketed"),
+    Seq("skew_join_aqe_off", "skew_join_aqe_on"),
+    Seq("runtime_bloom_off", "runtime_bloom_on"),
+    Seq("e2e_build_one_shuffle", "e2e_build_joins"),
+    Seq("median_filter_hist", "median_filter_sortwindow"),
+    Seq("domain_cap_grouplimit", "domain_cap_fullwindow"),
+    Seq("source_divergence_ckpt", "source_divergence_nockpt"),
+    Seq("distinct_users_exact", "distinct_users_hll"),
+    Seq("bm25_index_delete_incremental", "bm25_index_rebuild"),
+    Seq("hamming_pairs_blocked", "hamming_pairs_allpairs"),
+    Seq("block_winners_agg", "block_winners_window"),
+    Seq("memorization_pairs", "memorization_occurrence"),
+    Seq("phrase_bulk_batch", "phrase_per_query_loop"),
+    Seq("phrase_stored_pruned", "phrase_stored_unpruned"))
 
-  /** The raw per-sf windows (name → recent readings, oldest first). */
-  def historyWindows(file: java.io.File)
-      : Map[String, Map[String, Seq[Double]]] = {
-    try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      import scala.jdk.CollectionConverters._
-      om.readTree(file).properties().asScala.toSeq.map { sfEntry =>
-        sfEntry.getKey -> sfEntry.getValue.properties().asScala.toSeq.map { e =>
-          val v = e.getValue
-          val window: Seq[Double] =
-            if (v.isNumber) Seq(v.asDouble())
-            else if (v.isArray) v.elements().asScala.toSeq
-              .filter(_.isNumber).map(_.asDouble())
-            else Seq.empty
-          e.getKey -> window
-        }.filter(_._2.nonEmpty).toMap
-      }.toMap
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-  }
-
-  /** Append this run's successful timings to each entry's recent-sweeps
-    * window in `bench_history.json` (sfDir → name → last
-    * [[HistoryWindow]] readings, oldest first). Old readings age OUT —
-    * the reference self-heals in both directions, unlike the pre-r18
-    * min-ever ratchet (see [[historyRefs]]). Written with sorted keys for
-    * stable diffs. */
-  def updateHistory(file: java.io.File, sfDir: String,
-      all: Seq[(String, Double)]): Unit = {
-    try {
-      val existing = historyWindows(file)
-      val cur = existing.getOrElse(sfDir, Map.empty)
-      val merged = all.filter(_._2 >= 0).foldLeft(cur) { case (m, (k, v)) =>
-        m.updated(k, (m.getOrElse(k, Seq.empty) :+ v).takeRight(HistoryWindow))
-      }
-      val full = existing.updated(sfDir, merged)
-      val sb = new StringBuilder("{\n")
-      val sfs = full.keys.toSeq.sorted
-      for ((sf, i) <- sfs.zipWithIndex) {
-        sb.append("  \"").append(sf).append("\": {\n")
-        val names = full(sf).keys.toSeq.sorted
-        for ((n, j) <- names.zipWithIndex) {
-          sb.append("    \"").append(n).append("\": ")
-            .append(full(sf)(n).map(r3).mkString("[", ", ", "]"))
-          sb.append(if (j == names.size - 1) "\n" else ",\n")
-        }
-        sb.append(if (i == sfs.size - 1) "  }\n" else "  },\n")
-      }
-      sb.append("}\n")
-      // write-temp-then-rename: a kill/disk-full mid-write must never
-      // truncate the committed reference (a truncated file reads as empty
-      // and the next update would silently restart history from scratch)
-      val tmp = new java.io.File(file.getAbsolutePath + ".tmp")
-      val w = new java.io.FileWriter(tmp)
-      try w.write(sb.toString()) finally w.close()
-      java.nio.file.Files.move(tmp.toPath, file.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] history update failed (non-fatal): ${e.getMessage}")
-    }
-  }
+  /** (faster, slower, metric): the published ordering claims. metric
+    * "wall" = median per-lap wall ratio < 1; "shuffle_read_bytes" /
+    * "input_bytes" = the min-wall runs' profiler byte ratio < 1. A byte
+    * metric is used where the claim IS a byte cut and local wall time on
+    * a warm page cache does not show it. */
+  val receiptClaims: Seq[(String, String, String)] = Seq(
+    ("eager_dp_lazy_t20", "eager_dp_tws_timers_t20", "wall"),
+    ("eager_dp_tws_timers_t20", "eager_dp_sharded_t20", "wall"),
+    ("colocated_join_bucketed", "colocated_join_plain", "wall"),
+    ("skew_join_aqe_on", "skew_join_aqe_off", "wall"),
+    // runtime bloom's claim is the WIRE cut — its extra sequential build
+    // stage legitimately shows in local wall time, so wall is reported
+    // but is not the claim
+    ("runtime_bloom_on", "runtime_bloom_off", "shuffle_read_bytes"),
+    ("e2e_build_one_shuffle", "e2e_build_joins", "wall"),
+    // the median-filter claim is the corpus-shuffle cut: the histogram
+    // arm aggregates at (group × quantized-value) cardinality and joins
+    // the thresholds back under the broadcast threshold, so the corpus
+    // itself never shuffles, while the window arm range-materializes the
+    // full frame per group (byte ratio ~0.17; wall at this size is phase
+    // noise)
+    ("median_filter_hist", "median_filter_sortwindow", "shuffle_read_bytes"),
+    // the cap's claim is the map-side prune: WindowGroupLimit inserts a
+    // per-partition top-K BEFORE the exchange, so the shuffle carries
+    // ~K·partitions rows per group instead of all 5M (measured 11× byte
+    // cut)
+    ("domain_cap_grouplimit", "domain_cap_fullwindow", "shuffle_read_bytes"),
+    ("source_divergence_ckpt", "source_divergence_nockpt", "wall"),
+    ("distinct_users_hll", "distinct_users_exact", "wall"),
+    ("bm25_index_delete_incremental", "bm25_index_rebuild", "wall"),
+    ("hamming_pairs_blocked", "hamming_pairs_allpairs", "wall"),
+    // the claim is the map-side-combine WIRE cut (the window must shuffle
+    // every block row; byte ratio ~0.84) — sub-second local wall is a
+    // coin flip
+    ("block_winners_agg", "block_winners_window", "shuffle_read_bytes"),
+    ("memorization_pairs", "memorization_occurrence", "wall"),
+    ("phrase_bulk_batch", "phrase_per_query_loop", "wall"),
+    // the stored index's claim is the LISTING/READ cut from partition
+    // pruning: the pruned scan never opens the other buckets' files
+    ("phrase_stored_pruned", "phrase_stored_unpruned", "input_bytes"))
 
   /** Cross-check of the eager A/B release counts, over EVERY in-run repeat
     * of both arms. Identical seeds make every run's count identical, so any
@@ -197,10 +152,11 @@ object BenchReport {
     *                 time is the min over `runs` back-to-back executions)
     * @param load     1-minute system load average sampled before/after the
     *                 suite — lets a reader tell machine contamination from a
-    *                 real regression (r5's numbers swung 2–6× under load)
+    *                 real regression (unchanged code can swing 2–6× under
+    *                 load)
     * @param extra    raw JSON fields (no surrounding braces/commas) appended
     *                 verbatim before `"sf"` — short, always-present
-    *                 diagnostics (drift retries, scaling flags) that must
+    *                 diagnostics (bad receipts, scaling flags) that must
     *                 survive into the captured per-round summary; counted
     *                 against the length budget like everything else
     */

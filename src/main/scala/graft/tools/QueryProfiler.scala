@@ -13,12 +13,12 @@ import scala.collection.mutable
   * `sc.setJobGroup(queryName, …)` and this listener buckets each completed
   * stage under the job group of the job that submitted it.
   *
-  * Attribution is PER RUN (VERDICT r13 #5): a bench entry executes its
-  * workload several times (min-of-2, drift retries, interleaved A/B laps) and
-  * reports the MIN wall, so accumulating metrics across runs made task time
-  * exceed wall×cores by an order of magnitude (utility_t100_reduced: 4310 s
-  * of task time against a 14.5 s reported wall, because a cold 131 s first
-  * run was folded into the same counters). The bench closes a run with
+  * Attribution is PER RUN: a bench entry executes its workload once per
+  * lap (`SPARK_GRAFT_BENCH_REPEATS` laps, interleaved with the other arms
+  * of its receipt group) and reports the MIN wall, so accumulating metrics
+  * across laps would make task time exceed wall×cores by an order of
+  * magnitude (a slow cold first lap folded into the same counters as the
+  * reported fast one). The bench closes a run with
   * [[endRun]] after draining the listener bus; the snapshot keeps the metrics
   * of the run whose wall MATCHES the reported number — the min — so
   * `task_time_ms ≤ wall × cores` holds for every entry by construction

@@ -1768,6 +1768,27 @@ class OperatorsSpec extends AnyFunSuite {
     assert(rows.size === 6)
   }
 
+  test("quantizedPageRank: storage does not grow with the iteration count") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (5L, 6L)).toDF("doc_a", "doc_b")
+    // persistent RDDs registered by one call (ids above a fresh marker RDD)
+    // and still held when it returns; the output stays reachable until the
+    // count is taken
+    def growth(iterations: Int): Int = {
+      val sc = spark.sparkContext
+      val marker = sc.emptyRDD[Int].id
+      val out = GraphOps.quantizedPageRank(pairs, "doc_a", "doc_b", iterations)
+      val held = sc.getPersistentRDDs.keys.count(_ > marker)
+      assert(out.count() === 6L)
+      held
+    }
+    val two = growth(2)
+    val ten = growth(10)
+    // each round's ranks snapshot is released once its successor exists,
+    // so eight more rounds must not leave eight more checkpoints behind
+    assert(ten <= two, s"persistent RDDs grew by $ten after 10 iterations vs $two after 2")
+  }
+
   test("retrievalDecontam: the planted verbatim copy is retrieved and confirmed; clean eval reads zero") {
     import spark.implicits._
     val phrase = "one two three four five six seven eight nine ten"

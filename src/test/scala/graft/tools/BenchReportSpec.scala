@@ -126,63 +126,37 @@ class BenchReportSpec extends AnyFunSuite with Matchers {
     line.length should be <= 1800
   }
 
-  test("committedMins: per-entry min across rounds, same-sf only, corrupt files ignored") {
-    val dir = java.nio.file.Files.createTempDirectory("bench_hist").toFile
-    def write(name: String, content: String): Unit =
-      java.nio.file.Files.writeString(new java.io.File(dir, name).toPath, content)
-    // the driver wraps this program's compact line inside "tail", after
-    // arbitrary log noise and with the line terminated by a newline
-    def wrap(compact: String) =
-      s"""{"n": 7, "sf": 0.1, "tail": ${com.fasterxml.jackson.databind.json.JsonMapper.builder().build().writeValueAsString("some log noise\n" + compact + "\n")}}"""
-    write("BENCH_r07.json", wrap(
-      """{"metric":"total","value":10.0,"unit":"sec","queries":{"q_a":3.0,"q_b":9.0},"sf":"/root/testdata/sf0.1"}"""))
-    write("BENCH_r08.json", wrap(
-      """{"metric":"total","value":10.0,"unit":"sec","queries":{"q_a":5.0,"q_b":4.0,"q_c":1.5},"sf":"/root/testdata/sf0.1"}"""))
-    // a round measured at ANOTHER sf must not contaminate the reference
-    write("BENCH_r09.json", wrap(
-      """{"metric":"total","value":10.0,"unit":"sec","queries":{"q_a":0.001},"sf":"/root/testdata/sf0.01"}"""))
-    // corrupt history must be skipped, never fail the bench
-    write("BENCH_r06.json", "{ not json at all")
-    write("not_a_bench.json", """{"tail": "irrelevant"}""")
-    val mins = BenchReport.committedMins(dir, "/root/testdata/sf0.1")
-    mins shouldBe Map("q_a" -> 3.0, "q_b" -> 4.0, "q_c" -> 1.5)
-    // no same-sf history → empty reference (drift gate simply inactive)
-    BenchReport.committedMins(dir, "/root/testdata/sf9.9") shouldBe Map.empty
-    BenchReport.committedMins(new java.io.File(dir, "missing"), "x") shouldBe Map.empty
+  test("lapSummary: min of the laps, -1 when any lap failed, a single lap reports itself") {
+    BenchReport.lapSummary(Seq(2.5, 1.25, 3.0)) shouldBe 1.25
+    BenchReport.lapSummary(Seq(0.4)) shouldBe 0.4
+    // a failed lap never hides behind a successful one's time, first or last
+    BenchReport.lapSummary(Seq(-1.0, 0.9)) shouldBe -1.0
+    BenchReport.lapSummary(Seq(0.9, -1.0)) shouldBe -1.0
+    BenchReport.lapSummary(Seq(-1.0)) shouldBe -1.0
   }
 
-  test("history file round-trips a rolling window; ref is the slowest recent reading") {
-    val f = java.io.File.createTempFile("bench_history", ".json")
-    f.delete() // start from absent
-    try {
-      BenchReport.historyRefs(f, "sfA") shouldBe Map.empty
-      BenchReport.updateHistory(f, "sfA", Seq("q1" -> 2.0, "q2" -> 0.4, "bad" -> -1.0))
-      BenchReport.historyRefs(f, "sfA") shouldBe Map("q1" -> 2.0, "q2" -> 0.4)
-      // the reference is the MAX over the window (VERDICT r17 #1): a
-      // slower later sweep RAISES it; failed (-1) entries never enter;
-      // other sfs are independent
-      BenchReport.updateHistory(f, "sfA", Seq("q1" -> 5.0, "q2" -> 0.1, "q3" -> 1.0))
-      BenchReport.updateHistory(f, "sfB", Seq("q1" -> 9.0))
-      BenchReport.historyRefs(f, "sfA") shouldBe Map("q1" -> 5.0, "q2" -> 0.4, "q3" -> 1.0)
-      BenchReport.historyRefs(f, "sfB") shouldBe Map("q1" -> 9.0)
-      BenchReport.historyRefs(f, "sfC") shouldBe Map.empty
-      // the window is bounded: after HistoryWindow more sweeps, the old
-      // 5.0 outlier has aged out and the reference self-heals DOWN too
-      (1 to BenchReport.HistoryWindow).foreach { _ =>
-        BenchReport.updateHistory(f, "sfA", Seq("q1" -> 2.1))
+  test("medianOf: odd and even counts, empty reads -1") {
+    BenchReport.medianOf(Seq(3.0, 1.0, 2.0)) shouldBe 2.0
+    BenchReport.medianOf(Seq(4.0, 1.0, 2.0, 3.0)) shouldBe 2.5
+    BenchReport.medianOf(Seq(0.7)) shouldBe 0.7
+    BenchReport.medianOf(Seq.empty) shouldBe -1.0
+  }
+
+  test("receipt claims: both arms in one interleaved group, no entry in two groups, known metric") {
+    val groups = BenchReport.receiptGroups
+    val members = groups.flatten
+    withClue(s"entries in two groups: ${members.diff(members.distinct)}") {
+      members.distinct.size shouldBe members.size
+    }
+    BenchReport.receiptClaims should not be empty
+    BenchReport.receiptClaims.foreach { case (fast, slow, metric) =>
+      withClue(s"$fast<$slow: ") {
+        fast should not be slow
+        // otherwise the claim has no paired laps and its receipt is silently
+        // never emitted
+        groups.exists(g => g.contains(fast) && g.contains(slow)) shouldBe true
+        Set("wall", "shuffle_read_bytes", "input_bytes") should contain(metric)
       }
-      BenchReport.historyRefs(f, "sfA")("q1") shouldBe 2.1
-      BenchReport.historyWindows(f)("sfA")("q1") shouldBe
-        Seq.fill(BenchReport.HistoryWindow)(2.1)
-      // corrupt file reads as empty and a subsequent update still works
-      val w = new java.io.FileWriter(f); w.write("not json"); w.close()
-      BenchReport.historyRefs(f, "sfA") shouldBe Map.empty
-      BenchReport.updateHistory(f, "sfA", Seq("q9" -> 1.5))
-      BenchReport.historyRefs(f, "sfA") shouldBe Map("q9" -> 1.5)
-      // legacy pre-r18 scalar entries read as a one-element window
-      val w2 = new java.io.FileWriter(f)
-      w2.write("""{"sfA": {"q_old": 3.25, "q_new": [1.0, 4.0]}}"""); w2.close()
-      BenchReport.historyRefs(f, "sfA") shouldBe Map("q_old" -> 3.25, "q_new" -> 4.0)
-    } finally { f.delete(); () }
+    }
   }
 }
