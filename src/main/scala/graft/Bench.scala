@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dp.DpParams
@@ -215,16 +215,6 @@ object Bench {
       } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     }
 
-    // release counts of the two eager designs, recorded for EVERY in-run
-    // repeat and cross-checked after the suite: identical seeds make every
-    // run's count identical unless a quiescence guard tripped, and the
-    // reported time is the MIN over repeats — so ANY repeat's divergence
-    // must fail the entry, not just the last one's (else a vacuously fast
-    // partial run could become the reported min while the final repeat's
-    // correct count passes the check)
-    val eagerReleases = scala.collection.mutable.Map.empty[String, Vector[Long]]
-    def recordEager(arm: String, n: Long): Unit =
-      eagerReleases(arm) = eagerReleases.getOrElse(arm, Vector.empty) :+ n
     // interleaved (steady, cold) lap seconds of the streaming-corpus
     // maintenance entry (feeds the derived steady-state entry and the
     // steady<cold receipt below)
@@ -412,29 +402,27 @@ object Bench {
         val preAgg = CoreOps.preAggregatePrevEpoch(contrib, "key", "epoch", "user_id", "value")
         force(DpHistogram.run(spark, preAgg, params, 42L))
       }),
-      // Eager Algorithm-3 A/B: sharded-state EpochTick barrier vs per-key
-      // transformWithState timers, identical seeded workload and params
-      // (graft.tools.EagerBench documents what each measurement includes).
-      // Both record their release count; a mismatch is flagged after the
-      // suite (below).
-      "eager_dp_sharded_t20" -> (() => timed("eager_dp_sharded_t20") {
-        val byEpoch = graft.tools.EagerBench.workload(spark, 200000L, 20000, 5000, 20)
-        val n = graft.tools.EagerBench.runSharded(spark, byEpoch, 20, 42L,
-          graft.streaming.StreamingPipelines.shardsForKeys(5000))
-        recordEager("sharded", n)
-        System.err.println(s"[bench] eager_dp_sharded_t20 releases=$n")
+      // Algorithm-3 release policies on one seeded workload and params
+      // (graft.tools.EagerBench): watermark-eager vs lazy. The eager
+      // releases are audited against the batch timeline of the same rows
+      // outside the timed region (timedAudited); a mismatch fails the entry.
+      "eager_dp_tws_timers_t20" -> (() => {
+        var byEpoch = Seq.empty[(Int, Seq[graft.streaming.Contribution])]
+        var releases = Seq.empty[graft.streaming.Release]
+        timedAudited("eager_dp_tws_timers_t20") {
+          byEpoch = graft.tools.EagerBench.workload(spark, 200000L, 20000, 5000, 20)
+          releases = graft.tools.EagerBench.runEager(spark, byEpoch, 20, 42L)
+          System.err.println(s"[bench] eager_dp_tws_timers_t20 releases=${releases.size}")
+        } {
+          val timeline = graft.tools.EagerBench.timeline(spark, byEpoch, 20, 42L)
+          graft.tools.EagerBench.timelineMismatch(releases, timeline, byEpoch.map(_._1).max)
+            .foreach(msg => throw new IllegalStateException(s"eager releases differ from the batch timeline: $msg"))
+        }
       }),
-      "eager_dp_tws_timers_t20" -> (() => timed("eager_dp_tws_timers_t20") {
-        val byEpoch = graft.tools.EagerBench.workload(spark, 200000L, 20000, 5000, 20)
-        val n = graft.tools.EagerBench.runTwsTimers(spark, byEpoch, 20, 42L)
-        recordEager("tws", n)
-        System.err.println(s"[bench] eager_dp_tws_timers_t20 releases=$n")
-      }),
-      // the lazy floor: timers off, no barriers — what eagerness costs
-      // (fewer releases surface mid-stream; the rest defer to reappearance)
+      // the lazy floor: silent releases defer to the key's next appearance
       "eager_dp_lazy_t20" -> (() => timed("eager_dp_lazy_t20") {
         val byEpoch = graft.tools.EagerBench.workload(spark, 200000L, 20000, 5000, 20)
-        val n = graft.tools.EagerBench.runLazy(spark, byEpoch, 20, 42L)
+        val n = graft.tools.EagerBench.runLazy(spark, byEpoch, 20, 42L).size
         System.err.println(s"[bench] eager_dp_lazy_t20 releases=$n")
       }),
       // Second scale point along T: regression-guards the Algorithm-3
@@ -633,14 +621,17 @@ object Bench {
           force(distinctBenchFrame
             .groupBy("day").agg(approx_count_distinct(col("user_id"), 0.02).as("users")))
         } {
-          val both = distinctBenchFrame.groupBy("day")
-            .agg(countDistinct(col("user_id")).as("exact"),
-              approx_count_distinct(col("user_id"), 0.02).as("approx"))
-            .collect()
-          for (r <- both) {
-            val ex = r.getLong(1); val ap = r.getLong(2)
+          // one aggregate per count: combined with a distinct, the sketch
+          // would run over Spark's distinct-expanded rows
+          def perDay(users: Column): Map[Int, Long] = distinctBenchFrame.groupBy("day")
+            .agg(users).collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+          val exact = perDay(countDistinct(col("user_id")))
+          val approx = perDay(approx_count_distinct(col("user_id"), 0.02))
+          require(approx.keySet == exact.keySet, s"HLL days ${approx.keySet} != exact days ${exact.keySet}")
+          for ((day, ex) <- exact) {
+            val ap = approx(day)
             require(math.abs(ap - ex).toDouble / ex < 0.05,
-              s"HLL error out of band on day ${r.get(0)}: exact=$ex approx=$ap")
+              s"HLL error out of band on day $day: exact=$ex approx=$ap")
           }
         }
       }),
@@ -1697,30 +1688,6 @@ object Bench {
     Seq(benchLiTable, benchOrdTable)
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 
-    // A release-count mismatch makes a timing meaningless (an arm that
-    // quiesced empty records a fast time for nothing), so the arm is marked
-    // failed instead of only warned about. ALL laps of both arms must
-    // agree; the arm(s) whose laps actually diverged are the ones failed
-    // (an internally-consistent arm keeps its timing only when the
-    // divergence is attributable to the OTHER arm).
-    val eagerCounts = eagerReleases.toMap.map { case (k, v) => k -> (v: Seq[Long]) }
-    val eagerMismatchMsg = BenchReport.eagerMismatch(eagerCounts)
-    val armEntry = Map(
-      "tws" -> "eager_dp_tws_timers_t20",
-      "sharded" -> "eager_dp_sharded_t20")
-    val failedEntries = BenchReport.eagerArmsToFail(eagerCounts).flatMap(armEntry.get)
-    eagerMismatchMsg.foreach(msg => System.err.println(
-      s"[bench] FAIL: eager A/B release counts differ ($msg) — " +
-        s"${failedEntries.mkString(", ")} timing marked failed"))
-    val syntheticChecked = synthetic.map {
-      case (name, _) if failedEntries.contains(name) =>
-        // the suppressed raw times must not survive in runs_detail either
-        // (a consumer could resurrect the vacuous timing the gate killed)
-        runDetail.get(name).foreach(ts => runDetail(name) = ts.map(t => -math.abs(t)))
-        name -> -1.0
-      case other => other
-    }
-
     // ---- cross-sf scaling guard ----
     // Re-times the most expensive oracled gates at the 10×-smaller testdata
     // dir and reports runtime ratios: a gate whose big/small ratio exceeds
@@ -1754,7 +1721,7 @@ object Bench {
       ("microbatch_1_0gb_p4", 1.0), ("microbatch_1_0gb_p8", 1.0), ("microbatch_1_0gb_p16", 1.0),
       ("microbatch_0_5gb_p4", 0.5), ("microbatch_2_0gb_p16", 2.0))
       .flatMap { case (n, g) =>
-        syntheticChecked.toMap.get(n).filter(_ > 0).map(sec => (n + "_gbps", g / sec))
+        synthetic.toMap.get(n).filter(_ > 0).map(sec => (n + "_gbps", g / sec))
       }
 
     // derived steady-state per-epoch latency (mean of the standing
@@ -1837,7 +1804,7 @@ object Bench {
     val receiptsJson = allReceiptRows.map(_._2).mkString("{", ",", "}")
     val receiptsBad = allReceiptRows.collect { case (k, _, false) => k }
 
-    val all = queryTimes ++ syntheticChecked ++ gbps ++ steadyEpoch
+    val all = queryTimes ++ synthetic ++ gbps ++ steadyEpoch
     // Profiler sanity: the per-entry profile is the min-wall run's
     // metrics, so task time can never exceed wall × cores (25% slack + 1 s
     // for sub-second jitter and stage events that straddle a run
@@ -1879,10 +1846,7 @@ object Bench {
       s"""{"data_ratio":10.0,"flag_above":${r3(SuperLinearFlagRatio)},""" +
         s""""ratios":$ratios,"flagged":${flagged.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     }.getOrElse("null")
-    val eagerJson = eagerCounts.toSeq.sortBy(_._1)
-      .map { case (arm, ns) => "\"" + arm + "\":[" + ns.mkString(",") + "]" }
-      .mkString("{", ",", "}")
-    val headline = syntheticChecked.map(_._1) ++ gbps.map(_._1) ++ steadyEpoch.map(_._1)
+    val headline = synthetic.map(_._1) ++ gbps.map(_._1) ++ steadyEpoch.map(_._1)
     // the bad-receipt and scaling-flag lists must reach the captured
     // per-round summary, which is the compact line — keep both short and
     // always present
@@ -1897,7 +1861,6 @@ object Bench {
         s""""cpu_detail":${lapsJson(cpuDetail)},"load":[${r3(loadPre)},${r3(loadPost)}],""" +
         s""""ext_cpu":$extJson,""" +
         s""""receipts":$receiptsJson,""" +
-        s""""eager_releases":$eagerJson,"eager_seed":42,""" +
         s""""scaling":$scalingJson,""" +
         s""""profile_violations":${profileViolations.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""profile":$profile,"sf":"$sfDir"}"""

@@ -16,6 +16,15 @@ object Scheme {
   case object ChaCha20Poly1305 extends Scheme("ChaCha20-Poly1305", "ChaCha20")
   case object Aes256Gcm extends Scheme("AES/GCM/NoPadding", "AES")
   case object None extends Scheme(null, null)
+
+  /** The scheme a pipeline names: "chacha20" or "aes-gcm". Any other name
+    * throws, so a misspelt name can never seal plaintext as [[None]]. */
+  def parse(name: String): Scheme = name match {
+    case "chacha20" => ChaCha20Poly1305
+    case "aes-gcm" => Aes256Gcm
+    case other => throw new IllegalArgumentException(
+      s"unknown AEAD scheme '$other' (expected chacha20 or aes-gcm)")
+  }
 }
 
 /** AEAD seal/unseal codec with canonical-JSON AAD binding — the portable

@@ -127,11 +127,8 @@ case class AeadUnseal(
 /** Serializable unseal helper invoked from generated code. */
 final class AeadHelper(keyBytes: Array[Byte], schemeName: String,
     expectedSource: String, expectedDestination: String) extends Serializable {
-  @transient private lazy val payload = new graft.crypto.SealedPayload(keyBytes, schemeName match {
-    case "chacha20" => graft.crypto.Scheme.ChaCha20Poly1305
-    case "aes-gcm" => graft.crypto.Scheme.Aes256Gcm
-    case _ => graft.crypto.Scheme.None
-  })
+  private val scheme = graft.crypto.Scheme.parse(schemeName)
+  @transient private lazy val payload = new graft.crypto.SealedPayload(keyBytes, scheme)
 
   def unseal(aad: Array[Byte], nonce: Array[Byte], ct: Array[Byte]): UTF8String = {
     val ev = graft.crypto.EncryptedValue(aad, nonce, ct)
@@ -190,11 +187,8 @@ object AeadSeal {
 /** Serializable seal helper invoked from generated code. */
 final class AeadSealHelper(keyBytes: Array[Byte], schemeName: String,
     source: String, destination: String, nonceSeed: Long) extends Serializable {
-  @transient private lazy val payload = new graft.crypto.SealedPayload(keyBytes, schemeName match {
-    case "chacha20" => graft.crypto.Scheme.ChaCha20Poly1305
-    case "aes-gcm" => graft.crypto.Scheme.Aes256Gcm
-    case _ => graft.crypto.Scheme.None
-  })
+  private val scheme = graft.crypto.Scheme.parse(schemeName)
+  @transient private lazy val payload = new graft.crypto.SealedPayload(keyBytes, scheme)
 
   /** 12-byte nonce from mix64 over (seed, producer-hash, seq) — see
     * [[graft.crypto.Nonces.derive]] (shared, byte-identical). */

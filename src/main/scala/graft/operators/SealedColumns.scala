@@ -27,11 +27,8 @@ object SealedColumns {
 
   /** Serializable codec factory; the Cipher machinery is per-JVM transient. */
   final class Codec(val keyBytes: Array[Byte], val schemeName: String) extends Serializable {
-    @transient lazy val payload: SealedPayload = new SealedPayload(keyBytes, schemeName match {
-      case "chacha20" => Scheme.ChaCha20Poly1305
-      case "aes-gcm" => Scheme.Aes256Gcm
-      case _ => Scheme.None
-    })
+    private val scheme = Scheme.parse(schemeName)
+    @transient lazy val payload: SealedPayload = new SealedPayload(keyBytes, scheme)
   }
 
   /** Seals a string column into an (aad, nonce, ciphertext) struct with

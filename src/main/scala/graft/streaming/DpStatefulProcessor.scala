@@ -1,43 +1,38 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.functions.{col, timestamp_seconds}
 import org.apache.spark.sql.streaming._
 import graft.dp._
 
-/** `transformWithState` implementation of the DP-SQLP keyed operator — the
-  * preferred Spark 4.x architecture (SURVEY §4.3.1): per-key value state plus
-  * real timers, which close the one gap of the `flatMapGroupsWithState` form:
-  * an Algorithm-3 predicted release for a key that never reappears fires
-  * from [[handleExpiredTimer]] instead of waiting for the batch replay.
+import scala.collection.mutable
+
+/** Watermark-eager form of the DP-SQLP keyed operator: `transformWithState`
+  * in event time, holding one [[DpKeyState]] and at most one timer per key.
+  *
+  * The epoch is the event time. A row of epoch e carries the timestamp
+  * e + 1 seconds and the watermark trails the largest by one second, so
+  * once the stream has seen epoch E the watermark is E seconds and a row of
+  * epoch p is late iff p < E (the `+ 1` keeps epoch 0 above the initial
+  * watermark of 0). A key's Algorithm-3 prediction for epoch p is an
+  * event-time timer at (p + 1) seconds: it fires exactly when rows of
+  * epoch p become late, which is epoch p's barrier in the reference
+  * (StreamingDPMechanism.java:331-340), and releases at epoch p. Release
+  * points are therefore fixed in epoch terms, whatever the grouping of
+  * epochs into triggers; a prediction for the last epoch fed waits for data
+  * of a later epoch. Late rows are dropped by the watermark before they
+  * reach the state.
   *
   * It consumes the [[PrevMarked]] rows of [[StreamingPipelines.markPrevEpoch]],
-  * so its per-key state is a [[DpKeyState]] and never a user identity.
-  *
-  * Why this is the default eager path: the state store writes one key's
-  * state per update, where the sharded form
-  * ([[StreamingPipelines.dpHistogramEagerPrevMarked]]) re-serializes a whole
-  * shard, and a timer costs less than the sharded form's two synchronous
-  * barriers per epoch. [[graft.tools.EagerBench]] (bench entries
-  * `eager_dp_*_t20`, every arm on the RocksDB store) tracks that cost and
-  * checks that both forms emit the same number of releases. Keep the sharded
-  * form where release timing must be DETERMINISTIC in epoch terms (its tick
-  * is data, so a replay fires silents at exactly the same points; timers are
-  * wall-clock).
+  * so its per-key state never holds a user identity.
   *
   * Requires the RocksDB state store provider
   * (`spark.sql.streaming.stateStore.providerClass =
   * org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`),
   * which also gives the engine incremental-checkpoint state handling at
   * 1M-key scale (SURVEY §7.5.1).
-  *
-  * Timer policy: when a key finishes a batch with a pending prediction, a
-  * short processing-time timer is registered; on expiry every pending
-  * predicted epoch fires (the prediction's epoch index drives the tree leaf,
-  * so wall-clock only decides *when* the release is surfaced, matching the
-  * reference where the tick thread plays that role —
-  * AbstractDataPerturbationBolt.java:156-166).
   */
-final class DpStatefulProcessor(params: DpParams, runSeed: Long, useTimers: Boolean)
+final class DpStatefulProcessor(params: DpParams, runSeed: Long)
     extends StatefulProcessor[String, PrevMarked, Release] {
 
   @transient private var state: ValueState[DpKeyState] = _
@@ -48,45 +43,47 @@ final class DpStatefulProcessor(params: DpParams, runSeed: Long, useTimers: Bool
   override def handleInputRows(key: String, rows: Iterator[PrevMarked],
       timerValues: TimerValues): Iterator[Release] = {
     val st = if (state.exists()) state.get() else DpKeyState.seeded(params, runSeed, key)
-    val out = Seq.newBuilder[Release]
-    StreamingPipelines.appear(st, key, rows, out)
-    if (useTimers && st.predictedRelease.isDefined)
-      getHandle.registerTimer(timerValues.getCurrentProcessingTimeInMs() + DpStatefulProcessor.TimerDelayMs)
-    state.update(st)
-    out.result().iterator
+    step(st)(out => StreamingPipelines.appear(st, key, rows, out))
   }
 
   override def handleExpiredTimer(key: String, timerValues: TimerValues,
       expiredTimerInfo: ExpiredTimerInfo): Iterator[Release] = {
-    if (!state.exists()) return Iterator.empty
     val st = state.get()
+    val until = DpStatefulProcessor.epochClosedAt(expiredTimerInfo.getExpiryTimeInMs())
+    step(st)(out => st.fireDue(until, StreamingPipelines.emitTo(key, out)))
+  }
+
+  /** Runs `body` on the key's state, stores it, and re-arms the key's one
+    * timer at its pending prediction. */
+  private def step(st: DpKeyState)(body: mutable.Builder[Release, Seq[Release]] => Unit): Iterator[Release] = {
     val out = Seq.newBuilder[Release]
-    st.fireDue(params.maxTimeSteps, StreamingPipelines.emitTo(key, out))
+    body(out)
     state.update(st)
+    getHandle.listTimers().toList.foreach(getHandle.deleteTimer)
+    st.predictedRelease.foreach(p => getHandle.registerTimer(DpStatefulProcessor.closeOf(p)))
     out.result().iterator
   }
 }
 
 object DpStatefulProcessor {
-  /** Delay from a key's last batch to the timer that fires its predictions. */
-  private val TimerDelayMs = 100L
+  /** Event time (ms) at which epoch `p`'s rows become late. */
+  private def closeOf(p: Int): Long = (p + 1) * 1000L
 
-  /** Wires [[StreamingPipelines.markPrevEpoch]] and the processor into a
-    * stream. Caller must enable the RocksDB state store provider on the
-    * session.
-    *
-    * `timers = true` enables eager Algo-3 silent releases via processing-time
-    * timers, at the cost of continuous trigger evaluation while timers are
-    * pending (the engine re-triggers to check expiry — fine under
-    * `Trigger.ProcessingTime`, pathological with the default ASAP trigger in
-    * synchronous replay harnesses). With `timers = false` (default) the
-    * operator behaves like [[StreamingPipelines.dpHistogram]]: silent
-    * releases catch up lazily when the key next appears. */
-  def dpHistogram(input: Dataset[Contribution], params: DpParams, runSeed: Long = 42L,
-      timers: Boolean = false): Dataset[Release] = {
+  /** The epoch bound passed to `fireDue` by a timer set at [[closeOf]]`(p)`:
+    * p + 1, so exactly the prediction for p fires. */
+  private def epochClosedAt(ms: Long): Int = (ms / 1000L).toInt
+
+  /** Wires [[StreamingPipelines.markPrevEpoch]], the epoch watermark and the
+    * processor into a stream. Feed triggers in epoch order (one or more
+    * epochs per trigger); the caller must enable the RocksDB state store
+    * provider on the session. */
+  def dpHistogram(input: Dataset[Contribution], params: DpParams, runSeed: Long = 42L): Dataset[Release] = {
     import input.sparkSession.implicits._
-    StreamingPipelines.markPrevEpoch(input).groupByKey(_.key)
-      .transformWithState(new DpStatefulProcessor(params, runSeed, timers),
-        if (timers) TimeMode.ProcessingTime() else TimeMode.None(), OutputMode.Append())
+    StreamingPipelines.markPrevEpoch(input)
+      .withColumn("ts", timestamp_seconds(col("epoch") + 1))
+      .withWatermark("ts", "1 second")
+      .as[PrevMarked]
+      .groupByKey(_.key)
+      .transformWithState(new DpStatefulProcessor(params, runSeed), TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -26,8 +26,7 @@ final case class ShapedPartial(producer: String, epoch: Int, seq: Long,
   *
   * Spark restatement: emitters are shards of the release stream (the task
   * analogue), the cadence clock is the [[StreamingPipelines.EpochTick]]
-  * stream (the M4 marker / epoch barrier in data form — the same tick that
-  * drives eager Algo-3 releases). On every tick each shard emits EXACTLY ONE
+  * stream (the M4 marker / epoch barrier in data form). On every tick each shard emits EXACTLY ONE
   * sealed partial: its buffered real releases if any, else
   * `{"__dummy":true}` — sealed with the same key, scheme and AAD structure.
   *
@@ -54,12 +53,6 @@ object DummyTraffic {
   /** Internal union row (public: Spark's generated deserializer needs
     * constructor access). */
   final case class ShapeRow(shard: Int, key: String, epoch: Int, count: Long, tick: Boolean)
-
-  private def schemeFor(name: String): Scheme = name match {
-    case "chacha20" => Scheme.ChaCha20Poly1305
-    case "aes-gcm" => Scheme.Aes256Gcm
-    case _ => Scheme.None
-  }
 
   /** JSON payload for one emission; `_pad` fills the plaintext to exactly
     * `padTo` bytes (ASCII payloads, so chars == bytes) — or, when the
@@ -90,6 +83,7 @@ object DummyTraffic {
       source: String = "perturbation", destination: String = "aggregation",
       numShards: Int = 4, padTo: Int = 1024, nonceSeed: Long = 42L): Dataset[ShapedPartial] = {
     import releases.sparkSession.implicits._
+    val sealScheme = Scheme.parse(scheme)
     val data = releases.map(r =>
       ShapeRow(math.floorMod(r.key.hashCode, numShards), r.key, r.epoch, r.count, tick = false))
     val tickRows = ticks.flatMap(t =>
@@ -100,7 +94,7 @@ object DummyTraffic {
         (shard: Int, rows: Iterator[ShapeRow], state: GroupState[ShaperState]) => {
           val st = state.getOption.getOrElse(ShaperState(mutable.ArrayBuffer.empty, 0L))
           val producer = s"shard-$shard"
-          val payload = new SealedPayload(keyBytes, schemeFor(scheme))
+          val payload = new SealedPayload(keyBytes, sealScheme)
           val out = Seq.newBuilder[ShapedPartial]
 
           rows.toSeq.sortBy(r => (r.epoch, r.tick, r.key)).foreach { r =>

@@ -35,12 +35,11 @@ final case class PrevMarked(key: String, epoch: Int, prev: Int, value: Double)
   *     Int, then a per-key operator holding a [[graft.dp.DpKeyState]]
   *     (selection + histogram trees, Algo 1-3) that sees only previous-
   *     appearance epochs, never user identities. Epochs ride on the data
-  *     (`Contribution.epoch`), so batch replay and live triggers agree. The
-  *     three per-key operators differ only in when a silent key's Algo-3
-  *     predicted release surfaces: lazily at its next appearance
-  *     ([[dpHistogram]]), on a processing-time timer
-  *     ([[DpStatefulProcessor.dpHistogram]]), or on a data-carried epoch
-  *     tick ([[dpHistogramEager]]).
+  *     (`Contribution.epoch`), so batch replay and live triggers agree. Two
+  *     release policies decide when a silent key's Algo-3 predicted release
+  *     surfaces: lazily, at the key's next appearance ([[dpHistogram]]), or
+  *     watermark-eager, when the epoch watermark passes the predicted epoch
+  *     ([[DpStatefulProcessor.dpHistogram]]).
   *
   * Emitted [[Release]] rows are deltas; the sink keeps the carried-forward
   * full histogram (SURVEY §7.5.4 — at key cardinality, driver-side is cheap).
@@ -50,7 +49,6 @@ object StreamingPipelines {
   private implicit def stateEncoder: Encoder[BoundingState] = Encoders.kryo[BoundingState]
   private implicit def dpStateEncoder: Encoder[DpKeyState] = Encoders.kryo[DpKeyState]
   private implicit def lastSeenEncoder: Encoder[LastSeen] = Encoders.kryo[LastSeen]
-  private implicit def shardStatesEncoder: Encoder[ShardStates] = Encoders.kryo[ShardStates]
   private implicit def replayWindowEncoder: Encoder[graft.crypto.ReplayWindow] =
     Encoders.kryo[graft.crypto.ReplayWindow]
 
@@ -119,10 +117,9 @@ object StreamingPipelines {
     * consumes predictions the same way when a key reappears —
     * StreamingDPMechanism.java:331-365). A key that never reappears
     * releases only in the batch replay ([[graft.operators.DpHistogram]]);
-    * [[DpStatefulProcessor]] (timers) and [[dpHistogramEagerPrevMarked]]
-    * (ticks) surface it mid-stream. No `GroupStateTimeout` here: registering
-    * timeouts makes the micro-batch engine trigger continuously even with no
-    * data. */
+    * [[DpStatefulProcessor]] surfaces it mid-stream on the epoch watermark.
+    * No `GroupStateTimeout` here: registering timeouts makes the micro-batch
+    * engine trigger continuously even with no data. */
   def dpHistogramPrevMarked(input: Dataset[PrevMarked], params: DpParams, runSeed: Long = 42L): Dataset[Release] = {
     import input.sparkSession.implicits._
     input
@@ -153,83 +150,6 @@ object StreamingPipelines {
     * data form of the reference's micro-batch marker flush (M4) / epoch
     * barrier (M2): tick(e) asserts "epoch e's data is complete". */
   final case class EpochTick(epoch: Int)
-
-  /** Shard count for [[dpHistogramEagerPrevMarked]] balancing two bounds:
-    * the state store re-serializes a WHOLE shard per update, so shards
-    * should hold ≈`targetKeysPerShard` keys each (two O(T) trees per key ⇒
-    * tens of KB per shard at T=100) — but the stateful stage's parallelism
-    * IS the shard count, so it must not drop below the cluster's task
-    * slots either (`minShards`, default sized for a 32-core local run;
-    * pass executors×cores on a cluster). Callers know the expected key
-    * cardinality; the operator, mid-stream, cannot — so sizing is
-    * explicit: pass `shardsForKeys(expectedKeys)`. */
-  def shardsForKeys(expectedKeys: Long, targetKeysPerShard: Int = 1000,
-      minShards: Int = 64): Int =
-    math.max(minShards.toLong, math.min(65536L,
-      (expectedKeys + targetKeysPerShard - 1) / targetKeysPerShard)).toInt
-
-  /** Internal row of the sharded DP stage: data and ticks share one stream. */
-  final case class ShardRow(shard: Int, row: PrevMarked, tick: Boolean)
-
-  /** Per-shard state: every resident key's DP state machine. */
-  final case class ShardStates(states: mutable.HashMap[String, DpKeyState])
-
-  /** [[dpHistogramPrevMarked]] with EAGER Algorithm-3 silent releases: a key
-    * that never reappears still releases at its predicted epoch MID-STREAM,
-    * matching the reference's force-processing of predicted keys at each
-    * epoch (StreamingDPMechanism.java:331-340) — the lazy variant defers
-    * those to the batch replay.
-    *
-    * Why sharded state + a tick stream: `flatMapGroupsWithState` only
-    * invokes keys PRESENT in the batch, so per-key state cannot act on a
-    * silent key, and registering processing-time timeouts makes the
-    * micro-batch engine trigger continuously even with no data. The
-    * reference's own unit of state is not the key but the TASK — one
-    * StreamingDPMechanism holds every key routed to it and the epoch barrier
-    * forces predicted keys through `snapshot()`. This operator restates
-    * exactly that: the group key is a shard (hash of the aggregation key),
-    * shard state holds its keys' state machines, and one [[EpochTick]] row
-    * per epoch — replicated to all shards, `numShards` rows per epoch,
-    * negligible — plays the barrier: on tick(e), every resident key fires
-    * its predictions due at or before e.
-    *
-    * Trade-off vs per-key state: the state store serializes a whole shard on
-    * every update — size `numShards` via [[shardsForKeys]] (≈ keys/1000);
-    * hot shards spread by key hash. Use this form when silent releases must
-    * fire at DETERMINISTIC points in epoch terms: its tick is data, so a
-    * replay fires them at exactly the same epochs, whereas
-    * [[DpStatefulProcessor]]'s timers are wall-clock. [[graft.tools.EagerBench]]
-    * (bench entries `eager_dp_*_t20`) tracks the cost of each form. */
-  def dpHistogramEagerPrevMarked(input: Dataset[PrevMarked], ticks: Dataset[EpochTick],
-      params: DpParams, runSeed: Long = 42L, numShards: Int = 64): Dataset[Release] = {
-    import input.sparkSession.implicits._
-    val data = input.map(p => ShardRow(math.floorMod(p.key.hashCode, numShards), p, tick = false))
-    val tickRows = ticks.flatMap(t =>
-      (0 until numShards).iterator.map(s => ShardRow(s, PrevMarked("", t.epoch, -1, 0.0), tick = true)))
-    data.union(tickRows)
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Int, rows: Iterator[ShardRow], state: GroupState[ShardStates]) => {
-          val st = state.getOption.getOrElse(ShardStates(mutable.HashMap.empty))
-          val out = Seq.newBuilder[Release]
-          rows.toSeq.groupBy(_.row.epoch).toSeq.sortBy(_._1).foreach { case (epoch, rs) =>
-            // data first: an appearance at its predicted epoch consumes it
-            rs.filter(!_.tick).map(_.row).groupBy(_.key).toSeq.sortBy(_._1).foreach { case (key, krs) =>
-              appear(st.states.getOrElseUpdate(key, DpKeyState.seeded(params, runSeed, key)), key, krs.iterator, out)
-            }
-            // the barrier: every resident key's predictions due by `epoch` fire now
-            if (rs.exists(_.tick))
-              st.states.toSeq.sortBy(_._1).foreach { case (key, ks) => ks.fireDue(epoch + 1, emitTo(key, out)) }
-          }
-          state.update(st)
-          out.result().iterator
-        })
-  }
-
-  /** [[dpHistogramEagerPrevMarked]] over raw contributions (stage A + B). */
-  def dpHistogramEager(input: Dataset[Contribution], ticks: Dataset[EpochTick],
-      params: DpParams, runSeed: Long = 42L, numShards: Int = 64): Dataset[Release] =
-    dpHistogramEagerPrevMarked(markPrevEpoch(input), ticks, params, runSeed, numShards)
 
   /** An authenticated-but-not-yet-replay-checked record: producer and seq
     * come from the AEAD-verified AAD, plain is the unsealed payload. */

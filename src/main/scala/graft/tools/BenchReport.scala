@@ -10,7 +10,7 @@ package graft.tools
   * complete result always lives in `bench.json`.
   *
   * Budgeting: the entries named in `headline` (the BASELINE.md-comparable
-  * workloads — DP utility runs, eager A/B, co-location/skew A/Bs,
+  * workloads — DP utility runs, Algorithm-3 release policies, co-location/skew A/Bs,
   * micro-batch GB/s) are emitted first, in the order given; the remaining
   * budget is filled with the slowest other queries (the ones a reader
   * triaging performance wants first). `"n_all"` and `"omitted"` say how
@@ -52,7 +52,7 @@ object BenchReport {
     * one group ([[receiptClaims]]), or the claim has no lap pairs and its
     * receipt is not emitted. */
   val receiptGroups: Seq[Seq[String]] = Seq(
-    Seq("eager_dp_sharded_t20", "eager_dp_tws_timers_t20", "eager_dp_lazy_t20"),
+    Seq("eager_dp_tws_timers_t20", "eager_dp_lazy_t20"),
     Seq("colocated_join_plain", "colocated_join_bucketed"),
     Seq("skew_join_aqe_off", "skew_join_aqe_on"),
     Seq("runtime_bloom_off", "runtime_bloom_on"),
@@ -75,7 +75,6 @@ object BenchReport {
     * a warm page cache does not show it. */
   val receiptClaims: Seq[(String, String, String)] = Seq(
     ("eager_dp_lazy_t20", "eager_dp_tws_timers_t20", "wall"),
-    ("eager_dp_tws_timers_t20", "eager_dp_sharded_t20", "wall"),
     ("colocated_join_bucketed", "colocated_join_plain", "wall"),
     ("skew_join_aqe_on", "skew_join_aqe_off", "wall"),
     // runtime bloom's claim is the WIRE cut — its extra sequential build
@@ -108,36 +107,6 @@ object BenchReport {
     // the stored index's claim is the LISTING/READ cut from partition
     // pruning: the pruned scan never opens the other buckets' files
     ("phrase_stored_pruned", "phrase_stored_unpruned", "input_bytes"))
-
-  /** Cross-check of the eager A/B release counts, over EVERY in-run repeat
-    * of both arms. Identical seeds make every run's count identical, so any
-    * divergence — between arms OR between repeats of one arm — means some
-    * run's quiescence guard tripped and its (vacuously fast) time cannot be
-    * trusted; since the reported time is the min over repeats, one bad
-    * repeat poisons the entry. A single-arm (filtered) run still flags
-    * INTRA-arm repeat divergence — only the arm-vs-arm comparison needs two
-    * arms. Returns a human-readable description of the divergence, or None
-    * when all observed counts agree.
-    */
-  def eagerMismatch(counts: Map[String, Seq[Long]]): Option[String] = {
-    if (eagerArmsToFail(counts).isEmpty) None
-    else Some(counts.toSeq.sortBy(_._1)
-      .map { case (arm, ns) => s"$arm=${ns.mkString("/")}" }.mkString(", "))
-  }
-
-  /** Which arms' timings are vacuous under a release-count divergence:
-    * an arm whose OWN repeats disagree diverged itself; when every arm is
-    * internally consistent but the arms disagree with each other, there is
-    * no way to tell which quiesced early, so ALL reporting arms fail.
-    * Empty set = all observed counts agree (nothing to fail). */
-  def eagerArmsToFail(counts: Map[String, Seq[Long]]): Set[String] = {
-    val internallyDiverged = counts.collect {
-      case (arm, ns) if ns.distinct.size > 1 => arm
-    }.toSet
-    if (internallyDiverged.nonEmpty) internallyDiverged
-    else if (counts.size >= 2 && counts.values.flatten.toSeq.distinct.size > 1) counts.keySet
-    else Set.empty
-  }
 
   /** Build the capped compact line.
     *

@@ -23,6 +23,16 @@ class CryptoSpec extends AnyFunSuite {
     }
   }
 
+  test("scheme names fail closed: only chacha20 and aes-gcm parse") {
+    assert(Scheme.parse("chacha20") === Scheme.ChaCha20Poly1305)
+    assert(Scheme.parse("aes-gcm") === Scheme.Aes256Gcm)
+    for (name <- Seq("aes_gcm", "AES-GCM", "none", ""))
+      assertThrows[IllegalArgumentException](Scheme.parse(name))
+    // a misspelt codec scheme used to seal plaintext as Scheme.None
+    assertThrows[IllegalArgumentException](
+      new graft.operators.SealedColumns.Codec(key, "aes_gcm"))
+  }
+
   test("AAD tamper breaks authentication for real schemes") {
     for (scheme <- Seq(Scheme.ChaCha20Poly1305, Scheme.Aes256Gcm)) {
       val sp = new SealedPayload(key, scheme)

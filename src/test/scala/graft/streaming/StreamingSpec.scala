@@ -36,6 +36,34 @@ class StreamingSpec extends AnyFunSuite {
       .toSeq
   }
 
+  private def withRocksDb[A](body: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally spark.conf.unset(key)
+  }
+
+  /** Feeds each (epoch, rows) group as one drained trigger of
+    * [[DpStatefulProcessor.dpHistogram]]; returns every release with the
+    * largest epoch fed when it was emitted. */
+  private def eagerReleases(params: DpParams, runSeed: Long, queryName: String,
+      triggers: Seq[(Int, Seq[Contribution])]): Seq[(Int, Release)] = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Contribution]
+    val q = DpStatefulProcessor.dpHistogram(mem.toDS(), params, runSeed)
+      .writeStream.outputMode("append").format("memory").queryName(queryName).start()
+    var seen = 0
+    val out = Seq.newBuilder[(Int, Release)]
+    try triggers.foreach { case (fed, rows) =>
+      mem.addData(rows)
+      q.processAllAvailable()
+      val all = spark.table(queryName).as[Release].collect()
+      all.drop(seen).foreach(r => out += (fed -> r))
+      seen = all.length
+    } finally q.stop()
+    out.result()
+  }
+
   private def streamHistogram(params: DpParams, contributions: Seq[Contribution],
       queryName: String): Map[String, Long] = {
     import spark.implicits._
@@ -88,7 +116,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("two-level streaming (prev-epoch marking, no user ids in key state) equals batch") {
     import spark.implicits._
-    import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, FlatMapGroupsWithState, TransformWithState}
+    import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, EventTimeWatermark, FlatMapGroupsWithState, TransformWithState}
     implicit val sqlCtx = spark.sqlContext
     // Plan: a (key, userId)-keyed marking operator, then a key-keyed DP
     // operator whose input carries no userId column.
@@ -104,13 +132,17 @@ class StreamingSpec extends AnyFunSuite {
     assert(groupingKey(keyLevel, PrevMarked("k", 3, -1, 1.0)) === "k")
     assert(keyLevel.dataAttributes.map(_.name) === Seq("key", "epoch", "prev", "value"))
     assert(!keyLevel.child.output.exists(_.name == "userId"))
-    // the transformWithState arm consumes the same marked rows
+    // the watermark-eager arm consumes the same marked rows: an event-time
+    // transformWithState over the epoch watermark over the marking operator
     val twsPlan = DpStatefulProcessor.dpHistogram(MemoryStream[Contribution].toDS(), DpParams.zeroNoise(8))
       .queryExecution.analyzed
     assert(twsPlan.collect {
-      case _: TransformWithState => "TransformWithState"
+      case t: TransformWithState if t.timeMode == org.apache.spark.sql.streaming.TimeMode.EventTime() =>
+        "TransformWithState(EventTime)"
+      case _: EventTimeWatermark => "EventTimeWatermark"
       case _: FlatMapGroupsWithState => "FlatMapGroupsWithState"
-    } === Seq("TransformWithState", "FlatMapGroupsWithState"))
+    } === Seq("TransformWithState(EventTime)", "EventTimeWatermark", "FlatMapGroupsWithState"),
+      twsPlan.treeString)
 
     val contrib = eventContributions()
     val events = Tables.events(spark, sfDir)
@@ -152,24 +184,19 @@ class StreamingSpec extends AnyFunSuite {
     }.headOption.getOrElse(fail("no (seed, users, prediction) combination found — tune params"))
     assert(predicted > 0 && predicted < T)
 
-    // Stream: the key appears ONCE at epoch 0, then only epoch ticks arrive.
-    val data = MemoryStream[Contribution]
-    val ticks = MemoryStream[StreamingPipelines.EpochTick]
-    val releases = StreamingPipelines.dpHistogramEager(data.toDS(), ticks.toDS(), params, runSeed, numShards = 4)
-    val q = releases.writeStream.outputMode("append").format("memory").queryName("eager").start()
-    try {
-      data.addData((0 until nUsers).map(u => Contribution("lonely", 0, s"u$u", 1.0)))
-      q.processAllAvailable()
-      (1 until T).foreach { e =>
-        ticks.addData(StreamingPipelines.EpochTick(e))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-
-    val streamed = spark.table("eager").collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-    // the silent release fired mid-stream at exactly the predicted epoch
-    assert(streamed.exists { case (k, e, _) => k == "lonely" && e == predicted },
-      s"no mid-stream release at predicted epoch $predicted; got ${streamed.toSeq}")
+    // Stream: the key appears ONCE at epoch 0; later epochs arrive only as
+    // rows of another key, one trigger each.
+    val emitted = withRocksDb {
+      eagerReleases(params, runSeed, "eager",
+        Seq(0 -> (0 until nUsers).map(u => Contribution("lonely", 0, s"u$u", 1.0))) ++
+          (1 until T).map(e => e -> Seq(Contribution("pad", e, "v", 1.0))))
+    }
+    val streamed = emitted.collect { case (fed, r) if r.key == "lonely" => (fed, r) }
+    // the silent release fired mid-stream at exactly the predicted epoch,
+    // in the trigger that closed it
+    assert(streamed.exists { case (fed, r) => r.epoch == predicted && fed == predicted + 1 },
+      s"no mid-stream release at predicted epoch $predicted; got $streamed")
+    assert(streamed.forall { case (fed, r) => r.epoch < fed || r.epoch == 0 }, streamed)
 
     // and the final histogram equals the exact batch replay
     val preAgg = CoreOps.preAggregatePrevEpoch(
@@ -177,10 +204,27 @@ class StreamingSpec extends AnyFunSuite {
       "key", "epoch", "user_id", "value")
     val batch = DpHistogram.run(spark, preAgg, params, runSeed)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val streamedFinal = streamed.sortBy(_._2).foldLeft(Map.empty[String, Long]) {
-      (acc, r) => acc + (r._1 -> r._3)
+    val streamedFinal = streamed.map(_._2).sortBy(_.epoch).foldLeft(Map.empty[String, Long]) {
+      (acc, r) => acc + (r.key -> r.count)
     }
     assert(streamedFinal === batch)
+  }
+
+  test("eager Algo-3: one trigger and one trigger per epoch give the same releases, the batch timeline's") {
+    val t = 8
+    val byEpoch = graft.tools.EagerBench.workload(spark, 4000L, 400, 200, t)
+    val perEpoch = withRocksDb(eagerReleases(graft.tools.EagerBench.params(t), 42L, "eagerPerEpoch", byEpoch))
+    val oneTrigger = withRocksDb(eagerReleases(graft.tools.EagerBench.params(t), 42L, "eagerOneTrigger",
+      Seq(byEpoch.last._1 -> byEpoch.flatMap(_._2))))
+    def sorted(rs: Seq[Release]) = rs.sortBy(r => (r.key, r.epoch, r.count))
+    assert(sorted(perEpoch.map(_._2)) === sorted(oneTrigger.map(_._2)))
+    // the batch replay's timeline, up to the predictions still waiting on
+    // a later epoch than the last one fed; some releases are data-free
+    val timeline = graft.tools.EagerBench.timeline(spark, byEpoch, t, 42L)
+    assert(graft.tools.EagerBench.timelineMismatch(oneTrigger.map(_._2), timeline, byEpoch.last._1) === None)
+    val fedKeys = byEpoch.flatMap { case (e, rows) => rows.map(r => (r.key, e)) }.toSet
+    assert(oneTrigger.exists { case (_, r) => !fedKeys.contains((r.key, r.epoch)) },
+      "no data-free release: the workload does not exercise Algorithm 3")
   }
 
   test("M1 dummy shaping: constant cadence, equal ciphertext sizes, dummies discarded at merge") {

@@ -62,46 +62,75 @@ class TransformWithStateSpec extends AnyFunSuite {
     assert(streamed === batch)
   }
 
-  test("timer fires a pending predicted release for a key that never reappears") {
+  /** Runs `body` with a query over [[DpStatefulProcessor.dpHistogram]] fed
+    * by `feed(rows)` (one trigger, drained), reading the sink with `sink()`. */
+  private def withEagerQuery(params: DpParams, runSeed: Long, name: String)(
+      body: (Seq[Contribution] => Unit, () => Seq[(String, Int, Long)]) => Unit): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // scan seeds until one where the single-shot key is NOT selected at epoch 0
-    // but Algo 3 predicts a noise-alone release at a later epoch
-    var seed = 0L
-    var done = false
-    while (!done && seed < 400) {
-      val params = DpParams(sigmaKey = 5.0, sigmaHist = 0.0,
-        thresholdQuantile = graft.dp.Stats.inverseNormalCdf(1 - 0.4), maxTimeSteps = 16,
-        mu = 2, maxContributionsPerUser = 32)
-      // probe with the single-node state machine first (same seeds/trees)
-      val probe = new graft.dp.DpKeyState(params,
-        graft.dp.TreeSpec(16, 5.0,
-          graft.dp.NoiseSource.seeded(graft.dp.NoiseSource.seedFor(seed, "cold", "key"))),
-        graft.dp.TreeSpec(16, 0.0,
-          graft.dp.NoiseSource.seeded(graft.dp.NoiseSource.seedFor(seed, "cold", "hist"))))
+    val mem = MemoryStream[Contribution]
+    val q = DpStatefulProcessor.dpHistogram(mem.toDS(), params, runSeed)
+      .writeStream.outputMode("append").format("memory").queryName(name).start()
+    try body(
+      rows => { mem.addData(rows); q.processAllAvailable() },
+      () => spark.table(name).collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq)
+    finally q.stop()
+  }
+
+  test("timer fires a pending predicted release for a key that never reappears") {
+    val T = 16
+    val params = DpParams(sigmaKey = 5.0, sigmaHist = 0.0,
+      thresholdQuantile = graft.dp.Stats.inverseNormalCdf(1 - 0.4), maxTimeSteps = T,
+      mu = 2, maxContributionsPerUser = 32)
+    // a seed where the single-shot key is NOT selected at epoch 0 but
+    // Algo 3 predicts a noise-alone release at a later epoch (probed with
+    // the single-node state machine: same seeds, same trees)
+    val (seed, p) = (0L until 400L).view.flatMap { seed =>
+      val probe = graft.dp.DpKeyState.seeded(params, seed, "cold")
       val first = probe.processEpoch(0, Seq("u1"), 3.0, appeared = true)
-      if (first.isEmpty && probe.predictedRelease.isDefined) {
-        val mem = MemoryStream[Contribution]
-        val releases = DpStatefulProcessor.dpHistogram(mem.toDS(), params, runSeed = seed, timers = true)
-        val q = releases.writeStream.outputMode("append").format("memory")
-          .queryName(s"twstimer$seed").start()
-        try {
-          // with timers pending the engine re-triggers continuously, so
-          // processAllAvailable never settles — poll the sink instead
-          mem.addData(Seq(Contribution("cold", 0, "u1", 3.0)))
-          val deadline = System.currentTimeMillis() + 60000
-          var released = Array.empty[org.apache.spark.sql.Row]
-          while (released.isEmpty && System.currentTimeMillis() < deadline) {
-            Thread.sleep(200)
-            released = spark.table(s"twstimer$seed").where(col("key") === "cold").collect()
-          }
-          assert(released.nonEmpty, s"timer never fired the predicted release (seed=$seed)")
-          assert(released.head.getLong(2) === 3L) // sigmaHist=0: exact buffered sum
-        } finally q.stop()
-        done = true
+      if (first.isEmpty) probe.predictedRelease.filter(_ < T - 1).map(seed -> _) else None
+    }.headOption.getOrElse(fail("no seed produced a prediction scenario"))
+
+    withEagerQuery(params, seed, "twstimer") { (feed, sink) =>
+      def cold = sink().filter(_._1 == "cold")
+      feed(Seq(Contribution("cold", 0, "u1", 3.0)))
+      // later epochs arrive as rows of another key; the prediction for p
+      // fires exactly when epoch p + 1 is fed, i.e. when epoch p closes
+      (1 to p).foreach { e =>
+        feed(Seq(Contribution("pad", e, "v", 1.0)))
+        assert(cold.isEmpty, s"release surfaced at epoch $e, before epoch $p closed")
       }
-      seed += 1
+      feed(Seq(Contribution("pad", p + 1, "v", 1.0)))
+      assert(cold === Seq(("cold", p, 3L))) // sigmaHist=0: exact buffered sum
+      // a late row (epoch p < watermark epoch p + 1) is dropped
+      feed(Seq(Contribution("cold", p, "u2", 5.0)))
+      feed(Seq(Contribution("pad", p + 2, "v", 1.0)))
+      assert(cold === Seq(("cold", p, 3L)))
     }
-    assert(done, "no seed produced a prediction scenario")
+  }
+
+  test("a key reappearing before its prediction keeps its data: the batch value, nothing early") {
+    import spark.implicits._
+    val params = DpParams(3.0, 6.0, graft.dp.Stats.inverseNormalCdf(0.7), 32, 20, 50)
+    val seed = 1L
+    val epoch0 = (0 until 19).map(u => Contribution("lonely", 0, s"u$u", 1.0))
+    val epoch1 = (19 until 79).map(u => Contribution("lonely", 1, s"u$u", 1.0))
+    // 19 users stay below the gate and Algorithm 3 predicts a later epoch
+    val probe = graft.dp.DpKeyState.seeded(params, seed, "lonely")
+    probe.appear(0, Seq((-1, 19L)), 19.0)
+    assert(probe.currentSum.isEmpty && probe.predictedRelease.exists(_ > 1), probe.predictedRelease)
+
+    val batch = DpHistogram.run(spark, CoreOps.preAggregatePrevEpoch(
+        (epoch0 ++ epoch1).toDF(), "key", "epoch", "userId", "value"), params, seed)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    withEagerQuery(params, seed, "twsreappear") { (feed, sink) =>
+      feed(epoch0)
+      assert(sink().isEmpty, "a release surfaced while the stream was still at epoch 0")
+      feed(epoch1)
+      feed(Seq(Contribution("pad", 2, "v", 1.0)))
+      val lonely = sink().filter(_._1 == "lonely")
+      assert(lonely.map(_._2) === Seq(1), lonely)
+      assert(Map("lonely" -> lonely.head._3) === batch)
+    }
   }
 }

@@ -22,7 +22,7 @@ class BenchReportSpec extends AnyFunSuite with Matchers {
   private val headline = Seq(
     "synthetic_dp_t20", "synthetic_dp_t20_identity_state",
     "utility_t100_reduced", "utility_t1000_reduced",
-    "eager_dp_sharded_t20", "eager_dp_tws_timers_t20", "eager_dp_lazy_t20",
+    "eager_dp_tws_timers_t20", "eager_dp_lazy_t20",
     "colocated_join_bucket_write", "colocated_join_plain", "colocated_join_bucketed",
     "skew_join_aqe_off", "skew_join_aqe_on",
     "microbatch_0_1gb", "microbatch_0_5gb", "microbatch_1_0gb",
@@ -71,44 +71,18 @@ class BenchReportSpec extends AnyFunSuite with Matchers {
       qs.has("q_some_realistically_named_query_01") shouldBe false
   }
 
-  test("eager A/B cross-check passes only when every repeat of both arms agrees") {
-    // all repeats agree → no mismatch
-    BenchReport.eagerMismatch(Map("sharded" -> Seq(42934L, 42934L), "tws" -> Seq(42934L, 42934L))) shouldBe None
-    // arms disagree → mismatch (the r5 vacuous A/B: tws quiesced empty)
-    BenchReport.eagerMismatch(Map("sharded" -> Seq(42934L), "tws" -> Seq(0L))).isDefined shouldBe true
-    // one NON-FINAL repeat diverges while the last agrees → still a mismatch
-    // (min-of-repeats would otherwise report the bad repeat's time)
-    BenchReport.eagerMismatch(
-      Map("sharded" -> Seq(42934L, 42934L), "tws" -> Seq(1000L, 42934L))).isDefined shouldBe true
-    // a consistent single arm (filtered suite) or no data → nothing to flag
-    BenchReport.eagerMismatch(Map("sharded" -> Seq(42934L))) shouldBe None
-    BenchReport.eagerMismatch(Map.empty) shouldBe None
-    // a single arm whose OWN repeats diverge IS flagged even with no second
-    // arm to compare against (a filtered SPARK_GRAFT_BENCH_ONLY run must not
-    // let a vacuous repeat's fast time survive as the min)
-    BenchReport.eagerMismatch(Map("tws" -> Seq(1000L, 42934L))).isDefined shouldBe true
-    // message names both arms with per-repeat counts
-    val msg = BenchReport.eagerMismatch(Map("sharded" -> Seq(5L, 5L), "tws" -> Seq(5L, 3L))).get
-    msg should include("sharded=5/5")
-    msg should include("tws=5/3")
-  }
-
-  test("eager arm attribution fails the diverging arm, or all arms when undecidable") {
-    // intra-arm divergence → only that arm fails
-    BenchReport.eagerArmsToFail(
-      Map("sharded" -> Seq(5L, 5L), "tws" -> Seq(5L, 3L))) shouldBe Set("tws")
-    BenchReport.eagerArmsToFail(
-      Map("sharded" -> Seq(5L, 4L), "tws" -> Seq(5L, 5L))) shouldBe Set("sharded")
-    // both arms internally diverged → both fail
-    BenchReport.eagerArmsToFail(
-      Map("sharded" -> Seq(5L, 4L), "tws" -> Seq(5L, 3L))) shouldBe Set("sharded", "tws")
-    // internally consistent but arms disagree → undecidable, all fail
-    BenchReport.eagerArmsToFail(
-      Map("sharded" -> Seq(5L, 5L), "tws" -> Seq(3L, 3L))) shouldBe Set("sharded", "tws")
-    // agreement → nothing fails
-    BenchReport.eagerArmsToFail(
-      Map("sharded" -> Seq(5L, 5L), "tws" -> Seq(5L, 5L))) shouldBe Set.empty
-    BenchReport.eagerArmsToFail(Map("tws" -> Seq(5L, 5L))) shouldBe Set.empty
+  test("eager timeline audit: equal below the last fed epoch, a subset at it, duplicates caught") {
+    import graft.streaming.Release
+    val timeline = Seq(Release("a", 0, 5L), Release("b", 1, 3L), Release("a", 2, 7L), Release("c", 2, 4L))
+    EagerBench.timelineMismatch(timeline, timeline, lastFed = 2) shouldBe None
+    // a data-free prediction at the last fed epoch may still be pending
+    EagerBench.timelineMismatch(timeline.filterNot(_.key == "c"), timeline, lastFed = 2) shouldBe None
+    // anything missing, extra or duplicated below the last fed epoch fails
+    EagerBench.timelineMismatch(timeline.tail, timeline, lastFed = 2).get should include("below epoch 2")
+    EagerBench.timelineMismatch(timeline :+ Release("b", 1, 3L), timeline, lastFed = 2).isDefined shouldBe true
+    EagerBench.timelineMismatch(timeline.updated(1, Release("b", 1, 9L)), timeline, lastFed = 2).isDefined shouldBe true
+    // at the last fed epoch a release the timeline lacks fails
+    EagerBench.timelineMismatch(timeline :+ Release("d", 2, 1L), timeline, lastFed = 2).get should include("at epoch 2")
   }
 
   test("a pathologically large suite still renders under the cap") {
