@@ -3,23 +3,24 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dp.DpParams
+import graft.oracle.IndexOracles
 import graft.operators.{AsOfJoin, CoreOps, Dedup, DpHistogram, GraphOps, Multimodal, RangeJoin, Sessionize, Similarity, SkewOps, TextOps}
 
 /** Driver contract: one entry per implemented operator from SURVEY §2, each
   * paired (where SQL-expressible) with an equivalent DuckDB oracle query in
-  * [[SparkEntry.oracleSql]]. All queries are fully deterministic: zero-noise
+  * [[graft.oracle.OracleSql.all]]. All queries are fully deterministic: zero-noise
   * (or seeded) DP modes, total ORDER BY on both sides, and decimal-exact
   * aggregation wherever a double sum would be association-order sensitive.
   */
 object SparkEntry {
 
   // Pipeline constants shared by Spark queries and oracle SQL.
-  private val BoundC = 50L // per-user contribution bound (B1)
-  private val ClampL = 100.0 // per-record clamp (P3)
-  private val MuGate = 72L // unique-user release threshold for the T=1 gate query
+  private[graft] val BoundC = 50L // per-user contribution bound (B1)
+  private[graft] val ClampL = 100.0 // per-record clamp (P3)
+  private[graft] val MuGate = 72L // unique-user release threshold for the T=1 gate query
   private val Epochs = 32 // day-of-month epochs for events (1..30 used)
-  private val RangeWindowUs = 21600000000L // 6h attribution window for j2 (µs)
-  private val SessionGapUs = 43200000000L // 12h inactivity gap for s4 (µs)
+  private[graft] val RangeWindowUs = 21600000000L // 6h attribution window for j2 (µs)
+  private[graft] val SessionGapUs = 43200000000L // 12h inactivity gap for s4 (µs)
 
   /** Flagship on sf0.001 (driver smoke-checks rows > 0): the full σ=0 DP-SQLP
     * word-count pipeline — tokenize → bound → clamp → epoched DP histogram. */
@@ -531,24 +532,24 @@ object SparkEntry {
   )
 
   // LLM-training-data pipeline operators over documents/embeddings.
-  private val ShingleK = 3
+  private[graft] val ShingleK = 3
   private val LrPrThresholds: Seq[Long] =
     Seq(-2000000L, -1000000L, -500000L, 0L, 500000L, 1000000L, 2000000L)
-  private val NumMinHashes = 8
-  private val NumBands = 4
-  private val JaccardThreshold = 0.5
+  private[graft] val NumMinHashes = 8
+  private[graft] val NumBands = 4
+  private[graft] val JaccardThreshold = 0.5
   // skew guard for d4: shingles in more docs than this generate no candidates
   // (verification still uses full sets — see Dedup.jaccardPairs)
-  private val JaccardMaxDf = 10L
+  private[graft] val JaccardMaxDf = 10L
   /** d28's max(cont_a, cont_b) cut, mirrored in its oracle SQL. */
-  private val ContainmentThreshold = 0.9
-  private val CosineNearDupThreshold = 0.4
-  private val HeavyHitterThreshold = 300L
-  private val TopK = 5
+  private[graft] val ContainmentThreshold = 0.9
+  private[graft] val CosineNearDupThreshold = 0.4
+  private[graft] val HeavyHitterThreshold = 300L
+  private[graft] val TopK = 5
   /** ivfTopK's nprobe default, mirrored in the d8 oracle SQL. */
-  private val IvfNprobe = 4
+  private[graft] val IvfNprobe = 4
   /** d26 margin-mining neighborhood size, mirrored in its oracle SQL. */
-  private val MarginK = 8
+  private[graft] val MarginK = 8
 
   /** The composed cleaning pipeline behind `e2e_clean_corpus_build` — see
     * the gate's comment for the stage list. The gate persists the
@@ -1110,7 +1111,7 @@ object SparkEntry {
       val out = decide("reduced", red).unionByName(decide("rotated_pq", pq))
         .orderBy("index_family")
       SpliceStore.put("sql:q_index_rebuild_policy",
-        rebuildPolicyOracleSql(redSql, pqSql))
+        IndexOracles.rebuildPolicyOracleSql(redSql, pqSql))
       out
     }),
 
@@ -3355,7 +3356,7 @@ object SparkEntry {
     // ---- S3: seeded Zipf-Mandelbrot synthetic workload. The generator has
     //      no input table, so the gate MATERIALIZES its seeded output to
     //      parquet and aggregates the materialized copy; the DuckDB oracle
-    //      reads the same parquet (s3OracleSql) and re-derives the frequency
+    //      reads the same parquet (ModelOracles.s3OracleSql) and re-derives the frequency
     //      ranking — the d8-centroid pattern: only deterministic generator
     //      output crosses the boundary, the aggregation is re-derived in
     //      SQL. Distribution shape itself stays golden-pinned in
@@ -3390,7 +3391,7 @@ object SparkEntry {
     }),
 
     // ---- ANN IVF top-k (trained coarse quantizer; oracle gets the trained
-    //      centroids as a VALUES table — see d8OracleSql — and re-derives
+    //      centroids as a VALUES table — see IndexOracles.d8OracleSql — and re-derives
     //      assignment/probing/ranking in SQL; training itself is pinned by
     //      OperatorsSpec determinism+recall) ----
     "d8_ann_ivf_topk" -> ((s, d) => {
@@ -3782,172 +3783,6 @@ object SparkEntry {
     })
   )
 
-  /** DuckDB-equivalent SQL per query; column names and ordering must match the
-    * Spark result exactly (the driver sorts columns by name and hash-compares
-    * values). Two entries appear only after their query has run in this JVM
-    * (Verify runs every query before dumping oracle SQL, so the dump always
-    * includes them): d8 exports the deterministically-trained centroids as a
-    * VALUES table, s3 materializes its seeded generator output to parquet —
-    * in both, only deterministic model/generator output crosses the
-    * boundary; everything downstream is re-derived in SQL. */
-  def oracleSql: Map[String, String] = {
-    val live =
-      coreOracleSql ++ llmOracleSql ++ d8OracleSql ++ pqOracleSql ++ s3OracleSql ++ lrOracleSql ++ x13OracleSql ++ btOracleSql ++ kCenterOracleSql ++ pcaOracleSql ++ reducedIvfOracleSql ++ reducedPqOracleSql ++ ppmiOracleSql ++ egOracleSql ++ pplOracleSql ++ maintainedReducedOracleSql ++ maintainedPqOracleSql
-    // Durability (VERDICT r12 #1b): persist every dynamically-constructed
-    // oracle into the SpliceStore, and backfill gates whose export slot is
-    // empty in THIS process from the persisted store — so a filtered
-    // Verify run (SPARK_GRAFT_VERIFY_ONLY) still dumps a complete
-    // oracle_sql.json from the last full run's frozen SQL instead of the
-    // 148/182 the r12 judge measured. Backfill is restricted to names in
-    // `queries` so a stale store can never resurrect a removed gate.
-    val static = coreOracleSql.keySet ++ llmOracleSql.keySet
-    live.foreach { case (n, sql) =>
-      if (!static.contains(n)) SpliceStore.put("sql:" + n, sql)
-    }
-    val backfill = SpliceStore.allWithPrefix("sql:").filter { case (n, _) =>
-      !live.contains(n) && queries.contains(n)
-    }
-    backfill ++ live
-  }
-
-  /** d24 oracle, available after [[graft.operators.Similarity
-    * .trainReducedPqModel]] has trained (own slot, base-corpus model):
-    * re-encodes the post-maintenance index membership (all vectors minus
-    * the deleted set) from the exported frozen rotation + codebooks and
-    * replays the j-ordered ADC ranking and the exact rescore — the
-    * executable form of the codes index's append==rebuild /
-    * delete==rebuild claims. */
-  private def maintainedPqOracleSql: Map[String, String] =
-    graft.operators.Similarity.lastMaintainedReducedPq.toSeq.flatMap {
-      case m if m.dim != 64 || m.pcaDims != 8 =>
-        Nil // a differently-shaped training overwrote the slot — rows-only
-      case mdl =>
-        val dim = mdl.dim
-        val nc = mdl.pcaDims
-        val m = mdl.m
-        val dsub = nc / m
-        val mLit = "[" + mdl.mean.mkString(", ") + "]::DOUBLE[]"
-        val cLit = "[" + mdl.comps.map(c => "[" + c.mkString(", ") + "]")
-          .mkString(", ") + "]::DOUBLE[][]"
-        val values = (for (j <- mdl.books.indices; c <- mdl.books(j).indices) yield {
-          val w = mdl.books(j)(c)
-          val nsq = w.map(x => x * x).sum
-          s"($j, $c, CAST($nsq AS DOUBLE), [${w.mkString(", ")}]::DOUBLE[])"
-        }).mkString(", ")
-        def coord(emb: String, t: String) =
-          s"""floor(list_reduce(list_transform(range(1, ${dim + 1}),
-             |        i -> (CAST($emb[i] AS DOUBLE) - mm.m[i]) * cc.c[$t][i]),
-             |      (x, y) -> x + y) * 1000000.0 + 0.5) / 1000000.0""".stripMargin
-        def dotF(a: String, b: String) =
-          s"list_reduce(list_transform(range(1, ${dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)"
-        def cosF(a: String, b: String) =
-          s"round(${dotF(a, b)} / (sqrt(${dotF(a, a)}) * sqrt(${dotF(b, b)})), 6)"
-        Seq("d24_maintained_pq_topk" ->
-          s"""WITH mm(m) AS (SELECT $mLit), cc(c) AS (SELECT $cLit),
-             |books(j, c, nsq, w) AS (VALUES $values),
-             |cp AS (SELECT e.vec_id,
-             |              list_transform(range(1, ${nc + 1}), t -> ${coord("e.embedding", "t")}) AS proj
-             |       FROM embeddings e, mm, cc),
-             |subd AS (
-             |  SELECT v.vec_id, b.j, b.c,
-             |         b.nsq - 2.0 * list_reduce(list_transform(range(1, ${dsub + 1}),
-             |           i -> b.w[i] * v.proj[b.j * $dsub + i]), (x, y) -> x + y) AS d
-             |  FROM cp v CROSS JOIN books b),
-             |codes AS (
-             |  SELECT vec_id, list(c ORDER BY j) AS codes FROM (
-             |    SELECT vec_id, j, c,
-             |           row_number() OVER (PARTITION BY vec_id, j ORDER BY d, c) AS rn FROM subd)
-             |  WHERE rn = 1 AND vec_id % 11 <> 5 GROUP BY vec_id),
-             |qadc AS (
-             |  SELECT vec_id AS query_id, list(dl ORDER BY j) AS adc FROM (
-             |    SELECT vec_id, j, list(d ORDER BY c) AS dl FROM subd
-             |    WHERE vec_id < 10 GROUP BY vec_id, j)
-             |  GROUP BY vec_id),
-             |approx AS (
-             |  SELECT q.query_id, v.vec_id,
-             |         list_reduce(list_transform(range(1, ${m + 1}),
-             |           j -> q.adc[j][v.codes[j] + 1]), (x, y) -> x + y) AS approx
-             |  FROM codes v CROSS JOIN qadc q WHERE v.vec_id <> q.query_id),
-             |cand AS (
-             |  SELECT query_id, vec_id FROM (
-             |    SELECT query_id, vec_id,
-             |           row_number() OVER (PARTITION BY query_id ORDER BY approx, vec_id) AS rn
-             |    FROM approx)
-             |  WHERE rn <= 20),
-             |exact AS (
-             |  SELECT cd.query_id, cd.vec_id AS neighbor_id,
-             |         ${cosF("qq.embedding", "ee.embedding")} AS cos
-             |  FROM cand cd JOIN embeddings qq ON qq.vec_id = cd.query_id
-             |               JOIN embeddings ee ON ee.vec_id = cd.vec_id),
-             |ranked AS (
-             |  SELECT query_id, neighbor_id, cos,
-             |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-             |  FROM exact)
-             |SELECT query_id, rank, neighbor_id, cos FROM ranked WHERE rank <= $TopK
-             |ORDER BY query_id, rank""".stripMargin)
-    }.toMap
-
-  /** d23 oracle, available after [[graft.operators.Similarity
-    * .trainReducedModel]] has trained (its own slot — the maintained gate
-    * trains on the pre-epoch BASE corpus, so it must not read the
-    * full-corpus d22 model). The SQL recomputes projection, assignment,
-    * probing, and the exact rescore from the exported FROZEN model over
-    * the post-maintenance index membership (all vectors minus the deleted
-    * set — base ∪ appended epoch = the whole table), which is precisely
-    * the append==rebuild / delete==rebuild claim in executable form. */
-  private def maintainedReducedOracleSql: Map[String, String] =
-    graft.operators.Similarity.lastMaintainedReduced.toSeq.flatMap {
-      case m if m.dim != 64 || m.pcaDims != 8 =>
-        Nil // a differently-shaped training overwrote the slot — rows-only
-      case m =>
-        val dim = m.dim
-        val nc = m.pcaDims
-        val mLit = "[" + m.mean.mkString(", ") + "]::DOUBLE[]"
-        val cLit = "[" + m.comps.map(c => "[" + c.mkString(", ") + "]")
-          .mkString(", ") + "]::DOUBLE[][]"
-        val values = m.centroids.zipWithIndex.map { case (w, i) =>
-          val nsq = w.map(x => x * x).sum
-          s"($i, CAST($nsq AS DOUBLE), [${w.mkString(", ")}]::DOUBLE[])"
-        }.mkString(", ")
-        def coord(emb: String, t: String) =
-          s"""floor(list_reduce(list_transform(range(1, ${dim + 1}),
-             |        i -> (CAST($emb[i] AS DOUBLE) - mm.m[i]) * cc.c[$t][i]),
-             |      (x, y) -> x + y) * 1000000.0 + 0.5) / 1000000.0""".stripMargin
-        def dotR(a: String, b: String) =
-          s"list_reduce(list_transform(range(1, ${nc + 1}), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-        def dotF(a: String, b: String) =
-          s"list_reduce(list_transform(range(1, ${dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)"
-        def cosF(a: String, b: String) =
-          s"round(${dotF(a, b)} / (sqrt(${dotF(a, a)}) * sqrt(${dotF(b, b)})), 6)"
-        Seq("d23_maintained_reduced_topk" ->
-          s"""WITH mm(m) AS (SELECT $mLit), cc(c) AS (SELECT $cLit),
-             |rcent(c, nsq, w) AS (VALUES $values),
-             |cp AS (SELECT e.vec_id,
-             |              list_transform(range(1, ${nc + 1}), t -> ${coord("e.embedding", "t")}) AS proj
-             |       FROM embeddings e, mm, cc),
-             |dists AS (
-             |  SELECT v.vec_id, rc.c, rc.nsq - 2.0 * ${dotR("rc.w", "v.proj")} AS d
-             |  FROM cp v CROSS JOIN rcent rc),
-             |rankedc AS (SELECT vec_id, c,
-             |                   row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn FROM dists),
-             |assign AS (SELECT vec_id, c AS cell FROM rankedc WHERE rn = 1 AND vec_id % 11 <> 5),
-             |probes AS (SELECT vec_id AS query_id, c AS cell FROM rankedc
-             |           WHERE vec_id < 10 AND rn <= $IvfNprobe),
-             |cands AS (
-             |  SELECT DISTINCT p.query_id, a.vec_id
-             |  FROM probes p JOIN assign a ON a.cell = p.cell AND a.vec_id <> p.query_id),
-             |scored AS (
-             |  SELECT cd.query_id, cd.vec_id, ${cosF("qq.embedding", "ee.embedding")} AS cos
-             |  FROM cands cd JOIN embeddings qq ON qq.vec_id = cd.query_id
-             |                JOIN embeddings ee ON ee.vec_id = cd.vec_id),
-             |ranked AS (
-             |  SELECT query_id, vec_id AS neighbor_id, cos,
-             |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-             |  FROM scored)
-             |SELECT query_id, rank, neighbor_id, cos FROM ranked WHERE rank <= $TopK
-             |ORDER BY query_id, rank""".stripMargin)
-    }.toMap
-
   /** Train-once-per-(JVM, sf) caches for the two staleness measurements
     * (VERDICT r17 #5): `q_index_rebuild_policy` composes BOTH
     * measurements verbatim, so a sweep running the two staleness gates
@@ -4008,7 +3843,7 @@ object SparkEntry {
       .unionByName(stalenessRecall(exact, "maintained_stale",
         Similarity.reducedProbeTopK(corpus, stale, frozen, queries, TopK, IvfNprobe)))
       .orderBy("arm")
-    (out, stalenessOracleSql(frozen, fresh))
+    (out, IndexOracles.stalenessOracleSql(frozen, fresh))
   }
 
   /** The q_pq_index_staleness measurement, the [[reducedStalenessArms]]
@@ -4044,7 +3879,7 @@ object SparkEntry {
         Similarity.reducedPqProbeTopK(corpus, stale, frozen, queries, TopK,
           rescoreCands = 50)))
       .orderBy("arm")
-    (out, pqStalenessOracleSql(frozen, fresh))
+    (out, IndexOracles.pqStalenessOracleSql(frozen, fresh))
   }
 
   private def stalenessRecall(exact: DataFrame, arm: String, ann: DataFrame): DataFrame =
@@ -4055,810 +3890,6 @@ object SparkEntry {
       .select(lit(arm).as("arm"), col("n_hits"), col("n_expected"),
         (col("n_hits").cast("double") / col("n_expected").cast("double"))
           .as("recall"))
-
-  /** Oracle for q_index_rebuild_policy: both staleness oracles nested as
-    * derived tables (DuckDB allows WITH inside a FROM subquery), pivoted to
-    * one row per index family with the same exact-integer rebuild rule as
-    * the engine ((fresh−stale)·10 ≥ expected). */
-  private def rebuildPolicyOracleSql(redSql: String, pqSql: String): String = {
-    def pivot(name: String, src: String): String =
-      s"""SELECT '$name' AS index_family,
-         |  st.n_hits AS stale_hits, fr.n_hits AS fresh_hits, st.n_expected,
-         |  fr.n_hits - st.n_hits AS gap_hits,
-         |  CAST(st.n_hits AS DOUBLE) / CAST(st.n_expected AS DOUBLE) AS stale_recall,
-         |  CAST(fr.n_hits AS DOUBLE) / CAST(st.n_expected AS DOUBLE) AS fresh_recall,
-         |  (fr.n_hits - st.n_hits) * 10 >= st.n_expected AS rebuild
-         |FROM (SELECT * FROM $src WHERE arm = 'maintained_stale') st,
-         |     (SELECT * FROM $src WHERE arm = 'fresh_rebuild') fr""".stripMargin
-    s"""WITH red AS (SELECT * FROM (
-       |$redSql
-       |)),
-       |pq AS (SELECT * FROM (
-       |$pqSql
-       |))
-       |SELECT * FROM (
-       |${pivot("reduced", "red")}
-       |UNION ALL
-       |${pivot("rotated_pq", "pq")})
-       |ORDER BY index_family""".stripMargin
-  }
-
-  /** Oracle for q_reduced_index_staleness, built AT GATE TIME from both
-    * exported models (frozen-on-base and fresh-on-union) and stored
-    * straight into the [[SpliceStore]] under `sql:` — no dump-time slot
-    * read at all, the fully durable form of the d23 oracle pattern. The
-    * SQL replays the deterministic drift (coordinate reversal of
-    * `vec_id % 5 >= 3`), both models' q6 projections, cell assignment and
-    * nprobe probes, candidate generation from the index rows, the exact
-    * full-dim cosine rescore, the brute-force truth, and the per-arm
-    * recall rollup — so the gate proves the MEASUREMENT, not just the
-    * probe: a wrong staleness gap cannot hash-match. */
-  private def stalenessOracleSql(frozen: graft.operators.Similarity.ReducedModel,
-      fresh: graft.operators.Similarity.ReducedModel): String = {
-    val dim = frozen.dim
-    val nc = frozen.pcaDims
-    require(dim == 64 && fresh.dim == 64, s"staleness oracle is written for dim=64 (cosD), got $dim/${fresh.dim}")
-    def modelCtes(p: String, m: graft.operators.Similarity.ReducedModel): String = {
-      val mLit = "[" + m.mean.mkString(", ") + "]::DOUBLE[]"
-      val cLit = "[" + m.comps.map(c => "[" + c.mkString(", ") + "]")
-        .mkString(", ") + "]::DOUBLE[][]"
-      val values = m.centroids.zipWithIndex.map { case (w, i) =>
-        val nsq = w.map(x => x * x).sum
-        s"($i, CAST($nsq AS DOUBLE), [${w.mkString(", ")}]::DOUBLE[])"
-      }.mkString(", ")
-      def coord(t: String) =
-        s"""floor(list_reduce(list_transform(range(1, ${dim + 1}),
-           |        i -> (v.emb[i] - ${p}m.m[i]) * ${p}c.c[$t][i]),
-           |      (x, y) -> x + y) * 1000000.0 + 0.5) / 1000000.0""".stripMargin
-      def dotR(a: String, b: String) =
-        s"list_reduce(list_transform(range(1, ${nc + 1}), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-      s"""|${p}m(m) AS (SELECT $mLit), ${p}c(c) AS (SELECT $cLit),
-          |${p}cent(c, nsq, w) AS (VALUES $values),
-          |${p}proj AS (SELECT v.vec_id,
-          |             list_transform(range(1, ${nc + 1}), t -> ${coord("t")}) AS proj
-          |             FROM corpus v, ${p}m, ${p}c),
-          |${p}dists AS (
-          |  SELECT v.vec_id, rc.c, rc.nsq - 2.0 * ${dotR("rc.w", "v.proj")} AS d
-          |  FROM ${p}proj v CROSS JOIN ${p}cent rc),
-          |${p}rankedc AS (SELECT vec_id, c,
-          |                row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn FROM ${p}dists),
-          |${p}assign AS (SELECT vec_id, c AS cell FROM ${p}rankedc WHERE rn = 1),
-          |${p}probes AS (SELECT vec_id AS query_id, c AS cell FROM ${p}rankedc
-          |               WHERE vec_id % 5 >= 3 AND vec_id < 25 AND rn <= $IvfNprobe),
-          |${p}cands AS (
-          |  SELECT DISTINCT pr.query_id, a.vec_id
-          |  FROM ${p}probes pr JOIN ${p}assign a ON a.cell = pr.cell AND a.vec_id <> pr.query_id),
-          |${p}scored AS (
-          |  SELECT cd.query_id, cd.vec_id, ${cosD("qq.emb", "ee.emb")} AS cos
-          |  FROM ${p}cands cd JOIN corpus qq ON qq.vec_id = cd.query_id
-          |                    JOIN corpus ee ON ee.vec_id = cd.vec_id),
-          |${p}top AS (
-          |  SELECT query_id, vec_id AS neighbor_id
-          |  FROM (SELECT query_id, vec_id,
-          |               row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-          |        FROM ${p}scored) WHERE rank <= $TopK),
-          |${p}recall AS (
-          |  SELECT CAST(count(t.query_id) AS BIGINT) AS n_hits,
-          |         CAST(count(*) AS BIGINT) AS n_expected
-          |  FROM exact x LEFT JOIN ${p}top t
-          |    ON t.query_id = x.query_id AND t.neighbor_id = x.neighbor_id)""".stripMargin
-    }
-    s"""WITH corpus AS MATERIALIZED (
-       |  SELECT vec_id,
-       |         CASE WHEN vec_id % 5 >= 3
-       |              THEN list_transform(range(1, ${dim + 1}), i -> CAST(embedding[${dim + 1} - i] AS DOUBLE))
-       |              ELSE list_transform(range(1, ${dim + 1}), i -> CAST(embedding[i] AS DOUBLE)) END AS emb
-       |  FROM embeddings),
-       |exact AS MATERIALIZED (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY q.vec_id
-       |             ORDER BY ${cosD("q.emb", "c.emb")} DESC, c.vec_id) AS rank
-       |    FROM corpus q JOIN corpus c ON c.vec_id <> q.vec_id
-       |    WHERE q.vec_id % 5 >= 3 AND q.vec_id < 25) WHERE rank <= $TopK),
-       |${modelCtes("f", fresh)},
-       |${modelCtes("s", frozen)}
-       |SELECT 'fresh_rebuild' AS arm, n_hits, n_expected,
-       |       CAST(n_hits AS DOUBLE) / CAST(n_expected AS DOUBLE) AS recall FROM frecall
-       |UNION ALL
-       |SELECT 'maintained_stale' AS arm, n_hits, n_expected,
-       |       CAST(n_hits AS DOUBLE) / CAST(n_expected AS DOUBLE) AS recall FROM srecall
-       |ORDER BY arm""".stripMargin
-  }
-
-  /** Oracle for q_pq_index_staleness — [[stalenessOracleSql]]'s shape with
-    * the rotated-PQ probe as the replayed mechanism: per arm, projection
-    * under the arm's rotation, per-subspace argmin ENCODING of the whole
-    * (drifted) corpus, the queries' ADC tables, the ADC candidate ranking
-    * with the engine's rescore cutoff, the exact full-dim rescore, and the
-    * recall rollup against the shared brute-force truth. Built at gate
-    * time from both exported models; durable via the [[SpliceStore]]. */
-  private def pqStalenessOracleSql(frozen: graft.operators.Similarity.ReducedPqModel,
-      fresh: graft.operators.Similarity.ReducedPqModel): String = {
-    val dim = frozen.dim
-    val nc = frozen.pcaDims
-    val m = frozen.m
-    val dsub = nc / m
-    require(dim == 64 && fresh.dim == 64 && fresh.pcaDims == nc && fresh.m == m,
-      s"pq staleness oracle is written for one model shape, got $frozen vs $fresh")
-    def modelCtes(p: String, mdl: graft.operators.Similarity.ReducedPqModel): String = {
-      val mLit = "[" + mdl.mean.mkString(", ") + "]::DOUBLE[]"
-      val cLit = "[" + mdl.comps.map(c => "[" + c.mkString(", ") + "]")
-        .mkString(", ") + "]::DOUBLE[][]"
-      val values = (for (j <- mdl.books.indices; c <- mdl.books(j).indices) yield {
-        val w = mdl.books(j)(c)
-        val nsq = w.map(x => x * x).sum
-        s"($j, $c, CAST($nsq AS DOUBLE), [${w.mkString(", ")}]::DOUBLE[])"
-      }).mkString(", ")
-      def coord(t: String) =
-        s"""floor(list_reduce(list_transform(range(1, ${dim + 1}),
-           |        i -> (v.emb[i] - ${p}m.m[i]) * ${p}c.c[$t][i]),
-           |      (x, y) -> x + y) * 1000000.0 + 0.5) / 1000000.0""".stripMargin
-      s"""|${p}m(m) AS (SELECT $mLit), ${p}c(c) AS (SELECT $cLit),
-          |${p}b(j, c, nsq, w) AS (VALUES $values),
-          |${p}cp AS (SELECT v.vec_id,
-          |           list_transform(range(1, ${nc + 1}), t -> ${coord("t")}) AS proj
-          |           FROM corpus v, ${p}m, ${p}c),
-          |${p}subd AS (
-          |  SELECT v.vec_id, b.j, b.c,
-          |         b.nsq - 2.0 * list_reduce(list_transform(range(1, ${dsub + 1}),
-          |           i -> b.w[i] * v.proj[b.j * $dsub + i]), (x, y) -> x + y) AS d
-          |  FROM ${p}cp v CROSS JOIN ${p}b b),
-          |${p}codes AS (
-          |  SELECT vec_id, list(c ORDER BY j) AS codes FROM (
-          |    SELECT vec_id, j, c,
-          |           row_number() OVER (PARTITION BY vec_id, j ORDER BY d, c) AS rn FROM ${p}subd)
-          |  WHERE rn = 1 GROUP BY vec_id),
-          |${p}qadc AS (
-          |  SELECT vec_id AS query_id, list(dl ORDER BY j) AS adc FROM (
-          |    SELECT vec_id, j, list(d ORDER BY c) AS dl FROM ${p}subd
-          |    WHERE vec_id % 5 >= 3 AND vec_id < 25 GROUP BY vec_id, j)
-          |  GROUP BY vec_id),
-          |${p}approx AS (
-          |  SELECT q.query_id, v.vec_id,
-          |         list_reduce(list_transform(range(1, ${m + 1}),
-          |           j -> q.adc[j][v.codes[j] + 1]), (x, y) -> x + y) AS approx
-          |  FROM ${p}codes v CROSS JOIN ${p}qadc q WHERE v.vec_id <> q.query_id),
-          |${p}cand AS (
-          |  SELECT query_id, vec_id FROM (
-          |    SELECT query_id, vec_id,
-          |           row_number() OVER (PARTITION BY query_id ORDER BY approx, vec_id) AS rn
-          |    FROM ${p}approx)
-          |  WHERE rn <= 50),
-          |${p}top AS (
-          |  SELECT query_id, neighbor_id FROM (
-          |    SELECT cd.query_id, cd.vec_id AS neighbor_id,
-          |           row_number() OVER (PARTITION BY cd.query_id
-          |             ORDER BY ${cosD("qq.emb", "ee.emb")} DESC, cd.vec_id) AS rank
-          |    FROM ${p}cand cd JOIN corpus qq ON qq.vec_id = cd.query_id
-          |                     JOIN corpus ee ON ee.vec_id = cd.vec_id)
-          |  WHERE rank <= $TopK),
-          |${p}recall AS (
-          |  SELECT CAST(count(t.query_id) AS BIGINT) AS n_hits,
-          |         CAST(count(*) AS BIGINT) AS n_expected
-          |  FROM exact x LEFT JOIN ${p}top t
-          |    ON t.query_id = x.query_id AND t.neighbor_id = x.neighbor_id)""".stripMargin
-    }
-    s"""WITH corpus AS MATERIALIZED (
-       |  SELECT vec_id,
-       |         CASE WHEN vec_id % 5 >= 3
-       |              THEN list_transform(range(1, ${dim + 1}), i -> CAST(embedding[${dim + 1} - i] AS DOUBLE))
-       |              ELSE list_transform(range(1, ${dim + 1}), i -> CAST(embedding[i] AS DOUBLE)) END AS emb
-       |  FROM embeddings),
-       |exact AS MATERIALIZED (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY q.vec_id
-       |             ORDER BY ${cosD("q.emb", "c.emb")} DESC, c.vec_id) AS rank
-       |    FROM corpus q JOIN corpus c ON c.vec_id <> q.vec_id
-       |    WHERE q.vec_id % 5 >= 3 AND q.vec_id < 25) WHERE rank <= $TopK),
-       |${modelCtes("f", fresh)},
-       |${modelCtes("s", frozen)}
-       |SELECT 'fresh_rebuild' AS arm, n_hits, n_expected,
-       |       CAST(n_hits AS DOUBLE) / CAST(n_expected AS DOUBLE) AS recall FROM frecall
-       |UNION ALL
-       |SELECT 'maintained_stale' AS arm, n_hits, n_expected,
-       |       CAST(n_hits AS DOUBLE) / CAST(n_expected AS DOUBLE) AS recall FROM srecall
-       |ORDER BY arm""".stripMargin
-  }
-
-  /** Exact cosine over DOUBLE[] columns, rounded to 6 — the
-    * [[maintainedReducedOracleSql]] `cosF` on pre-cast arrays. */
-  private def cosD(a: String, b: String): String = {
-    def dot(x: String, y: String) =
-      s"list_reduce(list_transform(range(1, 65), i -> $x[i] * $y[i]), (x, y) -> x + y)"
-    s"round(${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})), 6)"
-  }
-
-  /** x14 oracle, available once the x14 gate lambda has frozen the
-    * ENGINE's q6 PPMI edge table into the [[SpliceStore]] (gate time — no
-    * dump-time re-read of the checkpointed frame, VERDICT r12 #1b; a
-    * filtered Verify run re-emits it from the persisted store). The edges
-    * splice in as a VALUES table, so the gate's one transcendental (`ln`)
-    * is never evaluated twice by two different libm implementations inside
-    * a `floor(x·1e6+0.5)` — the de-flake VERDICT r11 #1 prescribed, the
-    * same exported-model contract as [[d8OracleSql]]'s centroids and
-    * q_ndcg_eval's discount table. The oracle still recomputes its OWN
-    * `ln` edge table (`ppmi_d`) from the exactly-agreed integer counts and
-    * FAILS CLOSED — final select returns zero rows — unless the spliced
-    * edges match it within ±1 micro-unit (the 1-ulp-at-a-floor-boundary
-    * envelope) with identical support (every duck edge of weight ≥ 2 must
-    * be spliced; a true weight of 1 may legitimately floor to 0 on the
-    * engine side and vice versa). The 8 power-iteration rounds run the
-    * identical pure-long floor-div arithmetic on the spliced table. */
-  private def ppmiOracleSql: Map[String, String] =
-    SpliceStore.get("x14_edges").toSeq.map { edges =>
-      val rounds = (1 to 8).map { i =>
-        s"""|y$i AS MATERIALIZED (
-            |  SELECT nodes.v, coalesce(s.y, 0) AS y FROM nodes
-            |  LEFT JOIN (
-            |    SELECT ppmi.v, CAST(sum((ppmi.m * x${i - 1}.x) // 1000000) AS BIGINT) AS y
-            |    FROM ppmi JOIN x${i - 1} ON ppmi.w = x${i - 1}.v GROUP BY ppmi.v) s ON nodes.v = s.v),
-            |x$i AS MATERIALIZED (SELECT v, (y * 1000000) // (SELECT sum(y) FROM y$i) AS x FROM y$i)""".stripMargin
-      }.mkString(",\n")
-      "x14_word_centrality" ->
-        s"""WITH
-           |t AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks FROM documents),
-           |trans AS (
-           |  SELECT toks[i - 1] AS v, toks[i] AS w
-           |  FROM t, unnest(range(2, len(toks) + 1)) AS u(i)),
-           |sym AS (SELECT v, w FROM trans UNION ALL SELECT w, v FROM trans),
-           |cvw AS (SELECT v, w, CAST(count(*) AS BIGINT) AS c FROM sym GROUP BY v, w),
-           |cv AS (SELECT v, CAST(sum(c) AS BIGINT) AS cv FROM cvw GROUP BY v),
-           |nn AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM cvw),
-           |ppmi_d AS (
-           |  SELECT cvw.v, cvw.w,
-           |    greatest(0, CAST(floor(ln((cvw.c::DOUBLE * nn.n::DOUBLE) / (a.cv::DOUBLE * b.cv::DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)) AS md
-           |  FROM cvw JOIN cv a ON cvw.v = a.v JOIN cv b ON cvw.w = b.v, nn),
-           |ppmi_e(v, w, m) AS (VALUES $edges),
-           |chk AS MATERIALIZED (SELECT
-           |  (SELECT count(*) FROM ppmi_e e LEFT JOIN ppmi_d d ON e.v = d.v AND e.w = d.w
-           |     WHERE d.v IS NULL OR abs(e.m - d.md) > 1)
-           |  + (SELECT count(*) FROM ppmi_d d LEFT JOIN ppmi_e e ON e.v = d.v AND e.w = d.w
-           |     WHERE d.md >= 2 AND e.v IS NULL) AS bad),
-           |ppmi AS MATERIALIZED (SELECT v, w, CAST(m AS BIGINT) AS m FROM ppmi_e),
-           |nodes AS MATERIALIZED (SELECT v FROM cv),
-           |vv AS (SELECT CAST(count(*) AS BIGINT) AS nv FROM nodes),
-           |x0 AS MATERIALIZED (SELECT v, 1000000 // vv.nv AS x FROM nodes, vv),
-           $rounds
-           |SELECT CAST(row_number() OVER (ORDER BY x DESC, v) AS BIGINT) AS rank, v AS word, CAST(x AS BIGINT) AS centrality_q6
-           |FROM x8, chk WHERE chk.bad = 0 ORDER BY x DESC, v LIMIT 20""".stripMargin
-    }.toMap
-
-  /** q_doremi_mix oracle, available once the doremi gate lambda has frozen
-    * the EG splice tables into the [[SpliceStore]] (gate time, VERDICT r12
-    * #1b). Two ENGINE tables splice in as VALUES, BOTH pure BIGINT
-    * (VERDICT r14 #1 — no IEEE literal anywhere in the splice, so a
-    * differently-versioned DuckDB in the verification environment has no
-    * DOUBLE-parse surface left to disagree on): the per-round POST-FLOOR
-    * integer weights `u = floor(w·exp(η·excess/1e6)+0.5)` keyed by
-    * (round, source, excess_q6), and the per-source q6 losses (r13, so
-    * the loss rollup's `ln` is never evaluated by two libms). With the u
-    * splice the oracle's whole EG chain is integer end-to-end — the only
-    * live DOUBLEs are inside fail-closed tolerance arms. Both splices
-    * FAIL CLOSED against independent recomputation: the losses must match
-    * DuckDB's own `ln`-derived `persrc` within ±1 q6 with identical
-    * support (`chk`), and each spliced u must sit within ±1 of DuckDB's
-    * own `floor(w·exp(0.5·excess/1e6)+0.5)` (per-round `bad` flags,
-    * summed in the final WHERE — an engine bug in the exp's sign or eta
-    * scaling cannot reproduce on both sides). Each EG round still joins
-    * the trace ON ITS OWN recomputed excess over engine-loss integers, so
-    * a stale or mis-keyed splice drops rows (fail-visible). */
-  private def egOracleSql: Map[String, String] = (for {
-    values <- SpliceStore.get("doremi_trace")
-    lossValues <- SpliceStore.get("doremi_losses")
-  } yield {
-    val rounds = (1 to 8).map { i =>
-      s"""|u$i AS MATERIALIZED (
-          |  SELECT e.src, e.loss_q6, f.u,
-          |    CASE WHEN abs(f.u - CAST(floor(e.w::DOUBLE * exp(0.5 * f.excess_q6 / 1000000.0) + 0.5) AS BIGINT)) > 1
-          |         THEN 1 ELSE 0 END AS bad
-          |  FROM eg${i - 1} e JOIN egtrace f ON f.round = $i AND f.src = e.src
-          |    AND f.excess_q6 = greatest(e.loss_q6 - (SELECT sum(w * loss_q6) // 1000000 FROM eg${i - 1}), 0)),
-          |eg$i AS MATERIALIZED (SELECT src, loss_q6, (u * 1000000) // (SELECT sum(u) FROM u$i) AS w FROM u$i)""".stripMargin
-    }.mkString(",\n")
-    val uBad = (1 to 8).map(i => s"SELECT bad FROM u$i").mkString(" UNION ALL ")
-    "q_doremi_mix" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, source, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-         |  FROM documents),
-         |trans AS (
-         |  SELECT doc_id, toks[i - 1] AS v, toks[i] AS w
-         |  FROM t, unnest(range(2, len(toks) + 1)) AS u(i)),
-         |vocab AS (
-         |  SELECT count(DISTINCT tok)::DOUBLE AS v_size
-         |  FROM (SELECT unnest(toks) AS tok FROM t)),
-         |bigram AS (SELECT v, w, count(*) AS c_vw FROM trans GROUP BY v, w),
-         |ctx AS (SELECT v, count(*) AS c_v FROM trans GROUP BY v),
-         |scored AS (
-         |  SELECT trans.doc_id,
-         |         CAST(floor(-ln((c_vw::DOUBLE + 0.5) / (c_v::DOUBLE + 0.5 * vocab.v_size))
-         |                    * 1000000.0 + 0.5) AS BIGINT) AS nll_q6
-         |  FROM trans JOIN bigram USING (v, w) JOIN ctx USING (v), vocab),
-         |perdoc AS (SELECT doc_id, count(*) AS n_trans, CAST(sum(nll_q6) AS BIGINT) AS s_q6 FROM scored GROUP BY doc_id),
-         |persrc AS MATERIALIZED (
-         |  SELECT t.source AS src, CAST(sum(perdoc.s_q6) AS BIGINT) // CAST(sum(perdoc.n_trans) AS BIGINT) AS loss_q6
-         |  FROM perdoc JOIN t ON perdoc.doc_id = t.doc_id GROUP BY t.source),
-         |engloss(src, loss_q6) AS (VALUES $lossValues),
-         |egtrace(round, src, excess_q6, u) AS (VALUES $values),
-         |chk AS MATERIALIZED (SELECT
-         |  (SELECT count(*) FROM engloss e LEFT JOIN persrc d ON e.src = d.src
-         |     WHERE d.src IS NULL OR abs(e.loss_q6 - d.loss_q6) > 1)
-         |  + (SELECT count(*) FROM persrc d LEFT JOIN engloss e ON e.src = d.src
-         |     WHERE e.src IS NULL) AS bad),
-         |eg0 AS MATERIALIZED (SELECT src, loss_q6, 1000000 // (SELECT count(*) FROM engloss) AS w FROM engloss),
-         $rounds,
-         |a AS (SELECT src, loss_q6, w, (1000000 * w) // 1000000 AS base, (1000000 * w) % 1000000 AS rem FROM eg8),
-         |dd AS (SELECT 1000000 - sum(base) AS deficit, count(*) AS ns FROM a),
-         |r AS (SELECT src, loss_q6, w, base, row_number() OVER (ORDER BY rem DESC, src) AS rk FROM a)
-         |SELECT src AS source, loss_q6, CAST(w AS BIGINT) AS w_q6,
-         |  CAST(base + (SELECT deficit // ns FROM dd) + CASE WHEN rk <= (SELECT deficit % ns FROM dd) THEN 1 ELSE 0 END AS BIGINT) AS target_tokens
-         |FROM r, chk WHERE chk.bad = 0
-         |  AND (SELECT coalesce(sum(bad), 0) FROM ($uBad)) = 0
-         |ORDER BY source""".stripMargin
-  }).toSeq.toMap
-
-  /** q_ppl_buckets oracle, available once the gate lambda has frozen the
-    * engine's per-doc (doc_id, avg_nll_micro) rows into the
-    * [[SpliceStore]] (gate time, from the same checkpointed rows the
-    * returned plan consumes). The tercile machinery amplifies a single
-    * 1-ulp cross-engine `ln` disagreement into a whole language's bucket
-    * labels (ADVICE r14 — the x14/doremi flake class), so the spliced
-    * BIGINT averages drive the replay; the oracle still recomputes its
-    * OWN KN chain and FAILS CLOSED — zero rows — unless every spliced
-    * average sits within ±1 micro of its recomputation with identical
-    * support. Thresholds replay the engine's milli-nat grid
-    * (`k // 1000`, VERDICT r14 #2) over the spliced integers. */
-  private def pplOracleSql: Map[String, String] =
-    SpliceStore.get("ppl_k").toSeq.map { values =>
-      "q_ppl_buckets" ->
-        s"""WITH t AS (
-           |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-           |  FROM documents),
-           |trans AS (
-           |  SELECT doc_id, toks[i - 1] AS v, toks[i] AS w
-           |  FROM t, unnest(range(2, len(toks) + 1)) AS u(i)),
-           |bigram AS (SELECT v, w, count(*) AS c_vw FROM trans GROUP BY v, w),
-           |ctx AS (SELECT v, count(*) AS c_v, count(DISTINCT w) AS n1_v FROM trans GROUP BY v),
-           |cont AS (SELECT w, count(DISTINCT v) AS n1_w FROM trans GROUP BY w),
-           |bt AS (SELECT count(*)::DOUBLE AS btypes FROM bigram),
-           |scored AS (
-           |  SELECT trans.doc_id,
-           |         CAST(floor(-ln((c_vw::DOUBLE - 0.75) / c_v::DOUBLE
-           |                        + (0.75 * n1_v::DOUBLE / c_v::DOUBLE)
-           |                          * (n1_w::DOUBLE / btypes))
-           |                    * 1000000.0 + 0.5) AS BIGINT) AS nll_q6
-           |  FROM trans JOIN bigram USING (v, w) JOIN ctx USING (v) JOIN cont USING (w), bt),
-           |per_doc AS (
-           |  SELECT doc_id, CAST(sum(nll_q6) AS BIGINT) // count(*) AS k
-           |  FROM scored GROUP BY doc_id),
-           |engk(doc_id, k) AS (VALUES $values),
-           |chk AS MATERIALIZED (SELECT
-           |  (SELECT count(*) FROM engk e LEFT JOIN per_doc d ON e.doc_id = d.doc_id
-           |     WHERE d.doc_id IS NULL OR abs(e.k - d.k) > 1)
-           |  + (SELECT count(*) FROM per_doc d LEFT JOIN engk e ON e.doc_id = d.doc_id
-           |     WHERE e.doc_id IS NULL) AS bad),
-           |langd AS (
-           |  SELECT e.doc_id, d.lang, e.k, e.k // 1000 AS kg
-           |  FROM engk e JOIN documents d USING (doc_id)),
-           |hist AS (SELECT lang, kg, count(*) AS c FROM langd GROUP BY 1, 2),
-           |cum AS (
-           |  SELECT lang, kg,
-           |         sum(c) OVER (PARTITION BY lang ORDER BY kg) AS cum,
-           |         sum(c) OVER (PARTITION BY lang) AS tot
-           |  FROM hist),
-           |th AS (
-           |  SELECT lang, min(CASE WHEN cum * 3 >= tot THEN kg END) AS t1,
-           |         min(CASE WHEN cum * 3 >= 2 * tot THEN kg END) AS t2
-           |  FROM cum GROUP BY lang)
-           |SELECT l.doc_id, l.lang, l.k AS avg_nll_micro,
-           |       CASE WHEN l.kg <= t.t1 THEN 'head'
-           |            WHEN l.kg <= t.t2 THEN 'middle' ELSE 'tail' END AS bucket
-           |FROM langd l JOIN th t USING (lang), chk WHERE chk.bad = 0
-           |ORDER BY l.doc_id""".stripMargin
-    }.toMap
-
-  /** Oracle for the rotated-PQ index: needs the exported PCA rotation AND
-    * the rotated-space codebooks ([[graft.operators.Similarity
-    * .lastReducedPq]], its own slot so d9d's full-space model survives).
-    * The SQL replays projection, per-subspace argmin encoding, the
-    * j-ordered ADC fold, and the exact full-dim rescore — the d9d oracle
-    * pattern with the projected coordinates as its vector space. */
-  private def reducedPqOracleSql: Map[String, String] = (for {
-    (dim, nc, _, mean, comps) <- graft.operators.Similarity.lastPca.toSeq
-    (rdim, m, ksub, _, books) <- graft.operators.Similarity.lastReducedPq.toSeq
-    if rdim == nc
-  } yield {
-    val dsub = rdim / m
-    val mLit = "[" + mean.mkString(", ") + "]::DOUBLE[]"
-    val cLit = "[" + comps.map(c => "[" + c.mkString(", ") + "]")
-      .mkString(", ") + "]::DOUBLE[][]"
-    val values = (for (j <- books.indices; c <- books(j).indices) yield {
-      val w = books(j)(c)
-      val nsq = w.map(x => x * x).sum
-      s"($j, $c, CAST($nsq AS DOUBLE), [${w.mkString(", ")}]::DOUBLE[])"
-    }).mkString(", ")
-    def coord(emb: String, t: String) =
-      s"""floor(list_reduce(list_transform(range(1, ${dim + 1}),
-         |        i -> (CAST($emb[i] AS DOUBLE) - mm.m[i]) * cc.c[$t][i]),
-         |      (x, y) -> x + y) * 1000000.0 + 0.5) / 1000000.0""".stripMargin
-    def dotF(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, ${dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)"
-    def cosF(a: String, b: String) =
-      s"round(${dotF(a, b)} / (sqrt(${dotF(a, a)}) * sqrt(${dotF(b, b)})), 6)"
-    Map("d9e_reduced_pq_topk" ->
-      s"""WITH mm(m) AS (SELECT $mLit), cc(c) AS (SELECT $cLit),
-         |books(j, c, nsq, w) AS (VALUES $values),
-         |cp AS (SELECT e.vec_id,
-         |              list_transform(range(1, ${nc + 1}), t -> ${coord("e.embedding", "t")}) AS proj
-         |       FROM embeddings e, mm, cc),
-         |subd AS (
-         |  SELECT v.vec_id, b.j, b.c,
-         |         b.nsq - 2.0 * list_reduce(list_transform(range(1, ${dsub + 1}),
-         |           i -> b.w[i] * v.proj[b.j * $dsub + i]), (x, y) -> x + y) AS d
-         |  FROM cp v CROSS JOIN books b),
-         |codes AS (
-         |  SELECT vec_id, list(c ORDER BY j) AS codes FROM (
-         |    SELECT vec_id, j, c,
-         |           row_number() OVER (PARTITION BY vec_id, j ORDER BY d, c) AS rn FROM subd)
-         |  WHERE rn = 1 GROUP BY vec_id),
-         |qadc AS (
-         |  SELECT vec_id AS query_id, list(dl ORDER BY j) AS adc FROM (
-         |    SELECT vec_id, j, list(d ORDER BY c) AS dl FROM subd
-         |    WHERE vec_id < 10 GROUP BY vec_id, j)
-         |  GROUP BY vec_id),
-         |approx AS (
-         |  SELECT q.query_id, v.vec_id,
-         |         list_reduce(list_transform(range(1, ${m + 1}),
-         |           j -> q.adc[j][v.codes[j] + 1]), (x, y) -> x + y) AS approx
-         |  FROM codes v CROSS JOIN qadc q WHERE v.vec_id <> q.query_id),
-         |cand AS (
-         |  SELECT query_id, vec_id FROM (
-         |    SELECT query_id, vec_id,
-         |           row_number() OVER (PARTITION BY query_id ORDER BY approx, vec_id) AS rn
-         |    FROM approx)
-         |  WHERE rn <= 20),
-         |exact AS (
-         |  SELECT cd.query_id, cd.vec_id AS neighbor_id,
-         |         ${cosF("qq.embedding", "ee.embedding")} AS cos
-         |  FROM cand cd JOIN embeddings qq ON qq.vec_id = cd.query_id
-         |               JOIN embeddings ee ON ee.vec_id = cd.vec_id),
-         |ranked AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM exact)
-         |SELECT query_id, rank, neighbor_id, cos FROM ranked WHERE rank <= $TopK
-         |ORDER BY query_id, rank""".stripMargin,
-
-      "q_reduced_pq_recall" ->
-        s"""WITH mm(m) AS (SELECT $mLit), cc(c) AS (SELECT $cLit),
-           |books(j, c, nsq, w) AS (VALUES $values),
-           |cp AS (SELECT e.vec_id,
-           |              list_transform(range(1, ${nc + 1}), t -> ${coord("e.embedding", "t")}) AS proj
-           |       FROM embeddings e, mm, cc),
-           |subd AS (
-           |  SELECT v.vec_id, b.j, b.c,
-           |         b.nsq - 2.0 * list_reduce(list_transform(range(1, ${dsub + 1}),
-           |           i -> b.w[i] * v.proj[b.j * $dsub + i]), (x, y) -> x + y) AS d
-           |  FROM cp v CROSS JOIN books b),
-           |codes AS (
-           |  SELECT vec_id, list(c ORDER BY j) AS codes FROM (
-           |    SELECT vec_id, j, c,
-           |           row_number() OVER (PARTITION BY vec_id, j ORDER BY d, c) AS rn FROM subd)
-           |  WHERE rn = 1 GROUP BY vec_id),
-           |qadc AS (
-           |  SELECT vec_id AS query_id, list(dl ORDER BY j) AS adc FROM (
-           |    SELECT vec_id, j, list(d ORDER BY c) AS dl FROM subd
-           |    WHERE vec_id < 10 GROUP BY vec_id, j)
-           |  GROUP BY vec_id),
-           |approx AS (
-           |  SELECT q.query_id, v.vec_id,
-           |         list_reduce(list_transform(range(1, ${m + 1}),
-           |           j -> q.adc[j][v.codes[j] + 1]), (x, y) -> x + y) AS approx
-           |  FROM codes v CROSS JOIN qadc q WHERE v.vec_id <> q.query_id),
-           |cand AS (
-           |  SELECT query_id, vec_id FROM (
-           |    SELECT query_id, vec_id,
-           |           row_number() OVER (PARTITION BY query_id ORDER BY approx, vec_id) AS rn
-           |    FROM approx)
-           |  WHERE rn <= 20),
-           |exactr AS (
-           |  SELECT cd.query_id, cd.vec_id AS neighbor_id,
-           |         ${cosF("qq.embedding", "ee.embedding")} AS cos
-           |  FROM cand cd JOIN embeddings qq ON qq.vec_id = cd.query_id
-           |               JOIN embeddings ee ON ee.vec_id = cd.vec_id),
-           |annk AS (SELECT query_id, neighbor_id FROM (
-           |  SELECT query_id, neighbor_id,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-           |  FROM exactr) WHERE rank <= $TopK),
-           |q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-           |fullsc AS (
-           |  SELECT q.query_id, e.vec_id, ${cosF("q.q_emb", "e.embedding")} AS cos
-           |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id),
-           |fullrk AS (SELECT query_id, vec_id FROM (
-           |  SELECT query_id, vec_id,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-           |  FROM fullsc) WHERE rank <= $TopK)
-           |SELECT f.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
-           |       count(a.neighbor_id)::DOUBLE / ${TopK}.0 AS recall
-           |FROM fullrk f LEFT JOIN annk a
-           |  ON a.query_id = f.query_id AND a.neighbor_id = f.vec_id
-           |GROUP BY f.query_id ORDER BY f.query_id""".stripMargin)
-  }).flatten.toMap
-
-  /** Oracles for the composed reduced-dimension index: require BOTH
-    * exported models — [[graft.operators.Similarity.lastPca]] (the
-    * rotation) and [[graft.operators.Similarity.lastReducedIvf]] (the
-    * projected-space coarse quantizer, its own slot so d8's full-space
-    * model survives). The SQL replays projection (q6 coords), assignment
-    * (nsq − 2·w·proj argmin, ties to the lowest index), nprobe probing,
-    * the candidate cell join, and the exact full-dim rescore. */
-  private def reducedIvfOracleSql: Map[String, String] = (for {
-    (dim, nc, _, mean, comps) <- graft.operators.Similarity.lastPca.toSeq
-    (nlist, rdim, _, cents) <- graft.operators.Similarity.lastReducedIvf.toSeq
-    if rdim == nc
-  } yield {
-    val mLit = "[" + mean.mkString(", ") + "]::DOUBLE[]"
-    val cLit = "[" + comps.map(c => "[" + c.mkString(", ") + "]")
-      .mkString(", ") + "]::DOUBLE[][]"
-    val values = cents.zipWithIndex.map { case (w, i) =>
-      val nsq = w.map(x => x * x).sum
-      s"($i, CAST($nsq AS DOUBLE), [${w.mkString(", ")}]::DOUBLE[])"
-    }.mkString(", ")
-    def coord(emb: String, t: String) =
-      s"""floor(list_reduce(list_transform(range(1, ${dim + 1}),
-         |        i -> (CAST($emb[i] AS DOUBLE) - mm.m[i]) * cc.c[$t][i]),
-         |      (x, y) -> x + y) * 1000000.0 + 0.5) / 1000000.0""".stripMargin
-    def dotR(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, ${nc + 1}), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-    def dotF(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, ${dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)"
-    def cosF(a: String, b: String) =
-      s"round(${dotF(a, b)} / (sqrt(${dotF(a, a)}) * sqrt(${dotF(b, b)})), 6)"
-    val shared =
-      s"""WITH mm(m) AS (SELECT $mLit), cc(c) AS (SELECT $cLit),
-         |rcent(c, nsq, w) AS (VALUES $values),
-         |cp AS (SELECT e.vec_id,
-         |              list_transform(range(1, ${nc + 1}), t -> ${coord("e.embedding", "t")}) AS proj
-         |       FROM embeddings e, mm, cc),
-         |dists AS (
-         |  SELECT v.vec_id, rc.c, rc.nsq - 2.0 * ${dotR("rc.w", "v.proj")} AS d
-         |  FROM cp v CROSS JOIN rcent rc),
-         |rankedc AS (SELECT vec_id, c,
-         |                   row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn FROM dists),
-         |assign AS (SELECT vec_id, c AS cell FROM rankedc WHERE rn = 1),
-         |probes AS (SELECT vec_id AS query_id, c AS cell FROM rankedc
-         |           WHERE vec_id < 10 AND rn <= $IvfNprobe),
-         |cands AS (
-         |  SELECT DISTINCT p.query_id, a.vec_id
-         |  FROM probes p JOIN assign a ON a.cell = p.cell AND a.vec_id <> p.query_id),
-         |scored AS (
-         |  SELECT cd.query_id, cd.vec_id, ${cosF("qq.embedding", "ee.embedding")} AS cos
-         |  FROM cands cd JOIN embeddings qq ON qq.vec_id = cd.query_id
-         |                JOIN embeddings ee ON ee.vec_id = cd.vec_id),
-         |ranked AS (
-         |  SELECT query_id, vec_id AS neighbor_id, cos,
-         |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-         |  FROM scored)""".stripMargin
-    Seq(
-      "d22_reduced_ivf_topk" ->
-        s"""$shared
-           |SELECT query_id, rank, neighbor_id, cos FROM ranked WHERE rank <= $TopK
-           |ORDER BY query_id, rank""".stripMargin,
-
-      "q_reduced_ivf_recall" ->
-        s"""$shared,
-           |q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-           |fullsc AS (
-           |  SELECT q.query_id, e.vec_id, ${cosF("q.q_emb", "e.embedding")} AS cos
-           |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id),
-           |fullrk AS (SELECT query_id, vec_id FROM (
-           |  SELECT query_id, vec_id,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-           |  FROM fullsc) WHERE rank <= $TopK),
-           |annk AS (SELECT query_id, neighbor_id FROM ranked WHERE rank <= $TopK)
-           |SELECT f.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
-           |       count(a.neighbor_id)::DOUBLE / ${TopK}.0 AS recall
-           |FROM fullrk f LEFT JOIN annk a
-           |  ON a.query_id = f.query_id AND a.neighbor_id = f.vec_id
-           |GROUP BY f.query_id ORDER BY f.query_id""".stripMargin)
-  }).flatten.toMap
-
-  /** PCA oracles, available after [[graft.operators.Similarity.trainPca]]
-    * has trained (both PCA gates train with identical params; Verify runs
-    * every query before dumping oracle SQL). Mean and components splice as
-    * DOUBLE[] literals — `Double.toString` round-trips — and the SQL
-    * replays centering, the ascending-dimension projection fold, the q6
-    * coordinate rounding, and (for the recall gate) both candidate
-    * rankings operation-for-operation. Training itself is pinned by the
-    * single-node replica in SimilarityPlanSpec, not re-run in SQL. */
-  private def pcaOracleSql: Map[String, String] =
-    graft.operators.Similarity.lastPca.toSeq.flatMap {
-      case (dim, nc, _, mean, comps) =>
-        val mLit = "[" + mean.mkString(", ") + "]::DOUBLE[]"
-        val cLit = "[" + comps.map(c => "[" + c.mkString(", ") + "]")
-          .mkString(", ") + "]::DOUBLE[][]"
-        // q6-rounded projection of `emb` onto component t (1-based):
-        // ascending-dimension fold, 0-init == first-term init exactly
-        def coord(emb: String, t: String) =
-          s"""floor(list_reduce(list_transform(range(1, ${dim + 1}),
-             |        i -> (CAST($emb[i] AS DOUBLE) - mm.m[i]) * cc.c[$t][i]),
-             |      (x, y) -> x + y) * 1000000.0 + 0.5) / 1000000.0""".stripMargin
-        def cos8(a: String, b: String) =
-          s"""round(
-             |  list_reduce(list_transform(range(1, ${nc + 1}), i -> $a[i] * $b[i]), (x, y) -> x + y) /
-             |  (sqrt(list_reduce(list_transform(range(1, ${nc + 1}), i -> $a[i] * $a[i]), (x, y) -> x + y)) *
-             |   sqrt(list_reduce(list_transform(range(1, ${nc + 1}), i -> $b[i] * $b[i]), (x, y) -> x + y))), 6)""".stripMargin
-        def cosSlice(a: String, b: String, d: Int) =
-          s"""round(
-             |  list_reduce(list_transform(range(1, ${d + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y) /
-             |  (sqrt(list_reduce(list_transform(range(1, ${d + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($a[i] AS DOUBLE)), (x, y) -> x + y)) *
-             |   sqrt(list_reduce(list_transform(range(1, ${d + 1}), i -> CAST($b[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y))), 6)""".stripMargin
-        Seq(
-        "q_pca_project" ->
-          s"""WITH mm(m) AS (SELECT $mLit), cc(c) AS (SELECT $cLit)
-             |SELECT e.vec_id, t AS pc, ${coord("e.embedding", "t")} AS coord
-             |FROM embeddings e, mm, cc, unnest(range(1, ${nc + 1})) AS u(t)
-             |ORDER BY vec_id, pc""".stripMargin,
-
-        "q_pca_recall" ->
-          s"""WITH mm(m) AS (SELECT $mLit), cc(c) AS (SELECT $cLit),
-             |q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-             |fullsc AS (
-             |  SELECT q.query_id, e.vec_id, ${cosSlice("q.q_emb", "e.embedding", dim)} AS cos
-             |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id),
-             |fullrk AS (SELECT query_id, vec_id FROM (
-             |  SELECT query_id, vec_id,
-             |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-             |  FROM fullsc) WHERE rank <= $TopK),
-             |psc AS (
-             |  SELECT q.query_id, e.vec_id, ${cosSlice("q.q_emb", "e.embedding", nc)} AS cos
-             |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id),
-             |prk AS (SELECT query_id, vec_id FROM (
-             |  SELECT query_id, vec_id,
-             |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-             |  FROM psc) WHERE rank <= $TopK),
-             |cp AS (SELECT e.vec_id,
-             |              list_transform(range(1, ${nc + 1}), t -> ${coord("e.embedding", "t")}) AS proj
-             |       FROM embeddings e, mm, cc),
-             |qp AS (SELECT q.query_id,
-             |              list_transform(range(1, ${nc + 1}), t -> ${coord("q.q_emb", "t")}) AS q_proj
-             |       FROM q, mm, cc),
-             |pcasc AS (
-             |  SELECT qp.query_id, cp.vec_id, ${cos8("qp.q_proj", "cp.proj")} AS cos
-             |  FROM cp CROSS JOIN qp WHERE cp.vec_id <> qp.query_id),
-             |pcark AS (SELECT query_id, vec_id FROM (
-             |  SELECT query_id, vec_id,
-             |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-             |  FROM pcasc) WHERE rank <= $TopK),
-             |lab AS (SELECT 'prefix' AS method, query_id, vec_id FROM prk
-             |        UNION ALL SELECT 'pca' AS method, query_id, vec_id FROM pcark),
-             |tot AS (SELECT method, CAST(count(*) AS BIGINT) AS n_ranked FROM lab GROUP BY 1),
-             |hit AS (SELECT l.method, CAST(count(*) AS BIGINT) AS n_hits FROM lab l
-             |        WHERE EXISTS (SELECT 1 FROM fullrk f
-             |                      WHERE f.query_id = l.query_id AND f.vec_id = l.vec_id)
-             |        GROUP BY 1)
-             |SELECT tot.method, tot.n_ranked, COALESCE(hit.n_hits, 0) AS n_hits,
-             |       floor(COALESCE(hit.n_hits, 0)::DOUBLE / tot.n_ranked::DOUBLE * 10000.0 + 0.5) / 10000.0 AS recall
-             |FROM tot LEFT JOIN hit USING (method) ORDER BY method""".stripMargin)
-    }.toMap
-
-  /** x12 oracle, available after [[graft.operators.TextOps.qualityLrScore]]
-    * has trained (Verify runs every query before dumping oracle SQL). The
-    * weights splice as literals — `Double.toString` round-trips, so DuckDB
-    * parses back identical doubles — and the SQL replays feature build and
-    * scoring operation-for-operation: the same md5 bucket parse, the same
-    * (c/n)·scale feature, the same zero-init ascending fold for z (Spark's
-    * `aggregate` == `list_reduce` after the exact 0+x₀=x₀ first step), the
-    * same q6 fixing. Training itself is pinned by the single-node replica
-    * in OperatorsSpec, not re-run in SQL. */
-  private def lrOracleSql: Map[String, String] =
-    graft.operators.TextOps.lastQualityLr.toSeq.flatMap {
-      case (buckets, _, _, scale, thr, w) =>
-        val wLit = "[" + w.mkString(", ") + "]::DOUBLE[]"
-        val stopList = graft.operators.TextOps.DefaultStopwords
-          .map(s => s"'$s'").mkString(", ")
-        // shared scoring prefix: features + the canonical fold → per-doc z
-        val scoringCtes =
-          s"""w(wv) AS (SELECT $wLit),
-             |t AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM documents),
-             |base AS (SELECT doc_id, ws, len(ws) AS n FROM t WHERE len(ws) > 0),
-             |tok AS (SELECT doc_id, unnest(ws) AS tok FROM base),
-             |bc AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 2))::BIGINT % $buckets AS b,
-             |              count(*) AS c
-             |       FROM tok GROUP BY 1, 2),
-             |xs AS (SELECT bc.doc_id, base.n,
-             |              list(struct_pack(b := bc.b, c := bc.c) ORDER BY bc.b) AS ps
-             |       FROM bc JOIN base USING (doc_id) GROUP BY bc.doc_id, base.n),
-             |-- [bias product] ++ ascending-bucket SPARSE fold == the Spark
-             |-- side's dense ascending fold over [w₀·1, w₁·x₁, …]: the
-             |-- skipped terms are w·0 products, which never change an IEEE
-             |-- accumulator's value (only, at most, the sign of a zero)
-             |sc AS (SELECT xs.doc_id,
-             |              list_reduce(
-             |                [wv[1] * 1.0] || list_transform(xs.ps,
-             |                  p -> wv[p.b + 2] * (p.c::DOUBLE / xs.n::DOUBLE * $scale)),
-             |                (a, b) -> a + b) AS z
-             |       FROM xs, w)""".stripMargin
-        Seq(
-        // the composed target-domain selection: quality filter (z ≥ 0) →
-        // DSIR retrained over the kept subset → md5 hash split
-        "e2e_quality_dsir_select" ->
-          s"""WITH $scoringCtes,
-             |kept AS (SELECT doc_id FROM sc WHERE z >= 0),
-             |td AS (SELECT d.doc_id, d.lang,
-             |              list_filter(string_split(d.text, ' '), x -> x <> '') AS toks
-             |       FROM documents d JOIN kept USING (doc_id)),
-             |tr AS (SELECT doc_id, lang, toks[i - 1] || ' ' || toks[i] AS bg
-             |       FROM td, unnest(range(2, len(toks) + 1)) AS u(i)),
-             |f AS (SELECT doc_id, lang, ('0x' || substr(md5(bg), 1, 2))::BIGINT % 256 AS f FROM tr),
-             |raw AS (SELECT f, count(*) AS cr FROM f GROUP BY f),
-             |tgt AS (SELECT f, count(*) AS ct FROM f WHERE lang = 'en' GROUP BY f),
-             |tab AS (SELECT raw.f, raw.cr, COALESCE(tgt.ct, 0) AS ct FROM raw LEFT JOIN tgt USING (f)),
-             |tot AS (SELECT sum(cr) AS totr, sum(ct) AS tott FROM tab),
-             |lam AS (
-             |  SELECT f, CAST(floor(ln(
-             |           ((ct::DOUBLE + 0.5) / (tott::DOUBLE + 128.0)) /
-             |           ((cr::DOUBLE + 0.5) / (totr::DOUBLE + 128.0))) * 1000000.0 + 0.5) AS BIGINT) AS lam_q6
-             |  FROM tab, tot),
-             |wts AS (
-             |  SELECT f.doc_id, CAST(count(*) AS BIGINT) AS n_trans,
-             |         CAST(sum(lam.lam_q6) AS BIGINT) AS w_q6
-             |  FROM f JOIN lam USING (f) GROUP BY f.doc_id),
-             |g AS (
-             |  SELECT doc_id, n_trans, w_q6,
-             |         w_q6 + CAST(floor(-ln(-ln(
-             |           (('0x' || substr(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT::DOUBLE + 0.5)
-             |           / 4503599627370496.0)) * 1000000.0 + 0.5) AS BIGINT) AS g_q6
-             |  FROM wts),
-             |sel AS (SELECT doc_id, w_q6, g_q6 FROM g ORDER BY g_q6 DESC, doc_id LIMIT 100)
-             |SELECT CAST(row_number() OVER (ORDER BY g_q6 DESC, doc_id) AS INT) AS rank,
-             |       doc_id, w_q6, g_q6,
-             |       CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-             |FROM (SELECT *, ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS b
-             |      FROM sel)
-             |ORDER BY rank""".stripMargin,
-
-        "x12_lr_quality" ->
-          s"""WITH $scoringCtes,
-             |lab AS (SELECT doc_id,
-             |               CASE WHEN len(list_filter(ws, t -> t IN ($stopList)))::DOUBLE
-             |                         / n::DOUBLE >= $thr THEN 1 ELSE 0 END AS label
-             |        FROM base)
-             |SELECT sc.doc_id, CAST(lab.label AS INT) AS label,
-             |       CAST(floor(sc.z * 1000000.0 + 0.5) AS BIGINT) AS z_q6,
-             |       floor(1.0 / (1.0 + exp(-sc.z)) * 10000.0 + 0.5) / 10000.0 AS score,
-             |       sc.z >= 0 AS pred
-             |FROM sc JOIN lab USING (doc_id) ORDER BY sc.doc_id""".stripMargin,
-
-        // operating-point sweep over the same scores/labels: exact integer
-        // confusion counts per q6 threshold; P/R/F1 are single IEEE
-        // divisions from those integers, round4'd identically
-        "q_lr_pr_curve" ->
-          s"""WITH $scoringCtes,
-             |lab AS (SELECT doc_id,
-             |               CASE WHEN len(list_filter(ws, t -> t IN ($stopList)))::DOUBLE
-             |                         / n::DOUBLE >= $thr THEN 1 ELSE 0 END AS label
-             |        FROM base),
-             |scored AS (SELECT lab.label, CAST(floor(sc.z * 1000000.0 + 0.5) AS BIGINT) AS z_q6
-             |           FROM sc JOIN lab USING (doc_id)),
-             |thr AS (SELECT CAST(unnest([-2000000, -1000000, -500000, 0, 500000, 1000000, 2000000]) AS BIGINT) AS thr_q6),
-             |cells AS (
-             |  SELECT thr_q6,
-             |    CAST(sum(CASE WHEN z_q6 >= thr_q6 AND label = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-             |    CAST(sum(CASE WHEN z_q6 >= thr_q6 AND label = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-             |    CAST(sum(CASE WHEN z_q6 < thr_q6 AND label = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-             |    CAST(sum(CASE WHEN z_q6 < thr_q6 AND label = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn
-             |  FROM scored, thr GROUP BY thr_q6)
-             |SELECT thr_q6, tp, fp, fn, tn,
-             |  CASE WHEN tp + fp = 0 THEN NULL
-             |       ELSE floor(tp::DOUBLE / (tp + fp)::DOUBLE * 10000.0 + 0.5) / 10000.0 END AS prec4,
-             |  CASE WHEN tp + fn = 0 THEN NULL
-             |       ELSE floor(tp::DOUBLE / (tp + fn)::DOUBLE * 10000.0 + 0.5) / 10000.0 END AS rec4,
-             |  CASE WHEN 2 * tp + fp + fn = 0 THEN NULL
-             |       ELSE floor(2.0 * tp::DOUBLE / (2 * tp + fp + fn)::DOUBLE * 10000.0 + 0.5) / 10000.0 END AS f14
-             |FROM cells ORDER BY thr_q6""".stripMargin)
-    }.toMap
 
   /** Base dir for every model/generator parquet a DuckDB oracle reads by
     * absolute path. [[Verify]] points this at `<outDir>/_models` BEFORE
@@ -4947,7 +3978,7 @@ object SparkEntry {
   /** Where the s3 gate materialized its generator output (set when the gate
     * runs; Verify processes one dataset per JVM, same contract as
     * [[graft.operators.Similarity.lastIvfCentroids]]). */
-  @volatile private var lastS3InputPath: Option[String] = None
+  @volatile private[graft] var lastS3InputPath: Option[String] = None
 
   /** Merge budget of the x13 BPE training gate (shared by gate + specs). */
   val X13NumMerges = 150
@@ -4957,7 +3988,7 @@ object SparkEntry {
     * introspection). Path contract: [[modelExportPath]] (sf stays in the
     * name, so the bench's cross-sf scaling rerun retrains at the small sf
     * rather than silently applying the big-sf model). */
-  @volatile private var lastX13ModelPath: Option[String] = None
+  @volatile private[graft] var lastX13ModelPath: Option[String] = None
   @volatile private[graft] var lastX13Merges: Option[Seq[(String, String)]] = None
 
   /** Train-once-per-(JVM, sf) BPE model export shared by the x13 gate and
@@ -4983,7 +4014,7 @@ object SparkEntry {
 
   /** Where the x21 gate exported its trained unigram word model, plus the
     * piece table and likelihood trace for spec introspection. */
-  @volatile private var lastX21ModelPath: Option[String] = None
+  @volatile private[graft] var lastX21ModelPath: Option[String] = None
   @volatile private[graft] var lastX21Trace: Option[Seq[Double]] = None
 
   /** Train-once-per-(JVM, sf) unigram-LM model export (the
@@ -5008,7 +4039,7 @@ object SparkEntry {
     * ONLY, so the held-out fifth genuinely contains unseen words. Same
     * per-(JVM, sf) export contract as [[ensureBpeModel]] (its sweep covers
     * both path families). */
-  @volatile private var lastX13SplitModelPath: Option[String] = None
+  @volatile private[graft] var lastX13SplitModelPath: Option[String] = None
   private def ensureBpeModelSplit(s: SparkSession, d: String): String = {
     val path = modelExportPath("x13_bpe_model", d, suffix = "split")
     if (!lastX13SplitModelPath.contains(path)) {
@@ -5027,7 +4058,7 @@ object SparkEntry {
   /** Train-once-per-(JVM, sf) size-curve export: the x13 merges applied at
     * every budget in [[BpeCurveGrid]] over the word-frequency table — same
     * pid+sf path contract and dead-JVM sweep as [[ensureBpeModel]]. */
-  @volatile private var lastBpeCurvePath: Option[String] = None
+  @volatile private[graft] var lastBpeCurvePath: Option[String] = None
   private def ensureBpeCurveModel(s: SparkSession, d: String): String = {
     val path = modelExportPath("bpe_curve", d)
     if (!lastBpeCurvePath.contains(path)) {
@@ -5049,7 +4080,7 @@ object SparkEntry {
     * re-derives every greedy step from raw embeddings using only the
     * EARLIER-ranked rows of this export as the prior set, so the export is
     * an induction hypothesis, not a trusted answer. */
-  @volatile private var lastKCenterPath: Option[String] = None
+  @volatile private[graft] var lastKCenterPath: Option[String] = None
   private def ensureKCenterModel(s: SparkSession, d: String): String = {
     val path = modelExportPath("kcenter", d)
     if (!lastKCenterPath.contains(path)) {
@@ -5062,49 +4093,13 @@ object SparkEntry {
     path
   }
 
-  /** k-center coreset oracle: for every rank r ≥ 1, DuckDB recomputes ALL
-    * vectors' min squared L2 to the export's ranks < r (raw embeddings,
-    * same ascending-dimension fold as [[graft.operators.Similarity.dist2]])
-    * and takes the (max dist², min id) winner — an independent inductive
-    * re-derivation of each greedy step; rank 0 is pinned to the minimum
-    * id. A hash match proves the whole selection. */
-  private def kCenterOracleSql: Map[String, String] =
-    lastKCenterPath.toSeq.map { path =>
-      "q_coreset_select" ->
-        s"""WITH sel AS (SELECT rank, vec_id FROM read_parquet('$path')),
-           |e AS (SELECT vec_id, embedding FROM embeddings),
-           |d AS (
-           |  SELECT s.rank AS srank, x.vec_id,
-           |    list_reduce(list_transform(range(1, 65),
-           |      i -> (CAST(x.embedding[i] AS DOUBLE) - CAST(se.embedding[i] AS DOUBLE))
-           |           * (CAST(x.embedding[i] AS DOUBLE) - CAST(se.embedding[i] AS DOUBLE))),
-           |      (a, b) -> a + b) AS d2
-           |  FROM sel s JOIN e se ON s.vec_id = se.vec_id CROSS JOIN e x),
-           |md AS (
-           |  SELECT r.rank, d.vec_id, min(d.d2) AS mind2
-           |  FROM (SELECT rank FROM sel WHERE rank >= 1) r
-           |  JOIN d ON d.srank < r.rank
-           |  GROUP BY r.rank, d.vec_id),
-           |win AS (
-           |  SELECT rank, vec_id, mind2,
-           |         row_number() OVER (PARTITION BY rank ORDER BY mind2 DESC, vec_id) AS rn
-           |  FROM md)
-           |SELECT CAST(0 AS INT) AS rank, (SELECT min(vec_id) FROM e) AS vec_id,
-           |       0.0 AS dist2
-           |UNION ALL
-           |SELECT CAST(rank AS INT) AS rank, vec_id,
-           |       floor(mind2 * 10000.0 + 0.5) / 10000.0 AS dist2
-           |FROM win WHERE rn = 1
-           |ORDER BY rank""".stripMargin
-    }.toMap
-
   /** MM iteration count of the Bradley–Terry gate (shared with specs). */
   val BtIters = 50
 
   /** Train-once-per-(JVM, sf) Bradley–Terry ratings export shared by the
     * q_bt_ratings gate and its DuckDB oracle — same pid+sf path contract
     * and dead-JVM sweep as [[ensureBpeModel]]. */
-  @volatile private var lastBtModelPath: Option[String] = None
+  @volatile private[graft] var lastBtModelPath: Option[String] = None
   /** Per-(JVM, sf-dir) cache of the trained quality-LR model: the FIRST
     * gate needing it trains (and records the export for the oracles); every
     * later gate — and every later RUN of the same gate in a bench sweep —
@@ -5140,815 +4135,12 @@ object SparkEntry {
     path
   }
 
-  /** Bradley–Terry oracle: DuckDB re-derives every comparison (same window
-    * lag, same value/tie rules over the same doubles), re-aggregates wins
-    * and losses per item, and joins the exported trained rating — so the
-    * hash gate proves the full derivation path while the MM training
-    * itself is pinned by PreferenceSpec's closed-form tests. */
-  private def btOracleSql: Map[String, String] =
-    lastBtModelPath.toSeq.map { path =>
-      "q_bt_ratings" ->
-        s"""WITH e AS (SELECT event_id, user_id, epoch_ns(ts)//1000 AS ts_us,
-           |                  event_type, value FROM events),
-           |p AS (SELECT user_id, event_type AS item, value,
-           |        lag(event_type) OVER w AS prev_item,
-           |        lag(value) OVER w AS prev_value
-           |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-           |c AS (SELECT CASE WHEN value > prev_value THEN item
-           |                  WHEN value < prev_value THEN prev_item
-           |                  ELSE least(item, prev_item) END AS winner,
-           |             CASE WHEN value > prev_value THEN prev_item
-           |                  WHEN value < prev_value THEN item
-           |                  ELSE greatest(item, prev_item) END AS loser
-           |      FROM p WHERE prev_item IS NOT NULL AND prev_item <> item),
-           |m AS (SELECT winner, loser, CAST(count(*) AS BIGINT) AS n FROM c GROUP BY 1, 2),
-           |w AS (SELECT winner AS item, CAST(sum(n) AS BIGINT) AS wins FROM m GROUP BY 1),
-           |l AS (SELECT loser AS item, CAST(sum(n) AS BIGINT) AS losses FROM m GROUP BY 1),
-           |r AS (SELECT item, rating FROM read_parquet('$path'))
-           |SELECT r.item,
-           |       COALESCE(w.wins, 0) AS wins,
-           |       COALESCE(l.losses, 0) AS losses,
-           |       COALESCE(w.wins, 0) + COALESCE(l.losses, 0) AS n_comparisons,
-           |       floor(r.rating * 10000.0 + 0.5) / 10000.0 AS rating
-           |FROM r LEFT JOIN w USING (item) LEFT JOIN l USING (item)
-           |ORDER BY item""".stripMargin
-    }.toMap ++ lastBtModelPath.toSeq.map { path =>
-      // the pair table: same comparison CTE chain, ratings joined twice
-      // from the same export, identical IEEE op order on the annotations
-      "q_preference_pairs" ->
-        s"""WITH e AS (SELECT event_id, user_id, epoch_ns(ts)//1000 AS ts_us,
-           |                  event_type, value FROM events),
-           |p AS (SELECT user_id, event_type AS item, value,
-           |        lag(event_type) OVER w AS prev_item,
-           |        lag(value) OVER w AS prev_value
-           |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-           |c AS (SELECT CASE WHEN value > prev_value THEN item
-           |                  WHEN value < prev_value THEN prev_item
-           |                  ELSE least(item, prev_item) END AS winner,
-           |             CASE WHEN value > prev_value THEN prev_item
-           |                  WHEN value < prev_value THEN item
-           |                  ELSE greatest(item, prev_item) END AS loser
-           |      FROM p WHERE prev_item IS NOT NULL AND prev_item <> item),
-           |m AS (SELECT winner, loser, CAST(count(*) AS BIGINT) AS n FROM c GROUP BY 1, 2),
-           |r AS (SELECT item, rating FROM read_parquet('$path'))
-           |SELECT m.winner, m.loser, m.n AS n_comparisons,
-           |       floor(rw.rating / (rw.rating + rl.rating) * 10000.0 + 0.5) / 10000.0 AS p_win_expected,
-           |       floor((rw.rating - rl.rating) * 10000.0 + 0.5) / 10000.0 AS rating_margin
-           |FROM m JOIN r rw ON m.winner = rw.item JOIN r rl ON m.loser = rl.item
-           |ORDER BY winner, loser""".stripMargin
-    }.toMap
-
-  /** Tokenization oracle over the x13 gate's exported model: DuckDB
-    * re-derives every document's pre-tokens with the SAME RE2-compatible
-    * pattern the Spark side used (the x6 parity trick) and replays the
-    * token count by joining the exported (word, n_tokens) parquet — so a
-    * hash match proves the trained model covers the corpus vocabulary and
-    * the apply path agrees with it. DuckDB's sum(BIGINT) widens to
-    * HUGEINT, hence the explicit casts. */
-  private def x13OracleSql: Map[String, String] = {
-    val p = graft.operators.TextOps.BpePretokenPattern.replace("'", "''")
-    // held-out OOV replay (keyed off its OWN split-trained model): same
-    // pre-tokenizer, LEFT join so unseen words count as misses; the OOV
-    // fraction uses the shared round4 fixed-point formula
-    val oov = lastX13SplitModelPath.toSeq.map { sp =>
-      "q_tokenizer_oov" ->
-        s"""WITH w AS (
-           |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '$p')) AS word
-           |  FROM documents WHERE doc_id % 5 = 0),
-           |m AS (SELECT word, n_tokens FROM read_parquet('$sp')),
-           |a AS (SELECT w.doc_id,
-           |             CAST(count(*) AS BIGINT) AS n_pretokens,
-           |             CAST(count(CASE WHEN m.n_tokens IS NULL THEN 1 END) AS BIGINT) AS n_oov,
-           |             CAST(COALESCE(sum(m.n_tokens), 0) AS BIGINT) AS n_invocab_tokens
-           |      FROM w LEFT JOIN m USING (word) GROUP BY w.doc_id)
-           |SELECT doc_id, n_pretokens, n_oov, n_invocab_tokens,
-           |       floor(n_oov::DOUBLE / n_pretokens::DOUBLE * 10000.0 + 0.5) / 10000.0 AS oov_frac
-           |FROM a ORDER BY doc_id""".stripMargin
-    }
-    // the unigram gate's replay: the SAME pre-tokenizer and model-join
-    // as x13's, against the x21 export (shared schema by design)
-    val unigram = lastX21ModelPath.toSeq.map { up =>
-      "x21_unigram_train" ->
-        s"""WITH w AS (
-           |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '$p')) AS word
-           |  FROM documents),
-           |m AS (SELECT word, n_tokens FROM read_parquet('$up'))
-           |SELECT w.doc_id, CAST(count(*) AS BIGINT) AS n_pretokens,
-           |       CAST(sum(m.n_tokens) AS BIGINT) AS n_unigram_tokens
-           |FROM w JOIN m USING (word)
-           |GROUP BY w.doc_id ORDER BY w.doc_id""".stripMargin
-    }
-    // the side-by-side replay needs BOTH exports: one pre-token unnest,
-    // both model joins, per-source sums and the shared round4 ratios
-    val compare = for (bp <- lastX13ModelPath.toSeq; up <- lastX21ModelPath.toSeq)
-      yield "q_tokenizer_compare" ->
-        s"""WITH w AS (
-           |  SELECT source, unnest(regexp_extract_all(lower(text), '$p')) AS word
-           |  FROM documents),
-           |mb AS (SELECT word, n_tokens AS bpe FROM read_parquet('$bp')),
-           |mu AS (SELECT word, n_tokens AS uni FROM read_parquet('$up')),
-           |a AS (SELECT w.source, CAST(count(*) AS BIGINT) AS n_pretokens,
-           |             CAST(sum(mb.bpe) AS BIGINT) AS n_bpe_tokens,
-           |             CAST(sum(mu.uni) AS BIGINT) AS n_unigram_tokens
-           |      FROM w JOIN mb USING (word) JOIN mu USING (word)
-           |      GROUP BY w.source)
-           |SELECT source, n_pretokens, n_bpe_tokens, n_unigram_tokens,
-           |       floor(n_bpe_tokens::DOUBLE / n_pretokens::DOUBLE * 10000.0 + 0.5) / 10000.0 AS bpe_fertility,
-           |       floor(n_unigram_tokens::DOUBLE / n_pretokens::DOUBLE * 10000.0 + 0.5) / 10000.0 AS unigram_fertility
-           |FROM a ORDER BY source""".stripMargin
-    (oov ++ unigram ++ compare ++ lastX13ModelPath.toSeq.flatMap { path =>
-    Seq(
-      "x13_bpe_train" ->
-        s"""WITH w AS (
-           |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '$p')) AS word
-           |  FROM documents),
-           |m AS (SELECT word, n_tokens FROM read_parquet('$path'))
-           |SELECT w.doc_id, CAST(count(*) AS BIGINT) AS n_pretokens,
-           |       CAST(sum(m.n_tokens) AS BIGINT) AS n_bpe_tokens
-           |FROM w JOIN m USING (word)
-           |GROUP BY w.doc_id ORDER BY w.doc_id""".stripMargin,
-
-      // per-source fertility from the same exported model: identical
-      // pre-tokenizer + model join, aggregates at source cardinality;
-      // the ratios use the round4 fixed-point formula (floor(x·10⁴+0.5))
-      // both engines compute with the same IEEE ops
-      "q_tokenizer_fertility" ->
-        s"""WITH w AS (
-           |  SELECT source, unnest(regexp_extract_all(lower(text), '$p')) AS word
-           |  FROM documents),
-           |m AS (SELECT word, n_tokens FROM read_parquet('$path')),
-           |a AS (SELECT w.source,
-           |             CAST(sum(m.n_tokens) AS BIGINT) AS n_bpe_tokens,
-           |             CAST(sum(length(w.word)) AS BIGINT) AS n_pretoken_chars,
-           |             CAST(count(*) AS BIGINT) AS n_pretokens
-           |      FROM w JOIN m USING (word) GROUP BY w.source)
-           |SELECT source, n_bpe_tokens, n_pretoken_chars, n_pretokens,
-           |       floor(n_bpe_tokens::DOUBLE / n_pretokens::DOUBLE * 10000.0 + 0.5) / 10000.0 AS fertility,
-           |       floor(n_pretoken_chars::DOUBLE / n_bpe_tokens::DOUBLE * 10000.0 + 0.5) / 10000.0 AS chars_per_token
-           |FROM a ORDER BY source""".stripMargin,
-
-      // the trained-token vocabulary replayed from the same exported
-      // model: token frequency = Σ word freq × multiplicity (unnest the
-      // per-word token arrays), then the q_vocab_coverage prefix rule
-      // (exclusive running sum, all-integer 95% ceiling) over learned
-      // tokens instead of whitespace words
-      "e2e_tokenizer_vocab" ->
-        s"""WITH tok AS (
-           |  SELECT unnest(tokens) AS token, freq
-           |  FROM read_parquet('$path')),
-           |c AS (SELECT token, CAST(sum(freq) AS BIGINT) AS cnt FROM tok GROUP BY token),
-           |p AS (SELECT token, cnt,
-           |             CAST(COALESCE(sum(cnt) OVER (ORDER BY cnt DESC, token
-           |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-           |      FROM c),
-           |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM c)
-           |SELECT token, cnt, cum_before FROM p, t
-           |WHERE cum_before < (95 * total + 99) // 100
-           |ORDER BY cnt DESC, token""".stripMargin)
-    }).toMap ++ lastBpeCurvePath.toSeq.map { cp =>
-      // size-selection curve: corpus words re-derived with the same
-      // pre-tokenizer, aggregated at vocab cardinality, joined against the
-      // exported (word, k, n_tokens) grid — a hash match proves corpus
-      // coverage and the per-budget aggregation; the segmentation itself
-      // is pinned by BpeTrainSpec's prefix-stability test
-      "q_tokenizer_size_curve" ->
-        s"""WITH w AS (
-           |  SELECT unnest(regexp_extract_all(lower(text), '$p')) AS word FROM documents),
-           |c AS (SELECT word, CAST(count(*) AS BIGINT) AS c FROM w GROUP BY 1),
-           |m AS (SELECT word, k, n_tokens FROM read_parquet('$cp'))
-           |SELECT m.k, CAST(count(*) AS BIGINT) AS n_words,
-           |       CAST(sum(c.c) AS BIGINT) AS n_pretokens,
-           |       CAST(sum(c.c * m.n_tokens) AS BIGINT) AS total_tokens,
-           |       floor(sum(c.c * m.n_tokens)::DOUBLE / sum(c.c)::DOUBLE * 10000.0 + 0.5) / 10000.0 AS fertility
-           |FROM c JOIN m USING (word) GROUP BY m.k ORDER BY k""".stripMargin
-    }.toMap
-  }
-
-  /** Frequency-ranking oracle over the s3 gate's materialized generator
-    * output: DuckDB reads the exact parquet the Spark aggregation read, so
-    * the hash compare checks the groupBy/ordering/limit semantics — the
-    * generator's distribution is separately golden-pinned in
-    * SyntheticSourceSpec. */
-  private def s3OracleSql: Map[String, String] = lastS3InputPath.toSeq.map { path =>
-    "s3_zipf_freq" ->
-      s"""SELECT "key", cnt FROM (
-         |  SELECT "key", count(*) AS cnt
-         |  FROM read_parquet('$path')
-         |  GROUP BY "key" ORDER BY cnt DESC, "key" LIMIT 50)
-         |ORDER BY cnt DESC, "key"""".stripMargin
-  }.toMap
-
-  /** IVF oracle, available after [[Similarity.trainIvfCentroids]] has run
-    * (Verify runs every query before dumping oracle SQL, so the dump always
-    * includes it). The VALUES table carries, per centroid: its index, its
-    * norm-squared EXACTLY as the Spark plan embeds it (`ctr.map(x*x).sum`
-    * spliced as a literal — `Double.toString` round-trips, so DuckDB parses
-    * back the identical double), and its weights. Distance, argmin
-    * assignment (ties to lowest index, matching the struct ordering of
-    * `centroidDists`), nprobe probing, candidate join, exact cosine, and
-    * row_number ranking all mirror [[Similarity.ivfTopK]] operation by
-    * operation; folds are ordered `list_reduce` == the native dot loop. */
-  private def d8OracleSql: Map[String, String] =
-    Similarity.lastIvfCentroids.toSeq.flatMap {
-      case (nlist, dim, seed, _) if nlist != 16 || dim != 64 || seed != 42L =>
-        // some other training overwrote the slot since the d8/d9c queries
-        // ran — omit the oracle (driver falls back to rows-only) rather
-        // than dump centroids that don't match the query's model
-        Nil
-      case (_, _, _, cs) =>
-      val values = cs.zipWithIndex.map { case (w, i) =>
-        val nsq = w.map(x => x * x).sum
-        s"($i, CAST($nsq AS DOUBLE), [${w.mkString(", ")}]::DOUBLE[])"
-      }.mkString(", ")
-      def dotq(a: String, b: String) =
-        s"list_reduce(list_transform(range(1, 65), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-      def cosq(a: String, b: String) =
-        s"${dotq(a, b)} / (sqrt(${dotq(a, a)}) * sqrt(${dotq(b, b)}))"
-      // shared prefix: centroid table, assignment (argmin, ties to lowest
-      // index), nprobe probing, distinct candidate pairs
-      val candCtes =
-        s"""WITH centroids(c, nsq, w) AS (VALUES $values),
-           |corp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-           |dists AS (
-           |  SELECT v.vec_id, ct.c,
-           |         ct.nsq - 2.0 * ${dotq("ct.w", "v.emb")} AS d
-           |  FROM corp v CROSS JOIN centroids ct),
-           |ranked_cells AS (
-           |  SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn FROM dists),
-           |assign AS (SELECT vec_id, c AS cell FROM ranked_cells WHERE rn = 1),
-           |probes AS (SELECT vec_id AS query_id, c AS cell FROM ranked_cells
-           |           WHERE vec_id < 10 AND rn <= $IvfNprobe),
-           |cands AS (
-           |  SELECT DISTINCT p.query_id, a.vec_id
-           |  FROM probes p JOIN assign a ON a.cell = p.cell AND a.vec_id <> p.query_id)""".stripMargin
-      Seq(
-        // nearest-centroid assignment + true squared distance (dists' d is
-        // ‖c‖²−2·v·c; adding the row's ‖v‖² restores it, same as the Spark
-        // column); ties to the lowest centroid index
-        "q_kmeans_assign" ->
-          s"""WITH centroids(c, nsq, w) AS (VALUES $values),
-             |corp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-             |dists AS (
-             |  SELECT v.vec_id, ct.c,
-             |         ct.nsq - 2.0 * ${dotq("ct.w", "v.emb")} AS d,
-             |         ${dotq("v.emb", "v.emb")} AS vsq
-             |  FROM corp v CROSS JOIN centroids ct),
-             |ranked AS (SELECT vec_id, c, d, vsq,
-             |                  row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn FROM dists)
-             |SELECT vec_id, CAST(c AS INT) AS cluster, round(d + vsq, 6) AS dist2
-             |FROM ranked WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-
-        // same assignment CTEs as q_kmeans_assign, then the farthest-k
-        // window on the ROUNDED dist2 (id tiebreak), matching the Spark
-        // side's rank on its round6 column
-        "q_semantic_outliers" ->
-          s"""WITH centroids(c, nsq, w) AS (VALUES $values),
-             |corp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-             |dists AS (
-             |  SELECT v.vec_id, ct.c,
-             |         ct.nsq - 2.0 * ${dotq("ct.w", "v.emb")} AS d,
-             |         ${dotq("v.emb", "v.emb")} AS vsq
-             |  FROM corp v CROSS JOIN centroids ct),
-             |ranked AS (SELECT vec_id, c, d, vsq,
-             |                  row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn FROM dists),
-             |assign AS (SELECT vec_id, CAST(c AS INT) AS cluster, round(d + vsq, 6) AS dist2
-             |           FROM ranked WHERE rn = 1),
-             |ork AS (SELECT cluster, vec_id, dist2,
-             |               row_number() OVER (PARTITION BY cluster
-             |                 ORDER BY dist2 DESC, vec_id) AS out_rank
-             |        FROM assign)
-             |SELECT cluster, CAST(out_rank AS INT) AS out_rank, vec_id, dist2
-             |FROM ork WHERE out_rank <= 3
-             |ORDER BY cluster, out_rank""".stripMargin,
-
-        "q_cluster_balanced_sample" ->
-          s"""WITH centroids(c, nsq, w) AS (VALUES $values),
-             |corp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-             |dists AS (
-             |  SELECT v.vec_id, ct.c, ct.nsq - 2.0 * ${dotq("ct.w", "v.emb")} AS d
-             |  FROM corp v CROSS JOIN centroids ct),
-             |ranked AS (SELECT vec_id, c,
-             |                  row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn FROM dists),
-             |assign AS (SELECT vec_id, CAST(c AS INT) AS cluster FROM ranked WHERE rn = 1),
-             |sampled AS (
-             |  SELECT cluster, vec_id,
-             |         row_number() OVER (PARTITION BY cluster
-             |           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS r
-             |  FROM assign)
-             |SELECT cluster, vec_id FROM sampled WHERE r <= 10
-             |ORDER BY cluster, vec_id""".stripMargin,
-
-        // c-TF-IDF topics: same assignment CTEs, then token rows labeled
-        // by their doc's cluster; idf q6-fixed per word from exact longs
-        // (same ln input order: 1.0 + (n/16)/fw), score = exact long
-        // product, rank on (score desc, word)
-        "q_cluster_topics" ->
-          s"""WITH centroids(c, nsq, w) AS (VALUES $values),
-             |corp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-             |dists AS (
-             |  SELECT v.vec_id, ct.c, ct.nsq - 2.0 * ${dotq("ct.w", "v.emb")} AS d
-             |  FROM corp v CROSS JOIN centroids ct),
-             |rankedc AS (SELECT vec_id, c,
-             |                   row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn FROM dists),
-             |assign AS (SELECT vec_id, CAST(c AS INT) AS cluster FROM rankedc WHERE rn = 1),
-             |tok AS (SELECT a.cluster,
-             |               unnest(list_filter(string_split(d.text, ' '), x -> x <> '')) AS word
-             |        FROM documents d JOIN assign a ON a.vec_id = d.doc_id),
-             |tf AS (SELECT cluster, word, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2),
-             |fw AS (SELECT word, CAST(count(*) AS BIGINT) AS fw FROM tok GROUP BY 1),
-             |tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tok),
-             |idf AS (SELECT word,
-             |               CAST(floor(ln(1.0 + (n::DOUBLE / 16.0) / fw::DOUBLE)
-             |                          * 1000000.0 + 0.5) AS BIGINT) AS idf_q6
-             |        FROM fw, tot),
-             |sc AS (SELECT tf.cluster, tf.word, tf.tf, tf.tf * idf.idf_q6 AS score_q6
-             |       FROM tf JOIN idf USING (word)),
-             |rk AS (SELECT cluster, word, tf, score_q6,
-             |              row_number() OVER (PARTITION BY cluster
-             |                ORDER BY score_q6 DESC, word) AS rank
-             |       FROM sc)
-             |SELECT cluster, rank, word, tf, score_q6 FROM rk WHERE rank <= 3
-             |ORDER BY cluster, rank""".stripMargin,
-
-        // the incremental form: the held-out fifth (vec_id % 5 = 0) pairs
-        // against the other fifths' cell index under the same exported
-        // centroids; min dup id / max cosine per incoming vector
-        "d18_incremental_semantic_dedup" ->
-          s"""WITH centroids(c, nsq, w) AS (VALUES $values),
-             |corp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-             |dists AS (
-             |  SELECT v.vec_id, ct.c, ct.nsq - 2.0 * ${dotq("ct.w", "v.emb")} AS d
-             |  FROM corp v CROSS JOIN centroids ct),
-             |ranked AS (SELECT vec_id, c,
-             |                  row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn FROM dists),
-             |assign AS (SELECT vec_id, CAST(c AS INT) AS cluster FROM ranked WHERE rn = 1),
-             |nrm AS (
-             |  SELECT vec_id, list_transform(emb, x -> x / n) AS emb
-             |  FROM (SELECT vec_id, emb, sqrt(${dotq("emb", "emb")}) AS n FROM corp)),
-             |inc AS (SELECT vec_id, cluster FROM assign WHERE vec_id % 5 = 0),
-             |idx AS (SELECT vec_id AS c_id, cluster FROM assign WHERE vec_id % 5 <> 0),
-             |pairs AS (
-             |  SELECT inc.vec_id, idx.c_id, round(${dotq("na.emb", "nb.emb")}, 6) AS cosv
-             |  FROM inc JOIN idx ON inc.cluster = idx.cluster
-             |  JOIN nrm na ON na.vec_id = inc.vec_id
-             |  JOIN nrm nb ON nb.vec_id = idx.c_id),
-             |sc AS (SELECT vec_id, min(c_id) AS dup_of, max(cosv) AS best_cos
-             |       FROM pairs WHERE cosv >= $CosineNearDupThreshold GROUP BY vec_id)
-             |SELECT inc.vec_id, sc.dup_of, sc.best_cos, sc.dup_of IS NULL AS keep
-             |FROM inc LEFT JOIN sc USING (vec_id)
-             |ORDER BY inc.vec_id""".stripMargin,
-
-        // hybrid incremental oracle: the d12 lexical stack (sig → band →
-        // incoming×corpus candidates → exact Jaccard) and the d18 semantic
-        // stack (centroid assignment → cell-confined cosine), both on the
-        // % 5 split, combined through one final id join — keep = both null
-        "d19_hybrid_incremental_dedup" ->
-          s"""WITH $sigCte,
-             |$bandedCte,
-             |cands AS (
-             |  SELECT i.doc_id AS doc_a, c.doc_id AS doc_b
-             |  FROM banded i JOIN banded c ON i.band = c.band AND i.bucket = c.bucket
-             |  WHERE i.doc_id % 5 = 0 AND c.doc_id % 5 <> 0
-             |    AND i.doc_id IN (SELECT vec_id FROM embeddings)
-             |    AND c.doc_id IN (SELECT vec_id FROM embeddings)
-             |  GROUP BY 1, 2),
-             |jsh AS ($DuckShingles),
-             |jh AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(shingle),1,8))::BIGINT AS h FROM jsh),
-             |sizes AS (SELECT doc_id, count(*) AS sz FROM jh GROUP BY doc_id),
-             |linter AS (SELECT ca.doc_a, ca.doc_b, count(*) AS inter
-             |           FROM cands ca
-             |           JOIN jh x ON x.doc_id = ca.doc_a
-             |           JOIN jh y ON y.doc_id = ca.doc_b AND y.h = x.h
-             |           GROUP BY 1, 2),
-             |lverified AS (
-             |  SELECT doc_a, doc_b,
-             |         round(inter::DOUBLE / (sa.sz + sb.sz - inter)::DOUBLE, 6) AS jaccard
-             |  FROM linter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-             |  WHERE round(inter::DOUBLE / (sa.sz + sb.sz - inter)::DOUBLE, 6) >= $JaccardThreshold),
-             |lmatch AS (
-             |  SELECT doc_a AS doc_id, CAST(min(doc_b) AS BIGINT) AS lex_dup_of,
-             |         max(jaccard) AS best_jaccard
-             |  FROM lverified GROUP BY doc_a),
-             |centroids(c, nsq, w) AS (VALUES $values),
-             |ecorp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-             |edists AS (
-             |  SELECT v.vec_id, ct.c, ct.nsq - 2.0 * ${dotq("ct.w", "v.emb")} AS d
-             |  FROM ecorp v CROSS JOIN centroids ct),
-             |eranked AS (SELECT vec_id, c,
-             |                   row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn FROM edists),
-             |eassign AS (SELECT vec_id, CAST(c AS INT) AS cluster FROM eranked WHERE rn = 1),
-             |enrm AS (
-             |  SELECT vec_id, list_transform(emb, x -> x / n) AS emb
-             |  FROM (SELECT vec_id, emb, sqrt(${dotq("emb", "emb")}) AS n FROM ecorp)),
-             |einc AS (SELECT vec_id, cluster FROM eassign WHERE vec_id % 5 = 0),
-             |eidx AS (SELECT vec_id AS c_id, cluster FROM eassign WHERE vec_id % 5 <> 0),
-             |epairs AS (
-             |  SELECT einc.vec_id, eidx.c_id, round(${dotq("na.emb", "nb.emb")}, 6) AS cosv
-             |  FROM einc JOIN eidx ON einc.cluster = eidx.cluster
-             |  JOIN enrm na ON na.vec_id = einc.vec_id
-             |  JOIN enrm nb ON nb.vec_id = eidx.c_id),
-             |smatch AS (SELECT vec_id AS doc_id, CAST(min(c_id) AS BIGINT) AS sem_dup_of,
-             |                  max(cosv) AS best_cos
-             |           FROM epairs WHERE cosv >= $CosineNearDupThreshold GROUP BY vec_id)
-             |SELECT d.doc_id, l.lex_dup_of, l.best_jaccard, s.sem_dup_of, s.best_cos,
-             |       l.lex_dup_of IS NULL AND s.sem_dup_of IS NULL AS keep
-             |FROM documents d
-             |LEFT JOIN lmatch l ON d.doc_id = l.doc_id
-             |LEFT JOIN smatch s ON d.doc_id = s.doc_id
-             |WHERE d.doc_id % 5 = 0
-             |  AND d.doc_id IN (SELECT vec_id FROM embeddings)
-             |ORDER BY d.doc_id""".stripMargin,
-
-        // the same centroid assignment + normalize-then-dot cosine as the
-        // SemDeDup oracle, with the shared md5 hash split cutting the
-        // corpus into train/test and pairing confined to shared cells
-        "q_split_leakage_semantic" ->
-          s"""WITH centroids(c, nsq, w) AS (VALUES $values),
-             |corp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-             |dists AS (
-             |  SELECT v.vec_id, ct.c, ct.nsq - 2.0 * ${dotq("ct.w", "v.emb")} AS d
-             |  FROM corp v CROSS JOIN centroids ct),
-             |ranked AS (SELECT vec_id, c,
-             |                  row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn FROM dists),
-             |assign AS (SELECT vec_id, CAST(c AS INT) AS cluster FROM ranked WHERE rn = 1),
-             |nrm AS (
-             |  SELECT vec_id, list_transform(emb, x -> x / n) AS emb
-             |  FROM (SELECT vec_id, emb, sqrt(${dotq("emb", "emb")}) AS n FROM corp)),
-             |sp AS (SELECT vec_id,
-             |              CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-             |       FROM (SELECT vec_id,
-             |                    ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS b
-             |             FROM corp)),
-             |te AS (SELECT a.vec_id, a.cluster FROM assign a JOIN sp USING (vec_id)
-             |       WHERE sp.split = 'test'),
-             |tr AS (SELECT a.vec_id AS t_id, a.cluster FROM assign a JOIN sp USING (vec_id)
-             |       WHERE sp.split = 'train'),
-             |pairs AS (
-             |  SELECT te.vec_id, round(${dotq("na.emb", "nb.emb")}, 6) AS cosv
-             |  FROM te JOIN tr ON te.cluster = tr.cluster
-             |  JOIN nrm na ON na.vec_id = te.vec_id
-             |  JOIN nrm nb ON nb.vec_id = tr.t_id),
-             |sc AS (SELECT vec_id, CAST(count(*) AS BIGINT) AS n_near, max(cosv) AS best_cos
-             |       FROM pairs WHERE cosv >= $CosineNearDupThreshold GROUP BY vec_id)
-             |SELECT te.vec_id, CAST(COALESCE(sc.n_near, 0) AS BIGINT) AS n_near, sc.best_cos,
-             |       COALESCE(sc.n_near, 0) > 0 AS leaked
-             |FROM te LEFT JOIN sc USING (vec_id)
-             |ORDER BY te.vec_id""".stripMargin,
-
-        // both audits' full CTE stacks (d14 windows + hash split on the
-        // text side; centroid assignment + cell-confined cosine on the
-        // embedding side) joined on the id — the same split predicate
-        // drives both because documents and embeddings share ids
-        "q_split_leakage_hybrid" ->
-          s"""WITH t AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM documents),
-             |s AS (
-             |  SELECT doc_id, ws,
-             |         CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-             |  FROM (SELECT doc_id, ws,
-             |               ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS b
-             |        FROM t)),
-             |w AS (
-             |  SELECT doc_id, split, u.h FROM (
-             |    SELECT doc_id, split,
-             |      unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-             |        i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-             |    FROM s WHERE len(ws) >= 8)),
-             |twh AS (SELECT DISTINCT h FROM w WHERE split = 'train'),
-             |lk AS (SELECT w.doc_id, count(*) AS n_leaked
-             |       FROM w JOIN twh USING (h) WHERE w.split = 'test' GROUP BY w.doc_id),
-             |lex AS (SELECT s.doc_id, CAST(COALESCE(lk.n_leaked, 0) AS BIGINT) AS n_leaked
-             |        FROM s LEFT JOIN lk ON s.doc_id = lk.doc_id WHERE s.split = 'test'),
-             |centroids(c, nsq, w2) AS (VALUES $values),
-             |corp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-             |dists AS (
-             |  SELECT v.vec_id, ct.c, ct.nsq - 2.0 * ${dotq("ct.w2", "v.emb")} AS d
-             |  FROM corp v CROSS JOIN centroids ct),
-             |ranked AS (SELECT vec_id, c,
-             |                  row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn FROM dists),
-             |assign AS (SELECT vec_id, CAST(c AS INT) AS cluster FROM ranked WHERE rn = 1),
-             |nrm AS (
-             |  SELECT vec_id, list_transform(emb, x -> x / n) AS emb
-             |  FROM (SELECT vec_id, emb, sqrt(${dotq("emb", "emb")}) AS n FROM corp)),
-             |sp AS (SELECT vec_id,
-             |              CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-             |       FROM (SELECT vec_id,
-             |                    ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS b
-             |             FROM corp)),
-             |te AS (SELECT a.vec_id, a.cluster FROM assign a JOIN sp USING (vec_id)
-             |       WHERE sp.split = 'test'),
-             |trv AS (SELECT a.vec_id AS t_id, a.cluster FROM assign a JOIN sp USING (vec_id)
-             |        WHERE sp.split = 'train'),
-             |pairs AS (
-             |  SELECT te.vec_id, round(${dotq("na.emb", "nb.emb")}, 6) AS cosv
-             |  FROM te JOIN trv ON te.cluster = trv.cluster
-             |  JOIN nrm na ON na.vec_id = te.vec_id
-             |  JOIN nrm nb ON nb.vec_id = trv.t_id),
-             |sc AS (SELECT vec_id, CAST(count(*) AS BIGINT) AS n_near
-             |       FROM pairs WHERE cosv >= $CosineNearDupThreshold GROUP BY vec_id),
-             |sem AS (SELECT te.vec_id AS doc_id, CAST(COALESCE(sc.n_near, 0) AS BIGINT) AS n_near
-             |        FROM te LEFT JOIN sc USING (vec_id))
-             |SELECT lex.doc_id, lex.n_leaked, sem.n_near,
-             |       lex.n_leaked > 0 OR sem.n_near > 0 AS leaked
-             |FROM lex JOIN sem USING (doc_id)
-             |ORDER BY lex.doc_id""".stripMargin,
-
-        // SemDeDup oracle: same centroid assignment as q_kmeans_assign,
-        // d6's normalize-then-dot cosine confined to same-cluster pairs,
-        // d10's recursive transitive closure, d10b's survivor rule
-        // (component minima + singletons)
-        "d16_semantic_dedup" ->
-          s"""WITH RECURSIVE centroids(c, nsq, w) AS (VALUES $values),
-             |corp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-             |dists AS (
-             |  SELECT v.vec_id, ct.c, ct.nsq - 2.0 * ${dotq("ct.w", "v.emb")} AS d
-             |  FROM corp v CROSS JOIN centroids ct),
-             |ranked AS (SELECT vec_id, c,
-             |                  row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn FROM dists),
-             |assign AS (SELECT vec_id, CAST(c AS INT) AS cluster FROM ranked WHERE rn = 1),
-             |nrm AS (
-             |  SELECT vec_id, list_transform(emb, x -> x / n) AS emb
-             |  FROM (SELECT vec_id, emb, sqrt(${dotq("emb", "emb")}) AS n FROM corp)),
-             |pairs AS (
-             |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-             |  FROM assign a JOIN assign b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-             |  JOIN nrm na ON na.vec_id = a.vec_id JOIN nrm nb ON nb.vec_id = b.vec_id
-             |  WHERE round(${dotq("na.emb", "nb.emb")}, 6) >= $CosineNearDupThreshold),
-             |edges AS (SELECT vec_a AS v, vec_b AS u FROM pairs
-             |          UNION SELECT vec_b, vec_a FROM pairs),
-             |reach(v, l) AS (
-             |  SELECT v, v FROM (SELECT DISTINCT v FROM edges)
-             |  UNION
-             |  SELECT e.v, r.l FROM edges e JOIN reach r ON e.u = r.v),
-             |comp AS (SELECT v AS vec_id, CAST(min(l) AS BIGINT) AS component
-             |         FROM reach GROUP BY v)
-             |SELECT a.vec_id, a.cluster
-             |FROM assign a LEFT JOIN comp c ON a.vec_id = c.vec_id
-             |WHERE c.component IS NULL OR a.vec_id = c.component
-             |ORDER BY a.vec_id""".stripMargin,
-
-        // the full embedding-side pipeline replayed from the exported
-        // model: assignment + true dist2 (q_semantic_outliers' CTEs), the
-        // farthest-k removal, d16's cell-confined cosine pairs over the
-        // RETAINED set + recursive closure + survivor rule, and the
-        // md5-rank diversity cap
-        "e2e_semantic_curation" ->
-          s"""WITH RECURSIVE centroids(c, nsq, w) AS (VALUES $values),
-             |corp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-             |dists AS (
-             |  SELECT v.vec_id, ct.c,
-             |         ct.nsq - 2.0 * ${dotq("ct.w", "v.emb")} AS d,
-             |         ${dotq("v.emb", "v.emb")} AS vsq
-             |  FROM corp v CROSS JOIN centroids ct),
-             |ranked AS (SELECT vec_id, c, d, vsq,
-             |                  row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn FROM dists),
-             |assign AS (SELECT vec_id, CAST(c AS INT) AS cluster, round(d + vsq, 6) AS dist2
-             |           FROM ranked WHERE rn = 1),
-             |ork AS (SELECT vec_id, cluster,
-             |               row_number() OVER (PARTITION BY cluster
-             |                 ORDER BY dist2 DESC, vec_id) AS orr
-             |        FROM assign),
-             |kept AS (SELECT vec_id, cluster FROM ork WHERE orr > 3),
-             |nrm AS (
-             |  SELECT vec_id, list_transform(emb, x -> x / n) AS emb
-             |  FROM (SELECT vec_id, emb, sqrt(${dotq("emb", "emb")}) AS n FROM corp)),
-             |pairs AS (
-             |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-             |  FROM kept a JOIN kept b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-             |  JOIN nrm na ON na.vec_id = a.vec_id JOIN nrm nb ON nb.vec_id = b.vec_id
-             |  WHERE round(${dotq("na.emb", "nb.emb")}, 6) >= $CosineNearDupThreshold),
-             |edges AS (SELECT vec_a AS v, vec_b AS u FROM pairs
-             |          UNION SELECT vec_b, vec_a FROM pairs),
-             |reach(v, l) AS (
-             |  SELECT v, v FROM (SELECT DISTINCT v FROM edges)
-             |  UNION
-             |  SELECT e.v, r.l FROM edges e JOIN reach r ON e.u = r.v),
-             |comp AS (SELECT v AS vec_id, CAST(min(l) AS BIGINT) AS component
-             |         FROM reach GROUP BY v),
-             |surv AS (SELECT k.cluster, k.vec_id FROM kept k
-             |         LEFT JOIN comp c ON k.vec_id = c.vec_id
-             |         WHERE c.component IS NULL OR k.vec_id = c.component),
-             |capd AS (
-             |  SELECT cluster, vec_id,
-             |         row_number() OVER (PARTITION BY cluster
-             |           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS r
-             |  FROM surv)
-             |SELECT cluster, vec_id FROM capd WHERE r <= 10
-             |ORDER BY cluster, vec_id""".stripMargin,
-
-        // hybrid dedup oracle: the shared lexical fragments (sig → band →
-        // candidate → verify) produce lex_pairs; the centroid VALUES +
-        // normalize-then-dot produce sem_pairs; ONE recursive closure over
-        // the union, d10b's survivor rule
-        "d17_hybrid_dedup" ->
-          s"""WITH RECURSIVE $sigCte,
-             |$lshCandsCte,
-             |$jaccardCte,
-             |lex_pairs AS (
-             |  SELECT c.doc_a, c.doc_b FROM cands c
-             |  JOIN verified v ON c.doc_a = v.doc_a AND c.doc_b = v.doc_b),
-             |centroids(c, nsq, w) AS (VALUES $values),
-             |ecorp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-             |edists AS (
-             |  SELECT v.vec_id, ct.c, ct.nsq - 2.0 * ${dotq("ct.w", "v.emb")} AS d
-             |  FROM ecorp v CROSS JOIN centroids ct),
-             |eranked AS (SELECT vec_id, c,
-             |                   row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rn FROM edists),
-             |eassign AS (SELECT vec_id, CAST(c AS INT) AS cluster FROM eranked WHERE rn = 1),
-             |enrm AS (
-             |  SELECT vec_id, list_transform(emb, x -> x / n) AS emb
-             |  FROM (SELECT vec_id, emb, sqrt(${dotq("emb", "emb")}) AS n FROM ecorp)),
-             |sem_pairs AS (
-             |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-             |  FROM eassign a JOIN eassign b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-             |  JOIN enrm na ON na.vec_id = a.vec_id JOIN enrm nb ON nb.vec_id = b.vec_id
-             |  WHERE round(${dotq("na.emb", "nb.emb")}, 6) >= $CosineNearDupThreshold),
-             |all_pairs AS (SELECT doc_a, doc_b FROM lex_pairs
-             |              UNION SELECT doc_a, doc_b FROM sem_pairs),
-             |edges AS (SELECT doc_a AS v, doc_b AS u FROM all_pairs
-             |          UNION SELECT doc_b, doc_a FROM all_pairs),
-             |reach(v, l) AS (
-             |  SELECT v, v FROM (SELECT DISTINCT v FROM edges)
-             |  UNION
-             |  SELECT e.v, r.l FROM edges e JOIN reach r ON e.u = r.v),
-             |comp AS (SELECT v AS doc_id, CAST(min(l) AS BIGINT) AS component
-             |         FROM reach GROUP BY v)
-             |SELECT d.doc_id, d.source
-             |FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-             |WHERE c.component IS NULL OR d.doc_id = c.component
-             |ORDER BY d.doc_id""".stripMargin,
-
-        "d8_ann_ivf_topk" ->
-          s"""$candCtes,
-             |scored AS (
-             |  SELECT cd.query_id, cd.vec_id, round(${cosq("qq.emb", "ee.emb")}, 6) AS cos
-             |  FROM cands cd JOIN corp qq ON qq.vec_id = cd.query_id JOIN corp ee ON ee.vec_id = cd.vec_id),
-             |ranked AS (
-             |  SELECT query_id, vec_id AS neighbor_id, cos,
-             |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-             |  FROM scored)
-             |SELECT query_id, rank, neighbor_id, cos FROM ranked WHERE rank <= $TopK
-             |ORDER BY query_id, rank""".stripMargin,
-        // d9's quantized ranking + exact rescore over the same IVF candidates
-        "d9c_quantized_ivf_topk" ->
-          s"""$candCtes,
-             |ps AS (SELECT vec_id, emb AS e, list_max(list_transform(emb, x -> abs(x))) / 127.0 AS s FROM corp),
-             |pr AS (SELECT vec_id, e, list_transform(e, x -> floor(x / s + 0.5) * s) AS r FROM ps),
-             |q AS (SELECT vec_id AS query_id, e AS q_e, r AS q_r FROM pr WHERE vec_id < 10),
-             |approx AS (
-             |  SELECT cd.query_id, cd.vec_id, c.e, q.q_e, ${cosq("q.q_r", "c.r")} AS acos
-             |  FROM cands cd JOIN pr c ON c.vec_id = cd.vec_id JOIN q ON q.query_id = cd.query_id),
-             |cand AS (
-             |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY acos DESC, vec_id) AS arank
-             |  FROM approx),
-             |exact AS (
-             |  SELECT query_id, vec_id AS neighbor_id, round(${cosq("q_e", "e")}, 6) AS cos
-             |  FROM cand WHERE arank <= ${TopK * 4}),
-             |ranked AS (
-             |  SELECT query_id, neighbor_id, cos,
-             |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-             |  FROM exact)
-             |SELECT query_id, rank, neighbor_id, cos FROM ranked WHERE rank <= $TopK
-             |ORDER BY query_id, rank""".stripMargin,
-        // d8's ANN ranking joined per query against d5's exact ranking;
-        // recall = hits/k needs no rounding
-        "q_ann_recall_ivf" ->
-          s"""$candCtes,
-             |scored AS (
-             |  SELECT cd.query_id, cd.vec_id, round(${cosq("qq.emb", "ee.emb")}, 6) AS cos
-             |  FROM cands cd JOIN corp qq ON qq.vec_id = cd.query_id JOIN corp ee ON ee.vec_id = cd.vec_id),
-             |ann AS (
-             |  SELECT query_id, neighbor_id FROM (
-             |    SELECT query_id, vec_id AS neighbor_id,
-             |           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-             |    FROM scored) WHERE rank <= $TopK),
-             |ex_scored AS (
-             |  SELECT q.vec_id AS query_id, e.vec_id, round(${cosq("q.emb", "e.emb")}, 6) AS cos
-             |  FROM corp e CROSS JOIN (SELECT vec_id, emb FROM corp WHERE vec_id < 10) q
-             |  WHERE e.vec_id <> q.vec_id),
-             |ex AS (
-             |  SELECT query_id, neighbor_id FROM (
-             |    SELECT query_id, vec_id AS neighbor_id,
-             |           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-             |    FROM ex_scored) WHERE rank <= $TopK)
-             |SELECT e.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
-             |       count(a.neighbor_id)::DOUBLE / ${TopK}.0 AS recall
-             |FROM ex e LEFT JOIN ann a ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-             |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin)
-    }.toMap
-
-  /** PQ oracle, available after [[Similarity.trainPqCodebooks]] has run.
-    * The VALUES table carries one row per (subspace, code): the codeword's
-    * norm-squared exactly as the Spark plan embeds it and its dim/m
-    * weights. Code assignment (argmin per subspace, ties to lowest code),
-    * the per-query ADC table, the ORDERED j=1..m lookup fold (list_reduce
-    * mirrors the Spark `reduce(_ + _)` left fold — a GROUP BY sum would
-    * re-order the float adds), ADC ranking, exact rescore, and final
-    * ranking all mirror [[Similarity.pqTopK]] operation by operation. */
-  private def pqOracleSql: Map[String, String] =
-    Similarity.lastPqCodebooks.toSeq.flatMap {
-      case (dim, m, ksub, seed, _) if dim != 64 || m != 16 || ksub != 16 || seed != 42L =>
-        Nil // another training overwrote the slot; omit rather than mismatch
-      case (_, m, _, _, books) =>
-        val dsub = 64 / m
-        val values = (for (j <- books.indices; c <- books(j).indices) yield {
-          val w = books(j)(c)
-          val nsq = w.map(x => x * x).sum
-          s"($j, $c, CAST($nsq AS DOUBLE), [${w.mkString(", ")}]::DOUBLE[])"
-        }).mkString(", ")
-        def dotq(a: String, b: String) =
-          s"list_reduce(list_transform(range(1, 65), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-        def cosq(a: String, b: String) =
-          s"${dotq(a, b)} / (sqrt(${dotq(a, a)}) * sqrt(${dotq(b, b)}))"
-        Map("d9d_pq_topk" ->
-          s"""WITH books(j, c, nsq, w) AS (VALUES $values),
-             |corp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-             |subd AS (
-             |  SELECT v.vec_id, b.j, b.c,
-             |         b.nsq - 2.0 * list_reduce(list_transform(range(1, ${dsub + 1}),
-             |           i -> b.w[i] * v.emb[b.j * $dsub + i]), (x, y) -> x + y) AS d
-             |  FROM corp v CROSS JOIN books b),
-             |codes AS (
-             |  SELECT vec_id, list(c ORDER BY j) AS codes FROM (
-             |    SELECT vec_id, j, c,
-             |           row_number() OVER (PARTITION BY vec_id, j ORDER BY d, c) AS rn FROM subd)
-             |  WHERE rn = 1 GROUP BY vec_id),
-             |qadc AS (
-             |  SELECT vec_id AS query_id, list(dl ORDER BY j) AS adc FROM (
-             |    SELECT vec_id, j, list(d ORDER BY c) AS dl FROM subd
-             |    WHERE vec_id < 10 GROUP BY vec_id, j)
-             |  GROUP BY vec_id),
-             |approx AS (
-             |  SELECT q.query_id, v.vec_id,
-             |         list_reduce(list_transform(range(1, ${m + 1}),
-             |           j -> q.adc[j][v.codes[j] + 1]), (x, y) -> x + y) AS approx
-             |  FROM codes v CROSS JOIN qadc q WHERE v.vec_id <> q.query_id),
-             |cand AS (
-             |  SELECT query_id, vec_id FROM (
-             |    SELECT query_id, vec_id,
-             |           row_number() OVER (PARTITION BY query_id ORDER BY approx, vec_id) AS rn
-             |    FROM approx)
-             |  WHERE rn <= 20),
-             |exact AS (
-             |  SELECT cd.query_id, cd.vec_id AS neighbor_id,
-             |         round(${cosq("qq.emb", "ee.emb")}, 6) AS cos
-             |  FROM cand cd JOIN corp qq ON qq.vec_id = cd.query_id
-             |               JOIN corp ee ON ee.vec_id = cd.vec_id),
-             |ranked AS (
-             |  SELECT query_id, neighbor_id, cos,
-             |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-             |  FROM exact)
-             |SELECT query_id, rank, neighbor_id, cos FROM ranked WHERE rank <= $TopK
-             |ORDER BY query_id, rank""".stripMargin)
-    }.toMap
-
-  /** The engine's [[graft.operators.TextOps.PublicSuffixRulesFull]] —
-    * the full packaged publicsuffix.org snapshot the crawl gates run
-    * under since r16 — as a DuckDB VALUES body, kind-encoded exactly like
-    * [[graft.operators.TextOps.registrableDomainMap]] (0 exact,
-    * 1 wildcard, 2 exception with the '!' stripped) — a deterministic
-    * constant, not engine output, so it ships in the static oracle. */
-  private def pslValues: String =
-    graft.operators.TextOps.PublicSuffixRulesFull.map { r =>
-      val (key, kind) =
-        if (r.startsWith("!")) (r.drop(1), 2)
-        else if (r.startsWith("*.")) (r, 1)
-        else (r, 0)
-      s"('$key', $kind)"
-    }.mkString(", ")
-
   /** The planted phrase table of the two bulk-phrase gates (engine side
     * mirrors it as a literal DataFrame): the 3-term quote, its 2-term
     * prefix, a single term, and a missing-term phrase. */
-  private val BulkPhrases: Seq[(Long, String)] = Seq(
+  private[graft] val BulkPhrases: Seq[(Long, String)] = Seq(
     (1L, "slow hash batch"), (2L, "slow hash"),
     (3L, "batch"), (4L, "batch zz_missing"))
-
-  /** The group-count positional-intersection oracle shared VERBATIM by
-    * `q_phrase_multi_search` (postings-join engine path) and
-    * `q_phrase_bulk_scan` (stateless per-row scan path): one SQL, two
-    * engine implementations — the driver's hash gates are a three-way
-    * agreement proof. */
-  private def phraseMultiOracleSql: String = {
-    val vals = BulkPhrases.map { case (i, p) => s"($i, '$p')" }.mkString(", ")
-    s"""WITH ph(phrase_id, ptext) AS (VALUES $vals),
-       |pw AS (SELECT phrase_id, list_filter(string_split(ptext, ' '), x -> x <> '') AS toks FROM ph),
-       |pt AS (SELECT phrase_id, CAST(len(toks) AS BIGINT) AS k,
-       |              CAST(i - 1 AS BIGINT) AS off, toks[i] AS term
-       |       FROM pw, unnest(range(1, len(toks) + 1)) AS u(i)),
-       |dw AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks FROM documents),
-       |dt AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, toks[i] AS term
-       |       FROM dw, unnest(range(1, len(toks) + 1)) AS u(i)),
-       |cand AS (SELECT pt.phrase_id, pt.k, dt.doc_id, dt.pos - pt.off AS start, pt.off
-       |         FROM pt JOIN dt USING (term)),
-       |m AS (SELECT phrase_id, doc_id, start
-       |      FROM cand GROUP BY phrase_id, k, doc_id, start
-       |      HAVING count(DISTINCT off) = k)
-       |SELECT CAST(phrase_id AS BIGINT) AS phrase_id, doc_id,
-       |       CAST(count(*) AS BIGINT) AS n_matches,
-       |       CAST(min(start) AS BIGINT) AS first_pos
-       |FROM m GROUP BY phrase_id, doc_id ORDER BY phrase_id, doc_id""".stripMargin
-  }
 
   /** The multi-spelling page projection of the `q_domain_stats` pair —
     * (canonical_url, host, n_toks) over the four planted raw-URL arms
@@ -5977,7 +4169,7 @@ object SparkEntry {
 
   /** The planted multi-suffix crawl URL shared by the three eTLD+1 gates
     * (`q_registrable_domain_stats`, `q_domain_cap`, `q_domain_budget`) —
-    * ONE definition, mirrored by [[crawlPslCtes]]'s `raw` CTE on the
+    * ONE definition, mirrored by [[graft.oracle.CrawlOracles.crawlPslCtes]]'s `raw` CTE on the
     * oracle side, so a plant change hits every consumer or none. */
   private def crawlPlantUrl: Column =
     concat(lit("https://"), crawlPlantHost(col("doc_id")), lit("/p/"),
@@ -5987,7 +4179,7 @@ object SparkEntry {
     * one host universe shared by the doc's own URL ([[crawlPlantUrl]],
     * key = doc_id) and the link plant's anchor targets ([[linkPlantPage]],
     * keys derived from doc_id), so the link graph's nodes are exactly the
-    * crawl gates' domains. Mirrored in SQL by [[crawlHostSql]]. */
+    * crawl gates' domains. Mirrored in SQL by [[graft.oracle.CrawlOracles.crawlHostSql]]. */
   private def crawlPlantHost(k: Column): Column = {
     val hostN = (k % 5).cast("string")
     // sparse IP-literal plants (VERDICT r15 #7): a bracketed IPv6
@@ -6004,7 +4196,7 @@ object SparkEntry {
 
   /** Anchor-vocabulary keyword for link key `k` — keeps the planted
     * anchor text a 3-term vocabulary so the per-domain anchor rollup has
-    * a meaningful term distribution. SQL mirror: [[linkKindSql]]. */
+    * a meaningful term distribution. SQL mirror: [[graft.oracle.CrawlOracles.linkKindSql]]. */
   private def linkKindWord(k: Column): Column =
     when(k % 3 === 0, lit("guide"))
       .when(k % 3 === 1, lit("review"))
@@ -6024,7 +4216,7 @@ object SparkEntry {
     *   - a3 (doc_id % 3 == 0): PROTOCOL-RELATIVE `//host/…` to host key
     *     5·doc_id+2 — resolves with the base's scheme.
     *
-    * SQL mirror: [[linkPageSql]] (char-for-char the same page string). */
+    * SQL mirror: [[graft.oracle.CrawlOracles.linkPageSql]] (char-for-char the same page string). */
   private def linkPlantPage: Column = {
     val d = col("doc_id")
     val k1 = d * 3 + 1
@@ -6324,7 +4516,7 @@ object SparkEntry {
   }
 
   /** The planted fetch history shared by `q_recrawl_schedule` and
-    * `e2e_fetch_queue` (one definition; SQL mirror [[recrawlFpSql]]):
+    * `e2e_fetch_queue` (one definition; SQL mirror [[graft.oracle.CrawlOracles.recrawlFpSql]]):
     * standing (% 5 != 0) docs fetch their canonical URL at
     * epoch = doc_id, with three fingerprint regimes by path class —
     * changes-every-fetch, never-changes, slow boundary changes. Returns
@@ -6349,7 +4541,7 @@ object SparkEntry {
     * (`q_registrable_domain_stats`, `q_domain_cap`): the planted
     * multi-suffix URL corpus → canonicalization → host + token count
     * (`pages`) → the publicsuffix.org longest-matching-rule replay over
-    * [[pslValues]] (`reg`: host → registrable_domain). One definition so
+    * [[graft.oracle.CrawlOracles.pslValues]] (`reg`: host → registrable_domain). One definition so
     * a rule change hits both oracles or neither. */
   /** Rule table of the `q_url_rules_filter` gate (shared with its spec):
     * exercises longest-match (`/p/1` vs `/p/12`), the identical pattern
@@ -6358,10 +4550,6 @@ object SparkEntry {
   val CrawlUrlRules: Seq[(String, Boolean)] = Seq(
     "/p/1" -> false, "/p/12" -> true, "/p/3" -> false,
     "/dup" -> true, "/dup" -> false)
-
-  private def urlRuleValues: String =
-    CrawlUrlRules.map { case (p, a) => s"('$p', ${if (a) 1 else 0})" }
-      .mkString(", ")
 
   /** PER-DOMAIN rule dimension of the `q_url_rules_per_domain` gate and
     * the frontier's admissibility arm (VERDICT r17 #2) — each site's own
@@ -6384,10 +4572,6 @@ object SparkEntry {
     ("h2.co.uk", "/p/7", true), ("h2.co.uk", "/p/7", false),
     ("h4.blogspot.com", "/", false),
     ("absent.example", "/", false))
-
-  private def domainRuleValues: String =
-    CrawlDomainRules.map { case (d, p, a) =>
-      s"('$d', '$p', ${if (a) 1 else 0})" }.mkString(", ")
 
   /** The crawl's own user-agent string — the constant the RFC 9309
     * agent-group election runs against (`q_url_rules_agent_groups` and
@@ -6429,4764 +4613,4 @@ object SparkEntry {
       ("h2.com", "graftbot/1.0", "/p/12", true),
       ("h0.com", "otherbot", "/", false))
 
-  private def domainAgentRuleValues: String =
-    CrawlDomainAgentRules.map { case (d, ag, p, a) =>
-      s"('$d', '$ag', '$p', ${if (a) 1 else 0})" }.mkString(", ")
-
-  /** The RFC 9309 agent-group election as a prefixable CTE pair: reads
-    * the (domain, agent, rule, allow) VALUES, keeps groups matching
-    * [[CrawlAgent]] (case-insensitive prefix or `*`), elects the most
-    * specific per domain (token length, `*` = 0; ties merge), and ends
-    * in `${p}rules(domain, rule, allow)` — the shape the agentless
-    * election CTEs consume. ONE definition shared by the
-    * `q_url_rules_agent_groups` oracle and [[frontierStackCtes]]. */
-  private def agentRuleCtes(p: String): String =
-    s"""${p}adr(domain, agent, rule, allow) AS (VALUES $domainAgentRuleValues),
-       |${p}am AS (
-       |  SELECT domain, rule, allow,
-       |         CASE WHEN agent = '*' THEN 0 ELSE len(agent) END AS alen
-       |  FROM ${p}adr
-       |  WHERE agent = '*'
-       |     OR starts_with('${CrawlAgent.toLowerCase(java.util.Locale.ROOT)}',
-       |                    lower(agent))),
-       |${p}rules AS (
-       |  SELECT m.domain, m.rule, m.allow
-       |  FROM ${p}am m
-       |  JOIN (SELECT domain, max(alen) AS best FROM ${p}am GROUP BY domain) b
-       |    ON b.domain = m.domain AND m.alen = b.best)""".stripMargin
-
-  /** SQL mirror of [[crawlPlantHost]] for an arbitrary key expression. */
-  private def crawlHostSql(k: String): String =
-    s"""CASE WHEN ($k) % 19 = 3 THEN '[2001:db8::1]:8080'
-       |         WHEN ($k) % 19 = 7 THEN '192.0.2.1'
-       |         WHEN ($k) % 4 = 0 THEN 'WWW.h' || CAST(($k) % 5 AS VARCHAR) || '.com'
-       |         WHEN ($k) % 4 = 1 THEN 'news.h' || CAST(($k) % 5 AS VARCHAR) || '.com'
-       |         WHEN ($k) % 4 = 2 THEN 'h' || CAST(($k) % 5 AS VARCHAR) || '.blogspot.com'
-       |         ELSE 'a.h' || CAST(($k) % 5 AS VARCHAR) || '.co.uk'
-       |    END""".stripMargin
-
-  /** SQL mirror of [[linkKindWord]]. */
-  private def linkKindSql(k: String): String =
-    s"CASE WHEN ($k) % 3 = 0 THEN 'guide' WHEN ($k) % 3 = 1 THEN 'review' ELSE 'news' END"
-
-  /** SQL mirror of [[linkPlantPage]] — char-for-char the same page. */
-  private def linkPageSql: String =
-    s"""'<html><body><p>' || text || '</p><a href="https://' ||
-       |      ${crawlHostSql("doc_id * 3 + 1")} ||
-       |      '/p/' || CAST((doc_id * 3 + 1) % 20 AS VARCHAR) ||
-       |      '?a=1&utm_l=9">visit h' || CAST((doc_id * 3 + 1) % 5 AS VARCHAR) || ' ' ||
-       |      ${linkKindSql("doc_id * 3 + 1")} ||
-       |      '</a> <a href="/q/' || CAST(doc_id % 10 AS VARCHAR) || '">more ' ||
-       |      ${linkKindSql("doc_id")} || '</a>' ||
-       |      CASE WHEN doc_id % 3 = 0 THEN
-       |        ' <a href="//' || ${crawlHostSql("doc_id * 5 + 2")} ||
-       |        '/p/' || CAST((doc_id * 5 + 2) % 20 AS VARCHAR) ||
-       |        '">visit h' || CAST((doc_id * 5 + 2) % 5 AS VARCHAR) || ' ' ||
-       |        ${linkKindSql("doc_id * 5 + 2")} || '</a>'
-       |      ELSE '' END || '</body></html>'""".stripMargin
-
-  /** The link-graph family's shared CTE stack, replaying
-    * [[linkGraphStages]]'s `links` output: planted page → anchor tags →
-    * (href, anchor) per element (non-greedy to the first `</a>`, inner
-    * markup stripped to spaces — the engine's nested-anchor rule) →
-    * [[graft.operators.TextOps.resolveLink]]'s resolution arms (any
-    * `scheme:` absolute, protocol-relative, fragment-only, query-only,
-    * root-relative, relative merge) → the canonicalization chain. The
-    * canon chain is keyed by `doc_id · 1024 + link_no` because
-    * [[urlCanonCtes]] carries one id column — the planted pages carry 2-3
-    * anchors, but the wide multiplier keeps the key collision-free even
-    * for pages with many extracted anchors. Ends in
-    * `lout(doc_id, link_no, href, url, dst_host, anchor)`. */
-  private def linkCtes: String =
-    s"""$crawlRawCte,
-       |${urlCanonCtes("rd", "raw")},
-       |pg AS (
-       |  SELECT r.doc_id, $linkPageSql AS page, c.canonical_url AS base
-       |  FROM raw r JOIN rdcanon c USING (doc_id)),
-       |tg AS (SELECT doc_id, base,
-       |         regexp_extract_all(page, '(?s)<a\\b[^>]*?\\shref="[^"]*"[^>]*>.*?</a>') AS ls
-       |       FROM pg),
-       |lk AS (
-       |  SELECT doc_id, base, CAST(i - 1 AS BIGINT) AS link_no,
-       |         regexp_extract(ls[i], '<a\\b[^>]*?\\shref="([^"]*)"', 1) AS href,
-       |         trim(regexp_replace(regexp_replace(
-       |           regexp_extract(ls[i], '(?s)>(.*)</a>$$', 1),
-       |           '<[^>]*>', ' ', 'g'), '[ \\t\\n\\r\\f]+', ' ', 'g')) AS anchor
-       |  FROM tg, unnest(range(1, len(ls) + 1)) AS u(i)),
-       |rs AS (
-       |  SELECT doc_id, link_no, href, anchor,
-       |    CASE WHEN regexp_matches(href, '^[a-zA-Z][a-zA-Z0-9+.-]*:') THEN href
-       |         WHEN starts_with(href, '//')
-       |           THEN regexp_extract(base, '^([a-zA-Z][a-zA-Z0-9+.-]*):', 1) || ':' || href
-       |         WHEN starts_with(href, '#') THEN base || href
-       |         WHEN starts_with(href, '?')
-       |           THEN regexp_extract(base, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*)', 1) ||
-       |                regexp_replace(regexp_replace(base,
-       |                  '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', ''), '\\?.*', '') || href
-       |         WHEN starts_with(href, '/')
-       |           THEN regexp_extract(base, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*)', 1) || href
-       |         ELSE regexp_extract(base, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*)', 1) ||
-       |              regexp_replace(regexp_replace(regexp_replace(base,
-       |                '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', ''), '\\?.*', ''),
-       |                '/[^/]*$$', '') || '/' || href
-       |    END AS url0
-       |  FROM lk),
-       |ku AS (SELECT doc_id * 1024 + link_no AS doc_id, url0 AS url FROM rs),
-       |${urlCanonCtes("lx", "ku")},
-       |lout AS (
-       |  SELECT r.doc_id, r.link_no, r.href, x.canonical_url AS url,
-       |         regexp_extract(x.canonical_url,
-       |           '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1) AS dst_host,
-       |         r.anchor
-       |  FROM rs r JOIN lxcanon x ON x.doc_id = r.doc_id * 1024 + r.link_no)""".stripMargin
-
-  /** [[linkCtes]] extended with the PSL replay over BOTH endpoints' hosts
-    * and the grouped registrable-domain edge list (self-domain and NULL
-    * endpoints excluded, matching [[linkGraphStages]]'s `edges`). Ends in
-    * `ledges(src_domain, dst_domain, w)`. `docFilter` (a predicate on
-    * `doc_id`) restricts which documents CONTRIBUTE hosts and edges — the
-    * standing/epoch splits of the maintenance gates. */
-  private def linkEdgeCtes(docFilter: String = "TRUE"): String =
-    s"""$linkCtes,
-       |ah AS (
-       |  SELECT dst_host AS host FROM lout WHERE $docFilter
-       |  UNION ALL
-       |  SELECT regexp_extract(canonical_url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1) AS host
-       |  FROM rdcanon WHERE $docFilter),
-       |${pslLookupCtes("a", "ah")},
-       |ed AS (
-       |  SELECT s.registrable_domain AS src_domain, t.registrable_domain AS dst_domain
-       |  FROM lout l
-       |  JOIN rdcanon c ON c.doc_id = l.doc_id
-       |  JOIN areg s ON s.host = regexp_extract(c.canonical_url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)
-       |  JOIN areg t ON t.host = l.dst_host
-       |  WHERE s.registrable_domain IS NOT NULL AND t.registrable_domain IS NOT NULL
-       |    AND s.registrable_domain <> t.registrable_domain AND l.doc_id IN
-       |      (SELECT doc_id FROM rdcanon WHERE $docFilter)),
-       |ledges AS (
-       |  SELECT src_domain, dst_domain, CAST(count(*) AS BIGINT) AS w
-       |  FROM ed GROUP BY 1, 2)""".stripMargin
-
-  /** [[linkEdgeCtes]] + 4 unrolled directed-weighted q6 PageRank rounds —
-    * ends in `r4(node, r)` alongside `nodes`/`nn`/`ow`/`iw`/`adj`. Shared
-    * by the `q_link_pagerank` and `e2e_crawl_frontier` oracles. */
-  private def linkPageRankCtes(docFilter: String = "TRUE"): String = {
-    val rounds = (1 to 4).map { i =>
-      s"""|r$i AS (
-          |  SELECT nodes.node, (SELECT 150000 // n FROM nn) + coalesce(s.c, 0) AS r
-          |  FROM nodes LEFT JOIN (
-          |    SELECT adj.dst_domain AS node,
-          |           CAST(sum((85 * r${i - 1}.r * adj.w) // (100 * adj.outw)) AS BIGINT) AS c
-          |    FROM adj JOIN r${i - 1} ON adj.src_domain = r${i - 1}.node GROUP BY 1) s USING (node))""".stripMargin
-    }.mkString(",\n")
-    s"""${linkEdgeCtes(docFilter)},
-       |nodes AS (SELECT DISTINCT node FROM (
-       |  SELECT src_domain AS node FROM ledges
-       |  UNION ALL SELECT dst_domain FROM ledges)),
-       |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-       |ow AS (SELECT src_domain AS node, CAST(sum(w) AS BIGINT) AS outw FROM ledges GROUP BY 1),
-       |iw AS (SELECT dst_domain AS node, CAST(sum(w) AS BIGINT) AS inw FROM ledges GROUP BY 1),
-       |adj AS (SELECT e.src_domain, e.dst_domain, e.w, o.outw
-       |        FROM ledges e JOIN ow o ON o.node = e.src_domain),
-       |r0 AS (SELECT node, 1000000 // nn.n AS r FROM nodes, nn),
-       $rounds""".stripMargin
-  }
-
-  /** The `raw` CTE replaying [[crawlPlantUrl]] — ONE SQL definition shared
-    * by [[crawlPslCtes]], [[linkCtes]], and the URL-rule oracle. */
-  private def crawlRawCte: String =
-    s"""raw AS (
-       |  SELECT doc_id, text,
-       |    'https://' ||
-       |    ${crawlHostSql("doc_id")} || '/p/' || CAST(doc_id % 20 AS VARCHAR) || '?a=1' AS url
-       |  FROM documents)""".stripMargin
-
-  /** SQL mirror of [[recrawlFetchLog]]'s fingerprint regimes for a
-    * canon-CTE alias `c` carrying (doc_id, canonical_url) — ONE
-    * definition under `q_recrawl_schedule` and `e2e_fetch_queue`. */
-  private def recrawlFpSql(c: String): String =
-    s"""md5(CASE WHEN ($c.doc_id % 20) % 3 = 0
-       |            THEN $c.canonical_url || '#' || CAST($c.doc_id AS VARCHAR)
-       |          WHEN ($c.doc_id % 20) % 3 = 1 THEN $c.canonical_url
-       |          ELSE $c.canonical_url || '#' || CAST($c.doc_id // 760 AS VARCHAR)
-       |     END)""".stripMargin
-
-  /** The frontier DECISION stack (through `ust`) shared by the
-    * `e2e_url_frontier` and `e2e_fetch_queue` oracles — the SQL mirror
-    * of [[urlFrontierDecisions]]: link plant → PageRank over the
-    * standing graph → epoch per-url novelty election → endorsement /
-    * per-domain robots / budget decisions. */
-  private def frontierStackCtes: String =
-    s"""${linkPageRankCtes("doc_id % 5 <> 0")},
-       |ep AS (SELECT * FROM lout WHERE doc_id % 5 = 0),
-       |eu AS (
-       |  SELECT url, CAST(min(doc_id * 1024 + link_no) AS BIGINT) AS dk,
-       |         CAST(count(*) AS BIGINT) AS n_discoveries
-       |  FROM ep GROUP BY url),
-       |pu AS (
-       |  SELECT eu.url, CAST(eu.dk // 1024 AS BIGINT) AS src_doc,
-       |         CAST(eu.dk % 1024 AS BIGINT) AS src_link,
-       |         a.registrable_domain,
-       |         CAST(coalesce(r4.r, 0) AS BIGINT) AS target_rank_q6,
-       |         r4.r IS NOT NULL AS known_domain, eu.n_discoveries
-       |  FROM eu
-       |  LEFT JOIN areg a ON a.host =
-       |    regexp_extract(eu.url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)
-       |  LEFT JOIN r4 ON r4.node = a.registrable_domain),
-       |upath AS (
-       |  SELECT url, CASE WHEN p0 = '' THEN '/' ELSE p0 END AS path
-       |  FROM (SELECT url, regexp_replace(regexp_extract(url,
-       |          '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*(.*)$$', 1), '\\?.*$$', '') AS p0
-       |        FROM eu)),
-       |${agentRuleCtes("u")},
-       |um AS (
-       |  SELECT upath.url, ru.allow,
-       |         row_number() OVER (PARTITION BY upath.url
-       |           ORDER BY len(ru.rule) DESC, ru.allow DESC, ru.rule DESC) AS rn
-       |  FROM upath JOIN pu USING (url)
-       |  JOIN urules ru ON pu.registrable_domain = ru.domain
-       |    AND starts_with(upath.path, ru.rule)),
-       |ub AS (
-       |  SELECT a.registrable_domain, CAST(count(*) AS BIGINT) AS n_pages
-       |  FROM rdcanon c JOIN areg a
-       |    ON a.host = regexp_extract(c.canonical_url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)
-       |  WHERE c.doc_id % 5 <> 0 AND a.registrable_domain IS NOT NULL GROUP BY 1),
-       |ust AS (
-       |  SELECT pu.*, coalesce(um.allow = 1, TRUE) AS allowed,
-       |         coalesce(ub.n_pages >= 30, FALSE) AS over_budget
-       |  FROM pu
-       |  LEFT JOIN (SELECT url, allow FROM um WHERE rn = 1) um USING (url)
-       |  LEFT JOIN ub ON ub.registrable_domain = pu.registrable_domain)""".stripMargin
-
-  private def crawlPslCtes: String =
-    s"""$crawlRawCte,
-       |${urlCanonCtes("rd", "raw")},
-       |pages AS (
-       |  SELECT c.doc_id,
-       |         regexp_extract(c.canonical_url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1) AS host,
-       |         len(list_filter(string_split(r.text, ' '), x -> x <> '')) AS n_toks
-       |  FROM rdcanon c JOIN raw r USING (doc_id)),
-       |${pslLookupCtes("", "pages")}""".stripMargin
-
-  /** The publicsuffix.org longest-matching-rule replay over [[pslValues]]
-    * as a prefixable CTE stack: reads DISTINCT `host` from `$hostsCte`,
-    * ends in `${p}reg(host, registrable_domain)`. Shared by
-    * [[crawlPslCtes]] (prefix "") and the link-graph oracles, so a rule
-    * or algorithm change hits every consumer or none. NOTE: the stack
-    * includes `${p}psl` — at most one prefix may appear per statement
-    * unless the names differ. */
-  private def pslLookupCtes(p: String, hostsCte: String): String =
-    s"""${p}psl(rule, kind) AS (VALUES $pslValues),
-       |${p}hl AS (
-       |  SELECT host, string_split(regexp_replace(host, ':[0-9]+$$', ''), '.') AS ls
-       |  FROM (SELECT DISTINCT host FROM $hostsCte)),
-       |${p}cand AS (
-       |  SELECT host, len(ls) AS nl, CAST(i AS INTEGER) AS i,
-       |         array_to_string(ls[len(ls) - i + 1:], '.') AS exact_c,
-       |         CASE WHEN i >= 2 THEN '*.' || array_to_string(ls[len(ls) - i + 2:], '.') END AS wild_c
-       |  FROM ${p}hl, unnest(range(1, least(len(ls), ${graft.operators.TextOps.pslCandidateDepth(graft.operators.TextOps.PublicSuffixRulesFull)}) + 1)) AS u(i)),
-       |${p}mt AS (
-       |  SELECT c.host, c.i, r.kind,
-       |         CASE WHEN r.kind = 2 THEN 1 ELSE 0 END AS exc,
-       |         CASE WHEN r.kind = 2 THEN c.i - 1 ELSE c.i END AS ps
-       |  FROM ${p}cand c JOIN ${p}psl r
-       |    ON (r.kind <> 1 AND r.rule = c.exact_c) OR (r.kind = 1 AND r.rule = c.wild_c)),
-       |${p}bq AS (
-       |  SELECT host, ps,
-       |         row_number() OVER (PARTITION BY host ORDER BY exc DESC, i DESC, kind ASC) AS rn
-       |  FROM ${p}mt),
-       |${p}reg AS (
-       |  SELECT h.host,
-       |    CASE WHEN h.host LIKE '[%' THEN NULL
-       |         WHEN regexp_matches(array_to_string(h.ls, '.'), '^[0-9.]+$$') THEN NULL
-       |         WHEN len(h.ls) > coalesce(b.ps, 1)
-       |           THEN array_to_string(h.ls[len(h.ls) - coalesce(b.ps, 1):], '.')
-       |         ELSE NULL END AS registrable_domain
-       |  FROM ${p}hl h LEFT JOIN (SELECT host, ps FROM ${p}bq WHERE rn = 1) b USING (host))""".stripMargin
-
-  /** DuckDB replay of [[graft.operators.TextOps.canonicalizeUrl]], verbatim
-    * rule for rule (implicit http:// for scheme-less input → fragment drop →
-    * scheme/host lowercase → www/default-port strip → trailing-slash strip →
-    * tracking-param drop + param sort). `srcCte` must expose (doc_id, url);
-    * the chain ends in `${p}canon(doc_id, canonical_url)`. All patterns are
-    * RE2-safe by construction on the Spark side, so both engines run the
-    * same regexes. */
-  private def urlCanonCtes(p: String, srcCte: String): String =
-    s"""${p}u0 AS (SELECT doc_id,
-       |  CASE WHEN regexp_matches(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://')
-       |       THEN url ELSE 'http://' || url END AS u FROM $srcCte),
-       |${p}u1 AS (SELECT doc_id, regexp_replace(u, '#.*', '') AS nf FROM ${p}u0),
-       |${p}u2 AS (SELECT doc_id,
-       |  regexp_extract(nf, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*)', 1) AS rawhost,
-       |  regexp_replace(nf, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', '') AS rest FROM ${p}u1),
-       |${p}u3 AS (SELECT doc_id,
-       |  regexp_replace(regexp_replace(
-       |    regexp_replace(lower(rawhost), '^(https?://)www\\.', '\\1'),
-       |    '^(http://.*):80$$', '\\1'), '^(https://.*):443$$', '\\1') AS host,
-       |  regexp_replace(regexp_replace(rest, '\\?.*', ''), '/+$$', '') AS path,
-       |  regexp_extract(rest, '\\?(.*)', 1) AS qs FROM ${p}u2),
-       |${p}canon AS (SELECT doc_id,
-       |    host || path || CASE WHEN ps IS NOT NULL AND ps <> '' THEN '?' || ps ELSE '' END AS canonical_url
-       |  FROM (SELECT doc_id, host, path,
-       |          array_to_string(list_sort(list_filter(string_split(qs, '&'), x -> x <> ''
-       |            AND substr(x,1,4) <> 'utm_' AND substr(x,1,6) <> 'gclid='
-       |            AND substr(x,1,7) <> 'fbclid=' AND substr(x,1,4) <> 'ref=')), '&') AS ps
-       |        FROM ${p}u3))""".stripMargin
-
-  /** Shared DuckDB fragment: distinct word-k-shingles per document, matching
-    * [[Dedup.shingles]] (k=3). */
-  private val DuckShingles =
-    """SELECT DISTINCT doc_id, unnest(list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 0) + 1),
-      |       i -> array_to_string((string_split(text,' '))[i:i+2], ' '))) AS shingle
-      |FROM documents""".stripMargin
-
-  // ---- shared lexical-dedup DuckDB fragments (used by the llm oracles and
-  //      the hybrid d17 oracle, which also needs the trained centroids) ----
-  private lazy val paramValues = Dedup.minHashParams(NumMinHashes)
-    .map { case (j, a, b) => s"($j, $a, $b)" }.mkString(", ")
-
-  /** One d25 arm's CTE chain (prefix `p`, text source CTE `src` with
-    * (doc_id, text)): shingles → hash set → minhash signatures → band
-    * buckets → per-planted-pair band hit + exact Jaccard ≥ threshold,
-    * ending in `${p}ok(doc_id)` = planted originals whose variant was
-    * caught by this arm. The formulas are [[sigCte]]/[[lshCandsCte]]/
-    * [[jaccardCte]] verbatim, parameterized by source. */
-  private def neardupArmCtes(p: String, src: String): String =
-    s"""|${p}sh AS (SELECT DISTINCT doc_id, unnest(list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 0) + 1),
-        |       i -> array_to_string((string_split(text,' '))[i:i+2], ' '))) AS shingle
-        |  FROM $src),
-        |${p}hh AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(shingle),1,8))::BIGINT AS h FROM ${p}sh),
-        |${p}sigs AS (SELECT doc_id, j, min((a * h + b) % ${Dedup.MinHashPrime}) AS minhash
-        |            FROM ${p}hh CROSS JOIN params GROUP BY doc_id, j),
-        |${p}banded AS (
-        |  SELECT doc_id, j // ${NumMinHashes / NumBands} AS band,
-        |         md5(array_to_string(list(minhash::VARCHAR ORDER BY j), ',')) AS bucket
-        |  FROM ${p}sigs GROUP BY doc_id, band),
-        |${p}bandhit AS (SELECT DISTINCT pp.doc_id FROM planted pp
-        |  JOIN ${p}banded x ON x.doc_id = pp.doc_id
-        |  JOIN ${p}banded y ON y.doc_id = pp.variant_id AND y.band = x.band AND y.bucket = x.bucket),
-        |${p}sz AS (SELECT doc_id, count(*) AS sz FROM ${p}hh GROUP BY doc_id),
-        |${p}int AS (SELECT pp.doc_id, count(*) AS inter FROM planted pp
-        |  JOIN ${p}hh x ON x.doc_id = pp.doc_id
-        |  JOIN ${p}hh y ON y.doc_id = pp.variant_id AND y.h = x.h GROUP BY 1),
-        |${p}ok AS (SELECT pp.doc_id FROM planted pp
-        |  JOIN ${p}bandhit b ON b.doc_id = pp.doc_id
-        |  JOIN ${p}int i ON i.doc_id = pp.doc_id
-        |  JOIN ${p}sz sa ON sa.doc_id = pp.doc_id
-        |  JOIN ${p}sz sb ON sb.doc_id = pp.variant_id
-        |  WHERE round(i.inter::DOUBLE / (sa.sz + sb.sz - i.inter)::DOUBLE, 6) >= $JaccardThreshold)""".stripMargin
-  private lazy val sigCte =
-      s"""sh AS ($DuckShingles),
-         |h AS (SELECT doc_id, ('0x' || substr(md5(shingle),1,8))::BIGINT AS h FROM sh),
-         |params(j, a, b) AS (VALUES $paramValues),
-         |sigs AS (SELECT doc_id, j, min((a * h + b) % ${Dedup.MinHashPrime}) AS minhash
-         |         FROM h CROSS JOIN params GROUP BY doc_id, j)""".stripMargin
-  private lazy val jaccardCte =
-      s"""jsh AS ($DuckShingles),
-         |jh AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(shingle),1,8))::BIGINT AS h FROM jsh),
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM jh GROUP BY doc_id),
-         |inter AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS inter
-         |          FROM jh x JOIN jh y ON x.h = y.h AND x.doc_id < y.doc_id GROUP BY 1, 2),
-         |verified AS (
-         |  SELECT doc_a, doc_b,
-         |         round(inter::DOUBLE / (sa.sz + sb.sz - inter)::DOUBLE, 6) AS jaccard
-         |  FROM inter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-         |  WHERE round(inter::DOUBLE / (sa.sz + sb.sz - inter)::DOUBLE, 6) >= $JaccardThreshold)""".stripMargin
-  private lazy val bandedCte =
-      s"""banded AS (
-         |  SELECT doc_id, j // ${NumMinHashes / NumBands} AS band,
-         |         md5(array_to_string(list(minhash::VARCHAR ORDER BY j), ',')) AS bucket
-         |  FROM sigs GROUP BY doc_id, band)""".stripMargin
-  private lazy val lshCandsCte =
-      s"""$bandedCte,
-         |cands AS (
-         |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM banded x JOIN banded y ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id
-         |  GROUP BY 1, 2)""".stripMargin
-  // LSH candidates → exact-Jaccard verify → undirected edges → min-label
-  // connected components, ending in comp(doc_id, component)
-  private lazy val componentsCte =
-      s"""$lshCandsCte,
-         |$jaccardCte,
-         |pairs AS (
-         |  SELECT c.doc_a, c.doc_b FROM cands c
-         |  JOIN verified v ON c.doc_a = v.doc_a AND c.doc_b = v.doc_b),
-         |edges AS (SELECT doc_a AS v, doc_b AS u FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(v, l) AS (
-         |  SELECT v, v FROM (SELECT DISTINCT v FROM edges)
-         |  UNION
-         |  SELECT e.v, r.l FROM edges e JOIN reach r ON e.u = r.v),
-         |comp AS (SELECT v AS doc_id, CAST(min(l) AS BIGINT) AS component
-         |         FROM reach GROUP BY v)""".stripMargin
-
-  private def llmOracleSql: Map[String, String] = {
-    // The composed cleaning pipeline's oracle: two strip passes (eval-set
-    // window decontamination, then corpus-wide duplicate spans on the
-    // RESULT), then the full sig→band→candidate→verify→components→survivor
-    // →split chain over the twice-cleaned text. Same window/islands/strip
-    // fragments as the d14/d14b/d15 oracles, chained; same LSH/Jaccard/
-    // recursive-closure fragments as e2e_neardup_build, re-rooted on the
-    // cleaned relation instead of `documents`.
-    def winUnnest(srcT: String): String =
-      s"""SELECT doc_id, u.pos, u.h FROM (
-         |    SELECT doc_id,
-         |      unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-         |        i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-         |    FROM $srcT WHERE len(ws) >= 8)""".stripMargin
-    def tokUnnest(srcT: String): String =
-      s"""SELECT doc_id, u.i, u.tok FROM (
-         |    SELECT doc_id, unnest(list_transform(range(1, len(ws) + 1),
-         |        i -> struct_pack(i := i - 1, tok := ws[i]))) AS u
-         |    FROM $srcT)""".stripMargin
-    val cleanBuildSql =
-      s"""WITH RECURSIVE
-         |corp0 AS (SELECT doc_id, source, text FROM documents WHERE doc_id % 11 <> 0),
-         |ev AS (SELECT doc_id, text FROM documents WHERE doc_id % 11 = 0),
-         |t1 AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM corp0),
-         |te AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM ev),
-         |w1 AS (${winUnnest("t1")}),
-         |we AS (SELECT DISTINCT h FROM (${winUnnest("te")})),
-         |dup1 AS (SELECT w1.doc_id, w1.pos FROM w1 JOIN we USING (h)),
-         |g1 AS (SELECT doc_id, pos,
-         |              pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-         |       FROM dup1),
-         |sp1 AS (SELECT doc_id, min(pos) AS s, max(pos) + 8 AS e FROM g1 GROUP BY doc_id, grp),
-         |tk1 AS (${tokUnnest("t1")}),
-         |kept1 AS (
-         |  SELECT tk1.doc_id, tk1.i, tk1.tok FROM tk1
-         |  WHERE NOT EXISTS (SELECT 1 FROM sp1
-         |                    WHERE sp1.doc_id = tk1.doc_id AND tk1.i >= sp1.s AND tk1.i < sp1.e)),
-         |c1 AS (
-         |  SELECT c.doc_id, c.source,
-         |         COALESCE((SELECT string_agg(k.tok, ' ' ORDER BY k.i)
-         |                   FROM kept1 k WHERE k.doc_id = c.doc_id), '') AS text
-         |  FROM corp0 c),
-         |t2 AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM c1),
-         |w2 AS (${winUnnest("t2")}),
-         |occ2 AS (SELECT h, count(*) AS occ FROM w2 GROUP BY h),
-         |dup2 AS (SELECT w2.doc_id, w2.pos FROM w2 JOIN occ2 USING (h) WHERE occ2.occ >= 2),
-         |g2 AS (SELECT doc_id, pos,
-         |              pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-         |       FROM dup2),
-         |sp2 AS (SELECT doc_id, min(pos) AS s, max(pos) + 8 AS e FROM g2 GROUP BY doc_id, grp),
-         |tk2 AS (${tokUnnest("t2")}),
-         |kept2 AS (
-         |  SELECT tk2.doc_id, tk2.i, tk2.tok FROM tk2
-         |  WHERE NOT EXISTS (SELECT 1 FROM sp2
-         |                    WHERE sp2.doc_id = tk2.doc_id AND tk2.i >= sp2.s AND tk2.i < sp2.e)),
-         |c2 AS (
-         |  SELECT c1.doc_id, c1.source,
-         |         COALESCE((SELECT string_agg(k.tok, ' ' ORDER BY k.i)
-         |                   FROM kept2 k WHERE k.doc_id = c1.doc_id), '') AS text
-         |  FROM c1),
-         |csh AS (SELECT DISTINCT doc_id,
-         |               unnest(list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 0) + 1),
-         |                 i -> array_to_string((string_split(text,' '))[i:i+2], ' '))) AS shingle
-         |        FROM c2),
-         |ch AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(shingle),1,8))::BIGINT AS h FROM csh),
-         |params(j, a, b) AS (VALUES $paramValues),
-         |sigs AS (SELECT doc_id, j, min((a * h + b) % ${Dedup.MinHashPrime}) AS minhash
-         |         FROM ch CROSS JOIN params GROUP BY doc_id, j),
-         |banded AS (
-         |  SELECT doc_id, j // ${NumMinHashes / NumBands} AS band,
-         |         md5(array_to_string(list(minhash::VARCHAR ORDER BY j), ',')) AS bucket
-         |  FROM sigs GROUP BY doc_id, band),
-         |cands AS (
-         |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM banded x JOIN banded y ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id
-         |  GROUP BY 1, 2),
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM ch GROUP BY doc_id),
-         |inter AS (SELECT ca.doc_a, ca.doc_b, count(*) AS inter
-         |          FROM cands ca
-         |          JOIN ch x ON x.doc_id = ca.doc_a
-         |          JOIN ch y ON y.doc_id = ca.doc_b AND y.h = x.h
-         |          GROUP BY 1, 2),
-         |pairs AS (
-         |  SELECT doc_a, doc_b
-         |  FROM inter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-         |  WHERE round(inter::DOUBLE / (sa.sz + sb.sz - inter)::DOUBLE, 6) >= $JaccardThreshold),
-         |edges AS (SELECT doc_a AS v, doc_b AS u FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(v, l) AS (
-         |  SELECT v, v FROM (SELECT DISTINCT v FROM edges)
-         |  UNION
-         |  SELECT e.v, r.l FROM edges e JOIN reach r ON e.u = r.v),
-         |comp AS (SELECT v AS doc_id, CAST(min(l) AS BIGINT) AS component
-         |         FROM reach GROUP BY v),
-         |members AS (SELECT component, count(*) AS n_members FROM comp GROUP BY component),
-         |surv AS (
-         |  SELECT c2.doc_id, c2.source, c2.text,
-         |         CAST(COALESCE(m.n_members, 1) AS BIGINT) AS n_members
-         |  FROM c2
-         |  LEFT JOIN comp c ON c2.doc_id = c.doc_id
-         |  LEFT JOIN members m ON c2.doc_id = m.component
-         |  WHERE c.component IS NULL OR c2.doc_id = c.component)
-         |SELECT doc_id, source, n_members,
-         |       CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
-         |       md5(text) AS clean_md5
-         |FROM (SELECT *, ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS b
-         |      FROM surv)
-         |ORDER BY doc_id""".stripMargin
-    val langProfiles = TextOps.DefaultLangProfiles.toSeq.sortBy(_._1)
-    val langScoreCols = langProfiles.map { case (lang, words) =>
-      val arr = words.map(w => s"'$w'").mkString("[", ", ", "]")
-      s"round(len(list_filter(toks, x -> list_contains($arr, x)))::DOUBLE / len(toks), 6) AS score_$lang"
-    }.mkString(",\n  ")
-    val greatestAll = langProfiles.map { case (l, _) => s"score_$l" }.mkString("greatest(", ", ", ")")
-    val langCase = langProfiles.map { case (l, _) => s"WHEN score_$l = $greatestAll THEN '$l'" }
-      .mkString("\n       ")
-
-    Map(
-      // packing: global token prefix sum in doc_id order, cut into 128-token
-      // chunks; // == Spark's DIV on non-negative longs (the Spark side's
-      // two-phase prefix sum replaces this single-task window at scale)
-      "q_pack_sequences" ->
-        """WITH t AS (
-          |  SELECT doc_id,
-          |         len(list_filter(string_split(text, ' '), w -> w <> '')) AS n_tokens
-          |  FROM documents),
-          |p AS (
-          |  SELECT doc_id, n_tokens,
-          |         CAST(COALESCE(sum(n_tokens) OVER (ORDER BY doc_id
-          |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS tok_start
-          |  FROM t)
-          |SELECT doc_id, n_tokens, tok_start,
-          |       tok_start // 128 AS chunk_start,
-          |       CASE WHEN n_tokens = 0 THEN tok_start // 128
-          |            ELSE (tok_start + n_tokens - 1) // 128 END AS chunk_end,
-          |       CASE WHEN n_tokens = 0 THEN CAST(0 AS BIGINT)
-          |            ELSE (tok_start + n_tokens - 1) // 128 - tok_start // 128 + 1 END AS n_chunks
-          |FROM p ORDER BY doc_id""".stripMargin,
-
-      // duplicate-content stats: counts over md5(word-3-gram) digests — the
-      // same digests the Spark side shuffles, so equal even under collision
-      "x9_repetition_stats" ->
-        """WITH toks AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
-          |  FROM documents),
-          |w AS (SELECT doc_id, unnest(ws) AS w FROM toks),
-          |wc AS (SELECT doc_id, w, count(*) AS c FROM w GROUP BY doc_id, w),
-          |wstats AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_words,
-          |                  CAST(max(c) AS BIGINT) AS top_word_count
-          |           FROM wc GROUP BY doc_id),
-          |g AS (SELECT doc_id,
-          |             unnest(list_transform(range(1, greatest(len(ws) - 2, 0) + 1),
-          |               i -> md5(array_to_string(ws[i:i+2], ' ')))) AS g
-          |      FROM toks WHERE len(ws) >= 3),
-          |gc AS (SELECT doc_id, g, count(*) AS c FROM g GROUP BY doc_id, g),
-          |gstats AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_grams,
-          |                  CAST(count(*) AS BIGINT) AS n_distinct_grams
-          |           FROM gc GROUP BY doc_id)
-          |SELECT d.doc_id,
-          |       COALESCE(w.n_words, 0) AS n_words,
-          |       COALESCE(g.n_grams, 0) AS n_grams,
-          |       COALESCE(g.n_distinct_grams, 0) AS n_distinct_grams,
-          |       CASE WHEN COALESCE(g.n_grams, 0) = 0 THEN 0.0
-          |            ELSE (g.n_grams - g.n_distinct_grams)::DOUBLE / g.n_grams::DOUBLE
-          |       END AS dup_gram_frac,
-          |       CASE WHEN COALESCE(w.n_words, 0) = 0 THEN 0.0
-          |            ELSE w.top_word_count::DOUBLE / w.n_words::DOUBLE
-          |       END AS top_word_frac
-          |FROM documents d
-          |LEFT JOIN wstats w ON d.doc_id = w.doc_id
-          |LEFT JOIN gstats g ON d.doc_id = g.doc_id
-          |ORDER BY d.doc_id""".stripMargin,
-
-      // identical add-k bigram model: transitions (v,w) from 1-based token
-      // list positions; NLL fixed-pointed to q6 longs per transition (exact
-      // order-independent sum), avg/ppl round4'd from the same exact inputs
-      "x11_bigram_perplexity" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-          |  FROM documents),
-          |trans AS (
-          |  SELECT doc_id, toks[i - 1] AS v, toks[i] AS w
-          |  FROM t, unnest(range(2, len(toks) + 1)) AS u(i)),
-          |vocab AS (
-          |  SELECT count(DISTINCT tok)::DOUBLE AS v_size
-          |  FROM (SELECT unnest(toks) AS tok FROM t)),
-          |bigram AS (SELECT v, w, count(*) AS c_vw FROM trans GROUP BY v, w),
-          |ctx AS (SELECT v, count(*) AS c_v FROM trans GROUP BY v),
-          |scored AS (
-          |  SELECT trans.doc_id,
-          |         CAST(floor(-ln((c_vw::DOUBLE + 0.5) / (c_v::DOUBLE + 0.5 * vocab.v_size))
-          |                    * 1000000.0 + 0.5) AS BIGINT) AS nll_q6
-          |  FROM trans JOIN bigram USING (v, w) JOIN ctx USING (v), vocab)
-          |SELECT doc_id, count(*) AS n_trans,
-          |       CAST(sum(nll_q6) AS BIGINT) AS sum_nll_q6,
-          |       floor(sum(nll_q6)::DOUBLE / 1000000.0 / count(*)::DOUBLE * 10000.0 + 0.5) / 10000.0 AS avg_nll,
-          |       floor(exp(sum(nll_q6)::DOUBLE / 1000000.0 / count(*)::DOUBLE) * 10000.0 + 0.5) / 10000.0 AS ppl
-          |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      // interpolated Kneser–Ney bigram model: same transition frame as x11;
-      // discount D=0.75 (binary-exact); probability written in the SAME
-      // textual op order as the Spark side — (c_vw−D)/c_v + (D·n1_v/c_v)·
-      // (n1_w/B) — over exact integer counts, so every double agrees
-      // bitwise; NLL q6-fixed per transition and summed as longs
-      "x15_kn_perplexity" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-          |  FROM documents),
-          |trans AS (
-          |  SELECT doc_id, toks[i - 1] AS v, toks[i] AS w
-          |  FROM t, unnest(range(2, len(toks) + 1)) AS u(i)),
-          |bigram AS (SELECT v, w, count(*) AS c_vw FROM trans GROUP BY v, w),
-          |ctx AS (SELECT v, count(*) AS c_v, count(DISTINCT w) AS n1_v FROM trans GROUP BY v),
-          |cont AS (SELECT w, count(DISTINCT v) AS n1_w FROM trans GROUP BY w),
-          |bt AS (SELECT count(*)::DOUBLE AS btypes FROM bigram),
-          |scored AS (
-          |  SELECT trans.doc_id,
-          |         CAST(floor(-ln((c_vw::DOUBLE - 0.75) / c_v::DOUBLE
-          |                        + (0.75 * n1_v::DOUBLE / c_v::DOUBLE)
-          |                          * (n1_w::DOUBLE / btypes))
-          |                    * 1000000.0 + 0.5) AS BIGINT) AS nll_q6
-          |  FROM trans JOIN bigram USING (v, w) JOIN ctx USING (v) JOIN cont USING (w), bt)
-          |SELECT doc_id, count(*) AS n_trans,
-          |       CAST(sum(nll_q6) AS BIGINT) AS sum_nll_q6,
-          |       floor(sum(nll_q6)::DOUBLE / 1000000.0 / count(*)::DOUBLE * 10000.0 + 0.5) / 10000.0 AS avg_nll,
-          |       floor(exp(sum(nll_q6)::DOUBLE / 1000000.0 / count(*)::DOUBLE) * 10000.0 + 0.5) / 10000.0 AS ppl
-          |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      // q_ppl_buckets' oracle moved to the dynamic [[pplOracleSql]]: the
-      // engine's per-doc micro averages splice in as BIGINT VALUES with a
-      // fail-closed +/-1 check against the oracle's own KN recompute
-      // (ADVICE r14: the live cross-engine ln fed EXACT integer tercile
-      // thresholds — the x14/doremi flake class, amplified by the grid).
-
-      // same planted terms, same tokenization as p1, distinct per (doc,
-      // token) before the IN-list join
-      "x16_blocklist_hits" ->
-        """WITH dirty AS (
-          |  SELECT doc_id,
-          |    CASE WHEN doc_id % 22 = 0 THEN text || ' zzbadalpha' || ' zzbadbeta zzbadalpha'
-          |         WHEN doc_id % 11 = 0 THEN text || ' zzbadalpha'
-          |         ELSE text END AS dirty
-          |  FROM documents),
-          |toks AS (
-          |  SELECT DISTINCT doc_id, unnest(string_split(lower(dirty), ' ')) AS tok FROM dirty),
-          |hits AS (
-          |  SELECT doc_id, tok FROM toks
-          |  WHERE tok IN ('zzbadalpha', 'zzbadbeta', 'zzbadgamma'))
-          |SELECT doc_id, count(*) AS n_blocked, min(tok) AS first_blocked
-          |FROM hits GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      // identical planted chrome and the identical RE2-safe replace chain
-      // in the identical order: script/style elements, tags, entities
-      // (&amp; last, single-pass), whitespace collapse; DuckDB needs the
-      // explicit 'g' flag to match Spark's replace-all default, and the
-      // '(?s)' inline flag is RE2-native
-      "x17_html_extract" ->
-        """SELECT doc_id, trim(regexp_replace(
-          |  replace(replace(replace(replace(replace(replace(
-          |    regexp_replace(regexp_replace(regexp_replace(
-          |      CASE WHEN doc_id % 7 = 0
-          |           THEN '<html><head><title>T</title><style type="text/css">p { color: red; }</style></head><body><p class="main">'
-          |                || text ||
-          |                '</p><script>var x = 1 < 2 && 2 > 1;</script><br/>&lt;tag&gt; &amp;amp; &quot;q&#39; x&nbsp;end</body></html>'
-          |           ELSE text END,
-          |      '(?s)<script[^>]*>.*?</script>', ' ', 'g'),
-          |      '(?s)<style[^>]*>.*?</style>', ' ', 'g'),
-          |      '<[^>]*>', ' ', 'g'),
-          |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&'),
-          |  '[ \t\n\r\f]+', ' ', 'g')) AS clean
-          |FROM documents ORDER BY doc_id""".stripMargin,
-
-      // the same planted spelling variants, the canonicalization chain
-      // replayed rule for rule (urlCanonCtes == TextOps.canonicalizeUrl)
-      "q_url_canonical" ->
-        s"""WITH raw AS (
-           |  SELECT doc_id,
-           |    CASE CAST(doc_id % 6 AS INTEGER)
-           |      WHEN 0 THEN 'https://EXAMPLE.com/docs/' || CAST(doc_id % 40 AS VARCHAR) || '?b=2&a=1'
-           |      WHEN 1 THEN 'https://www.example.com:443/docs/' || CAST(doc_id % 40 AS VARCHAR) || '?a=1&b=2#frag'
-           |      WHEN 2 THEN 'HTTPS://example.com/docs/' || CAST(doc_id % 40 AS VARCHAR) || '/?a=1&utm_source=feed&b=2'
-           |      WHEN 3 THEN 'https://example.com/docs/' || CAST(doc_id % 40 AS VARCHAR) || '?utm_campaign=x&fbclid=zz&a=1&b=2'
-           |      WHEN 4 THEN 'https://example.com/docs/' || CAST(doc_id % 40 AS VARCHAR) || '?b=2&ref=home&a=1'
-           |      ELSE 'example.com/docs/' || CAST(doc_id % 40 AS VARCHAR) || '?a=1&b=2'
-           |    END AS url
-           |  FROM documents),
-           |${urlCanonCtes("", "raw")}
-           |SELECT c.canonical_url, CAST(count(*) AS BIGINT) AS n_pages,
-           |       CAST(count(DISTINCT r.url) AS BIGINT) AS n_spellings,
-           |       CAST(min(r.doc_id) AS BIGINT) AS first_doc
-           |FROM canon c JOIN raw r USING (doc_id)
-           |GROUP BY c.canonical_url ORDER BY c.canonical_url""".stripMargin,
-
-      // same planted multi-host spellings, same canonicalization chain,
-      // host = the same authority regex, token counts over raw text
-      "q_domain_stats" ->
-        s"""WITH raw AS (
-           |  SELECT doc_id, text,
-           |    CASE CAST(doc_id % 4 AS INTEGER)
-           |      WHEN 0 THEN 'https://WWW.h' || CAST(doc_id % 5 AS VARCHAR) || '.com/p/' || CAST(doc_id % 20 AS VARCHAR) || '?a=1'
-           |      WHEN 1 THEN 'https://h' || CAST(doc_id % 5 AS VARCHAR) || '.com:443/p/' || CAST(doc_id % 20 AS VARCHAR) || '?a=1&utm_x=1'
-           |      WHEN 2 THEN 'h' || CAST(doc_id % 5 AS VARCHAR) || '.com/p/' || CAST(doc_id % 20 AS VARCHAR) || '?a=1'
-           |      ELSE 'https://h' || CAST(doc_id % 5 AS VARCHAR) || '.com/p/' || CAST(doc_id % 20 AS VARCHAR) || '/?a=1'
-           |    END AS url
-           |  FROM documents),
-           |${urlCanonCtes("ds", "raw")},
-           |hosts AS (
-           |  SELECT c.doc_id, c.canonical_url,
-           |         regexp_extract(c.canonical_url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1) AS host,
-           |         len(list_filter(string_split(r.text, ' '), x -> x <> '')) AS n_toks
-           |  FROM dscanon c JOIN raw r USING (doc_id))
-           |SELECT host, CAST(count(*) AS BIGINT) AS n_pages,
-           |       CAST(count(DISTINCT canonical_url) AS BIGINT) AS n_resources,
-           |       CAST(sum(n_toks) AS BIGINT) AS n_tokens
-           |FROM hosts GROUP BY host ORDER BY host""".stripMargin,
-
-      // the same canonical chain, then the p=10 register replay PER HOST
-      // (bucket = top 10 of the 48 hash bits, ρ = 39 − bitlength(rest),
-      // empty buckets ρ = 0 contribute 2^39 to the q39 harmonic sum) with
-      // the exact distinct alongside
-      "q_domain_stats_hll" ->
-        s"""WITH raw AS (
-           |  SELECT doc_id, text,
-           |    CASE CAST(doc_id % 4 AS INTEGER)
-           |      WHEN 0 THEN 'https://WWW.h' || CAST(doc_id % 5 AS VARCHAR) || '.com/p/' || CAST(doc_id % 20 AS VARCHAR) || '?a=1'
-           |      WHEN 1 THEN 'https://h' || CAST(doc_id % 5 AS VARCHAR) || '.com:443/p/' || CAST(doc_id % 20 AS VARCHAR) || '?a=1&utm_x=1'
-           |      WHEN 2 THEN 'h' || CAST(doc_id % 5 AS VARCHAR) || '.com/p/' || CAST(doc_id % 20 AS VARCHAR) || '?a=1'
-           |      ELSE 'https://h' || CAST(doc_id % 5 AS VARCHAR) || '.com/p/' || CAST(doc_id % 20 AS VARCHAR) || '/?a=1'
-           |    END AS url
-           |  FROM documents),
-           |${urlCanonCtes("dh", "raw")},
-           |hosts AS (
-           |  SELECT c.doc_id, c.canonical_url,
-           |         regexp_extract(c.canonical_url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1) AS host
-           |  FROM dhcanon c),
-           |hh AS (SELECT host,
-           |         ('0x' || substr(md5('hll:' || canonical_url), 1, 12))::BIGINT AS h FROM hosts),
-           |hbr AS (SELECT host, h // ${1L << 38} AS bucket, h % ${1L << 38} AS rest FROM hh),
-           |hrr AS (SELECT host, bucket,
-           |          CASE WHEN rest = 0 THEN 39 ELSE 39 - len(bin(rest)) END AS rho FROM hbr),
-           |hmx AS (SELECT host, bucket, max(rho) AS rho FROM hrr GROUP BY 1, 2),
-           |hhosts AS (SELECT DISTINCT host FROM hosts),
-           |hallb AS (SELECT hhosts.host, CAST(i AS BIGINT) AS bucket
-           |          FROM hhosts, unnest(range(0, 1024)) AS u(i)),
-           |hfr AS (SELECT a.host, a.bucket, coalesce(m.rho, 0) AS rho
-           |        FROM hallb a LEFT JOIN hmx m ON m.host = a.host AND m.bucket = a.bucket),
-           |hex AS (SELECT host, CAST(count(*) AS BIGINT) AS n_pages,
-           |               CAST(count(DISTINCT canonical_url) AS BIGINT) AS exact_resources
-           |        FROM hosts GROUP BY 1)
-           |SELECT hex.host, hex.n_pages, hex.exact_resources,
-           |       CAST(count(*) AS BIGINT) AS m,
-           |       CAST(sum(CASE WHEN hfr.rho > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_buckets_hit,
-           |       CAST(sum(CAST(1 AS BIGINT) << (39 - hfr.rho)) AS BIGINT) AS inv_q39
-           |FROM hfr JOIN hex ON hex.host = hfr.host
-           |GROUP BY hex.host, hex.n_pages, hex.exact_resources
-           |ORDER BY hex.host""".stripMargin,
-
-      // replays the publicsuffix.org longest-matching-rule algorithm over
-      // the SAME rule table: candidates = trailing-label suffixes (≤5) +
-      // their *.-wildcard forms; winner = exception-first then longest
-      // (kind tiebreak mirrored from the engine); public suffix = matched
-      // labels (minus the leftmost for an exception), default bare TLD;
-      // registrable = suffix + one label, NULL when the host IS a suffix
-      // …plus the p=10 register replay PER DOMAIN over the host values
-      // (the q_domain_stats_hll contract; IS NOT DISTINCT FROM joins so
-      // the NULL-domain group — IP literals — reconstructs too)
-      "q_registrable_domain_stats" ->
-        s"""WITH $crawlPslCtes,
-           |base AS (
-           |  SELECT r.registrable_domain,
-           |         CAST(count(DISTINCT p.host) AS BIGINT) AS n_hosts,
-           |         CAST(count(*) AS BIGINT) AS n_pages,
-           |         CAST(sum(p.n_toks) AS BIGINT) AS n_tokens
-           |  FROM pages p JOIN reg r USING (host)
-           |  GROUP BY 1),
-           |hh AS (SELECT r.registrable_domain AS dom,
-           |         ('0x' || substr(md5('hll:' || p.host), 1, 12))::BIGINT AS h
-           |       FROM pages p JOIN reg r USING (host)),
-           |hbr AS (SELECT dom, h // ${1L << 38} AS bucket, h % ${1L << 38} AS rest FROM hh),
-           |hrr AS (SELECT dom, bucket,
-           |          CASE WHEN rest = 0 THEN 39 ELSE 39 - len(bin(rest)) END AS rho FROM hbr),
-           |hmx AS (SELECT dom, bucket, max(rho) AS rho FROM hrr GROUP BY 1, 2),
-           |hdoms AS (SELECT DISTINCT dom FROM hh),
-           |hallb AS (SELECT hdoms.dom, CAST(i AS BIGINT) AS bucket
-           |          FROM hdoms, unnest(range(0, 1024)) AS u(i)),
-           |hfr AS (SELECT a.dom, a.bucket, coalesce(m.rho, 0) AS rho
-           |        FROM hallb a LEFT JOIN hmx m
-           |          ON m.dom IS NOT DISTINCT FROM a.dom AND m.bucket = a.bucket),
-           |hagg AS (SELECT dom, CAST(count(*) AS BIGINT) AS m,
-           |                CAST(sum(CASE WHEN rho > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_buckets_hit,
-           |                CAST(sum(CAST(1 AS BIGINT) << (39 - rho)) AS BIGINT) AS inv_q39
-           |         FROM hfr GROUP BY 1)
-           |SELECT b.registrable_domain, b.n_hosts, b.n_pages, b.n_tokens,
-           |       h.m, h.n_buckets_hit, h.inv_q39
-           |FROM base b JOIN hagg h ON h.dom IS NOT DISTINCT FROM b.registrable_domain
-           |ORDER BY 1 NULLS FIRST""".stripMargin,
-
-      // robots precedence replay: same canonical chain, same prefix rules
-      // as VALUES, winner by (len DESC, allow DESC, rule DESC) — the
-      // mirrored total order of the engine's max(struct) election
-      "q_url_rules_filter" ->
-        s"""WITH $crawlRawCte,
-           |${urlCanonCtes("ur", "raw")},
-           |p AS (
-           |  SELECT doc_id, canonical_url,
-           |    CASE WHEN p0 = '' THEN '/' ELSE p0 END AS path
-           |  FROM (SELECT doc_id, canonical_url,
-           |          regexp_replace(regexp_extract(canonical_url,
-           |            '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*(.*)$$', 1), '\\?.*$$', '') AS p0
-           |        FROM urcanon)),
-           |r(rule, allow) AS (VALUES $urlRuleValues),
-           |m AS (
-           |  SELECT p.doc_id, r.rule, r.allow,
-           |         row_number() OVER (PARTITION BY p.doc_id
-           |           ORDER BY len(r.rule) DESC, r.allow DESC, r.rule DESC) AS rn
-           |  FROM p JOIN r ON starts_with(p.path, r.rule))
-           |SELECT p.doc_id, p.canonical_url, p.path,
-           |       m.rule AS matched_rule,
-           |       coalesce(m.allow = 1, TRUE) AS allowed
-           |FROM p LEFT JOIN (SELECT doc_id, rule, allow FROM m WHERE rn = 1) m USING (doc_id)
-           |ORDER BY p.doc_id""".stripMargin,
-
-      // the per-domain joined form: the same crawl + PSL stack resolves
-      // each URL's registrable domain, then the election replays over
-      // ONLY that domain's rows of the (domain, rule, allow) dimension —
-      // longest DESC, allow DESC, rule DESC, no match / no domain ⇒
-      // allowed
-      "q_url_rules_per_domain" ->
-        s"""WITH $crawlPslCtes,
-           |p AS (
-           |  SELECT c.doc_id, c.canonical_url, r.registrable_domain,
-           |    CASE WHEN p0 = '' THEN '/' ELSE p0 END AS path
-           |  FROM (SELECT doc_id, canonical_url,
-           |          regexp_replace(regexp_extract(canonical_url,
-           |            '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*(.*)$$', 1), '\\?.*$$', '') AS p0
-           |        FROM rdcanon) c
-           |  JOIN pages pg USING (doc_id)
-           |  JOIN reg r ON r.host = pg.host),
-           |dr(domain, rule, allow) AS (VALUES $domainRuleValues),
-           |m AS (
-           |  SELECT p.doc_id, dr.rule, dr.allow,
-           |         row_number() OVER (PARTITION BY p.doc_id
-           |           ORDER BY len(dr.rule) DESC, dr.allow DESC, dr.rule DESC) AS rn
-           |  FROM p JOIN dr ON p.registrable_domain = dr.domain
-           |    AND starts_with(p.path, dr.rule))
-           |SELECT p.doc_id, p.canonical_url, p.registrable_domain, p.path,
-           |       m.rule AS matched_rule,
-           |       coalesce(m.allow = 1, TRUE) AS allowed
-           |FROM p LEFT JOIN (SELECT doc_id, rule, allow FROM m WHERE rn = 1) m USING (doc_id)
-           |ORDER BY p.doc_id""".stripMargin,
-
-      // the agent-group election replay (one shared CTE definition with
-      // the frontier oracles): groups matching 'graftbot/1.0' (prefix or
-      // *) → most specific per domain → the SAME per-domain longest-match
-      // election over only the elected group's rules
-      "q_url_rules_agent_groups" ->
-        s"""WITH $crawlPslCtes,
-           |p AS (
-           |  SELECT c.doc_id, c.canonical_url, r.registrable_domain,
-           |    CASE WHEN p0 = '' THEN '/' ELSE p0 END AS path
-           |  FROM (SELECT doc_id, canonical_url,
-           |          regexp_replace(regexp_extract(canonical_url,
-           |            '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*(.*)$$', 1), '\\?.*$$', '') AS p0
-           |        FROM rdcanon) c
-           |  JOIN pages pg USING (doc_id)
-           |  JOIN reg r ON r.host = pg.host),
-           |${agentRuleCtes("g")},
-           |m AS (
-           |  SELECT p.doc_id, dr.rule, dr.allow,
-           |         row_number() OVER (PARTITION BY p.doc_id
-           |           ORDER BY len(dr.rule) DESC, dr.allow DESC, dr.rule DESC) AS rn
-           |  FROM p JOIN grules dr ON p.registrable_domain = dr.domain
-           |    AND starts_with(p.path, dr.rule))
-           |SELECT p.doc_id, p.canonical_url, p.registrable_domain, p.path,
-           |       m.rule AS matched_rule,
-           |       coalesce(m.allow = 1, TRUE) AS allowed
-           |FROM p LEFT JOIN (SELECT doc_id, rule, allow FROM m WHERE rn = 1) m USING (doc_id)
-           |ORDER BY p.doc_id""".stripMargin,
-
-      // the freshness replay: the same planted fetch log (md5 fingerprint
-      // regimes by path class), per-URL lag-based change counts, exact
-      // integer rate (// = Spark's div) and priority, rank over
-      // (never_fetched DESC, priority DESC, url)
-      "q_recrawl_schedule" ->
-        s"""WITH $crawlRawCte,
-           |${urlCanonCtes("rc", "raw")},
-           |lg AS (
-           |  SELECT c.doc_id AS epoch, c.canonical_url AS url,
-           |         ${recrawlFpSql("c")} AS fp
-           |  FROM rccanon c WHERE c.doc_id % 5 <> 0),
-           |ch AS (
-           |  SELECT url, epoch, fp,
-           |         lag(fp) OVER (PARTITION BY url ORDER BY epoch) AS prev
-           |  FROM lg),
-           |st AS (
-           |  SELECT url, CAST(count(*) AS BIGINT) AS n_fetches,
-           |         CAST(max(epoch) AS BIGINT) AS last_fetch,
-           |         CAST(sum(CASE WHEN prev IS NOT NULL AND prev <> fp
-           |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_changes
-           |  FROM ch GROUP BY url),
-           |un AS (SELECT DISTINCT canonical_url AS url FROM rccanon),
-           |nw AS (SELECT CAST(max(doc_id) + 1 AS BIGINT) AS now FROM documents),
-           |p0 AS (
-           |  SELECT u.url, st.url IS NULL AS never_fetched,
-           |         st.n_fetches, st.last_fetch, st.n_changes,
-           |         CASE WHEN st.url IS NULL THEN NULL
-           |              ELSE nw.now - st.last_fetch END AS age,
-           |         CAST(CASE WHEN st.url IS NULL THEN NULL
-           |              WHEN st.n_fetches <= 1 THEN 500000
-           |              ELSE st.n_changes * 1000000 // (st.n_fetches - 1)
-           |         END AS BIGINT) AS change_rate_q6
-           |  FROM un u LEFT JOIN st ON st.url = u.url CROSS JOIN nw),
-           |pr AS (
-           |  SELECT *, CAST(age * change_rate_q6 AS BIGINT) AS priority_q6
-           |  FROM p0)
-           |SELECT url, never_fetched, n_fetches, last_fetch, n_changes,
-           |       CAST(age AS BIGINT) AS age, change_rate_q6, priority_q6,
-           |       CAST(row_number() OVER (ORDER BY never_fetched DESC,
-           |         priority_q6 DESC NULLS LAST, url) AS BIGINT) AS fetch_rank
-           |FROM pr ORDER BY url""".stripMargin,
-
-      // the same crawl + PSL stack: standing (% 5 <> 0) per-domain counts,
-      // then the % 5 = 0 epoch's probe decisions at budget 30
-      "q_domain_budget" ->
-        s"""WITH $crawlPslCtes,
-           |cnt AS (
-           |  SELECT r.registrable_domain, count(*) AS n_pages
-           |  FROM pages p JOIN reg r USING (host)
-           |  WHERE p.doc_id % 5 <> 0 GROUP BY 1)
-           |SELECT p.doc_id, c.canonical_url, p.host, r.registrable_domain,
-           |       CAST(coalesce(cnt.n_pages, 0) AS BIGINT) AS domain_pages,
-           |       coalesce(cnt.n_pages, 0) >= 30 AS over_budget
-           |FROM pages p
-           |JOIN rdcanon c USING (doc_id)
-           |JOIN reg r USING (host)
-           |LEFT JOIN cnt USING (registrable_domain)
-           |WHERE p.doc_id % 5 = 0 ORDER BY p.doc_id""".stripMargin,
-
-      // the link CTE stack replays plant → tag extraction → the four
-      // resolution arms → canonicalization, verbatim rule for rule
-      "x20_link_extract" ->
-        s"""WITH $linkCtes
-           |SELECT doc_id, link_no, href, url, dst_host, anchor
-           |FROM lout ORDER BY doc_id, link_no""".stripMargin,
-
-      // extracted links + the PSL replay on BOTH endpoints' hosts; NULL
-      // (IP-literal) and self-domain edges excluded as in the engine
-      "q_host_link_graph" ->
-        s"""WITH ${linkEdgeCtes()}
-           |SELECT src_domain, dst_domain, w AS n_links
-           |FROM ledges ORDER BY src_domain, dst_domain""".stripMargin,
-
-      // the maintenance identity's oracle IS the from-scratch rebuild over
-      // the full corpus — a hash match proves append == rebuild
-      // cross-engine (edge derivation is per-doc local, counts additive)
-      "q_link_graph_append" ->
-        s"""WITH ${linkEdgeCtes()}
-           |SELECT src_domain, dst_domain, w AS n_links
-           |FROM ledges ORDER BY src_domain, dst_domain""".stripMargin,
-
-      // 4 unrolled directed-weighted q6 PageRank rounds over the domain
-      // edge list — same floor-div long arithmetic as the Spark loop
-      // ((85·r·w) // (100·outw), base 150000 // N), every sum CAST back
-      // to BIGINT (the r15 HUGEINT lesson)
-      "q_link_pagerank" ->
-        s"""WITH ${linkPageRankCtes()}
-           |SELECT nodes.node, coalesce(ow.outw, 0) AS out_weight,
-           |       coalesce(iw.inw, 0) AS in_weight, CAST(r4.r AS BIGINT) AS pr_q6
-           |FROM nodes LEFT JOIN ow USING (node) LEFT JOIN iw USING (node)
-           |JOIN r4 USING (node) ORDER BY node""".stripMargin,
-
-      // one self-join of the edge list on the reversed pair, rolled to
-      // per-domain out/reciprocal counts
-      "q_link_reciprocity" ->
-        s"""WITH ${linkEdgeCtes()}
-           |SELECT e.src_domain AS domain,
-           |       CAST(count(*) AS BIGINT) AS n_out_edges,
-           |       CAST(sum(CASE WHEN r.src_domain IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_reciprocal
-           |FROM ledges e LEFT JOIN ledges r
-           |  ON r.src_domain = e.dst_domain AND r.dst_domain = e.src_domain
-           |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      // p=8 per-source registers: bucket = top 8 of the 48 hash bits,
-      // ρ = 41 − bitlength(rest) (rest = 0 → 41)
-      "q_hll_per_source" ->
-        s"""WITH w AS (
-           |  SELECT source, word FROM (
-           |    SELECT source, unnest(string_split(lower(text), ' ')) AS word FROM documents)
-           |  WHERE word <> ''),
-           |h AS (SELECT source,
-           |        ('0x' || substr(md5('hll:' || word), 1, 12))::BIGINT AS h FROM w),
-           |br AS (SELECT source, h // ${1L << 40} AS bucket, h % ${1L << 40} AS rest FROM h),
-           |rr AS (SELECT source, bucket,
-           |              CASE WHEN rest = 0 THEN 41 ELSE 41 - len(bin(rest)) END AS rho FROM br)
-           |SELECT source, bucket, CAST(max(rho) AS BIGINT) AS max_rho
-           |FROM rr GROUP BY source, bucket ORDER BY source, bucket""".stripMargin,
-
-      // the standing (% 5 <> 0) corpus's PSL dim + 4-round PageRank stack,
-      // then the % 5 = 0 epoch's extracted links probed against both —
-      // unseen hosts LEFT-JOIN to NULL domains, unendorsed domains to
-      // rank 0, the engine's cold-start arm
-      "q_link_frontier_probe" ->
-        s"""WITH ${linkPageRankCtes("doc_id % 5 <> 0")},
-           |ep AS (SELECT * FROM lout WHERE doc_id % 5 = 0)
-           |SELECT ep.doc_id, ep.link_no, ep.url, ep.dst_host,
-           |       a.registrable_domain,
-           |       CAST(coalesce(r4.r, 0) AS BIGINT) AS target_rank_q6,
-           |       r4.r IS NOT NULL AS known_domain
-           |FROM ep LEFT JOIN areg a ON a.host = ep.dst_host
-           |LEFT JOIN r4 ON r4.node = a.registrable_domain
-           |ORDER BY ep.doc_id, ep.link_no""".stripMargin,
-
-      // the composed frontier read: standing per-domain page counts (the
-      // budget arm) + PageRank endorsement (the priority arm); fetch_rank
-      // replays the engine's two-phase prefix rank as row_number over the
-      // under-budget subset
-      "e2e_crawl_frontier" ->
-        s"""WITH ${linkPageRankCtes()},
-           |pcount AS (
-           |  SELECT r.registrable_domain, CAST(count(*) AS BIGINT) AS n_pages
-           |  FROM rdcanon c JOIN areg r
-           |    ON r.host = regexp_extract(c.canonical_url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)
-           |  WHERE r.registrable_domain IS NOT NULL GROUP BY 1),
-           |st AS (
-           |  SELECT p.registrable_domain AS domain, p.n_pages,
-           |         CAST(coalesce(r4.r, 0) AS BIGINT) AS pr_q6,
-           |         p.n_pages >= 30 AS over_budget
-           |  FROM pcount p LEFT JOIN r4 ON r4.node = p.registrable_domain),
-           |rk AS (
-           |  SELECT domain,
-           |         CAST(row_number() OVER (ORDER BY pr_q6 DESC, domain) AS BIGINT) AS fetch_rank
-           |  FROM st WHERE NOT over_budget)
-           |SELECT st.domain, st.n_pages, st.pr_q6, st.over_budget, rk.fetch_rank
-           |FROM st LEFT JOIN rk USING (domain) ORDER BY st.domain""".stripMargin,
-
-      // the per-URL queue: standing (% 5 <> 0) PSL + PageRank stack; the
-      // epoch's discovered urls dedup to first discoverer (min packed
-      // (doc, link) — link_no < 1024 on planted pages); endorsement via
-      // the url's host against areg/r4; admissibility replays the robots
-      // election; budget replays the standing per-domain counts at 30;
-      // fetch_rank = row_number over the eligible set, the engine's
-      // two-phase prefix rank
-      "e2e_url_frontier" ->
-        s"""WITH $frontierStackCtes,
-           |urk AS (
-           |  SELECT url, CAST(row_number() OVER (
-           |    ORDER BY target_rank_q6 DESC, url) AS BIGINT) AS fetch_rank
-           |  FROM ust WHERE allowed AND NOT over_budget)
-           |SELECT ust.url, ust.src_doc, ust.src_link, ust.registrable_domain,
-           |       ust.target_rank_q6, ust.known_domain, ust.n_discoveries,
-           |       ust.allowed, ust.over_budget, urk.fetch_rank
-           |FROM ust LEFT JOIN urk USING (url) ORDER BY ust.url""".stripMargin,
-
-      // the append==rebuild identity: the oracle derives the stats from
-      // the FULL log (arg_min/arg_max = the engine's struct extremes over
-      // distinct epochs) and never sees the engine's standing/epoch split
-      "q_recrawl_stats_append" ->
-        s"""WITH $crawlRawCte,
-           |${urlCanonCtes("rc", "raw")},
-           |lg AS (
-           |  SELECT c.doc_id AS epoch, c.canonical_url AS url,
-           |         ${recrawlFpSql("c")} AS fp
-           |  FROM rccanon c WHERE c.doc_id % 5 <> 0),
-           |ch AS (
-           |  SELECT url, epoch, fp,
-           |         lag(fp) OVER (PARTITION BY url ORDER BY epoch) AS prev
-           |  FROM lg)
-           |SELECT url, CAST(count(*) AS BIGINT) AS n_fetches,
-           |       CAST(min(epoch) AS BIGINT) AS first_fetch,
-           |       CAST(max(epoch) AS BIGINT) AS last_fetch,
-           |       CAST(sum(CASE WHEN prev IS NOT NULL AND prev <> fp
-           |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_changes,
-           |       arg_min(fp, epoch) AS first_fp,
-           |       arg_max(fp, epoch) AS last_fp
-           |FROM ch GROUP BY url ORDER BY url""".stripMargin,
-
-      // delete == rebuild: the oracle filters the PURGED urls out of the
-      // raw log and rebuilds from scratch — it never sees the engine's
-      // anti-join, so the hash match is the proof
-      "q_recrawl_stats_delete" ->
-        s"""WITH $crawlRawCte,
-           |${urlCanonCtes("rc", "raw")},
-           |lg AS (
-           |  SELECT c.doc_id AS epoch, c.canonical_url AS url,
-           |         ${recrawlFpSql("c")} AS fp
-           |  FROM rccanon c WHERE c.doc_id % 5 <> 0),
-           |keep AS (
-           |  SELECT * FROM lg
-           |  WHERE url NOT IN (SELECT url FROM lg WHERE epoch % 7 = 2)),
-           |ch AS (
-           |  SELECT url, epoch, fp,
-           |         lag(fp) OVER (PARTITION BY url ORDER BY epoch) AS prev
-           |  FROM keep)
-           |SELECT url, CAST(count(*) AS BIGINT) AS n_fetches,
-           |       CAST(min(epoch) AS BIGINT) AS first_fetch,
-           |       CAST(max(epoch) AS BIGINT) AS last_fetch,
-           |       CAST(sum(CASE WHEN prev IS NOT NULL AND prev <> fp
-           |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_changes,
-           |       arg_min(fp, epoch) AS first_fp,
-           |       arg_max(fp, epoch) AS last_fp
-           |FROM ch GROUP BY url ORDER BY url""".stripMargin,
-
-      // the sitemap replay: rebuild the planted urlset XML, extract the
-      // <url> blocks with ordinality (loc-less entries drop AFTER
-      // numbering, like the engine's posexplode-then-filter), run the
-      // shared canon chain on loc, parse lastmod back to its epoch-day,
-      // and probe the shared fetch-stats replay
-      "q_sitemap_ingest" ->
-        s"""WITH $crawlRawCte,
-           |${urlCanonCtes("rc", "raw")},
-           |lg AS (
-           |  SELECT c.doc_id AS epoch, c.canonical_url AS url,
-           |         ${recrawlFpSql("c")} AS fp
-           |  FROM rccanon c WHERE c.doc_id % 5 <> 0),
-           |st AS (SELECT url, CAST(max(epoch) AS BIGINT) AS last_fetch
-           |       FROM lg GROUP BY url),
-           |smraw AS (
-           |  SELECT doc_id,
-           |    '<?xml version="1.0"?><urlset><url><loc>https://' ||
-           |    ${crawlHostSql("doc_id")} || '/p/' || CAST(doc_id % 20 AS VARCHAR) ||
-           |    '?a=1</loc></url><url><loc>https://' ||
-           |    ${crawlHostSql("doc_id * 3 + 1")} || '/p/' || CAST((doc_id * 3 + 1) % 20 AS VARCHAR) ||
-           |    '?a=1</loc><lastmod>' ||
-           |    strftime(DATE '1970-01-01' + CAST(doc_id + (doc_id % 3 - 1) * 200 AS INTEGER), '%Y-%m-%d') ||
-           |    '</lastmod></url><url><lastmod>1999-12-31</lastmod></url></urlset>' AS xml
-           |  FROM documents WHERE doc_id % 5 = 0),
-           |smblk AS (
-           |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS url_no, b[i] AS blk
-           |  FROM (SELECT doc_id, regexp_extract_all(xml, '(?s)<url>.*?</url>') AS b
-           |        FROM smraw), unnest(range(1, len(b) + 1)) AS u(i)),
-           |smee AS (
-           |  SELECT doc_id, url_no,
-           |         regexp_extract(blk, '(?s)<loc>\\s*(.*?)\\s*</loc>', 1) AS loc,
-           |         regexp_extract(blk, '(?s)<lastmod>\\s*(.*?)\\s*</lastmod>', 1) AS lm
-           |  FROM smblk
-           |  WHERE regexp_extract(blk, '(?s)<loc>\\s*(.*?)\\s*</loc>', 1) <> ''),
-           |ku AS (SELECT doc_id * 1024 + url_no AS doc_id, loc AS url FROM smee),
-           |${urlCanonCtes("sm", "ku")}
-           |SELECT e.doc_id, e.url_no, x.canonical_url AS url,
-           |       CAST(CASE WHEN e.lm = '' THEN NULL
-           |            ELSE CAST(substr(e.lm, 1, 10) AS DATE) - DATE '1970-01-01'
-           |       END AS BIGINT) AS lastmod_day,
-           |       st.url IS NOT NULL AS known_url,
-           |       CASE WHEN st.url IS NOT NULL AND e.lm <> ''
-           |            THEN (CAST(substr(e.lm, 1, 10) AS DATE) - DATE '1970-01-01') > st.last_fetch
-           |       END AS modified_since_fetch
-           |FROM smee e
-           |JOIN smcanon x ON x.doc_id = e.doc_id * 1024 + e.url_no
-           |LEFT JOIN st ON st.url = x.canonical_url
-           |ORDER BY e.doc_id, e.url_no""".stripMargin,
-
-      // the packed-bloom replay: same md5 bit positions, same 62-bit
-      // bit_or words, same all-k probe — built from the WHOLE standing
-      // set (the engine built it as a merge of halves, so the hash
-      // match proves merge == rebuild), exact membership alongside
-      "q_url_seen_bloom" ->
-        s"""WITH $crawlRawCte,
-           |${urlCanonCtes("sb", "raw")},
-           |su AS (SELECT DISTINCT canonical_url AS url FROM sbcanon
-           |       WHERE doc_id % 5 <> 0),
-           |cu AS (SELECT DISTINCT canonical_url AS url FROM sbcanon),
-           |pos AS (
-           |  SELECT url,
-           |         ('0x' || substr(md5('bloom' || j || ':' || url), 1, 12))::BIGINT
-           |           % $UrlBloomBits AS bit
-           |  FROM su, unnest(range(0, $UrlBloomK)) AS u(j)),
-           |words AS (
-           |  SELECT bit // 62 AS word_idx,
-           |         bit_or(1::BIGINT << CAST(bit % 62 AS INTEGER)) AS bits
-           |  FROM pos GROUP BY 1),
-           |cpos AS (
-           |  SELECT url,
-           |         ('0x' || substr(md5('bloom' || j || ':' || url), 1, 12))::BIGINT
-           |           % $UrlBloomBits AS bit
-           |  FROM cu, unnest(range(0, $UrlBloomK)) AS u(j)),
-           |probe AS (
-           |  SELECT c.url,
-           |         CAST(sum(CASE WHEN w.bits IS NOT NULL AND
-           |           (w.bits & (1::BIGINT << CAST(c.bit % 62 AS INTEGER))) != 0
-           |           THEN 1 ELSE 0 END) AS BIGINT) AS hits
-           |  FROM cpos c LEFT JOIN words w ON w.word_idx = c.bit // 62
-           |  GROUP BY c.url)
-           |SELECT p.url, p.hits = $UrlBloomK AS maybe_seen,
-           |       su.url IS NOT NULL AS actually_seen
-           |FROM probe p LEFT JOIN su ON su.url = p.url
-           |ORDER BY p.url""".stripMargin,
-
-      // delete == rebuild for the edge list: the oracle's docFilter
-      // keeps only the complement corpus and rebuilds from scratch —
-      // it never sees the engine's negative-multiplicity subtraction
-      "q_link_graph_delete" ->
-        s"""WITH ${linkEdgeCtes("doc_id % 7 <> 2")}
-           |SELECT src_domain, dst_domain, w AS n_links
-           |FROM ledges ORDER BY src_domain, dst_domain""".stripMargin,
-
-      // the unified queue: the SAME frontier stack's eligible rows,
-      // anti-joined against the recrawl stats (a url the corpus has
-      // fetched is not new), unioned with every known url at its
-      // freshness priority; never-fetched first, then priority/endorsement
-      "e2e_fetch_queue" ->
-        s"""WITH $frontierStackCtes,
-           |lg AS (
-           |  SELECT c.doc_id AS epoch, c.canonical_url AS url,
-           |         ${recrawlFpSql("c")} AS fp
-           |  FROM rdcanon c WHERE c.doc_id % 5 <> 0),
-           |lch AS (
-           |  SELECT url, epoch, fp,
-           |         lag(fp) OVER (PARTITION BY url ORDER BY epoch) AS prev
-           |  FROM lg),
-           |lst AS (
-           |  SELECT url, CAST(count(*) AS BIGINT) AS n_fetches,
-           |         CAST(max(epoch) AS BIGINT) AS last_fetch,
-           |         CAST(sum(CASE WHEN prev IS NOT NULL AND prev <> fp
-           |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_changes
-           |  FROM lch GROUP BY url),
-           |lnw AS (SELECT CAST(max(doc_id) + 1 AS BIGINT) AS now FROM documents),
-           |known AS (
-           |  SELECT lst.url, FALSE AS is_new,
-           |         CAST((lnw.now - lst.last_fetch) *
-           |           CAST(CASE WHEN lst.n_fetches <= 1 THEN 500000
-           |                ELSE lst.n_changes * 1000000 // (lst.n_fetches - 1)
-           |           END AS BIGINT) AS BIGINT) AS score_q6
-           |  FROM lst CROSS JOIN lnw),
-           |newarm AS (
-           |  SELECT ust.url, TRUE AS is_new, ust.target_rank_q6 AS score_q6
-           |  FROM ust LEFT JOIN lst ON lst.url = ust.url
-           |  WHERE ust.allowed AND NOT ust.over_budget AND lst.url IS NULL),
-           |uq AS (SELECT * FROM known UNION ALL SELECT * FROM newarm)
-           |SELECT url, is_new, score_q6,
-           |       CAST(row_number() OVER (ORDER BY is_new DESC, score_q6 DESC,
-           |         url) AS BIGINT) AS fetch_rank
-           |FROM uq ORDER BY url""".stripMargin,
-
-      // the same two queue arms, each carrying its politeness key
-      // (registrable domain via the shared PSL replay, raw host when the
-      // PSL maps it to NULL), then rank within key by the queue's own
-      // order and globally by (within_domain_rank, priority)
-      "e2e_fetch_queue_polite" ->
-        s"""WITH $frontierStackCtes,
-           |lg AS (
-           |  SELECT c.doc_id AS epoch, c.canonical_url AS url,
-           |         ${recrawlFpSql("c")} AS fp
-           |  FROM rdcanon c WHERE c.doc_id % 5 <> 0),
-           |lch AS (
-           |  SELECT url, epoch, fp,
-           |         lag(fp) OVER (PARTITION BY url ORDER BY epoch) AS prev
-           |  FROM lg),
-           |lst AS (
-           |  SELECT url, CAST(count(*) AS BIGINT) AS n_fetches,
-           |         CAST(max(epoch) AS BIGINT) AS last_fetch,
-           |         CAST(sum(CASE WHEN prev IS NOT NULL AND prev <> fp
-           |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_changes
-           |  FROM lch GROUP BY url),
-           |lnw AS (SELECT CAST(max(doc_id) + 1 AS BIGINT) AS now FROM documents),
-           |known AS (
-           |  SELECT lst.url, FALSE AS is_new,
-           |         CAST((lnw.now - lst.last_fetch) *
-           |           CAST(CASE WHEN lst.n_fetches <= 1 THEN 500000
-           |                ELSE lst.n_changes * 1000000 // (lst.n_fetches - 1)
-           |           END AS BIGINT) AS BIGINT) AS score_q6,
-           |         coalesce(a.registrable_domain,
-           |           regexp_extract(lst.url,
-           |             '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)) AS politeness_key
-           |  FROM lst CROSS JOIN lnw
-           |  LEFT JOIN areg a ON a.host =
-           |    regexp_extract(lst.url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)),
-           |newarm AS (
-           |  SELECT ust.url, TRUE AS is_new, ust.target_rank_q6 AS score_q6,
-           |         coalesce(ust.registrable_domain,
-           |           regexp_extract(ust.url,
-           |             '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)', 1)) AS politeness_key
-           |  FROM ust LEFT JOIN lst ON lst.url = ust.url
-           |  WHERE ust.allowed AND NOT ust.over_budget AND lst.url IS NULL),
-           |uq AS (SELECT * FROM known UNION ALL SELECT * FROM newarm),
-           |wdr AS (
-           |  SELECT *, CAST(row_number() OVER (PARTITION BY politeness_key
-           |    ORDER BY is_new DESC, score_q6 DESC, url) AS BIGINT)
-           |    AS within_domain_rank
-           |  FROM uq)
-           |SELECT url, politeness_key, is_new, score_q6, within_domain_rank,
-           |       CAST(row_number() OVER (ORDER BY within_domain_rank,
-           |         is_new DESC, score_q6 DESC, url) AS BIGINT) AS fetch_rank
-           |FROM wdr ORDER BY url""".stripMargin,
-
-      // anchor tokens per dst eTLD+1, ranked (count DESC, term) — the
-      // engine's window replayed as row_number
-      "q_anchor_topterms" ->
-        s"""WITH $linkCtes,
-           |dh AS (SELECT dst_host AS host FROM lout),
-           |${pslLookupCtes("a", "dh")},
-           |at AS (
-           |  SELECT r.registrable_domain,
-           |         unnest(list_filter(string_split(l.anchor, ' '), x -> x <> '')) AS term
-           |  FROM lout l JOIN areg r ON r.host = l.dst_host
-           |  WHERE r.registrable_domain IS NOT NULL),
-           |ct AS (SELECT registrable_domain, term, CAST(count(*) AS BIGINT) AS n
-           |       FROM at GROUP BY 1, 2),
-           |rk AS (SELECT *, CAST(row_number() OVER (
-           |         PARTITION BY registrable_domain ORDER BY n DESC, term) AS BIGINT) AS rank
-           |       FROM ct)
-           |SELECT registrable_domain, term, n, rank FROM rk WHERE rank <= 3
-           |ORDER BY registrable_domain, rank""".stripMargin,
-
-      // the same crawl + PSL stack, then the cap: longest-first rank per
-      // registrable domain, kept rows only
-      "q_domain_cap" ->
-        s"""WITH $crawlPslCtes,
-           |rk AS (
-           |  SELECT r.registrable_domain, p.doc_id, CAST(p.n_toks AS BIGINT) AS n_toks,
-           |         CAST(row_number() OVER (PARTITION BY r.registrable_domain
-           |                                 ORDER BY p.n_toks DESC, p.doc_id) AS BIGINT) AS rank_in_domain
-           |  FROM pages p JOIN reg r USING (host))
-           |SELECT registrable_domain, rank_in_domain, doc_id, n_toks
-           |FROM rk WHERE rank_in_domain <= 8
-           |-- NULLS FIRST pins DuckDB to Spark's ascending default: the
-           |-- IP-literal plants put real rows in the NULL domain group
-           |-- (ADVICE r15)
-           |ORDER BY registrable_domain NULLS FIRST, rank_in_domain""".stripMargin,
-
-      // the composed crawl-curation chain: the same crawl + PSL + cap
-      // stack, then the q_memorization_risk window/df machinery replayed
-      // over the POST-CAP document set only
-      "e2e_crawl_curation" ->
-        s"""WITH $crawlPslCtes,
-           |rk AS (
-           |  SELECT r.registrable_domain, p.doc_id, CAST(p.n_toks AS BIGINT) AS n_toks,
-           |         CAST(row_number() OVER (PARTITION BY r.registrable_domain
-           |                                 ORDER BY p.n_toks DESC, p.doc_id) AS BIGINT) AS rank_in_domain
-           |  FROM pages p JOIN reg r USING (host)),
-           |kept AS (SELECT * FROM rk WHERE rank_in_domain <= 8),
-           |t AS (
-           |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
-           |  FROM documents WHERE doc_id IN (SELECT doc_id FROM kept)),
-           |w AS (
-           |  SELECT doc_id, u.pos, u.h FROM (
-           |    SELECT doc_id,
-           |      unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-           |        i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-           |    FROM t WHERE len(ws) >= 8)),
-           |f AS (SELECT h, count(DISTINCT doc_id) AS df FROM w GROUP BY h),
-           |a AS (
-           |  SELECT w.doc_id, count(*) AS nw, max(f.df) AS mdf,
-           |         count(CASE WHEN f.df >= 3 THEN 1 END) AS nh
-           |  FROM w JOIN f USING (h) GROUP BY w.doc_id)
-           |SELECT k.registrable_domain, k.rank_in_domain, k.doc_id, k.n_toks,
-           |       CAST(coalesce(a.mdf, 0) AS BIGINT) AS max_df,
-           |       CAST(coalesce(a.nh, 0) AS BIGINT) AS n_hot,
-           |       CASE WHEN a.doc_id IS NULL THEN FALSE
-           |            ELSE floor(a.nh::DOUBLE / a.nw::DOUBLE * 10000.0 + 0.5) / 10000.0 >= 0.5
-           |       END AS memorization_flag
-           |FROM kept k LEFT JOIN a USING (doc_id)
-           |ORDER BY k.registrable_domain NULLS FIRST, k.rank_in_domain""".stripMargin,
-
-      // same md5-derived 48-bit hashes (+1 to dodge a zero divisor), same
-      // BIGINT floor division — the sketch is bit-identical by design
-      "q_kmv_distinct" ->
-        s"""WITH w AS (
-           |  SELECT word FROM (
-           |    SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents)
-           |  WHERE word <> ''),
-           |h AS (
-           |  SELECT DISTINCT ('0x' || substr(md5('kmv:' || word), 1, 12))::BIGINT + 1 AS h FROM w),
-           |mink AS (SELECT h FROM h ORDER BY h LIMIT 256),
-           |agg AS (SELECT count(*) AS n, max(h) AS kth_hash FROM mink)
-           |SELECT 256 AS k, n, kth_hash,
-           |       CAST(CASE WHEN n < 256 THEN n
-           |                 ELSE (255 * ${1L << 48}) // kth_hash END AS BIGINT) AS est_distinct,
-           |       (SELECT count(DISTINCT word) FROM w) AS exact_distinct
-           |FROM agg""".stripMargin,
-
-      // same md5('hll:'||word) 48-bit hash: top 10 bits route, ρ = 39 −
-      // bitlength(rest) (rest = 0 → 39) — registers are pure integers
-      "q_hll_registers" ->
-        s"""WITH w AS (
-           |  SELECT word FROM (
-           |    SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents)
-           |  WHERE word <> ''),
-           |h AS (SELECT ('0x' || substr(md5('hll:' || word), 1, 12))::BIGINT AS h FROM w),
-           |br AS (SELECT h // ${1L << 38} AS bucket, h % ${1L << 38} AS rest FROM h),
-           |rr AS (SELECT bucket,
-           |              CASE WHEN rest = 0 THEN 39 ELSE 39 - len(bin(rest)) END AS rho FROM br)
-           |SELECT bucket, CAST(max(rho) AS BIGINT) AS max_rho
-           |FROM rr GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-      // the UNION's registers directly — the oracle never sees the
-      // engine's per-partition split, so a hash match proves the stored
-      // sketches' max-merge equals sketching the union (merge == rebuild
-      // for the sketch family)
-      "q_hll_merge_union" ->
-        s"""WITH w AS (
-           |  SELECT word FROM (
-           |    SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents)
-           |  WHERE word <> ''),
-           |h AS (SELECT ('0x' || substr(md5('hll:' || word), 1, 12))::BIGINT AS h FROM w),
-           |br AS (SELECT h // ${1L << 38} AS bucket, h % ${1L << 38} AS rest FROM h),
-           |rr AS (SELECT bucket,
-           |              CASE WHEN rest = 0 THEN 39 ELSE 39 - len(bin(rest)) END AS rho FROM br)
-           |SELECT bucket, CAST(max(rho) AS BIGINT) AS max_rho
-           |FROM rr GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-      // full 1024-bucket frame (empty → ρ 0) for the exact q39 harmonic
-      // denominator; every sum CAST back to BIGINT
-      "q_hll_distinct" ->
-        s"""WITH w AS (
-           |  SELECT word FROM (
-           |    SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents)
-           |  WHERE word <> ''),
-           |h AS (SELECT ('0x' || substr(md5('hll:' || word), 1, 12))::BIGINT AS h FROM w),
-           |br AS (SELECT h // ${1L << 38} AS bucket, h % ${1L << 38} AS rest FROM h),
-           |rr AS (SELECT bucket,
-           |              CASE WHEN rest = 0 THEN 39 ELSE 39 - len(bin(rest)) END AS rho FROM br),
-           |mx AS (SELECT bucket, max(rho) AS rho FROM rr GROUP BY bucket),
-           |allb AS (SELECT CAST(i AS BIGINT) AS bucket FROM unnest(range(0, 1024)) AS u(i)),
-           |fr AS (SELECT a.bucket, coalesce(m.rho, 0) AS rho
-           |       FROM allb a LEFT JOIN mx m USING (bucket))
-           |SELECT CAST(count(*) AS BIGINT) AS m,
-           |       CAST(sum(CASE WHEN rho > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_buckets_hit,
-           |       CAST(sum(CAST(1 AS BIGINT) << (39 - rho)) AS BIGINT) AS inv_q39,
-           |       (SELECT count(DISTINCT word) FROM w) AS exact_distinct
-           |FROM fr""".stripMargin,
-
-      // consecutive-window scan over the SAME empty-filtered token list
-      // (start is 0-based, matching posexplode)
-      "q_phrase_search" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-          |  FROM documents),
-          |m AS (
-          |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS start
-          |  FROM t, unnest(range(1, len(toks) - 1)) AS u(i)
-          |  WHERE toks[i] = 'slow' AND toks[i+1] = 'hash' AND toks[i+2] = 'batch')
-          |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
-          |       CAST(min(start) AS BIGINT) AS first_pos
-          |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      // the maintenance identity's oracle IS the from-scratch rebuild over
-      // the corpus minus the removal set (standing ∪ epoch = all docs) —
-      // a hash match proves append == rebuild and delete == rebuild for
-      // the positional index cross-engine
-      "q_phrase_index_search" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-          |  FROM documents WHERE doc_id % 7 <> 2),
-          |m AS (
-          |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS start
-          |  FROM t, unnest(range(1, len(toks) - 1)) AS u(i)
-          |  WHERE toks[i] = 'slow' AND toks[i+1] = 'hash' AND toks[i+2] = 'batch')
-          |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
-          |       CAST(min(start) AS BIGINT) AS first_pos
-          |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      // the group-count positional intersection replayed: phrase terms
-      // with offsets join document tokens by term; a start matches iff
-      // count(DISTINCT off) == k
-      "q_phrase_multi_search" -> phraseMultiOracleSql,
-
-      // the SAME oracle text on purpose: the bulk-scan gate's engine path
-      // is a completely different implementation (stateless per-row array
-      // scan vs postings join), and sharing the oracle makes the driver's
-      // hash gate a three-way agreement proof (scan == join == SQL)
-      "q_phrase_bulk_scan" -> phraseMultiOracleSql,
-
-      // identical midpoint grid, identical LEFT-TO-RIGHT multiplication
-      // folds (list_reduce starts at the first element; Spark's fold
-      // starts at 1.0 — 1.0*s == s bit-exact, so the products agree),
-      // identical per-term q6 quantization before exact long sums
-      "q_lsh_param_tuning" ->
-        s"""WITH pairs AS (
-           |  SELECT CAST(b AS INTEGER) AS b, CAST($NumMinHashes / b AS INTEGER) AS r
-           |  FROM range(1, ${NumMinHashes + 1}) tb(b) WHERE $NumMinHashes % b = 0),
-           |grid AS (SELECT (i + 0.5) / 1000.0 AS s FROM range(0, 1000) ti(i)),
-           |terms AS (
-           |  SELECT b, r, s,
-           |    1.0 - list_reduce(list_transform(range(b), x -> 1.0 -
-           |            list_reduce(list_transform(range(r), y -> s), (a, c) -> a * c)),
-           |          (a, c) -> a * c) AS p
-           |  FROM pairs, grid),
-           |q AS (
-           |  SELECT b, r,
-           |    CASE WHEN s < 0.8 THEN CAST(floor(p * 1000000.0 + 0.5) AS BIGINT) ELSE 0 END AS fp_term,
-           |    CASE WHEN s >= 0.8 THEN CAST(floor((1.0 - p) * 1000000.0 + 0.5) AS BIGINT) ELSE 0 END AS fn_term
-           |  FROM terms),
-           |curve AS (
-           |  SELECT b, r, CAST(sum(fp_term) AS BIGINT) AS fp_q6,
-           |         CAST(sum(fn_term) AS BIGINT) AS fn_q6,
-           |         CAST(sum(fp_term) + sum(fn_term) AS BIGINT) AS err_q6
-           |  FROM q GROUP BY b, r)
-           |SELECT b, r, fp_q6, fn_q6, err_q6,
-           |       row_number() OVER (ORDER BY err_q6, b) = 1 AS is_best
-           |FROM curve ORDER BY b""".stripMargin,
-
-      // the same planted URL spellings + chrome/spam and the same four
-      // stages chained: canonical-URL dedup FIRST (urlCanonCtes ==
-      // TextOps.canonicalizeUrl), then the x17 replace chain, the x16
-      // token filter, md5 min-id content dedup
-      "e2e_web_ingest" ->
-        s"""WITH rawu AS (
-          |  SELECT doc_id, text,
-          |    CASE WHEN doc_id % 10 = 1
-          |      THEN 'https://www.example.com:443/page/' || CAST(doc_id - 1 AS VARCHAR) || '?x=1&utm_source=z#top'
-          |      ELSE 'https://example.com/page/' || CAST(doc_id AS VARCHAR) || '?x=1' END AS url
-          |  FROM documents),
-          |${urlCanonCtes("wu", "rawu")},
-          |crawled AS (
-          |  SELECT doc_id, text FROM (
-          |    SELECT r.doc_id, r.text,
-          |           row_number() OVER (PARTITION BY c.canonical_url ORDER BY r.doc_id) AS urn
-          |    FROM rawu r JOIN wucanon c USING (doc_id))
-          |  WHERE urn = 1),
-          |spam AS (
-          |  SELECT doc_id,
-          |    CASE WHEN doc_id % 13 = 0 THEN text || ' zzspamword' ELSE text END AS t
-          |  FROM crawled),
-          |page AS (
-          |  SELECT doc_id, CASE WHEN doc_id % 7 = 0
-          |    THEN '<html><body><p>' || t || '</p><script>drop();</script>&nbsp;</body></html>'
-          |    ELSE t END AS page FROM spam),
-          |clean AS (
-          |  SELECT doc_id, trim(regexp_replace(
-          |    replace(replace(replace(replace(replace(replace(
-          |      regexp_replace(regexp_replace(regexp_replace(page,
-          |        '(?s)<script[^>]*>.*?</script>', ' ', 'g'),
-          |        '(?s)<style[^>]*>.*?</style>', ' ', 'g'),
-          |        '<[^>]*>', ' ', 'g'),
-          |      '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&'),
-          |    '[ \t\n\r\f]+', ' ', 'g')) AS clean
-          |  FROM page),
-          |flagged AS (
-          |  SELECT DISTINCT doc_id FROM (
-          |    SELECT doc_id, unnest(string_split(lower(clean), ' ')) AS tok FROM clean) u
-          |  WHERE tok = 'zzspamword'),
-          |kept AS (
-          |  SELECT c.doc_id, c.clean FROM clean c
-          |  WHERE c.doc_id NOT IN (SELECT doc_id FROM flagged)),
-          |dedup AS (
-          |  SELECT doc_id, md5(clean) AS clean_md5,
-          |    len(list_filter(string_split(clean, ' '), x -> x <> '')) AS n_tokens,
-          |    row_number() OVER (PARTITION BY md5(clean) ORDER BY doc_id) AS rn
-          |  FROM kept)
-          |SELECT doc_id, clean_md5, CAST(n_tokens AS BIGINT) AS n_tokens
-          |FROM dedup WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-      // per-source JS divergence: identical q6 per-term quantization and
-      // the same exact-long absent-mass closed form as the Spark side —
-      // every double is derived from agreed integer counts in the same
-      // IEEE op order, so the round4 result is bit-identical
-      "q_source_divergence" ->
-        """WITH w AS (
-          |  SELECT source, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS word
-          |  FROM documents),
-          |sw AS (SELECT source, word, CAST(count(*) AS BIGINT) AS c_sw FROM w GROUP BY 1, 2),
-          |ns AS (SELECT source, CAST(sum(c_sw) AS BIGINT) AS n_s FROM sw GROUP BY 1),
-          |gw AS (SELECT word, CAST(sum(c_sw) AS BIGINT) AS c_w FROM sw GROUP BY 1),
-          |tot AS (SELECT CAST(sum(c_w) AS BIGINT) AS n FROM gw),
-          |terms AS (
-          |  SELECT sw.source, c_w, n_s, n,
-          |         c_sw::DOUBLE / n_s::DOUBLE AS p_sw,
-          |         c_w::DOUBLE / n::DOUBLE AS p_w
-          |  FROM sw JOIN ns USING (source) JOIN gw USING (word), tot),
-          |q AS (
-          |  SELECT source, c_w, n_s, n,
-          |    CAST(floor(p_sw * ln(p_sw / ((p_sw + p_w) / 2.0)) * 1000000.0 + 0.5) AS BIGINT) AS t1_q6,
-          |    CAST(floor(p_w * ln(p_w / ((p_sw + p_w) / 2.0)) * 1000000.0 + 0.5) AS BIGINT) AS t2_q6
-          |  FROM terms),
-          |a AS (SELECT source, max(n_s) AS n_tokens, max(n) AS n,
-          |             CAST(count(*) AS BIGINT) AS n_distinct_words,
-          |             CAST(sum(t1_q6) AS BIGINT) AS s1, CAST(sum(t2_q6) AS BIGINT) AS s2,
-          |             CAST(sum(c_w) AS BIGINT) AS scw
-          |      FROM q GROUP BY source)
-          |SELECT source, n_tokens, n_distinct_words,
-          |       floor((0.5 * s1::DOUBLE / 1000000.0 + 0.5 * s2::DOUBLE / 1000000.0
-          |              + 0.5 * ln(2.0) * ((n - scw)::DOUBLE / n::DOUBLE)) * 10000.0 + 0.5) / 10000.0 AS js_divergence
-          |FROM a ORDER BY source""".stripMargin,
-
-      // sliding 64-token chunks every 48 tokens; ws[a:b] is DuckDB's 1-based
-      // inclusive clamped slice == Spark's slice(ws, a, 64)
-      "x10_chunk_documents" ->
-        """WITH toks AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
-          |  FROM documents),
-          |c AS (
-          |  SELECT doc_id, ws,
-          |         unnest(range(0, (len(ws) - 1) // 48 + 1)) AS chunk_idx
-          |  FROM toks WHERE len(ws) > 0)
-          |SELECT doc_id, chunk_idx,
-          |       CAST(len(ws[chunk_idx*48 + 1 : chunk_idx*48 + 64]) AS BIGINT) AS n_chunk_tokens,
-          |       md5(array_to_string(ws[chunk_idx*48 + 1 : chunk_idx*48 + 64], ' ')) AS chunk_md5
-          |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-
-      // identity-through-crypto: plaintext word count IS the oracle (see query doc)
-      "p6_confidential_wordcount" ->
-        """SELECT word, count(*) AS cnt
-          |FROM (SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents)
-          |WHERE word <> '' GROUP BY word ORDER BY word""".stripMargin,
-
-      "p7_route_validation" ->
-        """SELECT count(*) AS valid_route, CAST(0 AS BIGINT) AS invalid_route,
-          |       CAST(0 AS BIGINT) AS wrong_stage FROM documents""".stripMargin,
-
-      "p8_replay_filter" ->
-        """SELECT 'p' || (doc_id % 4) AS producer, count(DISTINCT doc_id % 100) AS accepted
-          |FROM documents GROUP BY producer ORDER BY producer""".stripMargin,
-
-      "d1_exact_dedup_groups" ->
-        """SELECT md5(text) AS fingerprint, min(doc_id) AS keep_id, count(*) AS copies
-          |FROM documents GROUP BY fingerprint ORDER BY fingerprint""".stripMargin,
-
-      // both engines implement UAX #15 NFC, so fingerprints agree
-      // byte-for-byte (and equal d1's on this ASCII corpus)
-      "d1b_nfc_dedup_groups" ->
-        """SELECT md5(nfc_normalize(text)) AS fingerprint, min(doc_id) AS keep_id, count(*) AS copies
-          |FROM documents GROUP BY fingerprint ORDER BY fingerprint""".stripMargin,
-
-      // the aggressive tier: on ASCII text graft_canon reduces to
-      // lowercase + non-alphanumeric-run collapse, which DuckDB replays
-      // exactly (strip_accents is a no-op here); compat-decomposition and
-      // accent-strip semantics are spec-pinned on constructed fixtures
-      "d1c_canonical_dedup_groups" ->
-        """SELECT md5(trim(regexp_replace(lower(strip_accents(text)), '[^a-z0-9]+', ' ', 'g')))
-          |         AS fingerprint,
-          |       min(doc_id) AS keep_id, count(*) AS copies
-          |FROM documents GROUP BY fingerprint ORDER BY fingerprint""".stripMargin,
-
-      "d2_minhash_signatures" ->
-        s"""WITH $sigCte
-           |SELECT doc_id, j, minhash FROM sigs ORDER BY doc_id, j""".stripMargin,
-
-      // signature-agreement estimator over the same banded candidates
-      "d13_minhash_estimate" ->
-        s"""WITH $sigCte,
-           |$lshCandsCte
-           |SELECT c.doc_a, c.doc_b,
-           |       CAST(sum(CASE WHEN sa.minhash = sb.minhash THEN 1 ELSE 0 END) AS DOUBLE)
-           |         / $NumMinHashes AS est_jaccard
-           |FROM cands c
-           |JOIN sigs sa ON sa.doc_id = c.doc_a
-           |JOIN sigs sb ON sb.doc_id = c.doc_b AND sb.j = sa.j
-           |GROUP BY 1, 2 ORDER BY doc_a, doc_b""".stripMargin,
-
-      // incremental dedup: per-doc signatures are independent of the rest of
-      // the corpus, so sigs over ALL docs equal the per-side computation;
-      // candidates restricted to incoming(doc_id%10>=8) × corpus(<8)
-      "d12_incremental_dedup" ->
-        s"""WITH $sigCte,
-           |$bandedCte,
-           |cands AS (
-           |  SELECT i.doc_id AS doc_a, c.doc_id AS doc_b
-           |  FROM banded i JOIN banded c ON i.band = c.band AND i.bucket = c.bucket
-           |  WHERE i.doc_id % 10 >= 8 AND c.doc_id % 10 < 8
-           |  GROUP BY 1, 2),
-           |jsh AS ($DuckShingles),
-           |jh AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(shingle),1,8))::BIGINT AS h FROM jsh),
-           |sizes AS (SELECT doc_id, count(*) AS sz FROM jh GROUP BY doc_id),
-           |inter AS (SELECT ca.doc_a, ca.doc_b, count(*) AS inter
-           |          FROM cands ca
-           |          JOIN jh x ON x.doc_id = ca.doc_a
-           |          JOIN jh y ON y.doc_id = ca.doc_b AND y.h = x.h
-           |          GROUP BY 1, 2),
-           |verified AS (
-           |  SELECT doc_a, doc_b,
-           |         round(inter::DOUBLE / (sa.sz + sb.sz - inter)::DOUBLE, 6) AS jaccard
-           |  FROM inter JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-           |  WHERE round(inter::DOUBLE / (sa.sz + sb.sz - inter)::DOUBLE, 6) >= $JaccardThreshold),
-           |matches AS (
-           |  SELECT doc_a AS doc_id, CAST(min(doc_b) AS BIGINT) AS dup_of,
-           |         max(jaccard) AS best_jaccard
-           |  FROM verified GROUP BY doc_a)
-           |SELECT d.doc_id, m.dup_of, m.best_jaccard, m.dup_of IS NULL AS keep
-           |FROM documents d LEFT JOIN matches m ON d.doc_id = m.doc_id
-           |WHERE d.doc_id % 10 >= 8 ORDER BY d.doc_id""".stripMargin,
-
-      "d2_minhash_lsh_pairs" ->
-        s"""WITH $sigCte,
-           |$lshCandsCte,
-           |$jaccardCte
-           |SELECT c.doc_a, c.doc_b, v.jaccard
-           |FROM cands c JOIN verified v ON c.doc_a = v.doc_a AND c.doc_b = v.doc_b
-           |ORDER BY c.doc_a, c.doc_b""".stripMargin,
-
-      // canonical-shingle near-dup: planted case/punct variants must be
-      // caught under canonicalized shingles and missed under raw ones;
-      // both arms replayed end-to-end (variants, canon, signatures,
-      // banding, Jaccard) for the planted pairs
-      "d25_canonical_neardup" ->
-        s"""WITH eligible AS (
-           |  SELECT doc_id, text FROM documents
-           |  WHERE doc_id % 17 = 2 AND len(string_split(text, ' ')) >= $ShingleK),
-           |corpus AS MATERIALIZED (
-           |  SELECT doc_id, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 100000, upper(replace(text, ' ', ' -- ')) FROM eligible),
-           |planted AS (SELECT doc_id, doc_id + 100000 AS variant_id FROM eligible),
-           |ctext AS (SELECT doc_id, trim(regexp_replace(lower(strip_accents(text)), '[^a-z0-9]+', ' ', 'g')) AS text FROM corpus),
-           |params(j, a, b) AS (VALUES $paramValues),
-           |${neardupArmCtes("c", "ctext")},
-           |${neardupArmCtes("r", "corpus")}
-           |SELECT pp.doc_id, pp.variant_id,
-           |       pp.doc_id IN (SELECT doc_id FROM cok) AS caught_canonical,
-           |       pp.doc_id IN (SELECT doc_id FROM rok) AS caught_raw
-           |FROM planted pp ORDER BY pp.doc_id""".stripMargin,
-
-      "d10_dedup_components" ->
-        s"""WITH RECURSIVE $sigCte,
-           |$componentsCte
-           |SELECT doc_id, component FROM comp ORDER BY doc_id""".stripMargin,
-
-      "d10b_dedup_survivors" ->
-        s"""WITH RECURSIVE $sigCte,
-           |$componentsCte
-           |SELECT d.doc_id, d.source
-           |FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-           |WHERE c.component IS NULL OR d.doc_id = c.component
-           |ORDER BY d.doc_id""".stripMargin,
-
-      // same component closure as d10, then per-component argmax on
-      // n_chars (ties to lowest id) instead of the min-id representative
-      "d10c_quality_survivors" ->
-        s"""WITH RECURSIVE $sigCte,
-           |$componentsCte,
-           |ranked AS (
-           |  SELECT c.doc_id, c.component,
-           |         row_number() OVER (PARTITION BY c.component
-           |           ORDER BY d.n_chars DESC, c.doc_id) AS rn
-           |  FROM comp c JOIN documents d ON d.doc_id = c.doc_id),
-           |reps AS (SELECT doc_id FROM ranked WHERE rn = 1)
-           |SELECT d.doc_id, d.source, d.n_chars
-           |FROM documents d
-           |LEFT JOIN comp c ON d.doc_id = c.doc_id
-           |LEFT JOIN reps r ON d.doc_id = r.doc_id
-           |WHERE c.component IS NULL OR r.doc_id IS NOT NULL
-           |ORDER BY d.doc_id""".stripMargin,
-
-      "q_leakage_safe_split" ->
-        s"""WITH RECURSIVE $sigCte,
-           |$componentsCte,
-           |rep AS (SELECT d.doc_id, CAST(COALESCE(c.component, d.doc_id) AS BIGINT) AS rep
-           |        FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id)
-           |SELECT doc_id,
-           |       CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-           |FROM (SELECT doc_id, ('0x' || substr(md5(CAST(rep AS VARCHAR)), 1, 8))::BIGINT % 100 AS b
-           |      FROM rep)
-           |ORDER BY doc_id""".stripMargin,
-
-      "e2e_neardup_build" ->
-        s"""WITH RECURSIVE $sigCte,
-           |$componentsCte,
-           |members AS (SELECT component, count(*) AS n_members FROM comp GROUP BY component),
-           |surv AS (
-           |  SELECT d.doc_id, d.source, CAST(COALESCE(m.n_members, 1) AS BIGINT) AS n_members
-           |  FROM documents d
-           |  LEFT JOIN comp c ON d.doc_id = c.doc_id
-           |  LEFT JOIN members m ON d.doc_id = m.component
-           |  WHERE c.component IS NULL OR d.doc_id = c.component)
-           |SELECT doc_id, source, n_members,
-           |       CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-           |FROM (SELECT *, ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS b
-           |      FROM surv)
-           |ORDER BY doc_id""".stripMargin,
-
-      "e2e_clean_corpus_build" -> cleanBuildSql,
-
-      // windows/occurrence/islands mirror Dedup.duplicateSpans (n=8, md5
-      // window hashes, pos - row_number islands)
-      "d14_duplicate_spans" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM documents),
-          |w AS (
-          |  SELECT doc_id, u.pos, u.h FROM (
-          |    SELECT doc_id,
-          |      unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-          |        i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-          |    FROM t WHERE len(ws) >= 8)),
-          |occ AS (SELECT h, count(*) AS occ FROM w GROUP BY h),
-          |dup AS (SELECT w.doc_id, w.pos FROM w JOIN occ USING (h) WHERE occ.occ >= 2),
-          |g AS (SELECT doc_id, pos,
-          |             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-          |      FROM dup)
-          |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-          |       CAST(max(pos) - min(pos) + 8 AS BIGINT) AS span_len,
-          |       CAST(count(*) AS BIGINT) AS n_windows
-          |FROM g GROUP BY doc_id, grp
-          |ORDER BY doc_id, span_start""".stripMargin,
-
-      // same windows/occurrence/islands as d14, then tokens NOT covered by
-      // any span re-join in position order (whitespace-normalized, exactly
-      // the Spark side's higher-order filter + concat_ws)
-      "d14b_strip_spans" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM documents),
-          |w AS (
-          |  SELECT doc_id, u.pos, u.h FROM (
-          |    SELECT doc_id,
-          |      unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-          |        i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-          |    FROM t WHERE len(ws) >= 8)),
-          |occ AS (SELECT h, count(*) AS occ FROM w GROUP BY h),
-          |dup AS (SELECT w.doc_id, w.pos FROM w JOIN occ USING (h) WHERE occ.occ >= 2),
-          |g AS (SELECT doc_id, pos,
-          |             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-          |      FROM dup),
-          |sp AS (SELECT doc_id, min(pos) AS s, max(pos) + 8 AS e FROM g GROUP BY doc_id, grp),
-          |tk AS (
-          |  SELECT doc_id, u.i, u.tok FROM (
-          |    SELECT doc_id,
-          |      unnest(list_transform(range(1, len(ws) + 1),
-          |        i -> struct_pack(i := i - 1, tok := ws[i]))) AS u
-          |    FROM t)),
-          |kept AS (
-          |  SELECT tk.doc_id, tk.i, tk.tok FROM tk
-          |  WHERE NOT EXISTS (SELECT 1 FROM sp
-          |                    WHERE sp.doc_id = tk.doc_id AND tk.i >= sp.s AND tk.i < sp.e))
-          |SELECT d.doc_id,
-          |       COALESCE((SELECT string_agg(k.tok, ' ' ORDER BY k.i)
-          |                 FROM kept k WHERE k.doc_id = d.doc_id), '') AS clean_text
-          |FROM documents d ORDER BY doc_id""".stripMargin,
-
-      // corpus windows (doc_id % 11 <> 0) matched against the eval split's
-      // distinct windows, then the same islands merge as d14
-      "d15_decontaminate_spans" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM documents),
-          |w AS (
-          |  SELECT doc_id, u.pos, u.h FROM (
-          |    SELECT doc_id,
-          |      unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-          |        i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-          |    FROM t WHERE len(ws) >= 8)),
-          |c AS (SELECT doc_id, pos, h FROM w WHERE doc_id % 11 <> 0),
-          |b AS (SELECT DISTINCT h FROM w WHERE doc_id % 11 = 0),
-          |dup AS (SELECT c.doc_id, c.pos FROM c JOIN b USING (h)),
-          |g AS (SELECT doc_id, pos,
-          |             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-          |      FROM dup)
-          |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-          |       CAST(max(pos) - min(pos) + 8 AS BIGINT) AS span_len,
-          |       CAST(count(*) AS BIGINT) AS n_windows
-          |FROM g GROUP BY doc_id, grp
-          |ORDER BY doc_id, span_start""".stripMargin,
-
-      // d15's chain with the eval windows carrying a suite tag (doc_id%3)
-      // and the islands merge keyed by (doc, suite)
-      "q_multi_suite_decontam" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM documents),
-          |w AS (
-          |  SELECT doc_id, u.pos, u.h FROM (
-          |    SELECT doc_id,
-          |      unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-          |        i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-          |    FROM t WHERE len(ws) >= 8)),
-          |c AS (SELECT doc_id, pos, h FROM w WHERE doc_id % 11 <> 0),
-          |b AS (SELECT DISTINCT h, 'suite' || (doc_id % 3) AS suite
-          |      FROM w WHERE doc_id % 11 = 0),
-          |dup AS (SELECT c.doc_id, c.pos, b.suite FROM c JOIN b USING (h)),
-          |g AS (SELECT doc_id, suite, pos,
-          |             pos - row_number() OVER (PARTITION BY doc_id, suite ORDER BY pos) AS grp
-          |      FROM dup)
-          |SELECT doc_id, suite, CAST(min(pos) AS BIGINT) AS span_start,
-          |       CAST(max(pos) - min(pos) + 8 AS BIGINT) AS span_len,
-          |       CAST(count(*) AS BIGINT) AS n_windows
-          |FROM g GROUP BY doc_id, suite, grp
-          |ORDER BY doc_id, suite, span_start""".stripMargin,
-
-      // d14b's strip chain with the hotness test swapped from occurrence
-      // count to DISTINCT-document frequency (>= 3): only corpus-repeated
-      // chrome is cut, never a single document's own refrain
-      "q_boilerplate_strip" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM documents),
-          |w AS (
-          |  SELECT doc_id, u.pos, u.h FROM (
-          |    SELECT doc_id,
-          |      unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-          |        i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-          |    FROM t WHERE len(ws) >= 8)),
-          |f AS (SELECT h, count(DISTINCT doc_id) AS df FROM w GROUP BY h),
-          |dup AS (SELECT w.doc_id, w.pos FROM w JOIN f USING (h) WHERE f.df >= 3),
-          |g AS (SELECT doc_id, pos,
-          |             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-          |      FROM dup),
-          |sp AS (SELECT doc_id, min(pos) AS s, max(pos) + 8 AS e FROM g GROUP BY doc_id, grp),
-          |tk AS (
-          |  SELECT doc_id, u.i, u.tok FROM (
-          |    SELECT doc_id,
-          |      unnest(list_transform(range(1, len(ws) + 1),
-          |        i -> struct_pack(i := i - 1, tok := ws[i]))) AS u
-          |    FROM t)),
-          |kept AS (
-          |  SELECT tk.doc_id, tk.i, tk.tok FROM tk
-          |  WHERE NOT EXISTS (SELECT 1 FROM sp
-          |                    WHERE sp.doc_id = tk.doc_id AND tk.i >= sp.s AND tk.i < sp.e))
-          |SELECT d.doc_id,
-          |       COALESCE((SELECT string_agg(k.tok, ' ' ORDER BY k.i)
-          |                 FROM kept k WHERE k.doc_id = d.doc_id), '') AS clean_text
-          |FROM documents d ORDER BY doc_id""".stripMargin,
-
-      // first-occurrence block dedup: same 16-token blocks (md5 over the
-      // space-joined slice), winner per hash = row_number 1 under
-      // (doc_id, block_index) — identical to Spark's min(struct) — later
-      // copies dropped, text reassembled from surviving block indexes
-      "d20_block_dedup" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-          |  FROM documents),
-          |n AS (SELECT doc_id, toks,
-          |             CAST(ceil(len(toks) / 16.0) AS BIGINT) AS nb FROM t),
-          |b AS (SELECT doc_id, i AS bi,
-          |             md5(array_to_string(toks[CAST(i*16+1 AS BIGINT):CAST(i*16+16 AS BIGINT)], ' ')) AS h
-          |      FROM n, unnest(range(0, nb)) AS u(i)),
-          |w AS (SELECT h, doc_id AS wd, bi AS wb FROM (
-          |        SELECT h, doc_id, bi,
-          |               row_number() OVER (PARTITION BY h ORDER BY doc_id, bi) AS rn
-          |        FROM b) WHERE rn = 1),
-          |drp AS (SELECT b.doc_id, b.bi FROM b JOIN w USING (h)
-          |        WHERE NOT (b.doc_id = w.wd AND b.bi = w.wb)),
-          |da AS (SELECT doc_id, list(bi ORDER BY bi) AS drops FROM drp GROUP BY doc_id)
-          |SELECT n.doc_id, n.nb AS n_blocks,
-          |       CAST(COALESCE(len(da.drops), 0) AS BIGINT) AS n_dropped,
-          |       COALESCE(array_to_string(flatten(list_transform(
-          |         list_filter(range(0, n.nb), i -> NOT list_contains(COALESCE(da.drops, []), i)),
-          |         i -> toks[CAST(i*16+1 AS BIGINT):CAST(i*16+16 AS BIGINT)])), ' '), '') AS clean_text
-          |FROM n LEFT JOIN da USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-      // d20's block frame split at the maintained-index boundary: the
-      // corpus fifths' DISTINCT block hashes form the index; incoming
-      // blocks that hit it are dropped, text reassembled as in d20
-      "d21_incremental_block_dedup" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-          |  FROM documents),
-          |n AS (SELECT doc_id, toks,
-          |             CAST(ceil(len(toks) / 16.0) AS BIGINT) AS nb FROM t),
-          |cb AS (SELECT DISTINCT
-          |             md5(array_to_string(toks[CAST(i*16+1 AS BIGINT):CAST(i*16+16 AS BIGINT)], ' ')) AS h
-          |      FROM n, unnest(range(0, nb)) AS u(i) WHERE doc_id % 5 <> 0),
-          |ib AS (SELECT doc_id, i AS bi,
-          |             md5(array_to_string(toks[CAST(i*16+1 AS BIGINT):CAST(i*16+16 AS BIGINT)], ' ')) AS h
-          |      FROM n, unnest(range(0, nb)) AS u(i) WHERE doc_id % 5 = 0),
-          |drp AS (SELECT ib.doc_id, ib.bi FROM ib JOIN cb USING (h)),
-          |da AS (SELECT doc_id, list(bi ORDER BY bi) AS drops FROM drp GROUP BY doc_id)
-          |SELECT n.doc_id, n.nb AS n_blocks,
-          |       CAST(COALESCE(len(da.drops), 0) AS BIGINT) AS n_dropped,
-          |       COALESCE(array_to_string(flatten(list_transform(
-          |         list_filter(range(0, n.nb), i -> NOT list_contains(COALESCE(da.drops, []), i)),
-          |         i -> toks[CAST(i*16+1 AS BIGINT):CAST(i*16+16 AS BIGINT)])), ' '), '') AS clean_text
-          |FROM n LEFT JOIN da USING (doc_id) WHERE n.doc_id % 5 = 0
-          |ORDER BY doc_id""".stripMargin,
-
-      // the boilerplate df table re-aimed at a per-document audit: every
-      // window joins its df, then one per-doc aggregate
-      "q_memorization_risk" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM documents),
-          |w AS (
-          |  SELECT doc_id, u.pos, u.h FROM (
-          |    SELECT doc_id,
-          |      unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-          |        i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-          |    FROM t WHERE len(ws) >= 8)),
-          |f AS (SELECT h, count(DISTINCT doc_id) AS df FROM w GROUP BY h)
-          |SELECT w.doc_id, CAST(count(*) AS BIGINT) AS n_windows,
-          |       CAST(max(f.df) AS BIGINT) AS max_df,
-          |       CAST(count(CASE WHEN f.df >= 3 THEN 1 END) AS BIGINT) AS n_hot,
-          |       floor(count(CASE WHEN f.df >= 3 THEN 1 END)::DOUBLE / count(*)::DOUBLE
-          |             * 10000.0 + 0.5) / 10000.0 AS hot_frac
-          |FROM w JOIN f USING (h) GROUP BY w.doc_id ORDER BY doc_id""".stripMargin,
-
-      // FIM replay: same md5-hex cut-point arithmetic ('0x'||substr parse =
-      // Spark's conv(substring)), same PSM serialization
-      "q_fim_transform" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM documents),
-          |c AS (
-          |  SELECT doc_id, ws, len(ws) AS n,
-          |         ('0x' || substr(md5(doc_id::VARCHAR || '#fim1'), 1, 8))::BIGINT % (len(ws) + 1) AS a,
-          |         ('0x' || substr(md5(doc_id::VARCHAR || '#fim2'), 1, 8))::BIGINT % (len(ws) + 1) AS b
-          |  FROM t),
-          |s AS (SELECT doc_id, ws, n, least(a, b) AS u, greatest(a, b) AS v FROM c)
-          |SELECT doc_id, CAST(u AS BIGINT) AS n_prefix,
-          |       CAST(v - u AS BIGINT) AS n_middle,
-          |       CAST(n - v AS BIGINT) AS n_suffix,
-          |       -- array_to_string([]) is NULL in DuckDB but '' under
-          |       -- Spark's concat_ws — coalesce every part
-          |       md5(COALESCE(array_to_string(ws[1:u], ' '), '') || '|' ||
-          |           COALESCE(array_to_string(ws[v+1:n], ' '), '') || '|' ||
-          |           COALESCE(array_to_string(ws[u+1:v], ' '), '')) AS psm_md5
-          |FROM s ORDER BY doc_id""".stripMargin,
-
-      // the boilerplate chain with the df keyed by (source, h) and the
-      // hot-window join carrying the source — domain-scoped chrome only
-      "q_source_boilerplate_strip" ->
-        """WITH t AS (
-          |  SELECT doc_id, source, list_filter(string_split(text, ' '), x -> x <> '') AS ws
-          |  FROM documents),
-          |w AS (
-          |  SELECT doc_id, source, u.pos, u.h FROM (
-          |    SELECT doc_id, source,
-          |      unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-          |        i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-          |    FROM t WHERE len(ws) >= 8)),
-          |f AS (SELECT source, h, count(DISTINCT doc_id) AS df FROM w GROUP BY 1, 2),
-          |dup AS (SELECT w.doc_id, w.pos FROM w JOIN f USING (source, h) WHERE f.df >= 2),
-          |g AS (SELECT doc_id, pos,
-          |             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-          |      FROM dup),
-          |sp AS (SELECT doc_id, min(pos) AS s, max(pos) + 8 AS e FROM g GROUP BY doc_id, grp),
-          |tk AS (
-          |  SELECT doc_id, u.i, u.tok FROM (
-          |    SELECT doc_id, unnest(list_transform(range(1, len(ws) + 1),
-          |        i -> struct_pack(i := i - 1, tok := ws[i]))) AS u
-          |    FROM t)),
-          |kept AS (
-          |  SELECT tk.doc_id, tk.i, tk.tok FROM tk
-          |  WHERE NOT EXISTS (SELECT 1 FROM sp
-          |                    WHERE sp.doc_id = tk.doc_id AND tk.i >= sp.s AND tk.i < sp.e))
-          |SELECT d.doc_id,
-          |       COALESCE((SELECT string_agg(k.tok, ' ' ORDER BY k.i)
-          |                 FROM kept k WHERE k.doc_id = d.doc_id), '') AS clean_text
-          |FROM documents d ORDER BY doc_id""".stripMargin,
-
-      // the composed web-curation replay: the q_boilerplate_strip chain,
-      // then the q_quality_cut formula + quantile threshold over the
-      // CLEANED text, then min-id dedup per distinct cleaned content
-      "e2e_web_pipeline" -> {
-        val stopArr = TextOps.DefaultStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""WITH t AS (
-           |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM documents),
-           |w AS (
-           |  SELECT doc_id, u.pos, u.h FROM (
-           |    SELECT doc_id,
-           |      unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-           |        i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-           |    FROM t WHERE len(ws) >= 8)),
-           |f AS (SELECT h, count(DISTINCT doc_id) AS df FROM w GROUP BY h),
-           |dup AS (SELECT w.doc_id, w.pos FROM w JOIN f USING (h) WHERE f.df >= 3),
-           |g AS (SELECT doc_id, pos,
-           |             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-           |      FROM dup),
-           |sp AS (SELECT doc_id, min(pos) AS s, max(pos) + 8 AS e FROM g GROUP BY doc_id, grp),
-           |tk AS (
-           |  SELECT doc_id, u.i, u.tok FROM (
-           |    SELECT doc_id,
-           |      unnest(list_transform(range(1, len(ws) + 1),
-           |        i -> struct_pack(i := i - 1, tok := ws[i]))) AS u
-           |    FROM t)),
-           |kept AS (
-           |  SELECT tk.doc_id, tk.i, tk.tok FROM tk
-           |  WHERE NOT EXISTS (SELECT 1 FROM sp
-           |                    WHERE sp.doc_id = tk.doc_id AND tk.i >= sp.s AND tk.i < sp.e)),
-           |clean AS (
-           |  SELECT d.doc_id,
-           |         COALESCE((SELECT string_agg(k.tok, ' ' ORDER BY k.i)
-           |                   FROM kept k WHERE k.doc_id = d.doc_id), '') AS clean_text
-           |  FROM documents d),
-           |ct AS (SELECT doc_id, clean_text,
-           |              list_filter(string_split(clean_text, ' '), x -> x <> '') AS toks
-           |       FROM clean),
-           |ne AS (SELECT * FROM ct WHERE len(toks) > 0),
-           |q AS (
-           |  SELECT doc_id, clean_text, CAST(len(toks) AS BIGINT) AS n_clean_tokens,
-           |         floor((0.4*least(1.0, len(toks)::DOUBLE / 50.0)
-           |              + 0.3*(len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE)
-           |              + 0.3*(len(list_filter(toks, x -> list_contains($stopArr, x)))::DOUBLE / len(toks)::DOUBLE))
-           |               * 10000.0 + 0.5) / 10000.0 AS quality
-           |  FROM ne),
-           |thr AS (SELECT quantile_cont(quality, 0.8) AS thr FROM q),
-           |keep AS (SELECT q.* FROM q, thr WHERE quality >= thr)
-           |SELECT doc_id, n_clean_tokens, quality, md5(clean_text) AS clean_md5
-           |FROM keep
-           |QUALIFY row_number() OVER (PARTITION BY md5(clean_text) ORDER BY doc_id) = 1
-           |ORDER BY doc_id""".stripMargin
-      },
-
-      // x11's scoring feeding the exact integer NTILE formula (first
-      // n mod k groups take one extra row) over (row index, total) — the
-      // identical arithmetic the Spark side computes from its
-      // range-partitioned global index
-      "q_curriculum_phases" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-          |  FROM documents),
-          |trans AS (
-          |  SELECT doc_id, toks[i - 1] AS v, toks[i] AS w
-          |  FROM t, unnest(range(2, len(toks) + 1)) AS u(i)),
-          |vocab AS (
-          |  SELECT count(DISTINCT tok)::DOUBLE AS v_size
-          |  FROM (SELECT unnest(toks) AS tok FROM t)),
-          |bigram AS (SELECT v, w, count(*) AS c_vw FROM trans GROUP BY v, w),
-          |ctx AS (SELECT v, count(*) AS c_v FROM trans GROUP BY v),
-          |scored0 AS (
-          |  SELECT trans.doc_id,
-          |         CAST(floor(-ln((c_vw::DOUBLE + 0.5) / (c_v::DOUBLE + 0.5 * vocab.v_size))
-          |                    * 1000000.0 + 0.5) AS BIGINT) AS nll_q6
-          |  FROM trans JOIN bigram USING (v, w) JOIN ctx USING (v), vocab),
-          |scored AS (
-          |  SELECT doc_id,
-          |         floor(sum(nll_q6)::DOUBLE / 1000000.0 / count(*)::DOUBLE * 10000.0 + 0.5) / 10000.0 AS avg_nll
-          |  FROM scored0 GROUP BY doc_id),
-          |r AS (SELECT doc_id, avg_nll,
-          |             row_number() OVER (ORDER BY avg_nll, doc_id) - 1 AS idx
-          |      FROM scored),
-          |n AS (SELECT count(*) AS n FROM scored)
-          |SELECT doc_id, avg_nll,
-          |       CAST(CASE WHEN idx < (n % 4) * (n // 4 + 1)
-          |                 THEN idx // (n // 4 + 1)
-          |                 ELSE (n % 4) + (idx - (n % 4) * (n // 4 + 1)) // (n // 4)
-          |            END + 1 AS INT) AS phase
-          |FROM r, n ORDER BY doc_id""".stripMargin,
-
-      // both signals' quartiles re-derived (x2's quality blend, x11's
-      // avg_nll, the exact integer NTILE of q_curriculum_phases), then
-      // Cohen's kappa from exact long confusion arithmetic
-      "q_signal_kappa" -> {
-        val stopArr = TextOps.DefaultStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-        val phase4 = (idx: String, n: String) =>
-          s"""CAST(CASE WHEN $idx < ($n % 4) * ($n // 4 + 1)
-             |          THEN $idx // ($n // 4 + 1)
-             |          ELSE ($n % 4) + ($idx - ($n % 4) * ($n // 4 + 1)) // ($n // 4)
-             |     END + 1 AS INT)""".stripMargin
-        s"""WITH t AS (
-           |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-           |  FROM documents),
-           |raw AS (
-           |  SELECT doc_id,
-           |         least(1.0, len(toks)::DOUBLE / 50.0) AS ls,
-           |         len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE AS ttr,
-           |         len(list_filter(toks, x -> list_contains($stopArr, x)))::DOUBLE / len(toks)::DOUBLE AS sr
-           |  FROM t),
-           |qa0 AS (SELECT doc_id,
-           |               floor((0.4 * ls + 0.3 * ttr + 0.3 * sr) * 10000.0 + 0.5) / 10000.0 AS q
-           |        FROM raw),
-           |ra AS (SELECT doc_id, row_number() OVER (ORDER BY q, doc_id) - 1 AS idx FROM qa0),
-           |na AS (SELECT count(*) AS n FROM qa0),
-           |pa AS (SELECT doc_id, ${phase4("idx", "n")} AS la FROM ra, na),
-           |trans AS (
-           |  SELECT doc_id, toks[i - 1] AS v, toks[i] AS w
-           |  FROM t, unnest(range(2, len(toks) + 1)) AS u(i)),
-           |vocab AS (
-           |  SELECT count(DISTINCT tok)::DOUBLE AS v_size
-           |  FROM (SELECT unnest(toks) AS tok FROM t)),
-           |bigram AS (SELECT v, w, count(*) AS c_vw FROM trans GROUP BY v, w),
-           |ctx AS (SELECT v, count(*) AS c_v FROM trans GROUP BY v),
-           |scored0 AS (
-           |  SELECT trans.doc_id,
-           |         CAST(floor(-ln((c_vw::DOUBLE + 0.5) / (c_v::DOUBLE + 0.5 * vocab.v_size))
-           |                    * 1000000.0 + 0.5) AS BIGINT) AS nll_q6
-           |  FROM trans JOIN bigram USING (v, w) JOIN ctx USING (v), vocab),
-           |qb0 AS (
-           |  SELECT doc_id,
-           |         floor(sum(nll_q6)::DOUBLE / 1000000.0 / count(*)::DOUBLE * 10000.0 + 0.5) / 10000.0 AS avg_nll
-           |  FROM scored0 GROUP BY doc_id),
-           |rb AS (SELECT doc_id, row_number() OVER (ORDER BY avg_nll, doc_id) - 1 AS idx FROM qb0),
-           |nb AS (SELECT count(*) AS n FROM qb0),
-           |pb AS (SELECT doc_id, ${phase4("idx", "n")} AS lb FROM rb, nb),
-           |jn AS (SELECT pa.la, pb.lb FROM pa JOIN pb USING (doc_id)),
-           |base AS (SELECT CAST(count(*) AS BIGINT) AS n,
-           |                CAST(count(CASE WHEN la = lb THEN 1 END) AS BIGINT) AS n_agree
-           |         FROM jn),
-           |ma AS (SELECT la, CAST(count(*) AS BIGINT) AS ra FROM jn GROUP BY 1),
-           |mb AS (SELECT lb, CAST(count(*) AS BIGINT) AS rb FROM jn GROUP BY 1),
-           |cx AS (SELECT CAST(COALESCE(sum(ma.ra * mb.rb), 0) AS BIGINT) AS sum_cross
-           |       FROM ma JOIN mb ON ma.la = mb.lb)
-           |SELECT n, n_agree, sum_cross,
-           |       CASE WHEN n = 0 THEN NULL
-           |            ELSE floor(n_agree::DOUBLE / n::DOUBLE * 10000.0 + 0.5) / 10000.0 END AS po,
-           |       CASE WHEN n = 0 THEN NULL
-           |            ELSE floor(sum_cross::DOUBLE / (n * n)::DOUBLE * 10000.0 + 0.5) / 10000.0 END AS pe,
-           |       CASE WHEN n = 0 THEN NULL
-           |            WHEN n * n - sum_cross = 0 THEN 1.0
-           |            ELSE floor((n * n_agree - sum_cross)::DOUBLE
-           |                       / (n * n - sum_cross)::DOUBLE * 1000000.0 + 0.5) / 1000000.0 END AS kappa
-           |FROM base, cx""".stripMargin
-      },
-
-      // the LSH candidate set (shared CTEs) scored against d4's exact
-      // df-capped truth pairs; precision/recall are identical IEEE divides
-      "q_lsh_candidate_quality" ->
-        s"""WITH $sigCte,
-           |$lshCandsCte,
-           |csh AS ($DuckShingles),
-           |ch AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(shingle),1,8))::BIGINT AS h FROM csh),
-           |cdf AS (SELECT h, count(*) AS df FROM ch GROUP BY h),
-           |rare AS (SELECT ch.doc_id, ch.h FROM ch JOIN cdf USING (h) WHERE cdf.df <= $JaccardMaxDf),
-           |tcands AS (
-           |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-           |  FROM rare x JOIN rare y ON x.h = y.h AND x.doc_id < y.doc_id GROUP BY 1, 2),
-           |sizes AS (SELECT doc_id, count(*) AS sz FROM ch GROUP BY doc_id),
-           |tinter AS (SELECT tc.doc_a, tc.doc_b, count(*) AS inter
-           |           FROM tcands tc JOIN ch x ON x.doc_id = tc.doc_a
-           |           JOIN ch y ON y.doc_id = tc.doc_b AND y.h = x.h GROUP BY 1, 2),
-           |truth AS (
-           |  SELECT doc_a, doc_b FROM tinter
-           |  JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-           |  WHERE round(inter::DOUBLE / (sa.sz + sb.sz - inter)::DOUBLE, 6) >= $JaccardThreshold),
-           |nc AS (SELECT count(*) AS n_cands FROM cands),
-           |nt AS (SELECT count(*) AS n_true FROM truth),
-           |nh AS (SELECT count(*) AS n_hit FROM cands JOIN truth USING (doc_a, doc_b))
-           |SELECT CAST(n_cands AS BIGINT) AS n_cands, CAST(n_true AS BIGINT) AS n_true,
-           |       CAST(n_hit AS BIGINT) AS n_hit,
-           |       n_hit::DOUBLE / n_cands::DOUBLE AS precision,
-           |       n_hit::DOUBLE / n_true::DOUBLE AS recall
-           |FROM nc, nt, nh""".stripMargin,
-
-      // d3b's Hamming candidate stack scored against the same exact
-      // df-capped Jaccard truth as the LSH quality gate
-      "q_hamming_candidate_quality" ->
-        s"""WITH toks AS (
-           |  SELECT doc_id, unnest(list_filter(string_split(text,' '), t -> t <> '')) AS token FROM documents),
-           |hh AS (SELECT doc_id, ('0x' || substr(md5(token),1,15))::BIGINT AS h FROM toks),
-           |votes AS (
-           |  SELECT doc_id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS vote
-           |  FROM hh CROSS JOIN (SELECT unnest(range(0, 60)) AS b) bits GROUP BY doc_id, b),
-           |sh AS (SELECT doc_id, CAST(sum(CASE WHEN vote > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS s
-           |       FROM votes GROUP BY doc_id),
-           |blk AS (SELECT doc_id, s, b, (s >> CAST(15*b AS INTEGER)) & 32767 AS v
-           |        FROM sh CROSS JOIN (SELECT unnest(range(0, 4)) AS b) bl),
-           |keep AS (SELECT b, v FROM blk GROUP BY b, v HAVING count(*) <= 50),
-           |cb AS (SELECT blk.doc_id, blk.s, blk.b, blk.v FROM blk JOIN keep USING (b, v)),
-           |hc AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b, x.s AS sa, y.s AS sb
-           |       FROM cb x JOIN cb y ON x.b = y.b AND x.v = y.v AND x.doc_id < y.doc_id),
-           |cands AS (SELECT doc_a, doc_b FROM hc WHERE bit_count(xor(sa, sb)) <= 3),
-           |csh AS ($DuckShingles),
-           |ch AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(shingle),1,8))::BIGINT AS h FROM csh),
-           |cdf AS (SELECT h, count(*) AS df FROM ch GROUP BY h),
-           |rare AS (SELECT ch.doc_id, ch.h FROM ch JOIN cdf USING (h) WHERE cdf.df <= $JaccardMaxDf),
-           |tcands AS (
-           |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-           |  FROM rare x JOIN rare y ON x.h = y.h AND x.doc_id < y.doc_id GROUP BY 1, 2),
-           |sizes AS (SELECT doc_id, count(*) AS sz FROM ch GROUP BY doc_id),
-           |tinter AS (SELECT tc.doc_a, tc.doc_b, count(*) AS inter
-           |           FROM tcands tc JOIN ch x ON x.doc_id = tc.doc_a
-           |           JOIN ch y ON y.doc_id = tc.doc_b AND y.h = x.h GROUP BY 1, 2),
-           |truth AS (
-           |  SELECT doc_a, doc_b FROM tinter
-           |  JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-           |  WHERE round(inter::DOUBLE / (sa.sz + sb.sz - inter)::DOUBLE, 6) >= $JaccardThreshold),
-           |nc AS (SELECT count(*) AS n_cands FROM cands),
-           |nt AS (SELECT count(*) AS n_true FROM truth),
-           |nh AS (SELECT count(*) AS n_hit FROM cands JOIN truth USING (doc_a, doc_b))
-           |SELECT CAST(n_cands AS BIGINT) AS n_cands, CAST(n_true AS BIGINT) AS n_true,
-           |       CAST(n_hit AS BIGINT) AS n_hit,
-           |       n_hit::DOUBLE / n_cands::DOUBLE AS precision,
-           |       n_hit::DOUBLE / n_true::DOUBLE AS recall
-           |FROM nc, nt, nh""".stripMargin,
-
-      // DSIR replayed end-to-end: bigram buckets from the same md5 hex
-      // parse, add-k log-ratio λ q6-fixed per bucket, per-doc long sums,
-      // the same (h₅₂+0.5)/2⁵² md5-uniform → Gumbel perturbation, top-100
-      // on the exact long key
-      "q_dsir_select" ->
-        """WITH t AS (
-          |  SELECT doc_id, lang, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-          |  FROM documents),
-          |tr AS (
-          |  SELECT doc_id, lang, toks[i - 1] || ' ' || toks[i] AS bg
-          |  FROM t, unnest(range(2, len(toks) + 1)) AS u(i)),
-          |f AS (SELECT doc_id, lang, ('0x' || substr(md5(bg), 1, 2))::BIGINT % 256 AS f FROM tr),
-          |raw AS (SELECT f, count(*) AS cr FROM f GROUP BY f),
-          |tgt AS (SELECT f, count(*) AS ct FROM f WHERE lang = 'en' GROUP BY f),
-          |tab AS (SELECT raw.f, raw.cr, COALESCE(tgt.ct, 0) AS ct FROM raw LEFT JOIN tgt USING (f)),
-          |tot AS (SELECT sum(cr) AS totr, sum(ct) AS tott FROM tab),
-          |lam AS (
-          |  SELECT f, CAST(floor(ln(
-          |           ((ct::DOUBLE + 0.5) / (tott::DOUBLE + 128.0)) /
-          |           ((cr::DOUBLE + 0.5) / (totr::DOUBLE + 128.0))) * 1000000.0 + 0.5) AS BIGINT) AS lam_q6
-          |  FROM tab, tot),
-          |wts AS (
-          |  SELECT f.doc_id, CAST(count(*) AS BIGINT) AS n_trans,
-          |         CAST(sum(lam.lam_q6) AS BIGINT) AS w_q6
-          |  FROM f JOIN lam USING (f) GROUP BY f.doc_id),
-          |g AS (
-          |  SELECT doc_id, n_trans, w_q6,
-          |         w_q6 + CAST(floor(-ln(-ln(
-          |           (('0x' || substr(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT::DOUBLE + 0.5)
-          |           / 4503599627370496.0)) * 1000000.0 + 0.5) AS BIGINT) AS g_q6
-          |  FROM wts)
-          |SELECT CAST(row_number() OVER (ORDER BY g_q6 DESC, doc_id) AS INT) AS rank,
-          |       doc_id, n_trans, w_q6, g_q6
-          |FROM g ORDER BY g_q6 DESC, doc_id LIMIT 100""".stripMargin,
-
-      // d15's windows/islands, aggregated to per-doc covered-position
-      // counts; spans are disjoint so coverage is the plain length sum;
-      // floor(x·10⁴+0.5)/10⁴ == TextOps.round4
-      "d15b_contamination_fraction" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM documents),
-          |w AS (
-          |  SELECT doc_id, u.pos, u.h FROM (
-          |    SELECT doc_id,
-          |      unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-          |        i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-          |    FROM t WHERE len(ws) >= 8)),
-          |c AS (SELECT doc_id, pos, h FROM w WHERE doc_id % 11 <> 0),
-          |b AS (SELECT DISTINCT h FROM w WHERE doc_id % 11 = 0),
-          |dup AS (SELECT c.doc_id, c.pos FROM c JOIN b USING (h)),
-          |g AS (SELECT doc_id, pos,
-          |             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-          |      FROM dup),
-          |sp AS (SELECT doc_id, max(pos) - min(pos) + 8 AS span_len FROM g GROUP BY doc_id, grp),
-          |cov AS (SELECT doc_id, sum(span_len) AS covered FROM sp GROUP BY doc_id)
-          |SELECT t.doc_id, CAST(len(t.ws) AS BIGINT) AS n_tokens,
-          |       CAST(COALESCE(cov.covered, 0) AS BIGINT) AS contaminated_tokens,
-          |       CASE WHEN len(t.ws) = 0 THEN 0.0
-          |            ELSE floor(COALESCE(cov.covered, 0)::DOUBLE / len(t.ws)::DOUBLE
-          |                       * 10000.0 + 0.5) / 10000.0 END AS contamination_frac
-          |FROM t LEFT JOIN cov USING (doc_id)
-          |WHERE t.doc_id % 11 <> 0 ORDER BY t.doc_id""".stripMargin,
-
-      "d3_simhash" ->
-        """WITH toks AS (
-          |  SELECT doc_id, unnest(list_filter(string_split(text,' '), t -> t <> '')) AS token FROM documents),
-          |h AS (SELECT doc_id, ('0x' || substr(md5(token),1,8))::BIGINT AS h FROM toks),
-          |votes AS (
-          |  SELECT doc_id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS vote
-          |  FROM h CROSS JOIN (SELECT unnest(range(0, 32)) AS b) bits GROUP BY doc_id, b)
-          |SELECT doc_id, CAST(sum(CASE WHEN vote > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
-          |FROM votes GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      // 60-bit prints (15 md5 hex chars/token), 4×15-bit block buckets with
-      // the ≤50 frequency cap, exact bit_count(xor) ≤ 3 on candidates
-      "d3b_hamming_neardup_pairs" ->
-        """WITH toks AS (
-          |  SELECT doc_id, unnest(list_filter(string_split(text,' '), t -> t <> '')) AS token FROM documents),
-          |h AS (SELECT doc_id, ('0x' || substr(md5(token),1,15))::BIGINT AS h FROM toks),
-          |votes AS (
-          |  SELECT doc_id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS vote
-          |  FROM h CROSS JOIN (SELECT unnest(range(0, 60)) AS b) bits GROUP BY doc_id, b),
-          |sh AS (SELECT doc_id, CAST(sum(CASE WHEN vote > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS s
-          |       FROM votes GROUP BY doc_id),
-          |blk AS (SELECT doc_id, s, b, (s >> CAST(15*b AS INTEGER)) & 32767 AS v
-          |        FROM sh CROSS JOIN (SELECT unnest(range(0, 4)) AS b) bl),
-          |keep AS (SELECT b, v FROM blk GROUP BY b, v HAVING count(*) <= 50),
-          |cb AS (SELECT blk.doc_id, blk.s, blk.b, blk.v FROM blk JOIN keep USING (b, v)),
-          |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b, x.s AS sa, y.s AS sb
-          |         FROM cb x JOIN cb y ON x.b = y.b AND x.v = y.v AND x.doc_id < y.doc_id)
-          |SELECT doc_a, doc_b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
-          |FROM cand WHERE bit_count(xor(sa, sb)) <= 3 ORDER BY doc_a, doc_b""".stripMargin,
-
-      "q_best_of_n" ->
-        """WITH r AS (
-          |  SELECT user_id, event_type, event_id, value,
-          |         row_number() OVER (PARTITION BY user_id, event_type ORDER BY value DESC, event_id) AS rn,
-          |         lead(value) OVER (PARTITION BY user_id, event_type ORDER BY value DESC, event_id) AS runner,
-          |         count(*) OVER (PARTITION BY user_id, event_type) AS n
-          |  FROM events)
-          |SELECT user_id, event_type, event_id AS chosen_id, value AS chosen_value,
-          |       CAST(n AS BIGINT) AS n_candidates, value - runner AS margin
-          |FROM r WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin,
-
-      // add-one smoothed PSI over 10 enumerated bins per source; per-bin
-      // terms q6-quantized before the sum (float-order immune), final round4
-      "q_quality_drift_psi" -> {
-        val stopArr = TextOps.DefaultStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""WITH t AS (
-           |  SELECT doc_id, source, list_filter(string_split(text,' '), x -> x <> '') AS toks FROM documents),
-           |raw AS (
-           |  SELECT doc_id, source,
-           |         least(1.0, len(toks)::DOUBLE / 50.0) AS ls,
-           |         len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE AS ttr,
-           |         len(list_filter(toks, x -> list_contains($stopArr, x)))::DOUBLE / len(toks)::DOUBLE AS sr
-           |  FROM t),
-           |qd AS (
-           |  SELECT doc_id, source,
-           |         floor((0.4 * ls + 0.3 * ttr + 0.3 * sr) * 10000.0 + 0.5) / 10000.0 AS quality
-           |  FROM raw),
-           |binned AS (
-           |  SELECT source, doc_id % 2 = 0 AS is_a,
-           |         least(CAST(floor(quality * 10.0) AS BIGINT), 9) AS bin
-           |  FROM qd),
-           |c AS (SELECT source, bin,
-           |             CAST(count(*) FILTER (is_a) AS BIGINT) AS ca,
-           |             CAST(count(*) FILTER (NOT is_a) AS BIGINT) AS cb
-           |      FROM binned GROUP BY source, bin),
-           |bins AS (SELECT source, unnest(range(0, 10)) AS bin FROM (SELECT DISTINCT source FROM binned)),
-           |counts AS (
-           |  SELECT bins.source, bins.bin, COALESCE(c.ca, 0) AS ca, COALESCE(c.cb, 0) AS cb
-           |  FROM bins LEFT JOIN c ON bins.source = c.source AND bins.bin = c.bin),
-           |tot AS (SELECT source, CAST(sum(ca) AS BIGINT) AS n_a, CAST(sum(cb) AS BIGINT) AS n_b
-           |        FROM counts GROUP BY source),
-           |terms AS (
-           |  SELECT counts.source, n_a, n_b,
-           |         (ca + 1)::DOUBLE / (n_a + 10)::DOUBLE AS pa,
-           |         (cb + 1)::DOUBLE / (n_b + 10)::DOUBLE AS pb
-           |  FROM counts JOIN tot ON counts.source = tot.source),
-           |q6 AS (
-           |  SELECT source, n_a, n_b,
-           |         CAST(floor((pa - pb) * ln(pa / pb) * 1000000.0 + 0.5) AS BIGINT) AS t_q6
-           |  FROM terms)
-           |SELECT source, max(n_a) AS n_a, max(n_b) AS n_b,
-           |       floor(sum(t_q6)::DOUBLE / 1000000.0 * 10000.0 + 0.5) / 10000.0 AS psi
-           |FROM q6 GROUP BY source ORDER BY source""".stripMargin
-      },
-
-      "q_table_profile" ->
-        """WITH s AS (
-          |  SELECT CAST(count(*) AS BIGINT) AS n_rows,
-          |         CAST(count(l_quantity) AS BIGINT) AS nn1, CAST(count(DISTINCT l_quantity) AS BIGINT) AS nd1,
-          |         min(l_quantity)::DOUBLE AS mn1, max(l_quantity)::DOUBLE AS mx1,
-          |         CAST(count(l_extendedprice) AS BIGINT) AS nn2, CAST(count(DISTINCT l_extendedprice) AS BIGINT) AS nd2,
-          |         min(l_extendedprice)::DOUBLE AS mn2, max(l_extendedprice)::DOUBLE AS mx2,
-          |         CAST(count(l_discount) AS BIGINT) AS nn3, CAST(count(DISTINCT l_discount) AS BIGINT) AS nd3,
-          |         min(l_discount)::DOUBLE AS mn3, max(l_discount)::DOUBLE AS mx3,
-          |         CAST(count(l_tax) AS BIGINT) AS nn4, CAST(count(DISTINCT l_tax) AS BIGINT) AS nd4,
-          |         min(l_tax)::DOUBLE AS mn4, max(l_tax)::DOUBLE AS mx4
-          |  FROM lineitem)
-          |SELECT 'l_discount' AS "column", n_rows, nn3 AS n_non_null, nd3 AS n_distinct, mn3 AS min_value, mx3 AS max_value FROM s
-          |UNION ALL SELECT 'l_extendedprice', n_rows, nn2, nd2, mn2, mx2 FROM s
-          |UNION ALL SELECT 'l_quantity', n_rows, nn1, nd1, mn1, mx1 FROM s
-          |UNION ALL SELECT 'l_tax', n_rows, nn4, nd4, mn4, mx4 FROM s
-          |ORDER BY "column"""".stripMargin,
-
-      // constants spelled as the same ARITHMETIC the Scala side performs
-      // ((1.2 + 1.0), (1.0 - 0.75)) so both engines round the identical
-      // IEEE intermediate, not a re-parsed decimal
-      "q_bm25_search" ->
-        """WITH toks AS (
-          |  SELECT doc_id, unnest(list_filter(string_split(text,' '), t -> t <> '')) AS term FROM documents),
-          |h AS (SELECT doc_id, ('0x' || substr(md5(term),1,15))::BIGINT AS th FROM toks),
-          |tf AS (SELECT doc_id, th, CAST(count(*) AS BIGINT) AS tf FROM h GROUP BY doc_id, th),
-          |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-          |dfreq AS (SELECT th, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY th),
-          |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(dl) AS BIGINT) AS total_dl FROM dl),
-          |q AS (SELECT DISTINCT doc_id AS query_id, th FROM h WHERE doc_id % 50 = 0),
-          |m AS (
-          |  SELECT q.query_id, tf.doc_id, tf.tf, dl.dl, dfreq.df, stats.n_docs, stats.total_dl
-          |  FROM q JOIN tf USING (th) JOIN dl ON tf.doc_id = dl.doc_id
-          |         JOIN dfreq ON q.th = dfreq.th, stats
-          |  WHERE tf.doc_id <> q.query_id),
-          |terms AS (
-          |  SELECT query_id, doc_id,
-          |    CAST(floor(
-          |      ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) *
-          |      ((tf::DOUBLE * (1.2 + 1.0)) /
-          |       (tf::DOUBLE + 1.2 * ((1.0 - 0.75) + 0.75 * (dl::DOUBLE / (total_dl::DOUBLE / n_docs::DOUBLE)))))
-          |      * 1000000.0 + 0.5) AS BIGINT) AS t_q6
-          |  FROM m),
-          |scored AS (SELECT query_id, doc_id, CAST(sum(t_q6) AS BIGINT) AS s_q6 FROM terms GROUP BY query_id, doc_id),
-          |ranked AS (
-          |  SELECT query_id, doc_id, s_q6,
-          |         row_number() OVER (PARTITION BY query_id ORDER BY s_q6 DESC, doc_id) AS rank
-          |  FROM scored)
-          |SELECT query_id, CAST(rank AS BIGINT) AS rank, doc_id,
-          |       floor(s_q6::DOUBLE / 1000000.0 * 10000.0 + 0.5) / 10000.0 AS score
-          |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-      // the BM25 stack at k=10, then graded relevance from distinct shared
-      // words, the same spliced q6 discount literals as the Spark plan,
-      // exact long gain×discount sums, ideal via the re-sorted gain window
-      "q_ndcg_eval" -> {
-        val disc = (1 to 10).map(i =>
-          math.floor(1e6 / (StrictMath.log(i + 1.0) / StrictMath.log(2.0)) + 0.5).toLong)
-        val discLit = disc.mkString("[", ", ", "]") + "::BIGINT[]"
-        s"""WITH toks AS (
-           |  SELECT doc_id, unnest(list_filter(string_split(text,' '), t -> t <> '')) AS term FROM documents),
-           |h AS (SELECT doc_id, ('0x' || substr(md5(term),1,15))::BIGINT AS th FROM toks),
-           |tf AS (SELECT doc_id, th, CAST(count(*) AS BIGINT) AS tf FROM h GROUP BY doc_id, th),
-           |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-           |dfreq AS (SELECT th, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY th),
-           |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(dl) AS BIGINT) AS total_dl FROM dl),
-           |q AS (SELECT DISTINCT doc_id AS query_id, th FROM h WHERE doc_id % 50 = 0),
-           |m AS (
-           |  SELECT q.query_id, tf.doc_id, tf.tf, dl.dl, dfreq.df, stats.n_docs, stats.total_dl
-           |  FROM q JOIN tf USING (th) JOIN dl ON tf.doc_id = dl.doc_id
-           |         JOIN dfreq ON q.th = dfreq.th, stats
-           |  WHERE tf.doc_id <> q.query_id),
-           |terms AS (
-           |  SELECT query_id, doc_id,
-           |    CAST(floor(
-           |      ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) *
-           |      ((tf::DOUBLE * (1.2 + 1.0)) /
-           |       (tf::DOUBLE + 1.2 * ((1.0 - 0.75) + 0.75 * (dl::DOUBLE / (total_dl::DOUBLE / n_docs::DOUBLE)))))
-           |      * 1000000.0 + 0.5) AS BIGINT) AS t_q6
-           |  FROM m),
-           |scored AS (SELECT query_id, doc_id, CAST(sum(t_q6) AS BIGINT) AS s_q6 FROM terms GROUP BY query_id, doc_id),
-           |res AS (SELECT query_id, doc_id, rank FROM (
-           |  SELECT query_id, doc_id,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY s_q6 DESC, doc_id) AS rank
-           |  FROM scored) WHERE rank <= 10),
-           |dw AS (SELECT DISTINCT doc_id, term FROM toks),
-           |qw AS (SELECT DISTINCT doc_id AS query_id, term FROM toks WHERE doc_id % 50 = 0),
-           |sh AS (SELECT r.query_id, r.doc_id, CAST(count(*) AS BIGINT) AS n_shared
-           |       FROM res r JOIN dw ON dw.doc_id = r.doc_id
-           |                  JOIN qw ON qw.query_id = r.query_id AND qw.term = dw.term
-           |       GROUP BY r.query_id, r.doc_id),
-           |g AS (SELECT res.query_id, res.rank,
-           |             (1::BIGINT << CAST(LEAST(7::BIGINT, COALESCE(sh.n_shared, 0) // 4) AS INTEGER)) - 1 AS gain
-           |      FROM res LEFT JOIN sh ON sh.query_id = res.query_id AND sh.doc_id = res.doc_id),
-           |i AS (SELECT query_id, rank, gain,
-           |             row_number() OVER (PARTITION BY query_id ORDER BY gain DESC, rank) AS ipos
-           |      FROM g),
-           |d(disc) AS (SELECT $discLit),
-           |agg AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_results,
-           |               CAST(sum(gain * disc[rank]) AS BIGINT) AS dcg_q6,
-           |               CAST(sum(gain * disc[ipos]) AS BIGINT) AS idcg_q6
-           |        FROM i, d GROUP BY query_id)
-           |SELECT query_id, n_results, dcg_q6, idcg_q6,
-           |       CASE WHEN idcg_q6 = 0 THEN 0.0
-           |            ELSE floor(dcg_q6::DOUBLE / idcg_q6::DOUBLE * 10000.0 + 0.5) / 10000.0 END AS ndcg
-           |FROM agg ORDER BY query_id""".stripMargin
-      },
-
-      // the two retriever CTE stacks again, a RECURSIVE integer weight
-      // CTE (w_d = (w_{d-1}*90) // 100 -- no pow()), and the depth rollup
-      // in the same long op order as the Spark expression
-      "q_rbo_overlap" ->
-        """WITH RECURSIVE wts(d, w_q6) AS (SELECT 1, 1000000 UNION ALL SELECT d + 1, (w_q6 * 90) // 100 FROM wts WHERE d < 20),
-          |corpus AS (
-          |  SELECT d.doc_id, d.text FROM documents d JOIN (SELECT DISTINCT vec_id FROM embeddings) e ON d.doc_id = e.vec_id),
-          |toks AS (SELECT doc_id, unnest(list_filter(string_split(text,' '), t -> t <> '')) AS term FROM corpus),
-          |h AS (SELECT doc_id, ('0x' || substr(md5(term),1,15))::BIGINT AS th FROM toks),
-          |tf AS (SELECT doc_id, th, CAST(count(*) AS BIGINT) AS tf FROM h GROUP BY doc_id, th),
-          |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-          |dfreq AS (SELECT th, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY th),
-          |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(dl) AS BIGINT) AS total_dl FROM dl),
-          |q AS (SELECT DISTINCT doc_id AS query_id, th FROM h WHERE doc_id < 10),
-          |m AS (SELECT q.query_id, tf.doc_id, tf.tf, dl.dl, dfreq.df, stats.n_docs, stats.total_dl
-          |      FROM q JOIN tf USING (th) JOIN dl ON tf.doc_id = dl.doc_id JOIN dfreq ON q.th = dfreq.th, stats
-          |      WHERE tf.doc_id <> q.query_id),
-          |terms AS (SELECT query_id, doc_id,
-          |  CAST(floor(ln(1.0 + (n_docs - df + 0.5)/(df + 0.5)) *
-          |    ((tf::DOUBLE * (1.2+1.0)) / (tf::DOUBLE + 1.2*((1.0-0.75) + 0.75*(dl::DOUBLE/(total_dl::DOUBLE/n_docs::DOUBLE))))) * 1000000.0 + 0.5) AS BIGINT) AS t_q6 FROM m),
-          |lexsc AS (SELECT query_id, doc_id, CAST(sum(t_q6) AS BIGINT) AS s_q6 FROM terms GROUP BY query_id, doc_id),
-          |lex AS (SELECT query_id, doc_id, lrank FROM (
-          |  SELECT query_id, doc_id, row_number() OVER (PARTITION BY query_id ORDER BY s_q6 DESC, doc_id) AS lrank FROM lexsc) WHERE lrank <= 20),
-          |qv AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-          |dsc AS (
-          |  SELECT qv.query_id, e.vec_id,
-          |    round(
-          |      list_reduce(list_transform(range(1, 65), i -> CAST(qv.q_emb[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-          |      (sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(qv.q_emb[i] AS DOUBLE) * CAST(qv.q_emb[i] AS DOUBLE)), (x, y) -> x + y)) *
-          |       sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))), 6) AS cos
-          |  FROM embeddings e CROSS JOIN qv WHERE e.vec_id <> qv.query_id),
-          |den AS (SELECT query_id, doc_id, drank FROM (
-          |  SELECT query_id, vec_id AS doc_id, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS drank FROM dsc) WHERE drank <= 20),
-          |shared AS (
-          |  SELECT lex.query_id, greatest(lex.lrank, den.drank) AS m
-          |  FROM lex JOIN den ON lex.query_id = den.query_id AND lex.doc_id = den.doc_id),
-          |xd AS (SELECT query_id, d, CAST(count(*) AS BIGINT) AS x FROM shared JOIN wts ON m <= d GROUP BY 1, 2),
-          |qq AS (SELECT DISTINCT query_id FROM lex),
-          |rterms AS (
-          |  SELECT qq.query_id, wts.d, wts.w_q6, coalesce(xd.x, 0) AS x
-          |  FROM qq CROSS JOIN wts LEFT JOIN xd ON qq.query_id = xd.query_id AND wts.d = xd.d)
-          |SELECT query_id, CAST(sum((w_q6 * 10) // 100 * x // d) AS BIGINT) AS rbo_q6,
-          |       floor(sum((w_q6 * 10) // 100 * x // d)::DOUBLE / 100.0 + 0.5) / 10000.0 AS rbo
-          |FROM rterms GROUP BY query_id ORDER BY query_id""".stripMargin,
-
-      // both retriever CTE stacks re-derived (bm25 over the intersection
-      // corpus, d5's cosine scoring), fused via q6 reciprocal terms summed
-      // as BIGINTs — same quantize-then-long-sum arithmetic as Spark
-      "q_rrf_fusion" ->
-        """WITH corpus AS (
-          |  SELECT d.doc_id, d.text FROM documents d JOIN (SELECT DISTINCT vec_id FROM embeddings) e ON d.doc_id = e.vec_id),
-          |toks AS (SELECT doc_id, unnest(list_filter(string_split(text,' '), t -> t <> '')) AS term FROM corpus),
-          |h AS (SELECT doc_id, ('0x' || substr(md5(term),1,15))::BIGINT AS th FROM toks),
-          |tf AS (SELECT doc_id, th, CAST(count(*) AS BIGINT) AS tf FROM h GROUP BY doc_id, th),
-          |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-          |dfreq AS (SELECT th, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY th),
-          |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(dl) AS BIGINT) AS total_dl FROM dl),
-          |q AS (SELECT DISTINCT doc_id AS query_id, th FROM h WHERE doc_id < 10),
-          |m AS (SELECT q.query_id, tf.doc_id, tf.tf, dl.dl, dfreq.df, stats.n_docs, stats.total_dl
-          |      FROM q JOIN tf USING (th) JOIN dl ON tf.doc_id = dl.doc_id JOIN dfreq ON q.th = dfreq.th, stats
-          |      WHERE tf.doc_id <> q.query_id),
-          |terms AS (SELECT query_id, doc_id,
-          |  CAST(floor(ln(1.0 + (n_docs - df + 0.5)/(df + 0.5)) *
-          |    ((tf::DOUBLE * (1.2 + 1.0)) / (tf::DOUBLE + 1.2 * ((1.0 - 0.75) + 0.75 * (dl::DOUBLE/(total_dl::DOUBLE/n_docs::DOUBLE))))) * 1000000.0 + 0.5) AS BIGINT) AS t_q6 FROM m),
-          |lexsc AS (SELECT query_id, doc_id, CAST(sum(t_q6) AS BIGINT) AS s_q6 FROM terms GROUP BY query_id, doc_id),
-          |lex AS (SELECT query_id, doc_id, lrank FROM (
-          |  SELECT query_id, doc_id, row_number() OVER (PARTITION BY query_id ORDER BY s_q6 DESC, doc_id) AS lrank FROM lexsc) WHERE lrank <= 20),
-          |qv AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-          |dsc AS (
-          |  SELECT qv.query_id, e.vec_id,
-          |    round(
-          |      list_reduce(list_transform(range(1, 65), i -> CAST(qv.q_emb[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-          |      (sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(qv.q_emb[i] AS DOUBLE) * CAST(qv.q_emb[i] AS DOUBLE)), (x, y) -> x + y)) *
-          |       sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))), 6) AS cos
-          |  FROM embeddings e CROSS JOIN qv WHERE e.vec_id <> qv.query_id),
-          |den AS (SELECT query_id, doc_id, drank FROM (
-          |  SELECT query_id, vec_id AS doc_id, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS drank FROM dsc) WHERE drank <= 20),
-          |fused AS (
-          |  SELECT coalesce(lex.query_id, den.query_id) AS query_id,
-          |         coalesce(lex.doc_id, den.doc_id) AS doc_id,
-          |         lex.lrank, den.drank,
-          |         coalesce(CAST(floor(1000000.0/(60.0 + lrank) + 0.5) AS BIGINT), 0) +
-          |         coalesce(CAST(floor(1000000.0/(60.0 + drank) + 0.5) AS BIGINT), 0) AS f_q6
-          |  FROM lex FULL OUTER JOIN den ON lex.query_id = den.query_id AND lex.doc_id = den.doc_id),
-          |ranked AS (SELECT query_id, doc_id, f_q6, lrank, drank,
-          |  row_number() OVER (PARTITION BY query_id ORDER BY f_q6 DESC, doc_id) AS rank FROM fused)
-          |SELECT query_id, CAST(rank AS BIGINT) AS rank, doc_id,
-          |  floor(f_q6::DOUBLE/100.0 + 0.5)/10000.0 AS rrf_score,
-          |  CAST(lrank AS BIGINT) AS lex_rank, CAST(drank AS BIGINT) AS dense_rank
-          |FROM ranked WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-
-      // bm25 stack over the disjoint corpus/eval split, then the n=8
-      // window CTEs (the split-leakage form) restricted to candidate
-      // pairs; left join keeps zero-shared candidates in the rollup
-      "e2e_retrieval_decontam" ->
-        """WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0),
-          |ev AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0),
-          |ctoks AS (SELECT doc_id, unnest(list_filter(string_split(text,' '), t -> t <> '')) AS term FROM corpus),
-          |ch AS (SELECT doc_id, ('0x' || substr(md5(term),1,15))::BIGINT AS th FROM ctoks),
-          |tf AS (SELECT doc_id, th, CAST(count(*) AS BIGINT) AS tf FROM ch GROUP BY doc_id, th),
-          |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-          |dfreq AS (SELECT th, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY th),
-          |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(dl) AS BIGINT) AS total_dl FROM dl),
-          |etoks AS (SELECT doc_id, unnest(list_filter(string_split(text,' '), t -> t <> '')) AS term FROM ev),
-          |q AS (SELECT DISTINCT doc_id AS query_id, ('0x' || substr(md5(term),1,15))::BIGINT AS th FROM etoks),
-          |m AS (SELECT q.query_id, tf.doc_id, tf.tf, dl.dl, dfreq.df, stats.n_docs, stats.total_dl
-          |      FROM q JOIN tf USING (th) JOIN dl ON tf.doc_id = dl.doc_id JOIN dfreq ON q.th = dfreq.th, stats
-          |      WHERE tf.doc_id <> q.query_id),
-          |terms AS (SELECT query_id, doc_id,
-          |  CAST(floor(ln(1.0 + (n_docs - df + 0.5)/(df + 0.5)) *
-          |    ((tf::DOUBLE * (1.2 + 1.0)) / (tf::DOUBLE + 1.2 * ((1.0 - 0.75) + 0.75 * (dl::DOUBLE/(total_dl::DOUBLE/n_docs::DOUBLE))))) * 1000000.0 + 0.5) AS BIGINT) AS t_q6 FROM m),
-          |scored AS (SELECT query_id, doc_id, CAST(sum(t_q6) AS BIGINT) AS s_q6 FROM terms GROUP BY query_id, doc_id),
-          |cands AS (SELECT query_id AS eval_id, doc_id AS cand_id FROM (
-          |  SELECT query_id, doc_id, row_number() OVER (PARTITION BY query_id ORDER BY s_q6 DESC, doc_id) AS rank FROM scored) WHERE rank <= 20),
-          |ewt AS (SELECT doc_id, list_filter(string_split(text,' '), x -> x <> '') AS ws FROM ev),
-          |ew AS (SELECT DISTINCT doc_id AS eval_id, u.h FROM (
-          |  SELECT doc_id, unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-          |    i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-          |  FROM ewt WHERE len(ws) >= 8)),
-          |cwt AS (SELECT c.doc_id, list_filter(string_split(c.text,' '), x -> x <> '') AS ws
-          |        FROM corpus c JOIN (SELECT DISTINCT cand_id FROM cands) ci ON c.doc_id = ci.cand_id),
-          |cw AS (SELECT DISTINCT doc_id AS cand_id, u.h FROM (
-          |  SELECT doc_id, unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-          |    i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-          |  FROM cwt WHERE len(ws) >= 8)),
-          |sh AS (SELECT c.eval_id, c.cand_id, CAST(count(*) AS BIGINT) AS shared
-          |       FROM cands c JOIN ew ON c.eval_id = ew.eval_id JOIN cw ON c.cand_id = cw.cand_id AND ew.h = cw.h
-          |       GROUP BY 1, 2)
-          |SELECT cands.eval_id, count(*) AS n_candidates,
-          |       CAST(sum(CASE WHEN coalesce(sh.shared, 0) > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_confirmed,
-          |       CAST(max(coalesce(sh.shared, 0)) AS BIGINT) AS max_shared
-          |FROM cands LEFT JOIN sh ON cands.eval_id = sh.eval_id AND cands.cand_id = sh.cand_id
-          |GROUP BY cands.eval_id ORDER BY cands.eval_id""".stripMargin,
-
-      // removal predicate and hash-shard layout replayed inline; one
-      // grouped aggregate, CASE sums in the same operand order
-      "q_deletion_audit" ->
-        """WITH t AS (
-          |  SELECT doc_id, source,
-          |         CAST(len(list_filter(string_split(text,' '), x -> x <> '')) AS BIGINT) AS n_tokens
-          |  FROM documents),
-          |m AS (SELECT doc_id, source, n_tokens, (doc_id % 37 = 5) AS removed, doc_id % 16 AS shard FROM t)
-          |SELECT source, shard, count(*) AS n_docs,
-          |  CAST(sum(CASE WHEN removed THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
-          |  count(*) - CAST(sum(CASE WHEN removed THEN 1 ELSE 0 END) AS BIGINT) AS n_surviving,
-          |  CAST(sum(CASE WHEN removed THEN 0 ELSE n_tokens END) AS BIGINT) AS surviving_tokens,
-          |  (sum(CASE WHEN removed THEN 1 ELSE 0 END) > 0) AS dirty
-          |FROM m GROUP BY source, shard ORDER BY source, shard""".stripMargin,
-
-      // the oracle REBUILDS the index from the filtered corpus — the Spark
-      // side deletes incrementally, so hash agreement proves
-      // delete-maintenance == rebuild; queries draw from the survivors
-      "q_bm25_delete_search" ->
-        """WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3),
-          |toks AS (SELECT doc_id, unnest(list_filter(string_split(text,' '), t -> t <> '')) AS term FROM corpus),
-          |h AS (SELECT doc_id, ('0x' || substr(md5(term),1,15))::BIGINT AS th FROM toks),
-          |tf AS (SELECT doc_id, th, CAST(count(*) AS BIGINT) AS tf FROM h GROUP BY doc_id, th),
-          |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-          |dfreq AS (SELECT th, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY th),
-          |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(dl) AS BIGINT) AS total_dl FROM dl),
-          |q AS (SELECT DISTINCT doc_id AS query_id, th FROM h WHERE doc_id % 50 = 0),
-          |m AS (SELECT q.query_id, tf.doc_id, tf.tf, dl.dl, dfreq.df, stats.n_docs, stats.total_dl
-          |      FROM q JOIN tf USING (th) JOIN dl ON tf.doc_id = dl.doc_id JOIN dfreq ON q.th = dfreq.th, stats
-          |      WHERE tf.doc_id <> q.query_id),
-          |terms AS (SELECT query_id, doc_id,
-          |  CAST(floor(ln(1.0 + (n_docs - df + 0.5)/(df + 0.5)) *
-          |    ((tf::DOUBLE * (1.2 + 1.0)) / (tf::DOUBLE + 1.2 * ((1.0 - 0.75) + 0.75 * (dl::DOUBLE/(total_dl::DOUBLE/n_docs::DOUBLE))))) * 1000000.0 + 0.5) AS BIGINT) AS t_q6 FROM m),
-          |scored AS (SELECT query_id, doc_id, CAST(sum(t_q6) AS BIGINT) AS s_q6 FROM terms GROUP BY query_id, doc_id),
-          |ranked AS (SELECT query_id, doc_id, s_q6, row_number() OVER (PARTITION BY query_id ORDER BY s_q6 DESC, doc_id) AS rank FROM scored)
-          |SELECT query_id, CAST(rank AS BIGINT) AS rank, doc_id,
-          |       floor(s_q6::DOUBLE / 1000000.0 * 10000.0 + 0.5) / 10000.0 AS score
-          |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-      // the link stack replays plant → extraction → resolution; anchors
-      // attribute to min-doc_id canonical targets (self-endorsement
-      // dropped); combined postings = body tf + 2·anchor tf, then the
-      // identical q6 BM25 chain as q_bm25_delete_search
-      "q_bm25_anchor_search" ->
-        s"""WITH $linkCtes,
-          |ud AS (SELECT canonical_url AS url, CAST(min(doc_id) AS BIGINT) AS target_doc
-          |       FROM rdcanon GROUP BY 1),
-          |an AS (SELECT ud.target_doc AS doc_id, l.anchor
-          |       FROM lout l JOIN ud ON ud.url = l.url WHERE l.doc_id <> ud.target_doc),
-          |bt AS (SELECT doc_id, unnest(list_filter(string_split(text,' '), t -> t <> '')) AS term FROM documents),
-          |bh AS (SELECT doc_id, ('0x' || substr(md5(term),1,15))::BIGINT AS th FROM bt),
-          |btf AS (SELECT doc_id, th, CAST(count(*) AS BIGINT) AS tf FROM bh GROUP BY 1, 2),
-          |at2 AS (SELECT doc_id, unnest(list_filter(string_split(anchor,' '), t -> t <> '')) AS term FROM an),
-          |ah2 AS (SELECT doc_id, ('0x' || substr(md5(term),1,15))::BIGINT AS th FROM at2),
-          |atf AS (SELECT doc_id, th, CAST(2 * count(*) AS BIGINT) AS tf FROM ah2 GROUP BY 1, 2),
-          |ctf AS (SELECT doc_id, th, CAST(sum(tf) AS BIGINT) AS tf
-          |        FROM (SELECT * FROM btf UNION ALL SELECT * FROM atf) GROUP BY 1, 2),
-          |cdl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM ctf GROUP BY 1),
-          |cdfreq AS (SELECT th, CAST(count(*) AS BIGINT) AS df FROM ctf GROUP BY 1),
-          |cstats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(dl) AS BIGINT) AS total_dl FROM cdl),
-          |qv(query_id, qtext) AS (VALUES (9000001, 'guide'), (9000002, 'review news'), (9000003, 'visit h3')),
-          |qq AS (SELECT DISTINCT CAST(query_id AS BIGINT) AS query_id,
-          |         ('0x' || substr(md5(term),1,15))::BIGINT AS th
-          |       FROM (SELECT query_id, unnest(list_filter(string_split(qtext,' '), t -> t <> '')) AS term FROM qv)),
-          |qm AS (SELECT qq.query_id, ctf.doc_id, ctf.tf, cdl.dl, cdfreq.df, cstats.n_docs, cstats.total_dl
-          |       FROM qq JOIN ctf USING (th) JOIN cdl ON ctf.doc_id = cdl.doc_id
-          |       JOIN cdfreq ON qq.th = cdfreq.th, cstats
-          |       WHERE ctf.doc_id <> qq.query_id),
-          |qterms AS (SELECT query_id, doc_id,
-          |  CAST(floor(ln(1.0 + (n_docs - df + 0.5)/(df + 0.5)) *
-          |    ((tf::DOUBLE * (1.2 + 1.0)) / (tf::DOUBLE + 1.2 * ((1.0 - 0.75) + 0.75 * (dl::DOUBLE/(total_dl::DOUBLE/n_docs::DOUBLE))))) * 1000000.0 + 0.5) AS BIGINT) AS t_q6 FROM qm),
-          |qscored AS (SELECT query_id, doc_id, CAST(sum(t_q6) AS BIGINT) AS s_q6 FROM qterms GROUP BY 1, 2),
-          |qranked AS (SELECT query_id, doc_id, s_q6, row_number() OVER (PARTITION BY query_id ORDER BY s_q6 DESC, doc_id) AS rank FROM qscored)
-          |SELECT query_id, CAST(rank AS BIGINT) AS rank, doc_id,
-          |       floor(s_q6::DOUBLE / 1000000.0 * 10000.0 + 0.5) / 10000.0 AS score
-          |FROM qranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-      // x14's oracle moved to the dynamic [[ppmiOracleSql]]: the engine's
-      // q6 PPMI edge table splices in as VALUES so no cross-engine `ln`
-      // sits inside the hash gate (VERDICT r11 #1)
-
-      // q_doremi_mix's oracle moved to the dynamic [[egOracleSql]]: the
-      // engine's per-round exp factors splice in as VALUES so no
-      // cross-engine `exp` sits inside the hash gate (VERDICT r11 #1)
-
-      // the 5 iterations unrolled as CTEs; same q6 fixed-point floor-div
-      // arithmetic ((85·r) // (100·deg), base 150000 // N) as the Spark
-      // loop, so ranks are bit-identical longs
-      "q_graph_centrality" ->
-        s"""WITH csh AS ($DuckShingles),
-           |ch AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(shingle),1,8))::BIGINT AS h FROM csh),
-           |cdf AS (SELECT h, count(*) AS df FROM ch GROUP BY h),
-           |rare AS (SELECT ch.doc_id, ch.h FROM ch JOIN cdf USING (h) WHERE cdf.df <= $JaccardMaxDf),
-           |ccands AS (
-           |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-           |  FROM rare x JOIN rare y ON x.h = y.h AND x.doc_id < y.doc_id GROUP BY 1, 2),
-           |sym AS (SELECT doc_a AS src, doc_b AS dst FROM ccands UNION ALL SELECT doc_b, doc_a FROM ccands),
-           |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM sym GROUP BY src),
-           |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM deg),
-           |adj AS (SELECT sym.src, sym.dst, deg.deg FROM sym JOIN deg USING (src)),
-           |it0 AS (SELECT src AS id, 1000000 // nn.n AS r FROM deg, nn),
-           |it1 AS (
-           |  SELECT deg.src AS id, (SELECT 150000 // n FROM nn) + coalesce(s.c, 0) AS r
-           |  FROM deg LEFT JOIN (
-           |    SELECT adj.dst, CAST(sum((85 * it0.r) // (100 * adj.deg)) AS BIGINT) AS c
-           |    FROM adj JOIN it0 ON adj.src = it0.id GROUP BY adj.dst) s ON deg.src = s.dst),
-           |it2 AS (
-           |  SELECT deg.src AS id, (SELECT 150000 // n FROM nn) + coalesce(s.c, 0) AS r
-           |  FROM deg LEFT JOIN (
-           |    SELECT adj.dst, CAST(sum((85 * it1.r) // (100 * adj.deg)) AS BIGINT) AS c
-           |    FROM adj JOIN it1 ON adj.src = it1.id GROUP BY adj.dst) s ON deg.src = s.dst),
-           |it3 AS (
-           |  SELECT deg.src AS id, (SELECT 150000 // n FROM nn) + coalesce(s.c, 0) AS r
-           |  FROM deg LEFT JOIN (
-           |    SELECT adj.dst, CAST(sum((85 * it2.r) // (100 * adj.deg)) AS BIGINT) AS c
-           |    FROM adj JOIN it2 ON adj.src = it2.id GROUP BY adj.dst) s ON deg.src = s.dst),
-           |it4 AS (
-           |  SELECT deg.src AS id, (SELECT 150000 // n FROM nn) + coalesce(s.c, 0) AS r
-           |  FROM deg LEFT JOIN (
-           |    SELECT adj.dst, CAST(sum((85 * it3.r) // (100 * adj.deg)) AS BIGINT) AS c
-           |    FROM adj JOIN it3 ON adj.src = it3.id GROUP BY adj.dst) s ON deg.src = s.dst),
-           |it5 AS (
-           |  SELECT deg.src AS id, (SELECT 150000 // n FROM nn) + coalesce(s.c, 0) AS r
-           |  FROM deg LEFT JOIN (
-           |    SELECT adj.dst, CAST(sum((85 * it4.r) // (100 * adj.deg)) AS BIGINT) AS c
-           |    FROM adj JOIN it4 ON adj.src = it4.id GROUP BY adj.dst) s ON deg.src = s.dst)
-           |SELECT it5.id AS doc_id, deg.deg AS degree, it5.r AS pr_q6,
-           |       floor(it5.r::DOUBLE / 100.0 + 0.5) / 10000.0 AS pagerank
-           |FROM it5 JOIN deg ON it5.id = deg.src ORDER BY doc_id""".stripMargin,
-
-      // row_number-1 per band == the global-index offset rank (the index
-      // orders (bucket, n, id) and bands are contiguous in it)
-      "q_length_bucket_batches" ->
-        """WITH t AS (
-          |  SELECT doc_id, CAST(len(list_filter(string_split(text,' '), x -> x <> '')) AS BIGINT) AS n
-          |  FROM documents),
-          |b AS (SELECT doc_id, n, (n - 1) // 16 AS bucket FROM t WHERE n > 0),
-          |r AS (SELECT *, row_number() OVER (PARTITION BY bucket ORDER BY n, doc_id) - 1 AS rk FROM b),
-          |a AS (SELECT bucket, rk // 16 AS batch_in_bucket, n FROM r)
-          |SELECT bucket, batch_in_bucket, count(*) AS n_docs,
-          |       max(n) AS max_tokens, CAST(sum(n) AS BIGINT) AS sum_tokens,
-          |       count(*) * max(n) - CAST(sum(n) AS BIGINT) AS padding_waste
-          |FROM a GROUP BY bucket, batch_in_bucket
-          |ORDER BY bucket, batch_in_bucket""".stripMargin,
-
-      // cume_dist == the histogram cum/n rank by definition (preceding-or-
-      // peer fraction); the ensemble sum is written in the same operand
-      // order as the Spark expression
-      "q_quality_rank_ensemble" -> {
-        val stopArr = TextOps.DefaultStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""WITH t AS (
-           |  SELECT doc_id, source, list_filter(string_split(text,' '), x -> x <> '') AS toks FROM documents),
-           |raw AS (
-           |  SELECT doc_id, source,
-           |         floor(least(1.0, len(toks)::DOUBLE / 50.0) * 10000.0 + 0.5) / 10000.0 AS length_score,
-           |         floor(len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE * 10000.0 + 0.5) / 10000.0 AS type_token_ratio,
-           |         floor(len(list_filter(toks, x -> list_contains($stopArr, x)))::DOUBLE / len(toks)::DOUBLE * 10000.0 + 0.5) / 10000.0 AS stopword_ratio
-           |  FROM t),
-           |pr AS (
-           |  SELECT *,
-           |         cume_dist() OVER (PARTITION BY source ORDER BY length_score) AS pr_length_score,
-           |         cume_dist() OVER (PARTITION BY source ORDER BY type_token_ratio) AS pr_type_token_ratio,
-           |         cume_dist() OVER (PARTITION BY source ORDER BY stopword_ratio) AS pr_stopword_ratio
-           |  FROM raw)
-           |SELECT doc_id, source, length_score, type_token_ratio, stopword_ratio,
-           |       pr_length_score, pr_type_token_ratio, pr_stopword_ratio,
-           |       floor((pr_length_score + pr_type_token_ratio + pr_stopword_ratio) / 3.0 * 10000.0 + 0.5) / 10000.0 AS ensemble
-           |FROM pr ORDER BY doc_id""".stripMargin
-      },
-
-      // s4's gap-session CTE, transcripts via ordered string_agg, ≥3 turns
-      "q_session_conversations" ->
-        s"""WITH e AS (SELECT event_id, user_id, event_type, epoch_ns(ts)//1000 AS ts_us FROM events),
-           |x AS (SELECT *, lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM e),
-           |y AS (SELECT *, CASE WHEN prev IS NULL OR ts_us - prev > $SessionGapUs THEN 1 ELSE 0 END AS nw FROM x),
-           |z AS (SELECT *, CAST(sum(nw) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-           |                                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id FROM y)
-           |SELECT user_id, session_id, CAST(count(*) AS BIGINT) AS n_turns,
-           |       string_agg(event_type, ' ' ORDER BY ts_us, event_id) AS transcript
-           |FROM z GROUP BY user_id, session_id HAVING count(*) >= 3
-           |ORDER BY user_id, session_id""".stripMargin,
-
-      // mirrors the df-capped candidate generation: shingles with df >
-      // JaccardMaxDf produce no candidates; intersections still use ALL
-      // shingles, so emitted jaccard values are exact
-      "d4_jaccard_pairs" ->
-        s"""WITH csh AS ($DuckShingles),
-           |ch AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(shingle),1,8))::BIGINT AS h FROM csh),
-           |cdf AS (SELECT h, count(*) AS df FROM ch GROUP BY h),
-           |rare AS (SELECT ch.doc_id, ch.h FROM ch JOIN cdf USING (h) WHERE cdf.df <= $JaccardMaxDf),
-           |ccands AS (
-           |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-           |  FROM rare x JOIN rare y ON x.h = y.h AND x.doc_id < y.doc_id GROUP BY 1, 2),
-           |csizes AS (SELECT doc_id, count(*) AS sz FROM ch GROUP BY doc_id),
-           |cinter AS (
-           |  SELECT c.doc_a, c.doc_b, count(*) AS inter
-           |  FROM ccands c JOIN ch a ON a.doc_id = c.doc_a JOIN ch b ON b.doc_id = c.doc_b AND a.h = b.h
-           |  GROUP BY 1, 2)
-           |SELECT doc_a, doc_b,
-           |       round(inter::DOUBLE / (sa.sz + sb.sz - inter)::DOUBLE, 6) AS jaccard
-           |FROM cinter JOIN csizes sa ON doc_a = sa.doc_id JOIN csizes sb ON doc_b = sb.doc_id
-           |WHERE round(inter::DOUBLE / (sa.sz + sb.sz - inter)::DOUBLE, 6) >= $JaccardThreshold
-           |ORDER BY doc_a, doc_b""".stripMargin,
-
-      // same planted excerpts (// is DuckDB's integer division, matching
-      // Spark's truncating int cast on positive counts), same df-capped
-      // rare-shingle candidates, same exact hash-set intersection — each
-      // containment one IEEE division of integer set sizes
-      "d28_containment_pairs" ->
-        s"""WITH src AS (
-           |  SELECT doc_id, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 1000000,
-           |         array_to_string(list_slice(string_split(text, ' '), 1,
-           |           greatest(6, len(string_split(text, ' ')) // 2)), ' ')
-           |  FROM documents WHERE doc_id % 9 = 0),
-           |csh AS (
-           |  SELECT DISTINCT doc_id, unnest(list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 0) + 1),
-           |         i -> array_to_string((string_split(text,' '))[i:i+2], ' '))) AS shingle
-           |  FROM src),
-           |ch AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(shingle),1,8))::BIGINT AS h FROM csh),
-           |cdf AS (SELECT h, count(*) AS df FROM ch GROUP BY h),
-           |rare AS (SELECT ch.doc_id, ch.h FROM ch JOIN cdf USING (h) WHERE cdf.df <= $JaccardMaxDf),
-           |ccands AS (
-           |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-           |  FROM rare x JOIN rare y ON x.h = y.h AND x.doc_id < y.doc_id GROUP BY 1, 2),
-           |csizes AS (SELECT doc_id, count(*) AS sz FROM ch GROUP BY doc_id),
-           |cinter AS (
-           |  SELECT c.doc_a, c.doc_b, count(*) AS inter
-           |  FROM ccands c JOIN ch a ON a.doc_id = c.doc_a JOIN ch b ON b.doc_id = c.doc_b AND a.h = b.h
-           |  GROUP BY 1, 2),
-           |conts AS (
-           |  SELECT doc_a, doc_b,
-           |         round(inter::DOUBLE / sa.sz::DOUBLE, 6) AS cont_a,
-           |         round(inter::DOUBLE / sb.sz::DOUBLE, 6) AS cont_b
-           |  FROM cinter JOIN csizes sa ON doc_a = sa.doc_id JOIN csizes sb ON doc_b = sb.doc_id)
-           |SELECT doc_a, doc_b, cont_a, cont_b FROM conts
-           |WHERE greatest(cont_a, cont_b) >= $ContainmentThreshold
-           |ORDER BY doc_a, doc_b""".stripMargin,
-
-      // d28's planted corpus, the d10 LSH→verify→closure chain re-rooted on
-      // it, with the CONTAINMENT pairs unioned into the edge set before the
-      // recursive closure — survivors = component minima + singletons
-      "d29_containment_dedup" ->
-        s"""WITH RECURSIVE src AS (
-           |  SELECT doc_id, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 1000000,
-           |         array_to_string(list_slice(string_split(text, ' '), 1,
-           |           greatest(6, len(string_split(text, ' ')) // 2)), ' ')
-           |  FROM documents WHERE doc_id % 9 = 0),
-           |ssh AS (
-           |  SELECT DISTINCT doc_id, unnest(list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 0) + 1),
-           |         i -> array_to_string((string_split(text,' '))[i:i+2], ' '))) AS shingle
-           |  FROM src),
-           |sha AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(shingle),1,8))::BIGINT AS h FROM ssh),
-           |params(j, a, b) AS (VALUES $paramValues),
-           |ssigs AS (SELECT doc_id, j, min((a * h + b) % ${Dedup.MinHashPrime}) AS minhash
-           |          FROM sha CROSS JOIN params GROUP BY doc_id, j),
-           |sbanded AS (
-           |  SELECT doc_id, j // ${NumMinHashes / NumBands} AS band,
-           |         md5(array_to_string(list(minhash::VARCHAR ORDER BY j), ',')) AS bucket
-           |  FROM ssigs GROUP BY doc_id, band),
-           |scands AS (
-           |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-           |  FROM sbanded x JOIN sbanded y ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id
-           |  GROUP BY 1, 2),
-           |ssz AS (SELECT doc_id, count(*) AS sz FROM sha GROUP BY doc_id),
-           |jint AS (
-           |  SELECT c.doc_a, c.doc_b, count(*) AS inter
-           |  FROM scands c JOIN sha a ON a.doc_id = c.doc_a JOIN sha b ON b.doc_id = c.doc_b AND a.h = b.h
-           |  GROUP BY 1, 2),
-           |jpairs AS (
-           |  SELECT doc_a, doc_b FROM jint
-           |  JOIN ssz sa ON doc_a = sa.doc_id JOIN ssz sb ON doc_b = sb.doc_id
-           |  WHERE round(inter::DOUBLE / (sa.sz + sb.sz - inter)::DOUBLE, 6) >= $JaccardThreshold),
-           |sdf AS (SELECT h, count(*) AS df FROM sha GROUP BY h),
-           |srare AS (SELECT sha.doc_id, sha.h FROM sha JOIN sdf USING (h) WHERE sdf.df <= $JaccardMaxDf),
-           |ccands AS (
-           |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-           |  FROM srare x JOIN srare y ON x.h = y.h AND x.doc_id < y.doc_id GROUP BY 1, 2),
-           |cint AS (
-           |  SELECT c.doc_a, c.doc_b, count(*) AS inter
-           |  FROM ccands c JOIN sha a ON a.doc_id = c.doc_a JOIN sha b ON b.doc_id = c.doc_b AND a.h = b.h
-           |  GROUP BY 1, 2),
-           |cpairs AS (
-           |  SELECT doc_a, doc_b FROM cint
-           |  JOIN ssz sa ON doc_a = sa.doc_id JOIN ssz sb ON doc_b = sb.doc_id
-           |  WHERE greatest(round(inter::DOUBLE / sa.sz::DOUBLE, 6),
-           |                 round(inter::DOUBLE / sb.sz::DOUBLE, 6)) >= $ContainmentThreshold),
-           |upairs AS (SELECT doc_a, doc_b FROM jpairs UNION SELECT doc_a, doc_b FROM cpairs),
-           |edges AS (SELECT doc_a AS v, doc_b AS u FROM upairs
-           |          UNION SELECT doc_b, doc_a FROM upairs),
-           |reach(v, l) AS (
-           |  SELECT v, v FROM (SELECT DISTINCT v FROM edges)
-           |  UNION
-           |  SELECT e.v, r.l FROM edges e JOIN reach r ON e.u = r.v),
-           |comp AS (SELECT v AS doc_id, CAST(min(l) AS BIGINT) AS component
-           |         FROM reach GROUP BY v),
-           |members AS (SELECT component, count(*) AS n_members FROM comp GROUP BY component)
-           |SELECT s.doc_id, CAST(COALESCE(m.n_members, 1) AS BIGINT) AS n_members
-           |FROM src s
-           |LEFT JOIN comp c ON s.doc_id = c.doc_id
-           |LEFT JOIN members m ON s.doc_id = m.component
-           |WHERE c.component IS NULL OR s.doc_id = c.component
-           |ORDER BY s.doc_id""".stripMargin,
-
-      // d28's containment chain re-rooted on the quotation-HOST plant,
-      // then the pair orientation (greater containment = excerpt; tie →
-      // the LOWER id is the excerpt and survives intact, min-id-survivor
-      // convention) and the d14b window/islands/strip machinery applied
-      // to the host side only
-      "d29b_containment_strip" ->
-        s"""WITH src AS (
-           |  SELECT doc_id, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 1000000,
-           |         text || ${"abcdefghijkl".map(c => s"' zzq$c' || CAST(doc_id AS VARCHAR)").mkString(" || ")}
-           |  FROM documents WHERE doc_id % 9 = 0),
-           |csh AS (
-           |  SELECT DISTINCT doc_id, unnest(list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 0) + 1),
-           |         i -> array_to_string((string_split(text,' '))[i:i+2], ' '))) AS shingle
-           |  FROM src),
-           |ch AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(shingle),1,8))::BIGINT AS h FROM csh),
-           |cdf AS (SELECT h, count(*) AS df FROM ch GROUP BY h),
-           |rare AS (SELECT ch.doc_id, ch.h FROM ch JOIN cdf USING (h) WHERE cdf.df <= $JaccardMaxDf),
-           |ccands AS (
-           |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-           |  FROM rare x JOIN rare y ON x.h = y.h AND x.doc_id < y.doc_id GROUP BY 1, 2),
-           |csizes AS (SELECT doc_id, count(*) AS sz FROM ch GROUP BY doc_id),
-           |cinter AS (
-           |  SELECT c.doc_a, c.doc_b, count(*) AS inter
-           |  FROM ccands c JOIN ch a ON a.doc_id = c.doc_a JOIN ch b ON b.doc_id = c.doc_b AND a.h = b.h
-           |  GROUP BY 1, 2),
-           |cp AS (
-           |  SELECT doc_a, doc_b,
-           |         round(inter::DOUBLE / sa.sz::DOUBLE, 6) AS cont_a,
-           |         round(inter::DOUBLE / sb.sz::DOUBLE, 6) AS cont_b
-           |  FROM cinter JOIN csizes sa ON doc_a = sa.doc_id JOIN csizes sb ON doc_b = sb.doc_id
-           |  WHERE greatest(round(inter::DOUBLE / sa.sz::DOUBLE, 6),
-           |                 round(inter::DOUBLE / sb.sz::DOUBLE, 6)) >= $ContainmentThreshold),
-           |ori AS (
-           |  SELECT CASE WHEN cont_a > cont_b THEN doc_b WHEN cont_b > cont_a THEN doc_a
-           |              ELSE greatest(doc_a, doc_b) END AS host_id,
-           |         CASE WHEN cont_a > cont_b THEN doc_a WHEN cont_b > cont_a THEN doc_b
-           |              ELSE least(doc_a, doc_b) END AS excerpt_id
-           |  FROM cp),
-           |t AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM src),
-           |w AS (
-           |  SELECT doc_id, u.pos, u.h FROM (
-           |    SELECT doc_id,
-           |      unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-           |        i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-           |    FROM t WHERE len(ws) >= 8)),
-           |exw AS (SELECT DISTINCT o.host_id, w.h FROM ori o JOIN w ON w.doc_id = o.excerpt_id),
-           |hot AS (SELECT DISTINCT w.doc_id, w.pos FROM w JOIN exw ON w.doc_id = exw.host_id AND w.h = exw.h),
-           |g AS (SELECT doc_id, pos,
-           |             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-           |      FROM hot),
-           |sp AS (SELECT doc_id, min(pos) AS s, max(pos) + 8 AS e FROM g GROUP BY doc_id, grp),
-           |tk AS (
-           |  SELECT doc_id, u.i, u.tok FROM (
-           |    SELECT doc_id,
-           |      unnest(list_transform(range(1, len(ws) + 1),
-           |        i -> struct_pack(i := i - 1, tok := ws[i]))) AS u
-           |    FROM t)),
-           |kept AS (
-           |  SELECT tk.doc_id, tk.i, tk.tok FROM tk
-           |  WHERE NOT EXISTS (SELECT 1 FROM sp
-           |                    WHERE sp.doc_id = tk.doc_id AND tk.i >= sp.s AND tk.i < sp.e))
-           |SELECT s.doc_id,
-           |       s.doc_id IN (SELECT host_id FROM ori) AS is_host,
-           |       COALESCE((SELECT string_agg(k.tok, ' ' ORDER BY k.i)
-           |                 FROM kept k WHERE k.doc_id = s.doc_id), '') AS clean_text
-           |FROM src s ORDER BY s.doc_id""".stripMargin,
-
-      "d5_cosine_topk" ->
-        s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-           |scored AS (
-           |  SELECT q.query_id, e.vec_id,
-           |    round(
-           |      list_reduce(list_transform(range(1, 65), i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-           |      (sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(q.q_emb[i] AS DOUBLE)), (x, y) -> x + y)) *
-           |       sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))), 6) AS cos
-           |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id),
-           |ranked AS (
-           |  SELECT query_id, vec_id AS neighbor_id, cos,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-           |  FROM scored)
-           |SELECT query_id, rank, neighbor_id, cos FROM ranked WHERE rank <= $TopK
-           |ORDER BY query_id, rank""".stripMargin,
-
-      // d5's cosine expression lifted to q6 longs, neighbor ranking and
-      // top-k sums on the longs, margin = 2k·cq/(Σᴬ+Σᴮ) as ONE double
-      // division of exact integers (16*cq stays in BIGINT; the CAST is the
-      // only lossy op) — no live transcendental, the x11 discipline
-      "d26_margin_pairs" ->
-        s"""WITH a AS (SELECT vec_id AS x, embedding AS xe FROM embeddings WHERE vec_id % 2 = 0),
-           |b AS (SELECT vec_id AS y, embedding AS ye FROM embeddings WHERE vec_id % 2 = 1),
-           |p AS (
-           |  SELECT x, y, CAST(floor(round(
-           |    list_reduce(list_transform(range(1, 65), i -> CAST(xe[i] AS DOUBLE) * CAST(ye[i] AS DOUBLE)), (u, v) -> u + v) /
-           |    (sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(xe[i] AS DOUBLE) * CAST(xe[i] AS DOUBLE)), (u, v) -> u + v)) *
-           |     sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(ye[i] AS DOUBLE) * CAST(ye[i] AS DOUBLE)), (u, v) -> u + v))), 6) * 1e6 + 0.5) AS BIGINT) AS cq
-           |  FROM a CROSS JOIN b),
-           |fwd AS (SELECT x, y, cq FROM (
-           |  SELECT x, y, cq, row_number() OVER (PARTITION BY x ORDER BY cq DESC, y) AS r FROM p) WHERE r <= $MarginK),
-           |bwd AS (SELECT x, y, cq FROM (
-           |  SELECT x, y, cq, row_number() OVER (PARTITION BY y ORDER BY cq DESC, x) AS r FROM p) WHERE r <= $MarginK),
-           |sa AS (SELECT x, sum(cq) AS sa FROM fwd GROUP BY x),
-           |sb AS (SELECT y, sum(cq) AS sb FROM bwd GROUP BY y),
-           |fm AS (SELECT f.x, f.y, round(CAST(2 * $MarginK * f.cq AS DOUBLE) / CAST(sa.sa + sb.sb AS DOUBLE), 6) AS margin
-           |       FROM fwd f JOIN sa ON f.x = sa.x JOIN sb ON f.y = sb.y WHERE sa.sa + sb.sb > 0),
-           |bm AS (SELECT f.x, f.y, round(CAST(2 * $MarginK * f.cq AS DOUBLE) / CAST(sa.sa + sb.sb AS DOUBLE), 6) AS margin
-           |       FROM bwd f JOIN sa ON f.x = sa.x JOIN sb ON f.y = sb.y WHERE sa.sa + sb.sb > 0),
-           |xb AS (SELECT x, y, margin FROM (
-           |  SELECT x, y, margin, row_number() OVER (PARTITION BY x ORDER BY margin DESC, y) AS r FROM fm) WHERE r = 1),
-           |yb AS (SELECT x, y FROM (
-           |  SELECT x, y, row_number() OVER (PARTITION BY y ORDER BY margin DESC, x) AS r FROM bm) WHERE r = 1)
-           |SELECT xb.x AS src_id, xb.y AS tgt_id, xb.margin
-           |FROM xb JOIN yb ON xb.x = yb.x AND xb.y = yb.y
-           |ORDER BY src_id""".stripMargin,
-
-      // same two-level layer/chunk arithmetic; integer div both sides
-      "q_contrastive_batches" ->
-        """WITH l AS (
-          |  SELECT vec_id, label,
-          |         CAST(row_number() OVER (PARTITION BY label ORDER BY vec_id) - 1 AS BIGINT) AS layer
-          |  FROM embeddings),
-          |lb AS (SELECT CAST((count(DISTINCT label) + 15) // 16 AS BIGINT) AS lbound FROM l),
-          |i AS (SELECT vec_id, label, layer,
-          |        CAST(row_number() OVER (PARTITION BY layer ORDER BY label, vec_id) - 1 AS BIGINT) AS idx
-          |      FROM l)
-          |SELECT vec_id, label, layer, layer * lbound + idx // 16 AS batch
-          |FROM i, lb ORDER BY vec_id""".stripMargin,
-
-      // d5's scoring at every truncation budget (range bound is the k_dim
-      // column), both rankings re-derived, hits via EXISTS against the
-      // full-dim top-k
-      "q_dim_truncation_recall" ->
-        s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-           |dims(k_dim) AS (VALUES (8), (16), (32), (64)),
-           |fullsc AS (
-           |  SELECT q.query_id, e.vec_id,
-           |    round(
-           |      list_reduce(list_transform(range(1, 65), i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-           |      (sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(q.q_emb[i] AS DOUBLE)), (x, y) -> x + y)) *
-           |       sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))), 6) AS cos
-           |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id),
-           |fullrk AS (SELECT query_id, vec_id FROM (
-           |  SELECT query_id, vec_id,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-           |  FROM fullsc) WHERE rank <= $TopK),
-           |tsc AS (
-           |  SELECT d.k_dim, q.query_id, e.vec_id,
-           |    round(
-           |      list_reduce(list_transform(range(1, d.k_dim + 1), i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-           |      (sqrt(list_reduce(list_transform(range(1, d.k_dim + 1), i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(q.q_emb[i] AS DOUBLE)), (x, y) -> x + y)) *
-           |       sqrt(list_reduce(list_transform(range(1, d.k_dim + 1), i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))), 6) AS cos
-           |  FROM embeddings e CROSS JOIN q CROSS JOIN dims d WHERE e.vec_id <> q.query_id),
-           |trk AS (SELECT k_dim, query_id, vec_id FROM (
-           |  SELECT k_dim, query_id, vec_id,
-           |         row_number() OVER (PARTITION BY k_dim, query_id ORDER BY cos DESC, vec_id) AS rank
-           |  FROM tsc) WHERE rank <= $TopK),
-           |tot AS (SELECT k_dim, CAST(count(*) AS BIGINT) AS n_ranked FROM trk GROUP BY 1),
-           |hit AS (SELECT t.k_dim, CAST(count(*) AS BIGINT) AS n_hits FROM trk t
-           |        WHERE EXISTS (SELECT 1 FROM fullrk f
-           |                      WHERE f.query_id = t.query_id AND f.vec_id = t.vec_id)
-           |        GROUP BY 1)
-           |SELECT tot.k_dim, tot.n_ranked, COALESCE(hit.n_hits, 0) AS n_hits,
-           |       floor(COALESCE(hit.n_hits, 0)::DOUBLE / tot.n_ranked::DOUBLE * 10000.0 + 0.5) / 10000.0 AS recall
-           |FROM tot LEFT JOIN hit USING (k_dim) ORDER BY k_dim""".stripMargin,
-
-      // d5's ranking restricted to different-label candidates
-      "q_hard_negatives" ->
-        s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb, label AS q_label
-           |           FROM embeddings WHERE vec_id < 10),
-           |scored AS (
-           |  SELECT q.query_id, e.vec_id,
-           |    round(
-           |      list_reduce(list_transform(range(1, 65), i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y) /
-           |      (sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(q.q_emb[i] AS DOUBLE)), (x, y) -> x + y)) *
-           |       sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))), 6) AS cos
-           |  FROM embeddings e CROSS JOIN q
-           |  WHERE e.vec_id <> q.query_id AND e.label <> q.q_label),
-           |ranked AS (
-           |  SELECT query_id, vec_id AS neg_id, cos,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-           |  FROM scored)
-           |SELECT query_id, rank, neg_id, cos FROM ranked WHERE rank <= $TopK
-           |ORDER BY query_id, rank""".stripMargin,
-
-      // same q6 moment sums and one-expression finishers as the Spark side
-      "q_embedding_profile" ->
-        """WITH x AS (
-          |  SELECT u.i AS dim, CAST(embedding[u.i] AS DOUBLE) AS v
-          |  FROM embeddings, unnest(range(1, 65)) AS u(i)),
-          |q AS (SELECT dim, v, CAST(floor(v * 1000000.0 + 0.5) AS BIGINT) AS xq FROM x),
-          |a AS (SELECT dim, CAST(count(*) AS BIGINT) AS n,
-          |             CAST(sum(xq) AS BIGINT) AS s, CAST(sum(xq * xq) AS BIGINT) AS m2,
-          |             min(v) AS min_v, max(v) AS max_v
-          |      FROM q GROUP BY dim)
-          |SELECT dim, n,
-          |       floor(s::DOUBLE / n::DOUBLE + 0.5) / 1000000.0 AS mean,
-          |       floor((m2::DOUBLE / n::DOUBLE
-          |              - (s::DOUBLE / n::DOUBLE) * (s::DOUBLE / n::DOUBLE))
-          |             / 1000000.0 + 0.5) / 1000000.0 AS variance,
-          |       min_v, max_v
-          |FROM a ORDER BY dim""".stripMargin,
-
-      // every MMR greedy round replayed inductively (the k-center oracle
-      // contract): round 1 = argmax λ·rel; round n scores against the
-      // max-sim to rounds 1..n−1. λ and (1−λ) splice as Double.toString —
-      // (1.0 − 0.7) is NOT the 0.3 literal in IEEE, so the subtraction's
-      // exact result is exported, never re-derived
-      "q_mmr_rerank" -> {
-        val lam = 0.7
-        val lamLit = lam.toString
-        val omLit = (1.0 - lam).toString
-        def cosE(a: String, b: String) =
-          s"""round(
-             |      list_reduce(list_transform(range(1, 65), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y) /
-             |      (sqrt(list_reduce(list_transform(range(1, 65), i -> CAST($a[i] AS DOUBLE) * CAST($a[i] AS DOUBLE)), (x, y) -> x + y)) *
-             |       sqrt(list_reduce(list_transform(range(1, 65), i -> CAST($b[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y))), 6)""".stripMargin
-        val rounds = (2 to 5).map { n =>
-          s"""ms$n AS (SELECT s.query_id, s.b AS doc_id, max(s.sim) AS m
-             |         FROM sims s JOIN p${n - 1} p ON p.query_id = s.query_id AND p.doc_id = s.a
-             |         GROUP BY 1, 2),
-             |s$n AS (SELECT query_id, doc_id, mmr FROM (
-             |  SELECT c.query_id, c.doc_id,
-             |         CAST(floor(($lamLit * c.rel - $omLit * ms.m) * 1000000.0 + 0.5) AS BIGINT) AS mmr,
-             |         row_number() OVER (PARTITION BY c.query_id
-             |           ORDER BY floor(($lamLit * c.rel - $omLit * ms.m) * 1000000.0 + 0.5) DESC, c.doc_id) AS rn
-             |  FROM cands c JOIN ms$n ms ON ms.query_id = c.query_id AND ms.doc_id = c.doc_id
-             |  WHERE NOT EXISTS (SELECT 1 FROM p${n - 1} p
-             |                    WHERE p.query_id = c.query_id AND p.doc_id = c.doc_id)) WHERE rn = 1),
-             |p$n AS (SELECT * FROM p${n - 1} UNION ALL SELECT query_id, doc_id FROM s$n)""".stripMargin
-        }.mkString(",\n")
-        val sel = (1 to 5).map(n =>
-          s"SELECT query_id, $n AS sel_rank, doc_id, mmr AS mmr_q6 FROM s$n")
-          .mkString("\n UNION ALL ")
-        s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-           |sc AS (
-           |  SELECT q.query_id, e.vec_id AS doc_id,
-           |    ${cosE("q.q_emb", "e.embedding")} AS rel
-           |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id),
-           |cands AS (SELECT query_id, doc_id, rel FROM (
-           |  SELECT query_id, doc_id, rel,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY rel DESC, doc_id) AS rk
-           |  FROM sc) WHERE rk <= 20),
-           |ce AS (SELECT c.query_id, c.doc_id, e.embedding AS emb
-           |       FROM cands c JOIN embeddings e ON e.vec_id = c.doc_id),
-           |sims AS (
-           |  SELECT x.query_id, x.doc_id AS a, y.doc_id AS b,
-           |    ${cosE("x.emb", "y.emb")} AS sim
-           |  FROM ce x JOIN ce y ON x.query_id = y.query_id AND x.doc_id <> y.doc_id),
-           |s1 AS (SELECT query_id, doc_id, mmr FROM (
-           |  SELECT query_id, doc_id,
-           |         CAST(floor(($lamLit * rel) * 1000000.0 + 0.5) AS BIGINT) AS mmr,
-           |         row_number() OVER (PARTITION BY query_id
-           |           ORDER BY floor(($lamLit * rel) * 1000000.0 + 0.5) DESC, doc_id) AS rn
-           |  FROM cands) WHERE rn = 1),
-           |p1 AS (SELECT query_id, doc_id FROM s1),
-           |$rounds
-           |$sel
-           |ORDER BY query_id, sel_rank""".stripMargin
-      },
-
-      // floor(x·10⁴ + 0.5)/10⁴ == TextOps.round4: same IEEE ops both engines,
-      // immune to the round() half-boundary divergence (Spark rounds the
-      // exact binary value, DuckDB rounds x·10⁴ computed in floats)
-      "x6_bpe_token_count" -> {
-        val p = TextOps.BpePretokenPattern.replace("'", "''")
-        s"""SELECT doc_id,
-           |       len(list_filter(string_split(text,' '), t -> t <> '')) AS n_ws_tokens,
-           |       len(regexp_extract_all(lower(text), '$p')) AS n_bpe_tokens,
-           |       len(list_distinct(regexp_extract_all(lower(text), '$p'))) AS n_bpe_distinct
-           |FROM documents ORDER BY doc_id""".stripMargin
-      },
-
-      "x1_token_stats" ->
-        """SELECT doc_id,
-          |       len(list_filter(string_split(text,' '), t -> t <> '')) AS n_tokens,
-          |       length(text) AS n_chars,
-          |       len(list_distinct(list_filter(string_split(text,' '), t -> t <> ''))) AS n_distinct_tokens,
-          |       floor(length(replace(text, ' ', ''))::DOUBLE /
-          |             len(list_filter(string_split(text,' '), t -> t <> ''))::DOUBLE * 10000.0 + 0.5) / 10000.0 AS mean_token_len
-          |FROM documents ORDER BY doc_id""".stripMargin,
-
-      "x2_quality_score" -> {
-        val stopArr = TextOps.DefaultStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""WITH t AS (
-           |  SELECT doc_id, list_filter(string_split(text,' '), x -> x <> '') AS toks FROM documents),
-           |raw AS (
-           |  SELECT doc_id,
-           |         least(1.0, len(toks)::DOUBLE / 50.0) AS ls,
-           |         len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE AS ttr,
-           |         len(list_filter(toks, x -> list_contains($stopArr, x)))::DOUBLE / len(toks)::DOUBLE AS sr
-           |  FROM t)
-           |SELECT doc_id,
-           |       floor(ls * 10000.0 + 0.5) / 10000.0 AS length_score,
-           |       floor(ttr * 10000.0 + 0.5) / 10000.0 AS type_token_ratio,
-           |       floor(sr * 10000.0 + 0.5) / 10000.0 AS stopword_ratio,
-           |       floor((0.4 * ls + 0.3 * ttr + 0.3 * sr) * 10000.0 + 0.5) / 10000.0 AS quality
-           |FROM raw ORDER BY doc_id""".stripMargin
-      },
-
-      // same quality formula as x2, ranked desc with doc_id tiebreak, then
-      // the strictly-preceding token prefix sum and the fits-entirely rule
-      "q_budget_select" -> {
-        val stopArr = TextOps.DefaultStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""WITH t AS (
-           |  SELECT doc_id, list_filter(string_split(text,' '), x -> x <> '') AS toks FROM documents),
-           |raw AS (
-           |  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-           |         least(1.0, len(toks)::DOUBLE / 50.0) AS ls,
-           |         len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE AS ttr,
-           |         len(list_filter(toks, x -> list_contains($stopArr, x)))::DOUBLE / len(toks)::DOUBLE AS sr
-           |  FROM t),
-           |q AS (
-           |  SELECT doc_id, n_tokens,
-           |         floor((0.4 * ls + 0.3 * ttr + 0.3 * sr) * 10000.0 + 0.5) / 10000.0 AS quality
-           |  FROM raw),
-           |p AS (
-           |  SELECT doc_id, quality, n_tokens,
-           |         CAST(COALESCE(sum(n_tokens) OVER (ORDER BY quality DESC, doc_id
-           |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-           |  FROM q)
-           |SELECT doc_id, quality, n_tokens, cum_before FROM p
-           |WHERE cum_before + n_tokens <= 20000
-           |ORDER BY quality DESC, doc_id""".stripMargin
-      },
-
-      "q_language_mix" ->
-        s"""WITH t AS (
-           |  SELECT doc_id, list_filter(string_split(text,' '), x -> x <> '') AS toks FROM documents),
-           |lang AS (
-           |  SELECT doc_id,
-           |         CASE WHEN $greatestAll <= 0.0 THEN 'und'
-           |       $langCase
-           |       ELSE 'und' END AS lang
-           |  FROM (SELECT doc_id, $langScoreCols FROM t)),
-           |r AS (
-           |  SELECT doc_id, lang,
-           |         row_number() OVER (PARTITION BY lang
-           |           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-           |  FROM lang)
-           |SELECT doc_id, lang FROM r WHERE rn <= 40 ORDER BY doc_id""".stripMargin,
-
-      "q_quality_cut" -> {
-        val stopArr = TextOps.DefaultStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""WITH t AS (
-           |  SELECT doc_id, list_filter(string_split(text,' '), x -> x <> '') AS toks FROM documents),
-           |q AS (
-           |  SELECT doc_id,
-           |         floor((0.4*ls + 0.3*ttr + 0.3*sr) * 10000.0 + 0.5) / 10000.0 AS quality
-           |  FROM (SELECT doc_id,
-           |               least(1.0, len(toks)::DOUBLE / 50.0) AS ls,
-           |               len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE AS ttr,
-           |               len(list_filter(toks, x -> list_contains($stopArr, x)))::DOUBLE / len(toks)::DOUBLE AS sr
-           |        FROM t)),
-           |thr AS (SELECT quantile_cont(quality, 0.8) AS thr FROM q)
-           |SELECT doc_id, quality FROM q, thr WHERE quality >= thr
-           |ORDER BY doc_id""".stripMargin
-      },
-
-      "q_vocab_coverage" ->
-        """WITH toks AS (
-          |  SELECT unnest(list_filter(string_split(text,' '), x -> x <> '')) AS token FROM documents),
-          |c AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM toks GROUP BY token),
-          |p AS (SELECT token, cnt,
-          |             CAST(COALESCE(sum(cnt) OVER (ORDER BY cnt DESC, token
-          |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-          |      FROM c),
-          |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM c)
-          |SELECT token, cnt, cum_before FROM p, t
-          |WHERE cum_before < (95 * total + 99) // 100
-          |ORDER BY cnt DESC, token""".stripMargin,
-
-      // per-source release summary; q4 mirrors the Spark side's
-      // floor(round4(blend)·10⁴ + 0.5) fixed-point exactly
-      "q_dataset_card" -> {
-        val stopArr = TextOps.DefaultStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""WITH t AS (
-           |  SELECT doc_id, source, md5(text) AS fp,
-           |         list_filter(string_split(text,' '), x -> x <> '') AS toks FROM documents),
-           |lang AS (
-           |  SELECT doc_id,
-           |         CASE WHEN $greatestAll <= 0.0 THEN 'und'
-           |       $langCase
-           |       ELSE 'und' END AS predicted_lang
-           |  FROM (SELECT doc_id, $langScoreCols FROM t)),
-           |qual AS (
-           |  SELECT doc_id,
-           |         CAST(floor((floor((0.4*ls + 0.3*ttr + 0.3*sr) * 10000.0 + 0.5) / 10000.0)
-           |           * 10000.0 + 0.5) AS BIGINT) AS q4
-           |  FROM (SELECT doc_id,
-           |               least(1.0, len(toks)::DOUBLE / 50.0) AS ls,
-           |               len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE AS ttr,
-           |               len(list_filter(toks, x -> list_contains($stopArr, x)))::DOUBLE / len(toks)::DOUBLE AS sr
-           |        FROM t)),
-           |per AS (
-           |  SELECT t.source, t.doc_id, CAST(len(toks) AS BIGINT) AS n_tokens, t.fp,
-           |         lang.predicted_lang, qual.q4
-           |  FROM t JOIN lang USING (doc_id) JOIN qual USING (doc_id))
-           |SELECT source,
-           |       count(*) AS n_docs,
-           |       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-           |       count(DISTINCT fp) AS n_unique_texts,
-           |       count(*) FILTER (WHERE predicted_lang = 'en') AS n_en,
-           |       CAST(sum(q4) AS BIGINT) AS sum_quality_q4,
-           |       CAST(sum(q4) AS DOUBLE) / (count(*) * 10000)::DOUBLE AS mean_quality
-           |FROM per GROUP BY source ORDER BY source""".stripMargin
-      },
-
-      // the card's HLL arm: the q_domain_stats_hll register replay keyed
-      // by source over the content fingerprint, exact distinct alongside
-      "q_dataset_card_hll" ->
-        s"""WITH t AS (
-           |  SELECT source, md5(text) AS fp,
-           |         CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_toks
-           |  FROM documents),
-           |hh AS (SELECT source,
-           |         ('0x' || substr(md5('hll:' || fp), 1, 12))::BIGINT AS h FROM t),
-           |hbr AS (SELECT source, h // ${1L << 38} AS bucket, h % ${1L << 38} AS rest FROM hh),
-           |hrr AS (SELECT source, bucket,
-           |          CASE WHEN rest = 0 THEN 39 ELSE 39 - len(bin(rest)) END AS rho FROM hbr),
-           |hmx AS (SELECT source, bucket, max(rho) AS rho FROM hrr GROUP BY 1, 2),
-           |hsrc AS (SELECT DISTINCT source FROM t),
-           |hallb AS (SELECT hsrc.source, CAST(i AS BIGINT) AS bucket
-           |          FROM hsrc, unnest(range(0, 1024)) AS u(i)),
-           |hfr AS (SELECT a.source, a.bucket, coalesce(m.rho, 0) AS rho
-           |        FROM hallb a LEFT JOIN hmx m ON m.source = a.source AND m.bucket = a.bucket),
-           |hex AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-           |               CAST(sum(n_toks) AS BIGINT) AS total_tokens,
-           |               CAST(count(DISTINCT fp) AS BIGINT) AS exact_unique_texts
-           |        FROM t GROUP BY 1)
-           |SELECT hex.source, hex.n_docs, hex.total_tokens, hex.exact_unique_texts,
-           |       CAST(count(*) AS BIGINT) AS m,
-           |       CAST(sum(CASE WHEN hfr.rho > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_buckets_hit,
-           |       CAST(sum(CAST(1 AS BIGINT) << (39 - hfr.rho)) AS BIGINT) AS inv_q39
-           |FROM hfr JOIN hex ON hex.source = hfr.source
-           |GROUP BY hex.source, hex.n_docs, hex.total_tokens, hex.exact_unique_texts
-           |ORDER BY hex.source""".stripMargin,
-
-      "e2e_corpus_build" -> {
-        val stopArr = TextOps.DefaultStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""WITH t AS (
-           |  SELECT doc_id, md5(text) AS fp,
-           |         list_filter(string_split(text,' '), x -> x <> '') AS toks FROM documents),
-           |lang AS (
-           |  SELECT doc_id,
-           |         CASE WHEN $greatestAll <= 0.0 THEN 'und'
-           |       $langCase
-           |       ELSE 'und' END AS predicted_lang
-           |  FROM (SELECT doc_id, $langScoreCols FROM t)),
-           |qual AS (
-           |  SELECT doc_id,
-           |         floor((0.4*ls + 0.3*ttr + 0.3*sr) * 10000.0 + 0.5) / 10000.0 AS quality
-           |  FROM (SELECT doc_id,
-           |               least(1.0, len(toks)::DOUBLE / 50.0) AS ls,
-           |               len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE AS ttr,
-           |               len(list_filter(toks, x -> list_contains($stopArr, x)))::DOUBLE / len(toks)::DOUBLE AS sr
-           |        FROM t)),
-           |keep AS (
-           |  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-           |         min(doc_id) OVER (PARTITION BY fp) AS keep_id
-           |  FROM t),
-           |sel AS (
-           |  SELECT k.doc_id, lang.predicted_lang, qual.quality, k.n_tokens
-           |  FROM keep k JOIN lang USING (doc_id) JOIN qual USING (doc_id)
-           |  WHERE k.doc_id = k.keep_id AND lang.predicted_lang = 'en' AND qual.quality >= 0.5)
-           |SELECT doc_id, predicted_lang, quality, n_tokens,
-           |       CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-           |FROM (SELECT *, ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS b
-           |      FROM sel)
-           |ORDER BY doc_id""".stripMargin
-      },
-
-      // same BMP codepoint ranges, same count-by-removal (DuckDB
-      // regexp_replace needs the 'g' flag; Spark's is global by default),
-      // same deterministic dominant-tie order, same round4 share
-      "x18_script_mix" ->
-        """WITH planted AS (
-          |  SELECT doc_id,
-          |    CASE WHEN doc_id % 26 = 0 THEN repeat('привет мир ', 30)
-          |         WHEN doc_id % 13 = 0 THEN text || ' привет мир'
-          |         ELSE text END ||
-          |    CASE WHEN doc_id % 17 = 0 THEN ' 你好世界' ELSE '' END AS t
-          |  FROM documents),
-          |c AS (
-          |  SELECT doc_id,
-          |    CAST(len(t) - len(regexp_replace(t, '[A-Za-z]', '', 'g')) AS BIGINT) AS n_latin,
-          |    CAST(len(t) - len(regexp_replace(t, '[\x{0400}-\x{04FF}]', '', 'g')) AS BIGINT) AS n_cyrillic,
-          |    CAST(len(t) - len(regexp_replace(t, '[\x{4E00}-\x{9FFF}]', '', 'g')) AS BIGINT) AS n_cjk,
-          |    CAST(len(t) - len(regexp_replace(t, '[0-9]', '', 'g')) AS BIGINT) AS n_digit
-          |  FROM planted)
-          |SELECT doc_id, n_latin, n_cyrillic, n_cjk, n_digit,
-          |  n_latin + n_cyrillic + n_cjk AS n_letters,
-          |  CASE WHEN n_latin + n_cyrillic + n_cjk IS NULL THEN NULL
-          |       WHEN n_latin + n_cyrillic + n_cjk = 0 THEN NULL
-          |       WHEN n_latin >= n_cyrillic AND n_latin >= n_cjk THEN 'latin'
-          |       WHEN n_cyrillic >= n_cjk THEN 'cyrillic' ELSE 'cjk' END AS dominant_script,
-          |  CASE WHEN n_latin + n_cyrillic + n_cjk = 0 THEN NULL
-          |       ELSE floor(greatest(n_latin, n_cyrillic, n_cjk)::DOUBLE
-          |              / (n_latin + n_cyrillic + n_cjk)::DOUBLE * 10000.0 + 0.5) / 10000.0
-          |  END AS dominant_share
-          |FROM c ORDER BY doc_id""".stripMargin,
-
-      "x3_language_id" ->
-        s"""WITH t AS (
-           |  SELECT doc_id, list_filter(string_split(text,' '), x -> x <> '') AS toks FROM documents),
-           |s AS (
-           |  SELECT doc_id,
-           |  $langScoreCols
-           |  FROM t)
-           |SELECT doc_id, ${langProfiles.map { case (l, _) => s"score_$l" }.mkString(", ")},
-           |  CASE WHEN $greatestAll <= 0.0 THEN 'und'
-           |       $langCase
-           |       ELSE 'und' END AS predicted_lang
-           |FROM s ORDER BY doc_id""".stripMargin,
-
-      "x4_fingerprint" ->
-        """SELECT doc_id, substr(md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')), 1, 16) AS fingerprint
-          |FROM documents ORDER BY doc_id""".stripMargin,
-
-      // the CMS pass is a pure candidate filter (never undercounts ⇒
-      // superset) and the operator verifies with exact counts, so the
-      // oracle is the plain exact heavy-hitter query
-      "t3_heavy_hitters" ->
-        s"""SELECT word, count(*) AS cnt
-           |FROM (SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents)
-           |WHERE word <> '' GROUP BY word HAVING count(*) >= $HeavyHitterThreshold
-           |ORDER BY word""".stripMargin,
-
-      "x5_winnowing_fingerprints" ->
-        """WITH sh AS (
-          |  SELECT doc_id, u.pos, u.h FROM (
-          |    SELECT doc_id,
-          |      unnest(list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 0) + 1),
-          |        i -> struct_pack(pos := i - 1,
-          |          h := ('0x' || substr(md5(array_to_string((string_split(text,' '))[i:i+2], ' ')),1,8))::BIGINT))) AS u
-          |    FROM documents)),
-          |win AS (
-          |  SELECT doc_id, pos, min(h) OVER (
-          |    PARTITION BY doc_id ORDER BY pos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS winmin
-          |  FROM sh)
-          |SELECT DISTINCT doc_id, winmin AS fingerprint FROM win WHERE pos >= 3
-          |ORDER BY doc_id, fingerprint""".stripMargin,
-
-      "mm_binary_meta" ->
-        """SELECT doc_id AS asset_id,
-          |       CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
-          |       octet_length(encode(text)) AS n_bytes,
-          |       lower(hex(encode(substr(text, 1, 4)))) AS header_hex,
-          |       sha256(text) AS sha
-          |FROM documents ORDER BY asset_id""".stripMargin,
-
-      // feature outputs minus the stubbed decode column: n_bytes and the
-      // 8-byte content-hash prefix are deterministic functions of text
-      "mm_features" ->
-        """SELECT doc_id AS asset_id,
-          |       CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
-          |       octet_length(encode(text)) AS n_bytes,
-          |       substr(sha256(text), 1, 16) AS sha
-          |FROM documents ORDER BY asset_id""".stripMargin,
-
-      // q6 fixed-point pooling: long sums are exact, so both engines agree
-      // byte-for-byte regardless of summation order
-      "q_chunk_mean_pool" ->
-        """WITH e AS (
-          |  SELECT vec_id // 10 AS group_id, u.pos, u.v FROM (
-          |    SELECT vec_id,
-          |      unnest(list_transform(range(1, len(embedding) + 1),
-          |        i -> struct_pack(pos := i - 1, v := embedding[i]))) AS u
-          |    FROM embeddings)),
-          |q AS (SELECT group_id, pos,
-          |             CAST(round(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT) AS q6
-          |      FROM e)
-          |SELECT group_id, pos,
-          |       CAST(round(CAST(sum(q6) AS DOUBLE) / count(*)) AS BIGINT) AS mean_q6
-          |FROM q GROUP BY group_id, pos
-          |ORDER BY group_id, pos""".stripMargin,
-
-      // the 4-frame signature replayed from the gray formula: frame f of
-      // asset id is uniformly gray (((id%7)·31 + f·29) mod 256), so the
-      // exact frame mean IS the gray; the rolling hash h←(h·257+mean+1)
-      // mod p over frames 0..3 then h←(h·257+4) mod p expands to the
-      // closed form (Σ (mean_f+1)·257^(4−f) + 4) mod p — every term fits
-      // BIGINT, so one sum and one final mod replay it exactly
-      "mm_video_signature_dedup" ->
-        """WITH sig AS (
-          |  SELECT d.doc_id,
-          |         CAST((sum(((((d.doc_id % 7) * 31 + f.f * 29) % 256 + 1)::BIGINT)
-          |                   * CAST(power(257, 4 - f.f) AS BIGINT)) + 4)
-          |              % 2147483647 AS BIGINT) AS vsig
-          |  FROM documents d, range(0, 4) f(f) GROUP BY d.doc_id),
-          |g AS (SELECT vsig, count(*) AS group_n, min(doc_id) AS canon FROM sig GROUP BY vsig)
-          |SELECT s.doc_id, s.vsig, CAST(g.group_n AS BIGINT) AS group_n,
-          |       s.doc_id = g.canon AS keep
-          |FROM sig s JOIN g USING (vsig) ORDER BY s.doc_id""".stripMargin,
-
-      // ONE dedup across all modalities: kind = id mod 3 selects which
-      // formula stack replays the signature (aHash pixels / envelope
-      // windows / frame-gray rolling hash — each exactly its
-      // single-modality oracle's arithmetic), namespaced 'kind:hash';
-      // groups and canonical ids from the shared signature column
-      "e2e_asset_dedup" ->
-        """WITH px AS (
-          |  SELECT d.doc_id,
-          |         ((d.doc_id % 17) * 31 + x.x * 7 + y.y * 13) % 256 AS p,
-          |         y.y * 8 + x.x AS i
-          |  FROM documents d, range(0, 8) x(x), range(0, 8) y(y)
-          |  WHERE d.doc_id % 3 = 0),
-          |ps AS (SELECT doc_id, sum(p) AS total FROM px GROUP BY doc_id),
-          |img AS (
-          |  SELECT px.doc_id, 'image' AS kind,
-          |         'image:' || CAST(CAST(sum(CASE WHEN px.p * 64 > ps.total
-          |                       THEN CASE WHEN px.i = 63 THEN (-9223372036854775807 - 1)
-          |                                 ELSE (1::BIGINT << px.i) END
-          |                       ELSE 0 END) AS BIGINT) AS VARCHAR) AS sig
-          |  FROM px JOIN ps USING (doc_id) GROUP BY px.doc_id),
-          |wv AS (
-          |  SELECT d.doc_id, w.w,
-          |         16 * abs(((d.doc_id % 13) * 31 + w.w * 7) % 256 - 128) AS a
-          |  FROM documents d, range(0, 64) w(w)
-          |  WHERE d.doc_id % 3 = 1),
-          |ws AS (SELECT doc_id, sum(a) AS total FROM wv GROUP BY doc_id),
-          |aud AS (
-          |  SELECT wv.doc_id, 'audio' AS kind,
-          |         'audio:' || CAST(CAST(sum(CASE WHEN wv.a * 64 > ws.total
-          |                       THEN CASE WHEN wv.w = 63 THEN (-9223372036854775807 - 1)
-          |                                 ELSE (1::BIGINT << wv.w) END
-          |                       ELSE 0 END) AS BIGINT) AS VARCHAR) AS sig
-          |  FROM wv JOIN ws USING (doc_id) GROUP BY wv.doc_id),
-          |vid AS (
-          |  SELECT d.doc_id, 'video' AS kind,
-          |         'video:' || CAST(CAST((sum(((((d.doc_id % 7) * 31 + f.f * 29) % 256 + 1)::BIGINT)
-          |                   * CAST(power(257, 4 - f.f) AS BIGINT)) + 4)
-          |              % 2147483647 AS BIGINT) AS VARCHAR) AS sig
-          |  FROM documents d, range(0, 4) f(f)
-          |  WHERE d.doc_id % 3 = 2
-          |  GROUP BY d.doc_id),
-          |sig AS (SELECT * FROM img UNION ALL SELECT * FROM aud UNION ALL SELECT * FROM vid),
-          |g AS (SELECT sig, count(*) AS group_n, min(doc_id) AS canon FROM sig GROUP BY sig)
-          |SELECT s.doc_id, s.kind, s.sig, CAST(g.group_n AS BIGINT) AS group_n,
-          |       s.doc_id = g.canon AS keep
-          |FROM sig s JOIN g USING (sig) ORDER BY s.doc_id""".stripMargin,
-
-      // the 64-window envelope replayed from the sample formula: window w
-      // of asset id carries constant samples v = (((id%13)·31 + w·7) mod
-      // 256 − 128)·16, so winAbs = 16·|v| and bit w is the exact integer
-      // threshold winAbs·64 > Σ winAbs (bit 63 via the same HUGEINT
-      // sign-bit trick as mm_phash_dedup); groups and canonical ids from
-      // the identical hash
-      "mm_audio_fingerprint_dedup" ->
-        """WITH wv AS (
-          |  SELECT d.doc_id, w.w,
-          |         16 * abs(((d.doc_id % 13) * 31 + w.w * 7) % 256 - 128) AS a
-          |  FROM documents d, range(0, 64) w(w)),
-          |s AS (SELECT doc_id, sum(a) AS total FROM wv GROUP BY doc_id),
-          |bits AS (
-          |  SELECT wv.doc_id,
-          |         CAST(sum(CASE WHEN wv.a * 64 > s.total
-          |                       THEN CASE WHEN wv.w = 63 THEN (-9223372036854775807 - 1)
-          |                                 ELSE (1::BIGINT << wv.w) END
-          |                       ELSE 0 END) AS BIGINT) AS ahash
-          |  FROM wv JOIN s USING (doc_id) GROUP BY wv.doc_id),
-          |g AS (SELECT ahash, count(*) AS group_n, min(doc_id) AS canon FROM bits GROUP BY ahash)
-          |SELECT b.doc_id, b.ahash, CAST(g.group_n AS BIGINT) AS group_n,
-          |       b.doc_id = g.canon AS keep
-          |FROM bits b JOIN g USING (ahash) ORDER BY b.doc_id""".stripMargin,
-
-      // every decoded value is closed-form in the asset id (±c square-wave
-      // WAV: frames 800 + id%40·40, rate 8000·(1 + id%3), amplitude
-      // 256·(1 + id%100) = the exact RMS); the Spark side derived them from
-      // actual decoded PCM samples
-      "mm_audio_decode" ->
-        """SELECT doc_id AS asset_id,
-          |       CAST(800 + (doc_id % 40) * 40 AS INT) AS decoded_frames,
-          |       CAST(8000 * (1 + doc_id % 3) AS INT) AS decoded_rate,
-          |       CAST(256 * (1 + doc_id % 100) AS INT) AS rms_amp
-          |FROM documents ORDER BY asset_id""".stripMargin,
-
-      // every decoded value is closed-form in the asset id (constant-color
-      // PNG: dims 8+id%16 × 8+id%12, RGB = (id%256, id*31%256, id*77%256));
-      // the Spark side derived them from actual decoded pixels
-      "mm_image_decode" ->
-        """SELECT doc_id AS asset_id,
-          |       CAST(8 + doc_id % 16 AS INT) AS decoded_width,
-          |       CAST(8 + doc_id % 12 AS INT) AS decoded_height,
-          |       CAST(doc_id % 256 AS INT) AS r255,
-          |       CAST((doc_id * 31) % 256 AS INT) AS g255,
-          |       CAST((doc_id * 77) % 256 AS INT) AS b255
-          |FROM documents ORDER BY asset_id""".stripMargin,
-
-      // the 8×8 gradient grid p(x,y) = ((id%17)·31 + x·7 + y·13) mod 256
-      // replayed per pixel; bit (y·8+x) set iff p·64 > Σp (exact integer
-      // threshold, same as the Spark side's decoded-pixel loop); groups
-      // and canonical ids from the identical hash
-      "mm_phash_dedup" ->
-        """WITH px AS (
-          |  SELECT d.doc_id,
-          |         ((d.doc_id % 17) * 31 + x.x * 7 + y.y * 13) % 256 AS p,
-          |         y.y * 8 + x.x AS i
-          |  FROM documents d, range(0, 8) x(x), range(0, 8) y(y)),
-          |s AS (SELECT doc_id, sum(p) AS total FROM px GROUP BY doc_id),
-          |-- bit 63 is the sign bit: DuckDB's checked shift rejects 1<<63,
-          |-- so it contributes long-min directly (sum aggregates in
-          |-- HUGEINT, and the cast back restores the two's-complement
-          |-- pattern Spark's 1L<<63 produces)
-          |bits AS (
-          |  SELECT px.doc_id,
-          |         CAST(sum(CASE WHEN px.p * 64 > s.total
-          |                       THEN CASE WHEN px.i = 63 THEN (-9223372036854775807 - 1)
-          |                                 ELSE (1::BIGINT << px.i) END
-          |                       ELSE 0 END) AS BIGINT) AS phash
-          |  FROM px JOIN s USING (doc_id) GROUP BY px.doc_id),
-          |g AS (SELECT phash, count(*) AS group_n, min(doc_id) AS canon FROM bits GROUP BY phash)
-          |SELECT b.doc_id, b.phash, CAST(g.group_n AS BIGINT) AS group_n,
-          |       b.doc_id = g.canon AS keep
-          |FROM bits b JOIN g USING (phash) ORDER BY b.doc_id""".stripMargin,
-
-      // every decoded value is closed-form in the asset id (animated GIF:
-      // n = 3+id%5 frames of (8+id%8)×(8+id%6), frame f uniformly gray
-      // (id·7 + f·29) mod 256); the Spark side derived them from the
-      // actual decoded frame sequence
-      "mm_video_decode" ->
-        """SELECT doc_id AS asset_id,
-          |       CAST(3 + doc_id % 5 AS INT) AS decoded_frames,
-          |       CAST(8 + doc_id % 8 AS INT) AS decoded_width,
-          |       CAST(8 + doc_id % 6 AS INT) AS decoded_height,
-          |       CAST((doc_id * 7) % 256 AS INT) AS first_gray,
-          |       CAST((doc_id * 7 + (2 + doc_id % 5) * 29) % 256 AS INT) AS last_gray
-          |FROM documents ORDER BY asset_id""".stripMargin,
-
-      // byte-range frame slices: frame f covers bytes [f·64, (f+1)·64) with
-      // stride 2; document text is ASCII so VARCHAR substr == byte slicing
-      // (the same equivalence mm_binary_meta's header_hex relies on)
-      "mm_frame_sample" ->
-        """WITH fr AS (
-          |  SELECT doc_id, text,
-          |         unnest(range(0, octet_length(encode(text)) // 64, 2)) AS f
-          |  FROM documents)
-          |SELECT doc_id AS asset_id, CAST(f AS INTEGER) AS frame_idx,
-          |       CAST(64 AS INTEGER) AS frame_bytes,
-          |       substr(sha256(substr(text, CAST(f * 64 + 1 AS INTEGER), 64)), 1, 16) AS frame_sha
-          |FROM fr ORDER BY asset_id, frame_idx""".stripMargin,
-
-      // mirrors cosineNearDupPairs end-to-end: md5-derived hyperplanes
-      // (Similarity.planeWeight — first 52 md5 bits scaled to [-1,1), exact
-      // IEEE both engines), corpus-scaled signature width (min b in [4,20]
-      // with 64·2^b >= n == Similarity.bitsForCorpus), L2-normalized
-      // embeddings, per-table sign buckets, candidate id pairs, exact dot.
-      // All folds are ordered list_reduce == the native DotProduct loop.
-      "d6_cosine_neardup_pairs" ->
-        s"""WITH nbits AS (
-           |  SELECT COALESCE(min(b), 20) AS bits FROM range(4, 21) tb(b)
-           |  WHERE 64 * (1::BIGINT << b) >= (SELECT count(*) FROM embeddings)),
-           |planes AS (
-           |  SELECT t.t AS tbl, b.b AS bit,
-           |         list_transform(range(0, 64), i ->
-           |           ('0x' || substr(md5('42:' || t.t || ':' || b.b || ':' || i), 1, 13))::BIGINT
-           |           * (2.0 / 4503599627370496.0) - 1.0) AS w
-           |  FROM range(0, 8) t(t), range(0, 20) b(b), nbits WHERE b.b < nbits.bits),
-           |nrm AS (
-           |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE) / n) AS emb
-           |  FROM (SELECT vec_id, embedding,
-           |               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)) AS n
-           |        FROM embeddings)),
-           |sigs AS (
-           |  SELECT v.vec_id, p.tbl,
-           |         CAST(sum(CASE WHEN list_reduce(list_transform(range(1, 65), i -> p.w[i] * v.emb[i]), (a, b) -> a + b) > 0
-           |                       THEN (1::BIGINT << p.bit) ELSE 0 END) AS BIGINT) AS bucket
-           |  FROM nrm v CROSS JOIN planes p GROUP BY 1, 2),
-           |cands AS (
-           |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-           |  FROM sigs a JOIN sigs b ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-           |scored AS (
-           |  SELECT c.vec_a, c.vec_b,
-           |         round(list_reduce(list_transform(range(1, 65), i -> na.emb[i] * nb.emb[i]), (a, b) -> a + b), 6) AS cos
-           |  FROM cands c JOIN nrm na ON na.vec_id = c.vec_a JOIN nrm nb ON nb.vec_id = c.vec_b)
-           |SELECT vec_a, vec_b, cos FROM scored WHERE cos >= $CosineNearDupThreshold
-           |ORDER BY vec_a, vec_b""".stripMargin,
-
-      // mirrors lshBucketTopK: corpus-scaled signature width (min b in [4,20]
-      // with 64·2^b >= n == Similarity.bitsForCorpus) × 8-table signatures
-      // over the RAW double-cast embeddings (d6 buckets the normalized
-      // copies — d7 scores cosine directly so it never normalizes),
-      // candidates joined back to embeddings, d5-style exact cosine +
-      // row_number ranking
-      "d7_ann_lsh_topk" ->
-        s"""WITH nbits AS (
-           |  SELECT COALESCE(min(b), 20) AS bits FROM range(4, 21) tb(b)
-           |  WHERE 64 * (1::BIGINT << b) >= (SELECT count(*) FROM embeddings)),
-           |planes AS (
-           |  SELECT t.t AS tbl, b.b AS bit,
-           |         list_transform(range(0, 64), i ->
-           |           ('0x' || substr(md5('42:' || t.t || ':' || b.b || ':' || i), 1, 13))::BIGINT
-           |           * (2.0 / 4503599627370496.0) - 1.0) AS w
-           |  FROM range(0, 8) t(t), range(0, 20) b(b), nbits WHERE b.b < nbits.bits),
-           |corp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-           |sigs AS (
-           |  SELECT v.vec_id, p.tbl,
-           |         CAST(sum(CASE WHEN list_reduce(list_transform(range(1, 65), i -> p.w[i] * v.emb[i]), (a, b) -> a + b) > 0
-           |                       THEN (1::BIGINT << p.bit) ELSE 0 END) AS BIGINT) AS bucket
-           |  FROM corp v CROSS JOIN planes p GROUP BY 1, 2),
-           |cands AS (
-           |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id
-           |  FROM sigs q JOIN sigs c ON q.tbl = c.tbl AND q.bucket = c.bucket AND q.vec_id <> c.vec_id
-           |  WHERE q.vec_id < 10),
-           |scored AS (
-           |  SELECT cd.query_id, cd.vec_id,
-           |    round(
-           |      list_reduce(list_transform(range(1, 65), i -> qq.emb[i] * ee.emb[i]), (x, y) -> x + y) /
-           |      (sqrt(list_reduce(list_transform(range(1, 65), i -> qq.emb[i] * qq.emb[i]), (x, y) -> x + y)) *
-           |       sqrt(list_reduce(list_transform(range(1, 65), i -> ee.emb[i] * ee.emb[i]), (x, y) -> x + y))), 6) AS cos
-           |  FROM cands cd JOIN corp qq ON qq.vec_id = cd.query_id JOIN corp ee ON ee.vec_id = cd.vec_id),
-           |ranked AS (
-           |  SELECT query_id, vec_id AS neighbor_id, cos,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-           |  FROM scored)
-           |SELECT query_id, rank, neighbor_id, cos FROM ranked WHERE rank <= $TopK
-           |ORDER BY query_id, rank""".stripMargin,
-
-      // d7's candidate CTEs verbatim for the ANN side, d5's exact ranking
-      // for the truth side, joined per query; recall = hits/k needs no
-      // rounding (both engines compute the identical IEEE divide)
-      "q_ann_recall" ->
-        s"""WITH nbits AS (
-           |  SELECT COALESCE(min(b), 20) AS bits FROM range(4, 21) tb(b)
-           |  WHERE 64 * (1::BIGINT << b) >= (SELECT count(*) FROM embeddings)),
-           |planes AS (
-           |  SELECT t.t AS tbl, b.b AS bit,
-           |         list_transform(range(0, 64), i ->
-           |           ('0x' || substr(md5('42:' || t.t || ':' || b.b || ':' || i), 1, 13))::BIGINT
-           |           * (2.0 / 4503599627370496.0) - 1.0) AS w
-           |  FROM range(0, 8) t(t), range(0, 20) b(b), nbits WHERE b.b < nbits.bits),
-           |corp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-           |sigs AS (
-           |  SELECT v.vec_id, p.tbl,
-           |         CAST(sum(CASE WHEN list_reduce(list_transform(range(1, 65), i -> p.w[i] * v.emb[i]), (a, b) -> a + b) > 0
-           |                       THEN (1::BIGINT << p.bit) ELSE 0 END) AS BIGINT) AS bucket
-           |  FROM corp v CROSS JOIN planes p GROUP BY 1, 2),
-           |cands AS (
-           |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id
-           |  FROM sigs q JOIN sigs c ON q.tbl = c.tbl AND q.bucket = c.bucket AND q.vec_id <> c.vec_id
-           |  WHERE q.vec_id < 10),
-           |ann_scored AS (
-           |  SELECT cd.query_id, cd.vec_id,
-           |    round(
-           |      list_reduce(list_transform(range(1, 65), i -> qq.emb[i] * ee.emb[i]), (x, y) -> x + y) /
-           |      (sqrt(list_reduce(list_transform(range(1, 65), i -> qq.emb[i] * qq.emb[i]), (x, y) -> x + y)) *
-           |       sqrt(list_reduce(list_transform(range(1, 65), i -> ee.emb[i] * ee.emb[i]), (x, y) -> x + y))), 6) AS cos
-           |  FROM cands cd JOIN corp qq ON qq.vec_id = cd.query_id JOIN corp ee ON ee.vec_id = cd.vec_id),
-           |ann AS (
-           |  SELECT query_id, neighbor_id FROM (
-           |    SELECT query_id, vec_id AS neighbor_id,
-           |           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-           |    FROM ann_scored) WHERE rank <= $TopK),
-           |ex_scored AS (
-           |  SELECT q.vec_id AS query_id, e.vec_id,
-           |    round(
-           |      list_reduce(list_transform(range(1, 65), i -> q.emb[i] * e.emb[i]), (x, y) -> x + y) /
-           |      (sqrt(list_reduce(list_transform(range(1, 65), i -> q.emb[i] * q.emb[i]), (x, y) -> x + y)) *
-           |       sqrt(list_reduce(list_transform(range(1, 65), i -> e.emb[i] * e.emb[i]), (x, y) -> x + y))), 6) AS cos
-           |  FROM corp e CROSS JOIN (SELECT vec_id, emb FROM corp WHERE vec_id < 10) q
-           |  WHERE e.vec_id <> q.vec_id),
-           |ex AS (
-           |  SELECT query_id, neighbor_id FROM (
-           |    SELECT query_id, vec_id AS neighbor_id,
-           |           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-           |    FROM ex_scored) WHERE rank <= $TopK)
-           |SELECT e.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
-           |       count(a.neighbor_id)::DOUBLE / ${TopK}.0 AS recall
-           |FROM ex e LEFT JOIN ann a ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-           |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin,
-
-      // mirrors Similarity.quantizedTopK: floor(x/s + 0.5) is the shared
-      // round-half-up; Spark's floor yields BIGINT vs DuckDB's DOUBLE, but
-      // the value is an exact small integer either way, so code·s is
-      // bit-identical across engines
-      "d9_quantized_topk" -> {
-        def dot(a: String, b: String) =
-          s"list_reduce(list_transform(range(1, 65), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-        def cos(a: String, b: String) =
-          s"${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)}))"
-        s"""WITH pe AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-           |ps AS (SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) / 127.0 AS s FROM pe),
-           |pr AS (SELECT vec_id, e, list_transform(e, x -> floor(x / s + 0.5) * s) AS r FROM ps),
-           |q AS (SELECT vec_id AS query_id, e AS q_e, r AS q_r FROM pr WHERE vec_id < 10),
-           |approx AS (
-           |  SELECT q.query_id, c.vec_id, c.e, q.q_e, ${cos("q.q_r", "c.r")} AS acos
-           |  FROM pr c CROSS JOIN q WHERE c.vec_id <> q.query_id),
-           |cand AS (
-           |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY acos DESC, vec_id) AS arank
-           |  FROM approx),
-           |exact AS (
-           |  SELECT query_id, vec_id AS neighbor_id, round(${cos("q_e", "e")}, 6) AS cos
-           |  FROM cand WHERE arank <= ${TopK * 4}),
-           |ranked AS (
-           |  SELECT query_id, neighbor_id, cos,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-           |  FROM exact)
-           |SELECT query_id, rank, neighbor_id, cos FROM ranked WHERE rank <= $TopK
-           |ORDER BY query_id, rank""".stripMargin
-      },
-
-      // same two 32-bit sign words off the raw floats (bit i set iff
-      // component > 0 — no arithmetic, nothing to round), same integer
-      // Hamming via bit_count(xor), same (hamming, vec_id) candidate
-      // order, same exact-cosine rescore of the top 4k survivors
-      "d27_signbit_topk" -> {
-        def dot(a: String, b: String) =
-          s"list_reduce(list_transform(range(1, 65), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-        def cos(a: String, b: String) =
-          s"${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)}))"
-        def word(from: Int, until: Int) =
-          s"""list_reduce(list_transform(range($from, $until), i ->
-             |    CASE WHEN e[i] > 0 THEN CAST(1 AS BIGINT) << (i - $from) ELSE CAST(0 AS BIGINT) END),
-             |    (x, y) -> x + y)""".stripMargin
-        s"""WITH pe AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-           |sg AS (SELECT vec_id, e,
-           |  ${word(1, 33)} AS lo,
-           |  ${word(33, 65)} AS hi
-           |  FROM pe),
-           |q AS (SELECT vec_id AS query_id, e AS q_e, lo AS q_lo, hi AS q_hi FROM sg WHERE vec_id < 10),
-           |ham AS (
-           |  SELECT q.query_id, c.vec_id, c.e, q.q_e,
-           |         bit_count(xor(c.lo, q.q_lo)) + bit_count(xor(c.hi, q.q_hi)) AS hamming
-           |  FROM sg c CROSS JOIN q WHERE c.vec_id <> q.query_id),
-           |cand AS (
-           |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY hamming, vec_id) AS arank
-           |  FROM ham),
-           |exact AS (
-           |  SELECT query_id, vec_id AS neighbor_id, round(${cos("q_e", "e")}, 6) AS cos
-           |  FROM cand WHERE arank <= ${TopK * 4}),
-           |ranked AS (
-           |  SELECT query_id, neighbor_id, cos,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-           |  FROM exact)
-           |SELECT query_id, rank, neighbor_id, cos FROM ranked WHERE rank <= $TopK
-           |ORDER BY query_id, rank""".stripMargin
-      },
-
-      // same DISTINCT (doc, shingle) sets split by the benchmark predicate,
-      // exact string equi-join, count >= minOverlap
-      "d11_contamination" ->
-        s"""WITH sh AS ($DuckShingles),
-           |c AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 97 <> 0),
-           |b AS (SELECT doc_id AS bench_id, shingle FROM sh WHERE doc_id % 97 = 0)
-           |SELECT c.doc_id, b.bench_id, count(*) AS n_shared
-           |FROM c JOIN b USING (shingle)
-           |GROUP BY 1, 2 HAVING count(*) >= 2
-           |ORDER BY doc_id, bench_id""".stripMargin,
-
-      // same tokenization as x1 (whitespace, empties dropped, NO lowering),
-      // smooth idf ln((1+N)/(1+df))+1, round4's engine-stable floor rounding
-      "x8_tfidf_topterms" ->
-        s"""WITH tf AS (
-           |  SELECT doc_id, term, count(*) AS tf FROM (
-           |    SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
-           |  WHERE term <> '' GROUP BY doc_id, term),
-           |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-           |n AS (SELECT count(*) AS n FROM documents),
-           |scored AS (
-           |  SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-           |         floor(tf.tf * (ln((1 + n.n) / (1 + dfreq.df)) + 1) * 10000 + 0.5) / 10000 AS score
-           |  FROM tf JOIN dfreq USING (term), n),
-           |ranked AS (
-           |  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rank
-           |  FROM scored)
-           |SELECT doc_id, rank, term, tf, df, score FROM ranked WHERE rank <= $TopK
-           |ORDER BY doc_id, rank""".stripMargin,
-
-      // identical planted PII and identical RE2-safe patterns; DuckDB needs
-      // the explicit 'g' flag to match Spark's replace-all default
-      "x7_redact_pii" ->
-        """SELECT doc_id,
-          |  regexp_replace(regexp_replace(
-          |    CASE WHEN doc_id % 10 = 0
-          |         THEN text || ' contact u' || CAST(doc_id % 100 AS VARCHAR) || '@mail.example.com or call 12345678'
-          |         ELSE text END,
-          |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g'),
-          |    '[0-9]{6,}', '<NUM>', 'g') AS clean
-          |FROM documents ORDER BY doc_id""".stripMargin,
-
-      // the identical alternate-double Luhn digit sum in SQL over the
-      // same RE2-safe candidate pattern; redaction folds exact-substring
-      // replaces exactly like the engine (distinct boundary-bounded runs
-      // cannot overlap, so the fold order is immaterial on both sides)
-      "x19_card_redact" ->
-        """WITH t AS (
-          |  SELECT doc_id,
-          |    text || CASE WHEN doc_id % 9 = 0 THEN ' card 4242424242424242 ok'
-          |                 WHEN doc_id % 9 = 4 THEN ' ref 1234567890123456 x'
-          |                 WHEN doc_id % 9 = 7 THEN ' pay 4111111111111111 and 378282246310005 thx'
-          |                 ELSE '' END AS text
-          |  FROM documents),
-          |cand AS (
-          |  SELECT doc_id, text,
-          |         regexp_extract_all(text, '\b[0-9]{13,19}\b') AS runs
-          |  FROM t),
-          |v AS (
-          |  SELECT doc_id, text, runs,
-          |    list_filter(runs, x ->
-          |      list_sum(list_transform(range(1, len(x) + 1), i ->
-          |        CASE WHEN i % 2 = 1 THEN CAST(substr(reverse(x), i, 1) AS INT)
-          |             ELSE CASE WHEN 2 * CAST(substr(reverse(x), i, 1) AS INT) > 9
-          |                       THEN 2 * CAST(substr(reverse(x), i, 1) AS INT) - 9
-          |                       ELSE 2 * CAST(substr(reverse(x), i, 1) AS INT) END
-          |        END)) % 10 = 0) AS valid
-          |  FROM cand)
-          |SELECT doc_id, CAST(len(runs) AS BIGINT) AS n_digit_runs,
-          |       CAST(len(valid) AS BIGINT) AS n_cards,
-          |       md5(list_reduce(list_prepend(text, valid),
-          |                       (a, b) -> replace(a, b, '<CARD>'))) AS redacted_md5
-          |FROM v ORDER BY doc_id""".stripMargin,
-
-      // d7's candidate stage (corpus-scaled bits, raw embeddings) feeding
-      // d9's quantized ranking + exact rescore
-      "d9b_quantized_lsh_topk" -> {
-        def dot(a: String, b: String) =
-          s"list_reduce(list_transform(range(1, 65), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-        def cos(a: String, b: String) =
-          s"${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)}))"
-        s"""WITH nbits AS (
-           |  SELECT COALESCE(min(b), 20) AS bits FROM range(4, 21) tb(b)
-           |  WHERE 64 * (1::BIGINT << b) >= (SELECT count(*) FROM embeddings)),
-           |planes AS (
-           |  SELECT t.t AS tbl, b.b AS bit,
-           |         list_transform(range(0, 64), i ->
-           |           ('0x' || substr(md5('42:' || t.t || ':' || b.b || ':' || i), 1, 13))::BIGINT
-           |           * (2.0 / 4503599627370496.0) - 1.0) AS w
-           |  FROM range(0, 8) t(t), range(0, 20) b(b), nbits WHERE b.b < nbits.bits),
-           |corp AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
-           |sigs AS (
-           |  SELECT v.vec_id, p.tbl,
-           |         CAST(sum(CASE WHEN list_reduce(list_transform(range(1, 65), i -> p.w[i] * v.emb[i]), (a, b) -> a + b) > 0
-           |                       THEN (1::BIGINT << p.bit) ELSE 0 END) AS BIGINT) AS bucket
-           |  FROM corp v CROSS JOIN planes p GROUP BY 1, 2),
-           |cands AS (
-           |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id
-           |  FROM sigs q JOIN sigs c ON q.tbl = c.tbl AND q.bucket = c.bucket AND q.vec_id <> c.vec_id
-           |  WHERE q.vec_id < 10),
-           |ps AS (SELECT vec_id, emb AS e, list_max(list_transform(emb, x -> abs(x))) / 127.0 AS s FROM corp),
-           |pr AS (SELECT vec_id, e, list_transform(e, x -> floor(x / s + 0.5) * s) AS r FROM ps),
-           |q AS (SELECT vec_id AS query_id, e AS q_e, r AS q_r FROM pr WHERE vec_id < 10),
-           |approx AS (
-           |  SELECT cd.query_id, cd.vec_id, c.e, q.q_e, ${cos("q.q_r", "c.r")} AS acos
-           |  FROM cands cd JOIN pr c ON c.vec_id = cd.vec_id JOIN q ON q.query_id = cd.query_id),
-           |cand AS (
-           |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY acos DESC, vec_id) AS arank
-           |  FROM approx),
-           |exact AS (
-           |  SELECT query_id, vec_id AS neighbor_id, round(${cos("q_e", "e")}, 6) AS cos
-           |  FROM cand WHERE arank <= ${TopK * 4}),
-           |ranked AS (
-           |  SELECT query_id, neighbor_id, cos,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-           |  FROM exact)
-           |SELECT query_id, rank, neighbor_id, cos FROM ranked WHERE rank <= $TopK
-           |ORDER BY query_id, rank""".stripMargin
-      },
-
-      // same d14 window hashing kept with its source, distinct per
-      // (source, hash), hash self-join with source_a < source_b
-      "q_source_overlap_matrix" ->
-        """WITH t AS (
-          |  SELECT source, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM documents),
-          |w AS (
-          |  SELECT DISTINCT source, u.h FROM (
-          |    SELECT source,
-          |      unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-          |        i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-          |    FROM t WHERE len(ws) >= 8))
-          |SELECT a.source AS source_a, b.source AS source_b, count(*) AS shared_windows
-          |FROM w a JOIN w b ON a.h = b.h AND a.source < b.source
-          |GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin,
-
-      // same snapshot predicates and update rule, FULL OUTER JOIN on md5
-      "q_corpus_diff" ->
-        """WITH o AS (
-          |  SELECT doc_id, md5(text) AS oh FROM documents WHERE doc_id % 13 <> 0),
-          |n AS (
-          |  SELECT doc_id,
-          |         md5(CASE WHEN doc_id % 7 = 0
-          |                  THEN 'updated-' || CAST(doc_id AS VARCHAR)
-          |                  ELSE text END) AS nh
-          |  FROM documents WHERE doc_id % 11 <> 0)
-          |SELECT COALESCE(o.doc_id, n.doc_id) AS doc_id,
-          |       CASE WHEN o.oh IS NULL THEN 'added'
-          |            WHEN n.nh IS NULL THEN 'removed'
-          |            WHEN o.oh = n.nh THEN 'unchanged'
-          |            ELSE 'changed' END AS status
-          |FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
-          |ORDER BY doc_id""".stripMargin,
-
-      // mm_phash_dedup's per-pixel replay (gradient grid, integer aHash
-      // threshold, min-id canonical) composed with x2's quality formula and
-      // the histogram-exact per-source median gate
-      "e2e_asset_text_pairs" -> {
-        val stopArr = TextOps.DefaultStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""WITH px AS (
-           |  SELECT d.doc_id,
-           |         ((d.doc_id % 17) * 31 + x.x * 7 + y.y * 13) % 256 AS p,
-           |         y.y * 8 + x.x AS i
-           |  FROM documents d, range(0, 8) x(x), range(0, 8) y(y)),
-           |ptot AS (SELECT doc_id, sum(p) AS total FROM px GROUP BY doc_id),
-           |bits AS (
-           |  SELECT px.doc_id,
-           |         CAST(sum(CASE WHEN px.p * 64 > ptot.total
-           |                       THEN CASE WHEN px.i = 63 THEN (-9223372036854775807 - 1)
-           |                                 ELSE (1::BIGINT << px.i) END
-           |                       ELSE 0 END) AS BIGINT) AS phash
-           |  FROM px JOIN ptot USING (doc_id) GROUP BY px.doc_id),
-           |g AS (SELECT phash, min(doc_id) AS canon FROM bits GROUP BY phash),
-           |surv AS (SELECT b.doc_id, b.phash FROM bits b JOIN g USING (phash)
-           |         WHERE b.doc_id = g.canon),
-           |t AS (
-           |  SELECT doc_id, source, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-           |  FROM documents),
-           |raw AS (
-           |  SELECT doc_id, source,
-           |         least(1.0, len(toks)::DOUBLE / 50.0) AS ls,
-           |         len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE AS ttr,
-           |         len(list_filter(toks, x -> list_contains($stopArr, x)))::DOUBLE / len(toks)::DOUBLE AS sr
-           |  FROM t),
-           |q AS (SELECT doc_id, source,
-           |             floor((0.4 * ls + 0.3 * ttr + 0.3 * sr) * 10000.0 + 0.5) / 10000.0 AS quality
-           |      FROM raw),
-           |h AS (SELECT source, quality, count(*) AS c FROM q GROUP BY source, quality),
-           |cw AS (SELECT source, quality,
-           |              sum(c) OVER (PARTITION BY source ORDER BY quality) AS cum,
-           |              sum(c) OVER (PARTITION BY source) AS tot FROM h),
-           |thr AS (SELECT source, min(quality) AS q_thr FROM cw
-           |        WHERE cum >= (tot + 1) // 2 GROUP BY source),
-           |kept AS (SELECT q.doc_id, q.source, q.quality FROM q JOIN thr USING (source)
-           |         WHERE q.quality >= thr.q_thr)
-           |SELECT s.doc_id, s.phash, k.source, k.quality
-           |FROM surv s JOIN kept k USING (doc_id)
-           |ORDER BY s.doc_id""".stripMargin
-      },
-
-      // the same (n_tokens, doc_id) total order, dealt round-robin
-      "q_balanced_shards" ->
-        """WITH t AS (
-          |  SELECT doc_id,
-          |         CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tokens
-          |  FROM documents)
-          |SELECT doc_id, n_tokens,
-          |       CAST((row_number() OVER (ORDER BY n_tokens, doc_id) - 1) % 8 AS INT) AS shard
-          |FROM t ORDER BY doc_id""".stripMargin,
-
-      // the same deterministic shard assignment, rolled up into the writer
-      // manifest: per-row checksum = first 13 md5 hex digits of the id as
-      // a long, reduced mod 1e6+3 before the sum (overflow-safe to ~10^12
-      // docs/shard) — exact long addition is order-free in both engines
-      "q_shard_manifest" ->
-        """WITH t AS (
-          |  SELECT doc_id,
-          |         CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tokens
-          |  FROM documents),
-          |sh AS (
-          |  SELECT doc_id, n_tokens,
-          |         CAST((row_number() OVER (ORDER BY n_tokens, doc_id) - 1) % 8 AS INT) AS shard
-          |  FROM t)
-          |SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
-          |       CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-          |       CAST(sum(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT % 1000003) AS BIGINT) AS checksum
-          |FROM sh GROUP BY shard ORDER BY shard""".stripMargin,
-
-      // the per-source median from the same histogram CTEs, quartile tiers
-      // via the exact integer NTILE formula over (median desc, source),
-      // then docs × range(1, 5 − tier) expansion
-      "q_epoch_repetition_plan" -> {
-        val stopArr = TextOps.DefaultStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""WITH t AS (
-           |  SELECT doc_id, source, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-           |  FROM documents),
-           |raw AS (
-           |  SELECT doc_id, source,
-           |         least(1.0, len(toks)::DOUBLE / 50.0) AS ls,
-           |         len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE AS ttr,
-           |         len(list_filter(toks, x -> list_contains($stopArr, x)))::DOUBLE / len(toks)::DOUBLE AS sr
-           |  FROM t),
-           |q AS (SELECT doc_id, source,
-           |             floor((0.4 * ls + 0.3 * ttr + 0.3 * sr) * 10000.0 + 0.5) / 10000.0 AS quality
-           |      FROM raw),
-           |h AS (SELECT source, quality, count(*) AS c FROM q GROUP BY source, quality),
-           |cw AS (SELECT source, quality,
-           |              sum(c) OVER (PARTITION BY source ORDER BY quality) AS cum,
-           |              sum(c) OVER (PARTITION BY source) AS tot FROM h),
-           |thr AS (SELECT source, min(quality) AS q_med FROM cw
-           |        WHERE cum >= (tot + 1) // 2 GROUP BY source),
-           |r AS (SELECT source,
-           |             row_number() OVER (ORDER BY q_med DESC, source) - 1 AS idx
-           |      FROM thr),
-           |n AS (SELECT count(*) AS ns FROM thr),
-           |tiers AS (
-           |  SELECT source,
-           |         CAST(CASE WHEN idx < (ns % 4) * (ns // 4 + 1)
-           |                   THEN idx // (ns // 4 + 1)
-           |                   ELSE (ns % 4) + (idx - (ns % 4) * (ns // 4 + 1)) // (ns // 4)
-           |              END + 1 AS INT) AS tier
-           |  FROM r, n)
-           |SELECT d.doc_id, d.source, tiers.tier, CAST(e.e AS INT) AS epoch
-           |FROM documents d JOIN tiers USING (source), range(1, 5) e(e)
-           |WHERE e.e <= 5 - tiers.tier
-           |ORDER BY d.doc_id, epoch""".stripMargin
-      },
-
-      // x2's quality formula, then the histogram-exact lower median per
-      // source (same (tot+1) div 2 rank, same min-quality-at-or-past-rank
-      // selection) and the >= threshold filter
-      // the median-filter histogram CTEs twice: once for the per-source
-      // median, once over |quality − median| for the MAD; z is a single
-      // IEEE expression over the agreed doubles, round4 with floor (exact
-      // for negatives too); MAD = 0 → NULL both sides
-      "q_robust_quality_z" -> {
-        val stopArr = TextOps.DefaultStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""WITH t AS (
-           |  SELECT doc_id, source, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-           |  FROM documents),
-           |q AS (SELECT doc_id, source,
-           |             floor((0.4 * least(1.0, len(toks)::DOUBLE / 50.0)
-           |                  + 0.3 * (len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE)
-           |                  + 0.3 * (len(list_filter(toks, x -> list_contains($stopArr, x)))::DOUBLE / len(toks)::DOUBLE))
-           |                   * 10000.0 + 0.5) / 10000.0 AS quality
-           |      FROM t),
-           |h1 AS (SELECT source, quality, count(*) AS c FROM q GROUP BY source, quality),
-           |cw1 AS (SELECT source, quality,
-           |               sum(c) OVER (PARTITION BY source ORDER BY quality) AS cum,
-           |               sum(c) OVER (PARTITION BY source) AS tot FROM h1),
-           |med AS (SELECT source, min(quality) AS median FROM cw1
-           |        WHERE cum >= (tot + 1) // 2 GROUP BY source),
-           |d AS (SELECT q.doc_id, q.source, q.quality, med.median,
-           |             abs(q.quality - med.median) AS ad
-           |      FROM q JOIN med USING (source)),
-           |h2 AS (SELECT source, ad, count(*) AS c FROM d GROUP BY source, ad),
-           |cw2 AS (SELECT source, ad,
-           |               sum(c) OVER (PARTITION BY source ORDER BY ad) AS cum,
-           |               sum(c) OVER (PARTITION BY source) AS tot FROM h2),
-           |mad AS (SELECT source, min(ad) AS mad FROM cw2
-           |        WHERE cum >= (tot + 1) // 2 GROUP BY source)
-           |SELECT d.doc_id, d.source, d.quality, d.median, mad.mad,
-           |       CASE WHEN mad.mad > 0
-           |            THEN floor((d.quality - d.median) / mad.mad * 10000.0 + 0.5) / 10000.0
-           |       END AS robust_z
-           |FROM d JOIN mad USING (source)
-           |ORDER BY doc_id""".stripMargin
-      },
-
-      "q_quality_median_filter" -> {
-        val stopArr = TextOps.DefaultStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""WITH t AS (
-           |  SELECT doc_id, source, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-           |  FROM documents),
-           |raw AS (
-           |  SELECT doc_id, source,
-           |         least(1.0, len(toks)::DOUBLE / 50.0) AS ls,
-           |         len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE AS ttr,
-           |         len(list_filter(toks, x -> list_contains($stopArr, x)))::DOUBLE / len(toks)::DOUBLE AS sr
-           |  FROM t),
-           |q AS (SELECT doc_id, source,
-           |             floor((0.4 * ls + 0.3 * ttr + 0.3 * sr) * 10000.0 + 0.5) / 10000.0 AS quality
-           |      FROM raw),
-           |h AS (SELECT source, quality, count(*) AS c FROM q GROUP BY source, quality),
-           |cw AS (SELECT source, quality,
-           |              sum(c) OVER (PARTITION BY source ORDER BY quality) AS cum,
-           |              sum(c) OVER (PARTITION BY source) AS tot FROM h),
-           |thr AS (SELECT source, min(quality) AS q_thr FROM cw
-           |        WHERE cum >= (tot + 1) // 2 GROUP BY source)
-           |SELECT q.doc_id, q.source, q.quality
-           |FROM q JOIN thr USING (source)
-           |WHERE q.quality >= thr.q_thr
-           |ORDER BY doc_id""".stripMargin
-      },
-
-      // the shared md5-bucket hash split, d14's window hashing on both
-      // sides, distinct train hashes semi-joined against test windows
-      "q_split_leakage_ngram" ->
-        """WITH t AS (
-          |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM documents),
-          |s AS (
-          |  SELECT doc_id, ws,
-          |         CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-          |  FROM (SELECT doc_id, ws,
-          |               ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS b
-          |        FROM t)),
-          |w AS (
-          |  SELECT doc_id, split, u.h FROM (
-          |    SELECT doc_id, split,
-          |      unnest(list_transform(range(1, greatest(len(ws) - 8, -1) + 2),
-          |        i -> struct_pack(pos := i - 1, h := md5(array_to_string(ws[i:i+7], ' '))))) AS u
-          |    FROM s WHERE len(ws) >= 8)),
-          |tr AS (SELECT DISTINCT h FROM w WHERE split = 'train'),
-          |lk AS (SELECT w.doc_id, count(*) AS n_leaked
-          |       FROM w JOIN tr USING (h) WHERE w.split = 'test' GROUP BY w.doc_id)
-          |SELECT s.doc_id, CAST(greatest(len(s.ws) - 7, 0) AS BIGINT) AS n_windows,
-          |       CAST(COALESCE(lk.n_leaked, 0) AS BIGINT) AS n_leaked,
-          |       CASE WHEN greatest(len(s.ws) - 7, 0) = 0 THEN 0.0
-          |            ELSE floor(COALESCE(lk.n_leaked, 0)::DOUBLE /
-          |                       (len(s.ws) - 7)::DOUBLE * 10000.0 + 0.5) / 10000.0
-          |       END AS leak_frac
-          |FROM s LEFT JOIN lk ON s.doc_id = lk.doc_id
-          |WHERE s.split = 'test'
-          |ORDER BY s.doc_id""".stripMargin,
-
-      // the full manifest replayed stage-for-stage: x2 quality → histogram
-      // median gate → √-mass integer temperature allocation (150 slots,
-      // md5-rank fill) → x11's bigram NLL RETRAINED on the selected subset
-      // → the exact integer NTILE formula → the (phase, avg_nll, doc_id)
-      // token prefix sum and 128-token chunk arithmetic
-      "e2e_training_manifest" -> {
-        val stopArr = TextOps.DefaultStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""WITH t AS (
-           |  SELECT doc_id, source, list_filter(string_split(text, ' '), x -> x <> '') AS ws
-           |  FROM documents),
-           |raw AS (
-           |  SELECT doc_id, source,
-           |         least(1.0, len(ws)::DOUBLE / 50.0) AS ls,
-           |         len(list_distinct(ws))::DOUBLE / len(ws)::DOUBLE AS ttr,
-           |         len(list_filter(ws, x -> list_contains($stopArr, x)))::DOUBLE / len(ws)::DOUBLE AS sr
-           |  FROM t),
-           |q AS (SELECT doc_id, source,
-           |             floor((0.4 * ls + 0.3 * ttr + 0.3 * sr) * 10000.0 + 0.5) / 10000.0 AS quality
-           |      FROM raw),
-           |h AS (SELECT source, quality, count(*) AS c FROM q GROUP BY source, quality),
-           |cw AS (SELECT source, quality,
-           |              sum(c) OVER (PARTITION BY source ORDER BY quality) AS cum,
-           |              sum(c) OVER (PARTITION BY source) AS tot FROM h),
-           |thr AS (SELECT source, min(quality) AS q_thr FROM cw
-           |        WHERE cum >= (tot + 1) // 2 GROUP BY source),
-           |kept AS (SELECT q.doc_id, q.source FROM q JOIN thr USING (source)
-           |         WHERE q.quality >= thr.q_thr),
-           |counts AS (SELECT source, count(*) AS c FROM kept GROUP BY source),
-           |m AS (SELECT source,
-           |             CAST(floor(sqrt(c::DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS a FROM counts),
-           |mtot AS (SELECT CAST(sum(a) AS BIGINT) AS b FROM m),
-           |alloc AS (SELECT source, CAST((150 * a) // b AS BIGINT) AS n_alloc FROM m, mtot),
-           |rk AS (
-           |  SELECT source, doc_id,
-           |         row_number() OVER (PARTITION BY source
-           |           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS r
-           |  FROM kept),
-           |sel AS (SELECT rk.doc_id FROM rk JOIN alloc USING (source) WHERE rk.r <= alloc.n_alloc),
-           |st AS (SELECT t.doc_id, t.source, t.ws FROM t JOIN sel USING (doc_id)),
-           |trans AS (
-           |  SELECT doc_id, ws[i - 1] AS v, ws[i] AS w
-           |  FROM st, unnest(range(2, len(ws) + 1)) AS u(i)),
-           |vocab AS (
-           |  SELECT count(DISTINCT tok)::DOUBLE AS v_size
-           |  FROM (SELECT unnest(ws) AS tok FROM st)),
-           |bigram AS (SELECT v, w, count(*) AS c_vw FROM trans GROUP BY v, w),
-           |ctx AS (SELECT v, count(*) AS c_v FROM trans GROUP BY v),
-           |scored0 AS (
-           |  SELECT trans.doc_id,
-           |         CAST(floor(-ln((c_vw::DOUBLE + 0.5) / (c_v::DOUBLE + 0.5 * vocab.v_size))
-           |                    * 1000000.0 + 0.5) AS BIGINT) AS nll_q6
-           |  FROM trans JOIN bigram USING (v, w) JOIN ctx USING (v), vocab),
-           |scored AS (
-           |  SELECT doc_id,
-           |         floor(sum(nll_q6)::DOUBLE / 1000000.0 / count(*)::DOUBLE * 10000.0 + 0.5) / 10000.0 AS avg_nll
-           |  FROM scored0 GROUP BY doc_id),
-           |r AS (SELECT doc_id, avg_nll,
-           |             row_number() OVER (ORDER BY avg_nll, doc_id) - 1 AS idx
-           |      FROM scored),
-           |n AS (SELECT count(*) AS n FROM scored),
-           |ph AS (
-           |  SELECT doc_id, avg_nll,
-           |         CAST(CASE WHEN idx < (n % 4) * (n // 4 + 1)
-           |                   THEN idx // (n // 4 + 1)
-           |                   ELSE (n % 4) + (idx - (n % 4) * (n // 4 + 1)) // (n // 4)
-           |              END + 1 AS INT) AS phase
-           |  FROM r, n),
-           |wt AS (
-           |  SELECT ph.doc_id, t.source, ph.phase, ph.avg_nll,
-           |         CAST(len(t.ws) AS BIGINT) AS n_tokens
-           |  FROM ph JOIN t USING (doc_id)),
-           |p AS (
-           |  SELECT *, CAST(COALESCE(sum(n_tokens) OVER (ORDER BY phase, avg_nll, doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS tok_start
-           |  FROM wt)
-           |SELECT doc_id, source, phase, avg_nll, n_tokens, tok_start,
-           |       CAST(tok_start // 128 AS BIGINT) AS chunk_start,
-           |       CAST(CASE WHEN n_tokens = 0 THEN tok_start // 128
-           |                 ELSE (tok_start + n_tokens - 1) // 128 END AS BIGINT) AS chunk_end
-           |FROM p ORDER BY doc_id""".stripMargin
-      }
-    )
-  }
-
-  private def coreOracleSql: Map[String, String] = Map(
-
-    // lower() mirrors CoreOps.tokenize — the generated docs are all-lowercase,
-    // but the oracle must agree on mixed-case inputs too
-    "p1_tokenize_wordcount" ->
-      """SELECT word, count(*) AS cnt
-        |FROM (SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents)
-        |WHERE word <> '' GROUP BY word ORDER BY word""".stripMargin,
-
-    "p3_clamp_histogram" ->
-      s"""SELECT event_type, round(sum(greatest(-$ClampL, least($ClampL, value))), 2) AS clamped_sum
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "p4_routing_hash" ->
-      """SELECT DISTINCT event_type, sha256('word:' || event_type) AS routing_key
-        |FROM events ORDER BY event_type""".stripMargin,
-
-    "p5_json_extract" ->
-      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k, count(*) AS cnt
-        |FROM events GROUP BY k ORDER BY k""".stripMargin,
-
-    "b1_bounding_histogram" ->
-      s"""SELECT event_type, count(*) AS cnt, round(sum(value), 2) AS value_sum
-         |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS rn FROM events)
-         |WHERE rn <= $BoundC GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "b1_bounding_sweep_c10" ->
-      """SELECT event_type, count(*) AS cnt,
-        |       round(sum(greatest(0.0, least(50.0, value))), 2) AS clamped_sum
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS rn FROM events)
-        |WHERE rn <= 10 GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "b1_user_admitted_counts" ->
-      s"""SELECT user_id, least(count(*), $BoundC) AS admitted
-         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "a2_preagg" ->
-      """SELECT event_type AS key, CAST(EXTRACT(day FROM ts) AS BIGINT) AS epoch,
-        |       round(sum(value), 2) AS delta_v, count(DISTINCT user_id) AS unique_users
-        |FROM events GROUP BY key, epoch ORDER BY key, epoch""".stripMargin,
-
-    "a6_unique_users" ->
-      """SELECT event_type, count(DISTINCT user_id) AS unique_users
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "dp_sigma0_mu0_histogram" ->
-      s"""WITH bounded AS (
-         |  SELECT event_type, greatest(-$ClampL, least($ClampL, value)) AS v
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS rn FROM events)
-         |  WHERE rn <= $BoundC)
-         |-- floor(x+0.5) == java Math.round: DuckDB round() is half-AWAY-FROM-ZERO,
-         |-- which differs from the mechanism's math.round on negative .5 sums
-         |SELECT event_type AS key, CAST(floor(sum(v) + 0.5) AS BIGINT) AS "count"
-         |FROM bounded GROUP BY key ORDER BY "count" DESC, key""".stripMargin,
-
-    "dp_sigma0_mu_gate" ->
-      s"""SELECT CAST(json_extract_string(props, '$$.k') AS BIGINT) AS key, count(*) AS "count"
-         |FROM events GROUP BY key HAVING count(DISTINCT user_id) >= $MuGate
-         |ORDER BY "count" DESC, key""".stripMargin,
-
-    "dp_carryforward_timeline" ->
-      """WITH pre AS (
-        |  SELECT event_type AS key, CAST(EXTRACT(day FROM ts) AS BIGINT) AS epoch, sum(value) AS delta_v
-        |  FROM events GROUP BY key, epoch)
-        |SELECT epoch, key, round(sum(delta_v) OVER (PARTITION BY key ORDER BY epoch), 2) AS cum_sum
-        |FROM pre ORDER BY epoch, key""".stripMargin,
-
-    "dp_timeline_releases" ->
-      """WITH pre AS (
-        |  SELECT event_type AS key, CAST(EXTRACT(day FROM ts) AS BIGINT) AS epoch, count(*) AS delta_v
-        |  FROM events GROUP BY key, epoch)
-        |SELECT CAST(epoch AS INT) AS epoch, key,
-        |       CAST(sum(delta_v) OVER (PARTITION BY key ORDER BY epoch) AS BIGINT) AS "count"
-        |FROM pre ORDER BY epoch, key""".stripMargin,
-
-    "m3_partial_merge" ->
-      """WITH partials AS (
-        |  SELECT event_type AS key, user_id % 4 AS shard, count(*) AS pc
-        |  FROM events GROUP BY key, shard)
-        |SELECT key, CAST(sum(pc) AS BIGINT) AS "count" FROM partials GROUP BY key ORDER BY key""".stripMargin,
-
-    "t2_topk_words" ->
-      """SELECT word, count(*) AS cnt
-        |FROM (SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents)
-        |WHERE word <> '' GROUP BY word ORDER BY cnt DESC, word LIMIT 20""".stripMargin,
-
-    "utility_metrics" ->
-      s"""WITH bounded AS (
-         |  SELECT event_type AS key, CAST(floor(sum(greatest(-$ClampL, least($ClampL, value))) + 0.5) AS BIGINT) AS c
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS rn FROM events)
-         |  WHERE rn <= $BoundC GROUP BY event_type),
-         |truth AS (
-         |  SELECT event_type AS key, CAST(floor(sum(value) + 0.5) AS BIGINT) AS c
-         |  FROM events GROUP BY event_type),
-         |j AS (
-         |  SELECT coalesce(CAST(bounded.c AS DOUBLE), 0.0) AS d, coalesce(CAST(truth.c AS DOUBLE), 0.0) AS g
-         |  FROM bounded FULL OUTER JOIN truth ON bounded.key = truth.key)
-         |SELECT CAST(sum(CASE WHEN d <> 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS l0,
-         |       round(max(abs(d - g)), 2) AS linf,
-         |       round(sum(abs(d - g)), 2) AS l1,
-         |       round(sqrt(sum((d - g) * (d - g))), 4) AS l2
-         |FROM j""".stripMargin,
-
-    "q_tpch1_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        |       count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_join_mktsegment_revenue" ->
-      """SELECT c_mktsegment,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |       count(*) AS cnt
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q_semi_anti_counts" ->
-      """SELECT CAST(sum(CASE WHEN o.o_custkey IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS with_orders,
-        |       CAST(sum(CASE WHEN o.o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS without_orders
-        |FROM customer c LEFT OUTER JOIN (SELECT DISTINCT o_custkey FROM orders) o
-        |  ON c.c_custkey = o.o_custkey""".stripMargin,
-
-    "q_window_running_qty" ->
-      """SELECT l_suppkey, l_orderkey, l_linenumber,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) OVER (
-        |         PARTITION BY l_suppkey
-        |         ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_partkey) AS DOUBLE) AS running_qty
-        |FROM lineitem ORDER BY l_suppkey, l_orderkey, l_linenumber, running_qty""".stripMargin,
-
-    "q_rollup_order_priority" ->
-      """SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS yr, o_orderpriority,
-        |       count(*) AS cnt,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY ROLLUP(yr, o_orderpriority)
-        |ORDER BY yr ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-
-    "q_salted_distinct_users" ->
-      """SELECT event_type, count(DISTINCT user_id) AS unique_users
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_capped_sample" ->
-      """SELECT user_id, event_id FROM (
-        |  SELECT user_id, event_id,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY md5(CAST(event_id AS VARCHAR)), event_id) AS r
-        |  FROM events) WHERE r <= 5 ORDER BY user_id, event_id""".stripMargin,
-
-    "q_hash_split" ->
-      """SELECT CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
-        |       count(*) AS cnt
-        |FROM (SELECT ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS b
-        |      FROM documents)
-        |GROUP BY 1 ORDER BY split""".stripMargin,
-
-    "q_value_percentiles" ->
-      """SELECT event_type,
-        |       quantile_cont(value, 0.25) AS p25,
-        |       quantile_cont(value, 0.5) AS p50,
-        |       quantile_cont(value, 0.95) AS p95
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "j3_overlap_intervals" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, epoch_ns(ts)//1000 AS ts_us FROM events),
-        |c AS (SELECT event_id AS c_event_id, user_id, ts_us AS c_start,
-        |             ts_us + 21600000000 AS c_end FROM e WHERE event_type = 'click'),
-        |r AS (SELECT event_id AS e_event_id, user_id, ts_us AS e_start,
-        |             ts_us + 10800000000 AS e_end FROM e WHERE event_type = 'error')
-        |SELECT c.user_id AS user_id, c_event_id, e_event_id
-        |FROM c JOIN r ON c.user_id = r.user_id
-        |              AND c_start < e_end AND e_start < c_end
-        |ORDER BY c.user_id, c_event_id, e_event_id""".stripMargin,
-
-    "q_rolling_user_stats" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_ns(ts)//1000 AS ts_us, value FROM events)
-        |SELECT event_id, user_id, ts_us,
-        |       lag(value) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_value,
-        |       CAST(count(*) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |                           ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS BIGINT) AS n_last3,
-        |       min(value) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |                        ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS min_last3,
-        |       max(value) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |                        ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS max_last3
-        |FROM e ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    "q_pivot_event_features" ->
-      """SELECT user_id,
-        |       count(*) FILTER (WHERE event_type = 'click') AS n_click,
-        |       count(*) FILTER (WHERE event_type = 'view') AS n_view,
-        |       count(*) FILTER (WHERE event_type = 'purchase') AS n_purchase,
-        |       count(*) FILTER (WHERE event_type = 'signup') AS n_signup,
-        |       count(*) FILTER (WHERE event_type = 'error') AS n_error,
-        |       sum(value) FILTER (WHERE event_type = 'purchase') AS purchase_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_global_index" ->
-      """SELECT o_orderkey, row_number() OVER (ORDER BY o_orderkey) - 1 AS idx
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    // A-ES keys replayed: the same md5 hash-to-unit draw, ln(u)/w ranking
-    // (monotone in u^(1/w)), q6-fixed for a total order on longs
-    "q_weighted_sample" ->
-      """WITH keys AS (
-        |  SELECT doc_id, n_chars AS weight,
-        |         CAST(floor(ln((('0x' || substr(md5('aes:' || CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT::DOUBLE + 0.5)
-        |                        / 4503599627370496.0)
-        |                    / n_chars::DOUBLE * 1000000.0 + 0.5) AS BIGINT) AS key_q6
-        |  FROM documents WHERE n_chars > 0)
-        |SELECT CAST(row_number() OVER (ORDER BY key_q6 DESC, doc_id) AS INT) AS rank,
-        |       doc_id, CAST(weight AS BIGINT) AS weight, key_q6
-        |FROM keys ORDER BY key_q6 DESC, doc_id LIMIT 100""".stripMargin,
-
-    // α=½ temperature allocation: q6-fixed √counts summed as integers,
-    // n_i = (N·a_i) // Σa in exact integer arithmetic, then the shared
-    // md5-rank fills each source's slots
-    "q_temperature_mix" ->
-      """WITH counts AS (SELECT source, count(*) AS c FROM documents GROUP BY source),
-        |m AS (SELECT source,
-        |             CAST(floor(sqrt(c::DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS a FROM counts),
-        |tot AS (SELECT CAST(sum(a) AS BIGINT) AS b FROM m),
-        |alloc AS (SELECT source, CAST((200 * a) // b AS BIGINT) AS n_alloc FROM m, tot),
-        |ranked AS (
-        |  SELECT source, doc_id,
-        |         row_number() OVER (PARTITION BY source
-        |           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS r
-        |  FROM documents)
-        |SELECT r.source, r.doc_id, a.n_alloc
-        |FROM ranked r JOIN alloc a USING (source)
-        |WHERE r.r <= a.n_alloc ORDER BY source, doc_id""".stripMargin,
-
-    // all four round-11 stages replayed: d20's block dedup (clean_text
-    // reassembled), x15's interpolated-KN model RETRAINED on the cleaned
-    // corpus, the quantized-histogram lower-median gate on the negated
-    // round4 NLL, and the capped-mix rounds over the kept counts
-    "e2e_block_kn_mix" ->
-      """WITH t0 AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-        |  FROM documents),
-        |n0 AS (SELECT doc_id, toks, CAST(ceil(len(toks) / 16.0) AS BIGINT) AS nb FROM t0),
-        |b0 AS (SELECT doc_id, i AS bi,
-        |              md5(array_to_string(toks[CAST(i*16+1 AS BIGINT):CAST(i*16+16 AS BIGINT)], ' ')) AS h
-        |       FROM n0, unnest(range(0, nb)) AS u(i)),
-        |w0 AS (SELECT h, doc_id AS wd, bi AS wb FROM (
-        |         SELECT h, doc_id, bi,
-        |                row_number() OVER (PARTITION BY h ORDER BY doc_id, bi) AS rn
-        |         FROM b0) WHERE rn = 1),
-        |drp AS (SELECT b0.doc_id, b0.bi FROM b0 JOIN w0 USING (h)
-        |        WHERE NOT (b0.doc_id = w0.wd AND b0.bi = w0.wb)),
-        |da AS (SELECT doc_id, list(bi ORDER BY bi) AS drops FROM drp GROUP BY doc_id),
-        |cleaned AS (
-        |  SELECT n0.doc_id, d.lang,
-        |         COALESCE(array_to_string(flatten(list_transform(
-        |           list_filter(range(0, n0.nb), i -> NOT list_contains(COALESCE(da.drops, []), i)),
-        |           i -> toks[CAST(i*16+1 AS BIGINT):CAST(i*16+16 AS BIGINT)])), ' '), '') AS clean_text
-        |  FROM n0 LEFT JOIN da USING (doc_id) JOIN documents d USING (doc_id)),
-        |t AS (SELECT doc_id, lang, clean_text,
-        |             list_filter(string_split(clean_text, ' '), x -> x <> '') AS toks
-        |      FROM cleaned),
-        |trans AS (SELECT doc_id, toks[i - 1] AS v, toks[i] AS w
-        |          FROM t, unnest(range(2, len(toks) + 1)) AS u(i)),
-        |bigram AS (SELECT v, w, count(*) AS c_vw FROM trans GROUP BY v, w),
-        |ctx AS (SELECT v, count(*) AS c_v, count(DISTINCT w) AS n1_v FROM trans GROUP BY v),
-        |cont AS (SELECT w, count(DISTINCT v) AS n1_w FROM trans GROUP BY w),
-        |bt AS (SELECT count(*)::DOUBLE AS btypes FROM bigram),
-        |sc0 AS (
-        |  SELECT trans.doc_id,
-        |         CAST(floor(-ln((c_vw::DOUBLE - 0.75) / c_v::DOUBLE
-        |                        + (0.75 * n1_v::DOUBLE / c_v::DOUBLE)
-        |                          * (n1_w::DOUBLE / btypes))
-        |                    * 1000000.0 + 0.5) AS BIGINT) AS nll_q6
-        |  FROM trans JOIN bigram USING (v, w) JOIN ctx USING (v) JOIN cont USING (w), bt),
-        |scored AS (
-        |  SELECT doc_id,
-        |         -(floor(sum(nll_q6)::DOUBLE / 1000000.0 / count(*)::DOUBLE * 10000.0 + 0.5) / 10000.0) AS pred
-        |  FROM sc0 GROUP BY doc_id),
-        |sl AS (SELECT s.doc_id, t.lang, s.pred, t.clean_text FROM scored s JOIN t USING (doc_id)),
-        |h1 AS (SELECT lang, pred, count(*) AS c FROM sl GROUP BY 1, 2),
-        |cw AS (SELECT lang, pred,
-        |              sum(c) OVER (PARTITION BY lang ORDER BY pred) AS cum,
-        |              sum(c) OVER (PARTITION BY lang) AS tot FROM h1),
-        |thr AS (SELECT lang, min(pred) AS p_thr FROM cw
-        |        WHERE cum >= (tot + 1) // 2 GROUP BY lang),
-        |kept AS (SELECT sl.* FROM sl JOIN thr USING (lang) WHERE sl.pred >= thr.p_thr),
-        |counts AS (SELECT lang, count(*) AS c FROM kept GROUP BY lang),
-        |m AS (SELECT lang,
-        |             CAST(floor(sqrt(c::DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS a FROM counts),
-        |t1 AS (SELECT CAST(sum(a) AS BIGINT) AS w FROM m),
-        |a1 AS (SELECT lang, a, CAST((100 * a) // w AS BIGINT) AS n1 FROM m, t1),
-        |over1 AS (SELECT lang, CAST(25 AS BIGINT) AS n_alloc FROM a1 WHERE n1 > 25),
-        |rem1 AS (SELECT lang, a FROM a1 WHERE n1 <= 25),
-        |b2 AS (SELECT 100 - 25 * (SELECT count(*) FROM over1) AS b),
-        |t2 AS (SELECT CAST(sum(a) AS BIGINT) AS w FROM rem1),
-        |a2 AS (SELECT lang, CAST(LEAST((b2.b * a) // t2.w, 25) AS BIGINT) AS n_alloc
-        |       FROM rem1, t2, b2),
-        |alloc AS (SELECT lang, n_alloc FROM over1 UNION ALL SELECT lang, n_alloc FROM a2),
-        |ranked AS (
-        |  SELECT lang, doc_id,
-        |         row_number() OVER (PARTITION BY lang
-        |           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS r
-        |  FROM kept)
-        |SELECT r.lang, r.doc_id, al.n_alloc, k.pred, md5(k.clean_text) AS clean_md5
-        |FROM ranked r JOIN alloc al USING (lang) JOIN kept k ON k.doc_id = r.doc_id
-        |WHERE r.r <= al.n_alloc ORDER BY r.lang, r.doc_id""".stripMargin,
-
-    // the capping loop unrolled: round 1 allocates over all languages and
-    // caps the over-cap groups at 50 (= 200·25%); round 2 reallocates the
-    // reduced budget over the remainder (LEAST guards the general rule;
-    // convergence in 2 rounds verified at both sf scales)
-    "q_capped_mix" ->
-      """WITH counts AS (SELECT lang, count(*) AS c FROM documents GROUP BY lang),
-        |m AS (SELECT lang,
-        |             CAST(floor(sqrt(c::DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS a FROM counts),
-        |t1 AS (SELECT CAST(sum(a) AS BIGINT) AS w FROM m),
-        |a1 AS (SELECT lang, a, CAST((200 * a) // w AS BIGINT) AS n1 FROM m, t1),
-        |over1 AS (SELECT lang, CAST(50 AS BIGINT) AS n_alloc FROM a1 WHERE n1 > 50),
-        |rem1 AS (SELECT lang, a FROM a1 WHERE n1 <= 50),
-        |b2 AS (SELECT 200 - 50 * (SELECT count(*) FROM over1) AS b),
-        |t2 AS (SELECT CAST(sum(a) AS BIGINT) AS w FROM rem1),
-        |a2 AS (SELECT lang, CAST(LEAST((b2.b * a) // t2.w, 50) AS BIGINT) AS n_alloc
-        |       FROM rem1, t2, b2),
-        |alloc AS (SELECT lang, n_alloc FROM over1 UNION ALL SELECT lang, n_alloc FROM a2),
-        |ranked AS (
-        |  SELECT lang, doc_id,
-        |         row_number() OVER (PARTITION BY lang
-        |           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS r
-        |  FROM documents)
-        |SELECT r.lang, r.doc_id, al.n_alloc
-        |FROM ranked r JOIN alloc al USING (lang)
-        |WHERE r.r <= al.n_alloc ORDER BY lang, doc_id""".stripMargin,
-
-    "q_upsert" ->
-      """SELECT doc_id, text FROM (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id, 'updated-' || CAST(doc_id AS VARCHAR) AS text
-        |  FROM documents WHERE doc_id % 7 = 0)
-        |ORDER BY doc_id""".stripMargin,
-
-    // same md5 draw into the row_number index space, same exclusions
-    "q_negative_pairs" ->
-      """WITH idxd AS (
-        |  SELECT vec_id AS neg_id,
-        |         row_number() OVER (ORDER BY vec_id) - 1 AS idx
-        |  FROM embeddings),
-        |n AS (SELECT count(*) AS n FROM embeddings),
-        |cand AS (
-        |  SELECT q.vec_id AS query_id, s.slot,
-        |         ('0x' || substr(md5(CAST(q.vec_id AS VARCHAR) || ':' || CAST(s.slot AS VARCHAR)), 1, 8))::BIGINT % n.n AS idx
-        |  FROM embeddings q, range(0, 8) s(slot), n WHERE q.vec_id < 10),
-        |pos AS (
-        |  SELECT q.vec_id AS query_id, e.vec_id AS neg_id
-        |  FROM embeddings q JOIN embeddings e ON q.label = e.label
-        |  WHERE q.vec_id < 10)
-        |SELECT c.query_id, c.slot, i.neg_id
-        |FROM cand c JOIN idxd i USING (idx)
-        |WHERE i.neg_id <> c.query_id
-        |  AND NOT EXISTS (SELECT 1 FROM pos p
-        |                  WHERE p.query_id = c.query_id AND p.neg_id = i.neg_id)
-        |ORDER BY query_id, slot, neg_id""".stripMargin,
-
-    "q_stratified_sample" ->
-      """SELECT lang, count(*) AS cnt FROM documents
-        |WHERE ('0x' || substr(md5('strat:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
-        |      < CASE WHEN lang = 'en' THEN 50 ELSE 10 END
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // exact interpolated percentiles (quantile_cont == Spark percentile,
-    // the equivalence q_value_percentiles pins); min/max of identically
-    // clamped doubles are bit-exact, no rounding needed
-    "q_winsorize" ->
-      """WITH b AS (SELECT event_type, quantile_cont(value, 0.05) AS lo,
-        |                  quantile_cont(value, 0.95) AS hi
-        |           FROM events GROUP BY event_type)
-        |SELECT e.event_type, count(*) AS cnt,
-        |       min(greatest(b.lo, least(b.hi, e.value))) AS min_v,
-        |       max(greatest(b.lo, least(b.hi, e.value))) AS max_v
-        |FROM events e JOIN b USING (event_type)
-        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin,
-
-    // range-normalized exactly like normalizedZValue: integer rescale to the
-    // 16-bit code range (// == Spark's DIV on non-negative longs), then the
-    // same bit interleave; a degenerate (constant) dimension maps to code 0
-    // exactly as normalizedZValue's mx==mn branch does
-    "q_zorder_keys" ->
-      s"""WITH mm AS (SELECT min(l_orderkey) AS mno, max(l_orderkey) AS mxo,
-         |                   min(l_partkey) AS mnp, max(l_partkey) AS mxp FROM lineitem),
-         |s AS (SELECT l_orderkey, l_partkey,
-         |             CASE WHEN mxo = mno THEN 0
-         |                  ELSE ((l_orderkey - mno) * 65535) // (mxo - mno) END AS so,
-         |             CASE WHEN mxp = mnp THEN 0
-         |                  ELSE ((l_partkey - mnp) * 65535) // (mxp - mnp) END AS sp
-         |      FROM lineitem, mm)
-         |SELECT l_orderkey, l_partkey, ${operators.ZOrder.zValueSql(Seq("so", "sp"), 16)} AS z
-         |FROM s ORDER BY l_orderkey, l_partkey, z""".stripMargin,
-
-    "s4_sessionize" ->
-      s"""WITH e AS (SELECT event_id, user_id, epoch_ns(ts)//1000 AS ts_us FROM events),
-         |x AS (SELECT *, lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM e),
-         |y AS (SELECT *, CASE WHEN prev IS NULL OR ts_us - prev > $SessionGapUs THEN 1 ELSE 0 END AS nw FROM x),
-         |z AS (SELECT *, CAST(sum(nw) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-         |                                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id FROM y)
-         |SELECT user_id, session_id, min(ts_us) AS session_start,
-         |       max(ts_us) AS session_end, count(*) AS n_events
-         |FROM z GROUP BY user_id, session_id
-         |ORDER BY user_id, session_id""".stripMargin,
-
-    // epoch_ns(ts)//1000 == Spark's `ts_ns div 1000` (exact integer µs)
-    "j1_asof_click_purchase" ->
-      """WITH c AS (
-        |  SELECT event_id, user_id, epoch_ns(ts)//1000 AS ts_us
-        |  FROM events WHERE event_type = 'click'
-        |), p AS (
-        |  SELECT user_id, epoch_ns(ts)//1000 AS p_ts_us,
-        |         event_id AS p_event_id, value AS p_value
-        |  FROM events WHERE event_type = 'purchase'
-        |  QUALIFY row_number() OVER (PARTITION BY user_id, epoch_ns(ts)//1000
-        |                             ORDER BY event_id DESC) = 1
-        |)
-        |SELECT c.event_id, c.user_id, c.ts_us, p.p_event_id, p.p_ts_us, p.p_value
-        |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts_us >= p.p_ts_us
-        |ORDER BY c.event_id""".stripMargin,
-
-    "j2_range_clicks_near_error" ->
-      s"""WITH e AS (SELECT event_id, user_id, epoch_ns(ts)//1000 AS ts_us, event_type FROM events),
-         |err AS (SELECT event_id AS err_id, user_id, ts_us AS start_us FROM e WHERE event_type = 'error'),
-         |c AS (SELECT user_id, ts_us FROM e WHERE event_type = 'click')
-         |SELECT err.err_id, err.user_id, err.start_us, count(c.ts_us) AS n_clicks
-         |FROM err LEFT JOIN c ON c.user_id = err.user_id
-         |  AND c.ts_us >= err.start_us AND c.ts_us < err.start_us + $RangeWindowUs
-         |GROUP BY 1, 2, 3
-         |ORDER BY err.err_id""".stripMargin,
-
-    "q_pushdown_filtered_agg" ->
-      """SELECT CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS yr,
-        |       CAST(EXTRACT(month FROM l_shipdate) AS BIGINT) AS mo,
-        |       count(*) AS cnt,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |FROM lineitem WHERE l_returnflag = 'A'
-        |GROUP BY yr, mo ORDER BY yr, mo""".stripMargin
-  )
 }

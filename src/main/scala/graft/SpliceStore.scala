@@ -1,39 +1,24 @@
 package graft
 
-/** Gate-time-frozen oracle splice fragments (VERDICT r12 "What's wrong" #1b).
+/** Gate-time-frozen oracle splice fragments.
   *
   * Several oracles splice ENGINE-computed tables (PPMI q6 edges, the DoReMi
-  * EG trace, trained-model constants) into their DuckDB SQL as VALUES. Until
-  * round 12 those splices were built at DUMP time from `@volatile` slots —
-  * two failure windows: (a) a second read of a localCheckpointed frame
-  * between gate execution and oracle construction, and (b) a filtered
-  * `Verify` run emitting only the oracles whose queries happened to run
-  * (148/182 measured by the r12 judge).
-  *
-  * This store closes both: gate lambdas freeze their splice rows HERE, as
-  * plain strings, in the same call that executes the gate — no re-read
-  * window — and [[Verify]] persists the store to the out-dir
-  * (`oracle_splices.properties`) and pre-loads it on start, so a later
-  * filtered run still dumps a complete, reproducible `oracle_sql.json`
-  * from the last full run's frozen rows. `java.util.Properties` is the
-  * serialization: multi-line SQL round-trips through its escaping with
-  * zero parsing code on our side.
+  * EG trace, trained-model constants) into their DuckDB SQL as VALUES. Gate
+  * lambdas freeze those rows here, as plain strings, in the same call that
+  * executes the gate, so the oracle never re-reads a localCheckpointed frame
+  * between gate execution and oracle construction. The store lives in this
+  * JVM only: [[graft.oracle.OracleSql.all]] emits the dynamic oracles of the
+  * gates that ran in it.
   */
 object SpliceStore {
   private val frags = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Reserved property naming the builder code version a persisted store
-    * was frozen under; never a fragment key. */
-  private val VersionKey = "__builder_version"
 
   def put(name: String, fragment: String): Unit = { frags.put(name, fragment); () }
 
   def get(name: String): Option[String] = Option(frags.get(name))
 
   /** Drop one fragment — [[graft.Verify]] calls this for a gate whose query
-    * THREW, so a pre-loaded frozen row can never be re-emitted for a gate
-    * that demonstrably no longer produces it (ADVICE r13: stale-splice
-    * fail-open). */
+    * threw, so no oracle is emitted for a gate that produced no output. */
   def remove(name: String): Unit = { frags.remove(name); () }
 
   /** All entries whose key starts with `prefix`, with the prefix stripped. */
@@ -47,40 +32,4 @@ object SpliceStore {
 
   /** Test seam: drop everything (sessions in one JVM share the store). */
   private[graft] def clear(): Unit = frags.clear()
-
-  def saveAll(file: java.nio.file.Path): Unit = saveAll(file, version = "")
-
-  /** Persist with the builder-code `version` stamped in; a later
-    * [[loadAll]] with a DIFFERENT version discards the whole file — a
-    * changed oracle builder invalidates its frozen rows instead of
-    * silently re-emitting them (ADVICE r13). Empty version = unversioned
-    * (accepted by any load, the pre-r14 behavior). */
-  def saveAll(file: java.nio.file.Path, version: String): Unit = {
-    val p = new java.util.Properties()
-    frags.forEach((k, v) => { p.setProperty(k, v); () })
-    if (version.nonEmpty) p.setProperty(VersionKey, version)
-    val w = java.nio.file.Files.newBufferedWriter(file)
-    try p.store(w, "graft oracle splices - gate-time frozen rows") finally w.close()
-  }
-
-  def loadAll(file: java.nio.file.Path): Unit = { loadAll(file, version = ""); () }
-
-  /** Load a persisted store; returns false (loading NOTHING) when the file
-    * was frozen under a different non-matching builder version. */
-  def loadAll(file: java.nio.file.Path, version: String): Boolean =
-    if (!java.nio.file.Files.exists(file)) false
-    else {
-      val p = new java.util.Properties()
-      val r = java.nio.file.Files.newBufferedReader(file)
-      try p.load(r) finally r.close()
-      val stored = Option(p.getProperty(VersionKey)).getOrElse("")
-      // strict: an unversioned (pre-r14) file is ALSO rejected under a
-      // versioned load — it predates the current builder by definition
-      if (version.nonEmpty && stored != version) false
-      else {
-        p.forEach((k, v) =>
-          { if (k.toString != VersionKey) frags.put(k.toString, v.toString); () })
-        true
-      }
-    }
 }

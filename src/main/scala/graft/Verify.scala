@@ -15,95 +15,31 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Model/generator exports the oracles read by absolute path go UNDER
-    // the out-dir (VERDICT r15 #4): the dumped oracle_sql.json must replay
-    // after this JVM exits — pid-scoped /tmp paths died with the process,
-    // so `tools/check_oracle.py` against a committed dump read 9 ORACLE-ERR.
-    // They land as "model_*"-prefixed PLAIN FILES directly in the out-dir
-    // (VERDICT r16 #8): the driver's correctness scan rows every TOP-LEVEL
-    // DIRECTORY, so the old _models/ dir read as a phantom no-oracle row;
-    // files are invisible to that scan. artifacts.json (below) is the
-    // handshake manifest of these non-query artifacts.
+    // Model/generator exports the oracles read by absolute path go under
+    // the out-dir, so the dumped oracle_sql.json replays after this JVM
+    // exits. They land as "model_*"-prefixed plain files directly in the
+    // out-dir: the driver's correctness scan treats every top-level
+    // directory as a query output, and files are invisible to it.
+    // artifacts.json (below) lists these non-query artifacts.
     SparkEntry.modelExportDir = Some(outDir)
-    // drop the pre-r17 directory layout so a reused out-dir stops
-    // producing the phantom row
+    // drop the older _models/ directory layout: a directory reads as a
+    // query output without an oracle
     graft.tools.CorpusMaintenance.deleteRecursively(s"$outDir/_models")
     // and sweep any `*.stage` staging directory a crashed writeModelParquet
-    // left behind (ADVICE r17) — same phantom-row failure mode
+    // left behind, for the same reason
     Option(new java.io.File(outDir).listFiles).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.endsWith(".stage"))
       .foreach(f => graft.tools.CorpusMaintenance.deleteRecursively(f.getPath))
     // optional comma-separated filter for local iteration (unset in the
     // driver's per-round run → full dump)
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(_.split(",").map(_.trim).toSet)
-    // Pre-load frozen oracle splices from a prior run in this out-dir, so
-    // a filtered run still dumps a complete oracle_sql.json; gates that DO
-    // run overwrite their entries with this run's gate-time rows
-    // (VERDICT r12 #1b). A plain file, so the driver's per-query dir scan
-    // never mistakes it for a query output. The store is keyed to a
-    // BUILD-WIDE fingerprint — a digest of every .class under graft/ in
-    // this build's output (ADVICE r14: splice contents are engine OUTPUTS
-    // that depend on TextOps/Similarity/GraphOps/…, not just on
-    // SparkEntry; hashing one class file left a fail-open where a
-    // behavior change in another compilation unit silently re-emitted
-    // stale frozen rows). Any recompile of any graft class invalidates
-    // the frozen rows instead of re-emitting them.
-    val spliceFile = Paths.get(s"$outDir/oracle_splices.properties")
-    val builderVersion = try {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      def digest(relPath: String, bytes: Array[Byte]): Unit = {
-        md.update(relPath.getBytes("UTF-8")); md.update(bytes)
-      }
-      val loc = getClass.getProtectionDomain.getCodeSource.getLocation.toURI
-      val root = Paths.get(loc)
-      // ALL classes in this build's output — not just graft/* (the
-      // graftbridge classes live under org/apache/spark and are part of
-      // the same build; filtering them out would reopen the stale-splice
-      // fail-open for that compilation unit)
-      if (Files.isDirectory(root)) {
-        val stream = Files.walk(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          stream.iterator().asScala
-            .filter(p => p.toString.endsWith(".class"))
-            .map(p => root.relativize(p).toString.replace('\\', '/'))
-            .toSeq.sorted
-            .foreach(rel => digest(rel, Files.readAllBytes(root.resolve(rel))))
-        } finally stream.close()
-      } else { // packaged jar
-        val zf = new java.util.zip.ZipFile(root.toFile)
-        try {
-          import scala.jdk.CollectionConverters._
-          zf.entries().asScala.map(_.getName)
-            .filter(_.endsWith(".class"))
-            .toSeq.sorted.foreach { n =>
-              val is = zf.getInputStream(zf.getEntry(n))
-              try digest(n, is.readAllBytes()) finally is.close()
-            }
-        } finally zf.close()
-      }
-      md.digest().map("%02x".format(_)).mkString
-    } catch { case scala.util.control.NonFatal(_) =>
-      // fail CLOSED (ADVICE r15): an empty version reads as "unversioned"
-      // and accepts ANY persisted store — exactly the stale-splice
-      // fail-open the fingerprint exists to close. A unique sentinel can
-      // never match a stored stamp, so an unfingerprintable build discards
-      // the store (and stamps its save un-reloadably) instead.
-      System.err.println("[verify] build fingerprint failed - frozen splices disabled this run")
-      "unfingerprinted-" + java.util.UUID.randomUUID()
-    }
-    if (!SpliceStore.loadAll(spliceFile, builderVersion) &&
-        java.nio.file.Files.exists(spliceFile))
-      System.err.println(
-        "[verify] discarding frozen splices from a different builder version")
     def deleteRec(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles.foreach(deleteRec)
       f.delete(); ()
     }
-    // Guard against stale-output contamination (ADVICE r8): when doing a
-    // full dump, first drop any leftover per-query dirs from prior runs
-    // whose names are no longer in `queries` — otherwise the driver's
-    // rows-only sweep reads them as if they were this run's output.
+    // A full dump first drops any leftover per-query dir from a prior run
+    // whose name is no longer in `queries`: the driver's rows-only sweep
+    // would read it as this run's output.
     if (only.isEmpty) {
       val live = SparkEntry.queries.keySet
       Option(new java.io.File(outDir).listFiles).getOrElse(Array.empty)
@@ -113,9 +49,9 @@ object Verify {
           !live.contains(f.getName))
         .foreach { f => System.err.println(s"[verify] dropping stale ${f.getName}"); deleteRec(f) }
     }
-    // fragment keys each gate freezes OUTSIDE the `sql:<name>` convention —
-    // dropped alongside it when the gate throws, so a pre-loaded frozen row
-    // is never re-emitted for a gate that no longer produces it
+    // fragment keys each gate freezes outside the `sql:<name>` convention —
+    // dropped alongside it when the gate throws, so no oracle is emitted
+    // for a gate that produced no output
     val gateFragments = Map(
       "x14_word_centrality" -> Seq("x14_edges"),
       "q_doremi_mix" -> Seq("doremi_losses", "doremi_trace"),
@@ -125,14 +61,14 @@ object Verify {
       .foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
-        // Lint (VERDICT r14 #1c): a splice-backed gate's output schema
-        // must be double-free — its hash gate must never depend on
-        // version-specific IEEE formatting/parsing in the verifier.
+        // Lint: a splice-backed gate's output schema must be double-free —
+        // its hash gate must never depend on version-specific IEEE
+        // formatting/parsing in the verifier.
         if (gateFragments.contains(name))
           df.schema.fields.foreach { f =>
             require(f.dataType != org.apache.spark.sql.types.DoubleType &&
                 f.dataType != org.apache.spark.sql.types.FloatType,
-              s"splice-backed gate $name emits IEEE column ${f.name} (VERDICT r14 #1)")
+              s"splice-backed gate $name emits IEEE column ${f.name}")
           }
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
@@ -140,14 +76,14 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a failed query must yield MISSING in the driver's compare, never
         // a stale parquet from an earlier run of the same name — and its
-        // frozen splices must go with it (ADVICE r13 fail-open)
+        // frozen splices must go with it
         (gateFragments.getOrElse(name, Nil) :+ s"sql:$name")
           .foreach(SpliceStore.remove)
         val d = new java.io.File(s"$outDir/$name")
         if (d.exists) deleteRec(d)
       }
     }
-    // Lint (VERDICT r14 #1c): no IEEE literal inside any frozen VALUES
+    // Lint: no IEEE literal inside any frozen VALUES
     // splice — a DOUBLE cast/literal is the one thing a
     // differently-versioned DuckDB can parse 1 ulp differently. A tainted
     // gate degrades to the driver's rows-only check (its dynamic oracle is
@@ -162,7 +98,7 @@ object Verify {
         ieeeCast.matcher(v).find()))
       if (tainted) {
         System.err.println(
-          s"[verify] LINT: $gate froze an IEEE-bearing VALUES splice — dropping its oracle (VERDICT r14 #1)")
+          s"[verify] LINT: $gate froze an IEEE-bearing VALUES splice — dropping its oracle")
         (keys :+ s"sql:$gate").foreach(SpliceStore.remove)
       }
     }
@@ -178,19 +114,17 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val oracles = SparkEntry.oracleSql
+    val oracles = graft.oracle.OracleSql.all
     def dump(m: Map[String, String]): Unit = {
       val json = m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
       ()
     }
     dump(oracles)
-    // Lint (VERDICT r15 #1): no oracle may type an output column as
-    // HUGEINT/DECIMAL under DuckDB. Spark writes int64; a type-aware
-    // driver canonicalization (Arrow decimal128 vs int64) hash-mismatches
-    // on type alone while values compare equal — the five-round
-    // q_doremi_mix/x14 signature (rows ✓ schema ✓ hash ✗, immune to every
-    // math-side fix). DuckDB silently widens BIGINT sum()/floor-div
+    // Lint: no oracle may type an output column as HUGEINT/DECIMAL under
+    // DuckDB. Spark writes int64; a type-aware driver canonicalization
+    // (Arrow decimal128 vs int64) hash-mismatches on type alone while
+    // values compare equal. DuckDB silently widens BIGINT sum()/floor-div
     // chains, so only a binder-side probe catches the class; a flagged
     // gate degrades to the driver's rows-only check (same policy as the
     // IEEE-splice lint) rather than shipping a flake-prone hash gate.
@@ -198,13 +132,12 @@ object Verify {
     if (tainted.nonEmpty) {
       tainted.foreach { case (gate, col) =>
         System.err.println(
-          s"[verify] LINT: $gate oracle output types as $col under DuckDB — dropping its oracle (VERDICT r15 #1)")
+          s"[verify] LINT: $gate oracle output types as $col under DuckDB — dropping its oracle")
       }
-      tainted.keys.foreach(g => SpliceStore.remove(s"sql:$g"))
       dump(oracles -- tainted.keys)
     }
-    // Handshake manifest of the non-query artifacts in this out-dir
-    // (VERDICT r16 #8): the model exports the dumped oracles read by
+    // Handshake manifest of the non-query artifacts in this out-dir:
+    // the model exports the dumped oracles read by
     // absolute path, listed so a consumer never has to infer them from a
     // directory scan — every DIRECTORY in the out-dir is now a gating
     // query, full stop.
@@ -214,17 +147,13 @@ object Verify {
       .map(_.getName).sorted
     Files.writeString(Paths.get(s"$outDir/artifacts.json"),
       modelFiles.map(q).mkString("{\"model_exports\": [", ", ", "]}"))
-    // oracleSql just pushed every live dynamic oracle into the store —
-    // persist it for the next (possibly filtered) run, stamped with this
-    // builder's version
-    SpliceStore.saveAll(spliceFile, builderVersion)
     spark.stop()
   }
 }
 
 /** Dump-time DuckDB output-type probe behind the Verify lint above. The
   * only sound check for the HUGEINT class is the DuckDB binder itself
-  * (static SQL inspection cannot type-propagate: the r15 red `w AS w_q6`
+  * (static SQL inspection cannot type-propagate: an oracle's `w AS w_q6`
   * carries no arithmetic in its final projection), so this shells out to
   * the verification environment's python3+duckdb — present wherever the
   * driver's own DuckDB compare runs — and DESCRIBEs every dumped oracle

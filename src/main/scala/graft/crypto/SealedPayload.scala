@@ -7,18 +7,14 @@ import javax.crypto.spec.{GCMParameterSpec, IvParameterSpec, SecretKeySpec}
 
 /** Supported AEAD schemes — reference:
   * confidentialstorm/enclave/.../crypto/EncryptionScheme.java:8-75. All use
-  * 256-bit keys and 12-byte nonces; GCM adds a 128-bit tag. `None` is a
-  * benchmark passthrough (plaintext in the ciphertext slot, zero nonce). */
-sealed abstract class Scheme(val cipherAlgorithm: String, val keyAlgorithm: String) {
-  def encryptionEnabled: Boolean = cipherAlgorithm != null
-}
+  * 256-bit keys and 12-byte nonces; GCM adds a 128-bit tag. */
+sealed abstract class Scheme(val cipherAlgorithm: String, val keyAlgorithm: String)
 object Scheme {
   case object ChaCha20Poly1305 extends Scheme("ChaCha20-Poly1305", "ChaCha20")
   case object Aes256Gcm extends Scheme("AES/GCM/NoPadding", "AES")
-  case object None extends Scheme(null, null)
 
   /** The scheme a pipeline names: "chacha20" or "aes-gcm". Any other name
-    * throws, so a misspelt name can never seal plaintext as [[None]]. */
+    * throws, so a misspelt name never selects an unintended scheme. */
   def parse(name: String): Scheme = name match {
     case "chacha20" => ChaCha20Poly1305
     case "aes-gcm" => Aes256Gcm
@@ -48,7 +44,6 @@ final class SealedPayload(keyBytes: Array[Byte], val scheme: Scheme = Scheme.Cha
     val spec = scheme match {
       case Scheme.Aes256Gcm => new GCMParameterSpec(GcmTagLengthBits, nonce)
       case Scheme.ChaCha20Poly1305 => new IvParameterSpec(nonce)
-      case Scheme.None => throw new IllegalStateException("no cipher for NONE scheme")
     }
     c.init(mode, new SecretKeySpec(key, scheme.keyAlgorithm), spec)
     if (aad.nonEmpty) c.updateAAD(aad)
@@ -58,8 +53,6 @@ final class SealedPayload(keyBytes: Array[Byte], val scheme: Scheme = Scheme.Cha
   /** Seals plaintext with a fresh random nonce and the canonical AAD bytes. */
   def seal(plaintext: Array[Byte], aad: Aad): EncryptedValue = {
     val aadBytes = aad.toBytes
-    if (!scheme.encryptionEnabled)
-      return EncryptedValue(aadBytes, new Array[Byte](EncryptedValue.NonceLength), plaintext)
     val nonce = new Array[Byte](EncryptedValue.NonceLength)
     rnd.nextBytes(nonce)
     val ct = cipher(Cipher.ENCRYPT_MODE, nonce, aadBytes).doFinal(plaintext)
@@ -69,14 +62,12 @@ final class SealedPayload(keyBytes: Array[Byte], val scheme: Scheme = Scheme.Cha
   /** Seals with a caller-supplied nonce — for deterministic tests only. */
   def sealWithNonce(plaintext: Array[Byte], aad: Aad, nonce: Array[Byte]): EncryptedValue = {
     val aadBytes = aad.toBytes
-    if (!scheme.encryptionEnabled) return EncryptedValue(aadBytes, nonce, plaintext)
     EncryptedValue(aadBytes, nonce, cipher(Cipher.ENCRYPT_MODE, nonce, aadBytes).doFinal(plaintext))
   }
 
   /** Unseals; throws `AEADBadTagException` (wrapped in SecurityException) on
     * any AAD/ciphertext tamper, mirroring the reference's failure mode. */
   def unseal(sealedValue: EncryptedValue): Array[Byte] = {
-    if (!scheme.encryptionEnabled) return sealedValue.ciphertext
     try cipher(Cipher.DECRYPT_MODE, sealedValue.nonce, sealedValue.associatedData).doFinal(sealedValue.ciphertext)
     catch {
       case e: java.security.GeneralSecurityException =>

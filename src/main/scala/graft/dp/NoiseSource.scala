@@ -93,7 +93,4 @@ object Stats {
     require(p > 0.0 && p < 1.0, s"p must lie in (0,1); got $p")
     stdNormal.inverseCumulativeProbability(p)
   }
-
-  /** Φ(x): standard normal CDF. */
-  def normalCdf(x: Double): Double = stdNormal.cumulativeProbability(x)
 }

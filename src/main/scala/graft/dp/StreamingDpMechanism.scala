@@ -190,17 +190,10 @@ final class DpKeyState(
     * every release goes to `emit` as (epoch, max(0, round(sum))). */
   def appear(epoch: Int, prevCounts: Iterable[(Int, Long)], deltaV: Double,
       emit: DpKeyState.Emit = DpKeyState.Silent): Unit =
-    appearWith(epoch, emit)(processEpochPrevCounts(epoch, prevCounts, deltaV, appeared = true))
-
-  /** [[appear]] with the window's user identities (see [[processEpoch]]). */
-  def appearUsers(epoch: Int, users: Iterable[String], deltaV: Double,
-      emit: DpKeyState.Emit = DpKeyState.Silent): Unit =
-    appearWith(epoch, emit)(processEpoch(epoch, users, deltaV, appeared = true))
-
-  private def appearWith(epoch: Int, emit: DpKeyState.Emit)(step: => Option[Double]): Unit =
     if (epoch > lastEpochValue && epoch < params.maxTimeSteps) {
       fireDue(epoch, emit)
-      step.foreach(s => emit(epoch, DpKeyState.releasedCount(s)))
+      processEpochPrevCounts(epoch, prevCounts, deltaV, appeared = true)
+        .foreach(s => emit(epoch, DpKeyState.releasedCount(s)))
     }
 
   /** Fires every pending Algorithm-3 prediction before epoch `until` at its
@@ -332,8 +325,6 @@ final class StreamingDpMechanism(
   private val states = mutable.HashMap.empty[String, DpKeyState]
   private val staging = mutable.HashMap.empty[String, (Double, mutable.HashSet[String])]
   private var timeStep = 0
-
-  def currentTimeStep: Int = timeStep
 
   private def stateFor(key: String): DpKeyState =
     states.getOrElseUpdate(key, new DpKeyState(

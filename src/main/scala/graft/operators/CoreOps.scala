@@ -451,17 +451,6 @@ object CoreOps {
     df.withColumn("split", assign)
   }
 
-  /** A2 — per-(key, epoch) pre-aggregation feeding the DP mechanism:
-    * ΔV and the exact distinct-user count. Spark's partial/final hash
-    * aggregate replaces the reference's lock-guarded staging buffers
-    * (StreamingDPMechanism.java:276-283). Exact distinct (not HLL) is required
-    * for the sensitivity-1 guarantee (A6, StreamingDPMechanism.java:378-390). */
-  def preAggregate(df: DataFrame, keyCol: String, epochCol: String, userCol: String, valueCol: String): DataFrame =
-    df.groupBy(col(keyCol).as("key"), col(epochCol).as("epoch"))
-      .agg(
-        sum(col(valueCol)).as("delta_v"),
-        collect_set(col(userCol)).as("users"))
-
   /** Approximation mode for the unique-user statistic (A6): HLL-based
     * `approx_count_distinct`. ONLY for monitoring/estimation — the DP
     * sensitivity-1 guarantee of Algorithm 1 requires EXACT per-round user
@@ -487,8 +476,9 @@ object CoreOps {
     * Zipf-hot key spreads across partitions by user; the middle aggregate
     * ships map-side partials at (key, epoch, prev); the output is
     * hash-partitioned by `key` into the session's shuffle partitions, ready
-    * for [[DpHistogram]] to group on without another exchange. Replaces the
-    * collect_set design whose hot-key row held every user string.
+    * for [[DpHistogram]] to group on without another exchange. A
+    * collect_set of user identities would instead put every user string of
+    * a hot key into one row.
     *
     * Precondition: the head windows need the raw rows, so this operator
     * ships every `(key, epoch, user, value)` input row across its
@@ -530,20 +520,6 @@ object CoreOps {
       .agg(sum(col("v_part")).as("delta_v"),
         collect_list(struct(col("prev"), col("n"))).as("prev_counts"))
   }
-
-  /** Skew-safe variant of [[preAggregate]] for Zipf-hot keys at scale: stage 1
-    * dedups at (key, epoch, user) granularity — that shuffle spreads a hot
-    * key across partitions proportionally to its distinct users instead of
-    * funneling every raw record into one reducer — and stage 2 collects the
-    * already-deduped users per (key, epoch). Output is identical to
-    * [[preAggregate]]; only the shuffle shape changes. */
-  def preAggregateSkewSafe(df: DataFrame, keyCol: String, epochCol: String, userCol: String, valueCol: String): DataFrame =
-    df.groupBy(col(keyCol).as("key"), col(epochCol).as("epoch"), col(userCol).as("user"))
-      .agg(sum(col(valueCol)).as("user_sum"))
-      .groupBy(col("key"), col("epoch"))
-      .agg(
-        sum(col("user_sum")).as("delta_v"),
-        collect_set(col("user")).as("users"))
 
   /** T1 — histogram ordering: count desc, key asc tiebreak, negatives clamped
     * (StreamingDPMechanism.java:517-531). */

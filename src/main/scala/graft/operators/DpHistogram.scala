@@ -61,23 +61,6 @@ object DpHistogram {
     }.toDF("key", "count"))
   }
 
-  /** [[run]] over the identity-carrying pre-aggregation
-    * ([[CoreOps.preAggregate]]: (key, epoch, delta_v, users)): per-key state
-    * dedups user IDENTITIES against the round's observed set — O(round
-    * users) state, the design [[CoreOps.preAggregatePrevEpoch]] replaced as
-    * the scale default because a Zipf-hot key's row carries every user
-    * string. Kept as the small-data fast path (one aggregation, no lag
-    * window) and as the A/B comparator the bench tracks; mechanism
-    * semantics and released values are identical. */
-  def runUsers(spark: SparkSession, preAgg: DataFrame, params: DpParams, runSeed: Long = 42L): DataFrame = {
-    import spark.implicits._
-    val userRows = preAgg.select(col("key").cast("string"), col("epoch").cast("int"),
-      col("delta_v").cast("double"), col("users").cast("array<string>"))
-    releaseOrder(foldByKey[(String, Int, Double, Seq[String]), (String, Long)](userRows) { (key, rows) =>
-      released(key, DpKeyState.replay(params, runSeed, key, rows)(_._2)((st, r) => st.appearUsers(r._2, r._4, r._3)))
-    }.toDF("key", "count"))
-  }
-
   /** Per-epoch released timeline: (epoch, key, count) for every epoch at which
     * the key's released sum changes — the batch replay of what the streaming
     * pipeline emits per trigger. */

@@ -239,7 +239,7 @@ object Similarity {
     * seed overwrites the slot — the key turns that into a detectable miss
     * instead of a silently wrong VALUES table). Training is deterministic
     * given the corpus, so these ARE the model for the current dataset;
-    * [[graft.SparkEntry.oracleSql]] exports them into the DuckDB oracle as
+    * [[graft.oracle.OracleSql.all]] exports them into the DuckDB oracle as
     * a VALUES table (the query run always precedes the oracle dump in
     * [[graft.Verify]], and Verify processes one dataset per JVM). Only the
     * trained parameters cross the boundary — assignment, probing, and

@@ -3,7 +3,7 @@ package graft.crypto
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Ports the reference's crypto test ideas: seal→unseal roundtrip under both
-  * AEAD schemes + NONE, AAD tamper detection
+  * AEAD schemes, AAD tamper detection
   * (SealedPayloadSerializationTest.java), canonical AAD encode/parse
   * (AADUtilsTest.java, JsonUtilsTest.java), defensive copies
   * (EncryptedValueTest.java), and the replay window suite
@@ -14,7 +14,7 @@ class CryptoSpec extends AnyFunSuite {
   private val aad = Aad(source = Some("split"), destination = Some("bounding"),
     producerId = Some("task-1"), seq = Some(7L), epoch = Some(3L), attrs = Map("user_id" -> "u42"))
 
-  for (scheme <- Seq(Scheme.ChaCha20Poly1305, Scheme.Aes256Gcm, Scheme.None)) {
+  for (scheme <- Seq(Scheme.ChaCha20Poly1305, Scheme.Aes256Gcm)) {
     test(s"$scheme: seal -> unseal roundtrips strings, longs, doubles") {
       val sp = new SealedPayload(key, scheme)
       assert(sp.unsealString(sp.sealString("hello storm", aad)) === "hello storm")
@@ -28,7 +28,7 @@ class CryptoSpec extends AnyFunSuite {
     assert(Scheme.parse("aes-gcm") === Scheme.Aes256Gcm)
     for (name <- Seq("aes_gcm", "AES-GCM", "none", ""))
       assertThrows[IllegalArgumentException](Scheme.parse(name))
-    // a misspelt codec scheme used to seal plaintext as Scheme.None
+    // a misspelt codec scheme fails closed too
     assertThrows[IllegalArgumentException](
       new graft.operators.SealedColumns.Codec(key, "aes_gcm"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkEntry, SpliceStore, Tables}
+import graft.oracle.OracleSql
 import graft.dp.{DpParams, NoiseSource, StreamingDpMechanism}
 
 /** Spark-level operator tests: pins the distributed operators against
@@ -47,21 +48,27 @@ class OperatorsSpec extends AnyFunSuite {
     assert(distributed === single)
   }
 
-  test("runUsers (identity-state A/B path) releases exactly what run releases") {
+  test("preAggregatePrevEpoch + run releases what StreamingDpMechanism does") {
     val events = Tables.events(spark, sfDir)
       .select(col("event_type").as("key"), dayofmonth(col("ts")).cast("int").as("epoch"),
         col("user_id").cast("string").as("user_id"), col("value"))
-    // zero-noise + seeded-noise with gate: releases AND round resets exercised
+    val rows = events.collect().map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getDouble(3)))
+    // zero-noise + seeded-noise with gate: releases AND round resets exercised;
+    // A2 counts new users from prev-epoch histograms, the single-node
+    // mechanism by deduplicating user identities
     for (params <- Seq(
         DpParams.zeroNoise(32, mu = 40),
         DpParams(5.0, 10.0, graft.dp.Stats.inverseNormalCdf(1 - 1e-4), 32, 5, 50))) {
-      val viaPrev = DpHistogram.run(spark,
+      val distributed = DpHistogram.run(spark,
         CoreOps.preAggregatePrevEpoch(events.toDF(), "key", "epoch", "user_id", "value"), params, 7L)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      val viaUsers = DpHistogram.runUsers(spark,
-        CoreOps.preAggregate(events.toDF(), "key", "epoch", "user_id", "value"), params, 7L)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      assert(viaPrev === viaUsers)
+      val mech = new StreamingDpMechanism(params,
+        (k, p) => NoiseSource.seeded(NoiseSource.seedFor(7L, k, p)))
+      for (epoch <- 0 until 32) {
+        rows.filter(_._2 == epoch).foreach { case (k, _, u, v) => mech.addContribution(u, k, v) }
+        mech.snapshot()
+      }
+      assert(distributed === mech.produceHistogram())
     }
   }
 
@@ -691,8 +698,8 @@ class OperatorsSpec extends AnyFunSuite {
     val events = graft.Tables.events(spark, sfDir)
       .select(col("event_type").as("k"), dayofmonth(col("ts")).cast("long").as("e"),
         col("user_id").cast("string").as("u"), col("value").as("v"))
-    val exact = CoreOps.preAggregate(events, "k", "e", "u", "v")
-      .select(col("key"), col("epoch"), size(col("users")).cast("long").as("exact_users"))
+    val exact = events.groupBy(col("k").as("key"), col("e").as("epoch"))
+      .agg(countDistinct(col("u")).as("exact_users"))
     val approx = CoreOps.preAggregateApproxUsers(events, "k", "e", "u", "v")
       .select(col("key"), col("epoch"), col("approx_users"))
     val joined = exact.join(approx, Seq("key", "epoch")).collect()
@@ -1870,7 +1877,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(fr > sr, s"fresh rebuild must out-recall the stale frozen model on drifted data: $rows")
     assert(fh === (fr * fe).round && sh === (sr * se).round)
     // the oracle is built at gate time and durable (no dump-time slot read)
-    assert(SparkEntry.oracleSql("q_reduced_index_staleness").contains("maintained_stale"))
+    assert(OracleSql.all("q_reduced_index_staleness").contains("maintained_stale"))
   }
 
   test("incrementalDedup canonicalize: an ingest-time punct/case variant dedups only under canonical shingles") {
@@ -1899,7 +1906,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(fe === se && fe > 0, s"both arms must score the same query set: $rows")
     assert(fr > sr, s"fresh rebuild must out-recall the stale frozen codebooks on drifted data: $rows")
     assert(fh === (fr * fe).round && sh === (sr * se).round)
-    assert(SparkEntry.oracleSql("q_pq_index_staleness").contains("maintained_stale"))
+    assert(OracleSql.all("q_pq_index_staleness").contains("maintained_stale"))
   }
 
   test("q_index_rebuild_policy: the rebuild decision composes both staleness measurements exactly") {
@@ -1915,64 +1922,41 @@ class OperatorsSpec extends AnyFunSuite {
       assert(rebuild === (gap * 10 >= expected), s"$fam decision mismatches its own gap")
       assert(sr === stale.toDouble / expected && fr === freshH.toDouble / expected)
     }
-    assert(SparkEntry.oracleSql("q_index_rebuild_policy").contains("rebuild"),
+    assert(OracleSql.all("q_index_rebuild_policy").contains("rebuild"),
       "the policy gate must freeze its composed oracle")
   }
 
-  test("gate-time splice freeze: x14/doremi oracles come from frozen rows and survive a store round-trip") {
+  test("gate-time splice freeze: x14/doremi oracles come from frozen rows") {
     SpliceStore.clear()
-    assert(!SparkEntry.oracleSql.contains("q_doremi_mix"),
+    assert(!OracleSql.all.contains("q_doremi_mix"),
       "doremi oracle must be absent before its gate has frozen a splice")
-    assert(!SparkEntry.oracleSql.contains("x14_word_centrality"))
+    assert(!OracleSql.all.contains("x14_word_centrality"))
     // running the gate lambdas freezes the splice rows at GATE time — no
-    // dump-time re-read window (VERDICT r12 #1b)
+    // dump-time re-read of a checkpointed frame
     SparkEntry.queries("q_doremi_mix")(spark, sfDir).collect()
     SparkEntry.queries("x14_word_centrality")(spark, sfDir).collect()
-    val sql = SparkEntry.oracleSql
+    val sql = OracleSql.all
     val eg = sql("q_doremi_mix")
     assert(eg.contains("engloss(src, loss_q6) AS (VALUES"),
-      "doremi oracle must splice the ENGINE's per-source losses (the r12 residual live ln)")
+      "doremi oracle must splice the ENGINE's per-source losses, never a live ln")
     assert(eg.contains("abs(e.loss_q6 - d.loss_q6) > 1"),
       "spliced losses must fail closed against DuckDB's own recomputation within +-1 q6")
     assert(eg.contains("egtrace(round, src, excess_q6, u) AS (VALUES"),
-      "doremi oracle must splice the POST-FLOOR BIGINT weights, never IEEE factors (VERDICT r14 #1)")
+      "doremi oracle must splice the POST-FLOOR BIGINT weights, never IEEE factors")
     assert(eg.contains("exp(0.5 * f.excess_q6 / 1000000.0)") && eg.contains("abs(f.u - CAST(floor"),
       "spliced u weights must fail closed against DuckDB's own floor(w*exp(.)+0.5) within +-1")
     assert(!eg.contains("AS DOUBLE"), "the doremi oracle must be double-free end-to-end")
     assert(eg.contains("chk.bad = 0"))
     assert(sql("x14_word_centrality").contains("ppmi_e(v, w, m) AS (VALUES"))
-    // durability: save -> clear -> load reproduces both oracles byte-for-byte
-    // (the filtered-Verify-run path that used to emit 148/182 oracles)
-    val f = java.nio.file.Files.createTempFile("graft_splices", ".properties")
-    SpliceStore.saveAll(f)
-    SpliceStore.clear()
-    assert(!SparkEntry.oracleSql.contains("q_doremi_mix"))
-    SpliceStore.loadAll(f)
-    val sql2 = SparkEntry.oracleSql
-    assert(sql2("q_doremi_mix") === eg)
-    assert(sql2("x14_word_centrality") === sql("x14_word_centrality"))
-    // version keying (ADVICE r13 fail-open): a store frozen under a
-    // DIFFERENT builder version loads NOTHING — a changed oracle builder
-    // invalidates its frozen rows instead of silently re-emitting them —
-    // and a failed gate's fragments are individually removable (Verify's
-    // gate-throw path)
-    val f2 = java.nio.file.Files.createTempFile("graft_splices_v", ".properties")
-    SpliceStore.saveAll(f2, "builder-A")
-    SpliceStore.clear()
-    assert(!SpliceStore.loadAll(f2, "builder-B"), "version mismatch must reject the file")
-    assert(!SparkEntry.oracleSql.contains("q_doremi_mix"))
-    assert(SpliceStore.loadAll(f2, "builder-A"), "matching version must load")
-    assert(SparkEntry.oracleSql("q_doremi_mix") === eg)
-    // the failed-gate removal is the FULL set Verify drops: the raw
-    // fragments AND the persisted `sql:` form (the backfill path would
-    // re-emit the latter on its own)
+    // the failed-gate removal is the full set Verify drops: the raw
+    // fragments and the gate's `sql:` form
+    val frozen = Seq("doremi_losses", "doremi_trace").map(k => k -> SpliceStore.get(k).get)
     Seq("doremi_losses", "doremi_trace", "sql:q_doremi_mix")
       .foreach(SpliceStore.remove)
-    assert(!SparkEntry.oracleSql.contains("q_doremi_mix"),
+    assert(!OracleSql.all.contains("q_doremi_mix"),
       "a removed gate's oracle must disappear, not re-emit a stale one")
-    SpliceStore.loadAll(f2, "builder-A") // restore for later tests
-    java.nio.file.Files.delete(f2)
-    java.nio.file.Files.delete(f)
+    frozen.foreach { case (k, v) => SpliceStore.put(k, v) } // restore for later tests
+    assert(OracleSql.all("q_doremi_mix") === eg)
   }
 
   test("extractHtmlText: elements, tags, entities, whitespace — in the contract order") {
@@ -2782,7 +2766,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("every declared query runs and every oracle name has a query") {
     val qs = SparkEntry.queries
-    SparkEntry.oracleSql.keys.foreach(k => assert(qs.contains(k), s"oracle $k has no query"))
+    OracleSql.all.keys.foreach(k => assert(qs.contains(k), s"oracle $k has no query"))
     // smoke the flagship
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -20,8 +20,7 @@ class BenchReportSpec extends AnyFunSuite with Matchers {
   // A suite shaped like the real one: ~90 entries with realistic name
   // lengths, a handful of headline workloads, one failure.
   private val headline = Seq(
-    "synthetic_dp_t20", "synthetic_dp_t20_identity_state",
-    "utility_t100_reduced", "utility_t1000_reduced",
+    "synthetic_dp_t20", "utility_t100_reduced", "utility_t1000_reduced",
     "eager_dp_tws_timers_t20", "eager_dp_lazy_t20",
     "colocated_join_bucket_write", "colocated_join_plain", "colocated_join_bucketed",
     "skew_join_aqe_off", "skew_join_aqe_on",
