@@ -90,13 +90,11 @@ object Bench {
     // same interval as the wall time it reports
     var bodyCpu = -1.0
 
-    /** Run `body` under the entry's job group (for profiler attribution)
-      * and return its wall seconds; failures are surfaced on stderr, never
-      * silently -1'd away. */
+    /** Run `body` as the profiler's entry `name` and return its wall
+      * seconds; failures are surfaced on stderr, never silently -1'd away. */
     def timeBody(name: String)(body: => Unit): Double = {
-      spark.sparkContext.setJobGroup(name, name, interruptOnCancel = false)
       val c0 = processCpuSec()
-      val t =
+      val t = QueryProfiler.inEntry(spark.sparkContext, name) {
         try {
           val t0 = System.nanoTime()
           body
@@ -105,7 +103,8 @@ object Bench {
           case NonFatal(e) =>
             System.err.println(s"[bench] query '$name' FAILED: ${e.getClass.getName}: ${e.getMessage}")
             -1.0
-        } finally spark.sparkContext.clearJobGroup()
+        }
+      }
       bodyCpu = if (c0 < 0) -1.0 else processCpuSec() - c0
       ListenerBridge.waitUntilEmpty(spark.sparkContext)
       t
@@ -124,7 +123,7 @@ object Bench {
       * passed, so the bench result and the profiler never disagree about
       * whether a run succeeded. The audit (an independent recomputation
       * that checks the timed body's result) runs outside the timed region
-      * and outside the job group, so its jobs are never attributed to the
+      * and outside the entry, so its jobs are never attributed to the
       * entry's profile, and only when the body itself succeeded; an audit
       * failure marks the run failed (-1) in the bench result AND the
       * profiler record. */
@@ -241,7 +240,7 @@ object Bench {
     // IO to amplify and reads as a false wash
     lazy val divergenceBenchPath: String = {
       val path = s"/tmp/graft_divbench_${ProcessHandle.current().pid()}.parquet"
-      // sweep frames left by dead JVMs (the ensureBpeModel pattern)
+      // sweep frames left by dead JVMs (the modelExportPath pattern)
       Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
         .filter(_.getName.matches("graft_divbench_\\d+\\.parquet"))
         .foreach { f =>

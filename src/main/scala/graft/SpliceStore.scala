@@ -1,14 +1,14 @@
 package graft
 
-/** Gate-time-frozen oracle splice fragments.
+/** Gate-time-frozen dynamic oracles, keyed `sql:<gate>`.
   *
-  * Several oracles splice ENGINE-computed tables (PPMI q6 edges, the DoReMi
-  * EG trace, trained-model constants) into their DuckDB SQL as VALUES. Gate
-  * lambdas freeze those rows here, as plain strings, in the same call that
-  * executes the gate, so the oracle never re-reads a localCheckpointed frame
-  * between gate execution and oracle construction. The store lives in this
-  * JVM only: [[graft.oracle.OracleSql.all]] emits the dynamic oracles of the
-  * gates that ran in it.
+  * A gate whose DuckDB oracle depends on what it trained or computed — a
+  * model, an export path, engine rows spliced as VALUES tables — builds
+  * that oracle from those values in the same call that produces its output
+  * and freezes it here as a plain string, so the oracle never re-reads a
+  * model or a localCheckpointed frame after the gate ran. The store lives
+  * in this JVM only: [[graft.oracle.OracleSql.all]] emits the frozen
+  * oracles of the gates that ran in it.
   */
 object SpliceStore {
   private val frags = new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -17,7 +17,7 @@ object SpliceStore {
 
   def get(name: String): Option[String] = Option(frags.get(name))
 
-  /** Drop one fragment — [[graft.Verify]] calls this for a gate whose query
+  /** Drop one entry — [[graft.Verify]] calls this for a gate whose query
     * threw, so no oracle is emitted for a gate that produced no output. */
   def remove(name: String): Unit = { frags.remove(name); () }
 

@@ -49,57 +49,18 @@ object Verify {
           !live.contains(f.getName))
         .foreach { f => System.err.println(s"[verify] dropping stale ${f.getName}"); deleteRec(f) }
     }
-    // fragment keys each gate freezes outside the `sql:<name>` convention —
-    // dropped alongside it when the gate throws, so no oracle is emitted
-    // for a gate that produced no output
-    val gateFragments = Map(
-      "x14_word_centrality" -> Seq("x14_edges"),
-      "q_doremi_mix" -> Seq("doremi_losses", "doremi_trace"),
-      "q_ppl_buckets" -> Seq("ppl_k"))
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        // Lint: a splice-backed gate's output schema must be double-free —
-        // its hash gate must never depend on version-specific IEEE
-        // formatting/parsing in the verifier.
-        if (gateFragments.contains(name))
-          df.schema.fields.foreach { f =>
-            require(f.dataType != org.apache.spark.sql.types.DoubleType &&
-                f.dataType != org.apache.spark.sql.types.FloatType,
-              s"splice-backed gate $name emits IEEE column ${f.name}")
-          }
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      }
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a failed query must yield MISSING in the driver's compare, never
         // a stale parquet from an earlier run of the same name — and its
-        // frozen splices must go with it
-        (gateFragments.getOrElse(name, Nil) :+ s"sql:$name")
-          .foreach(SpliceStore.remove)
+        // frozen oracle must go with it
+        SpliceStore.remove(s"sql:$name")
         val d = new java.io.File(s"$outDir/$name")
         if (d.exists) deleteRec(d)
-      }
-    }
-    // Lint: no IEEE literal inside any frozen VALUES
-    // splice — a DOUBLE cast/literal is the one thing a
-    // differently-versioned DuckDB can parse 1 ulp differently. A tainted
-    // gate degrades to the driver's rows-only check (its dynamic oracle is
-    // dropped) rather than shipping a flake-prone hash gate.
-    // match CAST syntax only ("::DOUBLE", "AS DOUBLE") — a bare substring
-    // test would false-positive on corpus WORDS inside the x14 edge
-    // splice (e.g. a document containing the token "double")
-    val ieeeCast = java.util.regex.Pattern.compile(
-      "(?i)(::\\s*|\\bAS\\s+)(DOUBLE|FLOAT|REAL)\\b")
-    gateFragments.foreach { case (gate, keys) =>
-      val tainted = keys.exists(k => SpliceStore.get(k).exists(v =>
-        ieeeCast.matcher(v).find()))
-      if (tainted) {
-        System.err.println(
-          s"[verify] LINT: $gate froze an IEEE-bearing VALUES splice — dropping its oracle")
-        (keys :+ s"sql:$gate").foreach(SpliceStore.remove)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -147,7 +147,7 @@ object CoreOps {
         // budget·a must not overflow Long (a is ~1e6·√count; petabyte
         // budgets × large groups can exceed 2⁶³): fail CLOSED here rather
         // than silently mis-allocate — the documented BigInt swap is the
-        // fix for callers that legitimately need the range (ADVICE r11)
+        // fix for callers that legitimately need the range
         require(budget == 0L || a <= Long.MaxValue / budget,
           s"allocation product budget=$budget × mass=$a overflows Long for group '$k' — " +
             "use a BigInt-based allocation for budgets of this magnitude")
@@ -606,7 +606,7 @@ object CoreOps {
     }
 
   /** The "keep narrow" contract of the two-phase global-order operators,
-    * ENFORCED (ADVICE r19): their input is eagerly materialized into
+    * ENFORCED: their input is eagerly materialized into
     * executor storage, so payload columns (token arrays, embeddings, raw
     * bytes) must never ride through — project to order/id/value columns
     * first and join payloads back on the id. Scalar strings (urls, split
@@ -647,7 +647,7 @@ object CoreOps {
     // storing id/long rows — the side this op is documented to keep narrow.
     // The input snapshot exists only to dedupe the range-sampler's extra
     // pass, so its storage is RELEASED as soon as the sorted frame is
-    // materialized (ADVICE r19: keeping both pinned two copies of the
+    // materialized (keeping both pinned two copies of the
     // caller's rows in non-replayable executor storage for the JVM's life).
     val snap = df.localCheckpoint()
     val sorted = snap.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*)
@@ -697,18 +697,32 @@ object CoreOps {
     *
     * Scale shape: the global order comes from [[globalRowIndex]] (range
     * repartition + per-partition index, O(P) driver state) — never a
-    * single-task `row_number` window over the corpus; per-band offsets are
-    * a band-cardinality aggregate joined back as a broadcast. Output:
-    * input columns + (bucket, batch_in_bucket). */
+    * single-task `row_number` window over the corpus, and only (id,
+    * tokens, bucket) rows enter it; per-band offsets are a
+    * band-cardinality aggregate joined back as a broadcast, and the input
+    * joins back on `idCol` (unique). Output: input columns + (bucket,
+    * batch_in_bucket). */
   def lengthBucketBatches(df: DataFrame, idCol: String, tokensCol: String,
       bandWidth: Int, batchSize: Int): DataFrame = {
     require(bandWidth > 0 && batchSize > 0, "bandWidth and batchSize must be positive")
-    val bucketed = df.withColumn("bucket", expr(s"($tokensCol - 1) div $bandWidth"))
+    val bucketed = df.select(col(idCol), col(tokensCol),
+      expr(s"($tokensCol - 1) div $bandWidth").as("bucket"))
     val indexed = globalRowIndex(bucketed, Seq("bucket", tokensCol, idCol))
     val offsets = indexed.groupBy("bucket").agg(min(col("idx")).as("__b0"))
-    indexed.join(broadcast(offsets), Seq("bucket"))
-      .withColumn("batch_in_bucket", expr(s"(idx - __b0) div $batchSize"))
-      .drop("__b0", "idx")
+    val batches = indexed.join(broadcast(offsets), Seq("bucket"))
+      .select(col(idCol), col("bucket"),
+        expr(s"(idx - __b0) div $batchSize").as("batch_in_bucket"))
+    joinBack(df, batches, Seq(idCol))
+  }
+
+  /** `df` with `narrow`'s columns other than `keys` joined back on `keys`,
+    * null-safely — how the [[globalRowIndex]] wrappers return their input
+    * columns after indexing only the keys. */
+  private def joinBack(df: DataFrame, narrow: DataFrame, keys: Seq[String]): DataFrame = {
+    val renamed = narrow.select(narrow.columns.map(c =>
+      if (keys.contains(c)) col(c).as(s"__k_$c") else col(c)).toIndexedSeq: _*)
+    df.join(renamed, keys.map(k => df(k) <=> renamed(s"__k_$k")).reduce(_ && _))
+      .drop(keys.map(k => s"__k_$k"): _*)
   }
 
   /** Corpus snapshot diff — the audit step of an incremental build: which
@@ -810,18 +824,21 @@ object CoreOps {
     * per-partition offsets), NOT a single-partition `ntile() OVER ()`
     * window — the 100 TB killer this avoids; the phase itself is exact
     * integer arithmetic over (index, total), reproducible in any engine.
-    * `order` must be a unique total order (include a tiebreak column). */
+    * `order` must be a unique total order (include a tiebreak column): only
+    * the `order` columns are indexed, and the input joins back on them.
+    * Output: input columns + phase. */
   def curriculumPhases(df: DataFrame, order: Seq[String], phases: Int): DataFrame = {
     require(phases >= 1, s"phases must be >= 1, got $phases")
-    val idx = globalRowIndex(df, order, "__idx")
+    val idx = globalRowIndex(df.select(order.map(col): _*), order, "__idx")
     val n = idx.agg(count(lit(1)).as("__n"))
-    idx.crossJoin(broadcast(n))
+    val phased = idx.crossJoin(broadcast(n))
       .withColumn("phase", expr(
         s"""CAST(CASE WHEN __idx < (__n % $phases) * (__n div $phases + 1)
            |THEN __idx div (__n div $phases + 1)
            |ELSE (__n % $phases) + (__idx - (__n % $phases) * (__n div $phases + 1)) div (__n div $phases)
            |END + 1 AS INT)""".stripMargin))
       .drop("__idx", "__n")
+    joinBack(df, phased, order)
   }
 
   /** Cohen's kappa between two labelings of the same ids — the
@@ -840,7 +857,7 @@ object CoreOps {
     * agreement perfect but chance-correction undefined) reports 1.0.
     *
     * NULL labels: rows where either labeling is NULL are DROPPED before
-    * aggregation (ADVICE r11) — a NULL can never agree, and the
+    * aggregation — a NULL can never agree, and the
     * null-rejecting marginal joins would otherwise exclude it from pe
     * while n still counted it, silently deflating po/pe/kappa. Dropping
     * is the standard "unlabeled item" treatment; a caller auditing
@@ -944,7 +961,7 @@ object CoreOps {
     // of its two passes (offsets job + data job) plus every downstream
     // action. One checkpoint of the narrow input + one of the sorted frame
     // caps the op at ONE upstream computation and ONE sort; the input
-    // snapshot is released once the sorted frame exists (ADVICE r19).
+    // snapshot is released once the sorted frame exists.
     val snap = df.localCheckpoint()
     val sorted = snap.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
       .localCheckpoint()

@@ -232,32 +232,18 @@ object Similarity {
     * The sample is the `sampleSize` rows minimizing a seeded hash of vec_id
     * (a TakeOrdered top-n, no full sort) — deterministic under any file
     * layout or repartitioning, unlike a bare `limit` which takes whatever
-    * partitions answer first and silently changes the centroids. */
-  /** Centroids from the most recent [[trainIvfCentroids]] call in this JVM,
-    * KEYED by the training params so an oracle consumer can verify it is
-    * reading the model it expects (a later call with different nlist/dim/
-    * seed overwrites the slot — the key turns that into a detectable miss
-    * instead of a silently wrong VALUES table). Training is deterministic
-    * given the corpus, so these ARE the model for the current dataset;
-    * [[graft.oracle.OracleSql.all]] exports them into the DuckDB oracle as
-    * a VALUES table (the query run always precedes the oracle dump in
-    * [[graft.Verify]], and Verify processes one dataset per JVM). Only the
-    * trained parameters cross the boundary — assignment, probing, and
-    * ranking are re-derived in SQL. */
-  @volatile private[graft] var lastIvfCentroids: Option[(Int, Int, Long, Array[Array[Double]])] = None
-
+    * partitions answer first and silently changes the centroids.
+    *
+    * The centroids are the whole model: the operators below take them as a
+    * value, and a gate hands the same value to its DuckDB oracle. */
   def trainIvfCentroids(corpus: DataFrame, nlist: Int, dim: Int,
-      iterations: Int = 8, sampleSize: Int = 4096, seed: Long = 42L): Array[Array[Double]] = {
-    val cs = trainCentroidsOn(
+      iterations: Int = 8, sampleSize: Int = 4096, seed: Long = 42L): Array[Array[Double]] =
+    trainCentroidsOn(
       corpus.select(col("vec_id"), asDouble(col("embedding")).as("__vec")),
       nlist, dim, iterations, sampleSize, seed)
-    lastIvfCentroids = Some((nlist, dim, seed, cs))
-    cs
-  }
 
   /** The k-means core of [[trainIvfCentroids]] over any (vec_id, __vec)
-    * table — shared with the REDUCED-space trainer so the projected-index
-    * path cannot clobber the full-space export slot. */
+    * table — shared with the reduced-space trainer. */
   private def trainCentroidsOn(df: DataFrame, nlist: Int, dim: Int,
       iterations: Int, sampleSize: Int, seed: Long): Array[Array[Double]] = {
     val sample = df
@@ -321,9 +307,12 @@ object Similarity {
     * the LSH path, but with data-adapted cells. Assignment and probing are
     * native expressions over the broadcast-literal centroid table. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      dim: Int = 64, nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L): DataFrame = {
-    val centroids = trainIvfCentroids(corpus, nlist, dim, seed = seed)
+      dim: Int = 64, nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L): DataFrame =
+    ivfTopK(corpus, queries, k, trainIvfCentroids(corpus, nlist, dim, seed = seed), nprobe)
 
+  /** [[ivfTopK]] over already-trained `centroids`. */
+  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+      centroids: Array[Array[Double]], nprobe: Int): DataFrame = {
     val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
       .withColumn("cell", array_min(centroidDists(col("emb"), centroids)).getField("c"))
     val q = broadcast(queries.select(col("query_id"), asDouble(col("embedding")).as("q_emb"))
@@ -351,8 +340,11 @@ object Similarity {
     * projection over broadcast-literal centroids (one native dot per
     * centroid, all codegen) — zero shuffles over the corpus. */
   def kmeansAssign(corpus: DataFrame,
-      dim: Int = 64, nlist: Int = 16, seed: Long = 42L): DataFrame = {
-    val centroids = trainIvfCentroids(corpus, nlist, dim, seed = seed)
+      dim: Int = 64, nlist: Int = 16, seed: Long = 42L): DataFrame =
+    kmeansAssign(corpus, trainIvfCentroids(corpus, nlist, dim, seed = seed))
+
+  /** [[kmeansAssign]] under already-trained `centroids`. */
+  def kmeansAssign(corpus: DataFrame, centroids: Array[Array[Double]]): DataFrame =
     corpus.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
       .withColumn("best", array_min(centroidDists(col("emb"), centroids)))
       .select(col("vec_id"),
@@ -360,7 +352,6 @@ object Similarity {
         // centroidDists carries d = ‖c‖² − 2·v·c; add the per-row ‖v‖² back
         // for the true squared distance
         round(col("best").getField("d") + dot(col("emb"), col("emb")), 6).as("dist2"))
-  }
 
   /** Semantic outlier pruning: the `k` vectors FARTHEST from their
     * cluster's centroid, per cluster — the noise-removal curation step
@@ -375,9 +366,14 @@ object Similarity {
     * over (vec_id, cluster, dist2) scalar rows — WindowGroupLimit prunes
     * to k per cluster map-side, and no embedding enters the exchange. */
   def semanticOutliers(corpus: DataFrame, k: Int,
-      dim: Int = 64, nlist: Int = 16, seed: Long = 42L): DataFrame = {
+      dim: Int = 64, nlist: Int = 16, seed: Long = 42L): DataFrame =
+    semanticOutliers(corpus, trainIvfCentroids(corpus, nlist, dim, seed = seed), k)
+
+  /** [[semanticOutliers]] under already-trained `centroids`. */
+  def semanticOutliers(corpus: DataFrame, centroids: Array[Array[Double]],
+      k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val assigned = kmeansAssign(corpus, dim, nlist, seed)
+    val assigned = kmeansAssign(corpus, centroids)
       .select("vec_id", "cluster", "dist2")
     val w = Window.partitionBy(col("cluster")).orderBy(col("dist2").desc, col("vec_id"))
     assigned.withColumn("out_rank", row_number().over(w))
@@ -416,8 +412,12 @@ object Similarity {
     * an ids-only detour would only add a corpus shuffle; candidate feeds
     * are for scorers that join their own compact representation back.) */
   def ivfCandidates(corpus: DataFrame, queries: DataFrame,
-      dim: Int = 64, nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L): DataFrame = {
-    val centroids = trainIvfCentroids(corpus, nlist, dim, seed = seed)
+      dim: Int = 64, nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L): DataFrame =
+    ivfCandidates(corpus, queries, trainIvfCentroids(corpus, nlist, dim, seed = seed), nprobe)
+
+  /** [[ivfCandidates]] from already-trained `centroids`. */
+  def ivfCandidates(corpus: DataFrame, queries: DataFrame,
+      centroids: Array[Array[Double]], nprobe: Int): DataFrame = {
     val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
       .withColumn("cell", array_min(centroidDists(col("emb"), centroids)).getField("c"))
     val q = broadcast(queries.select(col("query_id"), asDouble(col("embedding")).as("q_emb"))
@@ -458,11 +458,6 @@ object Similarity {
     *
     * @param bitsPerTable hyperplanes per hash table; 0 = auto from corpus size
     */
-  /** Last-trained PQ codebooks: (dim, m, ksub, seed, books[m][ksub][dim/m]).
-    * Exported to the DuckDB oracle as a VALUES table, same contract as
-    * [[lastIvfCentroids]]. */
-  @volatile private[graft] var lastPqCodebooks: Option[(Int, Int, Int, Long, Array[Array[Array[Double]]])] = None
-
   /** Product-quantization codebooks: the embedding space is cut into `m`
     * contiguous subspaces of dim/m dims and each gets its own `ksub`-word
     * codebook, trained by the same deterministic Lloyd loop as
@@ -470,17 +465,13 @@ object Similarity {
     * then m small integers (m bytes at ksub ≤ 256) instead of dim doubles —
     * the representation that makes billion-vector indexes fit on disk. */
   def trainPqCodebooks(corpus: DataFrame, dim: Int, m: Int, ksub: Int,
-      iterations: Int = 8, sampleSize: Int = 4096, seed: Long = 42L): Array[Array[Array[Double]]] = {
-    val books = trainPqOn(
+      iterations: Int = 8, sampleSize: Int = 4096, seed: Long = 42L): Array[Array[Array[Double]]] =
+    trainPqOn(
       corpus.select(col("vec_id"), asDouble(col("embedding")).as("__vec")),
       dim, m, ksub, iterations, sampleSize, seed)
-    lastPqCodebooks = Some((dim, m, ksub, seed, books))
-    books
-  }
 
   /** The per-subspace k-means core of [[trainPqCodebooks]] over any
-    * (vec_id, __vec) table — shared with the ROTATED-space trainer so the
-    * reduced-PQ path cannot clobber the full-space d9d export slot. */
+    * (vec_id, __vec) table — shared with the rotated-space trainer. */
   private def trainPqOn(df: DataFrame, dim: Int, m: Int, ksub: Int,
       iterations: Int, sampleSize: Int, seed: Long): Array[Array[Array[Double]]] = {
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
@@ -535,8 +526,12 @@ object Similarity {
     * (product). */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       dim: Int = 64, m: Int = 16, ksub: Int = 16, rescoreCands: Int = 20,
-      seed: Long = 42L): DataFrame = {
-    val books = trainPqCodebooks(corpus, dim, m, ksub, seed = seed)
+      seed: Long = 42L): DataFrame =
+    pqTopK(corpus, queries, k, trainPqCodebooks(corpus, dim, m, ksub, seed = seed), rescoreCands)
+
+  /** [[pqTopK]] over already-trained codebooks `books`. */
+  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+      books: Array[Array[Array[Double]]], rescoreCands: Int): DataFrame = {
     // encoding, ADC tables, and the ranking sum are native expressions
     // holding the codebooks as ONE codegen reference object: the earlier
     // literal-array formulation (m·ksub codeword literals inlined per
@@ -607,10 +602,6 @@ object Similarity {
       .withColumn("nemb", normalized(col("emb")))
       .select(("vec_id" +: "cluster" +: "nemb" +: carry).map(col): _*)
 
-  private def clusterAssigned(corpus: DataFrame,
-      dim: Int, nlist: Int, seed: Long): DataFrame =
-    assignToCells(corpus, trainIvfCentroids(corpus, nlist, dim, seed = seed))
-
   /** The standing corpus's SEMANTIC index: the exported centroids plus the
     * per-cell normalized vectors (cluster, c_id, c_nemb) — the static side
     * a streaming semantic dedup/audit joins against, and the vector-space
@@ -658,9 +649,9 @@ object Similarity {
     * — [[semanticDedup]]'s candidate stage, exposed so hybrid pipelines can
     * union these edges with lexical (MinHash-verified) ones before one
     * shared component closure. */
-  def semanticNearDupPairs(corpus: DataFrame, threshold: Double,
-      dim: Int = 64, nlist: Int = 16, seed: Long = 42L): DataFrame =
-    pairsWithinClusters(clusterAssigned(corpus, dim, nlist, seed), threshold)
+  def semanticNearDupPairs(corpus: DataFrame, centroids: Array[Array[Double]],
+      threshold: Double): DataFrame =
+    pairsWithinClusters(assignToCells(corpus, centroids), threshold)
 
   private def pairsWithinClusters(assigned: DataFrame, threshold: Double): DataFrame =
     assigned
@@ -672,12 +663,17 @@ object Similarity {
       .select("vec_a", "vec_b")
 
   def semanticDedup(corpus: DataFrame, threshold: Double,
-      dim: Int = 64, nlist: Int = 16, seed: Long = 42L): DataFrame = {
-    // localCheckpoint (r19, guide §2.4): the assignment feeds both sides
+      dim: Int = 64, nlist: Int = 16, seed: Long = 42L): DataFrame =
+    semanticDedup(corpus, trainIvfCentroids(corpus, nlist, dim, seed = seed), threshold)
+
+  /** [[semanticDedup]] under already-trained `centroids`. */
+  def semanticDedup(corpus: DataFrame, centroids: Array[Array[Double]],
+      threshold: Double): DataFrame = {
+    // localCheckpoint (guide §2.4): the assignment feeds both sides
     // of the within-cluster pair join AND the survivor join — without it
     // the centroid-distance projection over the embeddings runs once per
     // consumer. (vec_id, cluster, nemb): the semanticIndex shape.
-    val assigned = clusterAssigned(corpus, dim, nlist, seed).localCheckpoint()
+    val assigned = assignToCells(corpus, centroids).localCheckpoint()
     val pairs = pairsWithinClusters(assigned, threshold)
     val comp = Dedup.connectedComponents(pairs, "vec_a", "vec_b")
     // min-label propagation converges to the component's min id, so the
@@ -694,19 +690,19 @@ object Similarity {
     * how many train-split vectors sit within cosine `threshold` of it
     * (paraphrase leakage that verbatim window matching cannot see). One
     * row per test vector: near-train count, best cosine (null when
-    * clean), leaked flag. Clustering trains on the FULL corpus (same
-    * deterministic k-means as every embedding gate), so candidate pairing
-    * is confined to shared k-means cells and both engines replay the same
-    * exported centroids.
+    * clean), leaked flag. `centroids` cluster the FULL corpus (the gates
+    * pass the same deterministic k-means as every embedding gate), so
+    * candidate pairing is confined to shared k-means cells and both
+    * engines replay the same exported centroids.
     *
     * Scale shape: pairwise scoring is bounded by Σ|cell∩test|·|cell∩train|
     * — never n² — and carries (ids, normalized vectors) through ONE cell
     * equi-join; the per-test aggregate combines map-side; the final
     * left join is ids+scalars. */
-  def semanticSplitLeakage(corpus: DataFrame, threshold: Double,
-      splits: Seq[(String, Int)] = Seq("train" -> 80, "val" -> 10, "test" -> 10),
-      dim: Int = 64, nlist: Int = 16, seed: Long = 42L): DataFrame = {
-    val split = CoreOps.hashSplit(clusterAssigned(corpus, dim, nlist, seed), "vec_id", splits)
+  def semanticSplitLeakage(corpus: DataFrame, centroids: Array[Array[Double]],
+      threshold: Double,
+      splits: Seq[(String, Int)] = Seq("train" -> 80, "val" -> 10, "test" -> 10)): DataFrame = {
+    val split = CoreOps.hashSplit(assignToCells(corpus, centroids), "vec_id", splits)
     val tr = split.where(col("split") === "train")
       .select(col("cluster"), col("vec_id").as("t_id"), col("nemb").as("t_emb"))
     val te = split.where(col("split") === "test")
@@ -737,9 +733,14 @@ object Similarity {
     * confined to cluster cells (Σ|cell|², never n²); components shuffle
     * ids-only. */
   def semanticCuration(corpus: DataFrame, threshold: Double, outlierK: Int,
-      capPerCluster: Long, dim: Int = 64, nlist: Int = 16, seed: Long = 42L): DataFrame = {
+      capPerCluster: Long, dim: Int = 64, nlist: Int = 16, seed: Long = 42L): DataFrame =
+    semanticCuration(corpus, trainIvfCentroids(corpus, nlist, dim, seed = seed),
+      threshold, outlierK, capPerCluster)
+
+  /** [[semanticCuration]] under already-trained `centroids`. */
+  def semanticCuration(corpus: DataFrame, centroids: Array[Array[Double]],
+      threshold: Double, outlierK: Int, capPerCluster: Long): DataFrame = {
     require(outlierK >= 0 && capPerCluster >= 1, "need outlierK >= 0, cap >= 1")
-    val centroids = trainIvfCentroids(corpus, nlist, dim, seed = seed)
     val assigned = corpus
       .select(col("vec_id").cast("long").as("vec_id"), asDouble(col("embedding")).as("emb"))
       .withColumn("best", array_min(centroidDists(col("emb"), centroids)))
@@ -748,7 +749,7 @@ object Similarity {
         round(col("best").getField("d") + dot(col("emb"), col("emb")), 6).as("dist2"),
         normalized(col("emb")).as("nemb"))
     val w = Window.partitionBy(col("cluster")).orderBy(col("dist2").desc, col("vec_id"))
-    // localCheckpoint (r19, guide §2.4): `kept` feeds the within-cluster
+    // localCheckpoint (guide §2.4): `kept` feeds the within-cluster
     // pair join (both sides) AND the survivor join — without it the
     // centroid-distance assignment + outlier window run once per consumer.
     // (cluster, vec_id, nemb) rows: the same maintained-index shape
@@ -854,7 +855,7 @@ object Similarity {
     val rows = checked.select(posexplode(col("embedding")).as(Seq("__p", "v")))
       .select((col("__p") + lit(1)).cast("long").as("dim"), col("v"),
         floor(col("v") * lit(1000000.0) + lit(0.5)).cast("long").as("xq"))
-    // the squared-moment sum runs in DECIMAL(38,0) (ADVICE r11): a long
+    // the squared-moment sum runs in DECIMAL(38,0): a long
     // sum silently wraps past 2⁶³ (~9e6 unit-scale rows per dim), while
     // the decimal sum stays exact to 38 digits — the same headroom as
     // DuckDB's HUGEINT sum in the oracle — and the downstream math reads
@@ -872,13 +873,6 @@ object Similarity {
           / lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("variance"),
         col("min_v"), col("max_v"))
   }
-
-  /** Model from the most recent [[trainPca]] call in this JVM, keyed by
-    * (dim, nComponents, nRows): mean vector and principal components,
-    * exported to the DuckDB oracle as literal arrays (the
-    * [[lastIvfCentroids]] contract — the query run always precedes the
-    * oracle dump in [[graft.Verify]]). */
-  @volatile private[graft] var lastPca: Option[(Int, Int, Long, Array[Double], Array[Array[Double]])] = None
 
   /** In-engine PCA training: top-`nComponents` principal components of the
     * embedding corpus — the learned-rotation answer to "how many index
@@ -902,7 +896,7 @@ object Similarity {
     * moment tables hierarchically (same exact longs), not a different
     * algorithm.
     *
-    * Returns (mean, components) and records [[lastPca]]. */
+    * Returns (mean, components). */
   def trainPca(corpus: DataFrame, dim: Int, nComponents: Int,
       iterations: Int = 200): (Array[Double], Array[Array[Double]]) = {
     require(nComponents >= 1 && nComponents <= dim)
@@ -912,7 +906,7 @@ object Similarity {
       require(e.length == dim, s"expected dim $dim, got ${e.length}")
       Array.tabulate(dim)(j => math.floor(e(j) * 1e6 + 0.5).toLong)
     }
-    // CHECKED long arithmetic throughout (ADVICE r11): the |x| <= 1
+    // CHECKED long arithmetic throughout: the |x| <= 1
     // scaladoc bound guarantees headroom to ~9e6 rows, but nothing used to
     // enforce it — out-of-range embeddings (or a larger corpus than the
     // bound allows) silently wrapped into a wrong model. multiplyExact/
@@ -979,9 +973,7 @@ object Similarity {
       // deflate
       for (a <- 0 until dim; b <- 0 until dim) cov(a)(b) -= lambda * v(a) * v(b)
     }
-    val mean = s.map(x => x.toDouble / n.toDouble / 1e6)
-    lastPca = Some((dim, nComponents, n, mean, comps))
-    (mean, comps)
+    (s.map(x => x.toDouble / n.toDouble / 1e6), comps)
   }
 
   /** Projection onto a trained PCA basis: each output coordinate is
@@ -1030,6 +1022,14 @@ object Similarity {
   def pcaVsPrefixRecall(corpus: DataFrame, queries: DataFrame, dim: Int,
       kDim: Int, k: Int): DataFrame = {
     val (mean, comps) = trainPca(corpus, dim, kDim)
+    pcaVsPrefixRecall(corpus, queries, mean, comps, k)
+  }
+
+  /** [[pcaVsPrefixRecall]] of an already-trained rotation (`mean`,
+    * `comps`); the prefix budget is `comps.length`. */
+  def pcaVsPrefixRecall(corpus: DataFrame, queries: DataFrame,
+      mean: Array[Double], comps: Array[Array[Double]], k: Int): DataFrame = {
+    val kDim = comps.length
     val full = bruteForceTopK(corpus, queries, k)
       .select(col("query_id"), col("neighbor_id").as("vec_id"))
       .localCheckpoint()
@@ -1064,11 +1064,6 @@ object Similarity {
           .as("recall"))
   }
 
-  /** Reduced-space centroids from the most recent [[reducedIvfTopK]] call
-    * — a SEPARATE export slot from [[lastIvfCentroids]] so the projected
-    * index cannot clobber the full-space d8/d9c oracle model. */
-  @volatile private[graft] var lastReducedIvf: Option[(Int, Int, Long, Array[Array[Double]])] = None
-
   /** The composed reduced-dimension ANN index — the 100 TB index build
     * recipe in one operator: PCA-project the corpus ([[trainPca]], the
     * learned rotation [[pcaVsPrefixRecall]] justifies), train the IVF
@@ -1078,10 +1073,8 @@ object Similarity {
     * the EXACT full-dimension cosine (the d9 rescore discipline: the
     * reduced space only selects, never scores the final ranking).
     *
-    * Both trained models export for the oracle — PCA via [[lastPca]],
-    * the reduced centroids via [[lastReducedIvf]] — and the SQL replays
-    * projection, assignment (argmin with ties to the lowest index),
-    * probing, and the exact rescore operation-for-operation.
+    * Training is [[trainReducedModel]], probing [[reducedProbeTopK]]; a
+    * gate that exports the model for its oracle calls the two itself.
     *
     * Scale shape: projection is zero-shuffle; cell assignment is a pure
     * projection over broadcast-literal centroids; the candidate join is
@@ -1091,13 +1084,7 @@ object Similarity {
   def reducedIvfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       dim: Int = 64, pcaDims: Int = 8, nlist: Int = 16, nprobe: Int = 4,
       seed: Long = 43L): DataFrame = {
-    val (mean, comps) = trainPca(corpus, dim, pcaDims)
-    val cp = pcaProjectArrays(corpus, mean, comps)
-    val cents = trainCentroidsOn(
-      cp.select(col("vec_id"), col("proj").as("__vec")),
-      nlist, pcaDims, iterations = 8, sampleSize = 4096, seed = seed)
-    lastReducedIvf = Some((nlist, pcaDims, seed, cents))
-    val model = ReducedModel(dim, pcaDims, mean, comps, cents)
+    val model = trainReducedModel(corpus, dim, pcaDims, nlist, seed)
     reducedProbeTopK(corpus, reducedIndexOf(corpus, model), model,
       queries, k, nprobe)
   }
@@ -1106,38 +1093,24 @@ object Similarity {
     * ANN deployment trains ONCE per corpus release and then holds across
     * ingest epochs: the PCA rotation (mean + components) and the
     * reduced-space coarse-quantizer centroids. The maintained counterpart
-    * of what [[reducedIvfTopK]] retrains per call (VERDICT r11 "What's
-    * missing" #1), completing the d18 treatment for the reduced index:
+    * of what [[reducedIvfTopK]] retrains per call, completing the d18
+    * treatment for the reduced index:
     * build → append → delete → probe all run under the same frozen model,
     * so every maintenance op is a pure projection or an ids-only join. */
   final case class ReducedModel(dim: Int, pcaDims: Int,
       mean: Array[Double], comps: Array[Array[Double]],
       centroids: Array[Array[Double]])
 
-  /** Model from the most recent [[trainReducedModel]] call — its OWN
-    * export slot (the maintained gate trains on the pre-epoch base corpus,
-    * a different slice than the full-corpus d22/d9e/pca models, so it must
-    * not clobber [[lastPca]]/[[lastReducedIvf]]). */
-  @volatile private[graft] var lastMaintainedReduced: Option[ReducedModel] = None
-
-  /** Train the frozen reduced-index model on a corpus release. Only the
-    * shared [[lastPca]] slot needs save/restore around training (this
-    * model may be trained on a maintained-index BASE slice, and the
-    * full-corpus gates' oracles read that slot at dump time);
-    * [[trainCentroidsOn]] never writes [[lastReducedIvf]], so that slot is
-    * untouched by construction. */
+  /** Train the frozen reduced-index model on a corpus release: the PCA
+    * rotation, then the coarse quantizer in the projected space. */
   def trainReducedModel(corpus: DataFrame, dim: Int = 64, pcaDims: Int = 8,
       nlist: Int = 16, seed: Long = 43L): ReducedModel = {
-    val savedPca = lastPca
     val (mean, comps) = trainPca(corpus, dim, pcaDims)
-    lastPca = savedPca
     val cents = trainCentroidsOn(
       pcaProjectArrays(corpus, mean, comps)
         .select(col("vec_id"), col("proj").as("__vec")),
       nlist, pcaDims, iterations = 8, sampleSize = 4096, seed = seed)
-    val model = ReducedModel(dim, pcaDims, mean, comps, cents)
-    lastMaintainedReduced = Some(model)
-    model
+    ReducedModel(dim, pcaDims, mean, comps, cents)
   }
 
   /** L2-normalized double copy of an embedding column — public so the
@@ -1244,74 +1217,38 @@ object Similarity {
       .withColumn("keep", col("dup_of").isNull)
   }
 
-  /** Rotated-space codebooks from the most recent [[reducedPqTopK]] call
-    * — a separate slot from [[lastPqCodebooks]] (the d9d full-space
-    * model). */
-  @volatile private[graft] var lastReducedPq: Option[(Int, Int, Int, Long, Array[Array[Array[Double]]])] = None
-
-  /** OPQ-style ROTATED product quantization (Ge et al. 2013, with the
-    * learned PCA rotation standing in for the full OPQ alternating
-    * optimization): project onto the trained rotation ([[trainPca]] —
-    * the same (64, 8) model every PCA gate shares), train per-subspace
-    * codebooks IN THE ROTATED SPACE, rank candidates by the rotated ADC
-    * sum, and rescore survivors with the exact full-dimension cosine.
-    * The rotation concentrates variance into the kept coordinates, so
-    * the same code budget quantizes better than flat PQ on raw prefix
-    * dims — completing the quantization matrix (PQ flat / PQ×LSH /
-    * PQ×IVF / PQ×rotation).
+  /** A FROZEN OPQ-style ROTATED product-quantization index model (Ge et
+    * al. 2013, with the learned PCA rotation standing in for the full OPQ
+    * alternating optimization) — [[ReducedModel]]'s sibling for the d9e
+    * path: the PCA rotation plus per-subspace codebooks trained IN THE
+    * ROTATED SPACE. The rotation concentrates variance into the kept
+    * coordinates, so the same code budget quantizes better than flat PQ on
+    * raw prefix dims — completing the quantization matrix (PQ flat /
+    * PQ×LSH / PQ×IVF / PQ×rotation). At 100 TB these are exactly the
+    * artifacts trained once per corpus release ([[trainReducedPqModel]]);
+    * the index stores m-byte CODES per vector (the representation that
+    * fits a billion-vector index on disk), append/delete maintenance never
+    * touches the model, and [[reducedPqProbeTopK]] ranks by the rotated ADC
+    * sum and rescores survivors with the exact full-dimension cosine.
     *
     * Scale shape: projection and encoding are pure projections over
     * broadcast-literal models; the ADC exchange carries (query, vec,
-    * approx) scalars only (the d9d discipline); true embeddings join
-    * back only for rescore survivors. */
-  def reducedPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      dim: Int = 64, pcaDims: Int = 8, m: Int = 4, ksub: Int = 16,
-      rescoreCands: Int = 20, seed: Long = 44L): DataFrame = {
-    val (mean, comps) = trainPca(corpus, dim, pcaDims)
-    val cp = pcaProjectArrays(corpus, mean, comps)
-    val books = trainPqOn(cp.select(col("vec_id"), col("proj").as("__vec")),
-      pcaDims, m, ksub, iterations = 8, sampleSize = 4096, seed = seed)
-    lastReducedPq = Some((pcaDims, m, ksub, seed, books))
-    // same native-expression ADC path as [[pqTopK]] (the rotated variant
-    // doubled the literal mass that broke 64 KB codegen), composed through
-    // the maintained probe so one-shot and maintained rankings share one
-    // definition
-    val model = ReducedPqModel(dim, pcaDims, m, ksub, mean, comps, books)
-    reducedPqProbeTopK(corpus, reducedPqIndexOf(corpus, model), model,
-      queries, k, rescoreCands)
-  }
-
-  /** A FROZEN rotated-PQ index model — [[ReducedModel]]'s sibling for the
-    * d9e path: the PCA rotation plus the per-subspace codebooks trained in
-    * the rotated space. At 100 TB these are exactly the artifacts trained
-    * once per corpus release; the index stores m-byte CODES per vector
-    * (the representation that fits a billion-vector index on disk), and
-    * append/delete maintenance never touches the model. */
+    * approx) scalars only (the d9d discipline); true embeddings join back
+    * only for rescore survivors. */
   final case class ReducedPqModel(dim: Int, pcaDims: Int, m: Int, ksub: Int,
       mean: Array[Double], comps: Array[Array[Double]],
       books: Array[Array[Array[Double]]])
 
-  /** Model from the most recent [[trainReducedPqModel]] call — its own
-    * export slot (the maintained gate trains on the pre-epoch base). */
-  @volatile private[graft] var lastMaintainedReducedPq: Option[ReducedPqModel] = None
-
-  /** Train the frozen rotated-PQ model. Only the shared [[lastPca]] slot
-    * needs save/restore around training — the full-corpus pca oracle reads
-    * it at dump time and this model may be trained on a different
-    * (maintained-index base) slice; [[trainPqOn]] never writes
-    * [[lastReducedPq]], so d9e's slot is untouched by construction. */
+  /** Train the frozen rotated-PQ model: the PCA rotation, then the
+    * per-subspace codebooks in the rotated space. */
   def trainReducedPqModel(corpus: DataFrame, dim: Int = 64, pcaDims: Int = 8,
       m: Int = 4, ksub: Int = 16, seed: Long = 44L): ReducedPqModel = {
-    val savedPca = lastPca
     val (mean, comps) = trainPca(corpus, dim, pcaDims)
-    lastPca = savedPca
     val books = trainPqOn(
       pcaProjectArrays(corpus, mean, comps)
         .select(col("vec_id"), col("proj").as("__vec")),
       pcaDims, m, ksub, iterations = 8, sampleSize = 4096, seed = seed)
-    val model = ReducedPqModel(dim, pcaDims, m, ksub, mean, comps, books)
-    lastMaintainedReducedPq = Some(model)
-    model
+    ReducedPqModel(dim, pcaDims, m, ksub, mean, comps, books)
   }
 
   /** The maintained rotated-PQ index: one (r_id, codes) row per vector —
@@ -1338,9 +1275,8 @@ object Similarity {
       broadcast(removeIds.select(col(idCol).cast("long").as("r_id")).distinct()),
       Seq("r_id"), "left_anti")
 
-  /** ADC top-k against the MAINTAINED codes index under its frozen model —
-    * [[reducedPqTopK]]'s ranking decoupled from training: queries project
-    * and build their ADC tables (native expressions, broadcast), the
+  /** ADC top-k against the MAINTAINED codes index under its frozen model
+    * (the native ADC path of [[pqTopK]]): queries project and build their ADC tables (native expressions, broadcast), the
     * ranking sum runs over the stored m-byte codes (scalars-only
     * exchange), and the `rescoreCands` best candidates per query rescore
     * with the exact full-dimension cosine from `corpus`. */
@@ -1618,7 +1554,7 @@ object Similarity {
     * @param rescoreFactor exact-rescore pool = rescoreFactor·k per query
     * @param dim     embedding width (≤ 64); must not exceed the actual
     *                array length — `getItem` past the end yields null and
-    *                the bit would silently read 0 (ADVICE r13), so the
+    *                the bit would silently read 0, so the
     *                signature projection REQUIRES `size(embedding) >= dim`
     *                per row and fails loudly on a too-wide `dim`
     */

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 // bit-reproducible transcendentals (StrictMath in BOTH eval paths) for
 // every quantized ln/exp — the built-ins are StrictMath only under codegen
 // and Math on the interpreted path, which is JIT-tier/process dependent
-// (VERDICT r13 #1)
 import graft.expressions.GraftExpressions.{expStrict, lnStrict}
 
 /** Text-analysis operators for training-data curation: token statistics,
@@ -115,7 +114,7 @@ object TextOps {
     * Scheme-less inputs (`example.com/a` — common in link columns scraped
     * from text) get an implicit `http://` BEFORE the rules run, so they
     * canonicalize with their spelled-out spellings instead of silently
-    * degrading to an empty host (ADVICE r13). `http` vs `https` spellings
+    * degrading to an empty host. `http` vs `https` spellings
     * of the same path stay distinct by design — the scheme can change the
     * resource.
     *
@@ -179,7 +178,7 @@ object TextOps {
     * deliberately out of scope — planted link corpora and the
     * overwhelming share of real anchors are dot-free, and a resolver that
     * silently half-handles `..` is worse than one that documents the
-    * boundary. Second documented boundary (ADVICE r16): because
+    * boundary. Second documented boundary: because
     * [[canonicalizeUrl]] STRIPS trailing slashes, a canonicalized base
     * that originally ended in `/` (`https://h.com/docs/`) resolves
     * plain-relative hrefs against the PARENT (`p` → `/p`, not `/docs/p`)
@@ -213,11 +212,11 @@ object TextOps {
     * over the page bytes; the explode multiplies rows by the per-page
     * anchor count, never by corpus size). `href` may sit at ANY attribute
     * position (`<a class="nav" href="/x">` — the lazy `<a\b[^>]*?\shref="…"`
-    * element match, ADVICE r16); the mandatory whitespace BEFORE `href`
+    * element match); the mandatory whitespace BEFORE `href`
     * anchors it as an attribute NAME, so an attribute merely ENDING in
     * href (`<a data-href="/decoy" href="/real">`) never captures — the
-    * lazy scan steps past `data-href="/decoy"` to the real attribute
-    * (ADVICE r17). Unquoted/single-quoted href attributes remain out of
+    * lazy scan steps past `data-href="/decoy"` to the real attribute.
+    * Unquoted/single-quoted href attributes remain out of
     * scope by the same documented-boundary rule as [[extractHtmlText]]'s
     * entity subset.
     *
@@ -237,7 +236,7 @@ object TextOps {
   }
 
   /** Extract the `<url>` entries of a sitemaps.org `<urlset>` document
-    * (r19 — the crawl's SECOND discovery arm: real crawlers consume
+    * (the crawl's SECOND discovery arm: real crawlers consume
     * sitemaps alongside extracted anchors, and a sitemap's `<lastmod>`
     * is a freshness signal the recrawl scheduler reads directly —
     * sitemaps.org protocol, public spec): one row per `<url>` block
@@ -279,7 +278,7 @@ object TextOps {
     * matches at 0 and 1); a repeated term in the phrase joins its own
     * posting list once per offset. Per-term document frequencies are read
     * on the driver — phrase-cardinality scalars, the engine's bounded-
-    * collect contract. NOTE (ADVICE r16): this operator is EAGER — the
+    * collect contract. NOTE: this operator is EAGER — the
     * postings `localCheckpoint` and the df collect run Spark jobs at
     * DataFrame-CONSTRUCTION time, not first action, the price of
     * rarest-first anchor election.
@@ -317,7 +316,7 @@ object TextOps {
     * Caller contract: `post` is already filtered to the phrase's terms
     * and materialized (every branch below re-reads it). */
   private def phraseProbe(post: DataFrame, phrase: Seq[String]): DataFrame = {
-    // TRUE document frequency (countDistinct, ADVICE r16) — occurrence
+    // TRUE document frequency (countDistinct) — occurrence
     // totals were a weaker rarest-first heuristic (never incorrect: the
     // intersection result is order-independent; only candidate volume
     // varies)
@@ -345,7 +344,7 @@ object TextOps {
 
   /** The MATERIALIZABLE positional-postings index of the phrase family —
     * (term, doc_id, pos) rows over whitespace tokens, the persisted form
-    * [[phraseSearch]]'s scaladoc promises (VERDICT r16 #3: the sixth
+    * [[phraseSearch]]'s scaladoc promises (the sixth
     * maintained-index family, the d23/d24/BM25 lifecycle contract). A
     * decontamination or quote-attribution user running MANY phrase
     * queries builds this once and probes it per query
@@ -401,7 +400,7 @@ object TextOps {
   }
 
   /** Persist a positional-postings index PARTITIONED BY TERM BUCKET
-    * (VERDICT r17 #4) — the stored form [[positionalPostingsIndex]]'s
+    * — the stored form [[positionalPostingsIndex]]'s
     * scaladoc promises. Raw `partitionBy("term")` would mint one
     * directory per vocabulary entry (millions of dirs — a filesystem
     * anti-pattern); hashing terms into `nBuckets` directories keeps the
@@ -419,8 +418,8 @@ object TextOps {
   }
 
   /** Persist the index's bucket count next to the data (`_graft_nbuckets`
-    * — underscore-prefixed, so parquet readers ignore it like _SUCCESS;
-    * ADVICE r18): the write-time and probe-time `nBuckets` are otherwise
+    * — underscore-prefixed, so parquet readers ignore it like _SUCCESS):
+    * the write-time and probe-time `nBuckets` are otherwise
     * independent parameters, and a probe computed with the WRONG count
     * filters on the wrong buckets and silently returns FALSE NEGATIVES —
     * a missed match in a decontamination read, with no error.
@@ -458,7 +457,7 @@ object TextOps {
   def termBucketCol(term: Column, nBuckets: Int): Column =
     pmod(crc32(term.cast("binary")), lit(nBuckets.toLong))
 
-  /** Maintain the STORED index under STREAMING (VERDICT r17 #8): one
+  /** Maintain the STORED index under STREAMING: one
     * admitted epoch's postings written exactly-once under
     * `path/batch_id=<id>/term_bucket=<b>/` — the
     * [[graft.streaming.ExactlyOnceSink]] recipe (overwrite-by-batchId
@@ -500,7 +499,7 @@ object TextOps {
   }
 
   /** [[phraseStoredSearch]] with the bucket count read from the index's
-    * OWN `_graft_nbuckets` marker (ADVICE r18): the stored value is
+    * OWN `_graft_nbuckets` marker: the stored value is
     * authoritative, so the caller cannot mis-bucket the probe; a
     * pre-marker tree falls back to `nBucketsDefault` (the historical
     * write default). */
@@ -654,7 +653,7 @@ object TextOps {
 
   /** The FULL publicsuffix.org snapshot (9.5k rules), packaged as
     * resource data from the Debian `publicsuffix` package's copy of the
-    * public list (VERDICT r15 #8) — ICANN and private sections both, the
+    * public list — ICANN and private sections both, the
     * standard lookup behavior. [[PublicSuffixRules]] stays as the compact
     * spec table; the operator is identical, only the rule data grows.
     * Unicode IDN rules ride along verbatim; ASCII crawl hosts simply
@@ -673,7 +672,7 @@ object TextOps {
     * `!`-stripped exception rule of L labels matches the i = L candidate;
     * a wildcard rule counts its `*` as a label and matches the
     * i = token-count candidate. Derived from the rule table rather than
-    * hard-coded (ADVICE r15): the full publicsuffix.org list has deeper
+    * hard-coded: the full publicsuffix.org list has deeper
     * rules than the compact subset, and a swapped-in rule deeper than a
     * frozen cap would silently map its hosts to a SHORTER registrable
     * domain with no error. */
@@ -681,8 +680,7 @@ object TextOps {
     rules.map(_.stripPrefix("!").split("\\.").length).max
 
   /** host → registrable domain (eTLD+1) mapping — the public-suffix-list
-    * longest-matching-rule algorithm as a lookup-table JOIN (VERDICT r14
-    * "what's missing" #2): a crawl-curation pass caps domains at eTLD+1
+    * longest-matching-rule algorithm as a lookup-table JOIN: a crawl-curation pass caps domains at eTLD+1
     * (every `*.blogspot.com` blog is its own operator decision; every
     * `news./www./cdn.` subdomain of one site is NOT).
     *
@@ -696,7 +694,7 @@ object TextOps {
     * bare TLD when nothing matches (the PSL's implicit `*` rule); the
     * registrable domain is the suffix plus one label. A host that IS a
     * public suffix, or an IP literal — dotted IPv4 or bracketed IPv6
-    * (`[::1]`, VERDICT r15 #7) — has no registrable domain (NULL).
+    * (`[::1]`) — has no registrable domain (NULL).
     * Ports are stripped before matching.
     *
     * Scale shape: input should be DISTINCT hosts (site cardinality, not
@@ -746,7 +744,7 @@ object TextOps {
         // bracketed IPv6 authority ([::1], [2001:db8::1]:8080) — the
         // bracket test must come first, since an IPv4-mapped literal
         // ([::ffff:192.0.2.1]) contains dots and would otherwise fall
-        // through to the label machinery (VERDICT r15 #7)
+        // through to the label machinery
         when(col("host").startsWith("["), lit(null).cast("string"))
         .when(regexp_replace(col("host"), ":\\d+$", "").rlike("^[0-9.]+$"),
           lit(null).cast("string"))
@@ -836,7 +834,7 @@ object TextOps {
         when(col("allow").cast("boolean"), lit(1L)).otherwise(lit(0L)).as("rallow"),
         col("rule").cast("string").as("rule"))).as("rules"))
 
-  /** PER-DOMAIN robots.txt rules as a JOINED dimension (VERDICT r17 #2) —
+  /** PER-DOMAIN robots.txt rules as a JOINED dimension —
     * the form [[urlRuleFilter]]'s scaladoc promises for real crawls: each
     * site publishes its OWN robots.txt, so admissibility is a probe of a
     * `(domain, rule, allow)` dimension, not one global literal list. The
@@ -886,7 +884,7 @@ object TextOps {
         col("__d.allowed").as("allowed"))
 
   /** RFC 9309 §2.2.1 USER-AGENT GROUP election over a per-domain rule
-    * dimension (VERDICT r18 #2): a real robots.txt scopes its rule
+    * dimension: a real robots.txt scopes its rule
     * groups by `User-agent`, and a crawler must first elect the MOST
     * SPECIFIC matching agent group per site, then obey ONLY that group's
     * rules — groups do not merge (a named group matching means the `*`
@@ -940,7 +938,7 @@ object TextOps {
       urlRulesPackedForAgent(ruleDim, crawlerAgent))
 
   /** Per-URL fetch-history statistics — the change-detector input of the
-    * RECRAWL scheduler (VERDICT r17 #3): from a fetch log of
+    * RECRAWL scheduler: from a fetch log of
     * (url, epoch, fingerprint) observations, one row per URL with
     * `n_fetches`, `last_fetch`, and `n_changes` (the count of CONSECUTIVE
     * fetches whose content fingerprint differs — the observed
@@ -1003,7 +1001,7 @@ object TextOps {
     * cross-engine by rebuilding from scratch). Precondition: every epoch
     * fetch of a url is LATER than the standing `last_fetch` for that url
     * — true for time-ordered ingest epochs. The precondition is GUARDED
-    * at runtime (ADVICE r18): a url whose epoch `first_fetch` is not
+    * at runtime: a url whose epoch `first_fetch` is not
     * strictly later than the standing `last_fetch` — an interleaved or
     * REPLAYED epoch — raises through a codegen'd `assert_true` folded
     * into the merge, so out-of-order ingest fails loudly instead of
@@ -1054,8 +1052,8 @@ object TextOps {
 
   /** DELETE a url set from the maintained recrawl-stats table — the
     * right-to-be-forgotten step the other maintained-index families
-    * already satisfy (the d23/d24 / [[positionalIndexDelete]] contract;
-    * VERDICT r18 missing #3): a purged url's whole fetch history leaves
+    * already satisfy (the d23/d24 / [[positionalIndexDelete]] contract):
+    * a purged url's whole fetch history leaves
     * the index. Because the stats table is EXACTLY one row per url —
     * per-url granularity IS the table's granularity — the anti-join is
     * not an approximation: delete == rebuild over the filtered log holds
@@ -1070,7 +1068,7 @@ object TextOps {
       broadcast(removeUrls.select(col(urlCol).cast("string").as("url")).distinct()),
       Seq("url"), "left_anti")
 
-  /** DURABLE recrawl-stats maintenance (VERDICT r18 missing #4) — the
+  /** DURABLE recrawl-stats maintenance — the
     * [[positionalIndexEpochWrite]] treatment for the fetch-stats index:
     * one admitted epoch's PER-EPOCH stats row set
     * ([[recrawlStatsFull]] over just that epoch — already the mergeable
@@ -1129,7 +1127,7 @@ object TextOps {
   }
 
   // -------------------------------------------------------------------------
-  // Seen-URL BLOOM filter (r19) — the frontier novelty test's scale path.
+  // Seen-URL BLOOM filter — the frontier novelty test's scale path.
   // The unified fetch queue decides "have we ever fetched this url?" by a
   // broadcast anti-join against the stats index; at 100 TB the seen-set
   // outgrows any broadcast, and the classical crawler answer (Heritrix/
@@ -1195,7 +1193,7 @@ object TextOps {
           (col("bits").bitwiseAND(col("__m")) =!= 0L), 1L).otherwise(0L)) ===
         lit(k.toLong)).as("maybe_seen"))
 
-  /** RECRAWL priority (freshness scheduling, VERDICT r17 #3): each
+  /** RECRAWL priority (freshness scheduling): each
     * discovered URL scored for re-fetch as `age × observed change rate`,
     * in exact integer arithmetic —
     *   - `age = now − last_fetch`,
@@ -1380,7 +1378,7 @@ object TextOps {
       .groupBy("doc_id").agg(
         sum("c").as("n_words"), max("c").as("top_word_count"))
     // native one-call-per-doc window md5s (same tokens, same windows — the
-    // r16 WindowHashArray identity, spec-pinned against the declarative form)
+    // WindowHashArray identity, spec-pinned against the declarative form)
     val grams = docs.select(col(idCol).cast("long").as("doc_id"),
       explode(graft.expressions.GraftExpressions.windowHashes(col(textCol), n)).as("g"))
     val gramStats = grams
@@ -1635,7 +1633,7 @@ object TextOps {
       .crossJoin(broadcast(vocab))
       // graft_ln_strict, not the built-in log: the q6 floor downstream must
       // be bit-stable across executions (StrictMath in BOTH eval paths —
-      // the built-in is StrictMath only under codegen; VERDICT r13 #1)
+      // the built-in is StrictMath only under codegen)
       .withColumn("nll_q6",
         floor(-graft.expressions.GraftExpressions.lnStrict(p)
           * lit(1000000.0) + lit(0.5)).cast("long"))
@@ -1710,7 +1708,7 @@ object TextOps {
       .crossJoin(broadcast(btypes))
       // graft_ln_strict, not the built-in log: the q6 floor downstream must
       // be bit-stable across executions (StrictMath in BOTH eval paths —
-      // the built-in is StrictMath only under codegen; VERDICT r13 #1)
+      // the built-in is StrictMath only under codegen)
       .withColumn("nll_q6",
         floor(-graft.expressions.GraftExpressions.lnStrict(p)
           * lit(1000000.0) + lit(0.5)).cast("long"))
@@ -1793,10 +1791,20 @@ object TextOps {
     * the DP calibration and histogram-median thresholds.
     *
     * Output: (source, loss_q6, w_q6, target_tokens) — deliberately
-    * double-free (VERDICT r14 #1): w_q6/1e6 is the mixture weight. */
+    * double-free, so its hash gate never depends on how an engine formats
+    * or parses an IEEE value: w_q6/1e6 is the mixture weight. */
   def doremiMixWeights(docs: DataFrame, idCol: String, textCol: String,
       sourceCol: String, iterations: Int = 8, tokenBudget: Long = 1000000L,
-      etaPct: Int = 50): DataFrame = {
+      etaPct: Int = 50): DataFrame =
+    doremiMixTraced(docs, idCol, textCol, sourceCol, iterations, tokenBudget, etaPct)._1
+
+  /** [[doremiMixWeights]] returning, next to the mixture, what its DuckDB
+    * oracle splices as VALUES tables: the per-source (source, loss_q6) rows
+    * the EG loop consumed and its (round, source, excess_q6, post-floor
+    * weight u) trace ([[egRounds]]). */
+  def doremiMixTraced(docs: DataFrame, idCol: String, textCol: String,
+      sourceCol: String, iterations: Int = 8, tokenBudget: Long = 1000000L,
+      etaPct: Int = 50): (DataFrame, Seq[(String, Long)], Seq[(Int, String, Long, Long)]) = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -1806,33 +1814,11 @@ object TextOps {
     val perSource = perDoc.groupBy("__src")
       .agg(sum(col("sum_nll_q6")).as("s"), sum(col("n_trans")).as("n"))
       .select(col("__src"), expr("s div n").as("loss_q6"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
-    egMixtureRows(perSource, iterations, tokenBudget, etaPct)
-      .toDF("source", "loss_q6", "w_q6", "target_tokens")
+      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
+    val (w, trace) = egRounds(perSource, iterations, etaPct)
+    (egAllocation(perSource, w, tokenBudget)
+      .toDF("source", "loss_q6", "w_q6", "target_tokens"), perSource, trace)
   }
-
-  /** Inputs + per-round EG trace of the most recent [[egMixtureRows]]
-    * call: (iterations, etaPct, per-source (source, loss_q6) rows, and
-    * (round, source, excess_q6, post-floor weight u) rows), exported to
-    * the DuckDB oracle as VALUES splices. De-flake (VERDICT r11 #1 / r12
-    * #1 / r13 #1 / r14 #1): the engine computes the exp with
-    * `StrictMath.exp` and the loss `ln` with
-    * [[graft.expressions.LnStrict]] — fdlibm bit-exact by JLS spec, so
-    * the frozen trace always matches a later re-execution of the same
-    * gate. The trace deliberately carries the POST-FLOOR integer
-    * `u = floor(w·exp(η·excess/1e6) + 0.5)` rather than the IEEE factor
-    * itself (VERDICT r14 #1): a DOUBLE literal inside a VALUES splice is
-    * the one surface a differently-versioned DuckDB in the verification
-    * environment can parse 1 ulp differently (measured on 13/160 of the
-    * r14 factors via its decimal-mediated literal path), whereas BIGINTs
-    * are exact in every engine. With the u splice the oracle's EG chain
-    * is pure integer end-to-end; the oracle still recomputes its own
-    * `exp` per round and FAILS CLOSED unless each spliced u sits within
-    * ±1 of its own `floor(w·exp(·)+0.5)` (the 1-ulp-at-a-floor-boundary
-    * envelope) — and the per-source losses must agree within ±1 q6 with
-    * identical support. Each round joins the trace on its OWN recomputed
-    * excess, so a stale or mis-keyed splice drops rows (fail-visible). */
-  @volatile private[graft] var lastEgTrace: Option[(Int, Int, Seq[(String, Long)], Seq[(Int, String, Long, Long)])] = None
 
   /** The EG + allocation core of [[doremiMixWeights]] as a pure function
     * over (source, loss_q6) rows — shared by the batch trainer and the
@@ -1841,7 +1827,23 @@ object TextOps {
     * Input must be sorted by source (the deterministic-iteration order). */
   private[graft] def egMixtureRows(perSource: Seq[(String, Long)],
       iterations: Int, tokenBudget: Long,
-      etaPct: Int): Seq[(String, Long, Long, Long)] = {
+      etaPct: Int): Seq[(String, Long, Long, Long)] =
+    egAllocation(perSource, egRounds(perSource, iterations, etaPct)._1, tokenBudget)
+
+  /** The EG rounds of [[egMixtureRows]]: the final q6 weights and the
+    * per-round (round, source, excess_q6, post-floor weight u) trace. The
+    * exp runs through `StrictMath.exp` (fdlibm bit-exact by JLS spec), so a
+    * gate-time-frozen trace always matches a later re-execution of the
+    * same gate. The trace carries the POST-FLOOR integer
+    * `u = floor(w·exp(η·excess/1e6) + 0.5)`, never the IEEE factor: a
+    * DOUBLE literal inside a VALUES splice is the one surface a
+    * differently-versioned DuckDB can parse 1 ulp differently, whereas
+    * BIGINTs are exact in every engine. The oracle still recomputes its own
+    * `exp` per round and FAILS CLOSED unless each spliced u sits within ±1
+    * of its own `floor(w·exp(·)+0.5)`, and joins each round on its OWN
+    * recomputed excess, so a stale or mis-keyed splice drops rows. */
+  private def egRounds(perSource: Seq[(String, Long)], iterations: Int,
+      etaPct: Int): (Array[Long], Seq[(Int, String, Long, Long)]) = {
     val nSrc = perSource.length
     require(nSrc >= 1, "corpus must contain at least one source with >= 2-token docs")
     val losses = perSource.map(_._2)
@@ -1853,18 +1855,24 @@ object TextOps {
         val excessQ6 = math.max(0L, lq - meanQ6)
         // StrictMath.exp: fdlibm bit-exact on every JVM/JIT tier/process,
         // so the gate-time-frozen trace always matches a re-execution
-        // (Math.exp is 1-ulp and tier-dependent — VERDICT r13 #1)
+        // (Math.exp is 1-ulp and tier-dependent)
         val factor = StrictMath.exp((etaPct.toDouble / 100.0 * excessQ6.toDouble) / 1000000.0)
         val uq = math.floor(wq.toDouble * factor + 0.5).toLong
         // freeze the post-floor LONG, not the factor double — the splice
-        // must never carry an IEEE literal (VERDICT r14 #1)
+        // must never carry an IEEE literal
         trace += ((round, perSource(i)._1, excessQ6, uq))
         uq
       }
       val uSum = u.sum
       w = u.map(uq => uq * 1000000L / uSum)
     }
-    lastEgTrace = Some((iterations, etaPct, perSource, trace.result()))
+    (w, trace.result())
+  }
+
+  private def egAllocation(perSource: Seq[(String, Long)], w: Array[Long],
+      tokenBudget: Long): Seq[(String, Long, Long, Long)] = {
+    val nSrc = perSource.length
+    val losses = perSource.map(_._2)
     // exact integer allocation of tokenBudget: floor shares, then the
     // whole deficit dealt (deficit div nSrc) to everyone and the
     // remainder to the largest fractional shares (source-name tiebreak) —
@@ -1930,7 +1938,7 @@ object TextOps {
       .join(ctx, Seq("v"), "left")
       // graft_ln_strict, not the built-in log: the q6 floor downstream must
       // be bit-stable across executions (StrictMath in BOTH eval paths —
-      // the built-in is StrictMath only under codegen; VERDICT r13 #1)
+      // the built-in is StrictMath only under codegen)
       .withColumn("nll_q6",
         floor(-graft.expressions.GraftExpressions.lnStrict(p)
           * lit(1000000.0) + lit(0.5)).cast("long"))
@@ -1938,12 +1946,10 @@ object TextOps {
       .agg(count(lit(1)).as("n_trans"), sum(col("nll_q6")).as("sum_nll_q6"))
   }
 
-  /** Trained hyperparameters + weights of the last [[qualityLrScore]] run
-    * in this JVM: (numBuckets, iters, lr, scale, labelThreshold, weights).
-    * Same contract as `Similarity.lastIvfCentroids` — Verify runs every
-    * query before dumping oracle SQL, so the dump carries the exact model
-    * the gate scored with. */
-  @volatile var lastQualityLr: Option[(Int, Int, Double, Double, Double, Array[Double])] = None
+  /** A trained quality-LR model: (numBuckets, iters, lr, scale,
+    * labelThreshold, weights) — what [[scoreQualityLr]] scores with and the
+    * x12 oracle splices. */
+  type QualityLr = (Int, Int, Double, Double, Double, Array[Double])
 
   /** Hashed bag-of-tokens features + weak label for [[trainQualityLr]]:
     * x_j = scale · count(bucket j) / n_tokens over `numBuckets` md5 buckets,
@@ -2010,9 +2016,10 @@ object TextOps {
   def trainQualityLr(docs: DataFrame, idCol: String, textCol: String,
       numBuckets: Int = 128, iters: Int = 60, lr: Double = 2.0,
       scale: Double = 10.0, labelThreshold: Double = 0.06,
-      stopwords: Seq[String] = DefaultStopwords): Array[Double] =
-    trainOnFeatures(lrFeatures(docs, idCol, textCol, numBuckets, scale,
-      labelThreshold, stopwords), numBuckets, iters, lr)
+      stopwords: Seq[String] = DefaultStopwords): QualityLr =
+    (numBuckets, iters, lr, scale, labelThreshold,
+      trainOnFeatures(lrFeatures(docs, idCol, textCol, numBuckets, scale,
+        labelThreshold, stopwords), numBuckets, iters, lr))
 
   private def trainOnFeatures(feats: DataFrame, numBuckets: Int, iters: Int,
       lr: Double, unpersistFeatures: Boolean = true): Array[Double] = {
@@ -2075,8 +2082,7 @@ object TextOps {
     w
   }
 
-  /** Trains via [[trainQualityLr]], records the model in [[lastQualityLr]],
-    * and scores every document: the weak label, the exact q6-fixed linear
+  /** Trains like [[trainQualityLr]] and scores every document: the weak label, the exact q6-fixed linear
     * score (z_q6 — bit-identical in any engine), the sigmoid probability
     * (round4 — the one soft spot, exp being libm), and the prediction
     * (sign of the EXACT z, so it can never flip on a rounding boundary).
@@ -2090,20 +2096,18 @@ object TextOps {
     // path persists it; scoring reuses the same cached plan)
     val feats = lrFeatures(docs, idCol, textCol, numBuckets, scale,
       labelThreshold, stopwords)
-    val w = trainOnFeatures(feats, numBuckets, iters, lr, unpersistFeatures = false)
-    lastQualityLr = Some((numBuckets, iters, lr, scale, labelThreshold, w))
-    scoreProjection(feats, w)
+    scoreProjection(feats,
+      trainOnFeatures(feats, numBuckets, iters, lr, unpersistFeatures = false))
   }
 
-  /** Score a corpus under an ALREADY-TRAINED model from [[lastQualityLr]]'s
-    * tuple shape — the pure-projection scoring path, zero training stages
-    * (VERDICT r13 #6: the PR-curve sweep's contract is "pin the choice
-    * given the filter", so it must not pay full training cost when the
-    * filter is already trained in this JVM). Output is identical to
+  /** Score a corpus under an ALREADY-TRAINED model ([[trainQualityLr]]) —
+    * the pure-projection scoring path, zero training stages: the PR-curve
+    * sweep's contract is "pin the choice given the filter", so it must not
+    * pay full training cost when the filter is already trained. Output is identical to
     * [[qualityLrScore]] given the same model, by construction (the same
     * projection over the same feature build). */
   def scoreQualityLr(docs: DataFrame, idCol: String, textCol: String,
-      model: (Int, Int, Double, Double, Double, Array[Double]),
+      model: QualityLr,
       stopwords: Seq[String] = DefaultStopwords): DataFrame = {
     val (numBuckets, _, _, scale, labelThreshold, w) = model
     scoreProjection(
@@ -2143,7 +2147,7 @@ object TextOps {
       addK: Double = 0.5, tag: String = "dsir"): DataFrame = {
     val base = docs.select(col(idCol).cast("long").as("doc_id"),
       targetPred.as("__target"), tokens(col(textCol)).as("toks"))
-    // localCheckpoint (r19, guide §2.4): the hashed-bigram occurrence table
+    // localCheckpoint (guide §2.4): the hashed-bigram occurrence table
     // feeds BOTH the λ-table aggregate and the per-doc weight aggregate —
     // un-materialized, each consumer re-runs the upstream filter chain +
     // tokenize + per-bigram md5 over the text. The stored rows are three
@@ -2156,7 +2160,7 @@ object TextOps {
       .select(col("doc_id"), col("__target"),
         (conv(substring(md5(col("bg")), 1, 2), 16, 10).cast("long") % numBuckets).as("f"))
       .localCheckpoint()
-    // one pass for BOTH distributions (r19; was a groupBy + a filtered
+    // one pass for BOTH distributions (not a groupBy + a filtered
     // groupBy + a left join): ct = conditional count in the same aggregate,
     // identical to the joined form (absent target buckets read 0 either way)
     val table = trans.groupBy("f").agg(count(lit(1)).as("cr"),
@@ -2744,7 +2748,7 @@ object TextOps {
     * the enriched index differs from the plain one ONLY in how tf is
     * assembled. */
   private def bm25FromTf(tf0: DataFrame): (DataFrame, DataFrame, Long, Long) = {
-    // checkpoint the finished (doc_id, th, tf) posting table (r19, guide
+    // checkpoint the finished (doc_id, th, tf) posting table (guide
     // §2.4): THREE consumers (doc-length aggregate, the tfdl join, the df
     // aggregate) would otherwise each re-run the corpus tokenize + per-term
     // md5 + tf shuffle; the stored rows are three longs — this IS the
@@ -2758,8 +2762,7 @@ object TextOps {
     (tfdl, dfreq, statsRow.getLong(0), statsRow.getLong(1))
   }
 
-  /** [[bm25Index]] enriched with INLINK ANCHOR TEXT (VERDICT r16 missing
-    * #2): each anchor's tokens index as if they were part of the TARGET
+  /** [[bm25Index]] enriched with INLINK ANCHOR TEXT: each anchor's tokens index as if they were part of the TARGET
     * document's own text, `weight`-fold — the classic anchor-text
     * relevance signal of the public web-search literature (what the web
     * CALLS a page often describes it better than the page itself, and is

@@ -46,16 +46,9 @@ final case class PrevMarked(key: String, epoch: Int, prev: Int, value: Double)
   */
 object StreamingPipelines {
 
-  private implicit def stateEncoder: Encoder[BoundingState] = Encoders.kryo[BoundingState]
   private implicit def dpStateEncoder: Encoder[DpKeyState] = Encoders.kryo[DpKeyState]
-  private implicit def lastSeenEncoder: Encoder[LastSeen] = Encoders.kryo[LastSeen]
   private implicit def replayWindowEncoder: Encoder[graft.crypto.ReplayWindow] =
     Encoders.kryo[graft.crypto.ReplayWindow]
-
-  final case class BoundingState(var used: Long)
-
-  /** Stage-A state: the last epoch this (key, user) pair contributed. */
-  final case class LastSeen(var epoch: Int)
 
   /** Streaming contribution bounding: admits each user's first `c`
     * contributions across the whole stream (cross-epoch, like the reference's
@@ -65,12 +58,12 @@ object StreamingPipelines {
     input
       .groupByKey(_.userId)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: String, rows: Iterator[Contribution], state: GroupState[BoundingState]) => {
-          val st = state.getOption.getOrElse(BoundingState(0L))
+        (_: String, rows: Iterator[Contribution], state: GroupState[Long]) => {
+          var used = state.getOption.getOrElse(0L)
           val admitted = rows.toSeq.sortBy(r => (r.epoch, r.value)).iterator.takeWhile { _ =>
-            if (st.used < c) { st.used += 1; true } else false
+            if (used < c) { used += 1; true } else false
           }.toList
-          state.update(st)
+          state.update(used)
           admitted.iterator
         })
   }
@@ -97,14 +90,14 @@ object StreamingPipelines {
     input
       .groupByKey(c => (c.key, c.userId))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (ku: (String, String), rows: Iterator[Contribution], state: GroupState[LastSeen]) => {
-          val st = state.getOption.getOrElse(LastSeen(-1))
+        (ku: (String, String), rows: Iterator[Contribution], state: GroupState[Int]) => {
+          var last = state.getOption.getOrElse(-1)
           val out = rows.toSeq.groupBy(_.epoch).toSeq.sortBy(_._1).map { case (epoch, rs) =>
-            val prev = st.epoch
-            if (epoch > st.epoch) st.epoch = epoch
+            val prev = last
+            if (epoch > last) last = epoch
             PrevMarked(ku._1, epoch, prev, rs.map(_.value).sum)
           }
-          state.update(st)
+          state.update(last)
           out.iterator
         })
   }
@@ -955,7 +948,7 @@ object StreamingPipelines {
         size(graft.operators.TextOps.tokens(col("__clean"))).cast("long"))
       // distinct: accept either the (canonical_url) view or a per-page
       // crawl log whose repeated urls would multiply probe rows (the
-      // blockDedupStream ADVICE r11 guard)
+      // blockDedupStream guard)
       .join(urlIndex.select(col("canonical_url")).distinct()
         .withColumn("__uhit", lit(1)), Seq("canonical_url"), "left_outer")
       .join(contentIndex.select(col("fingerprint"), col("rep_id")),
@@ -1002,8 +995,7 @@ object StreamingPipelines {
       .withColumn("host",
         graft.operators.TextOps.urlHost(col("canonical_url")))
       // distinct on both dimensions: accept either the curated view or a
-      // storage table with repeated rows (the blockDedupStream ADVICE
-      // r11 guard)
+      // storage table with repeated rows (the blockDedupStream guard)
       .join(pslDim.select(col("host"), col("registrable_domain")).distinct(),
         Seq("host"), "left_outer")
       .join(domainCounts.select(col("registrable_domain"), col("n_pages"))
@@ -1064,7 +1056,7 @@ object StreamingPipelines {
   }
 
   /** Streaming per-URL FRONTIER — the composed ingest form of the crawl
-    * queue (VERDICT r17 #6), one function for all three per-link
+    * queue, one function for all three per-link
     * decision arms the `e2e_url_frontier` gate consumes:
     *   1. ENDORSEMENT — [[linkFrontierStream]]'s anchor extraction,
     *      resolution, canonicalization, and the stream-static PSL +
@@ -1181,8 +1173,8 @@ object StreamingPipelines {
     probes
       // distinct: accept EITHER index form — the (h, rep) view or the
       // per-occurrence storage table, whose repeated h rows would
-      // otherwise multiply matched probe rows (ADVICE r11, the same
-      // guard as Dedup.incrementalBlockDedupAgainst)
+      // otherwise multiply matched probe rows (the same guard as
+      // Dedup.incrementalBlockDedupAgainst)
       .join(index.select(col("h")).distinct().withColumn("__hit", lit(1)),
         Seq("h"), "left_outer")
       .withColumn("__cut", when(col("__hit").isNotNull, col("bi")))

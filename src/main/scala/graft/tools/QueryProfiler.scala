@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 
 import scala.collection.mutable
@@ -9,9 +10,9 @@ import scala.collection.mutable
   * (`confidentialstorm/host/src/main/java/ch/usi/inf/confidentialstorm/host/profiling/BoltProfiler.java`:
   * per-bolt ECALL timings, tuple counters, lifecycle CSVs). On Spark the
   * scheduler already measures every stage and task, so parity is an attribution
-  * problem, not a measurement one: the bench wraps each query in
-  * `sc.setJobGroup(queryName, …)` and this listener buckets each completed
-  * stage under the job group of the job that submitted it.
+  * problem, not a measurement one: the bench runs each query inside
+  * [[QueryProfiler.inEntry]] and this listener buckets each completed stage
+  * under the entry of the job that submitted it.
   *
   * Attribution is PER RUN: a bench entry executes its workload once per
   * lap (`SPARK_GRAFT_BENCH_REPEATS` laps, interleaved with the other arms
@@ -47,7 +48,7 @@ final class QueryProfiler extends SparkListener {
         s""""input_bytes":$inputBytes,"spilled_bytes":$spilledBytes,"runs":$runs"""
   }
 
-  private val stageGroup = mutable.Map[Int, String]() // stageId -> job group
+  private val stageGroup = mutable.Map[Int, String]() // stageId -> entry
   // metrics of the run currently executing per group (no endRun yet)
   private val live = mutable.Map[String, QueryMetrics]()
   // per group: the kept (min-wall successful) run, with the total run count
@@ -55,7 +56,7 @@ final class QueryProfiler extends SparkListener {
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     val group = Option(e.properties)
-      .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+      .flatMap(p => Option(p.getProperty(QueryProfiler.EntryProperty)))
       .getOrElse("")
     if (group.nonEmpty) e.stageIds.foreach(stageGroup(_) = group)
   }
@@ -101,5 +102,21 @@ final class QueryProfiler extends SparkListener {
   def snapshot: Map[String, QueryMetrics] = synchronized {
     val liveOnly = live.view.filterKeys(!kept.contains(_))
     (kept ++ liveOnly).map { case (k, v) => k -> v.copy() }.toMap
+  }
+}
+
+object QueryProfiler {
+
+  /** Local property naming the bench entry a job belongs to. A thread
+    * started inside an entry inherits it with the other local properties —
+    * a streaming query's execution thread included, whose job group Spark
+    * sets to the query's run id. */
+  val EntryProperty = "graft.bench.entry"
+
+  /** Run `body` as entry `name`: its jobs, and those of every thread it
+    * starts, are attributed to `name`. */
+  def inEntry[A](sc: SparkContext, name: String)(body: => A): A = {
+    sc.setLocalProperty(EntryProperty, name)
+    try body finally sc.setLocalProperty(EntryProperty, null)
   }
 }

@@ -4,10 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkEntry, SpliceStore}
 
-/** Cross-execution bit-reproducibility for the two transcendental-bearing
-  * gates (`x14_word_centrality`, `q_doremi_mix`) — VERDICT r13 #1.
+/** Cross-execution bit-reproducibility for the transcendental-bearing
+  * gates (`x14_word_centrality`, `q_doremi_mix`, `q_ppl_buckets`): their
+  * output and the oracle they freeze must not depend on how the engine
+  * evaluated a transcendental.
   *
-  * The three-round driver hash flake was NOT cross-engine (the splice
+  * The hazard is not cross-engine (the splice
   * machinery closed that) but cross-EXECUTION: Spark's built-in `log` is
   * `StrictMath.log` under whole-stage codegen but `Math.log` on the
   * interpreted path (constant folding, codegen bailout, subexpression
@@ -22,7 +24,7 @@ import graft.{SparkEntry, SpliceStore}
   * whole-stage codegen and once with codegen fully disabled (the two
   * evaluation paths that previously reached different libm implementations)
   * plus a second same-config run, and ALL collected outputs and frozen
-  * splice strings must be byte-identical. Before the fix, the
+  * `sql:<gate>` oracles must be byte-identical. Before the fix, the
   * codegen-vs-interpreted arm flips q6 longs whenever an input lands within
   * an ulp of a `floor(x·1e6 + 0.5)` boundary; after it, equality holds by
   * spec, not by luck. */
@@ -42,9 +44,8 @@ class DeterminismSpec extends AnyFunSuite {
   }
 
   /** Run `gate` once under a given codegen regime, returning (rows as
-    * canonical strings, splice fragments for `spliceKeys`). */
-  private def runOnce(gate: String, spliceKeys: Seq[String],
-      codegen: Boolean): (Seq[String], Map[String, String]) = {
+    * canonical strings, the oracle the gate froze as `sql:<gate>`). */
+  private def runOnce(gate: String, codegen: Boolean): (Seq[String], String) = {
     val conf = spark.conf
     val prevWhole = conf.get("spark.sql.codegen.wholeStage", "true")
     val prevFactory = conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
@@ -52,57 +53,50 @@ class DeterminismSpec extends AnyFunSuite {
       conf.set("spark.sql.codegen.wholeStage", codegen.toString)
       conf.set("spark.sql.codegen.factoryMode",
         if (codegen) "FALLBACK" else "NO_CODEGEN")
-      spliceKeys.foreach(k => SpliceStore.put(k, ""))
+      SpliceStore.remove(s"sql:$gate")
       val rows = SparkEntry.queries(gate)(spark, sfDir)
         .collect().map(_.toString).toSeq
-      val frags = spliceKeys.map(k => k -> SpliceStore.get(k).getOrElse("")).toMap
-      (rows, frags)
+      (rows, SpliceStore.get(s"sql:$gate").getOrElse(""))
     } finally {
       conf.set("spark.sql.codegen.wholeStage", prevWhole)
       conf.set("spark.sql.codegen.factoryMode", prevFactory)
     }
   }
 
-  private def assertBitStable(gate: String, spliceKeys: Seq[String]): Unit = {
-    val (rowsCg1, fragsCg1) = runOnce(gate, spliceKeys, codegen = true)
-    val (rowsCg2, fragsCg2) = runOnce(gate, spliceKeys, codegen = true)
-    val (rowsInt, fragsInt) = runOnce(gate, spliceKeys, codegen = false)
+  private def assertBitStable(gate: String): Unit = {
+    val (rowsCg1, sqlCg1) = runOnce(gate, codegen = true)
+    val (rowsCg2, sqlCg2) = runOnce(gate, codegen = true)
+    val (rowsInt, sqlInt) = runOnce(gate, codegen = false)
     assert(rowsCg1.nonEmpty, s"$gate returned no rows")
-    spliceKeys.foreach(k =>
-      assert(fragsCg1(k).nonEmpty, s"$gate did not freeze splice $k"))
+    assert(sqlCg1.nonEmpty, s"$gate did not freeze its oracle")
     assert(rowsCg1 === rowsCg2, s"$gate: two codegen runs disagree")
-    assert(fragsCg1 === fragsCg2, s"$gate: two codegen runs froze different splices")
+    assert(sqlCg1 === sqlCg2, s"$gate: two codegen runs froze different oracles")
     assert(rowsCg1 === rowsInt,
       s"$gate: codegen vs interpreted output differs — a transcendental is " +
         "still routed through the split-brained built-in (Math vs StrictMath)")
-    assert(fragsCg1 === fragsInt,
-      s"$gate: codegen vs interpreted splice differs")
+    assert(sqlCg1 === sqlInt,
+      s"$gate: codegen vs interpreted frozen oracle differs")
   }
 
   test("x14_word_centrality is bit-identical across codegen/interpreted/repeat runs") {
-    assertBitStable("x14_word_centrality", Seq("x14_edges"))
+    assertBitStable("x14_word_centrality")
   }
 
   test("q_doremi_mix is bit-identical across codegen/interpreted/repeat runs") {
-    assertBitStable("q_doremi_mix", Seq("doremi_losses", "doremi_trace"))
+    assertBitStable("q_doremi_mix")
   }
 
   test("q_ppl_buckets is bit-identical across codegen/interpreted/repeat runs") {
-    assertBitStable("q_ppl_buckets", Seq("ppl_k"))
+    assertBitStable("q_ppl_buckets")
   }
 
-  /** VERDICT r14 #1c sweep lint, spec form (Verify enforces it at dump
-    * time too): a splice-backed hash gate must be double-free end-to-end —
-    * no IEEE column in its output schema, no IEEE literal in its frozen
-    * VALUES splices. DOUBLE literals/columns are the one surface a
-    * differently-versioned DuckDB in the verification environment can
-    * parse or format differently. */
+  /** The double-free contract of a splice-backed hash gate, spec form (the
+    * gate enforces it too): no IEEE column in its output schema, no IEEE
+    * literal in the VALUES tables its frozen oracle splices. DOUBLE
+    * literals/columns are the one surface a differently-versioned DuckDB in
+    * the verification environment can parse or format differently. */
   test("splice-backed gates are double-free: schemas and VALUES splices carry no IEEE values") {
-    val gates = Map(
-      "x14_word_centrality" -> Seq("x14_edges"),
-      "q_doremi_mix" -> Seq("doremi_losses", "doremi_trace"),
-      "q_ppl_buckets" -> Seq("ppl_k"))
-    gates.foreach { case (gate, keys) =>
+    Seq("x14_word_centrality", "q_doremi_mix", "q_ppl_buckets").foreach { gate =>
       val df = SparkEntry.queries(gate)(spark, sfDir)
       df.collect()
       df.schema.fields.foreach { f =>
@@ -110,13 +104,15 @@ class DeterminismSpec extends AnyFunSuite {
             f.dataType != org.apache.spark.sql.types.FloatType,
           s"$gate emits IEEE column ${f.name}")
       }
-      keys.foreach { k =>
-        val frag = SpliceStore.get(k).getOrElse(fail(s"$gate did not freeze $k"))
+      val sql = SpliceStore.get(s"sql:$gate").getOrElse(fail(s"$gate did not freeze its oracle"))
+      // the spliced rows are the body of each `AS (VALUES …)` table
+      val splices = "(?m)AS \\(VALUES (.*)\\),?$".r.findAllMatchIn(sql).map(_.group(1)).toSeq
+      assert(splices.nonEmpty, s"$gate froze no VALUES splice")
+      splices.foreach { v =>
         // CAST syntax only — corpus WORDS like "double" may legitimately
         // appear inside the x14 edge splice
-        assert(!"(?i)(::\\s*|\\bAS\\s+)(DOUBLE|FLOAT|REAL)\\b".r
-            .findFirstIn(frag).isDefined,
-          s"$gate splice $k carries an IEEE cast")
+        assert(!"(?i)(::\\s*|\\bAS\\s+)(DOUBLE|FLOAT|REAL)\\b".r.findFirstIn(v).isDefined,
+          s"$gate splices an IEEE cast")
       }
     }
   }

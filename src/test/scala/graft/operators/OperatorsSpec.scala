@@ -868,7 +868,7 @@ class OperatorsSpec extends AnyFunSuite {
     val repart = CoreOps.cappedTemperatureMix(df.repartition(7), "source", "doc_id", 100L, 40)
       .collect().map(x => (x.getString(0), x.getLong(1), x.getLong(2))).toSet
     assert(repart === r.toSet)
-    // overflow fail-closed (ADVICE r11): a budget where budget·mass would
+    // overflow fail-closed: a budget where budget·mass would
     // exceed Long.MaxValue raises instead of silently mis-allocating
     // (mass for 'big' is 1e6·√10000 = 1e8, so budget 9.2e15 overflows)
     val overflow = intercept[IllegalArgumentException] {
@@ -903,7 +903,7 @@ class OperatorsSpec extends AnyFunSuite {
     val deg = CoreOps.agreementKappa(const,
       const.withColumnRenamed("label", "lb"), "id", "label", "lb").head()
     assert(deg.getDouble(5) === 1.0)
-    // NULL labels drop BEFORE aggregation (ADVICE r11): rows 5 (null in a)
+    // NULL labels drop BEFORE aggregation: rows 5 (null in a)
     // and 6 (null in b) vanish entirely, so the result equals the
     // hand-checked 4-row partial case — n=4, kappa=0.5 — instead of a
     // deflated 6-row mixture
@@ -1232,6 +1232,30 @@ class OperatorsSpec extends AnyFunSuite {
     assert(repart.toSeq === r.toSeq)
   }
 
+  test("curriculumPhases and lengthBucketBatches pass a wide payload through unchanged") {
+    import spark.implicits._
+    val narrow = (1L to 23L).map(i => (i, (i * 7 % 11).toDouble, (i * 5 % 17) + 1L))
+      .toDF("doc_id", "difficulty", "n")
+    val wide = narrow.withColumn("toks", array(col("doc_id").cast("string"), lit("x")))
+    def payloadIntact(rows: Array[org.apache.spark.sql.Row]): Unit = rows.foreach { r =>
+      assert(r.getAs[Seq[String]]("toks") === Seq(r.getAs[Long]("doc_id").toString, "x"))
+    }
+    val phasesNarrow = CoreOps.curriculumPhases(narrow, Seq("difficulty", "doc_id"), 4)
+      .select("doc_id", "phase").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val phasesWide = CoreOps.curriculumPhases(wide, Seq("difficulty", "doc_id"), 4).collect()
+    payloadIntact(phasesWide)
+    assert(phasesWide.map(r => r.getAs[Long]("doc_id") -> r.getAs[Int]("phase")).toMap === phasesNarrow)
+    val batchesNarrow = CoreOps.lengthBucketBatches(narrow, "doc_id", "n", bandWidth = 4, batchSize = 2)
+      .select("doc_id", "bucket", "batch_in_bucket").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val batchesWide = CoreOps.lengthBucketBatches(wide, "doc_id", "n", bandWidth = 4, batchSize = 2)
+      .collect()
+    payloadIntact(batchesWide)
+    assert(batchesWide.map(r => r.getAs[Long]("doc_id") ->
+      (r.getAs[Long]("bucket"), r.getAs[Long]("batch_in_bucket"))).toMap === batchesNarrow)
+    assert(phasesNarrow.size === 23 && batchesNarrow.size === 23)
+  }
+
   test("qualityLrScore: distributed fixed-point GD == single-node replica, weak labels learned") {
     val docsDf = Tables.documents(spark, sfDir)
     val (nb, iters, lr, scale, thr) = (128, 60, 2.0, 10.0, 0.06)
@@ -1272,7 +1296,7 @@ class OperatorsSpec extends AnyFunSuite {
 
     val scored = TextOps.qualityLrScore(docsDf, "doc_id", "text", nb, iters, lr, scale, thr)
       .orderBy("doc_id").collect()
-    val wDist = TextOps.lastQualityLr.get._6
+    val wDist = TextOps.trainQualityLr(docsDf, "doc_id", "text", nb, iters, lr, scale, thr)._6
     // bit-exact: every per-doc contribution is q6-fixed and summed as longs,
     // so the distributed gradient — and the whole weight trajectory — equals
     // the replica's exactly
@@ -1931,8 +1955,8 @@ class OperatorsSpec extends AnyFunSuite {
     assert(!OracleSql.all.contains("q_doremi_mix"),
       "doremi oracle must be absent before its gate has frozen a splice")
     assert(!OracleSql.all.contains("x14_word_centrality"))
-    // running the gate lambdas freezes the splice rows at GATE time — no
-    // dump-time re-read of a checkpointed frame
+    // running the gate lambdas freezes the oracles, splice rows included,
+    // at GATE time — no dump-time re-read of a checkpointed frame
     SparkEntry.queries("q_doremi_mix")(spark, sfDir).collect()
     SparkEntry.queries("x14_word_centrality")(spark, sfDir).collect()
     val sql = OracleSql.all
@@ -1948,14 +1972,11 @@ class OperatorsSpec extends AnyFunSuite {
     assert(!eg.contains("AS DOUBLE"), "the doremi oracle must be double-free end-to-end")
     assert(eg.contains("chk.bad = 0"))
     assert(sql("x14_word_centrality").contains("ppmi_e(v, w, m) AS (VALUES"))
-    // the failed-gate removal is the full set Verify drops: the raw
-    // fragments and the gate's `sql:` form
-    val frozen = Seq("doremi_losses", "doremi_trace").map(k => k -> SpliceStore.get(k).get)
-    Seq("doremi_losses", "doremi_trace", "sql:q_doremi_mix")
-      .foreach(SpliceStore.remove)
+    // the failed-gate removal is what Verify drops: the gate's `sql:` entry
+    SpliceStore.remove("sql:q_doremi_mix")
     assert(!OracleSql.all.contains("q_doremi_mix"),
       "a removed gate's oracle must disappear, not re-emit a stale one")
-    frozen.foreach { case (k, v) => SpliceStore.put(k, v) } // restore for later tests
+    SpliceStore.put("sql:q_doremi_mix", eg) // restore for later tests
     assert(OracleSql.all("q_doremi_mix") === eg)
   }
 
@@ -2406,8 +2427,8 @@ class OperatorsSpec extends AnyFunSuite {
     val rows = SparkEntry.queries("q_registrable_domain_stats")(spark, sfDir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     // 5 sites × 3 registrables (hN.com, hN.blogspot.com, hN.co.uk) plus
-    // the NULL group the IP-literal plants (bracketed IPv6 + dotted IPv4,
-    // VERDICT r15 #7) roll into — first in Spark's ascending NULL order
+    // the NULL group the IP-literal plants (bracketed IPv6 + dotted IPv4)
+    // roll into — first in Spark's ascending NULL order
     assert(rows.length === 16, rows.mkString(","))
     val (nullRows, named) = rows.partition(_._1 == null)
     assert(nullRows.length === 1 && rows.head._1 == null,
@@ -2452,7 +2473,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("urlRuleFilterPerDomain: per-domain election, cross-domain conflicts, broadcast rule dim") {
     import spark.implicits._
     val urls = Seq(
-      // the SAME path, opposite polarity on two domains (VERDICT r17 #2)
+      // the SAME path, opposite polarity on two domains
       (1L, "https://a.one.com/p/1", "one.com"),
       (2L, "https://two.com/p/1", "two.com"),
       // longest match within one domain's rule set
@@ -2481,7 +2502,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got(5L) === ((Some("/dup"), true)), "allow beats disallow on the dup pattern")
     assert(got(6L) === ((None, true)), "no rule set for the domain → implicit allow")
     assert(got(7L) === ((None, true)), "NULL domain (IP literal) → implicit allow")
-    // plan pin (VERDICT r17 #2): the rule dimension BROADCASTS and the
+    // plan pin: the rule dimension BROADCASTS and the
     // URL side never shuffles — one broadcast hash join + a codegen
     // election, nothing else
     val plan = out.queryExecution.executedPlan.toString

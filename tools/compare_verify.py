@@ -12,12 +12,15 @@ Exits 0 only when
     EXCEPT ALL over read_parquet is empty in both directions, after the
     column names and types matched.
 Prints one status line per gate (SAME, DIFF, ONLY-PARENT, ONLY-CHANGE,
-ERROR), then a summary.
+ERROR), then a summary. When the two oracle_sql.json files differ, it also
+prints one line per oracle key that is missing on either side or whose SQL
+differs, with the first differing character offset.
 
 The dumps must come from the same out-dir path: the model exports are
 spliced into the oracle SQL by absolute path. Dump the parent into a path,
 move it aside, then dump the change into the same path.
 """
+import json
 import os
 import sys
 
@@ -30,6 +33,27 @@ def read_bytes(path):
             return f.read()
     except OSError:
         return None
+
+
+def oracle_diff(parent_bytes, change_bytes):
+    """One line per oracle key missing on either side or whose SQL differs
+    between two oracle_sql.json dumps."""
+    try:
+        pa, ch = json.loads(parent_bytes), json.loads(change_bytes)
+    except ValueError as e:
+        return [f"  oracle_sql.json does not parse: {e}"]
+    lines = []
+    for key in sorted(pa.keys() | ch.keys()):
+        if key not in ch:
+            lines.append(f"  ORACLE ONLY-PARENT {key}")
+        elif key not in pa:
+            lines.append(f"  ORACLE ONLY-CHANGE {key}")
+        elif pa[key] != ch[key]:
+            a, b = pa[key], ch[key]
+            at = next((i for i, (x, y) in enumerate(zip(a, b)) if x != y), min(len(a), len(b)))
+            lines.append(f"  ORACLE DIFF {key}: first difference at offset {at} "
+                         f"({len(a)} vs {len(b)} chars)")
+    return lines
 
 
 def gates(out_dir):
@@ -65,6 +89,9 @@ def main(parent, change):
             ok = False
         elif pa != ch:
             print(f"DIFF     {name}: {len(pa)} vs {len(ch)} bytes")
+            if name == "oracle_sql.json":
+                for line in oracle_diff(pa, ch):
+                    print(line)
             ok = False
         else:
             print(f"SAME     {name} ({len(pa)} bytes)")
