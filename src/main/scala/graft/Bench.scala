@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dp.DpParams
 import graft.operators.{CoreOps, DpHistogram}
+import graft.queries.ModelQueries
 import graft.sources.SyntheticSource
 import graft.tools.{BenchReport, QueryProfiler}
 import graft.tools.BenchReport.{medianOf, r3}
@@ -394,7 +395,7 @@ object Bench {
           3.0, 2.0 / 3.0 * 1e-9, 3.0, 1.0 / 3.0 * 1e-9,
           maxTimeSteps = 100, mu = 0L, maxContributionsPerUser = 32L,
           perRecordClamp = 1.0, thresholdFailureFraction = 0.5)
-        val contrib = graft.tools.UtilityBench.workload(spark, 1000000, 100000, 100, 42L, 32L, cpus.toInt * 4)
+        val contrib = SyntheticSource.workload(spark, 1000000, 100000, 100, 42L, 32L, cpus.toInt * 4)
         val preAgg = CoreOps.preAggregatePrevEpoch(contrib, "key", "epoch", "user_id", "value")
         force(DpHistogram.run(spark, preAgg, params, 42L))
       }),
@@ -431,7 +432,7 @@ object Bench {
           3.0, 2.0 / 3.0 * 1e-9, 3.0, 1.0 / 3.0 * 1e-9,
           maxTimeSteps = 1000, mu = 0L, maxContributionsPerUser = 32L,
           perRecordClamp = 1.0, thresholdFailureFraction = 0.5)
-        val contrib = graft.tools.UtilityBench.workload(spark, 1000000, 100000, 1000, 42L, 32L, cpus.toInt * 4)
+        val contrib = SyntheticSource.workload(spark, 1000000, 100000, 1000, 42L, 32L, cpus.toInt * 4)
         val preAgg = CoreOps.preAggregatePrevEpoch(contrib, "key", "epoch", "user_id", "value")
         force(DpHistogram.run(spark, preAgg, params, 42L))
       }),
@@ -1413,7 +1414,7 @@ object Bench {
         import graft.operators.TextOps
         val (merges, wordTokens) = TextOps.bpeTrain(
           TextOps.bpeWordFreq(Tables.documents(spark, sfDir), "text"),
-          numMerges = SparkEntry.X13NumMerges)
+          numMerges = ModelQueries.X13NumMerges)
         force(wordTokens)
         require(merges.nonEmpty)
       }),
@@ -1421,7 +1422,7 @@ object Bench {
         import graft.operators.TextOps
         val (merges, wordTokens) = TextOps.bpeTrainAuto(
           TextOps.bpeWordFreq(Tables.documents(spark, sfDir), "text"),
-          numMerges = SparkEntry.X13NumMerges)
+          numMerges = ModelQueries.X13NumMerges)
         force(wordTokens)
         require(merges.nonEmpty)
       }),

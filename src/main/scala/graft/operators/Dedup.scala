@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *
   * Hash derivation uses md5 prefixes (`conv(substr(md5(s),1,8),16,10)`) rather
   * than Spark's internal hash so every step is reproducible in any engine —
-  * which is also what makes the DuckDB oracles in [[graft.SparkEntry]] possible.
+  * which is also what makes the DuckDB oracles in [[graft.oracle]] possible.
   */
 object Dedup {
 
@@ -249,7 +249,7 @@ object Dedup {
     * default, which is why it is REQUIRED: per-shingle candidate fan-out is
     * bounded by df², so the cap is the worst-case join blow-up you accept
     * per shingle. Measured at sf0.1 (2 000 docs): cap 10 keeps the whole
-    * query at 25 candidate pairs / ~24 MB shuffle (r2 bench profile) and
+    * query at 25 candidate pairs / ~24 MB shuffle (bench profile) and
     * still finds every planted near-duplicate, because true near-dups share
     * many RARE shingles; an uncapped run admits every boilerplate shingle's
     * n²/2 pairs. Raise toward ~100 only when near-dups share nothing but
@@ -257,7 +257,7 @@ object Dedup {
     * candidate volume is independent of shingle document frequency. */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String, k: Int,
       threshold: Double, maxDocFrequency: Long): DataFrame = {
-    // ONE shared set-table materialization (r19) for candidate generation
+    // ONE shared set-table materialization for candidate generation
     // AND verification — composing the public entry points would build two
     val sets = shingleHashSets(docs, idCol, textCol, k).localCheckpoint()
     verifyJaccardOnSets(sets, sets,
@@ -274,7 +274,7 @@ object Dedup {
     * never corpus². Only (long, long) pairs reach any shuffle. */
   def rareShingleCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int, maxDocFrequency: Long): DataFrame =
-    // checkpoint the per-doc set table (r19, guide §2.4): the exploded
+    // checkpoint the per-doc set table: the exploded
     // stream feeds both the df aggregate and the rare join — one corpus
     // pass instead of two
     rareShinglePairsFromSets(
@@ -283,7 +283,7 @@ object Dedup {
 
   /** The (doc_id, distinct shingle-hash set) table every shingle-family
     * stage derives from — the native set expression hashes AND dedups per
-    * document in one codegen'd call. Split out (r19) so composed pipelines
+    * document in one codegen'd call. Split out so composed pipelines
     * (d29/d29b: candidates + Jaccard verify + containment verify) build it
     * ONCE and share the materialization instead of re-scanning the corpus
     * per stage. */
@@ -320,7 +320,7 @@ object Dedup {
   def verifyCandidatesJaccardTwoSided(docsA: DataFrame, docsB: DataFrame,
       idCol: String, textCol: String, k: Int,
       candidates: DataFrame, threshold: Double): DataFrame = {
-    // localCheckpoint (r19, guide §2.4): in the self-dedup form (docsA eq
+    // localCheckpoint: in the self-dedup form (docsA eq
     // docsB — every d10/d4/d29 caller) the SAME per-doc shingle-set
     // projection fed both join sides and ran twice over the corpus; build
     // it once. (doc_id, hash set) is the signature-index shape
@@ -360,8 +360,8 @@ object Dedup {
     * candidate-bounded join. */
   def verifyCandidatesContainment(docs: DataFrame, idCol: String, textCol: String,
       k: Int, candidates: DataFrame, threshold: Double): DataFrame =
-    // same one-materialization treatment as verifyCandidatesJaccardTwoSided
-    // (r19): the set projection fed both join sides
+    // same one-materialization treatment as verifyCandidatesJaccardTwoSided:
+    // the set projection fed both join sides
     verifyContainmentOnSets(
       shingleHashSets(docs, idCol, textCol, k).localCheckpoint(),
       candidates, threshold)
@@ -381,7 +381,7 @@ object Dedup {
 
   /** [[rareShingleCandidatePairs]] recall + [[verifyCandidatesContainment]]
     * precision in one call — the containment analogue of [[jaccardPairs]].
-    * The set table is built ONCE (r19) and shared by candidate generation
+    * The set table is built ONCE and shared by candidate generation
     * and verification — one corpus pass where the composed form paid three. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String, k: Int,
       threshold: Double, maxDocFrequency: Long): DataFrame =
@@ -396,8 +396,8 @@ object Dedup {
       rareShinglePairsFromSets(sets, maxDocFrequency), threshold)
 
   /** Survivor selection with CONTAINMENT edges in the closure — the
-    * remediation step [[containmentPairs]] was missing (VERDICT r13 missing
-    * #2: "detection without remediation"): near-dup survivors where the
+    * remediation step that turns [[containmentPairs]]' detection into
+    * removal: near-dup survivors where the
     * excerpt/quotation family Jaccard provably misses is deduplicated too.
     * Edges = verified-Jaccard LSH pairs ∪ (opt-in, the d17 either-signal
     * pattern) containment pairs, ids-only; components close over the union,
@@ -417,7 +417,7 @@ object Dedup {
       k: Int, numHashes: Int, numBands: Int, jaccardThreshold: Double,
       containmentThreshold: Double, maxDocFrequency: Long,
       includeContainment: Boolean = true): DataFrame = {
-    // ONE shared set table (r19, guide §2.4): the Jaccard verify (both
+    // ONE shared set table: the Jaccard verify (both
     // sides), the containment candidate generation, and the containment
     // verify (both sides) all read the same checkpointed (doc_id, set)
     // rows — the composed form previously re-scanned the corpus per stage.
@@ -444,7 +444,7 @@ object Dedup {
         coalesce(col("n_members"), lit(1L)).as("n_members"))
   }
 
-  /** Containment remediation, STRIP form (VERDICT r14 #6 — the d14b-style
+  /** Containment remediation, STRIP form (the d14b-style
     * alternative to [[survivorsWithContainment]]'s whole-doc drop): for
     * every verified containment pair the EXCERPT side (the doc whose
     * shingles sit inside the other — the quotation's source) survives
@@ -475,7 +475,7 @@ object Dedup {
       n: Int): DataFrame = {
     val pairs = containmentPairs(docs, idCol, textCol, k,
       containmentThreshold, maxDocFrequency)
-    // localCheckpoint (r19, guide §2.4): the oriented pair table feeds BOTH
+    // localCheckpoint: the oriented pair table feeds BOTH
     // the excerpt-window join and the host flag — without it the whole
     // containmentPairs lineage (rare-shingle candidates + two shingle-set
     // verification joins) runs twice. Pair cardinality, two longs per row.
@@ -752,7 +752,7 @@ object Dedup {
   /** Every n-token window of every document as (doc_id, pos, md5-hash) —
     * the exploded frame behind [[duplicateSpans]] and
     * [[contaminationSpans]]; the full 128-bit hash keeps window identity
-    * collision-free at any corpus size. Since r16 the per-window
+    * collision-free at any corpus size. The per-window
     * tokenize/slice/concat/md5 chain is the native
     * [[graft.expressions.WindowHashArray]] expression (one codegen'd call
     * per document straight off the text's UTF-8 bytes — the declarative
@@ -760,7 +760,7 @@ object Dedup {
     * per window); [[GraftExpressionsSpec]] pins bit-identity against the
     * declarative form, so every window-family DuckDB oracle is untouched.
     * `private[graft]` (not private) solely so Bench's memorization A/B
-    * can write the retired r15 occurrence-level plan as its
+    * can write the retired occurrence-level plan as its
     * deliberately-bad arm against the same window machinery. */
   private[graft] def windowHashes(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
@@ -1042,7 +1042,7 @@ object Dedup {
     * the hot fraction — the pre-training signal for content a model is
     * likely to memorize because the corpus repeats it.
     *
-    * Scale shape (VERDICT r15 #2 — the r15 form recomputed the window
+    * Scale shape (the occurrence-level form recomputed the window
     * lineage twice and shuffled the full per-occurrence table through
     * four exchanges, 47.6× wall on 10× data): the per-OCCURRENCE window
     * table collapses to distinct (doc_id, h) pairs plus an occurrence
@@ -1254,8 +1254,8 @@ object Dedup {
     * EITHER form: the (h, rep) view or the per-occurrence storage table
     * ([[blockOccurrences]] output, which repeats h once per occurrence).
     * The probe joins `index.select("h").distinct()` so duplicate h rows
-    * cannot multiply matched blocks and corrupt n_dropped/clean_text
-    * (ADVICE r11); with an already-distinct (h, rep) view the distinct
+    * cannot multiply matched blocks and corrupt n_dropped/clean_text;
+    * with an already-distinct (h, rep) view the distinct
     * is a cheap no-op pre-aggregation. */
   def incrementalBlockDedupAgainst(incoming: DataFrame, index: DataFrame,
       idCol: String, textCol: String, blockTokens: Int = 16): DataFrame = {
@@ -1317,7 +1317,7 @@ object Dedup {
     * text; the distinct pass and the verification run at candidate
     * cardinality.
     *
-    * DEFAULT-CHOICE NOTE (measured, r11 `q_hamming_candidate_quality`):
+    * DEFAULT-CHOICE NOTE (measured by `q_hamming_candidate_quality`):
     * against exact Jaccard-0.7 truth on the documents corpus the Hamming
     * pigeonhole candidates scored precision 1.0 but recall 0.52, while
     * MinHash/LSH banding stays the tunable-recall generator (bands/rows
@@ -1358,7 +1358,7 @@ object Dedup {
   }
 
   /** Candidate-generation strategy for [[lexicalNearDupPairs]] — the
-    * explicit choice the r11 candidate-quality measurements argue should
+    * explicit choice the candidate-quality measurements argue should
     * be a visible knob, not an implicit composition. */
   sealed trait LexicalCandidateGenerator
   /** MinHash-signature LSH banding — the DEFAULT: recall is tunable via
@@ -1380,7 +1380,7 @@ object Dedup {
     * LSH default through [[incrementalDedup]]'s signature index.
     * `hammingRadius` / `hammingMaxBlockFrequency` parameterize the opt-in
     * generator ([[simHashHammingPairs]]'s full surface — the frequency cap
-    * bounds hot-block candidate blowup, ADVICE r12); both are ignored
+    * bounds hot-block candidate blowup); both are ignored
     * under the LSH default.
     *
     * `canonicalize = true` folds the text through the aggressive
@@ -1388,7 +1388,7 @@ object Dedup {
     * shingling AND verification — the MassiveText/CCNet discipline
     * (canonicalize, then MinHash), so case/punctuation variants of
     * near-dup documents are caught lexically instead of needing the
-    * semantic signal (VERDICT r12 next #6). A zero-shuffle per-row
+    * semantic signal. A zero-shuffle per-row
     * projection: the signature/verification scale shape is unchanged.
     * Output: (doc_a, doc_b, jaccard) verified at ≥ `threshold`. */
   def lexicalNearDupPairs(docs: DataFrame, idCol: String, textCol: String,

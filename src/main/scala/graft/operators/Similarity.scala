@@ -434,7 +434,7 @@ object Similarity {
     * that the EXPECTED bucket occupancy is ≤ `targetBucket`, floored at 4.
     * Per-table candidate volume is Σ n_b² ≈ n·occupancy, so fixing occupancy
     * (instead of fixing bits) keeps the candidate join LINEAR in corpus size —
-    * 4 fixed bits made it n²/16 (952 MB shuffled for a 2 k corpus at r2). */
+    * 4 fixed bits made it n²/16 (952 MB shuffled for a 2 k corpus). */
   def bitsForCorpus(n: Long, targetBucket: Int = 64): Int = {
     // integer-exact (no float log2 whose 1-ulp error could flip the ceil at
     // power-of-two corpus sizes) — the DuckDB oracle mirrors this as

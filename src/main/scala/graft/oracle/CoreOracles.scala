@@ -1,7 +1,7 @@
 package graft
 package oracle
 
-import graft.SparkEntry._
+import graft.queries.CoreQueries.{BoundC, ClampL, MuGate, RangeWindowUs, SessionGapUs}
 import graft.operators._
 
 /** Oracles of the paper pipeline and the relational core. */

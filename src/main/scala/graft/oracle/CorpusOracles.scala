@@ -1,7 +1,9 @@
 package graft
 package oracle
 
-import graft.SparkEntry._
+import graft.queries.CoreQueries.SessionGapUs
+import graft.queries.CorpusQueries.HeavyHitterThreshold
+import graft.queries.RetrievalQueries.TopK
 import graft.operators._
 
 /** Oracles of the corpus-statistics family: token and n-gram statistics,

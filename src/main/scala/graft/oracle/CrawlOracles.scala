@@ -1,7 +1,7 @@
 package graft
 package oracle
 
-import graft.SparkEntry._
+import graft.queries.CrawlQueries.{BulkPhrases, CrawlAgent, CrawlDomainAgentRules, CrawlDomainRules, CrawlUrlRules, UrlBloomBits, UrlBloomK}
 import graft.operators._
 
 /** Oracles of the web-crawl family: URL canonicalisation and rules, domain
@@ -64,7 +64,7 @@ private[oracle] object CrawlOracles {
 
   /** The RFC 9309 agent-group election as a prefixable CTE pair: reads
     * the (domain, agent, rule, allow) VALUES, keeps groups matching
-    * [[graft.SparkEntry.CrawlAgent]] (case-insensitive prefix or `*`), elects the most
+    * [[graft.queries.CrawlQueries.CrawlAgent]] (case-insensitive prefix or `*`), elects the most
     * specific per domain (token length, `*` = 0; ties merge), and ends
     * in `${p}rules(domain, rule, allow)` — the shape the agentless
     * election CTEs consume. ONE definition shared by the
@@ -84,7 +84,7 @@ private[oracle] object CrawlOracles {
        |  JOIN (SELECT domain, max(alen) AS best FROM ${p}am GROUP BY domain) b
        |    ON b.domain = m.domain AND m.alen = b.best)""".stripMargin
 
-  /** SQL mirror of [[graft.SparkEntry.crawlPlantHost]] for an arbitrary key expression. */
+  /** SQL mirror of [[graft.queries.CrawlQueries.crawlPlantHost]] for an arbitrary key expression. */
   private[oracle] def crawlHostSql(k: String): String =
     s"""CASE WHEN ($k) % 19 = 3 THEN '[2001:db8::1]:8080'
        |         WHEN ($k) % 19 = 7 THEN '192.0.2.1'
@@ -94,11 +94,11 @@ private[oracle] object CrawlOracles {
        |         ELSE 'a.h' || CAST(($k) % 5 AS VARCHAR) || '.co.uk'
        |    END""".stripMargin
 
-  /** SQL mirror of [[graft.SparkEntry.linkKindWord]]. */
+  /** SQL mirror of [[graft.queries.CrawlQueries.linkKindWord]]. */
   private[oracle] def linkKindSql(k: String): String =
     s"CASE WHEN ($k) % 3 = 0 THEN 'guide' WHEN ($k) % 3 = 1 THEN 'review' ELSE 'news' END"
 
-  /** SQL mirror of [[graft.SparkEntry.linkPlantPage]] — char-for-char the same page. */
+  /** SQL mirror of [[graft.queries.CrawlQueries.linkPlantPage]] — char-for-char the same page. */
   private[oracle] def linkPageSql: String =
     s"""'<html><body><p>' || text || '</p><a href="https://' ||
        |      ${crawlHostSql("doc_id * 3 + 1")} ||
@@ -115,7 +115,7 @@ private[oracle] object CrawlOracles {
        |      ELSE '' END || '</body></html>'""".stripMargin
 
   /** The link-graph family's shared CTE stack, replaying
-    * [[graft.SparkEntry.linkGraphStages]]'s `links` output: planted page → anchor tags →
+    * [[graft.queries.CrawlQueries.linkGraphStages]]'s `links` output: planted page → anchor tags →
     * (href, anchor) per element (non-greedy to the first `</a>`, inner
     * markup stripped to spaces — the engine's nested-anchor rule) →
     * [[graft.operators.TextOps.resolveLink]]'s resolution arms (any
@@ -171,7 +171,7 @@ private[oracle] object CrawlOracles {
 
   /** [[linkCtes]] extended with the PSL replay over BOTH endpoints' hosts
     * and the grouped registrable-domain edge list (self-domain and NULL
-    * endpoints excluded, matching [[graft.SparkEntry.linkGraphStages]]'s `edges`). Ends in
+    * endpoints excluded, matching [[graft.queries.CrawlQueries.linkGraphStages]]'s `edges`). Ends in
     * `ledges(src_domain, dst_domain, w)`. `docFilter` (a predicate on
     * `doc_id`) restricts which documents CONTRIBUTE hosts and edges — the
     * standing/epoch splits of the maintenance gates. */
@@ -221,7 +221,7 @@ private[oracle] object CrawlOracles {
        $rounds""".stripMargin
   }
 
-  /** The `raw` CTE replaying [[graft.SparkEntry.crawlPlantUrl]] — ONE SQL definition shared
+  /** The `raw` CTE replaying [[graft.queries.CrawlQueries.crawlPlantUrl]] — ONE SQL definition shared
     * by [[crawlPslCtes]], [[linkCtes]], and the URL-rule oracle. */
   private[oracle] def crawlRawCte: String =
     s"""raw AS (
@@ -230,7 +230,7 @@ private[oracle] object CrawlOracles {
        |    ${crawlHostSql("doc_id")} || '/p/' || CAST(doc_id % 20 AS VARCHAR) || '?a=1' AS url
        |  FROM documents)""".stripMargin
 
-  /** SQL mirror of [[graft.SparkEntry.recrawlFetchLog]]'s fingerprint regimes for a
+  /** SQL mirror of [[graft.queries.CrawlQueries.recrawlFetchLog]]'s fingerprint regimes for a
     * canon-CTE alias `c` carrying (doc_id, canonical_url) — ONE
     * definition under `q_recrawl_schedule` and `e2e_fetch_queue`. */
   private[oracle] def recrawlFpSql(c: String): String =
@@ -242,7 +242,7 @@ private[oracle] object CrawlOracles {
 
   /** The frontier DECISION stack (through `ust`) shared by the
     * `e2e_url_frontier` and `e2e_fetch_queue` oracles — the SQL mirror
-    * of [[graft.SparkEntry.urlFrontierDecisions]]: link plant → PageRank over the
+    * of [[graft.queries.CrawlQueries.urlFrontierDecisionStages]]: link plant → PageRank over the
     * standing graph → epoch per-url novelty election → endorsement /
     * per-domain robots / budget decisions. */
   private[oracle] def frontierStackCtes: String =

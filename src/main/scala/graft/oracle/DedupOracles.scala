@@ -1,7 +1,7 @@
 package graft
 package oracle
 
-import graft.SparkEntry._
+import graft.queries.DedupQueries.{ContainmentThreshold, JaccardMaxDf, JaccardThreshold, NumBands, NumMinHashes, ShingleK}
 import graft.operators._
 
 /** Oracles of the deduplication and decontamination family: exact,

@@ -1,7 +1,9 @@
 package graft
 package oracle
 
-import graft.SparkEntry._
+import graft.queries.DedupQueries.JaccardThreshold
+import graft.queries.IndexQueries.{CosineNearDupThreshold, IvfNprobe}
+import graft.queries.RetrievalQueries.TopK
 import graft.operators._
 import SqlFragments._
 import DedupOracles.{DuckShingles, bandedCte, jaccardCte, lshCandsCte, sigCte}

@@ -15,6 +15,9 @@ package oracle
   * frozen.
   * Only deterministic model/generator output crosses the boundary;
   * everything downstream is re-derived in SQL.
+  * A gate registered by `graft.queries.<Family>Queries` has its oracle in
+  * `<Family>Oracles` (the Index and Model gates build theirs with the
+  * [[IndexOracles]] and [[ModelOracles]] builders).
   */
 object OracleSql {
 

@@ -1,7 +1,9 @@
 package graft
 package oracle
 
-import graft.SparkEntry._
+import graft.queries.DedupQueries.JaccardMaxDf
+import graft.queries.IndexQueries.CosineNearDupThreshold
+import graft.queries.RetrievalQueries.{MarginK, TopK}
 import graft.operators._
 import SqlFragments._
 import DedupOracles.DuckShingles

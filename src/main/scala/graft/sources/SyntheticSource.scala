@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.dp.{Mix, ZipfMandelbrot}
 import graft.streaming.Contribution
 
@@ -55,17 +55,27 @@ object SyntheticSource {
     }
   }
 
-  /** Reference §5.1-style per-user contribution budgets (capped at C). */
-  def userBudgets(spark: SparkSession, numUsers: Int, c: Long, seed: Long = 42L,
-      partitions: Int = 32): Dataset[(String, Long)] = {
+  /** Paper §5.1 workload at arbitrary scale: one (key, epoch, user_id,
+    * value) row per contribution, key ~ [[KeyDistQ]]/[[KeyDistS]] Zipf, per-user
+    * budget ~ min(ZipfMandelbrot([[UserDistN]], …), c), epochs uniform over T.
+    * All randomness derives per (user, contribution-index) — deterministic
+    * under retries and any partitioning. */
+  def workload(spark: SparkSession, numUsers: Int, numKeys: Int, t: Int,
+      runSeed: Long, c: Long, partitions: Int): DataFrame = {
     import spark.implicits._
-    spark.range(1, numUsers + 1L, 1, partitions).mapPartitions { ids =>
+    spark.range(0, numUsers, 1, partitions).mapPartitions { users =>
       val budgetDist = new ZipfMandelbrot(UserDistN, UserDistQ, UserDistS)
-      ids.map { uid =>
-        val u = Mix.uniform01(Mix.mix64(seed ^ Mix.mix64(uid * 31L)))
-        (uid.toString, math.min(budgetDist.sample(u).toLong, c))
+      val keyDist = new ZipfMandelbrot(numKeys, KeyDistQ, KeyDistS)
+      users.flatMap { u =>
+        val budget = math.min(budgetDist.sample(Mix.uniform01(Mix.mix64(runSeed ^ Mix.mix64(u)))), c).toInt
+        (0 until budget).iterator.map { ci =>
+          val h = Mix.mix64(runSeed ^ Mix.mix64(u * 64L + ci + 1))
+          val epoch = math.floorMod(h, t)
+          val key = keyDist.sample(Mix.uniform01(Mix.mix64(h)))
+          (key.toString, epoch.toInt, u.toString, 1.0)
+        }
       }
-    }
+    }.toDF("key", "epoch", "user_id", "value")
   }
 
   /** Byte-budget batch sizing: the reference measures 31 B/tuple

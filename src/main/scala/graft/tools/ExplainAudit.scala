@@ -6,6 +6,8 @@ import graft.SparkEntry
 /** Plan auditor: prints the formatted physical plan of selected queries and
   * flags scale smells — missing parquet filter pushdown, full-schema scans,
   * non-broadcast joins against tiny dimensions, missing partial aggregation.
+  * Per-run counters and identities print normalized (see [[normalized]]),
+  * so two runs of the same plans diff clean.
   * Run: sbt 'runMain graft.tools.ExplainAudit [queryName ...]'
   */
 object ExplainAudit {
@@ -25,8 +27,8 @@ object ExplainAudit {
       SparkEntry.queries.get(name).foreach { fn =>
         println(s"\n========== $name ==========")
         val df = fn(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        val plan = normalized(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
         println(plan)
         // smells
         val smells = Seq.newBuilder[String]
@@ -47,6 +49,15 @@ object ExplainAudit {
     }
     spark.stop()
   }
+
+  /** `plan` with what differs between two runs of the same plan masked:
+    * expression and exchange ids, JVM identity hashes and lambda class
+    * names, and the pid in model-export paths. */
+  def normalized(plan: String): String = Seq(
+    "#\\d+" -> "#N", "plan_id=\\d+" -> "plan_id=N",
+    "\\$\\$Lambda\\$\\d+/0x[0-9a-f]+" -> "\\$\\$Lambda", "@[0-9a-f]{4,}" -> "@H",
+    "(/tmp/graft_[a-z0-9_]+?)_\\d+_" -> "$1_PID_"
+  ).foldLeft(plan) { case (p, (regex, to)) => p.replaceAll(regex, to) }
 
   private object Tables {
     /** crude heuristic: a ReadSchema with more than 10 fields. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.dp._
 import graft.operators.{CoreOps, DpHistogram}
+import graft.sources.SyntheticSource
 
 /** Paper §5.1 utility benchmark at full scale — the reference's committed
   * comparable (BASELINE.md): 10 M users, 1 M keys, key ~ ZipfMandelbrot(1M,
@@ -20,29 +21,6 @@ import graft.operators.{CoreOps, DpHistogram}
   */
 object UtilityBench {
 
-  /** Paper §5.1 workload at arbitrary scale: one row per contribution,
-    * key ~ ZipfMandelbrot(numKeys, 1000, 1.4), per-user budget ~
-    * min(ZipfMandelbrot(1e5, 26, 6.738), c), epochs uniform over T. All
-    * randomness derives per (user, contribution-index) — deterministic under
-    * retries and any partitioning. */
-  def workload(spark: SparkSession, numUsers: Int, numKeys: Int, t: Int,
-      runSeed: Long, c: Long, partitions: Int): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    spark.range(0, numUsers, 1, partitions).mapPartitions { users =>
-      val budgetDist = new ZipfMandelbrot(100000, 26.0, 6.738)
-      val keyDist = new ZipfMandelbrot(numKeys, 1000.0, 1.4)
-      users.flatMap { u =>
-        val budget = math.min(budgetDist.sample(Mix.uniform01(Mix.mix64(runSeed ^ Mix.mix64(u)))), c).toInt
-        (0 until budget).iterator.map { ci =>
-          val h = Mix.mix64(runSeed ^ Mix.mix64(u * 64L + ci + 1))
-          val epoch = math.floorMod(h, t)
-          val key = keyDist.sample(Mix.uniform01(Mix.mix64(h)))
-          (key.toString, epoch.toInt, u.toString, 1.0)
-        }
-      }
-    }.toDF("key", "epoch", "user_id", "value")
-  }
-
   def main(args: Array[String]): Unit = {
     val t = args.headOption.map(_.toInt).getOrElse(100)
     val numUsers = args.lift(1).map(_.toInt).getOrElse(10000000)
@@ -58,7 +36,6 @@ object UtilityBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     // CsvCompat on purpose: UTILITY.md compares l0/l1/l2/linf against the
     // reference's committed CSV bands, which embody this calibration (σ_key
@@ -73,7 +50,7 @@ object UtilityBench {
 
     val t0 = System.nanoTime()
 
-    val contributions = workload(spark, numUsers, numKeys, t, runSeed, c, cpus.toInt * 4)
+    val contributions = SyntheticSource.workload(spark, numUsers, numKeys, t, runSeed, c, cpus.toInt * 4)
 
     contributions.cache()
     val nContrib = contributions.count()

@@ -8,6 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.dp._
 import graft.operators.{CoreOps, DpHistogram}
+import graft.sources.SyntheticSource
 
 /** The reference's α × composition-mode utility comparison grid
   * (UtilityBenchmarkTest.java:78-171): every (α, composition) cell is one
@@ -93,7 +94,7 @@ object UtilityGrid {
 
     for (run <- 0 until numRuns) {
       val runSeed = 42L + run
-      val contributions = UtilityBench.workload(spark, numUsers, numKeys, t, runSeed, c, cpus.toInt * 4)
+      val contributions = SyntheticSource.workload(spark, numUsers, numKeys, t, runSeed, c, cpus.toInt * 4)
       contributions.cache()
       val nContrib = contributions.count()
       val preAgg = CoreOps.preAggregatePrevEpoch(contributions, "key", "epoch", "user_id", "value")

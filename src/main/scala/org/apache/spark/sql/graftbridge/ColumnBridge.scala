@@ -16,7 +16,7 @@ object ColumnBridge {
 /** `org.apache.spark.sql.types.AbstractDataType` is `private[sql]`; this
   * public alias lets graft expressions outside the sql package implement
   * `ExpectsInputTypes.inputTypes` (analyzer-inserted casts on both eval
-  * paths — ADVICE r14). */
+  * paths, so both see the declared input type). */
 object TypeBridge {
   type AbstractType = org.apache.spark.sql.types.AbstractDataType
 }

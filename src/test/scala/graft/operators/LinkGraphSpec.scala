@@ -165,7 +165,7 @@ class LinkGraphSpec extends AnyFunSuite {
   }
 
   test("link-graph edges exclude self-domain and IP-literal endpoints") {
-    val (links, edges, _) = graft.SparkEntry.linkGraphStages(spark, "/root/testdata/sf0.001")
+    val (links, edges, _) = graft.queries.CrawlQueries.linkGraphStages(spark, "/root/testdata/sf0.001")
     // every doc plants a root-relative self link -> links has same-host rows
     val selfHost = links.where(
       col("dst_host") === TextOps.urlHost(col("base"))).count()

@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
 import graft.dp.DpParams
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkEntry, Tables}
+import graft.queries.{CrawlQueries, DedupQueries}
 
 /** Pins the exchange/sort shape of the window/join gates added in r5 and the
   * e2e near-dup pipeline, so a refactor cannot silently add a shuffle (or
@@ -170,7 +171,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the raw nor the cleaned body may reach a shuffle at any stage.
     // persistCleaned = false: the audit must see the FULL uncached plan (an
     // InMemoryRelation would hide the cleaning stages' exchanges).
-    val df = SparkEntry.cleanCorpusBuild(spark, sfDir, persistCleaned = false)
+    val df = DedupQueries.cleanCorpusBuild(spark, sfDir, persistCleaned = false)
     for (b <- exchangeBlocks(df)) {
       assert(!b.contains("text#"), s"document text reached a shuffle:\n$b")
       assert(!b.contains("__toks#"), s"a token array reached a shuffle:\n$b")
@@ -524,7 +525,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // id set must reach the text table as a BROADCAST semi-join — a
     // shuffled semi-join would move the documents relation (with text)
     // through an exchange
-    val (_, keptDocs) = SparkEntry.crawlCurationStages(spark, sfDir)
+    val (_, keptDocs) = CrawlQueries.crawlCurationStages(spark, sfDir)
     val plan = keptDocs.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") &&
       plan.toLowerCase.contains("leftsemi"),
@@ -712,7 +713,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // rollup AND the PSL dim), hiding the extraction lineage from the
     // plan above — pin the extraction stage's OWN plan: a zero-shuffle
     // codegen projection, page bytes never in an exchange (ADVICE r19)
-    val links = SparkEntry.extractedLinksFrom(
+    val links = CrawlQueries.extractedLinksFrom(
       Tables.documents(spark, sfDir))
     val ex = exchangeBlocks(links)
     assert(ex.isEmpty,
@@ -747,7 +748,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the full visible lineage (PageRank's own per-iteration checkpoint
     // still truncates its iterations, but its input is the (domain,
     // domain, n_links) edge rollup pinned by the link-graph test below).
-    val st = SparkEntry.crawlFrontierStage(spark, sfDir, materialize = false)
+    val st = CrawlQueries.crawlFrontierStage(spark, sfDir, materialize = false)
     val stPlan = st.queryExecution.executedPlan.toString
     assert(!stPlan.contains("Window"),
       s"the standing stage grew a window:\n${stPlan.take(4000)}")
@@ -783,7 +784,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the prefix pass, so the text/page/window guards were vacuous for
     // the standing pipeline (extraction, PSL, probe, novelty) — pin the
     // UN-materialized decision stage directly (ADVICE r19)
-    val st = SparkEntry.urlFrontierDecisionStages(spark, sfDir,
+    val st = CrawlQueries.urlFrontierDecisionStages(spark, sfDir,
       materialize = false)._1
     val stPlan = st.queryExecution.executedPlan.toString
     assert(!stPlan.contains("Window"),
@@ -801,7 +802,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // (frontier decisions, PSL dim, recrawl stats), so the assertions
     // below see the FULL standing lineage — including the recrawl-stats
     // lag window — instead of post-checkpoint stubs (ADVICE r19)
-    val stage = SparkEntry.politeFetchQueueStage(spark, sfDir,
+    val stage = CrawlQueries.politeFetchQueueStage(spark, sfDir,
       materialize = false)
     val fmt = stage.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkEntry
+import graft.queries.ModelQueries
 
 /** Pins the Bradley–Terry training that the q_bt_ratings oracle cannot
   * replay in SQL: the MM fixed point against the 2-item closed form, rating
@@ -40,8 +41,8 @@ class PreferenceSpec extends AnyFunSuite {
 
   test("training is bit-deterministic and zero-win items rate 0") {
     val m = Seq((("a", "b"), 2L), (("a", "c"), 1L), (("b", "c"), 4L))
-    val r1 = Preference.btRatingsLocal(m, iters = SparkEntry.BtIters)
-    val r2 = Preference.btRatingsLocal(m, iters = SparkEntry.BtIters)
+    val r1 = Preference.btRatingsLocal(m, iters = ModelQueries.BtIters)
+    val r2 = Preference.btRatingsLocal(m, iters = ModelQueries.BtIters)
     assert(r1 === r2)
     assert(r1.toMap.apply("c") === 0.0) // c never wins
   }

@@ -90,7 +90,7 @@ class UnigramTrainSpec extends AnyFunSuite {
     // spans words) and both positive
     assert(rows.forall(r => r.getLong(1) > 0L && r.getLong(2) >= r.getLong(1)))
     // the gate trained the model; this reads the same memoized value back
-    val (_, trace) = graft.SparkEntry.unigramModel(spark, sfDir)
+    val (_, trace) = graft.queries.ModelQueries.unigramModel(spark, sfDir)
     val fixed = trace.drop(1)
     assert(fixed.zip(fixed.tail).forall { case (a, b) => b >= a - 1e-6 },
       s"likelihood not monotone on the real corpus: $trace")

@@ -55,12 +55,15 @@ class SyntheticSourceSpec extends AnyFunSuite {
   }
 
   test("user budgets follow the capped reference distribution") {
-    val budgets = SyntheticSource.userBudgets(spark, 5000, c = 32).collect().map(_._2)
-    assert(budgets.forall(b => b >= 1 && b <= 32))
-    // the cap at 32 trims negligible mass (P(X>32) ≈ (27/58)^6.738 < 1%), so
-    // the empirical mean must track the theoretical Zipf-Mandelbrot mean
-    val theory = new graft.dp.ZipfMandelbrot(
-      SyntheticSource.UserDistN, SyntheticSource.UserDistQ, SyntheticSource.UserDistS).mean
+    // a user's budget is its contribution count in the §5.1 workload
+    val c = 32
+    val budgets = SyntheticSource.workload(spark, 5000, 100, 4, 42L, c, 4)
+      .groupBy("user_id").count().collect().map(_.getLong(1))
+    assert(budgets.length === 5000)
+    assert(budgets.forall(b => b >= 1 && b <= c))
+    val dist = new graft.dp.ZipfMandelbrot(
+      SyntheticSource.UserDistN, SyntheticSource.UserDistQ, SyntheticSource.UserDistS)
+    val theory = (1 to dist.n).map(k => dist.pmf(k) * math.min(k, c)).sum
     val empirical = budgets.map(_.toDouble).sum / budgets.length
     assert(math.abs(empirical - theory) / theory < 0.1, s"empirical=$empirical theory=$theory")
   }
