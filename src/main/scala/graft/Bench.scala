@@ -1,43 +1,35 @@
 package graft
 
 import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.dp.DpParams
-import graft.operators.{CoreOps, DpHistogram}
-import graft.queries.ModelQueries
-import graft.sources.SyntheticSource
+import graft.bench.{BenchContext, BenchEntries, Entry, Gigabytes, InnerLaps, Lap, Timed}
 import graft.tools.{BenchReport, QueryProfiler}
-import graft.tools.BenchReport.{medianOf, r3}
+import graft.tools.BenchReport.r3
 
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
 /** Per-round benchmark main: times every declared query on
-  * `SPARK_GRAFT_SF_DIR` plus two synthetic DP-SQLP workloads mirroring the
-  * reference's benchmark harnesses (BASELINE.md):
-  *
-  *   - `synthetic_dp_t20`: Zipf-keyed contributions → bounding-shaped
-  *     pre-aggregation → full DP mechanism over 20 epochs (the §5.1 workload
-  *     shape at reduced scale);
-  *   - `microbatch_0_1gb`: byte-budget batch (0.1 GB at the reference's
-  *     31 B/tuple accounting) through generate → clamp → histogram, the
-  *     baseline micro-batch throughput measure (GB/s = size/duration).
+  * `SPARK_GRAFT_SF_DIR` plus the synthetic entries of [[BenchEntries]],
+  * which mirror the reference's benchmark harnesses (BASELINE.md) — the
+  * §5.1 DP workload at reduced scale and the byte-budget micro-batch grid
+  * (GB/s = size/duration) — and carry the in-sweep A/B receipts.
   *
   * Lap protocol: every entry runs `SPARK_GRAFT_BENCH_REPEATS` laps
   * (default 2) and reports the min of its laps, or -1 when any lap failed
   * ([[BenchReport.lapSummary]]). The arms of a receipt group run
-  * interleaved, one lap each in turn. How many laps an entry gets never
-  * depends on its readings, on the machine's load or on files in the
-  * working directory. `bench.json` keeps each lap's wall seconds
-  * (`runs_detail`), this process's CPU seconds over the same timed body
-  * (`cpu_detail`) and the share of the machine other processes used
+  * interleaved, one lap each in turn ([[Bench.Harness.runGroup]]). How many
+  * laps an entry gets never depends on its readings, on the machine's load
+  * or on files in the working directory. `bench.json` keeps each lap's wall
+  * seconds (`runs_detail`), this process's CPU seconds over the same timed
+  * body (`cpu_detail`) and the share of the machine other processes used
   * (`ext_cpu`, recorded only).
   *
   * Measurement notes:
-  *   - each query is forced with a `noop`-format write (full materialization
-  *     of every row and column — `.count()` lets Catalyst elide sorts and
-  *     answer some aggregates from parquet footers);
+  *   - each query is forced with a `noop`-format write
+  *     ([[BenchContext.force]]);
   *   - per-query stage/task/shuffle metrics are collected by [[QueryProfiler]]
   *     (job-group attribution) and emitted under `"profile"` — the K5
   *     per-bolt-profiler parity;
@@ -46,6 +38,7 @@ import scala.util.control.NonFatal
   *     never has to fish it out of sbt log noise.
   */
 object Bench {
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -53,24 +46,6 @@ object Bench {
     val repeats = sys.env.get("SPARK_GRAFT_BENCH_REPEATS").map(_.toInt).getOrElse(2).max(1)
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadPre = osBean.getSystemLoadAverage
-    val sunBean = osBean match {
-      case b: com.sun.management.OperatingSystemMXBean => Some(b)
-      case _ => None
-    }
-    /** CPU fraction consumed by processes other than this JVM since the last
-      * call (interval-based; first call primes the counters). Loadavg cannot
-      * tell this JVM's busy cores from a concurrent process's;
-      * systemCpu − processCpu can. */
-    def externalCpu(): Double = sunBean.map { b =>
-      val sys = b.getCpuLoad
-      val proc = b.getProcessCpuLoad
-      if (sys.isNaN || proc.isNaN) 0.0 else math.max(0.0, sys - proc)
-    }.getOrElse(0.0)
-    externalCpu() // prime the interval counters
-    /** This JVM's cumulative CPU seconds (-1 when the platform has no
-      * process CPU counter). */
-    def processCpuSec(): Double =
-      sunBean.map(_.getProcessCpuTime).filter(_ >= 0).map(_ / 1e9).getOrElse(-1.0)
 
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -82,94 +57,14 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     val profiler = new QueryProfiler
     spark.sparkContext.addSparkListener(profiler)
-
-    /** Force full materialization: every row/column flows to the noop sink. */
-    def force(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-
-    // CPU seconds this process spent in the most recent timed body — the
-    // same interval as the wall time it reports
-    var bodyCpu = -1.0
-
-    /** Run `body` as the profiler's entry `name` and return its wall
-      * seconds; failures are surfaced on stderr, never silently -1'd away. */
-    def timeBody(name: String)(body: => Unit): Double = {
-      val c0 = processCpuSec()
-      val t = QueryProfiler.inEntry(spark.sparkContext, name) {
-        try {
-          val t0 = System.nanoTime()
-          body
-          (System.nanoTime() - t0) / 1e9
-        } catch {
-          case NonFatal(e) =>
-            System.err.println(s"[bench] query '$name' FAILED: ${e.getClass.getName}: ${e.getMessage}")
-            -1.0
-        }
-      }
-      bodyCpu = if (c0 < 0) -1.0 else processCpuSec() - c0
-      ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      t
-    }
-
-    /** Time one named workload. Every call closes ONE profiler run (after
-      * draining the listener bus), so the emitted profile is the min-wall
-      * run's metrics, not an accumulation over laps. */
-    def timed(name: String)(body: => Unit): Double = {
-      val t = timeBody(name)(body)
-      profiler.endRun(name, t)
-      t
-    }
-
-    /** [[timed]] whose profiler run is finalized only AFTER `audit` has
-      * passed, so the bench result and the profiler never disagree about
-      * whether a run succeeded. The audit (an independent recomputation
-      * that checks the timed body's result) runs outside the timed region
-      * and outside the entry, so its jobs are never attributed to the
-      * entry's profile, and only when the body itself succeeded; an audit
-      * failure marks the run failed (-1) in the bench result AND the
-      * profiler record. */
-    def timedAudited(name: String)(body: => Unit)(audit: => Unit): Double = {
-      val t = timeBody(name)(body)
-      val tf =
-        if (t < 0) t
-        else try { audit; t } catch {
-          case NonFatal(e) =>
-            System.err.println(s"[bench] query '$name' equality audit failed: ${e.getMessage}")
-            -1.0
-        }
-      profiler.endRun(name, tf)
-      tf
-    }
+    val harness = new Harness(spark, profiler)
+    val ctx = new BenchContext(spark, sfDir, cpus.toInt)
+    import ctx.force
 
     // Optional comma-separated workload filter for local iteration
     // (unset in the driver's per-round run → full suite).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
     def wanted(name: String): Boolean = only.forall(_.contains(name))
-
-    // every lap of every entry, in lap order: wall seconds (-1 = failed),
-    // this process's CPU seconds over the same timed body, and the
-    // external-CPU share of the machine over the whole lap
-    val runDetail = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    val cpuDetail = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    val extDetail = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    case class Lap(wall: Double, cpu: Double, ext: Double)
-
-    /** One lap: `run` times its body once through [[timed]] or
-      * [[timedAudited]] and returns the wall seconds (-1 on failure). */
-    def lap(run: => Double): Lap = {
-      externalCpu()
-      bodyCpu = -1.0
-      val t = run
-      Lap(t, bodyCpu, externalCpu())
-    }
-
-    /** Record an entry's laps and return its reported value. */
-    def record(name: String, laps: Seq[Lap]): Double = {
-      runDetail(name) = laps.map(_.wall)
-      cpuDetail(name) = laps.map(_.cpu)
-      extDetail(name) = laps.map(_.ext)
-      BenchReport.lapSummary(laps.map(_.wall))
-    }
 
     // Unrecorded JVM warmup: the first entries of a cold sbt-launched JVM
     // read 5-8x slow (codegen compilation, parquet footer reads, shuffle
@@ -187,1504 +82,30 @@ object Bench {
         f"[bench] warmup ${(System.nanoTime() - w0) / 1e9}%.1f s (unrecorded)")
     }
 
-    val queryTimes = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => wanted(name) }
-      .map { case (name, fn) =>
-        name -> record(name, (1 to repeats).map(_ => lap(timed(name)(force(fn(spark, sfDir))))))
-      }
-
-    /** Byte-budget micro-batch at a given total size and parallelism
-      * (reference grid: sizes {1,2,5} GB default plan,
-      * MicroBatchConfig.java:33; strong-scaling sizes {0.5,1,2} GB ×
-      * parallelism {4,8,16} and weak-scaling 0.125 GB/worker,
-      * run-scaling-benchmark.sh:24-34). Parallelism in local mode =
-      * source partitions + shuffle partitions capped to P, so at most P
-      * of the 32 cores ever run concurrently — the single-box analogue of
-      * P workers. */
-    def microbatch(gb: Double, parallelism: Int = cpus.toInt, suffix: String = ""): Double = {
-      val name = s"microbatch_${gb.toString.replace('.', '_')}gb$suffix"
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", parallelism.toString)
-      try timed(name) {
-        val n = SyntheticSource.recordsForGb(gb)
-        val contrib = SyntheticSource.zipfContributions(spark, n, 100000, 50000, 1,
-          partitions = parallelism)
-        force(contrib.toDF()
-          .withColumn("value", CoreOps.clamp(col("value"), 1.0))
-          .groupBy("key").agg(sum(col("value")).as("count")))
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    def gate(name: String): Entry = Entry(name)(_.timed(force(SparkEntry.queries(name)(spark, sfDir))))
+    val queryTimes = SparkEntry.queries.keys.toSeq.sorted.filter(wanted).map { name =>
+      name -> harness.record(name, harness.runGroup(Seq(gate(name)), repeats).head._2)
     }
 
-    // interleaved (steady, cold) lap seconds of the streaming-corpus
-    // maintenance entry (feeds the derived steady-state entry and the
-    // steady<cold receipt below)
-    var steadyColdLaps: Option[Seq[(Double, Double)]] = None
-
-    // per-run table names: a killed run's orphaned warehouse directory must
-    // not fail the next run's CREATE (in-memory catalog dies with the JVM)
-    val benchRunId = System.nanoTime()
-    val benchLiTable = s"bench_li_b_$benchRunId"
-    val benchOrdTable = s"bench_ord_b_$benchRunId"
-    def joinAgg(li: DataFrame, ord: DataFrame): DataFrame =
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(sum("l_quantity").as("qty"), count(lit(1)).as("n"))
-    def noBroadcast(body: => Double): Double = {
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    }
-    // shared corpus of the divergence-checkpoint A/B: 400k docs × 40
-    // tokens, 16 sources, 500-word vocabulary, Murmur3-derived content,
-    // materialized to parquet ONCE (untimed) so the un-checkpointed arm
-    // pays REAL scan amplification — an in-memory range generator has no
-    // IO to amplify and reads as a false wash
-    lazy val divergenceBenchPath: String = {
-      val path = s"/tmp/graft_divbench_${ProcessHandle.current().pid()}.parquet"
-      // sweep frames left by dead JVMs (the modelExportPath pattern)
-      Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.matches("graft_divbench_\\d+\\.parquet"))
-        .foreach { f =>
-          val pid = f.getName.stripPrefix("graft_divbench_")
-            .takeWhile(_.isDigit).toLong
-          val alive = ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
-          if (!alive) graft.tools.CorpusMaintenance.deleteRecursively(f.getPath)
-        }
-      spark.range(0, 400000L, 1, cpus.toInt)
-        .select(col("id").as("doc_id"),
-          concat(lit("src"), pmod(col("id"), lit(16))).as("source"),
-          array_join(expr("transform(sequence(1, 40), i -> concat('w', pmod(hash(id, i), 500)))"),
-            " ").as("text"))
-        .write.mode("overwrite").parquet(path)
-      path
-    }
-    def divergenceBenchFrame: DataFrame = spark.read.parquet(divergenceBenchPath)
-
-    // shared frame of the distinct-users A/B: 20M events over 32 days and
-    // ~1M users (multiplicative-hash spread), deterministic
-    def distinctBenchFrame: DataFrame = spark.range(0, 20000000L, 1, cpus.toInt)
-      .select(pmod(col("id"), lit(32)).cast("int").as("day"),
-        pmod(col("id") * lit(2654435761L), lit(1000003L)).as("user_id"))
-
-    // shared frame of the Hamming-dedup A/B: 100k docs in 2000 groups of
-    // 50; within a group, 29 of 30 tokens agree and one token is per-doc
-    // unique, so groups are tight Hamming clusters of the 60-bit prints.
-    // 100k is the size where the naive arm's n² actually bites (5×10⁹
-    // print comparisons; at 10k the codegen'd cross join still wins on
-    // sheer throughput) while the blocked arm's candidates stay
-    // Σ|bucket|²-bounded and barely move.
-    def hammingBenchFrame: DataFrame = spark.range(0, 100000L, 1, cpus.toInt)
-      .select(col("id").as("doc_id"),
-        array_join(expr(
-          "transform(sequence(1, 30), i -> CASE WHEN i = 1 + pmod(id, 30) " +
-            "THEN concat('u', id) ELSE concat('w', pmod(hash(id div 50, i), 800)) END)"),
-          " ").as("text"))
-    // release-count cross-check of the two Hamming arms (a mismatched pair
-    // count would make the A/B meaningless)
-    var hammingBlockedPairs = -1L
-    // winner-count cross-check of the two block-election arms
-    var blockWinnersAgg = -1L
-
-    // held BM25 index of the delete-maintenance A/B (untimed build; the
-    // steady state an ingest monitor keeps persisted across epochs)
-    lazy val bm25BaseIndex: (DataFrame, DataFrame, Long, Long) = {
-      val (t, d, n, l) = graft.operators.TextOps.bm25Index(
-        divergenceBenchFrame, "doc_id", "text")
-      val tp = t.persist(); val dp = d.persist()
-      tp.count(); dp.count()
-      (tp, dp, n, l)
-    }
-    var bm25DeleteStats = (-1L, -1L)
-
-    // maintained positional index + a 20-phrase query set for the
-    // bulk-vs-loop phrase A/B, built and materialized OUTSIDE the timed
-    // arms — both arms probe the SAME table (the maintained-index
-    // contract). Phrases = each of the first 20 docs' opening bigram:
-    // deterministic, mixed selectivity (doc-initial tokens range from
-    // rare to corpus-common).
-    lazy val phraseBenchInputs: (DataFrame, Seq[(Long, Seq[String])]) = {
-      val idx = graft.operators.TextOps.positionalPostingsIndex(
-        Tables.documents(spark, sfDir), "doc_id", "text").localCheckpoint()
-      val phrases = Tables.documents(spark, sfDir).orderBy("doc_id").limit(20)
-        .select(col("doc_id"), graft.operators.TextOps.tokens(col("text")).as("t"))
-        .collect().toSeq
-        .map(r => r.getLong(0) -> r.getSeq[String](1).take(2).toList)
-        .filter(_._2.size == 2)
-      (idx, phrases)
-    }
-    var phraseBulkRows = -1L
-
-    // the STORED phrase index shared by the pruned/unpruned A/B: written
-    // once per (JVM, sf) under a pid-scoped /tmp dir (dead-pid debris
-    // swept before the first write, the modelExportPath contract)
-    lazy val phraseStoredInputs: (String, Seq[String]) = {
-      val tag = sfDir.replaceAll("[^0-9a-zA-Z]", "_")
-      val dir = s"/tmp/graft_storedidx_${ProcessHandle.current().pid()}_$tag"
-      if (!new java.io.File(dir).exists()) {
-        Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.matches("graft_storedidx_\\d+_.*"))
-          .foreach { f =>
-            val pid = f.getName.stripPrefix("graft_storedidx_")
-              .takeWhile(_.isDigit).toLong
-            val alive = ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
-            if (!alive) graft.tools.CorpusMaintenance.deleteRecursively(f.getPath)
-          }
-        val (idx, _) = phraseBenchInputs
-        graft.operators.TextOps.positionalIndexWrite(idx, dir, nBuckets = 64)
-      }
-      (dir, phraseBenchInputs._2.head._2)
-    }
-    var phraseStoredRows = -1L
-
-    // shared frame of the median-filter A/B: 5M rows, 16 groups, md5-derived
-    // round4-quantized scores (deterministic, layout-independent)
-    def medianBenchFrame: DataFrame =
-      spark.range(5000000L).select(
-        (col("id") % 16).cast("string").as("g"),
-        (conv(substring(md5(col("id").cast("string")), 1, 8), 16, 10)
-          .cast("long") % 10001L).cast("double")./(lit(10000.0)).as("q"),
-        col("id"))
-
-    // shared frame of the memorization A/B: 400k docs, each a per-doc
-    // md5-derived 20-token block repeated 6× — windows repeat WITHIN the
-    // document (occ ≈ 6), the shape boilerplate-heavy web text actually
-    // has and exactly the redundancy the pair reduction collapses BEFORE
-    // any exchange — and every third doc opens with the SAME 8-token
-    // span, so one window hash is maximally corpus-hot (hot windows ARE
-    // the audit's signal; the h key is as skewed as the operator will
-    // ever see). Deterministic, layout-independent.
-    def memorizationBenchFrame: DataFrame = {
-      val block = concat_ws(" ", (1 to 20).map(i =>
-        substring(md5(concat(col("id").cast("string"), lit(s":$i"))), 1, 6)): _*)
-      spark.range(400000L).select(col("id").as("doc_id"),
-        concat_ws(" ",
-          when(col("id") % 3 === 0,
-            lit("hot0 hot1 hot2 hot3 hot4 hot5 hot6 hot7"))
-            .otherwise(concat(lit("c"),
-              substring(md5(concat(col("id").cast("string"), lit(":h"))), 1, 10))),
-          block, block, block, block, block, block).as("text"))
-    }
-    // result cross-check of the two memorization arms
-    var memorizationPairsAgg: (Long, Long, Long) = (-1L, -1L, -1L)
-
-    // shared frame of the domain-cap A/B: 5M pages over 2000 registrable
-    // domains with md5-derived priorities (deterministic)
-    def domainCapBenchFrame: DataFrame =
-      spark.range(5000000L).select(
-        concat(lit("d"), (col("id") % 2000).cast("string")).as("registrable_domain"),
-        (conv(substring(md5(col("id").cast("string")), 1, 8), 16, 10)
-          .cast("long") % 100000L).as("n_toks"),
-        col("id").as("doc_id"))
-
-    // the Algorithm-3 replay workload (a 200k-row job collected to the
-    // driver), built on first use before either eager arm's timed body and
-    // shared by both arms' laps, so neither entry times it
-    lazy val eagerWorkload = graft.tools.EagerBench.workload(spark, 200000L, 20000, 5000, 20)
-
-    val syntheticEntries = Seq[(String, () => Double)](
-      "synthetic_dp_t20" -> (() => timed("synthetic_dp_t20") {
-        val contrib = SyntheticSource.zipfContributions(spark, 2000000L, 100000, 50000, 20)
-        val preAgg = CoreOps.preAggregatePrevEpoch(contrib.toDF(), "key", "epoch", "userId", "value")
-        force(DpHistogram.run(spark, preAgg, DpParams.zeroNoise(20, mu = 10)))
-      }),
-      // Mechanism-level wall-clock tracked per round: the §5.1 utility
-      // workload at reduced scale (T=100, 1M users, 100k keys), calibrated
-      // CSV-compat like UTILITY.md's full-scale runs.
-      "utility_t100_reduced" -> (() => timed("utility_t100_reduced") {
-        val params = DpParams.calibrated(graft.dp.CompositionMode.ZcdpLinearCsvCompat,
-          3.0, 2.0 / 3.0 * 1e-9, 3.0, 1.0 / 3.0 * 1e-9,
-          maxTimeSteps = 100, mu = 0L, maxContributionsPerUser = 32L,
-          perRecordClamp = 1.0, thresholdFailureFraction = 0.5)
-        val contrib = SyntheticSource.workload(spark, 1000000, 100000, 100, 42L, 32L, cpus.toInt * 4)
-        val preAgg = CoreOps.preAggregatePrevEpoch(contrib, "key", "epoch", "user_id", "value")
-        force(DpHistogram.run(spark, preAgg, params, 42L))
-      }),
-      // Algorithm-3 release policies on one seeded workload and params
-      // (graft.tools.EagerBench): watermark-eager vs lazy. The eager
-      // releases are audited against the batch timeline of the same rows
-      // outside the timed region (timedAudited); a mismatch fails the entry.
-      "eager_dp_tws_timers_t20" -> (() => {
-        val byEpoch = eagerWorkload
-        var releases = Seq.empty[graft.streaming.Release]
-        timedAudited("eager_dp_tws_timers_t20") {
-          releases = graft.tools.EagerBench.runEager(spark, byEpoch, 20, 42L)
-          System.err.println(s"[bench] eager_dp_tws_timers_t20 releases=${releases.size}")
-        } {
-          val timeline = graft.tools.EagerBench.timeline(spark, byEpoch, 20, 42L)
-          graft.tools.EagerBench.timelineMismatch(releases, timeline, byEpoch.map(_._1).max)
-            .foreach(msg => throw new IllegalStateException(s"eager releases differ from the batch timeline: $msg"))
-        }
-      }),
-      // the lazy floor: silent releases defer to the key's next appearance
-      "eager_dp_lazy_t20" -> (() => {
-        val byEpoch = eagerWorkload
-        timed("eager_dp_lazy_t20") {
-          val n = graft.tools.EagerBench.runLazy(spark, byEpoch, 20, 42L).size
-          System.err.println(s"[bench] eager_dp_lazy_t20 releases=$n")
-        }
-      }),
-      // Second scale point along T: regression-guards the Algorithm-3
-      // event-driven epoch walk's O(appearances) behavior per round — if a
-      // change reintroduces an O(T) scan per key, this entry blows up ~10×
-      // relative to utility_t100_reduced while the T=100 entry barely moves.
-      "utility_t1000_reduced" -> (() => timed("utility_t1000_reduced") {
-        val params = DpParams.calibrated(graft.dp.CompositionMode.ZcdpLinearCsvCompat,
-          3.0, 2.0 / 3.0 * 1e-9, 3.0, 1.0 / 3.0 * 1e-9,
-          maxTimeSteps = 1000, mu = 0L, maxContributionsPerUser = 32L,
-          perRecordClamp = 1.0, thresholdFailureFraction = 0.5)
-        val contrib = SyntheticSource.workload(spark, 1000000, 100000, 1000, 42L, 32L, cpus.toInt * 4)
-        val preAgg = CoreOps.preAggregatePrevEpoch(contrib, "key", "epoch", "user_id", "value")
-        force(DpHistogram.run(spark, preAgg, params, 42L))
-      }),
-      // Bucketed-storage A/B: the same lineitem⋈orders aggregation as a
-      // plain shuffled join vs over bucketed tables (pay the shuffle once at
-      // write time). Broadcast is disabled inside both join entries so they
-      // measure the shuffle-join path — at 100 TB neither side broadcasts.
-      // Run order matters: bucket_write creates the tables the bucketed
-      // entry reads (include it when using SPARK_GRAFT_BENCH_ONLY).
-      "colocated_join_bucket_write" -> (() => timed("colocated_join_bucket_write") {
-        graft.operators.Bucketing.writeBucketed(
-          Tables.lineitem(spark, sfDir).select("l_orderkey", "l_quantity"),
-          benchLiTable, buckets = cpus.toInt, Seq("l_orderkey"), Seq("l_orderkey"))
-        graft.operators.Bucketing.writeBucketed(
-          Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
-          benchOrdTable, buckets = cpus.toInt, Seq("o_orderkey"), Seq("o_orderkey"))
-      }),
-      "colocated_join_plain" -> (() => noBroadcast {
-        timed("colocated_join_plain") {
-          force(joinAgg(
-            Tables.lineitem(spark, sfDir).select("l_orderkey", "l_quantity"),
-            Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority")))
-        }
-      }),
-      "colocated_join_bucketed" -> (() => noBroadcast {
-        timed("colocated_join_bucketed") {
-          force(joinAgg(spark.table(benchLiTable), spark.table(benchOrdTable)))
-        }
-      }),
-      // AQE skew-join A/B: one hot key owns ~60% of a 20M-row fact side
-      // (SkewOps.skewBenchJoin); with AQE skew handling the hot sort-merge
-      // partition is split at runtime, without it one straggler task
-      // serializes the stage. Thresholds are lowered so the ~190MB hot
-      // partition counts as skewed at bench scale — at 100TB the 256MB
-      // defaults fire on their own. Broadcast disabled: at scale neither
-      // side broadcasts.
-      // off first: any residual warmup bias then favors the baseline, so
-      // the measured AQE win is conservative
-      "skew_join_aqe_off" -> (() => noBroadcast { timed("skew_join_aqe_off") {
-        val prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try force(graft.operators.SkewOps.skewBenchJoin(spark))
-        finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-      }}),
-      "skew_join_aqe_on" -> (() => noBroadcast { timed("skew_join_aqe_on") {
-        graft.operators.SkewOps.withSkewTuning(spark, "8MB", "4MB") {
-          force(graft.operators.SkewOps.skewBenchJoin(spark))
-        }
-      }}),
-      // Runtime bloom-filter semi-join reduction A/B: same selective
-      // fact⋈dim join with the InjectRuntimeFilter rule off vs on
-      // (thresholds lowered at bench scale — the 10 GB application-side
-      // default is production-sized; see SkewOps.withBloomTuning).
-      // Broadcast disabled: the bloom path targets shuffle joins.
-      // READ THE PROFILE, NOT THE WALL-CLOCK: single-box shuffle hits the
-      // page cache, so the 498 MB → 5.8 MB wire cut and ~1.8× task-time
-      // win (bench.json "profile") can hide behind the bloom's extra
-      // sequential build stage in local wall time; on a cluster the wire
-      // cut IS the result.
-      "runtime_bloom_off" -> (() => noBroadcast { timed("runtime_bloom_off") {
-        graft.operators.SkewOps.withBloomTuning(spark, enabled = false) {
-          force(graft.operators.SkewOps.bloomBenchJoin(spark))
-        }
-      }}),
-      "runtime_bloom_on" -> (() => noBroadcast { timed("runtime_bloom_on") {
-        graft.operators.SkewOps.withBloomTuning(spark, enabled = true) {
-          force(graft.operators.SkewOps.bloomBenchJoin(spark))
-        }
-      }}),
-      // e2e corpus-build formulation A/B: the naive shape computes each
-      // per-doc signal (language, quality, token stats) as its own
-      // DataFrame and reassembles on doc_id — three doc_id joins plus a
-      // fingerprint-group semi-join — while the shipped e2e_corpus_build
-      // gate computes all signals as projections over ONE scan with a
-      // window-min survivor rule (one shuffle total; plan spec-pinned).
-      // Identical rows out (the gate's DuckDB oracle pins them); the delta
-      // is pure plan shape. Broadcast disabled in both arms: at 100 TB a
-      // full-corpus per-doc frame never broadcasts, so sf0.1's tiny sides
-      // must not let the joins arm cheat. Our design runs FIRST so any
-      // residual warmup bias lands on it — the measured win is conservative.
-      // READ THE PROFILE: the documents corpus is small at bench scale, so
-      // wall-clock nearly ties; the structural win is stage count (5 vs 8)
-      // and task time (~1.6×) — every extra exchange stage the joins arm
-      // adds is a full-corpus materialization at 100 TB.
-      "e2e_build_one_shuffle" -> (() => noBroadcast { timed("e2e_build_one_shuffle") {
-        force(SparkEntry.queries("e2e_corpus_build")(spark, sfDir))
-      }}),
-      // Histogram-median A/B: perGroupMedianFilter computes each
-      // group's exact lower median from a (group × quantized-value)
-      // histogram — one map-side-combinable aggregate at histogram
-      // cardinality — while the naive form every user writes first sorts
-      // the FULL corpus inside a per-group window to find the median rank.
-      // Same 5M-row synthetic frame (16 groups, round4-quantized scores),
-      // identical surviving counts; the delta is the corpus sort. At 100 TB
-      // the window arm is a full-corpus range materialization per group;
-      // the histogram arm never shuffles the corpus at all (broadcast
-      // threshold join). hist runs FIRST so warmup bias is conservative.
-      // Per-domain top-K A/B (the q_domain_cap claim): the rank<=K
-      // filter over a row_number window plans WindowGroupLimit — per-
-      // partition top-K heaps prune each group to K rows BEFORE the final
-      // per-group sort — vs the same query with the optimizer rule
-      // disabled (spark.sql.optimizer.windowGroupLimitThreshold=-1),
-      // which sorts all 5M rows within groups. Heap arm FIRST (warmup
-      // bias lands on our design). Both arms assert the identical kept
-      // count in-entry (2000 domains × 8), so a semantics drift fails
-      // loudly instead of recording a timing for a different computation.
-      "domain_cap_grouplimit" -> (() => timed("domain_cap_grouplimit") {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("registrable_domain").orderBy(col("n_toks").desc, col("doc_id"))
-        val kept = domainCapBenchFrame
-          .withColumn("rk", row_number().over(w)).where(col("rk") <= 8)
-          .agg(count(lit(1))).collect()(0).getLong(0)
-        require(kept == 16000L, s"domain_cap_grouplimit kept $kept, expected 16000")
-      }),
-      "domain_cap_fullwindow" -> (() => {
-        // getOption, not get-with-fallback: restoring a made-up fallback
-        // would pin a non-default threshold for the rest of the sweep
-        val key = "spark.sql.optimizer.windowGroupLimitThreshold"
-        val prev = spark.conf.getOption(key)
-        spark.conf.set(key, "-1")
-        try timed("domain_cap_fullwindow") {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("registrable_domain").orderBy(col("n_toks").desc, col("doc_id"))
-          val kept = domainCapBenchFrame
-            .withColumn("rk", row_number().over(w)).where(col("rk") <= 8)
-            .agg(count(lit(1))).collect()(0).getLong(0)
-          require(kept == 16000L, s"domain_cap_fullwindow kept $kept, expected 16000")
-        } finally prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-      }),
-      "median_filter_hist" -> (() => timed("median_filter_hist") {
-        force(CoreOps.perGroupMedianFilter(medianBenchFrame, "g", "q")
-          .groupBy("g").agg(count(lit(1)).as("kept")))
-      }),
-      "median_filter_sortwindow" -> (() => timed("median_filter_sortwindow") {
-        import org.apache.spark.sql.expressions.Window
-        val frame = medianBenchFrame
-        val w = Window.partitionBy("g").orderBy("q", "id")
-        val cw = Window.partitionBy("g")
-        val thr = frame
-          .withColumn("rn", row_number().over(w))
-          .withColumn("tot", count(lit(1)).over(cw))
-          .where(col("rn") === expr("(tot + 1) div 2"))
-          .select(col("g"), col("q").as("__thr"))
-        force(frame.join(thr, "g").where(col("q") >= col("__thr"))
-          .groupBy("g").agg(count(lit(1)).as("kept")))
-      }),
-      // Checkpoint A/B for the JS-divergence count table: four consumers
-      // derive from the (source, word) counts, so skipping the
-      // materialization re-scans and re-tokenizes the corpus per consumer
-      // (runtime exchange reuse recovers only part of it — measured 6
-      // explain-level scans). The sf-dir documents are too small for the
-      // re-scan to register, so the A/B runs on a 400k-doc × 40-token
-      // synthetic corpus (16 sources, 500-word vocab, Murmur3-derived —
-      // deterministic, no oracle needed for a timing receipt). Same result
-      // rows; the delta prices the re-scan. Materialized arm FIRST so
-      // warmup bias is conservative.
-      "source_divergence_ckpt" -> (() => timed("source_divergence_ckpt") {
-        force(graft.operators.TextOps.sourceDivergence(
-          divergenceBenchFrame, "source", "text"))
-      }),
-      "source_divergence_nockpt" -> (() => timed("source_divergence_nockpt") {
-        force(graft.operators.TextOps.sourceDivergence(
-          divergenceBenchFrame, "source", "text", materialize = false))
-      }),
-      // Exact-vs-HLL distinct A/B on a 20M-row / 1M-user synthetic event
-      // frame: countDistinct expands to a (day, user) distinct shuffle
-      // before counting; approx_count_distinct (HLL++, rsd 2%) combines
-      // map-side and never materializes the identity set — the only shape
-      // that survives 100 TB of events. The sketch's error is asserted
-      // < 5%/day OUTSIDE the timed region, so the receipt carries its own
-      // accuracy check without polluting the timing.
-      "distinct_users_exact" -> (() => timed("distinct_users_exact") {
-        force(distinctBenchFrame
-          .groupBy("day").agg(countDistinct(col("user_id")).as("users")))
-      }),
-      "distinct_users_hll" -> (() => {
-        // accuracy gate OUTSIDE the timed region; a failure marks THIS
-        // entry failed (-1) in the bench result AND the profiler record
-        // (timedAudited) instead of killing the whole suite
-        timedAudited("distinct_users_hll") {
-          force(distinctBenchFrame
-            .groupBy("day").agg(approx_count_distinct(col("user_id"), 0.02).as("users")))
-        } {
-          // one aggregate per count: combined with a distinct, the sketch
-          // would run over Spark's distinct-expanded rows
-          def perDay(users: Column): Map[Int, Long] = distinctBenchFrame.groupBy("day")
-            .agg(users).collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-          val exact = perDay(countDistinct(col("user_id")))
-          val approx = perDay(approx_count_distinct(col("user_id"), 0.02))
-          require(approx.keySet == exact.keySet, s"HLL days ${approx.keySet} != exact days ${exact.keySet}")
-          for ((day, ex) <- exact) {
-            val ap = approx(day)
-            require(math.abs(ap - ex).toDouble / ex < 0.05,
-              s"HLL error out of band on day $day: exact=$ex approx=$ap")
-          }
-        }
-      }),
-      "e2e_build_joins" -> (() => noBroadcast { timed("e2e_build_joins") {
-        val docs = graft.Tables.documents(spark, sfDir)
-        val lang = graft.operators.TextOps.languageId(docs, "doc_id", "text")
-          .select("doc_id", "predicted_lang")
-        val qual = graft.operators.TextOps.qualityScore(docs, "doc_id", "text")
-          .select("doc_id", "quality")
-        val toks = graft.operators.TextOps.tokenStats(docs, "doc_id", "text")
-          .select("doc_id", "n_tokens")
-        val keep = graft.operators.Dedup.exactDuplicateGroups(docs, "doc_id", "text")
-          .select(col("keep_id").as("doc_id"))
-        force(CoreOps.hashSplit(
-          docs.select("doc_id").join(keep, "doc_id")
-            .join(lang, "doc_id").join(qual, "doc_id").join(toks, "doc_id")
-            .where(col("predicted_lang") === "en" && col("quality") >= 0.5),
-          "doc_id", Seq("train" -> 80, "val" -> 10, "test" -> 10))
-          .select("doc_id", "predicted_lang", "quality", "n_tokens", "split"))
-      }}),
-      // Per-epoch latency of the steady-state streaming corpus maintenance
-      // loop (graft.tools.CorpusMaintenance): the documents table as the
-      // standing corpus, a 200-doc incoming batch (half near-dups of corpus
-      // docs, half novel), streamed through the stateless stream-static
-      // incremental dedup, admitted decisions materialized exactly-once.
-      // Measures the whole ingest cycle: query start, feed, watermark
-      // drain, idempotent sink write, stop.
-      // One preference-derivation cycle over the full event log streamed
-      // in two time-split micro-batches through the keyed-state
-      // comparison derivation; the comparison count must equal the batch
-      // operator's exactly, or the entry fails.
-      // The batch comparison-count audit runs OUTSIDE the timed region
-      // (timedAudited); a mismatch still fails the entry.
-      "streaming_preference_epoch" -> (() => {
-        import spark.implicits._
-        implicit val sqlCtx = spark.sqlContext
-        import graft.streaming.StreamingPipelines
-        val ev = Tables.events(spark, sfDir).withColumn("ts_us", expr("ts_ns div 1000"))
-        var streamed = -1L
-        timedAudited("streaming_preference_epoch") {
-          val rows = ev.select(col("user_id"), col("ts_us"), col("event_id"),
-              col("event_type"), col("value"))
-            .as[(Long, Long, Long, String, Double)].collect()
-            .map { case (u, t, id, it, v) => StreamingPipelines.PrefEvent(u, t, id, it, v) }
-          val cut = rows.map(_.tsUs).sorted.apply(rows.length / 2)
-          val (b1, b2) = rows.partition(_.tsUs <= cut)
-          val mem = org.apache.spark.sql.execution.streaming.runtime
-            .MemoryStream[StreamingPipelines.PrefEvent]
-          val qn = s"prefbench_${System.nanoTime()}"
-          val q = StreamingPipelines.comparisonStream(mem.toDS())
-            .writeStream.outputMode("append").format("memory").queryName(qn).start()
-          try {
-            mem.addData(b1.toSeq); q.processAllAvailable()
-            mem.addData(b2.toSeq); q.processAllAvailable()
-          } finally q.stop()
-          streamed = spark.table(qn).count()
-        } {
-          val batch = graft.operators.Preference.comparisonsFromEvents(
-              ev, "user_id", "ts_us", "event_id", "event_type", "value")
-            .agg(coalesce(sum("n"), lit(0L))).collect()(0).getLong(0)
-          require(streamed == batch,
-            s"streaming_preference_epoch streamed $streamed != batch $batch")
-          System.err.println(
-            s"[bench] streaming_preference_epoch comparisons=$streamed (batch agrees)")
-        }
-      }),
-      "streaming_corpus_epoch" -> (() => timed("streaming_corpus_epoch") {
-        val base = Tables.documents(spark, sfDir)
-          .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        val sample = base.orderBy("doc_id").limit(200)
-          .collect().map(r => (r.getLong(0), r.getString(1)))
-        val batch = sample.zipWithIndex.map { case ((id, t), i) =>
-          if (i % 2 == 0) (100000L + id, t + " trailing near dup marker")
-          else (100000L + id, t.split(" ").reverse.mkString(" ") + " reversed novel")
-        }.toSeq
-        val dir = s"/tmp/graft_bench_corpus_${System.nanoTime()}"
-        try {
-          val admitted = graft.tools.CorpusMaintenance.runEpoch(spark, base, batch, 0, dir,
-            k = 3, numHashes = 64, numBands = 16, threshold = 0.8)
-          // drift guard: the workload plants exactly 100 reversed-novel docs
-          // plus 5 near-dup-marked docs below the 0.8 Jaccard threshold —
-          // any other count means the dedup semantics moved, so fail LOUDLY
-          // rather than record a timing for a different computation
-          require(admitted.size == 105,
-            s"streaming_corpus_epoch admitted ${admitted.size} of ${batch.size}, expected 105")
-          System.err.println(s"[bench] streaming_corpus_epoch admitted=${admitted.size} of ${batch.size}")
-        } finally graft.tools.CorpusMaintenance.deleteRecursively(dir)
-      }),
-      // Steady-state vs per-query ingest, INTERLEAVED. A standing query's
-      // first epoch is not reliably its expensive one (startup is small
-      // next to epoch noise), so later-vs-first epochs of one run prove
-      // nothing. The OPERATIONAL claim — a standing query with a
-      // persisted corpus index beats spinning a fresh query per cycle,
-      // because the per-query mode pays query+checkpoint creation AND
-      // re-signs the whole corpus on every micro-batch (3× per cycle) —
-      // is receipted here the way every other A/B pair is: an unrecorded
-      // warmup cycle, then ≥3 laps each running STEADY (standing query,
-      // our design first so residual warmup bias lands on it) then COLD
-      // (fresh runEpoch), ratio per lap, median decides. Runs ONCE
-      // regardless of `repeats` — it self-averages over laps.
-      "streaming_corpus_epoch5_amortized" -> (() => timed("streaming_corpus_epoch5_amortized") {
-        val base = Tables.documents(spark, sfDir)
-          .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        val sample = base.orderBy("doc_id").limit(200)
-          .collect().map(r => (r.getLong(0), r.getString(1)))
-        // identical batch TEXT every cycle (cycle-distinct ids): incoming
-        // docs are never compared to each other, so each cycle admits
-        // exactly the single-epoch entry's 105 — the invariant below
-        def batchAt(idBase: Long): Seq[(Long, String)] =
-          sample.zipWithIndex.map { case ((id, t), i) =>
-            if (i % 2 == 0) (idBase + id, t + " trailing near dup marker")
-            else (idBase + id, t.split(" ").reverse.mkString(" ") + " reversed novel")
-          }.toSeq
-        val dir = s"/tmp/graft_bench_corpusN_${System.nanoTime()}"
-        val laps = 3
-        var standing: Option[graft.tools.CorpusMaintenance.StandingIngest] = None
-        try {
-          // unrecorded WARMUP: one full per-query cycle — codegen, parquet
-          // footers, and the dedup-stream machinery warm for BOTH arms
-          val w = graft.tools.CorpusMaintenance.runEpoch(spark, base,
-            batchAt(90000000L), 90, s"$dir/warm",
-            k = 3, numHashes = 64, numBands = 16, threshold = 0.8)
-          require(w.size == 105,
-            s"streaming_corpus warmup admitted ${w.size}, expected 105")
-          standing = Some(graft.tools.CorpusMaintenance.startStanding(spark, base,
-            s"$dir/standing", k = 3, numHashes = 64, numBands = 16, threshold = 0.8))
-          // startup cycle (query start + checkpoint creation) — excluded
-          // from the ratio laps BY DESIGN: amortizing it is the point
-          val startup = standing.get.epoch(batchAt(100000L))
-          val lapPairs = (1 to laps).map { lap =>
-            val steadySec = standing.get.epoch(batchAt(100000L * (lap + 1)))
-            val t0 = System.nanoTime()
-            val cold = graft.tools.CorpusMaintenance.runEpoch(spark, base,
-              batchAt(10000000L * lap), 90 + lap, s"$dir/cold$lap",
-              k = 3, numHashes = 64, numBands = 16, threshold = 0.8)
-            val coldSec = (System.nanoTime() - t0) / 1e9
-            require(cold.size == 105,
-              s"streaming_corpus cold lap $lap admitted ${cold.size}, expected 105")
-            (steadySec, coldSec)
-          }
-          val results = standing.get.finish()
-          standing = None
-          results.foreach { e =>
-            require(e.admitted == 105,
-              s"streaming_corpus standing epoch ${e.epoch} admitted ${e.admitted}, expected 105")
-          }
-          steadyColdLaps = Some(lapPairs)
-          System.err.println(
-            f"[bench] streaming_corpus standing startup=$startup%.2f s laps " +
-            lapPairs.map { case (s, c) => f"steady=$s%.2f/cold=$c%.2f" }.mkString(" "))
-        } finally {
-          standing.foreach(_.abort())
-          graft.tools.CorpusMaintenance.deleteRecursively(dir)
-        }
-      }),
-      // Per-epoch latency of the SEMANTIC index maintenance loop
-      // (graft.tools.SemanticMaintenance): the embeddings table minus a
-      // held-out fifth as the standing corpus, its cell index built once
-      // and persisted (the maintained-storage contract), and the held-out
-      // vectors streamed through the stream-static semantic dedup as one
-      // ingest epoch. The admitted count must equal the batch
-      // incrementalSemanticDedup on the same index exactly — a divergence
-      // fails the entry rather than record a timing for a different
-      // computation.
-      // The batch-equality AUDIT — an independent second computation of
-      // the same epoch — runs OUTSIDE the timed region (timedAudited), so
-      // the entry times the maintenance cycle, not the harness check. A
-      // mismatch still fails the entry (-1).
-      "streaming_semantic_epoch" -> (() => {
-        import spark.implicits._
-        import graft.operators.Similarity
-        val thr = 0.4
-        val emb = Tables.embeddings(spark, sfDir)
-        val corpus = emb.where(col("vec_id") % 5 =!= 0)
-        var centroids: Array[Array[Double]] = null
-        var idx: DataFrame = null
-        var epoch: Seq[(Long, Seq[Float])] = Nil
-        var streamKeep = -1L
-        var nDecisions = -1
-        try timedAudited("streaming_semantic_epoch") {
-          val (c0, idx0) = Similarity.semanticIndex(corpus)
-          centroids = c0
-          idx = idx0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          idx.count()
-          epoch = emb.where(col("vec_id") % 5 === 0)
-            .select(col("vec_id"), col("embedding"))
-            .as[(Long, Seq[Float])].collect().toSeq
-          val decisions = graft.tools.SemanticMaintenance.runEpoch(
-            spark, centroids, idx, epoch, thr, s"sem_epoch_${System.nanoTime()}")
-          streamKeep = decisions.count(_._4)
-          nDecisions = decisions.size
-        } {
-          val batchKeep = Similarity.incrementalSemanticDedup(
-              epoch.toDF("vec_id", "embedding"), centroids, idx, thr)
-            .where(col("keep")).count()
-          require(streamKeep == batchKeep && nDecisions == epoch.size,
-            s"streaming_semantic_epoch stream admitted $streamKeep of $nDecisions, " +
-              s"batch admitted $batchKeep of ${epoch.size}")
-          System.err.println(s"[bench] streaming_semantic_epoch admitted=$streamKeep " +
-            s"of ${epoch.size} (batch agrees)")
-        } finally { if (idx != null) { idx.unpersist(); () } }
-      }),
-      // Per-epoch latency of the REDUCED-dimension index maintenance loop:
-      // the frozen model (PCA rotation + reduced centroids) trains once on
-      // the standing corpus, the maintained (cell, id, nemb) index is
-      // built and persisted, and the held-out fifth streams through
-      // reducedDedupStream (8-dim assignment arithmetic on the probe
-      // side). The admitted count must equal the batch
-      // incrementalReducedDedup on the same index exactly, or the entry
-      // fails rather than time a different computation.
-      // The batch-equality audit runs OUTSIDE the timed region
-      // (timedAudited); a mismatch still fails the entry.
-      "streaming_reduced_epoch" -> (() => {
-        import spark.implicits._
-        import graft.operators.Similarity
-        val thr = 0.4
-        val emb = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
-        val corpus = emb.where(col("vec_id") % 5 =!= 0)
-        var model: Similarity.ReducedModel = null
-        var idx: DataFrame = null
-        var epoch: Seq[(Long, Seq[Float])] = Nil
-        var streamKeep = -1L
-        var nDecisions = -1
-        try timedAudited("streaming_reduced_epoch") {
-          model = Similarity.trainReducedModel(corpus)
-          idx = Similarity.reducedIndexOf(corpus, model)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          idx.count()
-          epoch = emb.where(col("vec_id") % 5 === 0)
-            .select(col("vec_id"), col("embedding"))
-            .as[(Long, Seq[Float])].collect().toSeq
-          val decisions = graft.tools.SemanticMaintenance.runReducedEpoch(
-            spark, model, idx, epoch, thr, s"red_epoch_${System.nanoTime()}")
-          streamKeep = decisions.count(_._4)
-          nDecisions = decisions.size
-        } {
-          val batchKeep = Similarity.incrementalReducedDedup(
-              epoch.toDF("vec_id", "embedding"), model, idx, thr)
-            .where(col("keep")).count()
-          require(streamKeep == batchKeep && nDecisions == epoch.size,
-            s"streaming_reduced_epoch stream admitted $streamKeep of $nDecisions, " +
-              s"batch admitted $batchKeep of ${epoch.size}")
-          System.err.println(s"[bench] streaming_reduced_epoch admitted=$streamKeep " +
-            s"of ${epoch.size} (batch agrees)")
-        } finally { if (idx != null) { idx.unpersist(); () } }
-      }),
-      // One HYBRID ingest epoch against BOTH maintained indexes: the
-      // documents∩embeddings corpus minus a held-out fifth supplies the
-      // lexical signature index and the semantic cell index (each built
-      // once and persisted — maintained storage); the held-out fifth
-      // streams through hybridDedupStream. Admitted set must equal the
-      // batch hybridIncrementalDedup exactly, or the entry fails.
-      // The batch-equality audit runs OUTSIDE the timed region
-      // (timedAudited); a mismatch still fails the entry.
-      "streaming_hybrid_epoch" -> (() => {
-        import spark.implicits._
-        import graft.operators.{Dedup, Similarity}
-        val (k, nh, nb, jThr, cThr) = (3, 8, 4, 0.5, 0.4)
-        val emb = Tables.embeddings(spark, sfDir)
-        val docs = Tables.documents(spark, sfDir)
-          .join(emb.select(col("vec_id").as("doc_id")), "doc_id")
-          .select(col("doc_id"), col("text"))
-        val corpusDocs = docs.where(col("doc_id") % 5 =!= 0)
-        val corpusEmb = emb.where(col("vec_id") % 5 =!= 0)
-        var centroids: Array[Array[Double]] = null
-        var cellIndex: DataFrame = null
-        var bIdx: DataFrame = null
-        var sIdx: DataFrame = null
-        var epoch: Seq[(Long, String, Seq[Float])] = Nil
-        var streamAdmitted: Set[Long] = Set.empty
-        var nDecisions = -1
-        try timedAudited("streaming_hybrid_epoch") {
-          centroids = Similarity.trainIvfCentroids(emb, nlist = 16, dim = 64)
-          cellIndex = Similarity.assignToCells(corpusEmb, centroids)
-            .select(col("cluster"), col("vec_id").as("c_id"), col("nemb").as("c_nemb"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val (idxB, idxS) = graft.streaming.StreamingPipelines.dedupIndex(
-            corpusDocs, "doc_id", "text", k, nh, nb)
-          bIdx = idxB.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          sIdx = idxS.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          cellIndex.count(); bIdx.count(); sIdx.count()
-          epoch = docs.where(col("doc_id") % 5 === 0)
-            .join(emb.select(col("vec_id").as("doc_id"), col("embedding")), "doc_id")
-            .select(col("doc_id"), col("text"), col("embedding"))
-            .as[(Long, String, Seq[Float])].collect().toSeq
-          val decisions = graft.tools.SemanticMaintenance.runHybridEpoch(
-            spark, (bIdx, sIdx), centroids, cellIndex, epoch,
-            k, nh, nb, jThr, cThr, s"hybrid_epoch_${System.nanoTime()}")
-          streamAdmitted = decisions.filter(_._2).map(_._1).toSet
-          nDecisions = decisions.size
-        } {
-          val batchAdmitted = Dedup.hybridIncrementalDedup(
-              corpusDocs, epoch.map(e => (e._1, e._2)).toDF("doc_id", "text"),
-              epoch.map(e => (e._1, e._3)).toDF("vec_id", "embedding"),
-              centroids, cellIndex, "doc_id", "text", k, nh, nb, jThr, cThr)
-            .where(col("keep")).select("doc_id")
-            .as[Long].collect().toSet
-          require(streamAdmitted == batchAdmitted && nDecisions == epoch.size,
-            s"streaming_hybrid_epoch stream admitted ${streamAdmitted.size} of " +
-              s"$nDecisions, batch ${batchAdmitted.size} of ${epoch.size}")
-          System.err.println(s"[bench] streaming_hybrid_epoch admitted=${streamAdmitted.size} " +
-            s"of ${epoch.size} (batch agrees)")
-        } finally {
-          if (cellIndex != null) cellIndex.unpersist()
-          if (bIdx != null) bIdx.unpersist()
-          if (sIdx != null) { sIdx.unpersist(); () }
-        }
-      }),
-      // One DRIFT-MONITOR ingest epoch: the documents corpus minus a
-      // held-out fifth supplies the baseline quality histogram (built once,
-      // persisted — maintained storage); the held-out fifth streams through
-      // epochHistogramStream and the finalized epoch histogram composes
-      // against the baseline via psiFromHistograms. The per-source PSI map
-      // must equal batch psiDrift on the same rows exactly, or the entry
-      // fails rather than record a timing for a different computation.
-      // The batch psiDrift audit — an independent recomputation over the
-      // same rows — runs OUTSIDE the timed region (timedAudited); a
-      // mismatch still fails the entry.
-      "streaming_drift_epoch" -> (() => {
-        import spark.implicits._
-        implicit val sqlCtx = spark.sqlContext
-        import graft.operators.TextOps
-        val scored = Tables.documents(spark, sfDir).select(col("doc_id"), col("source"),
-          least(floor(TextOps.qualityCol(col("text")) * lit(10.0)).cast("long"), lit(9L))
-            .as("bin"))
-        val baseline = scored.where(col("doc_id") % 5 =!= 0)
-        val epoch = scored.where(col("doc_id") % 5 === 0)
-        var baseHist: DataFrame = null
-        var streamed: Map[String, Double] = Map.empty
-        try timedAudited("streaming_drift_epoch") {
-          baseHist = CoreOps.psiHistogram(baseline, "source", "bin", 10)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          baseHist.count()
-          val epochRows = epoch.select(col("source"), col("bin"))
-            .as[(String, Long)].collect().toSeq
-          val mem = org.apache.spark.sql.execution.streaming.runtime
-            .MemoryStream[(java.sql.Timestamp, String, Long)]
-          val hist = graft.streaming.StreamingPipelines.epochHistogramStream(
-            mem.toDF().toDF("ts", "source", "bin"), "ts", "source", "bin",
-            epochWindow = "60 seconds", watermarkDelay = "0 seconds")
-          val qn = s"driftbench_${System.nanoTime()}"
-          val q = hist.writeStream.outputMode("append").format("memory")
-            .queryName(qn).start()
-          try {
-            mem.addData(epochRows.map { case (s, b) =>
-              (new java.sql.Timestamp(10L * 1000), s, b) })
-            q.processAllAvailable()
-            mem.addData(Seq((new java.sql.Timestamp(100000L * 1000), "zz", 0L)))
-            q.processAllAvailable()
-            mem.addData(Seq((new java.sql.Timestamp(200000L * 1000), "zz", 0L)))
-            q.processAllAvailable()
-          } finally q.stop()
-          val epochHist = spark.table(qn).where(col("source") =!= "zz")
-            .select(col("source"), col("__bin"), col("cnt"))
-          streamed = CoreOps.psiFromHistograms(baseHist, epochHist, "source", 10)
-            .select("source", "psi").as[(String, Double)].collect().toMap
-        } {
-          val batch = CoreOps.psiDrift(baseline, epoch, "source", "bin", 10)
-            .select("source", "psi").as[(String, Double)].collect().toMap
-          require(streamed == batch,
-            s"streaming_drift_epoch psi mismatch: streamed=$streamed batch=$batch")
-          System.err.println(
-            s"[bench] streaming_drift_epoch sources=${streamed.size} (batch agrees)")
-        } finally { if (baseHist != null) { baseHist.unpersist(); () } }
-      }),
-      // One RETRIEVAL-monitor ingest epoch: the documents corpus minus a
-      // held-out fifth supplies the BM25 index (posting/df tables built
-      // once and persisted — maintained storage); the held-out fifth
-      // streams through retrievalScoreStream and the finalized match
-      // scores compose to top-3 per incoming document. The result must
-      // equal batch bm25Search exactly, or the entry fails.
-      "streaming_retrieval_epoch" -> (() => {
-        import spark.implicits._
-        implicit val sqlCtx = spark.sqlContext
-        import graft.operators.TextOps
-        val docs = Tables.documents(spark, sfDir)
-          .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        val corpus = docs.where(col("doc_id") % 5 =!= 0)
-        // a 1/25th epoch: lexical match sets are dense (every shared common
-        // term is a candidate), so the memory-sink volume — not the joins —
-        // dominates past a few hundred incoming docs per cycle
-        val epoch = docs.where(col("doc_id") % 25 === 0)
-        var streamed: Set[(Long, Long, Long, Double)] = Set.empty
-        // timed region: index build + persist, the streamed epoch, and the
-        // top-3 composition — the full ingest cycle. The batch-equality
-        // audit runs OUTSIDE the timing (distinct_users_hll pattern): a
-        // mismatch fails the entry, but its cost (a second, independent
-        // index build) never pollutes the epoch latency.
-        timedAudited("streaming_retrieval_epoch") {
-          val (tfdl, dfreq, nDocs, totalDl) = TextOps.bm25Index(corpus, "doc_id", "text")
-          val tfdlP = tfdl.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val dfreqP = dfreq.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          tfdlP.count(); dfreqP.count()
-          try {
-            val mem = org.apache.spark.sql.execution.streaming.runtime
-              .MemoryStream[(java.sql.Timestamp, Long, String)]
-            val scores = graft.streaming.StreamingPipelines.retrievalScoreStream(
-              mem.toDF().toDF("ts", "doc_id", "text"), "ts", "doc_id", "text",
-              tfdlP, dfreqP, nDocs, totalDl, watermarkDelay = "0 seconds")
-            val qn = s"retrbench_${System.nanoTime()}"
-            val q = scores.writeStream.outputMode("append").format("memory")
-              .queryName(qn).start()
-            try {
-              val rows = epoch.as[(Long, String)].collect()
-              mem.addData(rows.map { case (id, t) =>
-                (new java.sql.Timestamp(10L * 1000), id, t) }.toSeq)
-              q.processAllAvailable()
-              mem.addData(Seq((new java.sql.Timestamp(100000L * 1000), -1L, "flush")))
-              q.processAllAvailable()
-              mem.addData(Seq((new java.sql.Timestamp(200000L * 1000), -2L, "flush")))
-              q.processAllAvailable()
-            } finally q.stop()
-            streamed = TextOps.bm25TopK(
-                spark.table(qn).where(col("query_id") >= 0), k = 3)
-              .as[(Long, Long, Long, Double)].collect().toSet
-          } finally { tfdlP.unpersist(); dfreqP.unpersist(); () }
-        } {
-          val batch = TextOps.bm25Search(corpus, epoch,
-              "doc_id", "text", "doc_id", "text", k = 3)
-            .as[(Long, Long, Long, Double)].collect().toSet
-          require(streamed == batch,
-            s"diverged: ${streamed.size} vs ${batch.size} rows")
-          System.err.println(s"[bench] streaming_retrieval_epoch matches=${streamed.size} (batch agrees)")
-        }
-      }),
-      // One MIXTURE-monitor ingest epoch: the frozen bigram model over the
-      // corpus minus a held-out fifth is the maintained snapshot (built +
-      // persisted inside the timing — one model build per release cycle);
-      // the held-out fifth streams through the frozen-model scorer, the
-      // per-source accumulators merge, and the EG weights refresh. The
-      // merged accumulators must equal the batch rollup over the union
-      // (audited outside the timing).
-      "streaming_mixture_epoch" -> (() => {
-        import spark.implicits._
-        implicit val sqlCtx = spark.sqlContext
-        import graft.operators.TextOps
-        val docs = Tables.documents(spark, sfDir)
-          .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("source"))
-        val corpus = docs.where(col("doc_id") % 5 =!= 0)
-        val epoch = docs.where(col("doc_id") % 5 === 0)
-        def rollup(d: DataFrame, bg: DataFrame, cx: DataFrame, vs: Double) =
-          TextOps.bigramNllUnder(d, "doc_id", "text", bg, cx, vs)
-            .join(d.select(col("doc_id"), col("source")), "doc_id")
-            .groupBy("source")
-            .agg(sum(col("sum_nll_q6")).as("s"), sum(col("n_trans")).as("n"))
-            .as[(String, Long, Long)].collect()
-            .map { case (s, sv, n) => s -> ((sv, n)) }.toMap
-        var merged: Map[String, (Long, Long)] = Map.empty
-        var bigramP: DataFrame = null; var ctxP: DataFrame = null
-        var vocabHeld = 0.0
-        try timedAudited("streaming_mixture_epoch") {
-          val (bigram, ctx, vocab) = TextOps.bigramModel(corpus, "doc_id", "text")
-          vocabHeld = vocab
-          bigramP = bigram.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          ctxP = ctx.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          bigramP.count(); ctxP.count()
-          val baseAcc = rollup(corpus, bigramP, ctxP, vocab)
-          val mem = org.apache.spark.sql.execution.streaming.runtime
-            .MemoryStream[(java.sql.Timestamp, Long, String, String)]
-          val losses = graft.streaming.StreamingPipelines.mixtureLossStream(
-            mem.toDF().toDF("ts", "doc_id", "text", "source"),
-            "ts", "doc_id", "text", "source", bigramP, ctxP, vocab,
-            watermarkDelay = "0 seconds")
-          val qn = s"mixbench_${System.nanoTime()}"
-          val q = losses.writeStream.outputMode("append").format("memory")
-            .queryName(qn).start()
-          try {
-            val rows = epoch.select("doc_id", "text", "source")
-              .as[(Long, String, String)].collect()
-            mem.addData(rows.map { case (id, tx, s) =>
-              (new java.sql.Timestamp(10L * 1000), id, tx, s) }.toSeq)
-            q.processAllAvailable()
-            mem.addData(Seq((new java.sql.Timestamp(100000L * 1000), -1L, "flush one", "__flush")))
-            q.processAllAvailable()
-            mem.addData(Seq((new java.sql.Timestamp(200000L * 1000), -2L, "flush two", "__flush")))
-            q.processAllAvailable()
-          } finally q.stop()
-          merged = spark.table(qn).where(col("source") =!= "__flush")
-            .as[(String, Long, Long)].collect()
-            .foldLeft(baseAcc) { case (acc, (s, n, sv)) =>
-              val (s0, n0) = acc.getOrElse(s, (0L, 0L))
-              acc.updated(s, (s0 + sv, n0 + n))
-            }
-          val weights = TextOps.egMixtureRows(
-            merged.toSeq.map { case (s, (sv, n)) => (s, sv / n) }.sortBy(_._1),
-            iterations = 8, tokenBudget = 1000000L, etaPct = 50)
-          require(weights.map(_._4).sum == 1000000L)
-        } {
-          val batchAcc = rollup(corpus.union(epoch), bigramP, ctxP, vocabHeld)
-          require(merged == batchAcc,
-            s"accumulators diverged: ${merged.size} vs ${batchAcc.size} sources")
-          System.err.println(s"[bench] streaming_mixture_epoch sources=${merged.size} (batch agrees)")
-        } finally {
-          if (bigramP != null) bigramP.unpersist()
-          if (ctxP != null) { ctxP.unpersist(); () }
-        }
-      }),
-      // One ASSET-dedup ingest epoch: the mixed-modality corpus minus a
-      // held-out fifth supplies the maintained signature index (one row
-      // per distinct signature, persisted); the held-out fifth streams
-      // through the STATELESS signature join (decode + hash inside the
-      // stream map — no watermark, no aggregation). The decisions must
-      // equal the batch canonical rule on the same index, audited outside
-      // the timing (the retrieval-epoch pattern).
-      "streaming_asset_epoch" -> (() => {
-        import spark.implicits._
-        implicit val sqlCtx = spark.sqlContext
-        import graft.operators.{MediaAsset, Multimodal}
-        val docs = Tables.documents(spark, sfDir)
-        val corpus = Multimodal.syntheticMixedAssets(
-          spark, docs.where(col("doc_id") % 5 =!= 0))
-        val epochRows = Multimodal.syntheticMixedAssets(
-          spark, docs.where(col("doc_id") % 5 === 0)).collect().toSeq
-        var streamed: Set[(Long, String, String, Option[Long], Boolean)] = Set.empty
-        var idx: org.apache.spark.sql.DataFrame = null
-        try timedAudited("streaming_asset_epoch") {
-          idx = graft.streaming.StreamingPipelines.assetSignatureIndex(corpus)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          idx.count()
-          val mem = org.apache.spark.sql.execution.streaming.runtime
-            .MemoryStream[MediaAsset]
-          val out = graft.streaming.StreamingPipelines.assetDedupStream(mem.toDS(), idx)
-          val qn = s"assetbench_${System.nanoTime()}"
-          val q = out.writeStream.outputMode("append").format("memory")
-            .queryName(qn).start()
-          try {
-            mem.addData(epochRows)
-            q.processAllAvailable()
-          } finally q.stop()
-          streamed = spark.table(qn)
-            .as[(Long, String, String, Option[Long], Boolean)].collect().toSet
-        } {
-          val batch = graft.streaming.StreamingPipelines.assetDedupStream(
-              spark.createDataset(epochRows), idx)
-            .as[(Long, String, String, Option[Long], Boolean)].collect().toSet
-          require(streamed == batch,
-            s"diverged: ${streamed.size} vs ${batch.size} rows")
-          System.err.println(s"[bench] streaming_asset_epoch assets=${streamed.size} " +
-            s"admitted=${streamed.count(_._5)} (batch agrees)")
-        } finally { if (idx != null) { idx.unpersist(); () } }
-      }),
-      "streaming_exact_epoch" -> (() => {
-        import spark.implicits._
-        implicit val sqlCtx = spark.sqlContext
-        val docs = Tables.documents(spark, sfDir)
-        val corpus = docs.where(col("doc_id") % 5 =!= 0)
-        val epochRows = docs.where(col("doc_id") % 5 === 0)
-          .select(col("doc_id").cast("long"), col("text"))
-          .as[(Long, String)].collect().toSeq
-        var streamed: Set[(Long, String, Option[Long], Boolean)] = Set.empty
-        var idx: org.apache.spark.sql.DataFrame = null
-        try timedAudited("streaming_exact_epoch") {
-          idx = graft.streaming.StreamingPipelines
-            .contentFingerprintIndex(corpus, "doc_id", "text")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          idx.count()
-          val mem = org.apache.spark.sql.execution.streaming.runtime
-            .MemoryStream[(Long, String)]
-          val out = graft.streaming.StreamingPipelines.exactDedupStream(
-            mem.toDF().toDF("doc_id", "text"), idx, "doc_id", "text")
-          val qn = s"exactbench_${System.nanoTime()}"
-          val q = out.writeStream.outputMode("append").format("memory")
-            .queryName(qn).start()
-          try {
-            mem.addData(epochRows)
-            q.processAllAvailable()
-          } finally q.stop()
-          streamed = spark.table(qn)
-            .as[(Long, String, Option[Long], Boolean)].collect().toSet
-        } {
-          val batch = graft.streaming.StreamingPipelines.exactDedupStream(
-              epochRows.toDF("doc_id", "text"), idx, "doc_id", "text")
-            .as[(Long, String, Option[Long], Boolean)].collect().toSet
-          require(streamed == batch,
-            s"diverged: ${streamed.size} vs ${batch.size} rows")
-          System.err.println(s"[bench] streaming_exact_epoch docs=${streamed.size} " +
-            s"admitted=${streamed.count(_._4)} (batch agrees)")
-        } finally { if (idx != null) { idx.unpersist(); () } }
-      }),
-      // one crawl epoch through the stateless web-ingest stream: 1/5 of the
-      // corpus arrives as raw pages (some re-crawled URLs, some
-      // chrome-wrapped, some spam) probing maintained url + fingerprint
-      // indexes built from the standing 4/5; in-entry stream==batch audit
-      "streaming_webingest_epoch" -> (() => {
-        import spark.implicits._
-        implicit val sqlCtx = spark.sqlContext
-        val docs = Tables.documents(spark, sfDir)
-        val corpus = docs.where(col("doc_id") % 5 =!= 0)
-        val epochRows = docs.where(col("doc_id") % 5 === 0)
-          .select(col("doc_id").cast("long").as("doc_id"),
-            // %10: a re-crawl spelling of corpus page doc_id+1 (always in
-            // the corpus: (id+1) % 5 == 1); otherwise a fresh URL
-            when(col("doc_id") % 10 === 0,
-              concat(lit("https://WWW.example.com:443/page/"),
-                (col("doc_id") + 1).cast("string"), lit("?x=1&utm_s=z#f")))
-              .otherwise(concat(lit("https://example.com/new/"),
-                col("doc_id").cast("string"))).as("url"),
-            when(col("doc_id") % 7 === 0, concat(lit("<html><body><p>"),
-                col("text"), lit("</p><script>x();</script></body></html>")))
-              .when(col("doc_id") % 13 === 0, concat(col("text"), lit(" zzspamword")))
-              .otherwise(col("text")).as("page"))
-          .as[(Long, String, String)].collect().toSeq
-        var streamed: Set[(Long, Boolean, Boolean, Option[Long], Boolean)] = Set.empty
-        var urlIdx: org.apache.spark.sql.DataFrame = null
-        var cIdx: org.apache.spark.sql.DataFrame = null
-        def decisions(df: org.apache.spark.sql.DataFrame) =
-          df.select(col("doc_id"), col("url_dup"), col("spam"), col("dup_of"), col("keep"))
-            .as[(Long, Boolean, Boolean, Option[Long], Boolean)].collect().toSet
-        try timedAudited("streaming_webingest_epoch") {
-          urlIdx = corpus.select(graft.operators.TextOps.canonicalizeUrl(
-              concat(lit("https://example.com/page/"), col("doc_id").cast("string"),
-                lit("?x=1"))).as("canonical_url"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          cIdx = corpus.groupBy(md5(graft.operators.TextOps.extractHtmlText(col("text")))
-              .as("fingerprint"))
-            .agg(min(col("doc_id").cast("long")).as("rep_id"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          urlIdx.count(); cIdx.count()
-          val mem = org.apache.spark.sql.execution.streaming.runtime
-            .MemoryStream[(Long, String, String)]
-          val out = graft.streaming.StreamingPipelines.webIngestStream(
-            mem.toDF().toDF("doc_id", "url", "page"), urlIdx, cIdx,
-            "doc_id", "url", "page", Seq("zzspamword"))
-          val qn = s"webingestbench_${System.nanoTime()}"
-          val q = out.writeStream.outputMode("append").format("memory")
-            .queryName(qn).start()
-          try {
-            mem.addData(epochRows)
-            q.processAllAvailable()
-            streamed = decisions(spark.table(qn))
-          } finally {
-            q.stop()
-            // drop the per-run memory-sink table — across laps each run's
-            // collected rows would otherwise stay pinned in driver memory
-            // for the rest of the sweep
-            spark.catalog.dropTempView(qn); ()
-          }
-        } {
-          val batch = decisions(graft.streaming.StreamingPipelines.webIngestStream(
-            epochRows.toDF("doc_id", "url", "page"), urlIdx, cIdx,
-            "doc_id", "url", "page", Seq("zzspamword")))
-          require(streamed == batch,
-            s"diverged: ${streamed.size} vs ${batch.size} rows")
-          val kept = streamed.count(_._5)
-          require(streamed.exists(_._2), "no planted re-crawl was url-deduped")
-          require(streamed.exists(_._3), "no planted spam was flagged")
-          System.err.println(s"[bench] streaming_webingest_epoch pages=${streamed.size} " +
-            s"kept=$kept (batch agrees)")
-        } finally {
-          if (urlIdx != null) urlIdx.unpersist()
-          if (cIdx != null) { cIdx.unpersist(); () }
-        }
-      }),
-      "streaming_frontier_epoch" -> (() => {
-        import spark.implicits._
-        implicit val sqlCtx = spark.sqlContext
-        val docs = Tables.documents(spark, sfDir)
-        // one ingest epoch of crawled pages, each carrying an outlink to a
-        // planted h{0-9}.com target and a self link; standing dimensions:
-        // PSL over the target hosts, endorsement for even domains, h1's
-        // own robots disallowing its /p/1x paths, h2 at its crawl budget
-        val epochRows = docs.where(col("doc_id") % 5 === 0)
-          // the epoch's ids are all ≡0 mod 5, so key the planted target on
-          // doc_id/5 to span every host h0-h9 and every /p/0-19 path
-          .select(col("doc_id").cast("long").as("doc_id"),
-            concat(lit("https://src.example/p/"),
-              col("doc_id").cast("string")).as("url"),
-            concat(lit("<a href=\"https://h"),
-              (expr("doc_id div 5") % 10).cast("string"),
-              lit(".com/p/"), (expr("doc_id div 5") % 20).cast("string"),
-              lit("\">t</a> <a href=\"/self/"), (col("doc_id") % 7).cast("string"),
-              lit("\">s</a>")).as("page"))
-          .as[(Long, String, String)].collect().toSeq
-        val dim = graft.operators.TextOps.registrableDomainMap(
-          ((0 until 10).map(i => s"h$i.com") :+ "src.example").toDF("host"),
-          "host").persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val rank = (0 until 10 by 2).map(i => (s"h$i.com", (i + 1) * 100000L))
-          .toDF("registrable_domain", "pr_q6")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val rules = graft.operators.TextOps.urlRulesPacked(
-          Seq(("h1.com", "/p/1", false), ("h3.com", "/p/1", true))
-            .toDF("domain", "rule", "allow"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val counts = Seq(("h2.com", 30L), ("h4.com", 3L))
-          .toDF("registrable_domain", "n_pages")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        def run(df: org.apache.spark.sql.DataFrame) =
-          graft.streaming.StreamingPipelines.urlFrontierStream(
-            df, dim, rank, rules, counts, "doc_id", "page", "url", budget = 30L)
-        def rows(df: org.apache.spark.sql.DataFrame) =
-          df.select(col("doc_id"), col("link_no"), col("url"),
-              col("target_rank_q6"), col("allowed"), col("over_budget"),
-              col("eligible"))
-            .as[(Long, Long, String, Long, Boolean, Boolean, Boolean)]
-            .collect().toSet
-        var streamed: Set[(Long, Long, String, Long, Boolean, Boolean, Boolean)] = Set.empty
-        def cleanup(): Unit = {
-          dim.unpersist(); rank.unpersist(); rules.unpersist(); counts.unpersist(); ()
-        }
-        try timedAudited("streaming_frontier_epoch") {
-          dim.count(); rank.count(); rules.count(); counts.count()
-          val mem = org.apache.spark.sql.execution.streaming.runtime
-            .MemoryStream[(Long, String, String)]
-          val qn = s"frontierbench_${System.nanoTime()}"
-          val q = run(mem.toDF().toDF("doc_id", "url", "page"))
-            .writeStream.outputMode("append").format("memory")
-            .queryName(qn).start()
-          try {
-            mem.addData(epochRows)
-            q.processAllAvailable()
-            streamed = rows(spark.table(qn))
-          } finally { q.stop(); spark.catalog.dropTempView(qn); () }
-        } {
-          // in-entry agreement: the SAME function on the epoch as a batch
-          // frame, row for row — plus both polarities of each decision arm
-          val batch = rows(run(epochRows.toDF("doc_id", "url", "page")))
-          require(streamed == batch,
-            s"diverged: ${streamed.size} vs ${batch.size} rows")
-          require(streamed.exists(!_._5) && streamed.exists(_._5),
-            "planted robots block/allow must both occur")
-          require(streamed.exists(_._6) && streamed.exists(!_._6),
-            "planted budget over/under must both occur")
-          System.err.println(s"[bench] streaming_frontier_epoch links=${streamed.size} " +
-            s"eligible=${streamed.count(_._7)} (batch agrees)")
-        } finally cleanup()
-      }),
-      "streaming_block_epoch" -> (() => {
-        import spark.implicits._
-        implicit val sqlCtx = spark.sqlContext
-        import graft.operators.Dedup
-        val docs = Tables.documents(spark, sfDir)
-        val corpus = docs.where(col("doc_id") % 5 =!= 0)
-        val epochRows = docs.where(col("doc_id") % 5 === 0)
-          .select(col("doc_id").cast("long"), col("text"))
-          .as[(Long, String)].collect().toSeq
-        var streamed: Set[(Long, Long, Long, Seq[Int])] = Set.empty
-        var idx: org.apache.spark.sql.DataFrame = null
-        try timedAudited("streaming_block_epoch") {
-          idx = Dedup.blockHashIndex(corpus, "doc_id", "text")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          idx.count()
-          val mem = org.apache.spark.sql.execution.streaming.runtime
-            .MemoryStream[(Long, String, java.sql.Timestamp)]
-          val out = graft.streaming.StreamingPipelines.blockDedupStream(
-            mem.toDF().toDF("doc_id", "text", "ts"), idx, "doc_id", "text",
-            "ts", watermarkDelay = "0 seconds")
-          val qn = s"blockbench_${System.nanoTime()}"
-          val q = out.writeStream.outputMode("append").format("memory")
-            .queryName(qn).start()
-          try {
-            mem.addData(epochRows.map { case (id, t0) =>
-              (id, t0, new java.sql.Timestamp(1000L)) })
-            q.processAllAvailable()
-            mem.addData(Seq((-1L, "flush", new java.sql.Timestamp(100000L * 1000))))
-            q.processAllAvailable()
-            mem.addData(Seq((-2L, "flush", new java.sql.Timestamp(200000L * 1000))))
-            q.processAllAvailable()
-          } finally q.stop()
-          streamed = spark.table(qn).where(col("doc_id") >= 0)
-            .as[(Long, Long, Long, Seq[Int])].collect().toSet
-        } {
-          val batch = Dedup.incrementalBlockDedupAgainst(
-              epochRows.toDF("doc_id", "text"), idx, "doc_id", "text")
-            .select("doc_id", "n_blocks", "n_dropped", "dropped")
-            .as[(Long, Long, Long, Seq[Int])].collect().toSet
-          require(streamed == batch,
-            s"diverged: ${streamed.size} vs ${batch.size} rows")
-          System.err.println(s"[bench] streaming_block_epoch docs=${streamed.size} " +
-            s"blocks_cut=${streamed.iterator.map(_._3).sum} (batch agrees)")
-        } finally { if (idx != null) { idx.unpersist(); () } }
-      }),
-      // COLD BPE merge training A/B (no per-JVM model cache — the x13
-      // gate's min-of-repeats measures the apply path once the model
-      // parquet exists; these entries are the training loop itself, every
-      // repeat). The _corpus arm is the DISTRIBUTED merge loop (two Spark
-      // jobs per merge — the shape that survives any vocabulary size);
-      // the _local arm is the auto-dispatched driver-side trainer over
-      // the collapsed word-frequency table (what real merge budgets use;
-      // results spec-pinned identical). The gap IS the per-merge job
-      // overhead the dispatcher exists to avoid.
-      "bpe_train_corpus" -> (() => timed("bpe_train_corpus") {
-        import graft.operators.TextOps
-        val (merges, wordTokens) = TextOps.bpeTrain(
-          TextOps.bpeWordFreq(Tables.documents(spark, sfDir), "text"),
-          numMerges = ModelQueries.X13NumMerges)
-        force(wordTokens)
-        require(merges.nonEmpty)
-      }),
-      "bpe_train_local" -> (() => timed("bpe_train_local") {
-        import graft.operators.TextOps
-        val (merges, wordTokens) = TextOps.bpeTrainAuto(
-          TextOps.bpeWordFreq(Tables.documents(spark, sfDir), "text"),
-          numMerges = ModelQueries.X13NumMerges)
-        force(wordTokens)
-        require(merges.nonEmpty)
-      }),
-      // BM25 delete-maintenance A/B: the base index over the 400k-doc
-      // frame is built ONCE untimed and held persisted (the steady state
-      // an ingest monitor keeps); the incremental arm deletes 1/16 of the
-      // docs from the HELD index (broadcast anti-join + df decrement at
-      // removed-term cardinality — never touches text), the rebuild arm
-      // re-tokenizes and re-aggregates the surviving corpus from scratch.
-      // Stats cross-checked between arms; incremental runs FIRST so any
-      // warmup bias is conservative. Include BOTH names with
-      // SPARK_GRAFT_BENCH_ONLY (the hamming pattern).
-      "bm25_index_delete_incremental" -> (() => {
-        val base = bm25BaseIndex // built + persisted OUTSIDE the timing
-        timed("bm25_index_delete_incremental") {
-          val removals = divergenceBenchFrame
-            .where(pmod(col("doc_id"), lit(16)) === 7).select("doc_id")
-          val (t2, d2, n2, l2) = graft.operators.TextOps.bm25IndexDelete(
-            base._1, base._2, base._3, base._4, removals, "doc_id")
-          force(t2); force(d2)
-          bm25DeleteStats = (n2, l2)
-        }
-      }),
-      "bm25_index_rebuild" -> (() => timed("bm25_index_rebuild") {
-        val (t, d, n, l) = graft.operators.TextOps.bm25Index(
-          divergenceBenchFrame.where(pmod(col("doc_id"), lit(16)) =!= 7),
-          "doc_id", "text")
-        force(t); force(d)
-        require((n, l) == bm25DeleteStats,
-          s"delete A/B arms disagree: rebuild=($n,$l) incremental=$bm25DeleteStats")
-        System.err.println(s"[bench] bm25_index_rebuild stats agree: n=$n dl=$l")
-      }),
-      // Bulk-vs-loop phrase probe A/B: ONE phraseSearchAll plan over
-      // the 20-phrase table vs 20 sequential phraseIndexSearch probes of
-      // the SAME materialized index — each loop probe pays a driver-side
-      // df election (its own jobs) plus its own joins, which is exactly
-      // the shape bulk decontamination must NOT take at a thousand
-      // phrases. Match-row counts cross-checked in-entry; bulk runs FIRST
-      // so residual warmup bias lands on our design.
-      "phrase_bulk_batch" -> (() => {
-        val (idx, phrases) = phraseBenchInputs
-        timed("phrase_bulk_batch") {
-          import spark.implicits._
-          val pdf = phrases.map { case (i, p) => (i, p.mkString(" ")) }
-            .toDF("phrase_id", "ptext")
-          phraseBulkRows = graft.operators.TextOps
-            .phraseSearchAll(idx, pdf, "phrase_id", "ptext").count()
-          System.err.println(s"[bench] phrase_bulk_batch rows=$phraseBulkRows")
-        }
-      }),
-      "phrase_per_query_loop" -> (() => {
-        val (idx, phrases) = phraseBenchInputs
-        timed("phrase_per_query_loop") {
-          val n = phrases.map { case (_, p) =>
-            graft.operators.TextOps.phraseIndexSearch(idx, p).count()
-          }.sum
-          // cross-check only when the paired bulk arm ran this sweep: a
-          // SPARK_GRAFT_BENCH_ONLY filter selecting just this arm leaves
-          // phraseBulkRows at its -1 sentinel, and a lone arm degrades to
-          // an uncompared timing, not a failure
-          if (phraseBulkRows >= 0) {
-            require(n == phraseBulkRows,
-              s"phrase A/B arms disagree: loop=$n bulk=$phraseBulkRows")
-            System.err.println(s"[bench] phrase_per_query_loop rows=$n (bulk agrees)")
-          } else System.err.println(
-            s"[bench] phrase_per_query_loop rows=$n (bulk arm filtered out)")
-        }
-      }),
-
-      // Stored-index pruning A/B: the SAME on-disk term-bucketed
-      // index sliced to the SAME phrase's postings, with vs without the
-      // bucket literals. The arms time the SLICE SCAN — exactly where the
-      // two probe paths differ; everything downstream of the slice is the
-      // shared phraseProbe core and byte-identical (pruned == unpruned
-      // full results is PhraseSearchSpec-pinned), while the full eager
-      // probe re-reads the tiny slice several times (df collect +
-      // checkpoint) and would wash the byte cut out of input_bytes. The
-      // claim is the READ cut from partition pruning (metric input_bytes:
-      // the pruned scan lists only the phrase's bucket directories; local
-      // wall at this index size is page-cache noise). The measured ratio
-      // (~0.5) is honest bucket SKEW plus row-group pruning on the
-      // UNPRUNED arm, not weak pruning: the bench phrase is doc 0's
-      // first two tokens (phraseBenchInputs._2.head._2) — high-df corpus
-      // words whose buckets hold far more postings than average — and
-      // the unpruned arm already skips most row groups via parquet
-      // min/max on `term`, so the listing-level cut shrinks the measured
-      // byte ratio (each figure names its metric: the
-      // ~11%-of-directory-bytes figure in PhraseSearchSpec is
-      // listed FILE bytes at sf0.001; this receipt is scan-reported
-      // input_bytes at the bench sf). Task and shuffle ratios (~0.1)
-      // corroborate, and PartitionFilters carries the bucket IN-list
-      // (plan-verified). Slice row counts cross-checked in-entry — the
-      // term filter alone decides membership, so the bucket literals must
-      // not change the slice. Pruned runs FIRST (our design first, warmup
-      // bias lands on it).
-      "phrase_stored_pruned" -> (() => {
-        val (dir, phrase) = phraseStoredInputs
-        timed("phrase_stored_pruned") {
-          val buckets = phrase.distinct
-            .map(graft.operators.TextOps.termBucket(_, 64))
-          val n = spark.read.parquet(dir)
-            .where(col("term_bucket").isin(buckets: _*) &&
-              col("term").isin(phrase.distinct: _*))
-            .count()
-          if (phraseStoredRows >= 0) require(n == phraseStoredRows,
-            s"stored A/B arms disagree: pruned=$n unpruned=$phraseStoredRows")
-          phraseStoredRows = n
-          System.err.println(s"[bench] phrase_stored_pruned slice_rows=$n")
-        }
-      }),
-      "phrase_stored_unpruned" -> (() => {
-        val (dir, phrase) = phraseStoredInputs
-        timed("phrase_stored_unpruned") {
-          val n = spark.read.parquet(dir)
-            .where(col("term").isin(phrase.distinct: _*))
-            .count()
-          if (phraseStoredRows >= 0) require(n == phraseStoredRows,
-            s"stored A/B arms disagree: unpruned=$n pruned=$phraseStoredRows")
-          phraseStoredRows = n
-          System.err.println(s"[bench] phrase_stored_unpruned slice_rows=$n (pruned agrees)")
-        }
-      }),
-
-      // Hamming near-dup A/B: the d3b multi-index pigeonhole join (blocked
-      // candidates, exact verify at candidate cardinality) vs the naive
-      // all-pairs bit_count scan every first implementation writes. Same
-      // 100k-doc frame, identical pair counts asserted; the all-pairs arm
-      // is n² in documents (5×10⁹ comparisons here — at corpus scale it
-      // simply does not finish), the blocked arm is Σ|bucket|². Blocked runs
-      // FIRST so any warmup bias is conservative; it also records the pair
-      // count the allpairs arm checks against — include BOTH names when
-      // using SPARK_GRAFT_BENCH_ONLY (the colocated_join pattern).
-      "hamming_pairs_blocked" -> (() => timed("hamming_pairs_blocked") {
-        hammingBlockedPairs = graft.operators.Dedup.simHashHammingPairs(
-          hammingBenchFrame, "doc_id", "text", radius = 3).count()
-        System.err.println(s"[bench] hamming_pairs_blocked pairs=$hammingBlockedPairs")
-      }),
-      "hamming_pairs_allpairs" -> (() => timed("hamming_pairs_allpairs") {
-        val sh = graft.operators.Dedup.simHash60(hammingBenchFrame, "doc_id", "text")
-        val l = sh.select(col("doc_id").as("doc_a"), col("simhash60").as("sa"))
-        val r = sh.select(col("doc_id").as("doc_b"), col("simhash60").as("sb"))
-        val n = l.crossJoin(r)
-          .where(col("doc_a") < col("doc_b") &&
-            bit_count(col("sa").bitwiseXOR(col("sb"))) <= 3)
-          .count()
-        require(n == hammingBlockedPairs,
-          s"hamming A/B arms disagree: allpairs=$n blocked=$hammingBlockedPairs")
-        System.err.println(s"[bench] hamming_pairs_allpairs pairs=$n (blocked agrees)")
-      }),
-      // A/B receipt for d20's winner election: one map-side-combinable
-      // min(struct) aggregate vs the row_number window (which must shuffle
-      // and sort EVERY block row before discarding the losers)
-      "block_winners_agg" -> (() => timed("block_winners_agg") {
-        val docs = Tables.documents(spark, sfDir)
-        blockWinnersAgg = graft.operators.Dedup
-          .blockHashIndex(docs, "doc_id", "text").count()
-        System.err.println(s"[bench] block_winners_agg winners=$blockWinnersAgg")
-      }),
-      "block_winners_window" -> (() => timed("block_winners_window") {
-        val docs = Tables.documents(spark, sfDir)
-        val occ = graft.operators.Dedup.blockOccurrences(docs, "doc_id", "text")
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("h")).orderBy(col("doc_id"), col("bi"))
-        val n = occ.withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1).count()
-        require(n == blockWinnersAgg,
-          s"block winner A/B arms disagree: window=$n agg=$blockWinnersAgg")
-        System.err.println(s"[bench] block_winners_window winners=$n (agg agrees)")
-      }),
-      // Memorization-audit plan A/B: the shipped pair-reduced plan —
-      // occurrence table collapsed to distinct (doc_id, h) + occurrence
-      // count BEFORE any h-keyed exchange — vs the retired occurrence
-      // plan, which shuffles the full per-occurrence table through
-      // distinct → groupBy(h) → join-on-h → groupBy(doc) (47.6× wall on
-      // 10× data when it shipped). Identical output
-      // (cross-checked in-entry on rows / Σn_hot / Σmax_df). Pairs arm
-      // FIRST so warmup bias lands on our design; include BOTH names
-      // when using SPARK_GRAFT_BENCH_ONLY (the colocated_join pattern).
-      "memorization_pairs" -> (() => timed("memorization_pairs") {
-        val a = graft.operators.Dedup.memorizationRisk(
-            memorizationBenchFrame, "doc_id", "text", n = 8, hotDf = 1000L)
-          .agg(count(lit(1)), sum(col("n_hot")), sum(col("max_df"))).head
-        memorizationPairsAgg = (a.getLong(0), a.getLong(1), a.getLong(2))
-        System.err.println(s"[bench] memorization_pairs agg=$memorizationPairsAgg")
-      }),
-      "memorization_occurrence" -> (() => timed("memorization_occurrence") {
-        val wins = graft.operators.Dedup.windowHashes(
-          memorizationBenchFrame, "doc_id", "text", 8)
-        val df = wins.select("h", "doc_id").distinct()
-          .groupBy("h").agg(count(lit(1)).as("df"))
-        val a = wins.join(df, "h").groupBy("doc_id")
-          .agg(count(lit(1)).as("n_windows"), max(col("df")).as("max_df"),
-            count(when(col("df") >= 1000L, lit(1))).as("n_hot"))
-          .agg(count(lit(1)), sum(col("n_hot")), sum(col("max_df"))).head
-        val got = (a.getLong(0), a.getLong(1), a.getLong(2))
-        require(got == memorizationPairsAgg,
-          s"memorization A/B arms disagree: occurrence=$got pairs=$memorizationPairsAgg")
-        System.err.println(s"[bench] memorization_occurrence agg=$got (pairs agrees)")
-      }),
-      "microbatch_0_1gb" -> (() => microbatch(0.1)),
-      // reference strong-scaling sizes (run-scaling-benchmark.sh:27-34 uses
-      // {0.5, 1, 2} GB; GB/s = size / duration, BEGIN→END == job wall-clock)
-      "microbatch_0_5gb" -> (() => microbatch(0.5)),
-      "microbatch_1_0gb" -> (() => microbatch(1.0)),
-      // the reference's DEFAULT batch plan {1, 2, 5} GB
-      // (MicroBatchConfig.java:33 DEFAULT_SIZES_GB) — completes point-for-
-      // point comparability with BASELINE.md's grid
-      "microbatch_2_0gb" -> (() => microbatch(2.0)),
-      "microbatch_5_0gb" -> (() => microbatch(5.0)),
-      // strong scaling: fixed 1 GB across parallelism {4, 8, 16}
-      // (run-scaling-benchmark.sh:24-28 PARALLELISMS)
-      "microbatch_1_0gb_p4" -> (() => microbatch(1.0, parallelism = 4, suffix = "_p4")),
-      "microbatch_1_0gb_p8" -> (() => microbatch(1.0, parallelism = 8, suffix = "_p8")),
-      "microbatch_1_0gb_p16" -> (() => microbatch(1.0, parallelism = 16, suffix = "_p16")),
-      // weak scaling: 0.125 GB/worker × {4, 8, 16} workers → {0.5, 1, 2} GB
-      // (run-scaling-benchmark.sh:30-34 WEAK_PER_WORKER_GB); the p8 point
-      // (1 GB @ 8) is exactly the strong-scaling microbatch_1_0gb_p8 above
-      "microbatch_0_5gb_p4" -> (() => microbatch(0.5, parallelism = 4, suffix = "_p4")),
-      "microbatch_2_0gb_p16" -> (() => microbatch(2.0, parallelism = 16, suffix = "_p16")))
-      .filter { case (name, _) => wanted(name) }
-
-    val syntheticRun: Map[String, () => Double] = syntheticEntries.toMap
+    // ---- synthetic entries, receipt groups interleaved ----
+    val entries = BenchEntries.all(ctx).filter(e => wanted(e.name))
+    val byName = entries.map(e => e.name -> e).toMap
     // receipt-group membership restricted to groups with >= 2 present arms
     // (a filtered run with one arm runs it on its own)
-    val interleavedGroup: Map[String, Seq[String]] = BenchReport.receiptGroups
-      .map(_.filter(syntheticRun.contains))
+    val groupOf: Map[String, Seq[Entry]] = BenchReport.receiptGroups
+      .map(_.flatMap(byName.get))
       .filter(_.size >= 2)
-      .flatMap(g => g.map(_ -> g)).toMap
-    val ranViaGroup = scala.collection.mutable.Set.empty[String]
-    // per-arm wall seconds in LAP order — receipt ratios pair lap i of the
-    // faster arm with lap i of the slower arm
-    val lapDetail = scala.collection.mutable.Map.empty[String, Seq[Double]]
-
-    val synthetic = syntheticEntries.flatMap { case (name, _) =>
-      // Drop memory-sink temp views leaked by PRIOR entries (every
-      // streaming bench names its sink <kind>bench_<nanos>): each sink
-      // would otherwise pin its collected rows in driver memory for the
-      // rest of the sweep and slow every later entry.
-      spark.catalog.listTables().collect().map(_.name)
-        .filter(_.matches(".*bench_\\d+"))
-        .foreach(v => { spark.catalog.dropTempView(v); () })
-      if (ranViaGroup.contains(name)) Nil
-      else {
-        // a receipt group's arms run once per lap each, laps back to back,
-        // so each per-lap ratio compares samples taken minutes apart
-        val group = interleavedGroup.getOrElse(name, Seq(name))
-        // the amortized streaming entry self-averages over its own steady
-        // epochs — repeating the whole 5-epoch cycle would double its cost
-        // for no extra signal
-        val laps = if (name == "streaming_corpus_epoch5_amortized") 1 else repeats
-        val byLap = (1 to laps).map(_ => group.map(m => m -> lap(syntheticRun(m)())).toMap)
-        group.map { m =>
-          ranViaGroup += m
-          val ls = byLap.map(_(m))
-          if (interleavedGroup.contains(m)) lapDetail(m) = ls.map(_.wall)
-          m -> record(m, ls)
-        }
+      .flatMap(g => g.map(_.name -> g)).toMap
+    val ran = mutable.Set.empty[String]
+    val results = entries.flatMap { e =>
+      if (ran.contains(e.name)) Nil
+      else harness.runGroup(groupOf.getOrElse(e.name, Seq(e)), repeats).map { case (name, laps, value) =>
+        ran += name
+        (name, harness.record(name, laps), value)
       }
     }
-
-    Seq(benchLiTable, benchOrdTable)
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    ctx.dropTables()
+    val synthetic = results.map { case (name, sec, _) => name -> sec }
 
     // ---- cross-sf scaling guard ----
     // Re-times the most expensive oracled gates at the 10×-smaller testdata
@@ -1703,7 +124,8 @@ object Bench {
       else {
         val top = queryTimes.filter(_._2 > 1.0).sortBy(-_._2).take(10)
         val rows = top.map { case (name, big) =>
-          val small = timed(s"scaling_$name")(force(SparkEntry.queries(name)(spark, smallDir)))
+          val small = harness.lap(Entry(s"scaling_$name")(
+            _.timed(force(SparkEntry.queries(name)(spark, smallDir)))))._1.wall
           val ratio = if (small > 0) big / small else -1.0
           System.err.println(f"[bench] scaling '$name': $big%.2f s @ sf0.1 vs $small%.2f s @ sf0.01 (ratio ${ratio}%.1f)")
           (name, big, small, ratio)
@@ -1713,22 +135,16 @@ object Bench {
       }
     }
 
-    val gbps = Seq(
-      ("microbatch_0_1gb", 0.1), ("microbatch_0_5gb", 0.5), ("microbatch_1_0gb", 1.0),
-      ("microbatch_2_0gb", 2.0), ("microbatch_5_0gb", 5.0),
-      ("microbatch_1_0gb_p4", 1.0), ("microbatch_1_0gb_p8", 1.0), ("microbatch_1_0gb_p16", 1.0),
-      ("microbatch_0_5gb_p4", 0.5), ("microbatch_2_0gb_p16", 2.0))
-      .flatMap { case (n, g) =>
-        synthetic.toMap.get(n).filter(_ > 0).map(sec => (n + "_gbps", g / sec))
-      }
-
-    // derived steady-state per-epoch latency (mean of the standing
-    // query's lap epochs — post-startup by construction); raw lap
-    // seconds go to runs_detail as steady/cold alternating pairs
-    val steadyEpoch = steadyColdLaps.toSeq.map { ps =>
-      runDetail("streaming_corpus_epoch_steady") = ps.map(_._1)
-      runDetail("streaming_corpus_epoch_cold_lap") = ps.map(_._2)
-      "streaming_corpus_epoch_steady" -> ps.map(_._1).sum / ps.size
+    // results derived from entry values: GB/s of the byte-budget entries,
+    // and the in-entry A/B's steady-state per-epoch latency (mean of the
+    // standing query's lap epochs — post-startup by construction), whose
+    // raw inner-lap seconds go to runs_detail as two rows
+    val gbps = results.collect { case (name, sec, Some(Gigabytes(gb))) if sec > 0 => (name + "_gbps", gb / sec) }
+    val innerLaps = results.collect { case (_, _, Some(il: InnerLaps)) => il }
+    val innerEntries = innerLaps.map { il =>
+      harness.runDetail(il.fast) = il.pairs.map(_._1)
+      harness.runDetail(il.slowDetail) = il.pairs.map(_._2)
+      il.fast -> il.pairs.map(_._1).sum / il.pairs.size
     }
 
     ListenerBridge.waitUntilEmpty(spark.sparkContext)
@@ -1738,71 +154,18 @@ object Bench {
       .mkString("{", ",", "}")
 
     // ---- same-sweep receipt evaluation ----
-    // Each claim: median of per-lap wall ratios (faster arm / slower arm,
-    // laps interleaved in this sweep) < 1, or for byte-metric claims the
-    // ratio of the two arms' MIN-WALL-run bytes < 1 (bytes are
-    // deterministic per run, so single runs are comparable; profSnap holds
-    // the min-wall run's metrics, not accumulated counters). task_ratio
-    // rides along as the wall-independent cross-check — it is CPU
-    // consumed, not latency, so a throttled box distorts both arms equally.
-    val receiptRows = BenchReport.receiptClaims.flatMap { case (fast, slow, metric) =>
-      for { lf <- lapDetail.get(fast); ls <- lapDetail.get(slow) } yield {
-        val ratios = lf.zip(ls).collect { case (a, b) if a >= 0 && b > 0 => a / b }
-        val wallMedian = medianOf(ratios)
-        val taskRatio = (for {
-          mf <- profSnap.get(fast); ms <- profSnap.get(slow)
-          if ms.taskTimeMs > 0
-        } yield mf.taskTimeMs.toDouble / ms.taskTimeMs).getOrElse(-1.0)
-        val byteRatio = (for {
-          mf <- profSnap.get(fast); ms <- profSnap.get(slow)
-          if ms.shuffleReadBytes > 0
-        } yield mf.shuffleReadBytes.toDouble / ms.shuffleReadBytes).getOrElse(-1.0)
-        val inputRatio = (for {
-          mf <- profSnap.get(fast); ms <- profSnap.get(slow)
-          if ms.inputBytes > 0
-        } yield mf.inputBytes.toDouble / ms.inputBytes).getOrElse(-1.0)
-        val ok = metric match {
-          case "shuffle_read_bytes" => byteRatio >= 0 && byteRatio < 1.0
-          // scan-side claim (partition pruning): bytes the scan actually
-          // read — deterministic per run, like the shuffle byte metric
-          case "input_bytes" => inputRatio >= 0 && inputRatio < 1.0
-          // sub-second arms flip wall medians on scheduler noise — accept
-          // a MARGINAL wall when the CPU actually burned corroborates the
-          // ordering; task time is phase- and throttle-immune
-          case _ => ratios.nonEmpty && (wallMedian < 1.0 ||
-            (wallMedian < 1.1 && taskRatio >= 0 && taskRatio < 0.95))
-        }
-        val key = s"$fast<$slow"
-        if (!ok) System.err.println(s"[bench] RECEIPT BAD: $key (metric=$metric " +
-          f"wall_median=$wallMedian%.3f task=$taskRatio%.3f bytes=$byteRatio%.3f)")
-        (key, s""""$key":{"metric":"$metric","lap_ratios":[${ratios.map(r3).mkString(",")}],""" +
-          s""""wall_median":${r3(wallMedian)},"task_ratio":${r3(taskRatio)},""" +
-          s""""shuffle_bytes_ratio":${r3(byteRatio)},""" +
-          s""""input_bytes_ratio":${r3(inputRatio)},"ok":$ok}""", ok)
-      }
-    }
-    // In-sweep receipt for the steady-state claim: each lap runs the
-    // STANDING-query epoch then a fresh per-query cycle seconds apart in
-    // the same JVM, after an unrecorded warmup cycle — the interleaved-lap
-    // protocol every other A/B pair uses. The claim receipted is the
-    // operational one: a standing query with a persisted corpus index
-    // beats spinning a query per cycle (which pays query+checkpoint
-    // creation and re-signs the corpus per micro-batch).
-    val steadyReceipt = steadyColdLaps.toSeq.map { ps =>
-      val ratios = ps.map { case (s, c) => s / c }
-      val m = medianOf(ratios)
-      val ok = ratios.nonEmpty && m < 1.0
-      if (!ok) System.err.println(
-        f"[bench] RECEIPT BAD: streaming_corpus_steady<cold (wall_median=$m%.3f)")
-      ("streaming_corpus_steady<cold",
-        s""""streaming_corpus_steady<cold":{"metric":"wall","lap_ratios":[${ratios.map(r3).mkString(",")}],""" +
-        s""""wall_median":${r3(m)},"task_ratio":-1.0,"shuffle_bytes_ratio":-1.0,"ok":$ok}""", ok)
-    }
-    val allReceiptRows = receiptRows ++ steadyReceipt
-    val receiptsJson = allReceiptRows.map(_._2).mkString("{", ",", "}")
-    val receiptsBad = allReceiptRows.collect { case (k, _, false) => k }
+    // Each claim compares its arms' interleaved laps of this sweep and their
+    // min-wall profiler runs (BenchReport.receipt); an in-entry A/B
+    // compares its own inner laps.
+    val receipts = BenchReport.receiptClaims.flatMap { case (fast, slow, metric) =>
+      for { lf <- harness.runDetail.get(fast); ls <- harness.runDetail.get(slow) }
+      yield BenchReport.receipt(fast, slow, metric, lf, ls, profSnap.get(fast), profSnap.get(slow))
+    } ++ innerLaps.map(il => BenchReport.innerReceipt(il.receipt, il.pairs))
+    receipts.filterNot(_.ok).foreach(r => System.err.println(r.badLine))
+    val receiptsJson = receipts.map(_.json).mkString("{", ",", "}")
+    val receiptsBad = receipts.filterNot(_.ok).map(_.key)
 
-    val all = queryTimes ++ synthetic ++ gbps ++ steadyEpoch
+    val all = queryTimes ++ synthetic ++ gbps ++ innerEntries
     // Profiler sanity: the per-entry profile is the min-wall run's
     // metrics, so task time can never exceed wall × cores (25% slack + 1 s
     // for sub-second jitter and stage events that straddle a run
@@ -1831,7 +194,7 @@ object Bench {
     // per-lap external-CPU shares, only for entries where contamination was
     // non-negligible — keeps the file readable; a missing key means <5% of
     // the machine went to other processes during every lap
-    val extJson = lapsJson(extDetail.filter { case (_, es) => es.exists(_ >= 0.05) })
+    val extJson = lapsJson(harness.extDetail.filter { case (_, es) => es.exists(_ >= 0.05) })
     // Compact stdout summary, HARD-CAPPED to fit the driver's ~2000-char
     // output-tail window (a full per-query map once grew past it and the
     // captured text began mid-line). The BASELINE.md-comparable workloads
@@ -1844,7 +207,7 @@ object Bench {
       s"""{"data_ratio":10.0,"flag_above":${r3(SuperLinearFlagRatio)},""" +
         s""""ratios":$ratios,"flagged":${flagged.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     }.getOrElse("null")
-    val headline = synthetic.map(_._1) ++ gbps.map(_._1) ++ steadyEpoch.map(_._1)
+    val headline = synthetic.map(_._1) ++ gbps.map(_._1) ++ innerEntries.map(_._1)
     // the bad-receipt and scaling-flag lists must reach the captured
     // per-round summary, which is the compact line — keep both short and
     // always present
@@ -1855,8 +218,8 @@ object Bench {
       runs = repeats, load = Seq(loadPre, loadPost), extra = compactExtra)
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,""" +
-        s""""repeats":$repeats,"runs_detail":${lapsJson(runDetail)},""" +
-        s""""cpu_detail":${lapsJson(cpuDetail)},"load":[${r3(loadPre)},${r3(loadPost)}],""" +
+        s""""repeats":$repeats,"runs_detail":${lapsJson(harness.runDetail)},""" +
+        s""""cpu_detail":${lapsJson(harness.cpuDetail)},"load":[${r3(loadPre)},${r3(loadPost)}],""" +
         s""""ext_cpu":$extJson,""" +
         s""""receipts":$receiptsJson,""" +
         s""""scaling":$scalingJson,""" +
@@ -1870,5 +233,134 @@ object Bench {
     // The compact line is the VERY LAST stdout write (after spark.stop so no
     // Spark shutdown chatter can land after it in the captured tail).
     println(compact)
+  }
+
+  /** One recorded lap: wall seconds (-1 = failed), this process's CPU
+    * seconds over the same timed body, and the external-CPU share of the
+    * machine over the whole lap. */
+  final case class LapStat(wall: Double, cpu: Double, ext: Double)
+
+  /** The lap protocol over one session: times entry laps as profiler runs
+    * and keeps every recorded lap for the report. */
+  final class Harness(spark: SparkSession, profiler: QueryProfiler) {
+    private val sc = spark.sparkContext
+    private val sunBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case b: com.sun.management.OperatingSystemMXBean => Some(b)
+      case _ => None
+    }
+
+    /** CPU fraction consumed by processes other than this JVM since the
+      * last call (interval-based; the first call primes the counters).
+      * Loadavg cannot tell this JVM's busy cores from a concurrent
+      * process's; systemCpu − processCpu can. */
+    private def externalCpu(): Double = sunBean.map { b =>
+      val sys = b.getCpuLoad
+      val proc = b.getProcessCpuLoad
+      if (sys.isNaN || proc.isNaN) 0.0 else math.max(0.0, sys - proc)
+    }.getOrElse(0.0)
+    externalCpu()
+
+    /** This JVM's cumulative CPU seconds (-1 when the platform has no
+      * process CPU counter). */
+    private def processCpuSec(): Double =
+      sunBean.map(_.getProcessCpuTime).filter(_ >= 0).map(_ / 1e9).getOrElse(-1.0)
+
+    // every recorded lap of every entry, in lap order
+    val runDetail = mutable.LinkedHashMap.empty[String, Seq[Double]]
+    val cpuDetail = mutable.LinkedHashMap.empty[String, Seq[Double]]
+    val extDetail = mutable.LinkedHashMap.empty[String, Seq[Double]]
+
+    /** One lap of `e`. Its timed body runs as the profiler's entry `e.name`,
+      * and every lap closes ONE profiler run (after draining the listener
+      * bus), so the emitted profile is the min-wall run's metrics, not an
+      * accumulation over laps. The run is closed only after the audit and,
+      * for an `agree` arm, the comparison with `partner` (the name and value
+      * of the arm that ran before it in this lap), so the bench result and
+      * the profiler never disagree about whether a lap succeeded. Frames
+      * the entry kept are released at the end of the lap, also when it
+      * failed. Failures are reported on stderr, never silently -1'd away. */
+    def lap(e: Entry, partner: Option[(String, Any)] = None): (LapStat, Option[Any]) = {
+      externalCpu()
+      var bodyCpu = -1.0
+      val kept = mutable.ArrayBuffer.empty[DataFrame]
+      val handle = new Lap {
+        def keep(df: DataFrame): DataFrame = {
+          val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          kept += p
+          p
+        }
+        def timedAudited[R](body: => R)(audit: R => Unit): Timed[R] = {
+          val c0 = processCpuSec()
+          val (t, value) = QueryProfiler.inEntry(sc, e.name) {
+            try {
+              val t0 = System.nanoTime()
+              val r = body
+              ((System.nanoTime() - t0) / 1e9, Some(r))
+            } catch {
+              case NonFatal(ex) =>
+                System.err.println(s"[bench] query '${e.name}' FAILED: ${ex.getClass.getName}: ${ex.getMessage}")
+                (-1.0, None)
+            }
+          }
+          bodyCpu = if (c0 < 0) -1.0 else processCpuSec() - c0
+          ListenerBridge.waitUntilEmpty(sc)
+          val wall = value.fold(t) { r =>
+            try {
+              audit(r)
+              partner.foreach { case (pn, pv) =>
+                require(r == pv, s"A/B arms disagree: ${e.name}=$r $pn=$pv")
+                System.err.println(s"[bench] ${e.name} agrees with $pn")
+              }
+              t
+            } catch {
+              case NonFatal(ex) =>
+                System.err.println(s"[bench] query '${e.name}' equality audit failed: ${ex.getMessage}")
+                -1.0
+            }
+          }
+          profiler.endRun(e.name, wall)
+          Timed(wall, value.filter(_ => wall >= 0))
+        }
+      }
+      val timed = try e.run(handle) catch {
+        case NonFatal(ex) =>
+          System.err.println(s"[bench] query '${e.name}' FAILED: ${ex.getClass.getName}: ${ex.getMessage}")
+          Timed(-1.0, None)
+      } finally kept.foreach(_.unpersist())
+      (LapStat(timed.wall, bodyCpu, externalCpu()), timed.value)
+    }
+
+    /** `arms` (one entry, or the present arms of a receipt group) run
+      * `laps` laps each — the first arm's own lap count when it sets one —
+      * interleaved one lap each in turn, so each per-lap ratio compares
+      * samples taken close together. Within a lap, each `agree` arm is
+      * compared with the first `agree` arm that succeeded before it, and
+      * fails on a different value; an `agree` arm without a partner in the
+      * group is timed uncompared. Returns each arm's laps and the value of
+      * its last lap. */
+    def runGroup(arms: Seq[Entry], laps: Int): Seq[(String, Seq[LapStat], Option[Any])] = {
+      val paired = arms.count(_.agree) >= 2
+      val byLap = (1 to arms.head.laps.getOrElse(laps)).map { _ =>
+        arms.foldLeft((Vector.empty[(LapStat, Option[Any])], Option.empty[(String, Any)])) {
+          case ((done, partner), arm) =>
+            if (arm.agree && !paired)
+              System.err.println(s"[bench] ${arm.name} uncompared: its A/B partner did not run")
+            val (stat, value) = lap(arm, if (arm.agree) partner else None)
+            val next = if (arm.agree && partner.isEmpty) value.map(arm.name -> _) else partner
+            (done :+ ((stat, value)), next)
+        }._1
+      }
+      arms.zipWithIndex.map { case (arm, i) =>
+        (arm.name, byLap.map(_(i)._1), byLap.lastOption.flatMap(_(i)._2))
+      }
+    }
+
+    /** Record an entry's laps and return its reported value. */
+    def record(name: String, laps: Seq[LapStat]): Double = {
+      runDetail(name) = laps.map(_.wall)
+      cpuDetail(name) = laps.map(_.cpu)
+      extDetail(name) = laps.map(_.ext)
+      BenchReport.lapSummary(laps.map(_.wall))
+    }
   }
 }

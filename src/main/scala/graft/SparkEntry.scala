@@ -81,9 +81,9 @@ object SparkEntry {
     * variant-`suffix`ed) trained at sf-dir `d`. Under [[modelExportDir]]
     * the name is pid-FREE — stable across JVMs, so a fresh full Verify run
     * retrains and overwrites in place while a post-mortem DuckDB replay of
-    * the previous dump still resolves; under /tmp it is pid-scoped
-    * (concurrent Verify/Bench JVMs must not clobber each other) and dead
-    * JVMs' leftovers of the same family are swept first. The sf tag stays
+    * the previous dump still resolves; under /tmp it is the pid-scoped
+    * [[Scratch.processPath]], so dead JVMs' leftovers of the same family
+    * are swept before this JVM's first write. The sf tag stays
     * in the name in BOTH modes: the bench's cross-sf scaling rerun must
     * retrain at the small sf rather than silently reuse the big-sf model. */
   private[graft] def modelExportPath(family: String, d: String,
@@ -100,23 +100,7 @@ object SparkEntry {
         // leading underscore — Spark's parquet reader treats "_"/"."
         // prefixed files as hidden metadata and refuses to read them back
         s"$base/model_${family}_$tail$sf.parquet"
-      case None =>
-        val path = s"/tmp/graft_${family}_${ProcessHandle.current().pid()}_$tail$sf.parquet"
-        // sweep dead-JVM debris only BEFORE this family's first write —
-        // once the file exists, repeat constructions (timed bench loops)
-        // must not pay a /tmp listing per call
-        if (!new java.io.File(path).exists())
-          Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
-            // (_.*)? also matches the older suffix-less s3 name, so old
-            // debris from earlier builds is swept too
-            .filter(_.getName.matches(s"graft_${family}_\\d+(_.*)?\\.parquet"))
-            .foreach { f =>
-              val pid = f.getName.stripPrefix(s"graft_${family}_")
-                .takeWhile(_.isDigit).toLong
-              val alive = ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
-              if (!alive) graft.tools.CorpusMaintenance.deleteRecursively(f.getPath)
-            }
-        path
+      case None => Scratch.processPath(family, s"_$tail$sf", ".parquet")
     }
   }
 

@@ -49,18 +49,11 @@ object SkewOps {
     * hot partitions count as skewed (the production defaults — 256 MB — are
     * right at 100 TB and fire on their own there). Restores prior values. */
   def withSkewTuning[A](spark: org.apache.spark.sql.SparkSession,
-      skewThreshold: String, advisorySize: String)(body: => A): A = {
-    val keys = Seq(
+      skewThreshold: String, advisorySize: String)(body: => A): A =
+    graft.SessionConf.withConf(spark,
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> skewThreshold,
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisorySize)
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisorySize)(body)
 
   /** The skew A/B workload: a fact side where key 0 owns ~60 % of all rows
     * (default 20 M — the hot task must dominate the stage for the A/B to
@@ -84,18 +77,11 @@ object SkewOps {
     * application-side default is sized for production scans — at 100 TB the
     * stock thresholds fire on their own, exactly like the AQE skew
     * defaults). Restores previous values after `body`. */
-  def withBloomTuning[A](spark: org.apache.spark.sql.SparkSession, enabled: Boolean)(body: => A): A = {
-    val keys = Seq(
+  def withBloomTuning[A](spark: org.apache.spark.sql.SparkSession, enabled: Boolean)(body: => A): A =
+    graft.SessionConf.withConf(spark,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> enabled.toString,
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1MB",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "64MB")
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "64MB")(body)
 
   /** The bloom A/B workload: a 20 M-row fact side shuffle-joined (broadcast
     * disabled by the caller) to a dim side whose selective predicate keeps

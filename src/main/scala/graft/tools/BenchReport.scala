@@ -47,7 +47,7 @@ object BenchReport {
     * turn, so every ordering claim is decided by per-lap ratios from the
     * same sweep — cross-sweep absolute times cannot carry an ordering
     * claim on a shared box. Arm order within a group is the conservative
-    * order documented at each pair's entry in [[graft.Bench]]. Every
+    * order documented at each pair's entry in the [[graft.bench]] tables. Every
     * claim's two arms must sit in
     * one group ([[receiptClaims]]), or the claim has no lap pairs and its
     * receipt is not emitted. */
@@ -107,6 +107,67 @@ object BenchReport {
     // the stored index's claim is the LISTING/READ cut from partition
     // pruning: the pruned scan never opens the other buckets' files
     ("phrase_stored_pruned", "phrase_stored_unpruned", "input_bytes"))
+
+  /** One receipt: a claim's per-lap wall ratios (faster arm / slower arm),
+    * their median, the profile ratios (task time, shuffle-read bytes,
+    * input bytes; each -1 when missing) and the verdict. An in-entry A/B
+    * has no profile ratios of its own. */
+  final case class Receipt(key: String, metric: String, ratios: Seq[Double],
+      wallMedian: Double, profile: Option[(Double, Double, Double)], ok: Boolean) {
+    def json: String = {
+      val head = s""""$key":{"metric":"$metric","lap_ratios":[${ratios.map(r3).mkString(",")}],""" +
+        s""""wall_median":${r3(wallMedian)},"""
+      profile match {
+        case Some((task, bytes, input)) =>
+          head + s""""task_ratio":${r3(task)},"shuffle_bytes_ratio":${r3(bytes)},""" +
+            s""""input_bytes_ratio":${r3(input)},"ok":$ok}"""
+        case None => head + s""""task_ratio":-1.0,"shuffle_bytes_ratio":-1.0,"ok":$ok}"""
+      }
+    }
+    def badLine: String = profile match {
+      case Some((task, bytes, _)) =>
+        s"[bench] RECEIPT BAD: $key (metric=$metric " +
+          f"wall_median=$wallMedian%.3f task=$task%.3f bytes=$bytes%.3f)"
+      case None => f"[bench] RECEIPT BAD: $key (wall_median=$wallMedian%.3f)"
+    }
+  }
+
+  /** The verdict on claim `fast<slow` from the two arms' walls in lap order
+    * (-1 = failed lap) and their min-wall runs' profiles. A byte claim
+    * ("shuffle_read_bytes", "input_bytes") passes when the byte ratio is
+    * < 1: bytes are deterministic per run, so single runs compare. A wall
+    * claim passes when the median per-lap ratio is < 1, or < 1.1 when the
+    * task-time ratio is < 0.95: sub-second arms flip wall medians on
+    * scheduler noise, and task time is CPU burned, which a throttled box
+    * distorts in both arms alike. A ratio whose slower side is missing or
+    * zero reads -1 and never passes. */
+  def receipt(fast: String, slow: String, metric: String,
+      fastLaps: Seq[Double], slowLaps: Seq[Double],
+      fastProfile: Option[QueryProfiler.QueryMetrics],
+      slowProfile: Option[QueryProfiler.QueryMetrics]): Receipt = {
+    val ratios = fastLaps.zip(slowLaps).collect { case (a, b) if a >= 0 && b > 0 => a / b }
+    val wallMedian = medianOf(ratios)
+    def ratio(m: QueryProfiler.QueryMetrics => Long): Double = (for {
+      mf <- fastProfile; ms <- slowProfile if m(ms) > 0
+    } yield m(mf).toDouble / m(ms)).getOrElse(-1.0)
+    val task = ratio(_.taskTimeMs)
+    val bytes = ratio(_.shuffleReadBytes)
+    val input = ratio(_.inputBytes)
+    val ok = metric match {
+      case "shuffle_read_bytes" => bytes >= 0 && bytes < 1.0
+      case "input_bytes" => input >= 0 && input < 1.0
+      case _ => ratios.nonEmpty && (wallMedian < 1.0 || (wallMedian < 1.1 && task >= 0 && task < 0.95))
+    }
+    Receipt(s"$fast<$slow", metric, ratios, wallMedian, Some((task, bytes, input)), ok)
+  }
+
+  /** The verdict on an in-entry A/B from its (ours, baseline) inner-lap
+    * seconds: the median per-lap ratio alone decides. */
+  def innerReceipt(key: String, pairs: Seq[(Double, Double)]): Receipt = {
+    val ratios = pairs.map { case (s, c) => s / c }
+    val m = medianOf(ratios)
+    Receipt(key, "wall", ratios, m, None, ratios.nonEmpty && m < 1.0)
+  }
 
   /** Build the capped compact line.
     *

@@ -1,11 +1,11 @@
 package graft.tools
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.SessionConf
 import graft.dp.DpParams
 import graft.operators.{CoreOps, DpHistogram}
 import graft.sources.SyntheticSource
-import graft.streaming.{Contribution, DpStatefulProcessor, Release, StreamingPipelines}
+import graft.streaming.{Contribution, DpStatefulProcessor, MemoryDrain, Release, StreamingPipelines}
 
 /** Timing harness for the two Algorithm-3 release policies on one seeded
   * replay workload:
@@ -17,8 +17,8 @@ import graft.streaming.{Contribution, DpStatefulProcessor, Release, StreamingPip
   *
   * Both arms run the same [[StreamingPipelines.markPrevEpoch]] stage in
   * front of their per-key DP state and the same RocksDB state store, feed
-  * every epoch up front and drain the query with one `processAllAvailable`,
-  * so the comparison isolates how silent releases surface.
+  * every epoch as one batch and drain the query with [[MemoryDrain]], so
+  * the comparison isolates how silent releases surface.
   *
   * The eager arm's releases are checked against the batch
   * [[DpHistogram.timeline]] on the same rows ([[timelineMismatch]]).
@@ -42,41 +42,23 @@ object EagerBench {
   /** The watermark-eager arm's releases. */
   def runEager(spark: SparkSession, byEpoch: Seq[(Int, Seq[Contribution])],
       t: Int, runSeed: Long): Seq[Release] =
-    drain(spark, byEpoch, "eager")(DpStatefulProcessor.dpHistogram(_, params(t), runSeed))
+    drain(spark, byEpoch)(DpStatefulProcessor.dpHistogram(_, params(t), runSeed))
 
   /** The lazy arm's releases. */
   def runLazy(spark: SparkSession, byEpoch: Seq[(Int, Seq[Contribution])],
       t: Int, runSeed: Long): Seq[Release] =
-    drain(spark, byEpoch, "lazy")(StreamingPipelines.dpHistogram(_, params(t), runSeed))
+    drain(spark, byEpoch)(StreamingPipelines.dpHistogram(_, params(t), runSeed))
 
-  /** Feeds every epoch into a fresh query on the RocksDB state store, drains
-    * it once, and returns what its memory sink holds. */
-  private def drain(spark: SparkSession, byEpoch: Seq[(Int, Seq[Contribution])], tag: String)(
-      op: Dataset[Contribution] => Dataset[Release]): Seq[Release] = withRocksDb(spark) {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Contribution]
-    val name = s"eager_${tag}bench_${System.nanoTime()}"
-    val q = op(mem.toDS())
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", s"/tmp/graft_eagerbench_${tag}_${System.nanoTime()}").start()
-    try {
-      byEpoch.foreach { case (_, rows) => mem.addData(rows) }
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(name).as[Release].collect().toSeq
-  }
-
-  private def withRocksDb[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
+  /** Feeds every epoch, in replay order, as one batch into a fresh query
+    * on the RocksDB state store, drains it, and returns what its memory
+    * sink holds. */
+  private def drain(spark: SparkSession, byEpoch: Seq[(Int, Seq[Contribution])])(
+      op: Dataset[Contribution] => Dataset[Release]): Seq[Release] =
+    SessionConf.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      import spark.implicits._
+      MemoryDrain(spark, Seq(byEpoch.flatMap(_._2)))(op)(_.as[Release].collect().toSeq)
     }
-  }
 
   /** The batch per-epoch timeline of the same rows and seed. */
   def timeline(spark: SparkSession, byEpoch: Seq[(Int, Seq[Contribution])],

@@ -30,23 +30,7 @@ import scala.collection.mutable
   * task count — safe at any scale.
   */
 final class QueryProfiler extends SparkListener {
-
-  final case class QueryMetrics(
-      var stages: Int = 0,
-      var tasks: Int = 0,
-      var taskTimeMs: Long = 0L,
-      var shuffleReadBytes: Long = 0L,
-      var shuffleWriteBytes: Long = 0L,
-      var inputBytes: Long = 0L,
-      var outputRows: Long = 0L,
-      var spilledBytes: Long = 0L,
-      var wallSec: Double = -1.0,
-      var runs: Int = 0) {
-    def jsonFields: String =
-      s""""stages":$stages,"tasks":$tasks,"task_time_ms":$taskTimeMs,""" +
-        s""""shuffle_read_bytes":$shuffleReadBytes,"shuffle_write_bytes":$shuffleWriteBytes,""" +
-        s""""input_bytes":$inputBytes,"spilled_bytes":$spilledBytes,"runs":$runs"""
-  }
+  import QueryProfiler.QueryMetrics
 
   private val stageGroup = mutable.Map[Int, String]() // stageId -> entry
   // metrics of the run currently executing per group (no endRun yet)
@@ -106,6 +90,25 @@ final class QueryProfiler extends SparkListener {
 }
 
 object QueryProfiler {
+
+  /** One entry's metrics: the stages and tasks of its jobs and their
+    * summed task metrics. */
+  final case class QueryMetrics(
+      var stages: Int = 0,
+      var tasks: Int = 0,
+      var taskTimeMs: Long = 0L,
+      var shuffleReadBytes: Long = 0L,
+      var shuffleWriteBytes: Long = 0L,
+      var inputBytes: Long = 0L,
+      var outputRows: Long = 0L,
+      var spilledBytes: Long = 0L,
+      var wallSec: Double = -1.0,
+      var runs: Int = 0) {
+    def jsonFields: String =
+      s""""stages":$stages,"tasks":$tasks,"task_time_ms":$taskTimeMs,""" +
+        s""""shuffle_read_bytes":$shuffleReadBytes,"shuffle_write_bytes":$shuffleWriteBytes,""" +
+        s""""input_bytes":$inputBytes,"spilled_bytes":$spilledBytes,"runs":$runs"""
+  }
 
   /** Local property naming the bench entry a job belongs to. A thread
     * started inside an entry inherits it with the other local properties —

@@ -1,10 +1,11 @@
 package graft.tools
 
+import java.sql.Timestamp
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StreamingPipelines
+import graft.streaming.{MemoryDrain, StreamingPipelines}
 
 /** Steady-state SEMANTIC index maintenance — the vector-space counterpart
   * of [[CorpusMaintenance]]: an epoch of new embeddings streams through
@@ -17,42 +18,33 @@ import graft.streaming.StreamingPipelines
   * projection plus one cell join at any corpus size. */
 object SemanticMaintenance {
 
-  /** Flush rows (two strictly later event times finalize the watermarked
-    * aggregate) use ids at or above this base and are excluded. */
+  /** Flush rows ([[MemoryDrain.FlushSeconds]]) use ids at or above this
+    * base and are excluded from the decisions. */
   val FlushIdBase = 1000000000L
 
   /** One ingest epoch: streams `batch` through the semantic dedup against
     * `cellIndex`, returns every decision row (vec_id, dup_of, best_cos,
-    * keep). `queryName` must be unique per live memory sink. */
+    * keep). */
   def runEpoch(spark: SparkSession, centroids: Array[Array[Double]],
       cellIndex: DataFrame, batch: Seq[(Long, Seq[Float])],
-      threshold: Double, queryName: String)
-      : Seq[(Long, Option[Long], Option[Double], Boolean)] = {
+      threshold: Double): Seq[(Long, Option[Long], Option[Double], Boolean)] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Seq[Float], java.sql.Timestamp)]
-    val out = StreamingPipelines.semanticDedupStream(
-      mem.toDF().toDF("vec_id", "embedding", "ts"),
-      centroids, cellIndex, "ts", watermarkDelay = "0 seconds", threshold)
     // a unit flush vector in the CENTROIDS' dimension (hardcoding 64
     // breaks any non-64-dim epoch inside the micro-batch): decodable by
-    // the normalization path, and its id keeps it out of the decisions.
-    // Built BEFORE start() so an empty-centroids failure cannot leak a
-    // running query under this queryName.
+    // the normalization path, and its id keeps it out of the decisions
     require(centroids.nonEmpty, "runEpoch: empty centroid set")
     val flushVec: Seq[Float] = 1f +: Seq.fill(centroids.head.length - 1)(0f)
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName(queryName).start()
-    try {
-      mem.addData(batch.map { case (id, e) => (id, e, new java.sql.Timestamp(1000L)) })
-      q.processAllAvailable()
-      mem.addData(Seq((FlushIdBase, flushVec, new java.sql.Timestamp(100000L * 1000))))
-      q.processAllAvailable()
-      mem.addData(Seq((FlushIdBase + 1L, flushVec, new java.sql.Timestamp(200000L * 1000))))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(queryName)
-      .where(col("vec_id") < FlushIdBase)
+    MemoryDrain(spark, Seq(batch.map { case (id, e) => (id, e, new Timestamp(1000L)) }),
+        flush = Some((i: Int, ts: Timestamp) => (FlushIdBase + i, flushVec, ts))) { in =>
+      StreamingPipelines.semanticDedupStream(in.toDF("vec_id", "embedding", "ts"),
+        centroids, cellIndex, "ts", watermarkDelay = "0 seconds", threshold)
+    }(vectorDecisions)
+  }
+
+  /** The decision rows of a vector epoch's sink, flush rows excluded. */
+  private def vectorDecisions(sink: DataFrame): Seq[(Long, Option[Long], Option[Double], Boolean)] = {
+    import sink.sparkSession.implicits._
+    sink.where(col("vec_id") < FlushIdBase)
       .select("vec_id", "dup_of", "best_cos", "keep")
       .as[(Long, Option[Long], Option[Double], Boolean)].collect().toSeq
   }
@@ -82,34 +74,18 @@ object SemanticMaintenance {
   /** One REDUCED-index ingest epoch: streams `batch` through
     * [[StreamingPipelines.reducedDedupStream]] against the maintained
     * reduced-dimension index under its FROZEN model; returns every
-    * decision row (vec_id, dup_of, best_cos, keep). Same harness contract
-    * as [[runEpoch]]. */
+    * decision row (vec_id, dup_of, best_cos, keep), as [[runEpoch]]. */
   def runReducedEpoch(spark: SparkSession,
       model: graft.operators.Similarity.ReducedModel,
       index: DataFrame, batch: Seq[(Long, Seq[Float])],
-      threshold: Double, queryName: String)
-      : Seq[(Long, Option[Long], Option[Double], Boolean)] = {
+      threshold: Double): Seq[(Long, Option[Long], Option[Double], Boolean)] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Seq[Float], java.sql.Timestamp)]
-    val out = StreamingPipelines.reducedDedupStream(
-      mem.toDF().toDF("vec_id", "embedding", "ts"),
-      model, index, "ts", watermarkDelay = "0 seconds", threshold)
     val flushVec: Seq[Float] = 1f +: Seq.fill(model.dim - 1)(0f)
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName(queryName).start()
-    try {
-      mem.addData(batch.map { case (id, e) => (id, e, new java.sql.Timestamp(1000L)) })
-      q.processAllAvailable()
-      mem.addData(Seq((FlushIdBase, flushVec, new java.sql.Timestamp(100000L * 1000))))
-      q.processAllAvailable()
-      mem.addData(Seq((FlushIdBase + 1L, flushVec, new java.sql.Timestamp(200000L * 1000))))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(queryName)
-      .where(col("vec_id") < FlushIdBase)
-      .select("vec_id", "dup_of", "best_cos", "keep")
-      .as[(Long, Option[Long], Option[Double], Boolean)].collect().toSeq
+    MemoryDrain(spark, Seq(batch.map { case (id, e) => (id, e, new Timestamp(1000L)) }),
+        flush = Some((i: Int, ts: Timestamp) => (FlushIdBase + i, flushVec, ts))) { in =>
+      StreamingPipelines.reducedDedupStream(in.toDF("vec_id", "embedding", "ts"),
+        model, index, "ts", watermarkDelay = "0 seconds", threshold)
+    }(vectorDecisions)
   }
 
   /** One HYBRID ingest epoch: documents (text + embedding) stream through
@@ -120,32 +96,21 @@ object SemanticMaintenance {
       centroids: Array[Array[Double]], cellIndex: DataFrame,
       batch: Seq[(Long, String, Seq[Float])],
       k: Int, numHashes: Int, numBands: Int,
-      jaccardThreshold: Double, cosThreshold: Double,
-      queryName: String): Seq[(Long, Boolean)] = {
+      jaccardThreshold: Double, cosThreshold: Double): Seq[(Long, Boolean)] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Seq[Float], java.sql.Timestamp)]
-    val out = StreamingPipelines.hybridDedupStream(
-      mem.toDF().toDF("doc_id", "text", "embedding", "ts"),
-      staticIndex, centroids, cellIndex,
-      "doc_id", "text", "embedding", "ts",
-      watermarkDelay = "0 seconds", k, numHashes, numBands,
-      jaccardThreshold, cosThreshold)
     require(centroids.nonEmpty, "runHybridEpoch: empty centroid set")
     val flushVec: Seq[Float] = 1f +: Seq.fill(centroids.head.length - 1)(0f)
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName(queryName).start()
-    try {
-      mem.addData(batch.map { case (id, t, e) => (id, t, e, new java.sql.Timestamp(1000L)) })
-      q.processAllAvailable()
-      mem.addData(Seq((FlushIdBase, "flush one", flushVec, new java.sql.Timestamp(100000L * 1000))))
-      q.processAllAvailable()
-      mem.addData(Seq((FlushIdBase + 1L, "flush two", flushVec, new java.sql.Timestamp(200000L * 1000))))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(queryName)
-      .where(col("doc_id") < FlushIdBase)
-      .select("doc_id", "keep")
-      .as[(Long, Boolean)].collect().toSeq
+    val flushText = Seq("flush one", "flush two")
+    MemoryDrain(spark, Seq(batch.map { case (id, t, e) => (id, t, e, new Timestamp(1000L)) }),
+        flush = Some((i: Int, ts: Timestamp) => (FlushIdBase + i, flushText(i), flushVec, ts))) { in =>
+      StreamingPipelines.hybridDedupStream(in.toDF("doc_id", "text", "embedding", "ts"),
+        staticIndex, centroids, cellIndex,
+        "doc_id", "text", "embedding", "ts",
+        watermarkDelay = "0 seconds", k, numHashes, numBands,
+        jaccardThreshold, cosThreshold)
+    } { sink =>
+      sink.where(col("doc_id") < FlushIdBase).select("doc_id", "keep")
+        .as[(Long, Boolean)].collect().toSeq
+    }
   }
 }

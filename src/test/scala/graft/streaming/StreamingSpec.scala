@@ -1068,7 +1068,7 @@ class StreamingSpec extends AnyFunSuite {
       .select("vec_id", "dup_of", "best_cos", "keep")
       .as[(Long, Option[Long], Option[Double], Boolean)].collect().toSet
     val stream1 = SemanticMaintenance.runEpoch(
-      spark, centroids, cellIndex, epoch1, thr, "semdedup1").toSet
+      spark, centroids, cellIndex, epoch1, thr).toSet
     assert(stream1 === batch1, s"epoch-1 streaming $stream1 != batch $batch1")
     val admitted1 = stream1.collect { case (id, _, _, true) => id }
     assert(admitted1.nonEmpty, "need novel epoch-1 vectors for the maintenance half")
@@ -1089,7 +1089,7 @@ class StreamingSpec extends AnyFunSuite {
       .select("vec_id", "dup_of", "best_cos", "keep")
       .as[(Long, Option[Long], Option[Double], Boolean)].collect().toSet
     val stream2 = SemanticMaintenance.runEpoch(
-      spark, centroids, cellIndex2, epoch2, thr, "semdedup2").toSet
+      spark, centroids, cellIndex2, epoch2, thr).toSet
     assert(stream2 === batch2, s"epoch-2 streaming $stream2 != batch $batch2")
     assert(stream2.forall(!_._4), "an exact copy of an indexed vector was admitted")
     for (id <- admitted1)
@@ -1123,7 +1123,7 @@ class StreamingSpec extends AnyFunSuite {
       .select("vec_id", "dup_of", "best_cos", "keep")
       .as[(Long, Option[Long], Option[Double], Boolean)].collect().toSet
     val stream1 = SemanticMaintenance.runReducedEpoch(
-      spark, model, idx, epoch1, thr, "reddedup1").toSet
+      spark, model, idx, epoch1, thr).toSet
     assert(stream1 === batch1, s"epoch-1 streaming $stream1 != batch $batch1")
     val admitted1 = stream1.collect { case (id, _, _, true) => id }
     assert(admitted1.nonEmpty, "need novel epoch-1 vectors for the maintenance half")
@@ -1145,7 +1145,7 @@ class StreamingSpec extends AnyFunSuite {
       .select("vec_id", "dup_of", "best_cos", "keep")
       .as[(Long, Option[Long], Option[Double], Boolean)].collect().toSet
     val stream2 = SemanticMaintenance.runReducedEpoch(
-      spark, model, idx2, epoch2, thr, "reddedup2").toSet
+      spark, model, idx2, epoch2, thr).toSet
     assert(stream2 === batch2, s"epoch-2 streaming $stream2 != batch $batch2")
     assert(stream2.forall(!_._4), "an exact copy of an indexed vector was admitted")
     for (id <- admitted1)

@@ -132,4 +132,59 @@ class BenchReportSpec extends AnyFunSuite with Matchers {
       }
     }
   }
+
+  private def metrics(taskMs: Long, shuffleBytes: Long, inputBytes: Long) =
+    QueryProfiler.QueryMetrics(taskTimeMs = taskMs, shuffleReadBytes = shuffleBytes, inputBytes = inputBytes)
+
+  test("receipt: a byte claim passes on the min-wall runs' byte ratio < 1, whatever the walls") {
+    val slowWalls = Seq(0.5, 0.5)
+    val fastWalls = Seq(1.0, 1.0)
+    def verdict(metric: String, fast: QueryProfiler.QueryMetrics, slow: QueryProfiler.QueryMetrics) =
+      BenchReport.receipt("f", "s", metric, fastWalls, slowWalls, Some(fast), Some(slow)).ok
+    verdict("shuffle_read_bytes", metrics(1, 10, 0), metrics(1, 20, 0)) shouldBe true
+    verdict("shuffle_read_bytes", metrics(1, 20, 0), metrics(1, 20, 0)) shouldBe false
+    verdict("input_bytes", metrics(1, 0, 5), metrics(1, 0, 50)) shouldBe true
+    verdict("input_bytes", metrics(1, 0, 60), metrics(1, 0, 50)) shouldBe false
+    // a slower arm with no bytes reads -1 and never passes
+    val r = BenchReport.receipt("f", "s", "input_bytes", fastWalls, slowWalls,
+      Some(metrics(1, 0, 5)), Some(metrics(1, 0, 0)))
+    r.ok shouldBe false
+    r.profile.map(_._3) shouldBe Some(-1.0)
+  }
+
+  test("receipt: a wall claim passes on the median lap ratio < 1, or < 1.1 with task ratio < 0.95") {
+    def verdict(fast: Seq[Double], slow: Seq[Double], taskFast: Long) =
+      BenchReport.receipt("f", "s", "wall", fast, slow,
+        Some(metrics(taskFast, 0, 0)), Some(metrics(100, 0, 0)))
+    val under = verdict(Seq(0.9, 2.0, 0.8), Seq(1.0, 1.0, 1.0), 100)
+    under.ratios shouldBe Seq(0.9, 2.0, 0.8)
+    under.wallMedian shouldBe 0.9
+    under.ok shouldBe true
+    verdict(Seq(1.05, 1.05), Seq(1.0, 1.0), 94).ok shouldBe true
+    verdict(Seq(1.05, 1.05), Seq(1.0, 1.0), 95).ok shouldBe false
+    verdict(Seq(1.15, 1.15), Seq(1.0, 1.0), 10).ok shouldBe false
+    // failed laps pair with nothing; no pair left means no verdict
+    verdict(Seq(-1.0, 0.5), Seq(1.0, 1.0), 100).ratios shouldBe Seq(0.5)
+    verdict(Seq(-1.0), Seq(1.0), 10).ok shouldBe false
+    // a missing profile reads -1 and cannot rescue a marginal wall
+    val noProfile = BenchReport.receipt("f", "s", "wall", Seq(1.05), Seq(1.0), None, None)
+    noProfile.profile shouldBe Some((-1.0, -1.0, -1.0))
+    noProfile.ok shouldBe false
+  }
+
+  test("receipt: an in-entry A/B is decided by its wall median alone") {
+    BenchReport.innerReceipt("a<b", Seq((1.0, 2.0), (3.0, 2.0), (1.0, 4.0))).ok shouldBe true
+    BenchReport.innerReceipt("a<b", Seq((3.0, 2.0), (1.0, 2.0), (3.0, 1.0))).ok shouldBe false
+    BenchReport.innerReceipt("a<b", Nil).ok shouldBe false
+  }
+
+  test("receipt JSON keeps its bench.json shape") {
+    BenchReport.receipt("f", "s", "wall", Seq(1.0, 3.0), Seq(2.0, 2.0),
+      Some(metrics(50, 10, 0)), Some(metrics(100, 40, 0))).json shouldBe
+      "\"f<s\":{\"metric\":\"wall\",\"lap_ratios\":[0.500,1.500],\"wall_median\":1.000," +
+        "\"task_ratio\":0.500,\"shuffle_bytes_ratio\":0.250,\"input_bytes_ratio\":-1.000,\"ok\":true}"
+    BenchReport.innerReceipt("a<b", Seq((1.0, 2.0))).json shouldBe
+      "\"a<b\":{\"metric\":\"wall\",\"lap_ratios\":[0.500],\"wall_median\":0.500," +
+        "\"task_ratio\":-1.0,\"shuffle_bytes_ratio\":-1.0,\"ok\":true}"
+  }
 }
